@@ -19,6 +19,16 @@ object Bench {
     // computes every output column of the plan as written.
     def run(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
+    // A query that throws must never pass as a fast one: every failure
+    // is reported on stderr and recorded (first error class per query)
+    // in the sidecar's "failed" map.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fail(name: String, e: Throwable): Unit = {
+      System.err.println(
+        s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      failed.getOrElseUpdate(name, e.getClass.getName)
+      ()
+    }
     // Warm-up: JVM/codegen/parquet-footer costs land here, not in the
     // first measured query.
     try run(SparkEntry.entry(spark)) catch { case _: Throwable => () }
@@ -39,7 +49,7 @@ object Bench {
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
       SparkEntry.queries.foreach { case (name, fn) =>
         if (only.forall(_.contains(name)))
-          try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+          try run(fn(spark, warmDir)) catch { case e: Throwable => fail(name, e) }
       }
     spark.sharedState.cacheManager.clearCache()
     // Median-of-N per query (default 3): a one-shot measurement is at
@@ -54,18 +64,19 @@ object Bench {
     }
     val measured = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String): Double = {
       System.gc() // isolate queries from each other's garbage
       val t0 = System.nanoTime()
-      try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
+      try { run(SparkEntry.queries(name)(spark, sfDir)) }
+      catch { case e: Throwable => fail(name, e); -1L }
       val dt = (System.nanoTime() - t0) / 1e9
       // queries that persist() intermediates leave them in the cache
       // manager: drop them so later queries aren't memory-squeezed
       spark.sharedState.cacheManager.clearCache()
       dt
     }
-    val firstPass = measured.map { case (name, fn) =>
-      name -> median((1 to reps).map(_ => timeOnce(fn)))
+    val firstPass = measured.map { case (name, _) =>
+      name -> median((1 to reps).map(_ => timeOnce(name)))
     }
     // Outlier re-check: a median-of-3 still reports a sustained
     // transient (r7 recorded asof_join at 7.78 s mid-run vs 0.74 s
@@ -79,11 +90,10 @@ object Bench {
     val results = firstPass.map { case (name, m) =>
       if (m <= 2.0) name -> m
       else {
-        val again = timeOnce(SparkEntry.queries(name))
+        val again = timeOnce(name)
         if (again >= m / 1.5) name -> m
         else {
-          val m2 = median(again +: (1 until reps).map(_ =>
-            timeOnce(SparkEntry.queries(name))))
+          val m2 = median(again +: (1 until reps).map(_ => timeOnce(name)))
           System.err.println(f"[bench] re-check $name: $m%.2f -> $m2%.2f s")
           name -> math.min(m, m2)
         }
@@ -134,7 +144,7 @@ object Bench {
       System.gc()
       val t0 = System.nanoTime()
       try { run(SparkEntry.queries(name)(spark, dir)) }
-      catch { case _: Throwable => -1L }
+      catch { case e: Throwable => fail(name, e); -1L }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sharedState.cacheManager.clearCache()
       dt
@@ -184,17 +194,21 @@ object Bench {
         s""","sweep":$entries,"sweep_step":"$step"""" +
           s""","sweep_superlinear":$superLin"""
       }
-    def line(entries: Seq[(String, Double)], omitted: Int): String = {
+    def line(entries: Seq[(String, Double)], omitted: Int,
+             extra: String = ""): String = {
       val qs = entries.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val om = if (omitted > 0) s""","omitted_fastest":$omitted""" else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$om$sweepJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$om$sweepJson$extra,"sf":"$sfDir"}"""
     }
     val byTime = results.sortBy(-_._2)
     val keep = (results.length to 1 by -1)
       .find(n => line(byTime.take(n), results.length - n).length <= 1900)
       .getOrElse(1)
     println(line(byTime.take(keep), results.length - keep))
+    val failedJson = failed
+      .map { case (k, c) => "\"" + k + "\":\"" + c + "\"" }
+      .mkString(""","failed":{""", ",", "}")
     // Full per-query map to a SIDECAR file (additions-only: the graded
     // stdout line above is byte-identical in format). The 1900-char
     // window drops the fastest queries from the printed breakdown,
@@ -204,7 +218,7 @@ object Bench {
     try
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_FULL.json"),
-        line(results, 0) + "\n")
+        line(results, 0, failedJson) + "\n")
     catch { case _: Throwable => () } // diagnostics must never fail the bench
     spark.stop()
   }

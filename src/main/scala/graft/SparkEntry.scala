@@ -270,10 +270,10 @@ object SparkEntry {
     }),
 
     "dim_sink_e2e" -> ((s, d) => {
-      // pipeline_e2e driven through the DimSink storage seam instead
-      // of in-memory frames: each increment loads current state from
-      // the sink and commits the merge back; the final read-back must
-      // equal the pure-DataFrame formulation (same oracle).
+      // pipeline_e2e driven through a LogTable instead of in-memory
+      // frames: each increment loads current state from the table and
+      // commits the merge back; the final read-back must equal the
+      // pure-DataFrame formulation (same oracle).
       val cfg = Pipeline.TableConfig("cust_orders",
         keyCols = Seq("o_custkey"),
         attrCols = Seq("o_orderpriority", "o_totalprice"),
@@ -284,12 +284,12 @@ object SparkEntry {
       val ts2 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val dir = java.nio.file.Files.createTempDirectory(s"graft_sink_$tag")
-      val sink = new graft.sources.ParquetDimSink(s"$dir/dim")
-      Pipeline.runIncrementInto(sink,
+      val log = new graft.sources.LogTable(s"$dir/dim")
+      Pipeline.runIncrementInto(log,
         orders.filter(col("o_orderdate") < split), cfg, "b1", ts1)
-      Pipeline.runIncrementInto(sink,
+      Pipeline.runIncrementInto(log,
         orders.filter(col("o_orderdate") >= split), cfg, "b2", ts2)
-      sink.load(s).get
+      log.load(s)
         .select(col("o_custkey"), col("o_orderpriority"),
           col("o_totalprice"), ntz(col("valid_from")).as("valid_from"),
           ntz(col("valid_to")).as("valid_to"), col("is_current"))
@@ -297,7 +297,7 @@ object SparkEntry {
     }),
 
     "dim_sink_versions" -> ((s, d) => {
-      // snapshot versioning / time travel through the versioned sink:
+      // snapshot versioning / time travel through the log table:
       // two SCD2 increments commit two immutable versions; the query
       // reads BACK version 0 — the dimension as of batch 1 — after
       // version 1 became current. The oracle recomputes batch 1's
@@ -311,12 +311,12 @@ object SparkEntry {
       val ts1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
       val ts2 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
       val dir = java.nio.file.Files.createTempDirectory("graft_vsink")
-      val sink = new graft.sources.VersionedParquetSink(s"$dir/dim")
-      Pipeline.runIncrementInto(sink,
+      val log = new graft.sources.LogTable(s"$dir/dim")
+      Pipeline.runIncrementInto(log,
         orders.filter(col("o_orderdate") < split), cfg, "b1", ts1)
-      Pipeline.runIncrementInto(sink,
+      Pipeline.runIncrementInto(log,
         orders.filter(col("o_orderdate") >= split), cfg, "b2", ts2)
-      sink.loadVersion(s, 0)
+      log.load(s, Some(0L))
         .select(col("o_custkey"), col("o_orderpriority"),
           col("o_totalprice"), ntz(col("valid_from")).as("valid_from"),
           col("is_current"))
@@ -341,7 +341,7 @@ object SparkEntry {
     "dim_changes" -> ((s, d) => {
       // change data feed between two committed dim versions (the
       // table_changes surface of log-based formats, computed
-      // set-theoretically over the versioned sink's snapshots):
+      // set-theoretically over two of the log table's snapshots):
       // closed versions surface as update_pre/postimage on the
       // (key, valid_from) row identity, new versions as inserts;
       // the oracle re-derives the feed from the two staged batches
@@ -354,12 +354,12 @@ object SparkEntry {
       val ts1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
       val ts2 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
       val dir = java.nio.file.Files.createTempDirectory("graft_cdf")
-      val sink = new graft.sources.VersionedParquetSink(s"$dir/dim")
-      Pipeline.runIncrementInto(sink,
+      val log = new graft.sources.LogTable(s"$dir/dim")
+      Pipeline.runIncrementInto(log,
         orders.filter(col("o_orderdate") < split), cfg, "b1", ts1)
-      Pipeline.runIncrementInto(sink,
+      Pipeline.runIncrementInto(log,
         orders.filter(col("o_orderdate") >= split), cfg, "b2", ts2)
-      Scd.changeFeed(sink.loadVersion(s, 0), sink.loadVersion(s, 1),
+      Scd.changeFeed(log.load(s, Some(0L)), log.load(s, Some(1L)),
         Seq("o_custkey", "valid_from"))
         .select(col("o_custkey"), col("o_orderpriority"),
           col("o_totalprice"), ntz(col("valid_from")).as("valid_from"),
@@ -394,49 +394,54 @@ object SparkEntry {
     }),
 
     "sql_merge_catalog" -> ((s, d) => {
-      // the by-NAME surface: the dim lives in the session catalog
-      // (GraftCatalog temp view over a versioned sink) and BOTH
-      // statements address it by its table name — `MERGE INTO dim`
-      // resolved to the registered sink, then a plain
-      // `spark.sql("SELECT ... FROM dim")` reading the refreshed
+      // the by-NAME surface: the dim is a log table in a
+      // GraftTableCatalog and BOTH statements address it by its
+      // table name — a native `spark.sql("MERGE INTO cat.dim ...")`
+      // and a plain `SELECT ... FROM cat.dim` reading the merged
       // snapshot (reference: Load & SCD-Merge.py:24-38 does exactly
       // this against named Delta tables); exercises the NOT MATCHED
       // BY SOURCE quadrant by name as well
       val tag = java.lang.Integer.toHexString(d.hashCode)
-      val dim = s"dim_cat_$tag"
-      val dir = java.nio.file.Files.createTempDirectory("graft_cat")
-      val sink = new graft.sources.VersionedParquetSink(s"$dir/$dim")
-      sink.overwrite(t(s, d, "customer").filter(col("c_custkey") <= 250)
+      val wh = java.nio.file.Files.createTempDirectory("graft_cat")
+      val cat = s"mergecat_$tag"
+      // catalogs cache BY NAME: re-invocation (bench reps) keeps the
+      // first warehouse, so the table name must be fresh each time
+      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
+        s.conf.set(s"spark.sql.catalog.$cat",
+          classOf[graft.sources.GraftTableCatalog].getName)
+        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+      }
+      val dim = s"$cat.dim_${System.nanoTime}"
+      t(s, d, "customer").filter(col("c_custkey") <= 250)
         .select(col("c_custkey").as("k"), lit("init").as("status"),
-          lit(0L).as("n")))
-      graft.sources.GraftCatalog.register(s, dim, sink)
+          lit(0L).as("n"))
+        .createOrReplaceTempView(s"cat_seed_$tag")
+      s.sql(s"CREATE TABLE $dim AS SELECT * FROM cat_seed_$tag")
       t(s, d, "orders")
         .filter(col("o_custkey") > 150 && col("o_custkey") <= 350)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"))
         .select(col("o_custkey").as("k"), col("n_orders"))
         .createOrReplaceTempView(s"cat_updates_$tag")
-      graft.sources.GraftCatalog.sql(s,
-        s"""MERGE INTO $dim t USING cat_updates_$tag s ON t.k = s.k
+      s.sql(s"""MERGE INTO $dim t USING cat_updates_$tag s ON t.k = s.k
             WHEN MATCHED THEN UPDATE SET status = 'active', n = s.n_orders
             WHEN NOT MATCHED THEN
               INSERT (k, status, n) VALUES (s.k, 'new', s.n_orders)
             WHEN NOT MATCHED BY SOURCE AND t.k <= 20 THEN DELETE""")
-      graft.sources.GraftCatalog.sql(s,
-        s"SELECT k, status, n FROM $dim ORDER BY k")
+      s.sql(s"SELECT k, status, n FROM $dim ORDER BY k")
     }),
 
     "sql_merge_mor" -> ((s, d) => {
-      // merge-on-read commit path: the same ANSI MERGE semantics, but
-      // the commit lands ONLY the change set (upsert rows + deleted
-      // keys) as a patch beside the base snapshot — write ∝ delta —
-      // and the read-back applies patches by key; the oracle computes
-      // the identical post-merge state declaratively, so
-      // patch-apply ≡ copy-on-write is oracle-proven
+      // the same ANSI MERGE semantics committed at file granularity
+      // through SqlMerge.mergeLog: only files holding a changed row
+      // are rewritten, the rest carry into the new version by
+      // reference; the oracle computes the identical post-merge
+      // state declaratively, so the log merge ≡ the declarative
+      // merge is oracle-proven
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val dir = java.nio.file.Files.createTempDirectory("graft_mor")
-      val sink = new graft.sources.MergeOnReadSink(s"$dir/dim", Seq("k"))
-      sink.overwrite(t(s, d, "customer").filter(col("c_custkey") <= 280)
+      val log = new graft.sources.LogTable(s"$dir/dim")
+      log.overwrite(t(s, d, "customer").filter(col("c_custkey") <= 280)
         .select(col("c_custkey").as("k"), lit("init").as("status"),
           lit(0L).as("n")))
       t(s, d, "orders")
@@ -445,53 +450,53 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_orders"))
         .select(col("o_custkey").as("k"), col("n_orders"))
         .createOrReplaceTempView(s"mor_updates_$tag")
-      graft.sources.SqlMerge.mergeMor(s,
+      graft.sources.SqlMerge.mergeLog(s,
         s"""MERGE INTO dim t USING mor_updates_$tag s ON t.k = s.k
             WHEN MATCHED AND s.n_orders > 12 THEN DELETE
             WHEN MATCHED THEN UPDATE SET status = 'active', n = s.n_orders
             WHEN NOT MATCHED THEN
               INSERT (k, status, n) VALUES (s.k, 'new', s.n_orders)""",
-        sink)
-      sink.load(s).get.orderBy(col("k"))
+        log)
+      log.load(s).orderBy(col("k"))
     }),
 
     "sink_time_travel" -> ((s, d) => {
-      // TIMESTAMP AS OF over the versioned sink: commits carry an
+      // TIMESTAMP AS OF over the log table: commits carry an
       // injected wall-clock, and a between-commits timestamp resolves
       // to the snapshot that was current THEN (Delta/Iceberg
       // semantics); the oracle recomputes that middle snapshot
       val dir = java.nio.file.Files.createTempDirectory("graft_tt")
       val ticks = Iterator(1000L, 2000L, 3000L)
-      val sink = new graft.sources.VersionedParquetSink(
+      val log = new graft.sources.LogTable(
         s"$dir/dim", () => ticks.next())
       val cust = t(s, d, "customer")
-      sink.overwrite(cust.filter(col("c_custkey") <= 100)
+      log.overwrite(cust.filter(col("c_custkey") <= 100)
         .select(col("c_custkey").as("k"), col("c_name").as("name")))
-      sink.overwrite(cust.filter(col("c_custkey") <= 200)
+      log.overwrite(cust.filter(col("c_custkey") <= 200)
         .select(col("c_custkey").as("k"), upper(col("c_name")).as("name")))
-      sink.overwrite(cust.filter(col("c_custkey") <= 300)
+      log.overwrite(cust.filter(col("c_custkey") <= 300)
         .select(col("c_custkey").as("k"), lower(col("c_name")).as("name")))
-      sink.loadVersionAt(s, 2500L).orderBy(col("k"))
+      log.load(s, Some(log.versionAt(2500L))).orderBy(col("k"))
     }),
 
     "catalog_time_travel" -> ((s, d) => {
-      // the DSv2-catalog surface end-to-end: a versioned sink under a
+      // the DSv2-catalog surface end-to-end: a log table under a
       // registered catalog plugin, read back PURELY through SQL with
       // native TIMESTAMP AS OF — Spark routes the clause to
       // GraftTableCatalog.loadTable(ident, micros), which resolves
-      // the manifest to the snapshot current at that instant
+      // the log to the snapshot current at that instant
       // (timestamp_micros keeps the literal timezone-free)
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val dir = java.nio.file.Files.createTempDirectory("graft_dsv2")
       val ticks = Iterator(1000L, 2000L, 3000L)
-      val sink = new graft.sources.VersionedParquetSink(
+      val log = new graft.sources.LogTable(
         s"$dir/dim", () => ticks.next())
       val cust = t(s, d, "customer")
-      sink.overwrite(cust.filter(col("c_custkey") <= 100)
+      log.overwrite(cust.filter(col("c_custkey") <= 100)
         .select(col("c_custkey").as("k"), col("c_name").as("name")))
-      sink.overwrite(cust.filter(col("c_custkey") <= 200)
+      log.overwrite(cust.filter(col("c_custkey") <= 200)
         .select(col("c_custkey").as("k"), upper(col("c_name")).as("name")))
-      sink.overwrite(cust.filter(col("c_custkey") <= 300)
+      log.overwrite(cust.filter(col("c_custkey") <= 300)
         .select(col("c_custkey").as("k"), lower(col("c_name")).as("name")))
       s.conf.set(s"spark.sql.catalog.tt_$tag",
         classOf[graft.sources.GraftTableCatalog].getName)
@@ -504,10 +509,10 @@ object SparkEntry {
     "log_table_dml" -> ((s, d) => {
       // the transaction-log table's full SQL DML surface by name:
       // CREATE USING log, two INSERT INTO appends (each commits ONLY
-      // its delta — file-granularity MVCC, the Delta trade the CoW
-      // sink cannot make), then DELETE FROM whose stats-pruned
-      // rewrite touches only files that contain matching rows; the
-      // oracle recomputes the final state declaratively
+      // its delta — file-granularity MVCC, the Delta trade a
+      // whole-snapshot rewrite cannot make), then DELETE FROM whose
+      // stats-pruned rewrite touches only files that contain matching
+      // rows; the oracle recomputes the final state declaratively
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_logdml")
       val cat = s"logdml_$tag"
@@ -1976,7 +1981,7 @@ object SparkEntry {
       // SCD2 merge reads its dim side in BOTH the classification and
       // close legs, so an unmaterialized dim1 re-runs batch 1's whole
       // staging per leg — the checkpoint is the in-memory stand-in
-      // for the per-increment sink commit every real pipeline does
+      // for the per-increment table commit every real pipeline does
       // (dim_sink_e2e's shape)
       val dim1 = org.apache.spark.sql.GraftPlanReset.checkpointLeaf(
         Pipeline.runIncrement(
@@ -3095,21 +3100,24 @@ object SparkEntry {
         .orderBy(col("l_orderkey"), col("l_linenumber"),
           col("l_returnflag"), col("l_extendedprice"))),
 
-    // snapshot retention on the versioned sink: five commits of
-    // growing slices of `region` (1..5 rows), expire keeping the
-    // newest two — the audit plus post-expire readability is the
-    // deterministic output (fixture-backed, VALUES oracle).
+    // snapshot retention on the log table: five commits of growing
+    // slices of `region` (1..5 rows), expire keeping the newest two —
+    // the audit (versions before vs after) plus post-expire
+    // readability is the deterministic output (fixture-backed,
+    // VALUES oracle).
     "sink_expire" -> ((s, d) => {
       import s.implicits._
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val dir = java.nio.file.Files.createTempDirectory(s"graft_expire_$tag")
-      val sink = new graft.sources.VersionedParquetSink(s"$dir/dim")
+      val log = new graft.sources.LogTable(s"$dir/dim")
       val region = t(s, d, "region")
-      (1 to 5).foreach(n => sink.overwrite(region.limit(n)))
-      val audit = sink.expireSnapshots(keepLast = 2)
-      audit.map { case (v, st) =>
-        val n = if (st == "retained") sink.loadVersion(s, v).count() else -1L
-        (v, st, n)
+      (1 to 5).foreach(n => log.overwrite(region.limit(n)))
+      val before = log.versions
+      log.expireSnapshots(retainLast = 2)
+      val after = log.versions.toSet
+      before.map { v =>
+        if (after(v)) (v, "retained", log.load(s, Some(v)).count())
+        else (v, "expired", -1L)
       }.toDF("version", "status", "n_rows").orderBy(col("version"))
     })
   )
@@ -3617,7 +3625,7 @@ object SparkEntry {
          ORDER BY o_custkey, valid_from""",
 
     // identical post-merge state expected whether increments run on
-    // in-memory frames (pipeline_e2e) or through the DimSink seam
+    // in-memory frames (pipeline_e2e) or through a LogTable
     "dim_sink_e2e" ->
       """WITH s1 AS (
            SELECT o_custkey, o_orderpriority, o_totalprice FROM (

@@ -108,17 +108,18 @@ object Pipeline {
       mergeStats(dim, staged, cfg))
   }
 
-  /** One increment against a persistent dimension: load current
-    * state from the sink (empty dim on first run), merge, commit the
-    * new state back. The sink decides the storage format —
-    * parquet / Delta / Iceberg — the merge plan is identical. */
-  def runIncrementInto(sink: graft.sources.DimSink, rawBatch: DataFrame,
+  /** One increment against a persistent dimension: load the current
+    * state of `log` (empty dim on first run), merge, and commit the
+    * new state back as one full-replace log commit — prior versions
+    * stay time-travel-readable. */
+  def runIncrementInto(log: graft.sources.LogTable, rawBatch: DataFrame,
                        cfg: TableConfig, source: String,
                        batchTs: java.sql.Timestamp): Unit = {
     val spark = rawBatch.sparkSession
-    val dim = sink.load(spark)
-      .getOrElse(emptyDim(spark, rawBatch, cfg))
-    sink.overwrite(runIncrement(rawBatch, dim, cfg, source, batchTs))
+    val dim =
+      if (log.exists) log.load(spark) else emptyDim(spark, rawBatch, cfg)
+    log.overwrite(runIncrement(rawBatch, dim, cfg, source, batchTs))
+    ()
   }
 
   /** Run a batch through every configured table (the reference's

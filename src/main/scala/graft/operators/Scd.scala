@@ -193,7 +193,7 @@ object Scd {
   /** Change data feed between two committed snapshots of a table —
     * the `table_changes` surface of log-based lakehouse formats,
     * computed set-theoretically so it works over ANY two immutable
-    * snapshots (e.g. `VersionedParquetSink.loadVersion(v)` pairs).
+    * snapshots (e.g. `LogTable.load(spark, Some(v))` pairs).
     * `keys` must uniquely identify a row within a snapshot (for an
     * SCD2 dim: business key + valid_from). Emits Delta-CDF-shaped
     * rows: the input schema plus `_change_type` ∈ insert / delete /

@@ -4,29 +4,25 @@ import java.util.{Map => JMap}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** A Spark DataSource-V2 `TableCatalog` over graft's versioned
-  * parquet sinks — the catalog-plugin half of the by-name surface
-  * ([[GraftCatalog]] is the session-temp-view half). Configure
+/** A Spark DataSource-V2 `TableCatalog` over graft's [[LogTable]]s —
+  * the by-name surface. Configure
   *
   * {{{
   * spark.sql.catalog.graft           = graft.sources.GraftTableCatalog
   * spark.sql.catalog.graft.warehouse = /path/to/warehouse
   * }}}
   *
-  * and every [[VersionedParquetSink]] directory under the warehouse
-  * is a named table with NATIVE SQL time travel — the one thing a
-  * temp view cannot give, because Spark routes `VERSION AS OF` /
-  * `TIMESTAMP AS OF` only through a catalog plugin's `loadTable`
-  * overloads (reference behavior: Delta tables under
+  * and every log table directory under the warehouse is a named,
+  * read-write table with native SQL DML (INSERT / UPDATE / DELETE /
+  * MERGE INTO) and NATIVE SQL time travel — Spark routes
+  * `VERSION AS OF` / `TIMESTAMP AS OF` only through a catalog plugin's
+  * `loadTable` overloads (reference behavior: Delta tables under
   * `Load & SCD-Merge.py:24-38` support exactly these clauses):
   *
   * {{{
@@ -35,23 +31,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * SELECT * FROM graft.dim_customer TIMESTAMP AS OF t        -- as-of
   * }}}
   *
-  * Reads resolve the sink manifest at analysis time and serve the
-  * chosen immutable `v=N` directory through Spark's own parquet
-  * scan, so filter pushdown / column pruning / partition listing
-  * behave exactly as for any parquet table ([[GraftReadTable]] wraps
-  * the scan READ-ONLY: an `INSERT INTO` is rejected at analysis —
-  * appending raw files into a version directory would corrupt the
-  * manifest MVCC contract; writes go through [[DimSink.overwrite]] /
-  * [[GraftCatalog.commit]] / [[SqlMerge]], which commit whole
-  * snapshots atomically). Merge-on-read sinks are served while their
-  * patch list is empty (post-[[MergeOnReadSink.compact]]); with
-  * pending patches they need the reader-side patch apply, which a
-  * bare file scan cannot express — [[MergeOnReadSink.load]] or the
-  * temp-view route serves those.
-  *
-  * Scale: the catalog itself is metadata-only (one manifest read per
-  * resolution, O(#versions) listing for timestamp lookup); all data
-  * movement is the parquet scan. */
+  * Scale: the catalog itself is metadata-only (one log-head
+  * resolution per lookup, O(#versions) listing for timestamp
+  * lookup); all data movement is the table's parquet scan. */
 class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
 
   private var catalogName: String = _
@@ -88,16 +70,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     new java.io.File(
       (warehouse +: (ident.namespace().toSeq :+ ident.name())).mkString("/"))
 
-  /** The manifest distinguishes the layouts: `N` is a CoW
-    * [[VersionedParquetSink]], `N|p1,p2,...` a [[MergeOnReadSink]]. */
-  private def manifestLine(dir: java.io.File): Option[String] = {
-    val m = new java.io.File(dir, "_CURRENT")
-    if (m.exists) Some(java.nio.file.Files.readString(m.toPath).trim)
-    else None
-  }
-
-  /** Is the directory a [[LogTable]] (file-granularity transaction
-    * log) rather than a manifest-pointer sink? */
+  /** Does the directory hold a [[LogTable]]? */
   private def isLogTable(dir: java.io.File): Boolean =
     new LogTable(dir.toString).exists
 
@@ -115,7 +88,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     else {
       val branch = n.substring(i + "__branch_".length)
       val baseDir = dirOf(Identifier.of(ident.namespace(), n.take(i)))
-      if (manifestLine(baseDir).isEmpty && isLogTable(baseDir)) {
+      if (isLogTable(baseDir)) {
         val log = new LogTable(baseDir.toString)
         log.refs.get(branch) match {
           case Some(("branch", _)) => Some(log.branchTable(branch))
@@ -139,7 +112,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
         !GraftMetadataTables.surfaces.contains(ident.name())) None
     else {
       val baseDir = dirOf(Identifier.of(ns.dropRight(1), ns.last))
-      if (manifestLine(baseDir).isEmpty && isLogTable(baseDir)) {
+      if (isLogTable(baseDir)) {
         val log = new LogTable(baseDir.toString)
         version match {
           case None => Some(GraftMetadataTables(
@@ -167,49 +140,28 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    manifestLine(dirOf(ident)).isDefined || isLogTable(dirOf(ident)) ||
-      branchOf(ident).isDefined || metadataOf(ident).isDefined
+    isLogTable(dirOf(ident)) || branchOf(ident).isDefined ||
+      metadataOf(ident).isDefined
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val base = new java.io.File((warehouse +: namespace.toSeq).mkString("/"))
     Option(base.listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory &&
-        (new java.io.File(d, "_CURRENT").exists || isLogTable(d)))
+      .filter(d => d.isDirectory && isLogTable(d))
       .map(d => Identifier.of(namespace, d.getName)).toArray
-  }
-
-  private def readTable(ident: Identifier, versionDir: String): Table = {
-    val spark = SparkSession.active
-    new GraftReadTable(ParquetTable(
-      s"$catalogName.${ident.name()}", spark,
-      CaseInsensitiveStringMap.empty(), Seq(versionDir),
-      None, classOf[ParquetFileFormat]))
   }
 
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
-    manifestLine(dir) match {
-      case None if isLogTable(dir) => // transaction-log table: R/W DML
-        new GraftLogTableV2(s"$catalogName.${ident.name()}",
-          new LogTable(dir.toString))
-      case None => branchOf(ident) match {
-        case Some(bt) => // branch-addressed R/W table (WAP staging)
-          new GraftLogTableV2(s"$catalogName.${ident.name()}", bt)
-        case None => metadataOf(ident) match {
-          case Some(mt) => mt // cat.t.history / .files / .refs
-          case None     => throw new NoSuchTableException(ident)
-        }
+    if (isLogTable(dir))
+      new GraftLogTableV2(s"$catalogName.${ident.name()}",
+        new LogTable(dir.toString))
+    else branchOf(ident) match {
+      case Some(bt) => // branch-addressed R/W table (WAP staging)
+        new GraftLogTableV2(s"$catalogName.${ident.name()}", bt)
+      case None => metadataOf(ident) match {
+        case Some(mt) => mt // cat.t.history / .files / .refs
+        case None     => throw new NoSuchTableException(ident)
       }
-      case Some(line) if !line.contains('|') => // CoW sink
-        readTable(ident, s"$dir/v=$line")
-      case Some(line) => // merge-on-read sink
-        val Array(base, patches @ _*) = line.split('|')
-        if (patches.headOption.forall(_.isEmpty))
-          readTable(ident, s"$dir/v=$base")
-        else throw new UnsupportedOperationException(
-          s"table '$ident' has ${patches.head.split(',').length} pending " +
-            "merge-on-read patches; a bare file scan cannot apply them — " +
-            "read via MergeOnReadSink.load or fold them with compact()")
     }
   }
 
@@ -221,7 +173,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     val dir = dirOf(ident)
     val v = try version.toLong catch {
       case _: NumberFormatException =>
-        if (manifestLine(dir).isEmpty && isLogTable(dir)) {
+        if (isLogTable(dir)) {
           val log = new LogTable(dir.toString)
           log.refs.get(version) match {
             case Some(("tag", tv)) =>
@@ -238,145 +190,122 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
           s"'$version' is not a version number or ref name of " +
             s"table '$ident'")
     }
-    if (manifestLine(dir).isEmpty) {
-      if (!isLogTable(dir)) {
-        // `cat.t.files VERSION AS OF n` — the manifest AS OF a
-        // committed snapshot (same resolution rule as the unpinned
-        // surfaces; metadataOf owns shadowing and the files-only
-        // version restriction)
-        metadataOf(ident, Some(v)).foreach(mt => return mt)
-        throw new NoSuchTableException(ident)
-      }
-      val log = new LogTable(dir.toString)
-      if (!log.versions.contains(v)) throw new IllegalArgumentException(
-        s"table '$ident' has no committed version $v")
-      GraftLogTableV2.pinned(s"$catalogName.${ident.name()}", log, v)
-    } else {
-      if (!new java.io.File(dir, s"v=$v").isDirectory)
-        throw new IllegalArgumentException(
-          s"table '$ident' has no committed version $v")
-      readTable(ident, s"$dir/v=$v")
+    if (!isLogTable(dir)) {
+      // `cat.t.files VERSION AS OF n` — the manifest AS OF a
+      // committed snapshot (same resolution rule as the unpinned
+      // surfaces; metadataOf owns shadowing and the files-only
+      // version restriction)
+      metadataOf(ident, Some(v)).foreach(mt => return mt)
+      throw new NoSuchTableException(ident)
     }
+    val log = new LogTable(dir.toString)
+    if (!log.versions.contains(v)) throw new IllegalArgumentException(
+      s"table '$ident' has no committed version $v")
+    GraftLogTableV2.pinned(s"$catalogName.${ident.name()}", log, v)
   }
 
   /** `TIMESTAMP AS OF t` — Spark hands the instant as epoch MICROS;
-    * sink/log commit times are epoch millis from the injectable
-    * clock. */
+    * log commit times are epoch millis from the injectable clock. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val dir = dirOf(ident)
-    val tsMillis = Math.floorDiv(timestampMicros, 1000L)
-    if (manifestLine(dir).isEmpty) {
-      if (!isLogTable(dir)) throw new NoSuchTableException(ident)
-      val log = new LogTable(dir.toString)
-      GraftLogTableV2.pinned(s"$catalogName.${ident.name()}", log,
-        log.versionAt(tsMillis))
-    } else {
-      val sink = new VersionedParquetSink(dir.toString)
-      readTable(ident, s"$dir/v=${sink.versionAt(tsMillis)}")
-    }
+    if (!isLogTable(dir)) throw new NoSuchTableException(ident)
+    val log = new LogTable(dir.toString)
+    GraftLogTableV2.pinned(s"$catalogName.${ident.name()}", log,
+      log.versionAt(Math.floorDiv(timestampMicros, 1000L)))
   }
 
-  /** `CREATE TABLE cat.t (schema)`: by default seed a versioned
-    * sink with an empty v=0 snapshot of the requested schema (CTAS
-    * rejected downstream — that table is read-only);
-    * `CREATE TABLE cat.t (schema) USING log [PARTITIONED BY (col)]`
-    * seeds a [[LogTable]] instead, whose full INSERT / INSERT
-    * OVERWRITE / DELETE DML surface works by name. Identity
-    * partition transforms become the log table's hive partition
-    * columns; non-identity transforms (bucket/days/...) and
-    * partitioning of sink tables are rejected. */
+  /** `CREATE TABLE cat.t (schema) [USING log] [PARTITIONED BY (...)]
+    * [CLUSTER BY (...)]` seeds a [[LogTable]], whose full INSERT /
+    * INSERT OVERWRITE / UPDATE / DELETE / MERGE surface works by
+    * name. No provider, `log` and `graft_log` are the same table;
+    * any other provider is rejected. Identity partition transforms
+    * become hive partition columns, Iceberg-style transforms
+    * (`days`, `bucket`, `truncate`, ...) hidden generated ones. */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: JMap[String, String]): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    val provider = Option(properties.get("provider")).map(_.toLowerCase)
-    val isLog = provider.exists(p => p == "log" || p == "graft_log")
-    if (partitions.nonEmpty && !isLog)
-      throw new UnsupportedOperationException(
-        "graft sink tables do not take partition transforms; " +
-          "layout is the sink's (PARTITIONED BY is supported USING log)")
-    if (isLog) {
-      // `CREATE TABLE ... CLUSTER BY (c, ...)` arrives as a
-      // ClusterByTransform in the partitioning array (Spark's native
-      // clause): it is NOT a hive layout — map it to the
-      // graft.clusterBy property (write-time local sort +
-      // range-partitioned compaction)
-      val (clusterTs, hiveTs) = partitions.toSeq.partition(
-        _.isInstanceOf[org.apache.spark.sql.connector.expressions
-          .ClusterByTransform])
-      val clusterCols = clusterTs
-        .flatMap(_.references().map(_.fieldNames().mkString(".")))
-      clusterCols.foreach(c => require(schema.fieldNames.contains(c),
-        s"CLUSTER BY names unknown column '$c'"))
-      // PARTITIONED BY accepts identity columns AND Iceberg-style
-      // transforms — `days(ts)`, `bucket(16, id)`, `truncate(4, c)`
-      // — which Spark's parser delivers as native DSv2 transforms;
-      // normalize each to the canonical spec string LogTable.create
-      // resolves into a hidden generated partition column
-      val partCols = hiveTs.map { t =>
-        def ref = t.references().head.fieldNames().mkString(".")
-        def intArg: Int = t.arguments().collectFirst {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            l.value().toString.toInt
-        }.getOrElse(throw new IllegalArgumentException(
-          s"transform '$t' needs an integer argument"))
-        t.name match {
-          case "identity" => ref
-          case n @ ("years" | "months" | "days" | "hours") => s"$n($ref)"
-          case "bucket"   => s"bucket($intArg,$ref)"
-          case "truncate" => s"truncate($intArg,$ref)"
-          case other => throw new UnsupportedOperationException(
-            "log tables support identity, years, months, days, hours, " +
-              s"bucket and truncate PARTITIONED BY transforms, got '$other'")
-        }
-      }
-      // the SQL-facing knobs for the log table's index/constraint/
-      // generated-column features ride TBLPROPERTIES:
-      //   'bloom' = 'colA,colB'           per-file bloom index
-      //   'check.<name>' = '<bool expr>'  CHECK constraint
-      //   'generated.<col>' = '<expr>'    GENERATED ALWAYS AS
-      import scala.jdk.CollectionConverters._
-      val props = properties.asScala
-      val bloom = props.get("bloom")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq.empty)
-      val checks = props.collect {
-        case (k, v) if k.startsWith("check.") =>
-          k.stripPrefix("check.") -> v }.toMap
-      val gens = props.collect {
-        case (k, v) if k.startsWith("generated.") =>
-          k.stripPrefix("generated.") -> v }.toMap
-      //   'columnMapping' = 'true'        field-id column mapping
-      //   (metadata-only RENAME COLUMN)
-      //   'identity.<col>' = 'start=N, step=M'   GENERATED ALWAYS
-      //                                          AS IDENTITY
-      //   'default.<col>' = '<expr>'      column DEFAULT
-      val mapping = props.get("columnMapping").exists(_.toBoolean)
-      val identities = props.collect {
-        case (k, v) if k.startsWith("identity.") =>
-          val kvs = v.split(",").map(_.trim.split("=", 2))
-            .collect { case Array(a, b) => a.trim -> b.trim.toLong }.toMap
-          k.stripPrefix("identity.") -> graft.sources.IdentitySpec(
-            kvs.getOrElse("start", 1L), kvs.getOrElse("step", 1L)) }.toMap
-      val defaults = props.collect {
-        case (k, v) if k.startsWith("default.") =>
-          k.stripPrefix("default.") -> v }.toMap
-      // everything that is not a feature knob (and not one of the
-      // engine-injected keys) lands in the log's free-form
-      // TBLPROPERTIES map
-      val free = props.filterNot { case (k, _) =>
-        reservedProp(k) }.toMap ++
-        (if (clusterCols.isEmpty) Map.empty
-         else Map(LogTable.PropClusterBy -> clusterCols.mkString(",")))
-      new LogTable(dirOf(ident).toString)
-        .create(schema, partCols, bloom, checks, gens, mapping,
-          identities, defaults, free)
-    } else {
-      val spark = SparkSession.active
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      new VersionedParquetSink(dirOf(ident).toString).overwrite(empty)
+    Option(properties.get("provider")).map(_.toLowerCase).foreach { p =>
+      if (p != "log" && p != "graft_log")
+        throw new UnsupportedOperationException(
+          s"GraftTableCatalog tables are log tables: provider '$p' is " +
+            "not supported (omit USING, or write USING log)")
     }
+    // `CREATE TABLE ... CLUSTER BY (c, ...)` arrives as a
+    // ClusterByTransform in the partitioning array (Spark's native
+    // clause): it is NOT a hive layout — map it to the
+    // graft.clusterBy property (write-time local sort +
+    // range-partitioned compaction)
+    val (clusterTs, hiveTs) = partitions.toSeq.partition(
+      _.isInstanceOf[org.apache.spark.sql.connector.expressions
+        .ClusterByTransform])
+    val clusterCols = clusterTs
+      .flatMap(_.references().map(_.fieldNames().mkString(".")))
+    clusterCols.foreach(c => require(schema.fieldNames.contains(c),
+      s"CLUSTER BY names unknown column '$c'"))
+    // PARTITIONED BY accepts identity columns AND Iceberg-style
+    // transforms — `days(ts)`, `bucket(16, id)`, `truncate(4, c)`
+    // — which Spark's parser delivers as native DSv2 transforms;
+    // normalize each to the canonical spec string LogTable.create
+    // resolves into a hidden generated partition column
+    val partCols = hiveTs.map { t =>
+      def ref = t.references().head.fieldNames().mkString(".")
+      def intArg: Int = t.arguments().collectFirst {
+        case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
+          l.value().toString.toInt
+      }.getOrElse(throw new IllegalArgumentException(
+        s"transform '$t' needs an integer argument"))
+      t.name match {
+        case "identity" => ref
+        case n @ ("years" | "months" | "days" | "hours") => s"$n($ref)"
+        case "bucket"   => s"bucket($intArg,$ref)"
+        case "truncate" => s"truncate($intArg,$ref)"
+        case other => throw new UnsupportedOperationException(
+          "log tables support identity, years, months, days, hours, " +
+            s"bucket and truncate PARTITIONED BY transforms, got '$other'")
+      }
+    }
+    // the SQL-facing knobs for the log table's index/constraint/
+    // generated-column features ride TBLPROPERTIES:
+    //   'bloom' = 'colA,colB'           per-file bloom index
+    //   'check.<name>' = '<bool expr>'  CHECK constraint
+    //   'generated.<col>' = '<expr>'    GENERATED ALWAYS AS
+    import scala.jdk.CollectionConverters._
+    val props = properties.asScala
+    val bloom = props.get("bloom")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq.empty)
+    val checks = props.collect {
+      case (k, v) if k.startsWith("check.") =>
+        k.stripPrefix("check.") -> v }.toMap
+    val gens = props.collect {
+      case (k, v) if k.startsWith("generated.") =>
+        k.stripPrefix("generated.") -> v }.toMap
+    //   'columnMapping' = 'true'        field-id column mapping
+    //   (metadata-only RENAME COLUMN)
+    //   'identity.<col>' = 'start=N, step=M'   GENERATED ALWAYS
+    //                                          AS IDENTITY
+    //   'default.<col>' = '<expr>'      column DEFAULT
+    val mapping = props.get("columnMapping").exists(_.toBoolean)
+    val identities = props.collect {
+      case (k, v) if k.startsWith("identity.") =>
+        val kvs = v.split(",").map(_.trim.split("=", 2))
+          .collect { case Array(a, b) => a.trim -> b.trim.toLong }.toMap
+        k.stripPrefix("identity.") -> graft.sources.IdentitySpec(
+          kvs.getOrElse("start", 1L), kvs.getOrElse("step", 1L)) }.toMap
+    val defaults = props.collect {
+      case (k, v) if k.startsWith("default.") =>
+        k.stripPrefix("default.") -> v }.toMap
+    // everything that is not a feature knob (and not one of the
+    // engine-injected keys) lands in the log's free-form
+    // TBLPROPERTIES map
+    val free = props.filterNot { case (k, _) =>
+      reservedProp(k) }.toMap ++
+      (if (clusterCols.isEmpty) Map.empty
+       else Map(LogTable.PropClusterBy -> clusterCols.mkString(",")))
+    new LogTable(dirOf(ident).toString)
+      .create(schema, partCols, bloom, checks, gens, mapping,
+        identities, defaults, free)
     loadTable(ident)
   }
 
@@ -508,7 +437,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
 
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
-    if (manifestLine(dir).isEmpty && !isLogTable(dir)) false
+    if (!isLogTable(dir)) false
     else {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm))
@@ -527,18 +456,4 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     java.nio.file.Files.move(dirOf(oldIdent).toPath, dirOf(newIdent).toPath)
     ()
   }
-}
-
-/** Read-only wrapper over Spark's own parquet table implementation:
-  * delegates schema inference and the pushdown-capable scan builder,
-  * but advertises ONLY `BATCH_READ` — so the analyzer rejects any
-  * write path that would bypass the sink manifest. */
-private[sources] final class GraftReadTable(inner: ParquetTable)
-  extends Table with SupportsRead {
-  override def name(): String = inner.name
-  override def schema(): StructType = inner.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    inner.newScanBuilder(options)
 }

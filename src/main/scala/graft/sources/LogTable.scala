@@ -198,13 +198,13 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
                              filesRewritten: Int)
 
 /** A minimal Delta-style transaction-log table over plain parquet —
-  * the file-granularity counterpart to [[VersionedParquetSink]]'s
-  * directory-per-version copy-on-write and [[MergeOnReadSink]]'s
-  * patch commits (reference behavior: the reference keeps its
-  * dimensions in Delta tables, `Load & SCD-Merge.py:24-38`; this is
-  * the same commit protocol re-derived on public parquet, after the
-  * published design — Armbrust et al., "Delta Lake: High-Performance
-  * ACID Table Storage over Cloud Object Stores", VLDB 2020).
+  * graft's one table substrate: dimensions, catalog tables, streamed
+  * sinks and curated outputs are all LogTables (reference behavior:
+  * the reference keeps its dimensions in Delta tables, `Load &
+  * SCD-Merge.py:24-38`; this is the same commit protocol re-derived
+  * on public parquet, after the published design — Armbrust et al.,
+  * "Delta Lake: High-Performance ACID Table Storage over Cloud Object
+  * Stores", VLDB 2020).
   *
   * Layout under `path`:
   *  - `_log/%020d.json`       one JSONL commit per version: a
@@ -218,20 +218,20 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
   *    commits (the change-data-feed surface), referenced from the
   *    commit that wrote them
   *
-  * Why this scales where the CoW sink does not: an append commits
-  * ONLY its new files plus one O(#files-in-delta) log entry — a
-  * 1-row-in-100-TB append writes kilobytes. Row-level DELETE/UPDATE
-  * prune untouched files with per-file min/max stats (collected at
-  * commit time over the staged delta only), scan just the stats
-  * survivors for matches, and rewrite just the files that contain
-  * matching rows; everything else is carried forward by reference.
-  * Snapshot isolation is the same MVCC trick as the other sinks —
-  * data files are immutable, a version is defined entirely by its
-  * log entry, and commits race on an atomic create-if-absent claim
-  * of the next log file (optimistic concurrency: blind appends
-  * retry, file-rewriting commits revalidate that their removed files
-  * are still live and throw on a true conflict, which is Delta's
-  * conflict-detection rule).
+  * Why this scales where a whole-snapshot rewrite does not: an
+  * append commits ONLY its new files plus one O(#files-in-delta) log
+  * entry — a 1-row-in-100-TB append writes kilobytes. Row-level
+  * DELETE/UPDATE prune untouched files with per-file min/max stats
+  * (collected at commit time over the staged delta only), scan just
+  * the stats survivors for matches, and rewrite just the files that
+  * contain matching rows; everything else is carried forward by
+  * reference. Snapshot isolation is the MVCC trick — data files are
+  * immutable, a version is defined entirely by its log entry, and
+  * commits race on an atomic create-if-absent claim of the next log
+  * file (optimistic concurrency: blind appends retry, file-rewriting
+  * commits revalidate that their removed files are still live and
+  * throw on a true conflict, which is Delta's conflict-detection
+  * rule).
   *
   * The claim primitive is pluggable ([[LogCommitCoordinator]] —
   * Delta's LogStore seam): the default POSIX binding hard-links the
@@ -1497,7 +1497,7 @@ final class LogTable(val path: String,
     * compares against. Root-qualified, so clone snapshots that mix
     * data roots can never collide on a base name. */
   private[sources] def absLivePath(a: AddFile): String =
-    new File(absPath(a.path)).getAbsolutePath
+    new File(absPath(a.path)).toPath.toAbsolutePath.normalize.toString
 
   /** Column names a stored SQL expression references (parse-level;
     * unparseable text references nothing) — the dependency check
@@ -6277,7 +6277,7 @@ object LogTable {
     * normalize identically. */
   private[sources] def provPath(uri: String): String =
     (if (uri.startsWith("file:")) new File(new java.net.URI(uri))
-     else new File(uri)).getAbsolutePath
+     else new File(uri)).toPath.toAbsolutePath.normalize.toString
 
   /** Default VACUUM retention window (Delta's default): files
     * modified more recently than this are presumed in-flight and
@@ -6437,16 +6437,4 @@ object LogTable {
 
   /** The row-id column [[LogTable.loadWithRowIds]] exposes. */
   val RowIdCol = "_row_id"
-}
-
-/** [[DimSink]] face of a [[LogTable]], so every sink-shaped pipeline
-  * (the SCD flows, copy-on-write [[SqlMerge.merge]], the dim-sink
-  * e2e path) commits through the transaction log unchanged:
-  * `overwrite` is a full-replace log commit — prior files retired by
-  * reference, history stays time-travelable, and the same table
-  * keeps serving catalog reads, streams and the change feed. */
-final class LogTableDimSink(val log: LogTable) extends DimSink {
-  override def load(spark: SparkSession): Option[DataFrame] =
-    if (log.exists) Some(log.load(spark)) else None
-  override def overwrite(dim: DataFrame): Unit = { log.overwrite(dim); () }
 }

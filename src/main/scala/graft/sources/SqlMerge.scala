@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction,
   UpdateAction, UpdateStarAction}
 import org.apache.spark.sql.functions._
 
-/** Executable ANSI `MERGE INTO` over graft's own dimension sinks —
-  * the SQL surface the reference's users write (reference:
+/** Executable ANSI `MERGE INTO` over graft's [[LogTable]] — the SQL
+  * surface the reference's users write (reference:
   * notebooks/Load & SCD-Merge.py:24-38, Mini-ETL-Pipeline in
   * Databricks.py:55-66) without requiring Delta/Iceberg jars.
   *
@@ -18,19 +18,16 @@ import org.apache.spark.sql.functions._
   * target FULL OUTER JOIN source on the merge condition, a branch
   * label chosen per row by the first action whose condition holds
   * (ANSI action-order semantics), every output column a CASE over the
-  * branch, then one transactional commit through the [[DimSink]].
-  * Against a [[VersionedParquetSink]] the commit is an atomic
-  * manifest swap: readers never see partial merge state and the
-  * pre-merge version stays time-travel-readable — the MVCC semantics
-  * Delta's MERGE provides, over plain parquet.
+  * branch. [[mergeLog]] commits the result to a [[LogTable]] at file
+  * granularity (only files holding a changed row are rewritten, the
+  * pre-merge version stays time-travel-readable);
+  * [[mergeFrames]] returns it as a frame — the in-memory reference
+  * the log path is checked against.
   *
-  * Scale: the plan is a single keyed equi-join shuffle (plus AQE skew
-  * split) and a full-snapshot rewrite — copy-on-write, the same cost
-  * model as Delta MERGE without deletion vectors. Supported actions:
-  * WHEN MATCHED [AND c] THEN UPDATE SET .. or DELETE, WHEN NOT
-  * MATCHED [AND c] THEN INSERT .., WHEN NOT MATCHED BY SOURCE
-  * [AND c] THEN UPDATE SET .. or DELETE, plus the star forms of
-  * UPDATE/INSERT — the full delete-quadrant surface (the MERGE
+  * Supported actions: WHEN MATCHED [AND c] THEN UPDATE SET .. or
+  * DELETE, WHEN NOT MATCHED [AND c] THEN INSERT .., WHEN NOT MATCHED
+  * BY SOURCE [AND c] THEN UPDATE SET .. or DELETE, plus the star forms
+  * of UPDATE/INSERT — the full delete-quadrant surface (the MERGE
   * formulation of scd2_deletes).
   *
   * ANSI cardinality rule enforced: a target row matched by more than
@@ -105,8 +102,8 @@ object SqlMerge {
       name -> GraftColumnShim.column(v)
     }.toMap
 
-  /** The analyzed merge: everything both commit strategies
-    * (copy-on-write [[merge]] and merge-on-read [[mergeMor]]) need. */
+  /** The analyzed merge: everything [[mergeLog]] and [[mergeFrames]]
+    * need. */
   private final case class Core(p: Parsed, target: DataFrame,
                                 targetCols: Seq[String], labeled: DataFrame,
                                 updates: Seq[Int], deletes: Seq[Int],
@@ -212,16 +209,6 @@ object SqlMerge {
     }
   }
 
-  private def analyze(spark: SparkSession, mergeSql: String,
-                      sink: DimSink): Core = {
-    val p = parse(spark, mergeSql)
-    val target = sink.load(spark).getOrElse(
-      throw new IllegalArgumentException(
-        s"MERGE target '${p.targetName}' has no current state — " +
-          "seed the sink before merging"))
-    analyzeFrame(spark, p, target, target.columns.toSeq)
-  }
-
   /** Build the labeled-join [[Core]] for a target frame. `targetCols`
     * may be a subset of `target`'s columns — extra passthrough
     * columns (e.g. the log-merge `__file` lineage) ride along the
@@ -272,90 +259,6 @@ object SqlMerge {
     Core(p, target, targetCols, labeled, updates, deletes, byIdx)
   }
 
-  /** Execute `mergeSql` against `sink` (the target table name in the
-    * statement is informational — the sink IS the target). The source
-    * must be a registered temp view or catalog name. Commits the
-    * post-merge snapshot through the sink and returns branch counters.
-    *
-    * Two passes over the (unmaterialized) join, not three and no
-    * persist: one combined aggregate (cardinality check + counters,
-    * [[Core.statsChecked]]) and the output write itself. At a 100 TB
-    * target, re-running the keyed join for the write costs two input
-    * scans but never materializes a full joined copy of the table —
-    * the previous persist WAS that extra full write. */
-  def merge(spark: SparkSession, mergeSql: String,
-            sink: DimSink): MergeResult = {
-    val core = analyze(spark, mergeSql, sink)
-    val stats = core.statsChecked()
-    sink.overwrite(core.next)
-    stats
-  }
-
-  /** Resolve the MERGE target from the statement's own table name via
-    * [[GraftCatalog]] — the `spark.sql`-shaped surface (reference:
-    * notebooks/Load & SCD-Merge.py:24-38 merges into a NAMED table).
-    * Refreshes the registered view after the commit so a subsequent
-    * `spark.table(name)` / `SELECT ... FROM name` sees the new
-    * snapshot. */
-  def merge(spark: SparkSession, mergeSql: String): MergeResult = {
-    val p = parse(spark, mergeSql)
-    val sink = GraftCatalog.sinkFor(spark, p.targetName).getOrElse(
-      throw new IllegalArgumentException(
-        s"MERGE target '${p.targetName}' is not a graft-registered " +
-          "table — GraftCatalog.register it (or pass a DimSink)"))
-    val r = merge(spark, mergeSql, sink)
-    GraftCatalog.refresh(spark, p.targetName)
-    r
-  }
-
-  /** Merge-on-read execution: instead of rewriting the full target
-    * snapshot (copy-on-write [[merge]]), commit ONLY the delta — the
-    * update/insert rows as an upsert patch and the deleted keys as a
-    * delete patch — through [[MergeOnReadSink.commitPatchCombined]],
-    * both images off ONE execution of the labeled join. Write
-    * cost is ∝ the merge's change set, not the table (Delta's
-    * deletion-vector / MoR trade: cheap frequent merges, a read-side
-    * apply, compaction folds patches back into a full snapshot). The
-    * updated keys double as delete keys so the reader's anti-join
-    * drops the superseded base rows. */
-  def mergeMor(spark: SparkSession, mergeSql: String,
-               sink: MergeOnReadSink): MergeResult = {
-    val core = analyze(spark, mergeSql, sink)
-    val stats = core.statsChecked()
-    val isChange = col("__branch")
-      .isin(core.updates.map(i => i: Any): _*)
-    val isDelete = col("__branch")
-      .isin(core.deletes.map(i => i: Any): _*)
-    // ONE more execution of the (never-materialized) join — two per
-    // MERGE total with the stats pass, Delta's own count; the old
-    // shape ran it three times (stats, upserts, delete-keys), each
-    // re-running the merge SOURCE pipeline underneath. Every changed
-    // row emits its 0-2 patch images as an array of structs: the
-    // upsert image with post-merge values, and — for deletes AND
-    // updated existing rows, whose superseded base row the reader's
-    // anti-join must drop — a delete-key image with the TARGET-side
-    // key (present for both branches). The sink commits the tagged
-    // write AS the patch — one write, no read-back or split (the
-    // reader's first move was to union the two halves back into
-    // this exact shape).
-    val upsertStruct = struct(
-      core.outCols :+ lit(true).as("__up"): _*)
-    val goneStruct = struct(core.targetCols.map { c =>
-      val dt = core.target.schema(c).dataType
-      (if (sink.keyCols.contains(c))
-        col(s"${core.p.targetAlias}.$c").cast(dt)
-      else lit(null).cast(dt)).as(c)
-    } :+ lit(false).as("__up"): _*)
-    val patch = core.labeled.filter(isChange || isDelete)
-      .select(explode(
-        when(isChange && core.tPresent, array(upsertStruct, goneStruct))
-          .when(isChange, array(upsertStruct))
-          .otherwise(array(goneStruct))).as("__c"))
-      .select(col("__c.*"))
-    sink.commitPatchCombined(patch)
-    stats
-  }
-
   /** File-granularity MERGE into a [[LogTable]] — Delta's actual
     * merge-on-write algorithm: capture each target row's source FILE
     * at scan time (`input_file_name`), run the same labeled join,
@@ -363,9 +266,8 @@ object SqlMerge {
     * changed (update/delete, matched or not-matched-by-source) plus
     * one new file set for the inserts; every untouched file carries
     * into the new version by reference. Write cost ∝ touched data +
-    * inserts, never the table — between copy-on-write [[merge]]
-    * (rewrite everything) and [[mergeMor]] (rewrite nothing, pay at
-    * read) this is the pay-once-proportionally point Delta ships.
+    * inserts, never the table — the pay-once-proportionally point
+    * Delta ships.
     *
     * TWO executions of the (never-materialized) join per MERGE —
     * Delta's own pass count: ONE fused aggregate (cardinality check +
@@ -661,21 +563,18 @@ object SqlMerge {
       new LogTable((wh +: parts.tail.toSeq).mkString("/")))
   }
 
-  /** In-memory convenience for tests and pipelines that hold the
-    * dimension as a frame: returns the post-merge state instead of
-    * committing to a sink. */
+  /** In-memory MERGE for tests and pipelines that hold the dimension
+    * as a frame — the reference [[mergeLog]] is checked against.
+    * Returns the post-merge state persisted, so the labeled join runs
+    * once more after the checked stats pass, not once per action. */
   def mergeFrames(spark: SparkSession, mergeSql: String,
                   target: DataFrame): DataFrame = {
-    val sink = new DimSink {
-      var out: DataFrame = _
-      override def load(s: SparkSession): Option[DataFrame] = Some(target)
-      override def overwrite(dim: DataFrame): Unit = {
-        out = dim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        ()
-      }
-    }
-    merge(spark, mergeSql, sink)
-    sink.out
+    val core = analyzeFrame(spark, parse(spark, mergeSql), target,
+      target.columns.toSeq)
+    core.statsChecked()
+    val out = core.next
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    out
   }
 }

@@ -451,18 +451,16 @@ object Streams {
 
   /** Incremental dimension maintenance from a stream: each
     * micro-batch runs the batch pipeline's stage + SCD merge against
-    * the dimension held by `sink` and commits the new state — the
+    * the dimension held in `log` and commits the new state — the
     * reference's scheduled MERGE loop as a continuously-running
     * stream (reference: notebooks/pipeline_core.py:274-296).
     *
     * The batch timestamp is data-derived (max of `tsCol` in the
     * batch), so replays after checkpoint recovery produce identical
-    * dimensions. Storage format is the sink's concern: the parquet
-    * sink materializes before its non-transactional rewrite; a
-    * Delta/Iceberg sink commits a snapshot — the merge plan is
-    * identical either way. */
+    * dimensions. Each batch is one log commit, so readers never see
+    * a half-merged dimension. */
   def sinkToDim(stream: DataFrame, cfg: graft.operators.Pipeline.TableConfig,
-                tsCol: String, sink: graft.sources.DimSink,
+                tsCol: String, log: graft.sources.LogTable,
                 checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
@@ -473,19 +471,19 @@ object Streams {
           val batchTs = new java.sql.Timestamp(
             batch.agg(max(col(tsCol))).head.getTimestamp(0).getTime)
           graft.operators.Pipeline.runIncrementInto(
-            sink, batch, cfg, s"stream:batch$batchId", batchTs)
+            log, batch, cfg, s"stream:batch$batchId", batchTs)
           ()
         }
       }
       .start()
 
-  /** Path-bound convenience overload: strongest available format for
-    * the path (Delta when its jars are present, else parquet). */
+  /** Path-bound convenience overload: the dimension is the log table
+    * at `dimPath`. */
   def sinkToDim(stream: DataFrame, cfg: graft.operators.Pipeline.TableConfig,
                 tsCol: String, dimPath: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    sinkToDim(stream, cfg, tsCol,
-      graft.sources.DimSink.forPath(dimPath), checkpointDir)
+    sinkToDim(stream, cfg, tsCol, new graft.sources.LogTable(dimPath),
+      checkpointDir)
 
   /** Continuously-maintained materialized aggregate — the streaming
     * face of [[graft.sources.MaterializedAgg]]: each micro-batch
@@ -543,12 +541,12 @@ object Streams {
           .map(c => c -> c.stripPrefix("__d_")).toMap)
   }
 
-  /** Point-in-time stream enrichment against a VERSIONED dimension
-    * sink, safe under concurrent dimension commits: each micro-batch
-    * resolves the sink's manifest ONCE and enriches against that
-    * immutable `v=N/` snapshot — a writer committing v=N+1 mid-batch
-    * can never tear the batch (version directories are append-only
-    * and the manifest swap is atomic), which is exactly the snapshot
+  /** Point-in-time stream enrichment against a VERSIONED dimension,
+    * safe under concurrent dimension commits: each micro-batch pins
+    * the log's current version ONCE and enriches against that
+    * immutable snapshot — a writer committing version N+1 mid-batch
+    * can never tear the batch (data files are immutable and a version
+    * is fixed by its log entry), which is exactly the snapshot
     * isolation Delta/Iceberg give stream-static joins and a plain
     * parquet dir cannot. Successive batches pick up new dimension
     * versions as they commit. Enriched rows append to `outPath`.
@@ -556,7 +554,7 @@ object Streams {
     * notebooks/pipeline_core.py:274-296) */
   def enrichAgainstVersionedDim(facts: DataFrame, factKey: String,
                                 factTs: String,
-                                sink: graft.sources.VersionedParquetSink,
+                                log: graft.sources.LogTable,
                                 dimKey: String, outPath: String,
                                 checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -564,10 +562,10 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one manifest read per batch pins the snapshot; record which
-        // version enriched the batch for lineage/audit
-        sink.currentVersion.foreach { v =>
-          val dim = sink.loadVersion(batch.sparkSession, v)
+        // one head resolution per batch pins the snapshot; record
+        // which version enriched the batch for lineage/audit
+        log.currentVersion.foreach { v =>
+          val dim = log.load(batch.sparkSession, Some(v))
           enrichWithScd2(batch, factKey, factTs, dim, dimKey)
             .withColumn("dim_version", lit(v))
             .write.mode("append").parquet(outPath)

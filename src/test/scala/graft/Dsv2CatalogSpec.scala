@@ -1,11 +1,11 @@
 package graft
 
-import graft.sources.{GraftTableCatalog, MergeOnReadSink, VersionedParquetSink}
+import graft.sources.{GraftTableCatalog, LogTable}
 import org.apache.spark.sql.functions._
 
 /** The DataSource-V2 catalog plugin: named reads, native SQL time
-  * travel (`VERSION AS OF` / `TIMESTAMP AS OF`), read-only
-  * enforcement, pushdown through the catalog scan, and DDL. */
+  * travel (`VERSION AS OF` / `TIMESTAMP AS OF`), pushdown through the
+  * catalog scan, and DDL. */
 class Dsv2CatalogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,18 +25,24 @@ class Dsv2CatalogSpec extends SparkSpec {
     cat
   }
 
-  private def threeVersionSink(wh: String): VersionedParquetSink = {
+  /** Three commits at 1000 / 2000 / 3000 ms. `k` is nullable, as a
+    * SQL-declared `k BIGINT` column is. */
+  private def threeVersionTable(wh: String): LogTable = {
     val ticks = Iterator(1000L, 2000L, 3000L)
-    val sink = new VersionedParquetSink(s"$wh/dim", () => ticks.next())
-    sink.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    sink.overwrite(Seq((1L, "a2"), (3L, "c")).toDF("k", "v"))
-    sink.overwrite(Seq((1L, "a3")).toDF("k", "v"))
-    sink
+    val log = new LogTable(s"$wh/dim", () => ticks.next())
+    def commit(rows: (Long, String)*): Unit = {
+      log.overwrite(rows.map { case (k, v) => (Option(k), v) }.toDF("k", "v"))
+      ()
+    }
+    commit((1L, "a"), (2L, "b"))
+    commit((1L, "a2"), (3L, "c"))
+    commit((1L, "a3"))
+    log
   }
 
   test("SELECT by name reads the current snapshot; VERSION AS OF pins") {
     val wh = tmp("dsv2")
-    threeVersionSink(wh)
+    threeVersionTable(wh)
     val cat = freshCatalog(wh)
     assert(spark.sql(s"SELECT k, v FROM $cat.dim ORDER BY k")
       .as[(Long, String)].collect().toSeq == Seq((1L, "a3")))
@@ -52,7 +58,7 @@ class Dsv2CatalogSpec extends SparkSpec {
   test("TIMESTAMP AS OF resolves between-commit instants to the " +
     "snapshot current then") {
     val wh = tmp("dsv2")
-    threeVersionSink(wh) // commit millis 1000 / 2000 / 3000
+    threeVersionTable(wh) // commit millis 1000 / 2000 / 3000
     val cat = freshCatalog(wh)
     def at(micros: Long): Seq[(Long, String)] =
       spark.sql(s"SELECT k, v FROM $cat.dim " +
@@ -67,7 +73,7 @@ class Dsv2CatalogSpec extends SparkSpec {
 
   test("catalog reads push filters down to the parquet scan") {
     val wh = tmp("dsv2")
-    threeVersionSink(wh)
+    threeVersionTable(wh)
     val cat = freshCatalog(wh)
     val plan = spark.sql(s"SELECT k FROM $cat.dim VERSION AS OF 0 WHERE k = 2")
       .queryExecution.executedPlan.toString
@@ -77,49 +83,32 @@ class Dsv2CatalogSpec extends SparkSpec {
       s"expected column pruning to drop v:\n$plan")
   }
 
-  test("the catalog table is read-only: INSERT INTO is rejected") {
-    val wh = tmp("dsv2")
-    threeVersionSink(wh)
-    val cat = freshCatalog(wh)
-    val err = intercept[Exception](
-      spark.sql(s"INSERT INTO $cat.dim VALUES (9, 'z')"))
-    assert(err.getMessage.toLowerCase.contains("does not support")
-      || err.getMessage.toLowerCase.contains("unsupported"),
-      s"unexpected: ${err.getMessage}")
-  }
-
   test("CREATE TABLE seeds an empty v=0; DROP TABLE removes it; " +
     "SHOW TABLES lists sinks") {
     val wh = tmp("dsv2")
-    threeVersionSink(wh)
+    threeVersionTable(wh)
     val cat = freshCatalog(wh)
     spark.sql(s"CREATE TABLE $cat.fresh (x INT, s STRING)")
     assert(spark.sql(s"SELECT * FROM $cat.fresh").count() == 0)
     assert(spark.sql(s"SELECT * FROM $cat.fresh").schema.fieldNames.toSeq
       == Seq("x", "s"))
+    // no provider creates a log table: v0 is the empty snapshot, and
+    // the table takes SQL writes by name
+    val fresh = new LogTable(s"$wh/fresh")
+    assert(fresh.versions == Seq(0L))
+    spark.sql(s"INSERT INTO $cat.fresh VALUES (1, 'a')")
+    assert(spark.sql(s"SELECT * FROM $cat.fresh").count() == 1)
+    // any provider other than log is refused with a clear error
+    val e = intercept[Exception](
+      spark.sql(s"CREATE TABLE $cat.pq (x INT) USING parquet"))
+    assert(e.getMessage.contains("provider 'parquet' is not supported"),
+      e.getMessage)
+    assert(!new java.io.File(s"$wh/pq").exists)
     val listed = spark.sql(s"SHOW TABLES IN $cat").select("tableName")
       .as[String].collect().toSet
     assert(listed == Set("dim", "fresh"))
     spark.sql(s"DROP TABLE $cat.fresh")
     assert(spark.sql(s"SHOW TABLES IN $cat").count() == 1)
-  }
-
-  test("a merge-on-read sink is served when compacted and rejected " +
-    "with pending patches") {
-    val wh = tmp("dsv2")
-    val sink = new MergeOnReadSink(s"$wh/mor", Seq("k"))
-    sink.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val cat = freshCatalog(wh)
-    assert(spark.sql(s"SELECT k, v FROM $cat.mor ORDER BY k")
-      .as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
-    sink.commitPatch(Seq((2L, "b2")).toDF("k", "v"),
-      Seq(1L).toDF("k"))
-    val err = intercept[Exception](
-      spark.sql(s"SELECT * FROM $cat.mor").collect())
-    assert(err.getMessage.contains("pending merge-on-read patches"))
-    sink.compact(spark)
-    assert(spark.sql(s"SELECT k, v FROM $cat.mor ORDER BY k")
-      .as[(Long, String)].collect().toSeq == Seq((2L, "b2")))
   }
 
   test("registering a catalog / reading unmapped tables leaves the " +

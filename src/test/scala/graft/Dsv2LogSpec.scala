@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{GraftTableCatalog, LogTable, VersionedParquetSink}
+import graft.sources.{GraftTableCatalog, LogTable}
 import org.apache.spark.sql.functions._
 
 /** The transaction-log table's SQL DML surface through the DSv2
@@ -117,8 +117,8 @@ class Dsv2LogSpec extends SparkSpec {
   test("SHOW TABLES lists sinks and log tables side by side; DROP " +
     "removes a log table") {
     val wh = tmp("dsv2log")
-    val sink = new VersionedParquetSink(s"$wh/dim")
-    sink.overwrite(Seq((1L, "a")).toDF("k", "v"))
+    // one table written through the API, one created by SQL
+    new LogTable(s"$wh/dim").overwrite(Seq((1L, "a")).toDF("k", "v"))
     val cat = freshCatalog(wh)
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT) USING log")
     val listed = spark.sql(s"SHOW TABLES IN $cat").select("tableName")

@@ -305,24 +305,55 @@ class LogTableSpec extends SparkSpec {
       && r1.rowsAffected == 1L, r1)
   }
 
-  test("a LogTableDimSink lets sink-shaped pipelines (MERGE INTO " +
-    "copy-on-write) commit through the log") {
+  test("runIncrementInto commits each SCD2 increment as one log " +
+    "overwrite; the prior state stays travelable") {
+    import graft.operators.Pipeline
     val t = new LogTable(s"${tmp()}/t")
-    val sink = new graft.sources.LogTableDimSink(t)
-    t.append(Seq((1L, "init", 0L), (2L, "init", 0L)).toDF("k", "v", "n"))
-    Seq((2L, 5L), (3L, 7L)).toDF("k", "m")
-      .createOrReplaceTempView("lts_src")
-    val r = graft.sources.SqlMerge.merge(spark,
-      """MERGE INTO dim t USING lts_src s ON t.k = s.k
-         WHEN MATCHED THEN UPDATE SET v = 'upd', n = s.m
-         WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, 'new', s.m)""",
-      sink)
-    assert(r.updated == 1L && r.inserted == 1L)
-    assert(t.load(spark).select("k", "v").as[(Long, String)].collect().toSet
-      == Set((1L, "init"), (2L, "upd"), (3L, "new")))
-    assert(t.commitOp(t.currentVersion.get) == "overwrite")
-    // pre-merge state stays travelable
-    assert(t.load(spark, Some(0L)).count() == 2L)
+    val cfg = Pipeline.TableConfig("dim", keyCols = Seq("k"),
+      attrCols = Seq("v"), recencyCols = Seq("k"))
+    Pipeline.runIncrementInto(t, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      cfg, "b1", java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+    Pipeline.runIncrementInto(t, Seq((2L, "c"), (3L, "d")).toDF("k", "v"),
+      cfg, "b2", java.sql.Timestamp.valueOf("2026-01-02 00:00:00"))
+    assert(t.versions == Seq(0L, 1L))
+    assert(t.commitOp(1L) == "overwrite")
+    assert(t.load(spark).filter(col("is_current")).select("k", "v")
+      .as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "c"), (3L, "d")))
+    // batch 2 closed k=2's first version; v0 still has it open
+    assert(t.load(spark).count() == 4L)
+    assert(t.load(spark, Some(0L)).select("k", "v", "is_current")
+      .as[(Long, String, Boolean)].collect().toSet ==
+      Set((1L, "a", true), (2L, "b", true)))
+  }
+
+  test("a table opened through a `..` path still attributes its " +
+    "touched files: MERGE UPDATE, delete and deleteMor") {
+    // the scan-time file URI has `..` normalized away; the live-file
+    // key must compare equal to it, or every row-level op misses
+    val root = tmp()
+    val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    def dotted(name: String): LogTable = {
+      new File(s"$root/$name/x").mkdirs()
+      val t = new LogTable(s"$root/$name/x/../t")
+      t.overwrite(base.repartition(1))
+      t
+    }
+    def rows(t: LogTable): Set[(Long, String)] =
+      t.load(spark).as[(Long, String)].collect().toSet
+    val merged = dotted("merge")
+    Seq((1L, "a2")).toDF("k", "v").createOrReplaceTempView("dotdot_src")
+    graft.sources.SqlMerge.mergeLog(spark,
+      """MERGE INTO dim t USING dotdot_src s ON t.k = s.k
+         WHEN MATCHED THEN UPDATE SET v = s.v""", merged)
+    val deleted = dotted("delete")
+    deleted.delete(spark, col("k") === 2L)
+    val dvDeleted = dotted("dv")
+    dvDeleted.deleteMor(spark, col("k") === 3L)
+    assert(Seq(rows(merged), rows(deleted), rows(dvDeleted)) == Seq(
+      Set((1L, "a2"), (2L, "b"), (3L, "c")),
+      Set((1L, "a"), (3L, "c")),
+      Set((1L, "a"), (2L, "b"))))
   }
 
   test("vacuum drops change-feed dirs of expired versions and keeps " +

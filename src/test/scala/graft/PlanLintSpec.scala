@@ -39,10 +39,7 @@ class PlanLintSpec extends SparkSpec {
     "join_blowup" -> "one-row grand-total broadcast for the share column",
     "source_overlap" ->
       ("self-pair of the ≤|sources|-row vocab-size table — model-state " +
-        "scale (the token intersection itself is an equi-join)"),
-    "link_rank" ->
-      ("pre-ckpt stage (captured via checkpointLeaf): one-row " +
-        "vertex-count broadcast attached to the node set"))
+        "scale (the token intersection itself is an equi-join)"))
   // (q15_top_supplier needs no allowlist: Catalyst rewrites its
   // crossJoin + equality filter into a Broadcast HASH join.)
 

@@ -2,8 +2,8 @@ package graft
 
 import graft.operators.Pipeline
 import graft.operators.Pipeline.TableConfig
-import graft.sources.{DimSink, ParquetDimSink, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{LogTable, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.charset.Charset
@@ -102,93 +102,86 @@ class SourcesSpec extends SparkSpec {
     assert(byDir.count() == 3)
   }
 
-  // a second DimSink impl: proves pipelines are written against the
-  // trait, not a storage format (the Delta/Iceberg swap-in path)
-  private class MemoryDimSink extends DimSink {
-    var state: Option[Seq[org.apache.spark.sql.Row]] = None
-    var schema: StructType = _
-    override def load(s: SparkSession): Option[DataFrame] =
-      state.map(rows => s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema))
-    override def overwrite(dim: DataFrame): Unit = {
-      schema = dim.schema
-      state = Some(dim.collect().toSeq)
-    }
-  }
-
   private val cfg = TableConfig("kunden",
     keyCols = Seq("kunde_id"), attrCols = Seq("stadt"),
     recencyCols = Seq("ingest_ts"), scdType = 2)
 
-  private def driveTwoIncrements(sink: DimSink): Seq[(Long, String, Boolean)] = {
-    val b1 = Seq((1L, "Berlin"), (2L, "Hamburg")).toDF("kunde_id", "stadt")
-    Pipeline.runIncrementInto(sink, b1, cfg, "b1", ts("2026-01-01 00:00:00"))
-    val b2 = Seq((2L, "München")).toDF("kunde_id", "stadt")
-    Pipeline.runIncrementInto(sink, b2, cfg, "b2", ts("2026-01-02 00:00:00"))
-    sink.load(spark).get
-      .orderBy("kunde_id", "valid_from")
+  private val batch1 = Seq((1L, "Berlin"), (2L, "Hamburg"))
+  private val batch2 = Seq((2L, "München"))
+  private val ts1 = ts("2026-01-01 00:00:00")
+  private val ts2 = ts("2026-01-02 00:00:00")
+
+  private def rowsOf(dim: DataFrame): Seq[(Long, String, Boolean)] =
+    dim.orderBy("kunde_id", "valid_from")
       .select("kunde_id", "stadt", "is_current")
       .as[(Long, String, Boolean)].collect().toSeq
+
+  private def driveTwoIncrements(log: LogTable): Seq[(Long, String, Boolean)] = {
+    Pipeline.runIncrementInto(log, batch1.toDF("kunde_id", "stadt"), cfg,
+      "b1", ts1)
+    Pipeline.runIncrementInto(log, batch2.toDF("kunde_id", "stadt"), cfg,
+      "b2", ts2)
+    rowsOf(log.load(spark))
   }
 
-  test("runIncrementInto drives the same merge through any DimSink") {
-    val expected = Seq(
-      (1L, "Berlin", true),
-      (2L, "Hamburg", false), // closed by batch 2
-      (2L, "München", true))
-    assert(driveTwoIncrements(
-      new ParquetDimSink(tmpDir("graft_dimsink") + "/dim")) == expected)
-    assert(driveTwoIncrements(new MemoryDimSink) == expected)
+  private val expected = Seq(
+    (1L, "Berlin", true),
+    (2L, "Hamburg", false), // closed by batch 2
+    (2L, "München", true))
+
+  test("runIncrementInto on a LogTable equals the in-memory runIncrement " +
+    "chain") {
+    val log = new LogTable(tmpDir("graft_dimlog") + "/dim")
+    assert(driveTwoIncrements(log) == expected)
+    // the committed dimension is row-for-row the pure-frame chain,
+    // every column included (validity windows, ingest metadata)
+    val b1 = batch1.toDF("kunde_id", "stadt")
+    val dim1 = Pipeline.runIncrement(b1, Pipeline.emptyDim(spark, b1, cfg),
+      cfg, "b1", ts1)
+    val dim2 = Pipeline.runIncrement(batch2.toDF("kunde_id", "stadt"), dim1,
+      cfg, "b2", ts2)
+    def all(df: DataFrame): Seq[String] =
+      df.select(dim2.columns.sorted.map(col): _*).collect().map(_.toString)
+        .toSeq.sorted
+    assert(all(log.load(spark)) == all(dim2))
   }
 
   test("versioned sink: snapshot commits, time travel, vacuum") {
-    val sink = new graft.sources.VersionedParquetSink(
-      tmpDir("graft_vsink") + "/dim")
-    val expected = Seq(
-      (1L, "Berlin", true),
-      (2L, "Hamburg", false),
-      (2L, "München", true))
-    assert(driveTwoIncrements(sink) == expected)
-    // two commits → two immutable versions, manifest at the latest
-    assert(sink.versions == Seq(0L, 1L))
-    assert(sink.currentVersion.contains(1L))
+    val log = new LogTable(tmpDir("graft_vsink") + "/dim")
+    assert(driveTwoIncrements(log) == expected)
+    // two commits → two versions, the head at the latest
+    assert(log.versions == Seq(0L, 1L))
+    assert(log.currentVersion.contains(1L))
     // time travel: version 0 is the post-batch-1 dimension
-    val v0 = sink.loadVersion(spark, 0L)
-      .orderBy("kunde_id")
-      .select("kunde_id", "stadt", "is_current")
-      .as[(Long, String, Boolean)].collect().toSeq
-    assert(v0 == Seq((1L, "Berlin", true), (2L, "Hamburg", true)))
-    // vacuum drops superseded versions, keeps the current snapshot
-    sink.vacuum()
-    assert(sink.versions == Seq(1L))
-    assert(sink.load(spark).get.count() == 3)
+    assert(rowsOf(log.load(spark, Some(0L))) ==
+      Seq((1L, "Berlin", true), (2L, "Hamburg", true)))
+    // expiry + vacuum drop superseded versions and their files, keep
+    // the current snapshot
+    val v0Files = log.liveAdds(Some(0L)).map(_.path)
+    log.expireSnapshots(retainLast = 1)
+    log.vacuum(retainLast = 1, retentionMillis = 0L)
+    assert(log.versions == Seq(1L))
+    assert(v0Files.forall(p => !new java.io.File(log.path, p).exists))
+    assert(log.load(spark).count() == 3)
   }
 
   test("expireSnapshots retains the newest N and the current pointer") {
-    val sink = new graft.sources.VersionedParquetSink(
-      tmpDir("graft_expire") + "/dim")
-    import spark.implicits._
+    val log = new LogTable(tmpDir("graft_expire") + "/dim")
     (1 to 5).foreach(n =>
-      sink.overwrite(Seq.tabulate(n)(i => (i.toLong, s"r$i"))
+      log.overwrite(Seq.tabulate(n)(i => (i.toLong, s"r$i"))
         .toDF("k", "v")))
-    val audit = sink.expireSnapshots(keepLast = 2)
-    assert(audit == Seq(0L -> "expired", 1L -> "expired", 2L -> "expired",
-      3L -> "retained", 4L -> "retained"))
-    assert(sink.versions == Seq(3L, 4L))
-    assert(sink.currentVersion.contains(4L))
+    val expired = log.expireSnapshots(retainLast = 2)
+    assert(expired.nonEmpty)
+    assert(log.versions == Seq(3L, 4L))
+    assert(log.currentVersion.contains(4L))
     // retained versions stay time-travelable, current stays loadable
-    assert(sink.loadVersion(spark, 3L).count() == 4)
-    assert(sink.load(spark).get.count() == 5)
+    assert(log.load(spark, Some(3L)).count() == 4)
+    assert(log.load(spark).count() == 5)
+    // expired versions refuse time travel
+    intercept[Exception](log.load(spark, Some(2L)).count())
     // idempotent: nothing left to expire
-    assert(sink.expireSnapshots(keepLast = 2) ==
-      Seq(3L -> "retained", 4L -> "retained"))
-  }
-
-  test("forPath falls back to parquet when no table format is present") {
-    // no Delta/Iceberg jars ship in this environment
-    assert(!DimSink.deltaAvailable)
-    assert(DimSink.forPath("/tmp/x").isInstanceOf[ParquetDimSink])
+    assert(log.expireSnapshots(retainLast = 2).isEmpty)
+    assert(log.versions == Seq(3L, 4L))
   }
 
   test("compactFiles merges small files without losing rows") {

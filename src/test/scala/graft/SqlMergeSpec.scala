@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{SqlMerge, VersionedParquetSink}
+import graft.sources.{LogTable, SqlMerge}
 import org.apache.spark.sql.functions._
 
 class SqlMergeSpec extends SparkSpec {
@@ -87,22 +87,22 @@ class SqlMergeSpec extends SparkSpec {
     assert(e.getMessage.contains("cardinality"))
   }
 
-  test("MERGE through VersionedParquetSink: atomic commit + time travel") {
+  test("MERGE through a LogTable: atomic commit + time travel") {
     seedViews()
     val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
-    val sink = new VersionedParquetSink(s"$dir/dim")
-    sink.overwrite(targetRows.toDF("k", "v", "n"))
-    val res = SqlMerge.merge(spark,
+    val log = new LogTable(s"$dir/dim")
+    log.overwrite(targetRows.toDF("k", "v", "n"))
+    val res = SqlMerge.mergeLog(spark,
       """MERGE INTO dim t USING updates s ON t.k = s.k
          WHEN MATCHED AND t.v <> s.v THEN UPDATE SET v = s.v, n = s.n
          WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, s.v, s.n)""",
-      sink)
+      log)
     assert(res == SqlMerge.MergeResult(updated = 1, deleted = 0,
       inserted = 2, unchanged = 2))
     // committed: v1 is current, v0 (pre-merge) stays readable
-    assert(sink.currentVersion.contains(1L))
-    assert(sink.load(spark).get.count() == 5)
-    assert(sink.loadVersion(spark, 0L).orderBy("k")
+    assert(log.currentVersion.contains(1L))
+    assert(log.load(spark).count() == 5)
+    assert(log.load(spark, Some(0L)).orderBy("k")
       .as[(Long, String, Long)].collect().toSeq == targetRows)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Analytics
+import graft.sources.LogTable
 import graft.streaming.Streams
 import graft.streaming.Streams.Event
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -214,7 +215,7 @@ class StreamsSpec extends SparkSpec {
   test("maintainAggregate: the view tracks every micro-batch, and a " +
     "restart from the checkpoint replays without double-counting") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.sources.{LogTable, MaterializedAgg}
+    import graft.sources.MaterializedAgg
     val dir = java.nio.file.Files.createTempDirectory("graft_smv").toString
     val basePath = s"$dir/base"
     val mvPath = s"$dir/mv"
@@ -275,7 +276,10 @@ class StreamsSpec extends SparkSpec {
         Event(3L, ts("2024-01-02 00:00:00"), 2L, "view", 1.0))
       q.processAllAvailable()
     } finally q.stop()
-    val dim = spark.read.parquet(s"$dir/dim")
+    val log = new LogTable(s"$dir/dim")
+    // one log commit per non-empty micro-batch
+    assert(log.versions == Seq(0L, 1L))
+    val dim = log.load(spark)
       .orderBy("user_id", "valid_from")
       .select("user_id", "event_type", "is_current")
       .as[(Long, String, Boolean)].collect().toSeq
@@ -562,19 +566,19 @@ class StreamsSpec extends SparkSpec {
   test("versioned-dim enrichment pins a snapshot per batch under commits") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_vdim").toString
-    val sink = new graft.sources.VersionedParquetSink(s"$dir/dim")
+    val log = new LogTable(s"$dir/dim")
     // v0: user 1 → "bronze"
-    sink.overwrite(Seq((1L, "bronze", ts("2024-01-01 00:00:00"),
+    log.overwrite(Seq((1L, "bronze", ts("2024-01-01 00:00:00"),
       None: Option[java.sql.Timestamp], true))
       .toDF("user_id", "tier", "valid_from", "valid_to", "is_current"))
     val mem = MemoryStream[Event]
     val q = Streams.enrichAgainstVersionedDim(mem.toDF(), "user_id", "ts",
-      sink, "user_id", s"$dir/out", s"$dir/ckpt")
+      log, "user_id", s"$dir/out", s"$dir/ckpt")
     try {
       mem.addData(Event(1L, ts("2024-01-01 01:00:00"), 1L, "click", 1.0))
       q.processAllAvailable()
       // concurrent commit: v1 closes bronze, opens "gold"
-      sink.overwrite(Seq(
+      log.overwrite(Seq(
         (1L, "bronze", ts("2024-01-01 00:00:00"),
           Some(ts("2024-01-01 02:00:00")), false),
         (1L, "gold", ts("2024-01-01 02:00:00"),
@@ -589,8 +593,8 @@ class StreamsSpec extends SparkSpec {
     // batch 1 enriched against v0, batch 2 against v1 — and v0 stays
     // time-travel-readable after v1 committed
     assert(out == Seq((1L, "bronze", 0L), (2L, "gold", 1L)))
-    assert(sink.loadVersion(spark, 0L).count() == 1)
-    assert(sink.versions == Seq(0L, 1L))
+    assert(log.load(spark, Some(0L)).count() == 1)
+    assert(log.versions == Seq(0L, 1L))
   }
 
   test("streamingDedup drops duplicate keys within the watermark") {
