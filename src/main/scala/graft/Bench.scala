@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // keep AQE (skew handling) but don't let the 1MB partition-size
-      // floor coalesce small-input/large-output stages to 1 task
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Force FULL result production: count() lets Catalyst prune
-    // projections/sorts above the counted subtree, under-measuring
-    // map-only queries — materializing the executed plan's row RDD
-    // computes every output column of the plan as written.
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
+    val spark = Driver.session()
+    import Driver.run
     // A query that throws must never pass as a fast one: every failure
     // is reported on stderr and recorded (first error class per query)
     // in the sidecar's "failed" map.
@@ -29,29 +14,15 @@ object Bench {
       failed.getOrElseUpdate(name, e.getClass.getName)
       ()
     }
-    // Warm-up: JVM/codegen/parquet-footer costs land here, not in the
-    // first measured query.
-    try run(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    // Steady-state warm-up (JMH practice): run every query once at the
-    // smallest SF first so Janino compilation + JIT of each query's
-    // generated classes are excluded from the measured pass — several
-    // of the text/vector kernels generate large classes whose one-time
-    // compile cost otherwise dwarfs the actual sf0.1 work. The warm-up
-    // reads DIFFERENT parquet paths, so no scan, shuffle, or persisted
-    // plan fragment can be reused by the measured run (plan-fragment
-    // caching keys on the logical plan, which embeds the path); the
-    // cache is cleared afterwards regardless.
     // GRAFT_BENCH_ONLY=q8_market_share,q9_nation_revenue restricts the
     // measured set for targeted re-measurement; absent = all queries.
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val warmDir = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
-    if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (only.forall(_.contains(name)))
-          try run(fn(spark, warmDir)) catch { case e: Throwable => fail(name, e) }
+    Driver.warmUp(spark, "bench", sfDir,
+      SparkEntry.queries.keys.filter(n => only.forall(_.contains(n))).toSeq)
+      .foreach { case (name, e) =>
+        failed.getOrElseUpdate(name, e.getClass.getName)
       }
-    spark.sharedState.cacheManager.clearCache()
     // Median-of-N per query (default 3): a one-shot measurement is at
     // the mercy of a single GC pause or a late JIT recompile — r6
     // recorded a 9.4× swing on an unchanged map-only plan. The median

@@ -1,36 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a single SparkEntry query: runMain graft.BenchOne <name> [sfDir].
-  * Prints timing and the formatted plan when EXPLAIN=1. */
+  * Warms the query at sf0.001 like Bench, then prints each of `REPS`
+  * (default 1) timings and their median; EXPLAIN=1 also prints the
+  * formatted plan. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same full-result-production measurement as Bench.run.
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    try run(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    // steady-state warm-up of THIS query at the smallest SF, so
-    // Janino/JIT compilation of its generated classes is excluded
-    // from the measured reps (same practice as Bench)
-    val warmDir = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
-    if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
-      try run(SparkEntry.queries(name)(spark, warmDir))
-      catch { case _: Throwable => () }
+    val spark = Driver.session()
+    Driver.warmUp(spark, "benchone", sfDir, Seq(name))
     if (sys.env.contains("EXPLAIN"))
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     val reps = sys.env.getOrElse("REPS", "1").toInt
@@ -39,7 +18,7 @@ object BenchOne {
       // reuse a cached plan fragment from an earlier identical run
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      val n = run(SparkEntry.queries(name)(spark, sfDir))
+      val n = Driver.run(SparkEntry.queries(name)(spark, sfDir))
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[benchone] $name: $n rows in $dt%.2f s")
       dt

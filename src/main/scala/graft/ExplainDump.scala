@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for registered queries to files:
   * runMain graft.ExplainDump <outDir> <sfDir> <name>... — the plan
   * evidence for plans/r15/<query>_{before,after}.txt. Queries whose
@@ -12,15 +10,7 @@ object ExplainDump {
     val outDir = args(0)
     val sfDir = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

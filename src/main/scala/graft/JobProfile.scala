@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-Spark-job attribution for one registered query (guide §1.1):
   * runMain graft.JobProfile <name> [sfDir]. Prints every job the
@@ -13,23 +12,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    try run(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    val warmDir = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
-    if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
-      try run(SparkEntry.queries(name)(spark, warmDir))
-      catch { case _: Throwable => () }
-    spark.sharedState.cacheManager.clearCache()
+    val spark = Driver.session()
+    Driver.warmUp(spark, "jobprofile", sfDir, Seq(name))
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
@@ -72,7 +56,7 @@ object JobProfile {
     sampler.setDaemon(true)
     sampler.start()
     val t0 = System.nanoTime()
-    val n = run(SparkEntry.queries(name)(spark, sfDir))
+    val n = Driver.run(SparkEntry.queries(name)(spark, sfDir))
     val total = (System.nanoTime() - t0) / 1e9
     sampling = false
     Thread.sleep(1000) // let the async listener bus drain

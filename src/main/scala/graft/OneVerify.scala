@@ -1,31 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Scratch: dump ONE query + its oracle for a quick compare. */
+/** Dump ONE query + its oracle for a quick compare:
+  * runMain graft.OneVerify <name> <sfDir> <outDir>. */
 object OneVerify {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, outDir) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries(name)(spark, sfDir).coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/$name")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(_._1 == name)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Verify.dump(sfDir, outDir, Seq(name))
   }
 }

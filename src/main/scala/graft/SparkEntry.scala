@@ -5,10 +5,12 @@ import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 (operator inventory)
-  * and §7 (build plan). Each `queries` key is one operator; each
-  * `oracleSql` entry is the DuckDB-equivalent ANSI SQL over the same
-  * parquet tables.
+/** Driver contract — see SURVEY.md §2 (operator inventory) and §7
+  * (build plan). [[SparkEntry.registry]] is the one place a query is
+  * defined: each [[SparkEntry.Query]] pairs an operator's name and
+  * DataFrame builder with its DuckDB-equivalent ANSI SQL over the same
+  * parquet tables, written directly below the builder. `queries` and
+  * `oracleSql` are name-keyed views of the registry.
   *
   * Oracle-parity conventions (SURVEY.md §5):
   *  - identical column aliases on both sides;
@@ -89,48 +91,113 @@ object SparkEntry {
         .as("embedding"))
   }
 
+  private val catalogSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Registers a [[graft.sources.GraftTableCatalog]] over `warehouse`
+    * under a catalog name no earlier call has used, and returns that
+    * name. Spark caches catalog plugins by name and the plugin reads
+    * its warehouse once, so a re-registered name would keep serving
+    * the first invocation's warehouse to every later bench rep. */
+  private def freshCatalog(s: SparkSession, prefix: String,
+                           warehouse: String): String = {
+    val cat = s"${prefix}_${catalogSeq.incrementAndGet()}"
+    s.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.GraftTableCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", warehouse)
+    cat
+  }
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1Pricing(
       t(spark, "/root/testdata/sf0.001", "lineitem"))
 
+  /** One registered query: `build(spark, sfDir)` returns the result
+    * frame; `oracle` is the DuckDB SQL the driver compares it against,
+    * or None for a result no SQL engine can reproduce (approx_distinct's
+    * HLL sketch — bracketed by its exact twin instead). */
+  final case class Query(name: String,
+                         build: (SparkSession, String) => DataFrame,
+                         oracle: Option[String])
+
   // ---------------------------------------------------------------
-  // Query registry: one entry per SURVEY.md §2 operator.
+  // Query registry: one entry per SURVEY.md §2 operator. Oracle SQL
+  // uses the same aliases and ordering, decimal-stable aggregation
+  // and naive timestamps.
   // ---------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Query] = Seq(
     // §2.1 lakehouse core -----------------------------------------
-    "ingest_metadata" -> ((s, d) =>
+    Query("ingest_metadata", (s, d) =>
       Tables.withIngestMetadata(
         t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber")),
         "parquet:lineitem", batchTs)
         .select(col("l_orderkey"), col("l_linenumber"),
           ntz(col("ingest_ts")).as("ingest_ts"), col("ingest_source"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
+      Some("""SELECT l_orderkey, l_linenumber,
+         TIMESTAMP '2026-01-01 00:00:00' AS ingest_ts,
+         'parquet:lineitem' AS ingest_source
+         FROM lineitem ORDER BY l_orderkey, l_linenumber""")),
 
-    "latest_per_key" -> ((s, d) =>
+    Query("latest_per_key", (s, d) =>
       Scd.latestPerKey(t(s, d, "orders"), Seq("o_custkey"),
         Seq(col("o_orderdate"), col("o_orderkey")))
         .select(col("o_custkey"), col("o_orderkey"),
           ntz(col("o_orderdate")).as("o_orderdate"), col("o_totalprice"))
-        .orderBy(col("o_custkey"))),
+        .orderBy(col("o_custkey")),
+      Some("""SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice FROM (
+           SELECT *, row_number() OVER (PARTITION BY o_custkey
+             ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders)
+         WHERE rn = 1 ORDER BY o_custkey""")),
 
-    "scd2_build" -> ((s, d) =>
+    Query("scd2_build", (s, d) =>
       Scd.scd2FromHistory(t(s, d, "events"), Seq("user_id"), "ts",
         Seq("event_type"), Seq("event_id"))
         .select(col("user_id"), col("event_type"),
           ntz(col("valid_from")).as("valid_from"),
           ntz(col("valid_to")).as("valid_to"), col("is_current"))
-        .orderBy(col("user_id"), col("valid_from"))),
+        .orderBy(col("user_id"), col("valid_from")),
+      Some("""WITH h AS (
+           SELECT user_id, ts, event_id, event_type,
+                  lag(event_type) OVER w AS prev_et,
+                  lag(ts) OVER w AS prev_ts
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         starts AS (
+           SELECT * FROM h
+           WHERE prev_ts IS NULL OR event_type IS DISTINCT FROM prev_et),
+         v AS (
+           SELECT user_id, event_type, ts AS valid_from,
+                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                    AS valid_to
+           FROM starts)
+         SELECT user_id, event_type, valid_from, valid_to,
+                (valid_to IS NULL) AS is_current
+         FROM v ORDER BY user_id, valid_from""")),
 
-    "scd2_current" -> ((s, d) =>
+    Query("scd2_current", (s, d) =>
       Scd.scd2Current(
         Scd.scd2FromHistory(t(s, d, "events"), Seq("user_id"), "ts",
           Seq("event_type"), Seq("event_id")))
         .select(col("user_id"), col("event_type"),
           ntz(col("valid_from")).as("valid_from"))
-        .orderBy(col("user_id"))),
+        .orderBy(col("user_id")),
+      Some("""WITH h AS (
+           SELECT user_id, ts, event_id, event_type,
+                  lag(event_type) OVER w AS prev_et,
+                  lag(ts) OVER w AS prev_ts
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         starts AS (
+           SELECT * FROM h
+           WHERE prev_ts IS NULL OR event_type IS DISTINCT FROM prev_et),
+         v AS (
+           SELECT user_id, event_type, ts AS valid_from,
+                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                    AS valid_to
+           FROM starts)
+         SELECT user_id, event_type, valid_from
+         FROM v WHERE valid_to IS NULL ORDER BY user_id""")),
 
-    "scd1_upsert" -> ((s, d) => {
+    Query("scd1_upsert", (s, d) => {
       val ev = t(s, d, "events")
       def latest(df: DataFrame) =
         Scd.latestPerKey(df, Seq("user_id"), Seq(col("ts"), col("event_id")))
@@ -140,9 +207,28 @@ object SparkEntry {
       Scd.scd1Upsert(base, upd, Seq("user_id"), Seq("event_type", "ts"))
         .select(col("user_id"), col("event_type"), ntz(col("ts")).as("last_ts"))
         .orderBy(col("user_id"))
-    }),
+    },
+      Some("""WITH latest AS (
+           SELECT user_id, event_type, ts, row_number() OVER (
+             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events),
+         base AS (SELECT user_id, event_type, ts FROM (
+           SELECT user_id, event_type, ts, row_number() OVER (
+             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events WHERE ts < TIMESTAMP '2024-01-15') WHERE rn = 1),
+         upd AS (SELECT user_id, event_type, ts FROM (
+           SELECT user_id, event_type, ts, row_number() OVER (
+             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events WHERE ts >= TIMESTAMP '2024-01-15') WHERE rn = 1)
+         SELECT COALESCE(b.user_id, u.user_id) AS user_id,
+                CASE WHEN u.user_id IS NOT NULL THEN u.event_type
+                     ELSE b.event_type END AS event_type,
+                CASE WHEN u.user_id IS NOT NULL THEN u.ts ELSE b.ts END
+                  AS last_ts
+         FROM base b FULL JOIN upd u ON b.user_id = u.user_id
+         ORDER BY user_id""")),
 
-    "change_detect" -> ((s, d) => {
+    Query("change_detect", (s, d) => {
       val ev = t(s, d, "events")
       def latest(df: DataFrame) =
         Scd.latestPerKey(df, Seq("user_id"), Seq(col("ts"), col("event_id")))
@@ -152,14 +238,32 @@ object SparkEntry {
       Scd.changeDetect(incoming, current, Seq("user_id"), Seq("event_type"))
         .select(col("user_id"), col("event_type"), col("change_type"))
         .orderBy(col("user_id"))
-    }),
+    },
+      Some("""WITH cur AS (SELECT user_id, event_type FROM (
+           SELECT user_id, event_type, row_number() OVER (
+             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events WHERE ts < TIMESTAMP '2024-01-15') WHERE rn = 1),
+         inc AS (SELECT user_id, event_type FROM (
+           SELECT user_id, event_type, row_number() OVER (
+             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events) WHERE rn = 1)
+         SELECT i.user_id AS user_id, i.event_type AS event_type,
+                CASE WHEN c.user_id IS NULL THEN 'new'
+                     WHEN i.event_type IS DISTINCT FROM c.event_type
+                       THEN 'changed'
+                     ELSE 'unchanged' END AS change_type
+         FROM inc i LEFT JOIN cur c ON i.user_id = c.user_id
+         ORDER BY user_id""")),
 
-    "string_clean" -> ((s, d) =>
+    Query("string_clean", (s, d) =>
       Scd.cleanStrings(t(s, d, "customer"), Seq("c_name", "c_mktsegment"))
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      Some("""SELECT c_custkey, trim(c_name) AS c_name,
+                trim(c_mktsegment) AS c_mktsegment
+         FROM customer ORDER BY c_custkey""")),
 
-    "csv_ingest" -> ((s, d) => {
+    Query("csv_ingest", (s, d) => {
       // deterministic fixture: write a small CSV, read it back with
       // option-driven parsing (rows-only check; no CSV in testdata).
       val tmp = java.nio.file.Files.createTempDirectory("graft_csv")
@@ -170,9 +274,17 @@ object SparkEntry {
         .select(col("Kostenstelle").cast("int"), col("Bezeichnung"),
           col("Bereich"))
         .orderBy(col("Kostenstelle"))
-    }),
+    },
+      // fixture-backed ingest entries: the oracle is the literal
+      // expected relation (the fixtures are written by the query
+      // itself, not part of the parquet testdata)
+      Some("""SELECT * FROM (VALUES
+           (CAST(1000 AS INTEGER), 'IT', 'Zentral'),
+           (CAST(2000 AS INTEGER), 'HR', 'Verwaltung'))
+         AS t(Kostenstelle, Bezeichnung, Bereich)
+         ORDER BY Kostenstelle""")),
 
-    "jsonl_ingest" -> ((s, d) => {
+    Query("jsonl_ingest", (s, d) => {
       // deterministic fixture: write JSONL, read with explicit schema
       // (rows-only check; no JSONL in testdata)
       val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl")
@@ -189,9 +301,14 @@ object SparkEntry {
         org.apache.spark.sql.types.StructField("score",
           org.apache.spark.sql.types.DoubleType)))
       Tables.readJsonl(s, f.toString, Some(schema)).orderBy(col("id"))
-    }),
+    },
+      Some("""SELECT * FROM (VALUES
+           (CAST(1 AS BIGINT), 'hallo welt', CAST(0.5 AS DOUBLE)),
+           (CAST(2 AS BIGINT), 'zweite zeile', CAST(0.9 AS DOUBLE)))
+         AS t(id, text, score)
+         ORDER BY id""")),
 
-    "orc_roundtrip" -> ((s, d) => {
+    Query("orc_roundtrip", (s, d) => {
       // columnar-format parity: write ORC, read it back vectorized,
       // aggregate — the oracle computes the same aggregate from the
       // parquet original, so the round-trip must be lossless.
@@ -206,9 +323,14 @@ object SparkEntry {
           sum(col("l_quantity")).cast("double").as("sum_qty"),
           Analytics.dsum(col("l_extendedprice")).as("sum_price"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
+      Some("""SELECT l_returnflag, COUNT(*) AS n_rows,
+         CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
+           AS sum_price
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")),
 
-    "binary_ingest" -> ((s, d) => {
+    Query("binary_ingest", (s, d) => {
       // raw multimodal on-ramp: blobs land as (path, length, content)
       // rows via the distributed binaryFile source — no driver-side
       // file loop. Fixture bytes are ASCII so the VALUES oracle can
@@ -226,15 +348,22 @@ object SparkEntry {
           col("length").as("n_bytes"),
           substring(col("content").cast("string"), 1, 3).as("head"))
         .orderBy(col("name"))
-    }),
+    },
+      Some("""SELECT * FROM (VALUES
+           ('img_a.bin', CAST(16 AS BIGINT), 'PNG'),
+           ('img_b.bin', CAST(14 AS BIGINT), 'JPG'))
+         AS t(name, n_bytes, head)
+         ORDER BY name""")),
 
-    "incremental_files" -> ((s, d) => {
+    Query("incremental_files", (s, d) => {
       val listing = t(s, d, "documents").select(col("source").as("name")).distinct()
       val log = listing.filter(col("name").isin("src0", "src1"))
       Tables.newFiles(listing, log).orderBy(col("name"))
-    }),
+    },
+      Some("""SELECT DISTINCT source AS name FROM documents
+         WHERE source NOT IN ('src0', 'src1') ORDER BY name""")),
 
-    "ingest_log" -> ((s, d) => {
+    Query("ingest_log", (s, d) => {
       // the DURABLE form of incremental_files: run 1 records its
       // files in the append-only parquet log; this run's listing
       // anti-joins the log read back from disk (re-runs append the
@@ -246,9 +375,11 @@ object SparkEntry {
       Tables.appendIngestLog(
         listing.filter(col("name").isin("src0", "src1")), log, "b1", batchTs)
       Tables.newFilesFromLog(s, listing, log).orderBy(col("name"))
-    }),
+    },
+      Some("""SELECT DISTINCT source AS name FROM documents
+         WHERE source NOT IN ('src0', 'src1') ORDER BY name""")),
 
-    "merge_stats" -> ((s, d) => {
+    Query("merge_stats", (s, d) => {
       // merge observability: the new/changed/unchanged key split for
       // the second pipeline_e2e batch, as ONE aggregate job (the
       // reference computes the same three numbers as three count()s)
@@ -267,9 +398,32 @@ object SparkEntry {
         Pipeline.ingest(orders.filter(col("o_orderdate") >= split), "b2", ts2),
         cfg)
       Pipeline.mergeStats(dim1, staged2, cfg)
-    }),
+    },
+      Some("""WITH s1 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         s2 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
+           WHERE rn = 1)
+         SELECT
+           COUNT(CASE WHEN s1.o_custkey IS NULL THEN 1 END) AS n_new,
+           COUNT(CASE WHEN s1.o_custkey IS NOT NULL
+             AND (s1.o_orderpriority <> s2.o_orderpriority
+               OR s1.o_totalprice <> s2.o_totalprice) THEN 1 END)
+             AS n_changed,
+           COUNT(CASE WHEN s1.o_custkey IS NOT NULL
+             AND s1.o_orderpriority = s2.o_orderpriority
+             AND s1.o_totalprice = s2.o_totalprice THEN 1 END)
+             AS n_unchanged
+         FROM s2 LEFT JOIN s1 ON s1.o_custkey = s2.o_custkey""")),
 
-    "dim_sink_e2e" -> ((s, d) => {
+    Query("dim_sink_e2e", (s, d) => {
       // pipeline_e2e driven through a LogTable instead of in-memory
       // frames: each increment loads current state from the table and
       // commits the merge back; the final read-back must equal the
@@ -294,9 +448,45 @@ object SparkEntry {
           col("o_totalprice"), ntz(col("valid_from")).as("valid_from"),
           ntz(col("valid_to")).as("valid_to"), col("is_current"))
         .orderBy(col("o_custkey"), col("valid_from"))
-    }),
+    },
+      // identical post-merge state expected whether increments run on
+      // in-memory frames (pipeline_e2e) or through a LogTable
+      Some("""WITH s1 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         s2 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         j AS (
+           SELECT COALESCE(s1.o_custkey, s2.o_custkey) AS k,
+             s1.o_custkey IS NOT NULL AS in1,
+             s2.o_custkey IS NOT NULL AS in2,
+             s1.o_orderpriority AS p1, s1.o_totalprice AS t1,
+             s2.o_orderpriority AS p2, s2.o_totalprice AS t2
+           FROM s1 FULL JOIN s2 ON s1.o_custkey = s2.o_custkey)
+         SELECT k AS o_custkey, o_orderpriority, o_totalprice,
+                valid_from, valid_to, is_current FROM (
+           SELECT k, p1 AS o_orderpriority, t1 AS o_totalprice,
+             TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
+             CAST(NULL AS TIMESTAMP) AS valid_to, TRUE AS is_current
+           FROM j WHERE in1 AND (NOT in2 OR (p1 = p2 AND t1 = t2))
+           UNION ALL
+           SELECT k, p1, t1, TIMESTAMP '2026-01-01 00:00:00',
+             TIMESTAMP '2026-01-02 00:00:00', FALSE
+           FROM j WHERE in1 AND in2 AND (p1 <> p2 OR t1 <> t2)
+           UNION ALL
+           SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
+             CAST(NULL AS TIMESTAMP), TRUE
+           FROM j WHERE in2 AND (NOT in1 OR p1 <> p2 OR t1 <> t2))
+         ORDER BY o_custkey, valid_from""")),
 
-    "dim_sink_versions" -> ((s, d) => {
+    Query("dim_sink_versions", (s, d) => {
       // snapshot versioning / time travel through the log table:
       // two SCD2 increments commit two immutable versions; the query
       // reads BACK version 0 — the dimension as of batch 1 — after
@@ -321,9 +511,17 @@ object SparkEntry {
           col("o_totalprice"), ntz(col("valid_from")).as("valid_from"),
           col("is_current"))
         .orderBy(col("o_custkey"))
-    }),
+    },
+      Some("""SELECT o_custkey, o_orderpriority, o_totalprice,
+                TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
+                TRUE AS is_current
+         FROM (
+           SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+             ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+           FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
+         WHERE rn = 1 ORDER BY o_custkey""")),
 
-    "quarantine" -> ((s, d) => {
+    Query("quarantine", (s, d) => {
       // bronze→silver constraint gate on a deterministically
       // corrupted batch: every 97th key duplicated, every 89th
       // status nulled; rows tag instead of failing the load
@@ -336,9 +534,27 @@ object SparkEntry {
             lit(null).cast("string")).otherwise(col("o_orderstatus")))
       Pipeline.validateBatch(batch, Seq("o_orderkey"), Seq("o_orderstatus"))
         .orderBy(col("o_orderkey"), col("_violation"))
-    }),
+    },
+      Some("""WITH b AS (
+           SELECT o_orderkey, o_custkey,
+             CASE WHEN o_orderkey % 89 = 0 THEN NULL
+                  ELSE o_orderstatus END AS o_orderstatus
+           FROM orders
+           UNION ALL
+           SELECT o_orderkey, o_custkey,
+             CASE WHEN o_orderkey % 89 = 0 THEN NULL
+                  ELSE o_orderstatus END
+           FROM orders WHERE o_orderkey % 97 = 0),
+         c AS (SELECT o_orderkey AS dk, count(*) AS n
+               FROM b GROUP BY 1)
+         SELECT b.o_orderkey, b.o_custkey, b.o_orderstatus,
+           CASE WHEN b.o_orderstatus IS NULL THEN 'null_field'
+                WHEN c.n > 1 THEN 'dup_key'
+                ELSE 'ok' END AS _violation
+         FROM b JOIN c ON b.o_orderkey = c.dk
+         ORDER BY o_orderkey, _violation""")),
 
-    "dim_changes" -> ((s, d) => {
+    Query("dim_changes", (s, d) => {
       // change data feed between two committed dim versions (the
       // table_changes surface of log-based formats, computed
       // set-theoretically over two of the log table's snapshots):
@@ -366,9 +582,49 @@ object SparkEntry {
           ntz(col("valid_to")).as("valid_to"), col("is_current"),
           col("_change_type"))
         .orderBy(col("o_custkey"), col("valid_from"), col("_change_type"))
-    }),
+    },
+      Some("""WITH s1 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         s2 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         j AS (
+           SELECT COALESCE(s1.o_custkey, s2.o_custkey) AS k,
+             s1.o_custkey IS NOT NULL AS in1,
+             s2.o_custkey IS NOT NULL AS in2,
+             s1.o_orderpriority AS p1, s1.o_totalprice AS t1,
+             s2.o_orderpriority AS p2, s2.o_totalprice AS t2
+           FROM s1 FULL JOIN s2 ON s1.o_custkey = s2.o_custkey),
+         changed AS (
+           SELECT * FROM j WHERE in1 AND in2 AND (p1 <> p2 OR t1 <> t2))
+         SELECT k AS o_custkey, p1 AS o_orderpriority,
+           t1 AS o_totalprice,
+           TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
+           CAST(NULL AS TIMESTAMP) AS valid_to,
+           TRUE AS is_current, 'update_preimage' AS _change_type
+         FROM changed
+         UNION ALL
+         SELECT k, p1, t1, TIMESTAMP '2026-01-01 00:00:00',
+           TIMESTAMP '2026-01-02 00:00:00', FALSE, 'update_postimage'
+         FROM changed
+         UNION ALL
+         SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
+           CAST(NULL AS TIMESTAMP), TRUE, 'insert'
+         FROM changed
+         UNION ALL
+         SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
+           CAST(NULL AS TIMESTAMP), TRUE, 'insert'
+         FROM j WHERE NOT in1
+         ORDER BY o_custkey, valid_from, _change_type""")),
 
-    "sql_merge" -> ((s, d) => {
+    Query("sql_merge", (s, d) => {
       // executable ANSI MERGE INTO surface (the statement the
       // reference's users write — Load & SCD-Merge.py): parsed by
       // Spark's own grammar, executed as one full-outer-join plan
@@ -391,9 +647,26 @@ object SparkEntry {
            WHEN NOT MATCHED THEN
              INSERT (k, status, n) VALUES (s.k, 'new', s.n_orders)""",
         target).orderBy(col("k"))
-    }),
+    },
+      Some("""WITH tgt AS (
+           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
+           FROM customer WHERE c_custkey <= 300),
+         upd AS (
+           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
+           WHERE o_custkey > 200 AND o_custkey <= 400 GROUP BY 1)
+         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
+                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
+                       THEN 'active'
+                     WHEN t.k IS NULL THEN 'new'
+                     ELSE t.status END AS status,
+                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
+                     ELSE t.n END AS BIGINT) AS n
+         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
+         WHERE NOT (t.k IS NOT NULL AND u.k IS NOT NULL
+                    AND u.n_orders > 10)
+         ORDER BY k""")),
 
-    "sql_merge_catalog" -> ((s, d) => {
+    Query("sql_merge_catalog", (s, d) => {
       // the by-NAME surface: the dim is a log table in a
       // GraftTableCatalog and BOTH statements address it by its
       // table name — a native `spark.sql("MERGE INTO cat.dim ...")`
@@ -403,15 +676,8 @@ object SparkEntry {
       // BY SOURCE quadrant by name as well
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_cat")
-      val cat = s"mergecat_$tag"
-      // catalogs cache BY NAME: re-invocation (bench reps) keeps the
-      // first warehouse, so the table name must be fresh each time
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      }
-      val dim = s"$cat.dim_${System.nanoTime}"
+      val cat = freshCatalog(s, "mergecat", wh.toString)
+      val dim = s"$cat.dim"
       t(s, d, "customer").filter(col("c_custkey") <= 250)
         .select(col("c_custkey").as("k"), lit("init").as("status"),
           lit(0L).as("n"))
@@ -429,9 +695,25 @@ object SparkEntry {
               INSERT (k, status, n) VALUES (s.k, 'new', s.n_orders)
             WHEN NOT MATCHED BY SOURCE AND t.k <= 20 THEN DELETE""")
       s.sql(s"SELECT k, status, n FROM $dim ORDER BY k")
-    }),
+    },
+      Some("""WITH tgt AS (
+           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
+           FROM customer WHERE c_custkey <= 250),
+         upd AS (
+           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
+           WHERE o_custkey > 150 AND o_custkey <= 350 GROUP BY 1)
+         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
+                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
+                       THEN 'active'
+                     WHEN t.k IS NULL THEN 'new'
+                     ELSE t.status END AS status,
+                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
+                     ELSE t.n END AS BIGINT) AS n
+         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
+         WHERE NOT (t.k IS NOT NULL AND u.k IS NULL AND t.k <= 20)
+         ORDER BY k""")),
 
-    "sql_merge_mor" -> ((s, d) => {
+    Query("sql_merge_mor", (s, d) => {
       // the same ANSI MERGE semantics committed at file granularity
       // through SqlMerge.mergeLog: only files holding a changed row
       // are rewritten, the rest carry into the new version by
@@ -458,9 +740,26 @@ object SparkEntry {
               INSERT (k, status, n) VALUES (s.k, 'new', s.n_orders)""",
         log)
       log.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""WITH tgt AS (
+           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
+           FROM customer WHERE c_custkey <= 280),
+         upd AS (
+           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
+           WHERE o_custkey > 180 AND o_custkey <= 380 GROUP BY 1)
+         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
+                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
+                       THEN 'active'
+                     WHEN t.k IS NULL THEN 'new'
+                     ELSE t.status END AS status,
+                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
+                     ELSE t.n END AS BIGINT) AS n
+         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
+         WHERE NOT (t.k IS NOT NULL AND u.k IS NOT NULL
+                    AND u.n_orders > 12)
+         ORDER BY k""")),
 
-    "sink_time_travel" -> ((s, d) => {
+    Query("sink_time_travel", (s, d) => {
       // TIMESTAMP AS OF over the log table: commits carry an
       // injected wall-clock, and a between-commits timestamp resolves
       // to the snapshot that was current THEN (Delta/Iceberg
@@ -477,16 +776,18 @@ object SparkEntry {
       log.overwrite(cust.filter(col("c_custkey") <= 300)
         .select(col("c_custkey").as("k"), lower(col("c_name")).as("name")))
       log.load(s, Some(log.versionAt(2500L))).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, UPPER(c_name) AS name
+         FROM customer WHERE c_custkey <= 200
+         ORDER BY k""")),
 
-    "catalog_time_travel" -> ((s, d) => {
+    Query("catalog_time_travel", (s, d) => {
       // the DSv2-catalog surface end-to-end: a log table under a
       // registered catalog plugin, read back PURELY through SQL with
       // native TIMESTAMP AS OF — Spark routes the clause to
       // GraftTableCatalog.loadTable(ident, micros), which resolves
       // the log to the snapshot current at that instant
       // (timestamp_micros keeps the literal timezone-free)
-      val tag = java.lang.Integer.toHexString(d.hashCode)
       val dir = java.nio.file.Files.createTempDirectory("graft_dsv2")
       val ticks = Iterator(1000L, 2000L, 3000L)
       val log = new graft.sources.LogTable(
@@ -498,15 +799,16 @@ object SparkEntry {
         .select(col("c_custkey").as("k"), upper(col("c_name")).as("name")))
       log.overwrite(cust.filter(col("c_custkey") <= 300)
         .select(col("c_custkey").as("k"), lower(col("c_name")).as("name")))
-      s.conf.set(s"spark.sql.catalog.tt_$tag",
-        classOf[graft.sources.GraftTableCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.tt_$tag.warehouse", dir.toString)
-      s.sql(s"""SELECT k, name FROM tt_$tag.dim
+      val cat = freshCatalog(s, "tt", dir.toString)
+      s.sql(s"""SELECT k, name FROM $cat.dim
                 TIMESTAMP AS OF timestamp_micros(2500000L)
                 ORDER BY k""")
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, UPPER(c_name) AS name
+         FROM customer WHERE c_custkey <= 200
+         ORDER BY k""")),
 
-    "log_table_dml" -> ((s, d) => {
+    Query("log_table_dml", (s, d) => {
       // the transaction-log table's full SQL DML surface by name:
       // CREATE USING log, two INSERT INTO appends (each commits ONLY
       // its delta — file-granularity MVCC, the Delta trade a
@@ -515,15 +817,8 @@ object SparkEntry {
       // rows; the oracle recomputes the final state declaratively
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_logdml")
-      val cat = s"logdml_$tag"
-      // catalogs cache BY NAME: re-invocation (bench reps) keeps the
-      // first warehouse, so the table name must be fresh each time
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      }
-      val tbl = s"dim_${System.nanoTime}"
+      val cat = freshCatalog(s, "logdml", wh.toString)
+      val tbl = "dim"
       s.sql(s"CREATE TABLE $cat.$tbl (k BIGINT, status STRING, " +
         "bal DOUBLE) USING log")
       t(s, d, "customer").filter(col("c_custkey") <= 200)
@@ -539,9 +834,19 @@ object SparkEntry {
       s.sql(s"INSERT INTO $cat.$tbl SELECT * FROM log_b2_$tag")
       s.sql(s"DELETE FROM $cat.$tbl WHERE k > 150 AND k <= 250")
       s.sql(s"SELECT k, status, bal FROM $cat.$tbl ORDER BY k")
-    }),
+    },
+      Some("""SELECT k, status, bal FROM (
+           SELECT CAST(c_custkey AS BIGINT) AS k, 'init' AS status,
+                  c_acctbal AS bal
+           FROM customer WHERE c_custkey <= 200
+           UNION ALL
+           SELECT CAST(c_custkey AS BIGINT) AS k, 'late' AS status,
+                  c_acctbal AS bal
+           FROM customer WHERE c_custkey > 200 AND c_custkey <= 350)
+         WHERE NOT (k > 150 AND k <= 250)
+         ORDER BY k""")),
 
-    "log_table_update" -> ((s, d) => {
+    Query("log_table_update", (s, d) => {
       // row-level UPDATE on the log table: only files whose stats
       // admit matching rows are rewritten (everything else carries
       // forward by reference); matching rows get SET applied, the
@@ -553,9 +858,13 @@ object SparkEntry {
       lt.update(s, col("bal") < 0.0,
         Map("bal" -> lit(0.0)))
       lt.load(s).select(col("k"), col("bal")).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k,
+                CASE WHEN c_acctbal < 0 THEN 0.0 ELSE c_acctbal END AS bal
+         FROM customer WHERE c_custkey <= 300
+         ORDER BY k""")),
 
-    "log_table_bloom" -> ((s, d) => {
+    Query("log_table_bloom", (s, d) => {
       // bloom-filter file index: per-file sidecars over xxhash64 of
       // the indexed column, probed by the stats pruner for equality
       // predicates min/max cannot decide — customer names interleave
@@ -581,20 +890,20 @@ object SparkEntry {
         .collect().toSeq
       lt.delete(s, col("name").isin(victims: _*))
       lt.load(s).select(col("k"), col("name")).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 300 AND c_custkey % 50 <> 0
+         ORDER BY k""")),
 
-    "log_table_procedures" -> ((s, d) => {
+    Query("log_table_procedures", (s, d) => {
       // Iceberg-style SQL stored procedures on Spark 4's native
       // ProcedureCatalog: OPTIMIZE bin-packs the two appends' files,
       // a DELETE mutates, RESTORE rolls it back — every maintenance
       // verb a plain CALL statement, and the final state is the two
       // appended batches exactly
-      val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_logproc")
-      val cat = s"logproc_$tag"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftTableCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+      val cat = freshCatalog(s, "logproc", wh.toString)
       val lt = new graft.sources.LogTable(s"$wh/t")
       val cust = t(s, d, "customer")
         .select(col("c_custkey").as("k"), col("c_acctbal").as("bal"))
@@ -605,9 +914,12 @@ object SparkEntry {
       s.sql(s"DELETE FROM $cat.t WHERE k > 100")
       s.sql(s"CALL $cat.restore('t', $preDelete)").collect()
       s.sql(s"SELECT k, bal FROM $cat.t ORDER BY k")
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal
+         FROM customer WHERE c_custkey <= 300
+         ORDER BY k""")),
 
-    "log_table_clone" -> ((s, d) => {
+    Query("log_table_clone", (s, d) => {
       // shallow clone: a metadata-only commit referencing the source
       // snapshot's files by absolute path (zero data copies), then
       // independent evolution — a stats-pruned delete lands in the
@@ -623,9 +935,12 @@ object SparkEntry {
       cl.cloneFrom(src)
       cl.delete(s, col("k") > 250L)
       cl.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal
+         FROM customer WHERE c_custkey <= 250
+         ORDER BY k""")),
 
-    "log_table_rename" -> ((s, d) => {
+    Query("log_table_rename", (s, d) => {
       // metadata-only RENAME COLUMN via column mapping: files
       // written before AND after the rename resolve by parquet field
       // id; a post-rename append, a filter on the renamed column and
@@ -647,9 +962,13 @@ object SparkEntry {
         .withColumnRenamed("seg", "segment"))
       lt.delete(s, col("segment") === "BUILDING")
       lt.load(s).select(col("k"), col("segment")).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_mktsegment AS segment
+         FROM customer
+         WHERE c_custkey <= 300 AND c_mktsegment <> 'BUILDING'
+         ORDER BY k""")),
 
-    "log_table_generated" -> ((s, d) => {
+    Query("log_table_generated", (s, d) => {
       // generated columns (GENERATED ALWAYS AS) + the derivation
       // that makes them matter: a table partitioned by
       // event_date = CAST(ts AS DATE) auto-fills the column on
@@ -681,9 +1000,15 @@ object SparkEntry {
           // sides (the feature under test is unchanged)
           ntz(col("event_date").cast("timestamp")).as("event_date"))
         .orderBy(col("event_id"))
-    }),
+    },
+      Some("""SELECT event_id, user_id, ts,
+                CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date
+         FROM events
+         WHERE user_id <= 100
+           AND NOT ts < TIMESTAMP '2024-01-05 00:00:00'
+         ORDER BY event_id""")),
 
-    "log_table_constraints" -> ((s, d) => {
+    Query("log_table_constraints", (s, d) => {
       // CHECK constraints enforced inside the commit-time stats
       // aggregate (zero extra scans, Delta semantics): a valid
       // append lands, a batch carrying ONE violating row refuses the
@@ -712,9 +1037,13 @@ object SparkEntry {
       lt.append(cust.filter(col("k") > 150 && col("k") <= 300 &&
         col("bal") >= 0))
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal
+         FROM customer
+         WHERE c_custkey <= 300 AND c_acctbal >= 0
+         ORDER BY k""")),
 
-    "log_table_identity" -> ((s, d) => {
+    Query("log_table_identity", (s, d) => {
       // GENERATED ALWAYS AS IDENTITY + column DEFAULTs (Delta's
       // identity columns): ids allocate DISTRIBUTED from the logged
       // high-water mark — one pass, no count job, no global sort —
@@ -778,9 +1107,23 @@ object SparkEntry {
           .as("n_upd"),
         sum(when(col("status") === "merged", 1L).otherwise(0L))
           .as("n_merged"))
-    }),
+    },
+      Some("""SELECT CAST(count(*) AS BIGINT) AS n,
+                CAST(count(*) AS BIGINT) AS n_ids,
+                CAST(1 AS BIGINT) AS aligned,
+                CAST(1 AS BIGINT) AS batches_ordered,
+                CAST(1 AS BIGINT) AS merged_above,
+                CAST(sum(CASE WHEN c_custkey <= 150 THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_default,
+                CAST(sum(CASE WHEN c_custkey > 150 AND c_custkey <= 250
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_old,
+                CAST(sum(CASE WHEN c_custkey > 250 AND c_custkey <= 300
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_upd,
+                CAST(sum(CASE WHEN c_custkey > 300 THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_merged
+         FROM customer WHERE c_custkey <= 400""")),
 
-    "log_table_dv" -> ((s, d) => {
+    Query("log_table_dv", (s, d) => {
       // merge-on-read DML via deletion vectors: a DELETE that moves
       // NO table data (matching row indices go to a vector sidecar;
       // touched files re-commit by reference) and an UPDATE that
@@ -795,14 +1138,19 @@ object SparkEntry {
       lt.deleteMor(s, col("k") > 100L && col("k") <= 150L)
       lt.updateMor(s, col("bal") < 0.0, Map("bal" -> lit(0.0)))
       lt.load(s).select(col("k"), col("bal")).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k,
+                CASE WHEN c_acctbal < 0 THEN 0.0 ELSE c_acctbal END AS bal
+         FROM customer
+         WHERE c_custkey <= 300
+           AND NOT (c_custkey > 100 AND c_custkey <= 150)
+         ORDER BY k""")),
 
-    "log_table_time_travel" -> ((s, d) => {
+    Query("log_table_time_travel", (s, d) => {
       // log-table time travel end-to-end through SQL: three commits
       // under an injected clock (append / append / delete), then
       // TIMESTAMP AS OF pinned between the 2nd and 3rd — the state
       // the delete has not yet touched
-      val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_logtt")
       val ticks = Iterator(1000L, 2000L, 3000L)
       val lt = new graft.sources.LogTable(s"$wh/t", () => ticks.next())
@@ -813,16 +1161,16 @@ object SparkEntry {
         .filter(col("c_custkey") > 100 && col("c_custkey") <= 200)
         .select(col("c_custkey").as("k"), col("c_name").as("name")))
       lt.delete(s, col("k") <= 50L)
-      val cat = s"logtt_$tag"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftTableCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+      val cat = freshCatalog(s, "logtt", wh.toString)
       s.sql(s"""SELECT k, name FROM $cat.t
                 TIMESTAMP AS OF timestamp_micros(2500000L)
                 ORDER BY k""")
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
+         FROM customer WHERE c_custkey <= 200
+         ORDER BY k""")),
 
-    "log_table_changes" -> ((s, d) => {
+    Query("log_table_changes", (s, d) => {
       // the change-data-feed surface: row-level changes between two
       // versions — appends derive inserts from their committed
       // files, a delete commit reads its recorded change files; the
@@ -841,9 +1189,22 @@ object SparkEntry {
           col("_change_type").as("change_type"),
           col("_commit_version").cast("long").as("commit_version"))
         .orderBy(col("commit_version"), col("change_type"), col("k"))
-    }),
+    },
+      Some("""SELECT k, name, change_type, commit_version FROM (
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  'insert' AS change_type, CAST(0 AS BIGINT) AS commit_version
+           FROM customer WHERE c_custkey <= 150
+           UNION ALL
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  'insert' AS change_type, CAST(1 AS BIGINT) AS commit_version
+           FROM customer WHERE c_custkey > 150 AND c_custkey <= 250
+           UNION ALL
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  'delete' AS change_type, CAST(2 AS BIGINT) AS commit_version
+           FROM customer WHERE c_custkey > 100 AND c_custkey <= 200)
+         ORDER BY commit_version, change_type, k""")),
 
-    "log_table_changes_sql" -> ((s, d) => {
+    Query("log_table_changes_sql", (s, d) => {
       // the change feed from PURE SQL — Delta's `table_changes` TVF:
       // the same window semantics as the Scala changes() API but
       // addressed by name in a query, resolving to the distributed
@@ -863,9 +1224,18 @@ object SparkEntry {
           s"CAST(_commit_version AS BIGINT) AS commit_version " +
           s"FROM table_changes('${lt.path}', 1, 2)")
         .orderBy(col("commit_version"), col("change_type"), col("k"))
-    }),
+    },
+      Some("""SELECT k, name, change_type, commit_version FROM (
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  'insert' AS change_type, CAST(1 AS BIGINT) AS commit_version
+           FROM customer WHERE c_custkey > 150 AND c_custkey <= 250
+           UNION ALL
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  'delete' AS change_type, CAST(2 AS BIGINT) AS commit_version
+           FROM customer WHERE c_custkey > 100 AND c_custkey <= 200)
+         ORDER BY commit_version, change_type, k""")),
 
-    "sql_merge_log" -> ((s, d) => {
+    Query("sql_merge_log", (s, d) => {
       // file-granularity MERGE (Delta's merge-on-write): the target
       // is a log table addressed BY NAME from the statement; only
       // files containing changed rows are rewritten, inserts append,
@@ -877,10 +1247,7 @@ object SparkEntry {
       lt.append(t(s, d, "customer").filter(col("c_custkey") <= 250)
         .select(col("c_custkey").as("k"), lit("init").as("status"),
           lit(0L).as("n")))
-      val cat = s"logmrg_$tag"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftTableCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+      val cat = freshCatalog(s, "logmrg", wh.toString)
       t(s, d, "orders")
         .filter(col("o_custkey") > 150 && col("o_custkey") <= 350)
         .groupBy(col("o_custkey"))
@@ -894,9 +1261,26 @@ object SparkEntry {
             WHEN NOT MATCHED THEN
               INSERT (k, status, n) VALUES (s.k, 'new', s.n_orders)""")
       s.sql(s"SELECT k, status, n FROM $cat.dim ORDER BY k")
-    }),
+    },
+      Some("""WITH tgt AS (
+           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
+           FROM customer WHERE c_custkey <= 250),
+         upd AS (
+           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
+           WHERE o_custkey > 150 AND o_custkey <= 350 GROUP BY 1)
+         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
+                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
+                       THEN 'active'
+                     WHEN t.k IS NULL THEN 'new'
+                     ELSE t.status END AS status,
+                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
+                     ELSE t.n END AS BIGINT) AS n
+         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
+         WHERE NOT (t.k IS NOT NULL AND u.k IS NOT NULL
+                    AND u.n_orders > 14)
+         ORDER BY k""")),
 
-    "log_table_evolution" -> ((s, d) => {
+    Query("log_table_evolution", (s, d) => {
       // schema evolution on append (Delta's mergeSchema): the second
       // batch carries a new column — the commit widens the table
       // schema in place, old files read NULL for it with NO rewrite;
@@ -912,9 +1296,18 @@ object SparkEntry {
           col("c_acctbal").as("bal")),
         mergeSchema = true)
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT k, name, bal FROM (
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  CAST(NULL AS DOUBLE) AS bal
+           FROM customer WHERE c_custkey <= 150
+           UNION ALL
+           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+                  c_acctbal AS bal
+           FROM customer WHERE c_custkey > 150 AND c_custkey <= 300)
+         ORDER BY k""")),
 
-    "log_table_cluster" -> ((s, d) => {
+    Query("log_table_cluster", (s, d) => {
       // OPTIMIZE ZORDER-style clustering: three appends with fully
       // interleaved key ranges (stats prune nothing), then a layout
       // rebuild sorted by key — content identical (the oracle), file
@@ -942,9 +1335,12 @@ object SparkEntry {
       require(gen1.subsetOf(lt.liveAdds().map(_.path).toSet),
         "incremental pass must not rewrite prior generations")
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
+         FROM customer WHERE c_custkey <= 400
+         ORDER BY k""")),
 
-    "log_table_restore" -> ((s, d) => {
+    Query("log_table_restore", (s, d) => {
       // RESTORE: roll the table back to a prior version with ONE
       // metadata-only commit — the target's files re-added by
       // reference, the post-dating files retired; zero data movement
@@ -960,9 +1356,12 @@ object SparkEntry {
       lt.delete(s, col("k") <= 150L)
       lt.restore(1L)
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
+         FROM customer WHERE c_custkey <= 200
+         ORDER BY k""")),
 
-    "log_table_history" -> ((s, d) => {
+    Query("log_table_history", (s, d) => {
       // DESCRIBE HISTORY: one row per commit (version, injected
       // wall-clock, op, add/remove file counts) — the audit surface;
       // single-file appends pin the counts deterministically
@@ -979,9 +1378,18 @@ object SparkEntry {
         .repartition(1))
       lt.delete(s, col("k") <= 50L)
       lt.history(s).orderBy(col("version"))
-    }),
+    },
+      Some("""SELECT * FROM (VALUES
+           (CAST(0 AS BIGINT), CAST(1000 AS BIGINT), 'append',
+            CAST(1 AS BIGINT), CAST(0 AS BIGINT)),
+           (CAST(1 AS BIGINT), CAST(2000 AS BIGINT), 'append',
+            CAST(1 AS BIGINT), CAST(0 AS BIGINT)),
+           (CAST(2 AS BIGINT), CAST(3000 AS BIGINT), 'delete',
+            CAST(1 AS BIGINT), CAST(1 AS BIGINT)))
+         AS t(version, commit_ts, op, n_added, n_removed)
+         ORDER BY version""")),
 
-    "log_table_partitioned" -> ((s, d) => {
+    Query("log_table_partitioned", (s, d) => {
       // hive-partitioned transaction-log table (Delta's PARTITIONED
       // BY, the most-used layout lever): partition values ride in
       // the add-file actions AND the hive dirs, so BOTH pruners act
@@ -992,15 +1400,8 @@ object SparkEntry {
       // name; the oracle recomputes the surviving state
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_logpart")
-      val cat = s"logpart_$tag"
-      // catalogs cache BY NAME (first warehouse wins on re-invocation)
-      // — fresh table name per run instead
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      }
-      val tbl = s"dim_${System.nanoTime}"
+      val cat = freshCatalog(s, "logpart", wh.toString)
+      val tbl = "dim"
       s.sql(s"CREATE TABLE $cat.$tbl (k BIGINT, seg STRING, bal DOUBLE) " +
         "USING log PARTITIONED BY (seg)")
       // partition columns order to the END of the table schema
@@ -1014,9 +1415,16 @@ object SparkEntry {
       s.sql(s"DELETE FROM $cat.$tbl WHERE seg = 'BUILDING' AND k <= 200")
       s.sql(s"SELECT k, seg, bal FROM $cat.$tbl " +
         "WHERE seg <> 'MACHINERY' ORDER BY k")
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_mktsegment AS seg,
+                c_acctbal AS bal
+         FROM customer
+         WHERE c_custkey <= 400
+           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 200)
+           AND c_mktsegment <> 'MACHINERY'
+         ORDER BY k""")),
 
-    "log_table_sql_dml" -> ((s, d) => {
+    Query("log_table_sql_dml", (s, d) => {
       // NATIVE SQL row-level dispatch (round-7): a SQL-first user
       // types plain UPDATE and MERGE INTO statements against the
       // catalog name — no API entry point anywhere. The planner
@@ -1026,13 +1434,8 @@ object SparkEntry {
       // file-granularity pipelines underneath
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val wh = java.nio.file.Files.createTempDirectory("graft_logsql")
-      val cat = s"logsql_$tag"
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      }
-      val tbl = s"dim_${System.nanoTime}"
+      val cat = freshCatalog(s, "logsql", wh.toString)
+      val tbl = "dim"
       s.sql(s"CREATE TABLE $cat.$tbl (k BIGINT, status STRING, " +
         "bal DOUBLE) USING log")
       t(s, d, "customer").filter(col("c_custkey") <= 300)
@@ -1052,9 +1455,22 @@ object SparkEntry {
             WHEN NOT MATCHED THEN
               INSERT (k, status, bal) VALUES (s.k, 'new', s.bal)""")
       s.sql(s"SELECT k, status, bal FROM $cat.$tbl ORDER BY k")
-    }),
+    },
+      Some("""SELECT k, status, bal FROM (
+           SELECT CAST(c_custkey AS BIGINT) AS k,
+                  CASE WHEN c_custkey > 200 THEN 'merged'
+                       WHEN c_acctbal < 0 THEN 'zeroed'
+                       ELSE 'init' END AS status,
+                  CASE WHEN c_acctbal < 0 THEN 0.0
+                       ELSE c_acctbal END AS bal
+           FROM customer WHERE c_custkey <= 300
+           UNION ALL
+           SELECT CAST(c_custkey AS BIGINT) AS k, 'new' AS status,
+                  c_acctbal AS bal
+           FROM customer WHERE c_custkey > 300 AND c_custkey <= 400)
+         ORDER BY k""")),
 
-    "log_table_merge_evolve" -> ((s, d) => {
+    Query("log_table_merge_evolve", (s, d) => {
       // ALTER TABLE ADD COLUMNS + MERGE WITH SCHEMA EVOLUTION —
       // both metadata-only schema appends (old files read the new
       // columns as NULL, zero rewrites): ADD COLUMNS lands `tier`
@@ -1063,13 +1479,8 @@ object SparkEntry {
       // to an AddColumn change, applied through the catalog's
       // alterTable, then the file-granularity merge plans against
       // the evolved target). The oracle recomputes the final frame
-      val cat = "gevo"
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-          java.nio.file.Files.createTempDirectory("graft_evo").toString)
-      }
+      val wh = java.nio.file.Files.createTempDirectory("graft_evo")
+      val cat = freshCatalog(s, "gevo", wh.toString)
       val tn = s"t_${System.nanoTime}"
       s.sql(s"CREATE TABLE $cat.$tn (k BIGINT, name STRING) USING log")
       t(s, d, "customer").filter(col("c_custkey") <= 200)
@@ -1091,9 +1502,14 @@ object SparkEntry {
               INSERT (k, name, bal, tier)
               VALUES (s.k, s.name, s.bal, 'new')""")
       s.sql(s"SELECT k, name, tier, bal FROM $cat.$tn ORDER BY k")
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
+           CASE WHEN c_custkey > 200 THEN 'new'
+                WHEN c_custkey > 100 THEN 'upd' END AS tier,
+           CASE WHEN c_custkey > 100 THEN c_acctbal END AS bal
+         FROM customer WHERE c_custkey <= 300 ORDER BY k""")),
 
-    "log_table_properties" -> ((s, d) => {
+    Query("log_table_properties", (s, d) => {
       // free-form TBLPROPERTIES in the transaction log (Delta's
       // table-property surface): create-time seeding, SET merges,
       // UNSET drops — all metadata-only commits (zero data I/O at
@@ -1118,9 +1534,14 @@ object SparkEntry {
       import s.implicits._
       lt.tableProperties.toSeq.sortBy(_._1).toDF("key", "value")
         .withColumn("n_rows", lit(n)).orderBy(col("key"))
-    }),
+    },
+      Some("""SELECT k AS "key", v AS "value",
+           (SELECT COUNT(*) FROM nation) AS n_rows
+         FROM (VALUES ('retention.days', '30'), ('tier', 'silver'))
+           AS p(k, v)
+         ORDER BY "key"""")),
 
-    "log_table_mv" -> ((s, d) => {
+    Query("log_table_mv", (s, d) => {
       // incrementally-maintained materialized aggregate (Delta's MV
       // refresh from the change data feed): seed a per-customer
       // count/sum view, then run an append + a row-level DELETE + a
@@ -1151,9 +1572,20 @@ object SparkEntry {
         .select(col("o_custkey"), col("cnt"),
           col("sum_v").cast("double").as("total"))
         .orderBy(col("o_custkey"))
-    }),
+    },
+      Some("""WITH final_state AS (
+           SELECT o_custkey,
+                  CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 2
+                       ELSE o_totalprice END AS v
+           FROM orders
+           WHERE (o_orderkey % 3) IN (0, 1)
+             AND NOT (o_totalprice < 1000)
+         )
+         SELECT o_custkey, COUNT(*) AS cnt,
+                CAST(SUM(CAST(v AS DECIMAL(28,4))) AS DOUBLE) AS total
+         FROM final_state GROUP BY o_custkey ORDER BY o_custkey""")),
 
-    "log_table_mv_minmax" -> ((s, d) => {
+    Query("log_table_mv_minmax", (s, d) => {
       // MIN/MAX materialized aggregate (Delta's recipe for the
       // non-associative class): a delete can RAISE a group's min or
       // LOWER its max — no signed fold recovers it — so the refresh
@@ -1179,9 +1611,17 @@ object SparkEntry {
           col("sum_v").cast("double").as("total"),
           col("min_v").as("min_price"), col("max_v").as("max_price"))
         .orderBy(col("o_custkey"))
-    }),
+    },
+      Some("""SELECT o_custkey, COUNT(*) AS cnt,
+                CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4)))
+                  AS DOUBLE) AS total,
+                MIN(o_totalprice) AS min_price,
+                MAX(o_totalprice) AS max_price
+         FROM orders
+         WHERE NOT (o_totalprice > 300000.0)
+         GROUP BY o_custkey ORDER BY o_custkey""")),
 
-    "log_table_repartition" -> ((s, d) => {
+    Query("log_table_repartition", (s, d) => {
       // Iceberg-style PARTITION EVOLUTION: one metadata-only commit
       // changes the hive layout for future writes — zero data
       // rewritten. The query spans the epochs: an unpartitioned
@@ -1200,9 +1640,14 @@ object SparkEntry {
       lt.delete(s, col("seg") === "BUILDING" && col("k") <= 300)
       lt.load(s).select(col("k"), col("seg"), col("bal"))
         .orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_mktsegment AS seg, c_acctbal AS bal
+         FROM customer
+         WHERE c_custkey <= 400
+           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 300)
+         ORDER BY k""")),
 
-    "log_table_hidden" -> ((s, d) => {
+    Query("log_table_hidden", (s, d) => {
       // Iceberg-style HIDDEN PARTITIONING: PARTITIONED BY
       // (bucket(8,k)) synthesizes a hidden generated column the
       // user never writes or sees — writes compute it and lay files
@@ -1230,9 +1675,14 @@ object SparkEntry {
       lt.delete(s, col("seg") === "BUILDING" && col("k") <= 300)
       lt.load(s).select(col("k"), col("seg"), col("bal"))
         .orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_mktsegment AS seg, c_acctbal AS bal
+         FROM customer
+         WHERE c_custkey <= 400
+           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 300)
+         ORDER BY k""")),
 
-    "log_table_refs" -> ((s, d) => {
+    Query("log_table_refs", (s, d) => {
       // Iceberg-style REFS: tag the seed snapshot, fork a WRITABLE
       // branch (zero-copy shallow clone + ref), do real work on the
       // branch (append + row-level delete) while main stays
@@ -1243,19 +1693,11 @@ object SparkEntry {
       // CALL merge_branch to publish. The tag still serves the seed
       // snapshot (asserted); main never holds unaudited rows
       val tag = java.lang.Integer.toHexString(d.hashCode)
-      val cat = s"grefs_$tag"
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-          java.nio.file.Files.createTempDirectory("graft_logref")
-            .toString)
-      }
-      // catalogs cache their warehouse at first resolution — a
-      // per-invocation table NAME keeps reruns in one JVM isolated
-      val tbl = s"t_${System.nanoTime()}"
+      val wh = java.nio.file.Files.createTempDirectory("graft_logref")
+      val cat = freshCatalog(s, "grefs", wh.toString)
+      val tbl = "t"
       val lt = new graft.sources.LogTable(
-        s"${s.conf.get(s"spark.sql.catalog.$cat.warehouse")}/$tbl")
+        s"$wh/$tbl")
       val cust = t(s, d, "customer").select(col("c_custkey").as("k"),
         col("c_mktsegment").as("seg"), col("c_acctbal").as("bal"))
       lt.append(cust.filter(col("k") <= 300))
@@ -1281,9 +1723,15 @@ object SparkEntry {
         "main must be untouched while WAP stages")
       s.sql(s"CALL $cat.merge_branch('$tbl', 'wap')")
       s.sql(s"SELECT k, seg, bal FROM $cat.$tbl ORDER BY k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_mktsegment AS seg, c_acctbal AS bal
+         FROM customer
+         WHERE c_custkey <= 450
+           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 200)
+           AND NOT (c_mktsegment = 'AUTOMOBILE' AND c_custkey > 400)
+         ORDER BY k""")),
 
-    "log_table_meta_sql" -> ((s, d) => {
+    Query("log_table_meta_sql", (s, d) => {
       // round-11 SQL METADATA TABLES (Iceberg's inspection surface):
       // cat.t.history / cat.t.files / cat.t.refs resolve as
       // read-only relations — metadata users project, filter and
@@ -1295,19 +1743,13 @@ object SparkEntry {
       // history; the files facts aggregate to SF-deterministic
       // numbers the oracle recomputes from the customer table.
       val tag = java.lang.Integer.toHexString(d.hashCode)
-      val cat = s"gmeta_$tag"
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-          java.nio.file.Files.createTempDirectory("graft_logmeta")
-            .toString)
-      }
-      val tbl = s"t_${System.nanoTime()}"
+      val wh = java.nio.file.Files.createTempDirectory("graft_logmeta")
+      val cat = freshCatalog(s, "gmeta", wh.toString)
+      val tbl = "t"
       val ticks = Iterator(1000L, 2000L, 3000L, 4000L) ++
         Iterator.continually(5000L)
       val lt = new graft.sources.LogTable(
-        s"${s.conf.get(s"spark.sql.catalog.$cat.warehouse")}/$tbl",
+        s"$wh/$tbl",
         () => ticks.next())
       val cust = t(s, d, "customer").select(col("c_custkey").as("k"),
         col("c_name").as("name"))
@@ -1333,9 +1775,23 @@ object SparkEntry {
             SELECT 'partitions', 'count', 'parts', count(*)
             FROM $cat.$tbl.partitions
             ORDER BY surface, item, detail""")
-    }),
+    },
+      Some("""SELECT surface, item, detail, num FROM (
+           VALUES
+             ('files', 'live', 'files', CAST(2 AS BIGINT)),
+             ('files', 'rows', 'logical',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey > 50 AND c_custkey <= 200)),
+             ('history', '0', 'append', CAST(1000 AS BIGINT)),
+             ('history', '1', 'append', CAST(2000 AS BIGINT)),
+             ('history', '2', 'delete', CAST(3000 AS BIGINT)),
+             ('history', '3', 'ref', CAST(4000 AS BIGINT)),
+             ('partitions', 'count', 'parts', CAST(1 AS BIGINT)),
+             ('refs', 'seed', 'tag', CAST(0 AS BIGINT))
+         ) AS t(surface, item, detail, num)
+         ORDER BY surface, item, detail""")),
 
-    "log_table_snapshots" -> ((s, d) => {
+    Query("log_table_snapshots", (s, d) => {
       // round-12 inspection surfaces: cat.t.snapshots (one row per
       // retained commit — parent chain, operation, a SUMMARY map
       // carrying add/remove counts and the idempotent-txn tag;
@@ -1347,19 +1803,13 @@ object SparkEntry {
       // clock + single-file commits pin every value; the oracle
       // recomputes the row sums from the customer table.
       val tag = java.lang.Integer.toHexString(d.hashCode)
-      val cat = s"gsnap_$tag"
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-          java.nio.file.Files.createTempDirectory("graft_logsnap")
-            .toString)
-      }
-      val tbl = s"t_${System.nanoTime()}"
+      val wh = java.nio.file.Files.createTempDirectory("graft_logsnap")
+      val cat = freshCatalog(s, "gsnap", wh.toString)
+      val tbl = "t"
       val ticks = Iterator(1000L, 2000L, 3000L, 4000L) ++
         Iterator.continually(5000L)
       val lt = new graft.sources.LogTable(
-        s"${s.conf.get(s"spark.sql.catalog.$cat.warehouse")}/$tbl",
+        s"$wh/$tbl",
         () => ticks.next())
       val cust = t(s, d, "customer").select(col("c_custkey").as("k"),
         col("c_name").as("name"))
@@ -1401,9 +1851,31 @@ object SparkEntry {
                    sum(coalesce(dv_rows, 0))
             FROM $cat.$tbl.all_files WHERE NOT live
             ORDER BY surface, item, detail""")
-    }),
+    },
+      Some("""SELECT surface, item, detail, num FROM (
+           VALUES
+             ('snap', '0', 'append|p=-1|a=1|r=0', CAST(1000 AS BIGINT)),
+             ('snap', '1', 'append|p=0|a=1|r=0', CAST(2000 AS BIGINT)),
+             ('snap', '2', 'delete|p=1|a=1|r=1', CAST(3000 AS BIGINT)),
+             ('snap', '3', 'overwrite|p=2|a=1|r=2',
+               CAST(4000 AS BIGINT)),
+             ('snap', '4', 'append|p=3|a=1|r=0', CAST(5000 AS BIGINT)),
+             ('txn', 'app1', '5', CAST(4 AS BIGINT)),
+             ('all_files', 'live', 'files', CAST(2 AS BIGINT)),
+             ('all_files', 'live', 'rows',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey > 80 AND c_custkey <= 120)),
+             ('all_files', 'retired', 'files', CAST(2 AS BIGINT)),
+             ('all_files', 'retired', 'rows',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey <= 80)),
+             ('all_files', 'retired', 'dv_rows',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey <= 20))
+         ) AS t(surface, item, detail, num)
+         ORDER BY surface, item, detail""")),
 
-    "delta_export" -> ((s, d) => {
+    Query("delta_export", (s, d) => {
       // round-12 Delta-protocol EXPORT: the snapshot re-emitted as a
       // spec-compliant _delta_log (protocol + metaData + adds with
       // Delta stats JSON, parquet checkpoint, _last_checkpoint) that
@@ -1422,9 +1894,13 @@ object SparkEntry {
       graft.sources.DeltaExport.exportDeltaLog(s, lt)
       graft.sources.DeltaExport.loadDelta(s, lt.path)
         .select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 120 AND c_custkey % 10 <> 0
+         ORDER BY k""")),
 
-    "delta_convert" -> ((s, d) => {
+    Query("delta_convert", (s, d) => {
       // round-13 CONVERT FROM DELTA (metadata-only, in place): fold
       // a _delta_log into a graft LogTable registering the files by
       // reference — stats parsed back type-aware, so file-skipping
@@ -1448,9 +1924,13 @@ object SparkEntry {
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       conv.delete(s, col("k") % 10 === 0) // converted table is LIVE
       conv.load(s).select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 150 AND c_custkey % 10 <> 0
+         ORDER BY k""")),
 
-    "delta_dv_roundtrip" -> ((s, d) => {
+    Query("delta_dv_roundtrip", (s, d) => {
       // round-15 DELETION-VECTOR INTEROP, both directions and no
       // purge anywhere: merge-on-read deletes export as Delta's
       // public add.deletionVector encoding (portable roaring
@@ -1478,9 +1958,14 @@ object SparkEntry {
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       conv.deleteMor(s, col("k") % 7 === 0)   // MOR on the convert
       conv.load(s).select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 140 AND c_custkey % 10 <> 0
+           AND c_custkey % 7 <> 0
+         ORDER BY k""")),
 
-    "delta_mapping" -> ((s, d) => {
+    Query("delta_mapping", (s, d) => {
       // round-15 COLUMN MAPPING (id mode) across the Delta boundary:
       // a column-mapped graft table — parquet field-id stamps,
       // renames are pure metadata — exports with the spec's
@@ -1509,9 +1994,13 @@ object SparkEntry {
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       conv.renameColumn(s, "label", "tag")   // still column-mapped
       conv.load(s).select(col("k"), col("tag")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS tag
+         FROM customer
+         WHERE c_custkey <= 150
+         ORDER BY k""")),
 
-    "delta_constraints" -> ((s, d) => {
+    Query("delta_constraints", (s, d) => {
       // round-15 CHECK-CONSTRAINT INTEROP: graft CHECK constraints
       // cross the Delta boundary as the spec's
       // `delta.constraints.<name>` configuration under a writer-3
@@ -1542,9 +2031,13 @@ object SparkEntry {
         s"constraints lost in convert: ${conv.checkConstraints}")
       conv.append(cust.filter(col("k") > 100 && col("k") <= 150))
       conv.load(s).select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 150
+         ORDER BY k""")),
 
-    "iceberg_convert" -> ((s, d) => {
+    Query("iceberg_convert", (s, d) => {
       // round-13 CONVERT FROM ICEBERG metadata (in place): resolve
       // the current snapshot through the manifest chain, register
       // the live files by reference (rows from record_count), and
@@ -1565,9 +2058,13 @@ object SparkEntry {
         .convertFromIceberg(s, s"$wh/t")
       conv.delete(s, col("k") % 10 === 0)
       conv.load(s).select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 150 AND c_custkey % 10 <> 0
+         ORDER BY k""")),
 
-    "iceberg_bucket_interop" -> ((s, d) => {
+    Query("iceberg_bucket_interop", (s, d) => {
       // round-15: `iceberg_bucket(n, c)` hidden partitioning — the
       // Iceberg spec's OWN bucket hash (Appendix B murmur3, seed 0;
       // graft.plans.IcebergBucketHash, codegen'd) as a graft
@@ -1595,9 +2092,13 @@ object SparkEntry {
       conv.append(cust.filter(col("k") > 150 && col("k") <= 180))
       conv.delete(s, col("k") % 10 === 0)
       conv.load(s).select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 180 AND c_custkey % 10 <> 0
+         ORDER BY k""")),
 
-    "iceberg_dv_roundtrip" -> ((s, d) => {
+    Query("iceberg_dv_roundtrip", (s, d) => {
       // round-15 POSITION-DELETE INTEROP, both directions and no
       // purge anywhere (delta_dv_roundtrip's Iceberg twin):
       // merge-on-read deletes export as the Iceberg spec's own v2
@@ -1628,9 +2129,14 @@ object SparkEntry {
         .convertFromIceberg(s, s"$wh/t")
       conv.deleteMor(s, col("k") % 7 === 0)   // MOR on the convert
       conv.load(s).select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 140 AND c_custkey % 10 <> 0
+           AND c_custkey % 7 <> 0
+         ORDER BY k""")),
 
-    "iceberg_mirror" -> ((s, d) => {
+    Query("iceberg_mirror", (s, d) => {
       // round-14 ONE-CALL Iceberg mirror (mirrorDelta's analog):
       // follow the table one commit at a time — export + retention
       // in a single call, so a long-lived mirror stays BOUNDED
@@ -1658,9 +2164,13 @@ object SparkEntry {
       sync() // already current — a no-op, never a duplicate snapshot
       graft.sources.IcebergExport.loadIceberg(s, lt.path)
         .select(col("k"), col("name")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name
+         FROM customer
+         WHERE c_custkey <= 120 AND c_custkey % 10 <> 0
+         ORDER BY k""")),
 
-    "iceberg_export" -> ((s, d) => {
+    Query("iceberg_export", (s, d) => {
       // round-13 Iceberg metadata EXPORT (public table spec,
       // format-version 2): vN.metadata.json + manifest-list and
       // manifest Avro files (raw avro-1.12 API — on Spark's own
@@ -1689,9 +2199,14 @@ object SparkEntry {
       graft.sources.IcebergExport.exportIcebergMetadata(s, lt) // v2
       graft.sources.IcebergExport.loadIceberg(s, lt.path)
         .select(col("k"), col("name"), col("seg")).orderBy("k")
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_name AS name,
+              c_mktsegment AS seg
+         FROM customer
+         WHERE c_custkey <= 120 AND c_custkey % 10 <> 0
+         ORDER BY k""")),
 
-    "log_table_protocol" -> ((s, d) => {
+    Query("log_table_protocol", (s, d) => {
       // round-12 PROTOCOL / table-feature gating (Delta PROTOCOL.md
       // discipline): create records a protocol action; the commit
       // choke point auto-upgrades it when a commit first activates
@@ -1742,9 +2257,27 @@ object SparkEntry {
         ("gate", "writer", "readable_rows", stillReadable))
         .toDF("surface", "item", "detail", "num")
         .orderBy("surface", "item", "detail")
-    }),
+    },
+      Some("""SELECT surface, item, detail, num FROM (
+           VALUES
+             ('features', 'v0', '',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey <= 100)),
+             ('features', 'v1', 'deletionVectors',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey > 50 AND c_custkey <= 100)),
+             ('features', 'v2', 'deletionVectors,rowTracking',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey > 50 AND c_custkey <= 100)),
+             ('gate', 'reader', 'refused', CAST(1 AS BIGINT)),
+             ('gate', 'writer', 'refused', CAST(1 AS BIGINT)),
+             ('gate', 'writer', 'readable_rows',
+               (SELECT CAST(count(*) AS BIGINT) FROM customer
+                WHERE c_custkey <= 20))
+         ) AS t(surface, item, detail, num)
+         ORDER BY surface, item, detail""")),
 
-    "log_table_analyze" -> ((s, d) => {
+    Query("log_table_analyze", (s, d) => {
       // ANALYZE TABLE as data: one distributed pass computes exact
       // per-column NDV / null count / min / max + the table's
       // logical row count, commits them to TBLPROPERTIES (metadata-
@@ -1752,18 +2285,11 @@ object SparkEntry {
       // (BUILDING → NULL) and MOR-deletes every 7th key first, so
       // the pass must honor deletion vectors — the numbers are over
       // the LOGICAL table, which is exactly what the oracle computes
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val cat = s"ganalyze_$tag"
-      if (s.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftTableCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-          java.nio.file.Files.createTempDirectory("graft_loganalyze")
-            .toString)
-      }
-      val tbl = s"t_${System.nanoTime()}"
+      val wh = java.nio.file.Files.createTempDirectory("graft_loganalyze")
+      val cat = freshCatalog(s, "ganalyze", wh.toString)
+      val tbl = "t"
       val lt = new graft.sources.LogTable(
-        s"${s.conf.get(s"spark.sql.catalog.$cat.warehouse")}/$tbl")
+        s"$wh/$tbl")
       val cust = t(s, d, "customer").select(col("c_custkey").as("k"),
         col("c_nationkey").cast("long").as("nat"),
         when(col("c_mktsegment") === "BUILDING", lit(null))
@@ -1775,9 +2301,28 @@ object SparkEntry {
           col("min").as("min_v"), col("max").as("max_v"),
           col("row_count").as("n_rows"))
         .orderBy(col("col"))
-    }),
+    },
+      Some("""WITH t AS (
+           SELECT c_custkey AS k, CAST(c_nationkey AS BIGINT) AS nat,
+                  nullif(c_mktsegment, 'BUILDING') AS seg
+           FROM customer
+           WHERE c_custkey <= 500 AND c_custkey % 7 <> 0)
+         SELECT col, ndv, nulls, min_v, max_v, n_rows FROM (
+           SELECT 'k' AS col, COUNT(DISTINCT k) AS ndv,
+                  COUNT(*) - COUNT(k) AS nulls,
+                  CAST(MIN(k) AS VARCHAR) AS min_v,
+                  CAST(MAX(k) AS VARCHAR) AS max_v,
+                  COUNT(*) AS n_rows FROM t
+           UNION ALL
+           SELECT 'nat', COUNT(DISTINCT nat), COUNT(*) - COUNT(nat),
+                  CAST(MIN(nat) AS VARCHAR), CAST(MAX(nat) AS VARCHAR),
+                  COUNT(*) FROM t
+           UNION ALL
+           SELECT 'seg', COUNT(DISTINCT seg), COUNT(*) - COUNT(seg),
+                  MIN(seg), MAX(seg), COUNT(*) FROM t)
+         ORDER BY col""")),
 
-    "log_table_rowids" -> ((s, d) => {
+    Query("log_table_rowids", (s, d) => {
       // ROW TRACKING (Delta row tracking / Iceberg v3 row lineage):
       // each row's stable id is assigned at commit as METADATA
       // (baseRowId + parquet position — an append's id cost is one
@@ -1810,9 +2355,16 @@ object SparkEntry {
       lt.loadWithRowIds(s)
         .select(col("k"), col("seg"), col("_row_id").as("row_id"))
         .orderBy(col("k"))
-    }),
+    },
+      Some("""WITH base AS (
+           SELECT c_custkey AS k, c_mktsegment AS seg,
+                  ROW_NUMBER() OVER (ORDER BY c_custkey) - 1 AS row_id
+           FROM customer WHERE c_custkey <= 200)
+         SELECT k, CASE WHEN k <= 50 THEN 'PRIME' ELSE seg END AS seg,
+                CAST(row_id AS BIGINT) AS row_id
+         FROM base WHERE k % 10 <> 0 ORDER BY k""")),
 
-    "log_table_expire" -> ((s, d) => {
+    Query("log_table_expire", (s, d) => {
       // EXPIRE SNAPSHOTS (Iceberg expire_snapshots / Delta log
       // retention): bound the METADATA — five commits, then keep the
       // newest three; a checkpoint anchored AT the floor keeps every
@@ -1837,9 +2389,13 @@ object SparkEntry {
         catch { case _: IllegalStateException => true }
       require(belowFloorFails, "below-floor time travel must refuse")
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_mktsegment AS seg
+         FROM customer
+         WHERE c_custkey <= 400 AND c_custkey % 9 <> 0
+         ORDER BY k""")),
 
-    "log_table_widen" -> ((s, d) => {
+    Query("log_table_widen", (s, d) => {
       // TYPE WIDENING (Delta's typeWidening): ALTER COLUMN TYPE as a
       // metadata-only commit — int files upcast to BIGINT, float to
       // DOUBLE, decimal grows precision, all AT SCAN TIME (zero
@@ -1862,9 +2418,18 @@ object SparkEntry {
         .toDF("k", "bal", "f"))
       lt.load(s).select(col("k"), col("bal").cast("double").as("bal"),
         col("f")).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k,
+           CAST(CAST(CAST(c_custkey % 1000 AS DECIMAL(10,2))
+             AS DECIMAL(22,4)) AS DOUBLE) AS bal,
+           CAST(CAST(c_acctbal AS REAL) AS DOUBLE) AS f
+         FROM customer
+         UNION ALL
+         SELECT 6000000000, CAST(CAST(123456789.2500 AS DECIMAL(22,4))
+             AS DOUBLE), 0.5
+         ORDER BY k""")),
 
-    "log_table_clusterby" -> ((s, d) => {
+    Query("log_table_clusterby", (s, d) => {
       // WRITE-TIME CLUSTERING (Delta's CLUSTER BY): with
       // graft.clusterBy every write locally sorts by the key (tight
       // per-file stats, no shuffle) and OPTIMIZE range-partitions on
@@ -1894,9 +2459,11 @@ object SparkEntry {
         case _ => ()
       }
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT c_custkey AS k, c_acctbal AS bal
+         FROM customer ORDER BY k""")),
 
-    "log_table_autocompact" -> ((s, d) => {
+    Query("log_table_autocompact", (s, d) => {
       // AUTO COMPACTION (Delta's autoOptimize.autoCompact): with
       // graft.autoCompact.enabled the many-small-appends ingest
       // pattern self-heals — the append that brings a scope to
@@ -1921,9 +2488,11 @@ object SparkEntry {
       require(nFiles == 2,
         s"expected compacted+fresh = 2 files, got $nFiles")
       lt.load(s).orderBy(col("k"))
-    }),
+    },
+      Some("""SELECT s_suppkey AS k, s_name AS name, s_acctbal AS bal
+         FROM supplier ORDER BY k""")),
 
-    "bucketed_join" -> ((s, d) => {
+    Query("bucketed_join", (s, d) => {
       // the shuffle paid at write time: both facts bucketed by the
       // join key co-locate, so the join plans with zero exchange
       // (asserted in LayoutSpec)
@@ -1946,9 +2515,14 @@ object SparkEntry {
           sum(col("l_extendedprice").cast("decimal(28,4)")).cast("double")
             .as("total_price"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
+           AS total_price
+         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+         GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 
-    "partitioned_scan" -> ((s, d) => {
+    Query("partitioned_scan", (s, d) => {
       // hive-style partition layout: the event_type predicate becomes
       // a PartitionFilter (whole directories skipped, no data read)
       val tag = java.lang.Integer.toHexString(d.hashCode)
@@ -1962,9 +2536,13 @@ object SparkEntry {
             .as("total_value"))
         .orderBy(col("user_id"))
         .select(col("user_id"), col("n_events"), col("total_value"))
-    }),
+    },
+      Some("""SELECT user_id, COUNT(*) AS n_events,
+         CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total_value
+         FROM events WHERE event_type = 'purchase'
+         GROUP BY user_id ORDER BY user_id""")),
 
-    "pipeline_e2e" -> ((s, d) => {
+    Query("pipeline_e2e", (s, d) => {
       // the reference's full per-table loop: two raw batches (orders
       // split at 1998) staged latest-per-key and SCD2-merged in
       // sequence into a customer-keyed dimension
@@ -1992,9 +2570,43 @@ object SparkEntry {
         col("o_totalprice"), ntz(col("valid_from")).as("valid_from"),
         ntz(col("valid_to")).as("valid_to"), col("is_current"))
         .orderBy(col("o_custkey"), col("valid_from"))
-    }),
+    },
+      Some("""WITH s1 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         s2 AS (
+           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
+           WHERE rn = 1),
+         j AS (
+           SELECT COALESCE(s1.o_custkey, s2.o_custkey) AS k,
+             s1.o_custkey IS NOT NULL AS in1,
+             s2.o_custkey IS NOT NULL AS in2,
+             s1.o_orderpriority AS p1, s1.o_totalprice AS t1,
+             s2.o_orderpriority AS p2, s2.o_totalprice AS t2
+           FROM s1 FULL JOIN s2 ON s1.o_custkey = s2.o_custkey)
+         SELECT k AS o_custkey, o_orderpriority, o_totalprice,
+                valid_from, valid_to, is_current FROM (
+           SELECT k, p1 AS o_orderpriority, t1 AS o_totalprice,
+             TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
+             CAST(NULL AS TIMESTAMP) AS valid_to, TRUE AS is_current
+           FROM j WHERE in1 AND (NOT in2 OR (p1 = p2 AND t1 = t2))
+           UNION ALL
+           SELECT k, p1, t1, TIMESTAMP '2026-01-01 00:00:00',
+             TIMESTAMP '2026-01-02 00:00:00', FALSE
+           FROM j WHERE in1 AND in2 AND (p1 <> p2 OR t1 <> t2)
+           UNION ALL
+           SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
+             CAST(NULL AS TIMESTAMP), TRUE
+           FROM j WHERE in2 AND (NOT in1 OR p1 <> p2 OR t1 <> t2))
+         ORDER BY o_custkey, valid_from""")),
 
-    "skew_join" -> ((s, d) => {
+    Query("skew_join", (s, d) => {
       val li = t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       val o = t(s, d, "orders")
@@ -2006,9 +2618,14 @@ object SparkEntry {
           sum(col("l_extendedprice").cast("decimal(28,4)")).cast("double")
             .as("total_price"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
+           AS total_price
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 
-    "skew_join_adaptive" -> ((s, d) => {
+    Query("skew_join_adaptive", (s, d) => {
       // hot keys (orders with >=5 line items here) get salted ×4;
       // cold keys join plain — dim amplification only where skew is.
       // Row-identical to the plain join, same oracle as skew_join.
@@ -2024,1677 +2641,23 @@ object SparkEntry {
           sum(col("l_extendedprice").cast("decimal(28,4)")).cast("double")
             .as("total_price"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
+           AS total_price
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 
-    "skew_distinct" -> ((s, d) =>
+    Query("skew_distinct", (s, d) =>
       Skew.skewedDistinctCount(t(s, d, "lineitem"), Seq("l_orderkey"),
         "l_suppkey", salts = 16)
-        .orderBy(col("l_orderkey"))),
+        .orderBy(col("l_orderkey")),
+      Some("""SELECT l_orderkey, COUNT(DISTINCT l_suppkey) AS n_distinct
+         FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""")),
 
     // §2.2 relational analytics -----------------------------------
-    "q1_pricing" -> ((s, d) => Analytics.q1Pricing(t(s, d, "lineitem"))),
-
-    "q3_shipping" -> ((s, d) =>
-      Analytics.q3Shipping(t(s, d, "customer"), t(s, d, "orders"),
-        t(s, d, "lineitem"))
-        .select(col("l_orderkey"), ntz(col("o_orderdate")).as("o_orderdate"),
-          col("o_orderpriority"), col("revenue"))),
-
-    "q5_local_volume" -> ((s, d) =>
-      Analytics.q5LocalVolume(t(s, d, "region"), t(s, d, "nation"),
-        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "orders"),
-        t(s, d, "lineitem"))),
-
-    "cube_agg" -> ((s, d) => Analytics.cubeAgg(t(s, d, "documents"))),
-
-    "q10_returned_items" -> ((s, d) =>
-      Analytics.q10ReturnedItems(t(s, d, "customer"), t(s, d, "orders"),
-        t(s, d, "lineitem"), t(s, d, "nation"))),
-
-    "q18_large_orders" -> ((s, d) =>
-      Analytics.q18LargeOrders(t(s, d, "customer"), t(s, d, "orders"),
-        t(s, d, "lineitem"))
-        .withColumn("o_orderdate", ntz(col("o_orderdate")))),
-
-    "scd2_asof" -> ((s, d) =>
-      // time travel on the dimension itself: the org as it stood
-      // mid-month, reconstructed from version intervals — map-only
-      Scd.scd2AsOf(
-        Scd.scd2FromHistory(t(s, d, "events"), Seq("user_id"), "ts",
-          Seq("event_type"), Seq("event_id")),
-        java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-        .select(col("user_id"), col("event_type"),
-          ntz(col("valid_from")).as("valid_from"))
-        .orderBy(col("user_id"))),
-
-    "schema_evolution" -> ((s, d) => {
-      // lakehouse schema drift: batch 2 adds a column; mergeSchema
-      // unifies on read, older rows null-filled
-      val tmp = java.nio.file.Files.createTempDirectory("graft_evo")
-      val p = tmp.resolve("tbl").toString
-      val s1 = s.range(0, 3).selectExpr("id", "CAST(id * 10 AS LONG) AS a")
-      s1.write.parquet(p + "/b=1")
-      val s2 = s.range(3, 5).selectExpr("id", "CAST(id * 10 AS LONG) AS a",
-        "concat('v', id) AS c")
-      s2.write.parquet(p + "/b=2")
-      s.read.option("mergeSchema", "true").parquet(p)
-        .select(col("id"), col("a"), col("c"))
-        .orderBy(col("id"))
-    }),
-
-    "scd2_deletes" -> ((s, d) => {
-      // full-snapshot CDC: users with no events in the second half of
-      // the month vanish from the snapshot → their current version
-      // closes. The other three quadrants (new/changed/unchanged)
-      // merge as usual.
-      val ev = t(s, d, "events")
-      val mid = lit("2024-01-15").cast("timestamp")
-      val dim = Scd.scd2FromHistory(ev.filter(col("ts") < mid),
-        Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"))
-      val snap = Scd.latestPerKey(ev.filter(col("ts") >= mid),
-        Seq("user_id"), Seq(col("ts"), col("event_id")))
-        .select(col("user_id"), col("event_type"))
-      Scd.scd2ApplySnapshot(dim, snap, Seq("user_id"), Seq("event_type"),
-        batchTs)
-        .select(col("user_id"), col("event_type"),
-          ntz(col("valid_from")).as("valid_from"),
-          ntz(col("valid_to")).as("valid_to"), col("is_current"))
-        .orderBy(col("user_id"), col("valid_from"))
-    }),
-
-    "vocab_topk" -> ((s, d) =>
-      TextAnalysis.vocabTopK(t(s, d, "documents"), k = 20)),
-
-    "text_normalize" -> ((s, d) =>
-      TextAnalysis.normalizeText(t(s, d, "documents"))
-        .orderBy(col("doc_id"))),
-
-    "approx_topk" -> ((s, d) => {
-      // the Misra-Gries sketch in its PROVABLE-exactness regime: with
-      // every true frequency above n/(capacity+1) the vocabulary must
-      // fit in the counters (Σfreq = n forces <capacity+1 distinct
-      // terms), no decrement ever fires, and the reported lower-bound
-      // min_counts ARE the true counts — so the sketch, its partials
-      // and its summary merges are oracle-checkable exactly. The
-      // fixture synthesizes 30 terms with DISTINCT frequencies
-      // (deterministic ranks at any scale factor / partitioning);
-      // spread over 8 partitions so the merge path is exercised.
-      // Full-vocabulary behavior (membership + bound) stays covered
-      // by ApproxTopKSpec.
-      import s.implicits._
-      val corpus = (1 to 30).flatMap(i => Seq.fill(10 + i)(f"t$i%02d"))
-      TextAnalysis.approxVocabTopK(
-        s.createDataset(corpus).toDF("text").repartition(8),
-        k = 20, capacity = 256)
-    }),
-
-    "numeric_histogram" -> ((s, d) =>
-      Analytics.numericHistogram(t(s, d, "orders"), "o_totalprice")),
-
-    "compaction" -> ((s, d) => {
-      // maintenance op: fragment documents into 64 tiny files, compact
-      // back shuffle-free, and prove losslessness via the aggregate
-      // (the oracle computes it from the original table). The ScalaTest
-      // asserts the file-count contract; here the data contract.
-      val tmp = java.nio.file.Files.createTempDirectory("graft_compact")
-      val frag = tmp.resolve("frag").toString
-      t(s, d, "documents").repartition(64).write.mode("overwrite").parquet(frag)
-      Tables.compactFiles(s, frag, tmp.resolve("opt").toString)
-      s.read.parquet(tmp.resolve("opt").toString)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-        .orderBy(col("lang"))
-    }),
-
-    "zorder_layout" -> ((s, d) => {
-      // layout maintenance: rewrite orders z-ordered on (custkey,
-      // totalprice) so 2-D box predicates prune files; the oracle
-      // proves content preservation, LayoutSpec proves the
-      // file-clustering quality
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zorder")
-      val p = tmp.resolve("orders_z").toString
-      Tables.writeZOrdered(t(s, d, "orders"), p,
-        "o_custkey", "o_totalprice", nFiles = 8)
-      s.read.parquet(p)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          Analytics.dsum(col("o_totalprice")).as("total_price"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    "q2_min_cost" -> ((s, d) =>
-      Analytics.q2MinCostSupplier(t(s, d, "part"), t(s, d, "supplier"),
-        t(s, d, "lineitem"))),
-
-    "q4_order_priority" -> ((s, d) =>
-      Analytics.q4OrderPriority(t(s, d, "orders"), t(s, d, "lineitem"))),
-
-    "q11_revenue_share" -> ((s, d) =>
-      Analytics.q11RevenueShare(t(s, d, "supplier"), t(s, d, "lineitem"))),
-
-    "q17_small_quantity" -> ((s, d) =>
-      Analytics.q17SmallQuantity(t(s, d, "part"), t(s, d, "lineitem"))),
-
-    "q21_late_suppliers" -> ((s, d) =>
-      Analytics.q21LateSuppliers(t(s, d, "supplier"), t(s, d, "orders"),
-        t(s, d, "lineitem"))),
-
-    "q22_idle_customers" -> ((s, d) =>
-      Analytics.q22IdleCustomers(t(s, d, "customer"), t(s, d, "orders"))),
-
-    "q12_ship_priority" -> ((s, d) =>
-      Analytics.q12ShipPriority(t(s, d, "orders"), t(s, d, "lineitem"))),
-
-    "q16_supplier_cnt" -> ((s, d) =>
-      Analytics.q16SupplierCnt(t(s, d, "part"), t(s, d, "supplier"),
-        t(s, d, "lineitem"))),
-
-    "q20_excess_suppliers" -> ((s, d) =>
-      Analytics.q20ExcessSuppliers(t(s, d, "part"), t(s, d, "supplier"),
-        t(s, d, "nation"), t(s, d, "lineitem"))),
-
-    "q6_revenue_delta" -> ((s, d) =>
-      Analytics.q6RevenueDelta(t(s, d, "lineitem"))),
-
-    "q13_order_dist" -> ((s, d) =>
-      Analytics.q13OrderDistribution(t(s, d, "customer"), t(s, d, "orders"))
-        .orderBy(col("custdist").desc, col("c_count").desc)),
-
-    "q14_promo_share" -> ((s, d) =>
-      Analytics.q14PromoShare(t(s, d, "lineitem"), t(s, d, "part"))),
-
-    "q19_disjunctive" -> ((s, d) =>
-      Analytics.q19Disjunctive(t(s, d, "lineitem"), t(s, d, "part"))),
-
-    "q7_trade_volume" -> ((s, d) =>
-      Analytics.q7TradeVolume(t(s, d, "lineitem"), t(s, d, "orders"),
-        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "nation"),
-        "NATION_3", "NATION_7")
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))),
-
-    "q15_top_supplier" -> ((s, d) =>
-      Analytics.q15TopSupplier(t(s, d, "lineitem"), t(s, d, "supplier"))
-        .orderBy(col("s_suppkey"))),
-
-    "q8_market_share" -> ((s, d) =>
-      Analytics.q8MarketShare(t(s, d, "lineitem"), t(s, d, "orders"),
-        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "nation"),
-        t(s, d, "region"), t(s, d, "part"), "ASIA", "NATION_2", "STANDARD")
-        .orderBy(col("o_year"))),
-
-    "q9_nation_revenue" -> ((s, d) =>
-      Analytics.q9NationRevenue(t(s, d, "lineitem"), t(s, d, "orders"),
-        t(s, d, "supplier"), t(s, d, "nation"), t(s, d, "part"), "%red%")
-        .orderBy(col("nation"), col("o_year"))),
-
-    "source_overlap" -> ((s, d) =>
-      // exact per-pair set overlap (token-keyed equi-join) — fully
-      // oracle-checkable; the HLL-sketch twin for unbounded source
-      // counts keeps its error-bound coverage in TextAnalysisSpec
-      TextAnalysis.sourceVocabOverlapExact(t(s, d, "documents"))
-        .orderBy(col("src_a"), col("src_b"))),
-
-    "join_blowup" -> ((s, d) => {
-      // pre-flight profile of the classic accidental explosion: a
-      // self-join of events on user_id (out_rows = per-user count²)
-      val ev = t(s, d, "events")
-      Skew.joinBlowupProfile(ev, ev, "user_id", "user_id", k = 20)
-    }),
-
-    "concurrency_profile" -> ((s, d) => {
-      // deterministic span synthesis: each event opens a session of
-      // 60 + (event_id % 300) seconds (same expression in the oracle),
-      // then the distributed sweep line profiles peak concurrency
-      val spans = t(s, d, "events").select(col("event_id"),
-        col("ts").as("t0"),
-        expr("timestampadd(SECOND, 60 + event_id % 300, ts)").as("t1"))
-      Analytics.concurrencyProfile(spans, "event_id", "t0", "t1")
-        .withColumn("hour", ntz(col("hour")))
-        .orderBy(col("hour"))
-    }),
-
-    "manifest_prune" -> ((s, d) => {
-      // iceberg-style file skipping without the table format: cluster
-      // orders into 16 range files, build the per-file min/max
-      // manifest in one distributed pass, answer a 3%-selectivity
-      // price band from only the intersecting files. The oracle
-      // proves the pruned read returns exactly the filtered table;
-      // LayoutSpec proves files were actually skipped.
-      val tmp = java.nio.file.Files.createTempDirectory("graft_manifest")
-      val p = tmp.resolve("orders_clustered").toString
-      t(s, d, "orders")
-        .repartitionByRange(16, col("o_totalprice"))
-        .sortWithinPartitions(col("o_totalprice"))
-        .write.mode("overwrite").parquet(p)
-      val manifest = Tables.buildManifest(s, p, "o_totalprice")
-      val files = Tables.pruneFiles(manifest, lit(30000.0), lit(45000.0))
-      Tables.manifestPrunedRead(s, p, files.toSeq, "o_totalprice",
-          lit(30000.0), lit(45000.0))
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("o_totalprice"), col("o_orderpriority"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "fuzzy_join" -> ((s, d) => {
-      // dirty registry: drop one character of each customer name at a
-      // key-derived position (deterministic; same expression in the
-      // oracle), then link it back to the clean registry at edit
-      // distance ≤ 1 via FastSS deletion-neighborhood blocking
-      val cust = t(s, d, "customer")
-      val pos = (col("c_custkey") % 18).cast("int")
-      val dirty = cust.select(col("c_custkey").as("dirty_id"),
-        concat(col("c_name").substr(lit(1), pos),
-          col("c_name").substr(pos + lit(2), length(col("c_name"))))
-          .as("dirty_name"))
-      Linkage.fuzzyJoinEd1(cust, "c_custkey", "c_name",
-          dirty, "dirty_id", "dirty_name")
-        .select(col("l_id").as("c_custkey"), col("l_name").as("c_name"),
-          col("r_id").as("dirty_id"), col("r_name").as("dirty_name"),
-          col("dist").cast("long").as("dist"))
-        .orderBy(col("c_custkey"), col("dirty_id"))
-    }),
-
-    "fuzzy_join_ed2" -> ((s, d) => {
-      // two sequential key-derived deletions (p1 on the original, p2
-      // on the 17-char intermediate — same nesting in the oracle),
-      // linked back at edit distance ≤ 2 via the 2-deletion
-      // neighborhood. The dirty side is a deterministic 20% batch
-      // (the realistic shape: incoming dirty batch ≪ master
-      // registry); the full self-cross at ed ≤ 2 over SEQUENTIAL
-      // zero-padded synthetic names degenerates to ~10^3 matches
-      // per name — an artifact of the fixture, not the algorithm
-      val cust = t(s, d, "customer")
-      val p1 = (col("c_custkey") % 18).cast("int")
-      val n1 = concat(col("c_name").substr(lit(1), p1),
-        col("c_name").substr(p1 + lit(2), length(col("c_name"))))
-      val p2 = (col("c_custkey") % 17).cast("int")
-      val dirty = cust.filter(col("c_custkey") % 5 === 0)
-        .select(col("c_custkey").as("dirty_id"),
-          concat(n1.substr(lit(1), p2), n1.substr(p2 + lit(2), length(n1)))
-            .as("dirty_name"))
-      Linkage.fuzzyJoinEd(cust, "c_custkey", "c_name",
-          dirty, "dirty_id", "dirty_name", maxDist = 2)
-        .select(col("l_id").as("c_custkey"), col("l_name").as("c_name"),
-          col("r_id").as("dirty_id"), col("r_name").as("dirty_name"),
-          col("dist").cast("long").as("dist"))
-        .orderBy(col("c_custkey"), col("dirty_id"))
-    }),
-
-    "moving_window" -> ((s, d) =>
-      Analytics.movingWindow(t(s, d, "events"))
-        .withColumn("ts", ntz(col("ts")))
-        .orderBy(col("user_id"), col("event_id"))),
-
-    "ntile_bands" -> ((s, d) =>
-      Analytics.ntileBands(t(s, d, "orders"))),
-
-    "rank_features" -> ((s, d) =>
-      Analytics.rankFeatures(t(s, d, "orders"))),
-
-    "grouping_sets" -> ((s, d) =>
-      Analytics.groupingSetsAgg(t(s, d, "orders"))),
-
-    "json_extract" -> ((s, d) =>
-      Analytics.jsonExtractAgg(t(s, d, "events"))),
-
-    "funnel_steps" -> ((s, d) =>
-      Analytics.funnel(t(s, d, "events"))),
-
-    "retention_cohorts" -> ((s, d) =>
-      Analytics.retentionCohorts(t(s, d, "events"))
-        .withColumn("cohort_week", ntz(col("cohort_week")))
-        .withColumn("act_week", ntz(col("act_week")))),
-
-    "unpivot_long" -> ((s, d) => {
-      // reshape completeness: melt the pivoted wide table back to
-      // long form — unpivot(pivot(x)) recovers the per-(user, type)
-      // counts the oracle computes directly. The type list is a
-      // static registry (pivot's API needs plan-time literals); the
-      // union branch makes the registry DRIFT-SAFE without the old
-      // eager distinct+collect job: any event type outside the
-      // registry surfaces as ordinary long-form rows — identical to
-      // the oracle's direct group-by — instead of silently dropping.
-      // One lazy plan, no driver-side type-derivation scan (the
-      // round-5 bench regression).
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val novel = t(s, d, "events")
-        .filter(!col("event_type").isin(types: _*))
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      Analytics.pivotAgg(t(s, d, "events"), types)
-        .unpivot(Array(col("user_id")), types.map(col).toArray,
-          "event_type", "n")
-        .filter(col("n") > 0)
-        .unionByName(novel)
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    "moment_stats" -> ((s, d) =>
-      Analytics.momentStats(t(s, d, "lineitem"))),
-
-    "agg_maintain" -> ((s, d) => {
-      // incremental view maintenance: fold three yearly batches into
-      // the per-customer aggregate state — the final state must be
-      // bit-identical to a from-scratch group-by (the oracle)
-      val o = t(s, d, "orders")
-      val cut1 = lit("1997-01-01").cast("timestamp")
-      val cut2 = lit("1999-01-01").cast("timestamp")
-      val keys = Seq("o_custkey")
-      val s0 = Analytics.emptyCountSum(s, o, keys)
-      val s1 = Analytics.maintainCountSum(s0,
-        o.filter(col("o_orderdate") < cut1), keys, "o_totalprice")
-      val s2 = Analytics.maintainCountSum(s1,
-        o.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2),
-        keys, "o_totalprice")
-      val s3 = Analytics.maintainCountSum(s2,
-        o.filter(col("o_orderdate") >= cut2), keys, "o_totalprice")
-      Analytics.finalizeCountSum(s3).orderBy(col("o_custkey"))
-    }),
-
-    "set_reconcile" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val mid = lit("2024-01-16").cast("timestamp")
-      Analytics.setReconcile(
-        ev.filter(col("ts") < mid).select(col("user_id")),
-        ev.filter(col("ts") >= mid).select(col("user_id")),
-        "h1_only", "h2_only")
-        .orderBy(col("cohort"), col("user_id"))
-    }),
-
-    "topk_per_group" -> ((s, d) =>
-      Analytics.topKPerGroup(t(s, d, "orders"), Seq("o_custkey"),
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3)
-        .select(col("o_custkey"), col("rn"), col("o_orderkey"),
-          col("o_totalprice"))
-        .orderBy(col("o_custkey"), col("rn"))),
-
-    "rollup_agg" -> ((s, d) =>
-      Analytics.rollupAgg(t(s, d, "region"), t(s, d, "nation"),
-        t(s, d, "customer"), t(s, d, "orders"))),
-
-    "anti_semi_join" -> ((s, d) =>
-      Analytics.customersWithoutOrders(t(s, d, "customer"),
-        t(s, d, "orders")
-          .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp")))),
-
-    "semi_join" -> ((s, d) =>
-      Analytics.customersWithOrders(t(s, d, "customer"),
-        t(s, d, "orders")
-          .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp")))),
-
-    "windowed_events" -> ((s, d) =>
-      Analytics.windowedEvents(t(s, d, "events"))
-        .withColumn("win_start", ntz(col("win_start")))),
-
-    "rate_spikes" -> ((s, d) =>
-      // hourly per-type anomaly flags by integer cross-multiplication
-      // (n·hours > 2·total) — no float mean, engine-exact
-      Analytics.rateSpikes(t(s, d, "events"))
-        .withColumn("hour", ntz(col("hour")))
-        .orderBy(col("event_type"), col("hour"))),
-
-    "dq_profile" -> ((s, d) =>
-      // per-column null/distinct audit in one scan, long form
-      Analytics.dqProfile(t(s, d, "customer"),
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal"))
-        .orderBy(col("col_name"))),
-
-    "sessionize" -> ((s, d) =>
-      Analytics.sessionize(t(s, d, "events"))
-        .withColumn("session_start", ntz(col("session_start")))
-        .withColumn("session_end", ntz(col("session_end")))),
-
-    "percentiles" -> ((s, d) => Analytics.percentiles(t(s, d, "orders"))),
-
-    "approx_percentiles" -> ((s, d) =>
-      Analytics.approxPercentiles(t(s, d, "orders"))),
-
-    "running_agg" -> ((s, d) =>
-      Analytics.runningAgg(t(s, d, "orders"))
-        .withColumn("o_orderdate", ntz(col("o_orderdate")))),
-
-    "pivot_agg" -> ((s, d) =>
-      Analytics.pivotAgg(t(s, d, "events"),
-        Seq("click", "error", "purchase", "signup", "view"))),
-
-    "distinct_count" -> ((s, d) =>
-      Analytics.distinctCounts(t(s, d, "events"))),
-
-    "approx_distinct" -> ((s, d) =>
-      Analytics.approxDistinctCounts(t(s, d, "events"))),
-
-    "interval_join" -> ((s, d) => {
-      // SCD2 lookup: each event joined to the dimension version
-      // whose [valid_from, valid_to) covers its timestamp
-      val ev = t(s, d, "events")
-      val facts = ev.select(col("event_id"), col("user_id"), col("ts"))
-      val dim = Scd.scd2FromHistory(ev, Seq("user_id"), "ts",
-        Seq("event_type"), Seq("event_id"))
-      Temporal.intervalJoin(facts, "user_id", "ts", dim, "user_id")
-        .select(col("event_id"), col("user_id"), ntz(col("ts")).as("ts"),
-          col("event_type"), ntz(col("valid_from")).as("valid_from"))
-        .orderBy(col("event_id"))
-    }),
-
-    "asof_join" -> ((s, d) =>
-      Temporal.asOfJoin(
-        t(s, d, "events").select(col("event_id"), col("user_id"), col("ts")),
-        "user_id", "ts",
-        t(s, d, "orders"), "o_custkey", "o_orderdate",
-        Seq("o_orderkey", "o_totalprice"))
-        .select(col("event_id"), col("user_id"), ntz(col("ts")).as("ts"),
-          col("o_orderkey").as("last_order_key"),
-          col("o_totalprice").as("last_order_total"))
-        .orderBy(col("event_id"))),
-
-    "asof_tolerance" -> ((s, d) => {
-      // forward as-of with a 48 h tolerance: each view's NEXT
-      // purchase by the same user, if it came within two days —
-      // matches outside the window null out (left-outer semantics)
-      val ev = t(s, d, "events")
-      Temporal.asOfJoinDirected(
-        ev.filter(col("event_type") === "view")
-          .select(col("event_id"), col("user_id"), col("ts")),
-        "user_id", "ts",
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id").as("p_id")),
-        "p_user", "p_ts",
-        Seq("p_id"), forward = true, toleranceSeconds = 48L * 3600)
-        .select(col("event_id"), col("user_id"), ntz(col("ts")).as("ts"),
-          col("p_id").as("next_purchase_id"))
-        .orderBy(col("event_id"))
-    }),
-
-    "gap_fill" -> ((s, d) =>
-      // time-series densification: every hour between a user's first
-      // and last event, absent hours at count 0 — the resample a
-      // rate model needs (a bare groupBy silently skips empty
-      // buckets). Grid = per-key sequence explode (∝ span hours),
-      // joined back on (key, hour); both shuffles key-bounded
-      Temporal.gapFillCounts(t(s, d, "events")
-        .filter(col("user_id") <= 200))
-        .select(col("user_id"), ntz(col("hour")).as("hour"), col("cnt"))
-        .orderBy(col("user_id"), col("hour"))),
-
-    "locf_fill" -> ((s, d) =>
-      // gap-fill with last-observation-carried-forward: hourly mean
-      // value (decimal-exact sum / count), gaps carrying the latest
-      // observed hour forward — the streaming-safe no-look-ahead fill
-      Temporal.locfFill(t(s, d, "events")
-        .filter(col("user_id") <= 200), "user_id", "ts", "value")
-        .select(col("user_id"), ntz(col("hour")).as("hour"), col("v"))
-        .orderBy(col("user_id"), col("hour"))),
-
-    "dup_clusters" -> ((s, d) => {
-      // the 100 TB path demonstrated end-to-end: pairs come from the
-      // LSH-bucketed minhash join (linear + bucket shuffles — no
-      // CartesianProduct anywhere in this plan), clustered by
-      // min-label propagation. The oracle recomputes the same pairs
-      // as exact shingle-set jaccard and clusters via recursive CTE.
-      val docs = t(s, d, "documents")
-      val pairs = Dedup.minhashLsh(docs, threshold = 0.5)
-      Clustering.dupClusters(docs.select(col("doc_id")), "doc_id", pairs)
-        .orderBy(col("doc_id"))
-    }),
-
-    // §2.3 dedup family -------------------------------------------
-    "dedup_exact" -> ((s, d) =>
-      Dedup.exact(t(s, d, "documents")).orderBy(col("keep_id"))),
-
-    "dedup_keep_best" -> ((s, d) =>
-      Dedup.exactKeepBest(t(s, d, "documents"), scoreCol = "n_chars")
-        .orderBy(col("keep_id"))),
-
-    "dedup_minhash_lsh" -> ((s, d) =>
-      Dedup.minhashLsh(t(s, d, "documents"), threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // incremental ingest admission: the corpus is docs < 400, the
-    // arriving batch is docs >= 400 — same LSH parameters as
-    // dedup_minhash_lsh, so the exact-jaccard oracle's pair set is
-    // the already-verified one restricted to (corpus×batch ∪ intra)
-    "dedup_incremental" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.incrementalDedup(
-        docs.filter(col("doc_id") < 400),
-        docs.filter(col("doc_id") >= 400), threshold = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // round-8: oracle-checkable — the declarative token hash (two
-    // modular char-poly residues) replaces xxh64, so DuckDB
-    // recomputes fingerprints, the banded candidate condition AND
-    // the hamming verify bit-for-bit (was rows-only)
-    "dedup_simhash" -> ((s, d) =>
-      Dedup.simhashPairs(t(s, d, "documents"), maxHamming = 10,
-        declarativeHash = true)
-        .select(col("id_a"), col("id_b"),
-          col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "segment_dedup" -> ((s, d) =>
-      Dedup.segmentDupStats(t(s, d, "documents"), k = 8)
-        .orderBy(col("doc_id"))),
-
-    "ngram_jaccard" -> ((s, d) => {
-      // ABSOLUTE stop-gram cap: grams in more than 500 docs carry no
-      // dedup signal no matter how big the corpus is, so the cap
-      // must NOT scale with it — a fractional cap keeps
-      // fraction-stable grams (stop-grams, long-word interiors)
-      // whose df grows ∝ n, and their Σ df² contribution grows ∝ n²
-      // (measured: the 10%-of-corpus cap made the sf0.1→sf1 sweep
-      // exponent 2.0; the absolute cap is the standard web-scale
-      // similarity-join posture and restores ~linear scaling, with
-      // candidate generation bounded by cap·|postings|).
-      Dedup.ngramJaccard(t(s, d, "documents"), threshold = 0.8,
-        maxDf = 500L)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "budget_sample" -> ((s, d) =>
-      // token-budget assembly: "30k chars of en, 10k of de, all the
-      // rest" as one deterministic hash-ordered prefix per stratum;
-      // the oracle runs the equivalent single-window formulation
-      Mixing.tokenBudgetSample(t(s, d, "documents"), "lang", "doc_id",
-        "n_chars", Map("en" -> 30000L, "de" -> 10000L))
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    // round-8: oracle-checkable — SemDeDup under the kmeans_assign
-    // DETERMINISTIC cell model (per-label decimal-mean centroids +
-    // argmax-dot assignment): cells, intra-cell cosine pairs at the
-    // threshold, connected components, and the min-label collapse
-    // are all declaratively recomputable in DuckDB (a composition
-    // of the kmeans_assign + dedup_embedding + dup_clusters oracle
-    // techniques). Lloyd's-TRAINED cells (model-dependent output by
-    // construction) ride the same semanticCollapse code path and
-    // stay covered by DedupSpec's planted-cluster recovery.
-    "semantic_dedup" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val cRows = Similarity.groupCentroids(emb, "label")
-        .select(col("label").cast("int"), col("dim").cast("int"),
-          col("centroid").cast("float")).collect()
-      val labels = cRows.map(_.getInt(0)).distinct.sorted.toSeq
-      val cents: Seq[Seq[Float]] = labels.map(l =>
-        cRows.filter(_.getInt(0) == l).sortBy(_.getInt(1))
-          .map(_.getFloat(2)).toSeq)
-      val idx = graft.plans.IvfExpressions.topCentroids(
-        col("embedding"), cents, 1)(0)
-      val cells = emb.select(col("vec_id"), col("embedding"),
-        element_at(typedLit(labels), idx + 1).as("cell"))
-      Dedup.semanticCollapse(cells, threshold = 0.4)
-        .select(col("vec_id"), col("rep_id"), col("cell"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "dedup_embedding" -> ((s, d) =>
-      // exact cosine join at a LOW threshold (0.4): the fixture's true
-      // pairs sit just above it (min 0.40001) against a background p99
-      // of 0.287, so no LSH banding can reach oracle recall here — the
-      // tiled 1-Bucket-Theta equi-join distributes the irreducible
-      // all-pairs work with no CartesianProduct (plan asserted in
-      // DedupSpec); the sub-quadratic high-threshold path is
-      // Dedup.embeddingNearDupLsh (recall-tested in DedupSpec)
-      // blocks sized to cover the core count with tiles
-      // (b·(b+1)/2 tasks): more blocks only adds replication volume
-      Dedup.embeddingNearDup(t(s, d, "embeddings"), threshold = 0.4,
-        blocks = 8)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "decontaminate" -> ((s, d) => {
-      // benchmark hygiene: doc_id % 10 == 0 plays the eval set, the
-      // rest the training corpus; a train doc sharing any 4-word
-      // shingle with the eval set is dropped.
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      Decontam.decontaminate(train, bench, n = 4)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "contamination_score" -> ((s, d) => {
-      // the audit variant: a full scorecard over the training corpus
-      // (zero-hit docs kept) with an exact integer basis-points
-      // overlap fraction — thresholdable downstream at any level.
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      Decontam.contaminationScore(train, bench, n = 4)
-        .orderBy(col("doc_id"))
-    }),
-
-    "chunk_docs" -> ((s, d) =>
-      // RAG chunking: 240-char windows, 60-char overlap, stable
-      // (doc_id, chunk_id, chunk_start) lineage; map-only plan
-      TextAnalysis.chunkDocs(t(s, d, "documents"), size = 240,
-        overlap = 60)
-        .orderBy(col("doc_id"), col("chunk_id"))),
-
-    "weighted_sample" -> ((s, d) =>
-      // PPS systematic sampling by doc length: expected sample =
-      // total_chars/stride docs, inclusion probability ∝ n_chars,
-      // hash-deterministic; two-phase windows, no global sort
-      Mixing.weightedSystematicSample(t(s, d, "documents"), "doc_id",
-        "n_chars", stride = 5000L)
-        .orderBy(col("doc_id"))),
-
-    "decontaminate_bloom" -> ((s, d) => {
-      // the same overlap through the 100 TB path: a Bloom filter
-      // built over the eval shingles by a distributed aggregate,
-      // attached as a scalar subquery, prefilters the corpus before
-      // the exact semi-join — identical output (no false negatives),
-      // same oracle as the exact path's hit counts.
-      val docs = t(s, d, "documents")
-      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      Decontam.contaminationHitsBloom(train, bench, n = 4,
-        expectedBenchShingles = 100000L)
-        .orderBy(col("doc_id"))
-    }),
-
-    "corpus_curation" -> ((s, d) => {
-      // the whole training-data pipeline end-to-end: quality gate →
-      // exact dedup → minhash near-dup clustering → one
-      // representative per cluster, annotated with language and
-      // token counts. Every stage is an operator verified on its own
-      // above; this entry proves they compose as one plan.
-      // quality gate INLINE (a map-only filter — no join of
-      // qualityScore output back by id), exact dedup as a window over
-      // 16-byte hashed keys (one shuffle, no keep-id rejoin), lang +
-      // token annotations computed inline on the curated base (no
-      // self-joins). The only joins left are the ones that carry new
-      // information: the LSH pair join and the representatives join.
-      val docs = t(s, d, "documents")
-      val kept = docs.filter(
-        TextAnalysis.qualityFilter(col("text"), minWords = 5,
-          maxPunctRatio = 0.25))
-      val wDedup = org.apache.spark.sql.expressions.Window
-        .partitionBy(length(col("text")), xxhash64(col("text")))
-        .orderBy(col("doc_id"))
-      // the curated base is scanned by the minhash pair join (both
-      // sides), cluster vertices and the final annotation pass —
-      // persist once instead of recomputing the gate + dedup window
-      val uniq = kept.withColumn("__rn", row_number().over(wDedup))
-        .filter(col("__rn") === 1).drop("__rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = Dedup.minhashLsh(uniq, threshold = 0.5)
-      val clusters = Clustering.dupClusters(
-        uniq.select(col("doc_id")), "doc_id", pairs)
-      val sizes = clusters.groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n_members"))
-      val reps = clusters.filter(col("is_representative"))
-        .join(sizes, "cluster_id")
-        .select(col("doc_id"), col("n_members"))
-      uniq.select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("lang_guess"),
-          TextAnalysis.bpeTokenCount(col("text")).cast("long")
-            .as("n_bpe_tokens"))
-        .join(reps, "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    // §2.4 similarity search --------------------------------------
-    "ann_bruteforce" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.bruteForceTopK(
-        emb.filter(pmod(col("vec_id"), lit(25)) === 0), emb, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "ann_lsh" -> ((s, d) => {
-      // bits auto-scale with the corpus (constant bucket occupancy):
-      // a fixed plane count makes candidate pairs quadratic when
-      // corpus and query batch both grow with the data — measured
-      // 90 s at sf1 vs 1.5 s at sf0.1 under a pinned bits=4.
-      // Round-11 oracle conversion: the corpus is the PLANTED
-      // exact-regime fixture (sized from the embeddings table, so it
-      // still scales with SF) — every cluster's members share one
-      // bit-pattern vector, so bucket membership is deterministic
-      // under ANY plane seed and the approximate result provably
-      // equals exact brute-force top-k, which DuckDB recomputes
-      // with integer popcount math.
-      // bits auto-size inside lshTopK (one source of truth for the
-      // constant-occupancy rule); its count() runs over the
-      // range-derived fixture frame — no table scan
-      val emb = plantedClusters(s, plantedClusterCount(s, d))
-      Similarity.lshTopK(
-        emb.filter(pmod(col("vec_id"), lit(25)) === 0), emb, k = 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "kmeans_assign" -> ((s, d) => {
-      // the assignment half of Lloyd's under a DETERMINISTIC model:
-      // centroids are the per-label means (groupCentroids' decimal-
-      // summed, bit-reproducible aggregate — its own oracle is
-      // green), and the argmax-dot assignment runs through the same
-      // codegen'd topCentroids kernel k-means training uses, so the
-      // whole entry is declaratively recomputable in DuckDB
-      // (round-7: was rows-only). TRAINING (init + iterations) has
-      // model-dependent output by construction and stays covered by
-      // the planted-cluster recovery spec (SimilaritySpec).
-      val emb = t(s, d, "embeddings")
-      val cRows = Similarity.groupCentroids(emb, "label")
-        .select(col("label").cast("int"), col("dim").cast("int"),
-          col("centroid").cast("float")).collect()
-      val labels = cRows.map(_.getInt(0)).distinct.sorted.toSeq
-      val cents: Seq[Seq[Float]] = labels.map(l =>
-        cRows.filter(_.getInt(0) == l).sortBy(_.getInt(1))
-          .map(_.getFloat(2)).toSeq)
-      val idx = graft.plans.IvfExpressions.topCentroids(
-        col("embedding"), cents, 1)(0)
-      emb.select(col("vec_id"), col("label"),
-          element_at(typedLit(labels), idx + 1).as("assigned_label"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "ann_ivf" -> ((s, d) => {
-      // planted exact regime (see ann_lsh): identical-vector cluster
-      // members share a Voronoi cell under ANY trained centroids and
-      // a query's probe set contains its own cell, so IVF equals
-      // exact top-k by construction — the DuckDB oracle is the plain
-      // exact ranking.
-      val emb = plantedClusters(s, plantedClusterCount(s, d))
-      Similarity.ivfTopK(
-        emb.filter(pmod(col("vec_id"), lit(25)) === 0), emb, k = 3,
-        nlist = 32, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "ann_index" -> ((s, d) => {
-      // persisted-index ANN (build/probe split): the corpus-scale
-      // bucketing pass happens once at BUILD, probes join the stored
-      // cid partitions with the kernel on the query side only (plan
-      // asserted in AnnIndexSpec). On the planted exact-regime
-      // fixture the stored-index probe equals exact top-k for the
-      // same reason the in-memory IVF does (cell cohesion of
-      // identical vectors), so the build/probe composition gets the
-      // same DuckDB oracle.
-      val dir = java.nio.file.Files.createTempDirectory("graft_annidx")
-      val emb = plantedClusters(s, plantedClusterCount(s, d))
-      graft.operators.AnnIndex.buildIvf(emb, s"$dir/ivf", nlist = 32,
-        iters = 3)
-      graft.operators.AnnIndex.ivfProbe(s, s"$dir/ivf",
-        emb.filter(pmod(col("vec_id"), lit(25)) === 0), k = 3, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "embedding_quantize" -> ((s, d) =>
-      Similarity.quantizeInt8Stats(t(s, d, "embeddings"))),
-
-    // §2.5 text analysis ------------------------------------------
-    "stratified_sample" -> ((s, d) =>
-      TextAnalysis.stratifiedSample(t(s, d, "documents"), "lang",
-        Map("de" -> 0.5, "en" -> 0.2), defaultRate = 0.1, idCol = "doc_id")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))),
-
-    // §2.5b dataset assembly --------------------------------------
-    "mixture_sample" -> ((s, d) =>
-      Mixing.mixtureSample(t(s, d, "documents"), "lang", "doc_id",
-        temperature = 0.5, maxRate = 0.8)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
-
-    "dataset_split" -> ((s, d) =>
-      Mixing.datasetSplit(t(s, d, "documents"), "doc_id",
-        Seq("train" -> 900, "val" -> 50, "test" -> 50))
-        .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))),
-
-    "global_shuffle" -> ((s, d) =>
-      Mixing.globalShuffle(
-        t(s, d, "documents").select(col("doc_id"), col("source")),
-        "doc_id", nShards = 8)
-        .select(col("doc_id"), col("source"), col("shard"), col("pos"))
-        .orderBy(col("shard"), col("pos"))),
-
-    "quantile_gate" -> ((s, d) =>
-      Mixing.quantileGate(
-        t(s, d, "documents").select(col("doc_id"), col("lang"),
-          col("n_chars")),
-        "lang", "n_chars", q = 0.5)
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          col("q_cutoff"))
-        .orderBy(col("doc_id"))),
-
-    "lang_id" -> ((s, d) =>
-      TextAnalysis.langIdTable(t(s, d, "documents")).orderBy(col("doc_id"))),
-
-    "tfidf_topk" -> ((s, d) =>
-      TextAnalysis.tfidfTopK(t(s, d, "documents"), k = 3)
-        .orderBy(col("doc_id"), col("rank"))),
-
-    "corpus_stats" -> ((s, d) =>
-      TextAnalysis.corpusStats(t(s, d, "documents"))
-        .orderBy(col("source"))),
-
-    "group_centroids" -> ((s, d) =>
-      Similarity.groupCentroids(t(s, d, "embeddings"), "label")
-        .orderBy(col("label"), col("dim"))),
-
-    "quality_score" -> ((s, d) =>
-      TextAnalysis.qualityScore(t(s, d, "documents")).orderBy(col("doc_id"))),
-
-    "token_count" -> ((s, d) =>
-      TextAnalysis.tokenCounts(t(s, d, "documents")).orderBy(col("doc_id"))),
-
-    // round-8: oracle-checkable — the fingerprint primitives are
-    // declarative modular folds an external engine can recompute
-    // exactly (was rows-only under xxhash64)
-    "doc_fingerprint" -> ((s, d) =>
-      TextAnalysis.fingerprints(t(s, d, "documents")).orderBy(col("doc_id"))),
-
-    "repetition_stats" -> ((s, d) =>
-      TextAnalysis.repetitionStats(t(s, d, "documents"))
-        .orderBy(col("doc_id"))),
-
-    "pii_redact" -> ((s, d) => {
-      // the synthetic tables carry no PII, so the demo input is a
-      // deterministic contact string derived from customer keys
-      // (same construction in the oracle SQL) — what's under test is
-      // the redaction chain, not the synthesis.
-      val contact = concat(col("c_name"),
-        when(pmod(col("c_custkey"), lit(2)) === 0,
-          concat(lit(" user"), col("c_custkey").cast("string"),
-            lit("@mail.example"))).otherwise(lit("")),
-        when(pmod(col("c_custkey"), lit(3)) === 0,
-          concat(lit(" tel "),
-            (pmod(col("c_custkey"), lit(90)) + 10).cast("string"),
-            lit("-555-123-4567"))).otherwise(lit("")),
-        when(pmod(col("c_custkey"), lit(5)) === 0,
-          concat(lit(" ip 10.0."),
-            pmod(col("c_custkey"), lit(256)).cast("string"),
-            lit(".7"))).otherwise(lit("")))
-      val (ne, np, ni) = TextAnalysis.piiCounts(contact)
-      t(s, d, "customer").select(col("c_custkey"),
-          TextAnalysis.redactPii(contact).as("redacted"),
-          ne.cast("long").as("n_emails"),
-          np.cast("long").as("n_phones"),
-          ni.cast("long").as("n_ips"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "seq_packing" -> ((s, d) =>
-      Packing.packDocuments(t(s, d, "documents"), budget = 128)
-        .orderBy(col("doc_id"))),
-
-    // §2.6 multimodal ---------------------------------------------
-    // round-8: oracle-checkable — the stub dims derive from the
-    // declarative char-poly residues instead of xxhash64, so DuckDB
-    // recomputes the whole typed-metadata projection (was rows-only)
-    "mm_schema" -> ((s, d) =>
-      Multimodal.asMediaTable(t(s, d, "documents"))
-        .select(col("media_id"), col("media_type"), col("meta.width"),
-          col("meta.height"), col("meta.n_bytes"), col("meta.format"))
-        .orderBy(col("media_id"))),
-
-    "mm_features" -> ((s, d) => {
-      // scalar projection of the feature vector: array columns crash
-      // the driver's pandas-based oracle sort, and the ×255 byte sums
-      // are exact integers — immune to FP summation-order noise
-      val f = Multimodal.extractFeatures(
-        Multimodal.asMediaTable(t(s, d, "documents")))
-      f.select(col("media_id") +: (0 until 8).map(j =>
-          round(col("features")(j) * 255.0, 0).cast("long").as(s"f$j")): _*)
-        .orderBy(col("media_id"))
-    }),
-
-    "mm_frame_plan" -> ((s, d) =>
-      Multimodal.framePlan(Multimodal.asMediaTable(t(s, d, "documents")))
-        .select(col("media_id"), col("n_frames"))
-        .orderBy(col("media_id"))),
-
-    "mm_resize" -> ((s, d) =>
-      Multimodal.resizeStub(
-        Multimodal.asMediaTable(t(s, d, "documents")), 224, 224)
-        .select(col("media_id"), col("meta.width").as("width"),
-          col("meta.height").as("height"),
-          col("meta.n_bytes").as("n_bytes"))
-        .orderBy(col("media_id"))),
-
-    "mm_dedup" -> ((s, d) =>
-      Multimodal.payloadDedup(Multimodal.asMediaTable(t(s, d, "documents")))),
-
-    "mm_decode" -> ((s, d) =>
-      // REAL codec round trip (round-6): genuine PNGs rendered per
-      // partition with id-derived dimensions, then the dimensions
-      // decoded BACK out of the encoded bytes via javax.imageio
-      // header reads — the oracle recomputes the dims arithmetically,
-      // so a decode that misparses IHDR fails the compare
-      Multimodal.decodeMeta(
-        Multimodal.asPngMediaTable(t(s, d, "documents")))
-        .orderBy(col("media_id"))),
-
-    // §2.5c corpus curation --------------------------------------
-    // The synthetic docs are single-line word bags, so the line-dedup
-    // input is a deterministic multi-line "page" wrapped around each
-    // document — shared nav header (even ids), per-source banner,
-    // unique body, low-frequency ref line, constant footer. Identical
-    // construction in the oracle SQL (pii_redact precedent): what's
-    // under test is the corpus-level dedup + reassembly chain.
-    "line_dedup" -> ((s, d) => {
-      val page = concat_ws("\n",
-        when(pmod(col("doc_id"), lit(2)) === 0,
-          lit("nav home about products")),
-        concat(lit("source: "), col("source")),
-        col("text"),
-        concat(lit("ref-"), pmod(col("doc_id"), lit(100)).cast("string")),
-        lit("(c) example corpus"))
-      Curation.lineDedup(
-        t(s, d, "documents").select(col("doc_id"), page.as("text")),
-        maxFreq = 10)
-        .orderBy(col("doc_id"))
-    }),
-
-    "gopher_rules" -> ((s, d) =>
-      Curation.gopherRules(t(s, d, "documents"),
-        minWords = 30, maxMeanWordLen = 4.6)
-        .orderBy(col("doc_id"))),
-
-    "unigram_score" -> ((s, d) =>
-      TextAnalysis.unigramSurprisal(t(s, d, "documents"))
-        .orderBy(col("doc_id"))),
-
-    "bm25_topk" -> ((s, d) =>
-      TextAnalysis.bm25TopK(t(s, d, "documents"), k = 3)
-        .orderBy(col("doc_id"), col("rank"))),
-
-    "source_cap" -> ((s, d) =>
-      Curation.sourceCap(t(s, d, "documents"), cap = 10)
-        .orderBy(col("source"), col("rank"))),
-
-    "item_cooccur" -> ((s, d) =>
-      Analytics.eventCooccurrence(t(s, d, "events"))
-        .orderBy(col("type_a"), col("type_b"))),
-
-    "zscore_normalize" -> ((s, d) =>
-      Analytics.zscoreNormalize(t(s, d, "orders"), "o_orderpriority",
-        "o_totalprice", Seq("o_orderkey"))
-        .orderBy(col("o_orderkey"))),
-
-    "peak_concurrency" -> ((s, d) =>
-      Analytics.peakConcurrency(t(s, d, "events"))
-        .orderBy(col("event_type"))),
-
-    "event_transitions" -> ((s, d) =>
-      Analytics.eventTransitions(t(s, d, "events"))
-        .orderBy(col("from_type"), col("to_type"))),
-
-    "substring_dedup" -> ((s, d) =>
-      Curation.substringDedup(t(s, d, "documents"), k = 5)
-        .orderBy(col("doc_id"))),
-
-    "link_rank" -> ((s, d) =>
-      Clustering.navigationRank(t(s, d, "events"), iters = 5)
-        .orderBy(col("node"))),
-
-    "classifier_score" -> ((s, d) =>
-      TextAnalysis.classifierScore(t(s, d, "documents"))
-        .orderBy(col("doc_id"))),
-
-    "bpe_pair_counts" -> ((s, d) =>
-      Bpe.pairCounts(t(s, d, "documents"))
-        .orderBy(col("sym_a"), col("sym_b"))),
-
-    // rows-only: iterative argmax has no single-query SQL form
-    "bpe_train" -> ((s, d) =>
-      Bpe.train(t(s, d, "documents"), merges = 6)
-        .orderBy(col("rank"))),
-
-    // round-8: oracle-checkable — encode faithfulness under a FIXED
-    // merge table. With a table obeying training's structural
-    // invariant (a pair naming a merged symbol ranks AFTER the
-    // merge that formed it, and no rule's output recreates its own
-    // inputs), the kernel's lowest-rank-first loop is provably
-    // equal to ONE left-to-right replace pass per rank in rank
-    // order — which DuckDB replays as six string replaces over a
-    // bracketed token encoding. Corpus-TRAINED tables (iterative
-    // argmax) stay covered by bpe_train + BpeSpec parity.
-    "bpe_encode" -> ((s, d) =>
-      Bpe.encode(t(s, d, "documents"),
-        Seq(("t", "h"), ("th", "e"), ("a", "n"),
-          ("an", "d"), ("i", "n"), ("e", "r")))
-        .select(col("doc_id"), col("n_tokens"))
-        .orderBy(col("doc_id"))),
-
-    // DSIR toward a fixed four-source "target domain" — the explicit
-    // IN list avoids lexicographic surprises (src10 < 'src2')
-    "dsir_weight" -> ((s, d) =>
-      TextAnalysis.dsirWeight(t(s, d, "documents"),
-        col("source").isin("src0", "src1", "src2", "src3"))
-        .orderBy(col("doc_id"))),
-
-    // same deterministic URL synthesis on both sides (pii_redact
-    // precedent): scheme/case/www/tracking-param/fragment variants
-    // of a shared (source, slug) page identity — what's under test
-    // is the canonicalization chain and the dup grouping.
-    "url_canonical" -> ((s, d) => {
-      val src = when(pmod(col("doc_id"), lit(2)) === 0,
-        upper(col("source"))).otherwise(col("source"))
-      val url = concat(
-        when(pmod(col("doc_id"), lit(3)) === 0, lit("http://"))
-          .otherwise(lit("https://")),
-        when(pmod(col("doc_id"), lit(2)) === 0, lit("WWW."))
-          .otherwise(lit("")),
-        src, lit(".example.com/docs/"),
-        pmod(col("doc_id"), lit(50)).cast("string"),
-        when(pmod(col("doc_id"), lit(4)) === 0,
-          lit("?utm_source=feed&utm_campaign=x")).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(5)) === 0, lit("#frag"))
-          .otherwise(lit("")))
-      val canon = t(s, d, "documents")
-        .select(col("doc_id"), Curation.canonicalUrl(url).as("url_canon"))
-      canon.withColumn("n_dups",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("url_canon"))))
-        .orderBy(col("doc_id"))
-    }),
-
-    "winsorize" -> ((s, d) =>
-      // (l_orderkey, l_linenumber) is NOT unique in the synthetic
-      // lineitem — total-order over every output column instead
-      Analytics.winsorize(t(s, d, "lineitem"), "l_returnflag",
-        "l_extendedprice", Seq("l_orderkey", "l_linenumber"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("l_returnflag"), col("l_extendedprice"))),
-
-    // snapshot retention on the log table: five commits of growing
-    // slices of `region` (1..5 rows), expire keeping the newest two —
-    // the audit (versions before vs after) plus post-expire
-    // readability is the deterministic output (fixture-backed,
-    // VALUES oracle).
-    "sink_expire" -> ((s, d) => {
-      import s.implicits._
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_expire_$tag")
-      val log = new graft.sources.LogTable(s"$dir/dim")
-      val region = t(s, d, "region")
-      (1 to 5).foreach(n => log.overwrite(region.limit(n)))
-      val before = log.versions
-      log.expireSnapshots(retainLast = 2)
-      val after = log.versions.toSet
-      before.map { v =>
-        if (after(v)) (v, "retained", log.load(s, Some(v)).count())
-        else (v, "expired", -1L)
-      }.toDF("version", "status", "n_rows").orderBy(col("version"))
-    })
-  )
-
-  // ---------------------------------------------------------------
-  // DuckDB oracle SQL — same aliases, same ordering, decimal-stable
-  // aggregation, naive timestamps.
-  // ---------------------------------------------------------------
-  def oracleSql: Map[String, String] = Map(
-    "ingest_metadata" ->
-      """SELECT l_orderkey, l_linenumber,
-         TIMESTAMP '2026-01-01 00:00:00' AS ingest_ts,
-         'parquet:lineitem' AS ingest_source
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-
-    "latest_per_key" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice FROM (
-           SELECT *, row_number() OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders)
-         WHERE rn = 1 ORDER BY o_custkey""",
-
-    "scd2_build" ->
-      """WITH h AS (
-           SELECT user_id, ts, event_id, event_type,
-                  lag(event_type) OVER w AS prev_et,
-                  lag(ts) OVER w AS prev_ts
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         starts AS (
-           SELECT * FROM h
-           WHERE prev_ts IS NULL OR event_type IS DISTINCT FROM prev_et),
-         v AS (
-           SELECT user_id, event_type, ts AS valid_from,
-                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                    AS valid_to
-           FROM starts)
-         SELECT user_id, event_type, valid_from, valid_to,
-                (valid_to IS NULL) AS is_current
-         FROM v ORDER BY user_id, valid_from""",
-
-    "scd2_current" ->
-      """WITH h AS (
-           SELECT user_id, ts, event_id, event_type,
-                  lag(event_type) OVER w AS prev_et,
-                  lag(ts) OVER w AS prev_ts
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         starts AS (
-           SELECT * FROM h
-           WHERE prev_ts IS NULL OR event_type IS DISTINCT FROM prev_et),
-         v AS (
-           SELECT user_id, event_type, ts AS valid_from,
-                  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                    AS valid_to
-           FROM starts)
-         SELECT user_id, event_type, valid_from
-         FROM v WHERE valid_to IS NULL ORDER BY user_id""",
-
-    "scd1_upsert" ->
-      """WITH latest AS (
-           SELECT user_id, event_type, ts, row_number() OVER (
-             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events),
-         base AS (SELECT user_id, event_type, ts FROM (
-           SELECT user_id, event_type, ts, row_number() OVER (
-             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events WHERE ts < TIMESTAMP '2024-01-15') WHERE rn = 1),
-         upd AS (SELECT user_id, event_type, ts FROM (
-           SELECT user_id, event_type, ts, row_number() OVER (
-             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events WHERE ts >= TIMESTAMP '2024-01-15') WHERE rn = 1)
-         SELECT COALESCE(b.user_id, u.user_id) AS user_id,
-                CASE WHEN u.user_id IS NOT NULL THEN u.event_type
-                     ELSE b.event_type END AS event_type,
-                CASE WHEN u.user_id IS NOT NULL THEN u.ts ELSE b.ts END
-                  AS last_ts
-         FROM base b FULL JOIN upd u ON b.user_id = u.user_id
-         ORDER BY user_id""",
-
-    "change_detect" ->
-      """WITH cur AS (SELECT user_id, event_type FROM (
-           SELECT user_id, event_type, row_number() OVER (
-             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events WHERE ts < TIMESTAMP '2024-01-15') WHERE rn = 1),
-         inc AS (SELECT user_id, event_type FROM (
-           SELECT user_id, event_type, row_number() OVER (
-             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events) WHERE rn = 1)
-         SELECT i.user_id AS user_id, i.event_type AS event_type,
-                CASE WHEN c.user_id IS NULL THEN 'new'
-                     WHEN i.event_type IS DISTINCT FROM c.event_type
-                       THEN 'changed'
-                     ELSE 'unchanged' END AS change_type
-         FROM inc i LEFT JOIN cur c ON i.user_id = c.user_id
-         ORDER BY user_id""",
-
-    "string_clean" ->
-      """SELECT c_custkey, trim(c_name) AS c_name,
-                trim(c_mktsegment) AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-
-    "incremental_files" ->
-      """SELECT DISTINCT source AS name FROM documents
-         WHERE source NOT IN ('src0', 'src1') ORDER BY name""",
-
-    "ingest_log" ->
-      """SELECT DISTINCT source AS name FROM documents
-         WHERE source NOT IN ('src0', 'src1') ORDER BY name""",
-
-    "merge_stats" ->
-      """WITH s1 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         s2 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
-           WHERE rn = 1)
-         SELECT
-           COUNT(CASE WHEN s1.o_custkey IS NULL THEN 1 END) AS n_new,
-           COUNT(CASE WHEN s1.o_custkey IS NOT NULL
-             AND (s1.o_orderpriority <> s2.o_orderpriority
-               OR s1.o_totalprice <> s2.o_totalprice) THEN 1 END)
-             AS n_changed,
-           COUNT(CASE WHEN s1.o_custkey IS NOT NULL
-             AND s1.o_orderpriority = s2.o_orderpriority
-             AND s1.o_totalprice = s2.o_totalprice THEN 1 END)
-             AS n_unchanged
-         FROM s2 LEFT JOIN s1 ON s1.o_custkey = s2.o_custkey""",
-
-    "dim_sink_versions" ->
-      """SELECT o_custkey, o_orderpriority, o_totalprice,
-                TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
-                TRUE AS is_current
-         FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-           FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
-         WHERE rn = 1 ORDER BY o_custkey""",
-
-    "budget_sample" ->
-      """WITH sel AS (
-           SELECT doc_id, lang, n_chars,
-             ((doc_id % 1000003) * 2654435761) % 1000 AS m,
-             ((doc_id % 999983) * 2246822519) % 1000 AS m2
-           FROM documents),
-         c AS (
-           SELECT *, SUM(n_chars) OVER (PARTITION BY lang
-               ORDER BY m, m2, doc_id ROWS UNBOUNDED PRECEDING) AS cum
-           FROM sel)
-         SELECT doc_id, lang, n_chars FROM c
-         WHERE cum <= CASE lang WHEN 'en' THEN 30000
-                                WHEN 'de' THEN 10000
-                                ELSE 9223372036854775807 END
-         ORDER BY doc_id""",
-
-    "quarantine" ->
-      """WITH b AS (
-           SELECT o_orderkey, o_custkey,
-             CASE WHEN o_orderkey % 89 = 0 THEN NULL
-                  ELSE o_orderstatus END AS o_orderstatus
-           FROM orders
-           UNION ALL
-           SELECT o_orderkey, o_custkey,
-             CASE WHEN o_orderkey % 89 = 0 THEN NULL
-                  ELSE o_orderstatus END
-           FROM orders WHERE o_orderkey % 97 = 0),
-         c AS (SELECT o_orderkey AS dk, count(*) AS n
-               FROM b GROUP BY 1)
-         SELECT b.o_orderkey, b.o_custkey, b.o_orderstatus,
-           CASE WHEN b.o_orderstatus IS NULL THEN 'null_field'
-                WHEN c.n > 1 THEN 'dup_key'
-                ELSE 'ok' END AS _violation
-         FROM b JOIN c ON b.o_orderkey = c.dk
-         ORDER BY o_orderkey, _violation""",
-
-    "dim_changes" ->
-      """WITH s1 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         s2 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         j AS (
-           SELECT COALESCE(s1.o_custkey, s2.o_custkey) AS k,
-             s1.o_custkey IS NOT NULL AS in1,
-             s2.o_custkey IS NOT NULL AS in2,
-             s1.o_orderpriority AS p1, s1.o_totalprice AS t1,
-             s2.o_orderpriority AS p2, s2.o_totalprice AS t2
-           FROM s1 FULL JOIN s2 ON s1.o_custkey = s2.o_custkey),
-         changed AS (
-           SELECT * FROM j WHERE in1 AND in2 AND (p1 <> p2 OR t1 <> t2))
-         SELECT k AS o_custkey, p1 AS o_orderpriority,
-           t1 AS o_totalprice,
-           TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
-           CAST(NULL AS TIMESTAMP) AS valid_to,
-           TRUE AS is_current, 'update_preimage' AS _change_type
-         FROM changed
-         UNION ALL
-         SELECT k, p1, t1, TIMESTAMP '2026-01-01 00:00:00',
-           TIMESTAMP '2026-01-02 00:00:00', FALSE, 'update_postimage'
-         FROM changed
-         UNION ALL
-         SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
-           CAST(NULL AS TIMESTAMP), TRUE, 'insert'
-         FROM changed
-         UNION ALL
-         SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
-           CAST(NULL AS TIMESTAMP), TRUE, 'insert'
-         FROM j WHERE NOT in1
-         ORDER BY o_custkey, valid_from, _change_type""",
-
-    "sql_merge" ->
-      """WITH tgt AS (
-           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
-           FROM customer WHERE c_custkey <= 300),
-         upd AS (
-           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
-           WHERE o_custkey > 200 AND o_custkey <= 400 GROUP BY 1)
-         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
-                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
-                       THEN 'active'
-                     WHEN t.k IS NULL THEN 'new'
-                     ELSE t.status END AS status,
-                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
-                     ELSE t.n END AS BIGINT) AS n
-         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
-         WHERE NOT (t.k IS NOT NULL AND u.k IS NOT NULL
-                    AND u.n_orders > 10)
-         ORDER BY k""",
-
-    "sql_merge_catalog" ->
-      """WITH tgt AS (
-           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
-           FROM customer WHERE c_custkey <= 250),
-         upd AS (
-           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
-           WHERE o_custkey > 150 AND o_custkey <= 350 GROUP BY 1)
-         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
-                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
-                       THEN 'active'
-                     WHEN t.k IS NULL THEN 'new'
-                     ELSE t.status END AS status,
-                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
-                     ELSE t.n END AS BIGINT) AS n
-         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
-         WHERE NOT (t.k IS NOT NULL AND u.k IS NULL AND t.k <= 20)
-         ORDER BY k""",
-
-    "sql_merge_mor" ->
-      """WITH tgt AS (
-           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
-           FROM customer WHERE c_custkey <= 280),
-         upd AS (
-           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
-           WHERE o_custkey > 180 AND o_custkey <= 380 GROUP BY 1)
-         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
-                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
-                       THEN 'active'
-                     WHEN t.k IS NULL THEN 'new'
-                     ELSE t.status END AS status,
-                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
-                     ELSE t.n END AS BIGINT) AS n
-         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
-         WHERE NOT (t.k IS NOT NULL AND u.k IS NOT NULL
-                    AND u.n_orders > 12)
-         ORDER BY k""",
-
-    "sink_time_travel" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, UPPER(c_name) AS name
-         FROM customer WHERE c_custkey <= 200
-         ORDER BY k""",
-
-    "catalog_time_travel" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, UPPER(c_name) AS name
-         FROM customer WHERE c_custkey <= 200
-         ORDER BY k""",
-
-    "log_table_dml" ->
-      """SELECT k, status, bal FROM (
-           SELECT CAST(c_custkey AS BIGINT) AS k, 'init' AS status,
-                  c_acctbal AS bal
-           FROM customer WHERE c_custkey <= 200
-           UNION ALL
-           SELECT CAST(c_custkey AS BIGINT) AS k, 'late' AS status,
-                  c_acctbal AS bal
-           FROM customer WHERE c_custkey > 200 AND c_custkey <= 350)
-         WHERE NOT (k > 150 AND k <= 250)
-         ORDER BY k""",
-
-    "log_table_partitioned" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_mktsegment AS seg,
-                c_acctbal AS bal
-         FROM customer
-         WHERE c_custkey <= 400
-           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 200)
-           AND c_mktsegment <> 'MACHINERY'
-         ORDER BY k""",
-
-    "log_table_sql_dml" ->
-      """SELECT k, status, bal FROM (
-           SELECT CAST(c_custkey AS BIGINT) AS k,
-                  CASE WHEN c_custkey > 200 THEN 'merged'
-                       WHEN c_acctbal < 0 THEN 'zeroed'
-                       ELSE 'init' END AS status,
-                  CASE WHEN c_acctbal < 0 THEN 0.0
-                       ELSE c_acctbal END AS bal
-           FROM customer WHERE c_custkey <= 300
-           UNION ALL
-           SELECT CAST(c_custkey AS BIGINT) AS k, 'new' AS status,
-                  c_acctbal AS bal
-           FROM customer WHERE c_custkey > 300 AND c_custkey <= 400)
-         ORDER BY k""",
-
-    "log_table_update" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k,
-                CASE WHEN c_acctbal < 0 THEN 0.0 ELSE c_acctbal END AS bal
-         FROM customer WHERE c_custkey <= 300
-         ORDER BY k""",
-
-    "log_table_bloom" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 300 AND c_custkey % 50 <> 0
-         ORDER BY k""",
-
-    "log_table_procedures" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal
-         FROM customer WHERE c_custkey <= 300
-         ORDER BY k""",
-
-    "log_table_clone" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal
-         FROM customer WHERE c_custkey <= 250
-         ORDER BY k""",
-
-    "log_table_rename" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_mktsegment AS segment
-         FROM customer
-         WHERE c_custkey <= 300 AND c_mktsegment <> 'BUILDING'
-         ORDER BY k""",
-
-    "log_table_generated" ->
-      """SELECT event_id, user_id, ts,
-                CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date
-         FROM events
-         WHERE user_id <= 100
-           AND NOT ts < TIMESTAMP '2024-01-05 00:00:00'
-         ORDER BY event_id""",
-
-    "log_table_constraints" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal
-         FROM customer
-         WHERE c_custkey <= 300 AND c_acctbal >= 0
-         ORDER BY k""",
-
-    "log_table_identity" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-                CAST(count(*) AS BIGINT) AS n_ids,
-                CAST(1 AS BIGINT) AS aligned,
-                CAST(1 AS BIGINT) AS batches_ordered,
-                CAST(1 AS BIGINT) AS merged_above,
-                CAST(sum(CASE WHEN c_custkey <= 150 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_default,
-                CAST(sum(CASE WHEN c_custkey > 150 AND c_custkey <= 250
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_old,
-                CAST(sum(CASE WHEN c_custkey > 250 AND c_custkey <= 300
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_upd,
-                CAST(sum(CASE WHEN c_custkey > 300 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_merged
-         FROM customer WHERE c_custkey <= 400""",
-
-    "log_table_dv" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k,
-                CASE WHEN c_acctbal < 0 THEN 0.0 ELSE c_acctbal END AS bal
-         FROM customer
-         WHERE c_custkey <= 300
-           AND NOT (c_custkey > 100 AND c_custkey <= 150)
-         ORDER BY k""",
-
-    "log_table_time_travel" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
-         FROM customer WHERE c_custkey <= 200
-         ORDER BY k""",
-
-    "log_table_changes" ->
-      """SELECT k, name, change_type, commit_version FROM (
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  'insert' AS change_type, CAST(0 AS BIGINT) AS commit_version
-           FROM customer WHERE c_custkey <= 150
-           UNION ALL
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  'insert' AS change_type, CAST(1 AS BIGINT) AS commit_version
-           FROM customer WHERE c_custkey > 150 AND c_custkey <= 250
-           UNION ALL
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  'delete' AS change_type, CAST(2 AS BIGINT) AS commit_version
-           FROM customer WHERE c_custkey > 100 AND c_custkey <= 200)
-         ORDER BY commit_version, change_type, k""",
-
-    "log_table_changes_sql" ->
-      """SELECT k, name, change_type, commit_version FROM (
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  'insert' AS change_type, CAST(1 AS BIGINT) AS commit_version
-           FROM customer WHERE c_custkey > 150 AND c_custkey <= 250
-           UNION ALL
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  'delete' AS change_type, CAST(2 AS BIGINT) AS commit_version
-           FROM customer WHERE c_custkey > 100 AND c_custkey <= 200)
-         ORDER BY commit_version, change_type, k""",
-
-    "sql_merge_log" ->
-      """WITH tgt AS (
-           SELECT c_custkey AS k, 'init' AS status, CAST(0 AS BIGINT) AS n
-           FROM customer WHERE c_custkey <= 250),
-         upd AS (
-           SELECT o_custkey AS k, COUNT(*) AS n_orders FROM orders
-           WHERE o_custkey > 150 AND o_custkey <= 350 GROUP BY 1)
-         SELECT CAST(COALESCE(t.k, u.k) AS BIGINT) AS k,
-                CASE WHEN t.k IS NOT NULL AND u.k IS NOT NULL
-                       THEN 'active'
-                     WHEN t.k IS NULL THEN 'new'
-                     ELSE t.status END AS status,
-                CAST(CASE WHEN u.k IS NOT NULL THEN u.n_orders
-                     ELSE t.n END AS BIGINT) AS n
-         FROM tgt t FULL OUTER JOIN upd u ON t.k = u.k
-         WHERE NOT (t.k IS NOT NULL AND u.k IS NOT NULL
-                    AND u.n_orders > 14)
-         ORDER BY k""",
-
-    "log_table_evolution" ->
-      """SELECT k, name, bal FROM (
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  CAST(NULL AS DOUBLE) AS bal
-           FROM customer WHERE c_custkey <= 150
-           UNION ALL
-           SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-                  c_acctbal AS bal
-           FROM customer WHERE c_custkey > 150 AND c_custkey <= 300)
-         ORDER BY k""",
-
-    "log_table_cluster" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
-         FROM customer WHERE c_custkey <= 400
-         ORDER BY k""",
-
-    "log_table_restore" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name
-         FROM customer WHERE c_custkey <= 200
-         ORDER BY k""",
-
-    "log_table_history" ->
-      """SELECT * FROM (VALUES
-           (CAST(0 AS BIGINT), CAST(1000 AS BIGINT), 'append',
-            CAST(1 AS BIGINT), CAST(0 AS BIGINT)),
-           (CAST(1 AS BIGINT), CAST(2000 AS BIGINT), 'append',
-            CAST(1 AS BIGINT), CAST(0 AS BIGINT)),
-           (CAST(2 AS BIGINT), CAST(3000 AS BIGINT), 'delete',
-            CAST(1 AS BIGINT), CAST(1 AS BIGINT)))
-         AS t(version, commit_ts, op, n_added, n_removed)
-         ORDER BY version""",
-
-    "pipeline_e2e" ->
-      """WITH s1 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         s2 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         j AS (
-           SELECT COALESCE(s1.o_custkey, s2.o_custkey) AS k,
-             s1.o_custkey IS NOT NULL AS in1,
-             s2.o_custkey IS NOT NULL AS in2,
-             s1.o_orderpriority AS p1, s1.o_totalprice AS t1,
-             s2.o_orderpriority AS p2, s2.o_totalprice AS t2
-           FROM s1 FULL JOIN s2 ON s1.o_custkey = s2.o_custkey)
-         SELECT k AS o_custkey, o_orderpriority, o_totalprice,
-                valid_from, valid_to, is_current FROM (
-           SELECT k, p1 AS o_orderpriority, t1 AS o_totalprice,
-             TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
-             CAST(NULL AS TIMESTAMP) AS valid_to, TRUE AS is_current
-           FROM j WHERE in1 AND (NOT in2 OR (p1 = p2 AND t1 = t2))
-           UNION ALL
-           SELECT k, p1, t1, TIMESTAMP '2026-01-01 00:00:00',
-             TIMESTAMP '2026-01-02 00:00:00', FALSE
-           FROM j WHERE in1 AND in2 AND (p1 <> p2 OR t1 <> t2)
-           UNION ALL
-           SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
-             CAST(NULL AS TIMESTAMP), TRUE
-           FROM j WHERE in2 AND (NOT in1 OR p1 <> p2 OR t1 <> t2))
-         ORDER BY o_custkey, valid_from""",
-
-    // identical post-merge state expected whether increments run on
-    // in-memory frames (pipeline_e2e) or through a LogTable
-    "dim_sink_e2e" ->
-      """WITH s1 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         s2 AS (
-           SELECT o_custkey, o_orderpriority, o_totalprice FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-             FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01')
-           WHERE rn = 1),
-         j AS (
-           SELECT COALESCE(s1.o_custkey, s2.o_custkey) AS k,
-             s1.o_custkey IS NOT NULL AS in1,
-             s2.o_custkey IS NOT NULL AS in2,
-             s1.o_orderpriority AS p1, s1.o_totalprice AS t1,
-             s2.o_orderpriority AS p2, s2.o_totalprice AS t2
-           FROM s1 FULL JOIN s2 ON s1.o_custkey = s2.o_custkey)
-         SELECT k AS o_custkey, o_orderpriority, o_totalprice,
-                valid_from, valid_to, is_current FROM (
-           SELECT k, p1 AS o_orderpriority, t1 AS o_totalprice,
-             TIMESTAMP '2026-01-01 00:00:00' AS valid_from,
-             CAST(NULL AS TIMESTAMP) AS valid_to, TRUE AS is_current
-           FROM j WHERE in1 AND (NOT in2 OR (p1 = p2 AND t1 = t2))
-           UNION ALL
-           SELECT k, p1, t1, TIMESTAMP '2026-01-01 00:00:00',
-             TIMESTAMP '2026-01-02 00:00:00', FALSE
-           FROM j WHERE in1 AND in2 AND (p1 <> p2 OR t1 <> t2)
-           UNION ALL
-           SELECT k, p2, t2, TIMESTAMP '2026-01-02 00:00:00',
-             CAST(NULL AS TIMESTAMP), TRUE
-           FROM j WHERE in2 AND (NOT in1 OR p1 <> p2 OR t1 <> t2))
-         ORDER BY o_custkey, valid_from""",
-
-    "skew_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_items,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
-           AS total_price
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "skew_join_adaptive" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_items,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
-           AS total_price
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "skew_distinct" ->
-      """SELECT l_orderkey, COUNT(DISTINCT l_suppkey) AS n_distinct
-         FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""",
-
-    "bucketed_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_items,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
-           AS total_price
-         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "partitioned_scan" ->
-      """SELECT user_id, COUNT(*) AS n_events,
-         CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total_value
-         FROM events WHERE event_type = 'purchase'
-         GROUP BY user_id ORDER BY user_id""",
-
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
+    Query("q1_pricing", (s, d) => Analytics.q1Pricing(t(s, d, "lineitem")),
+      Some("""SELECT l_returnflag, l_linestatus,
          CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sum_qty,
          CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
            AS sum_base_price,
@@ -3707,10 +2670,14 @@ object SparkEntry {
          COUNT(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
          GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
+         ORDER BY l_returnflag, l_linestatus""")),
 
-    "q3_shipping" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+    Query("q3_shipping", (s, d) =>
+      Analytics.q3Shipping(t(s, d, "customer"), t(s, d, "orders"),
+        t(s, d, "lineitem"))
+        .select(col("l_orderkey"), ntz(col("o_orderdate")).as("o_orderdate"),
+          col("o_orderpriority"), col("revenue")),
+      Some("""SELECT l_orderkey, o_orderdate, o_orderpriority,
          CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
            AS DECIMAL(28,4))) AS DOUBLE) AS revenue
          FROM customer JOIN orders ON c_custkey = o_custkey
@@ -3719,10 +2686,13 @@ object SparkEntry {
            AND o_orderdate < TIMESTAMP '1998-03-15'
            AND l_shipdate > TIMESTAMP '1995-03-15'
          GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
+         ORDER BY revenue DESC, l_orderkey LIMIT 10""")),
 
-    "q5_local_volume" ->
-      """SELECT n_name,
+    Query("q5_local_volume", (s, d) =>
+      Analytics.q5LocalVolume(t(s, d, "region"), t(s, d, "nation"),
+        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "orders"),
+        t(s, d, "lineitem")),
+      Some("""SELECT n_name,
          CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
            AS DECIMAL(28,4))) AS DOUBLE) AS revenue
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -3734,102 +2704,19 @@ object SparkEntry {
          WHERE r_name = 'ASIA'
            AND o_orderdate >= TIMESTAMP '1996-01-01'
            AND o_orderdate < TIMESTAMP '1998-01-01'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
+         GROUP BY n_name ORDER BY revenue DESC, n_name""")),
 
-    "topk_per_group" ->
-      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-                  row_number() OVER (PARTITION BY o_custkey
-                    ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-           FROM orders)
-         WHERE rn <= 3 ORDER BY o_custkey, rn""",
-
-    "rollup_agg" ->
-      """SELECT r_name, n_name,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
-           AS total_price,
-         COUNT(*) AS n_orders
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY ROLLUP(r_name, n_name)
-         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""",
-
-    "anti_semi_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o
-           WHERE o.o_custkey = c.c_custkey
-             AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-         ORDER BY c_custkey""",
-
-    "semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o
-           WHERE o.o_custkey = c.c_custkey
-             AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-         ORDER BY c_custkey""",
-
-    "windowed_events" ->
-      """SELECT date_trunc('hour', ts) AS win_start, event_type,
-         COUNT(*) AS n_events,
-         CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY win_start, event_type
-         ORDER BY win_start, event_type""",
-
-    "rate_spikes" ->
-      """WITH h AS (
-           SELECT event_type, date_trunc('hour', ts) AS hour,
-             count(*) AS n
-           FROM events GROUP BY 1, 2),
-         t AS (SELECT event_type, sum(n) AS tot, count(*) AS hours
-               FROM h GROUP BY 1)
-         SELECT h.event_type, h.hour, h.n,
-           h.n * t.hours > 2 * t.tot AS spike
-         FROM h JOIN t USING (event_type)
-         ORDER BY event_type, hour""",
-
-    "dq_profile" ->
-      """SELECT 'c_custkey' AS col_name, count(*) AS n_rows,
-           count(*) - count(c_custkey) AS n_nulls,
-           count(DISTINCT c_custkey) AS n_distinct FROM customer
-         UNION ALL
-         SELECT 'c_name', count(*), count(*) - count(c_name),
-           count(DISTINCT c_name) FROM customer
-         UNION ALL
-         SELECT 'c_nationkey', count(*), count(*) - count(c_nationkey),
-           count(DISTINCT c_nationkey) FROM customer
-         UNION ALL
-         SELECT 'c_acctbal', count(*), count(*) - count(c_acctbal),
-           count(DISTINCT c_acctbal) FROM customer
-         ORDER BY col_name""",
-
-    "sessionize" ->
-      """WITH g AS (
-           SELECT user_id, ts, event_id,
-                  CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                            > 1800000000 THEN 1 ELSE 0 END AS new_session
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (
-           SELECT user_id, ts,
-                  CAST(SUM(new_session) OVER (PARTITION BY user_id
-                    ORDER BY ts, event_id
-                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-           FROM g)
-         SELECT user_id, session_seq, COUNT(*) AS n_events,
-                MIN(ts) AS session_start, MAX(ts) AS session_end
-         FROM s GROUP BY user_id, session_seq
-         ORDER BY user_id, session_seq""",
-
-    "cube_agg" ->
-      """SELECT lang, source, COUNT(*) AS n_docs,
+    Query("cube_agg", (s, d) => Analytics.cubeAgg(t(s, d, "documents")),
+      Some("""SELECT lang, source, COUNT(*) AS n_docs,
          CAST(SUM(n_chars) AS BIGINT) AS total_chars,
          CAST(GROUPING(lang) * 2 + GROUPING(source) AS BIGINT) AS gid
          FROM documents GROUP BY CUBE(lang, source)
-         ORDER BY gid, lang NULLS FIRST, source NULLS FIRST""",
+         ORDER BY gid, lang NULLS FIRST, source NULLS FIRST""")),
 
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
+    Query("q10_returned_items", (s, d) =>
+      Analytics.q10ReturnedItems(t(s, d, "customer"), t(s, d, "orders"),
+        t(s, d, "lineitem"), t(s, d, "nation")),
+      Some("""SELECT c_custkey, c_name, c_acctbal, n_name,
          CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
            AS DECIMAL(28,4))) AS DOUBLE) AS revenue
          FROM customer
@@ -3840,10 +2727,13 @@ object SparkEntry {
            AND o_orderdate < TIMESTAMP '1996-04-01'
            AND l_returnflag = 'R'
          GROUP BY c_custkey, c_name, c_acctbal, n_name
-         ORDER BY revenue DESC, c_custkey LIMIT 20""",
+         ORDER BY revenue DESC, c_custkey LIMIT 20""")),
 
-    "q18_large_orders" ->
-      """WITH big AS (
+    Query("q18_large_orders", (s, d) =>
+      Analytics.q18LargeOrders(t(s, d, "customer"), t(s, d, "orders"),
+        t(s, d, "lineitem"))
+        .withColumn("o_orderdate", ntz(col("o_orderdate"))),
+      Some("""WITH big AS (
            SELECT l_orderkey,
              CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE)
                AS sum_qty
@@ -3854,654 +2744,19 @@ object SparkEntry {
          FROM orders
          JOIN big ON o_orderkey = l_orderkey
          JOIN customer ON c_custkey = o_custkey
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""")),
 
-    "q2_min_cost" ->
-      """WITH minp AS (
-           SELECT l_partkey AS mp_partkey, MIN(l_extendedprice) AS min_price
-           FROM lineitem GROUP BY 1),
-         best AS (
-           SELECT l.l_partkey, m.min_price, MIN(l.l_suppkey) AS s_suppkey
-           FROM lineitem l JOIN minp m ON l.l_partkey = m.mp_partkey
-             AND l.l_extendedprice = m.min_price
-           GROUP BY 1, 2)
-         SELECT p.p_partkey, p.p_name, b.min_price, b.s_suppkey, s.s_name
-         FROM best b
-         JOIN part p ON b.l_partkey = p.p_partkey
-         JOIN supplier s ON b.s_suppkey = s.s_suppkey
-         ORDER BY p.p_partkey""",
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-         FROM orders o
-         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-           AND o.o_orderdate < TIMESTAMP '1996-04-01'
-           AND EXISTS (SELECT 1 FROM lineitem l
-             WHERE l.l_orderkey = o.o_orderkey
-               AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q11_revenue_share" ->
-      """WITH per_supp AS (
-           SELECT l_suppkey,
-             CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-               AS DECIMAL(28,4))) AS DOUBLE) AS revenue
-           FROM lineitem GROUP BY 1),
-         tot AS (
-           SELECT CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-             AS DECIMAL(28,4))) AS DOUBLE) AS total_rev
-           FROM lineitem)
-         SELECT s.s_suppkey, s.s_name, p.revenue
-         FROM per_supp p, tot, supplier s
-         WHERE p.revenue > tot.total_rev * 0.002
-           AND p.l_suppkey = s.s_suppkey
-         ORDER BY p.revenue DESC, s.s_suppkey""",
-
-    "q17_small_quantity" ->
-      """WITH li AS (
-           SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
-           FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-           WHERE p.p_brand = 'Brand#23'),
-         lim AS (
-           SELECT l_partkey AS lp_partkey,
-                  SUM(l_quantity) / COUNT(*) * 0.2 AS qty_limit
-           FROM li GROUP BY 1)
-         SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4)))
-                  AS DOUBLE) / 7.0 AS avg_yearly
-         FROM li JOIN lim ON li.l_partkey = lim.lp_partkey
-         WHERE li.l_quantity < lim.qty_limit""",
-
-    "q21_late_suppliers" ->
-      """WITH per_order AS (
-           SELECT l.l_orderkey,
-                  COUNT(DISTINCT l.l_suppkey) AS n_supp,
-                  COUNT(DISTINCT CASE WHEN l.l_shipdate >
-                    o.o_orderdate + INTERVAL 60 DAY
-                    THEN l.l_suppkey END) AS n_late,
-                  MIN(CASE WHEN l.l_shipdate >
-                    o.o_orderdate + INTERVAL 60 DAY
-                    THEN l.l_suppkey END) AS late_supp
-           FROM lineitem l
-           JOIN orders o ON l.l_orderkey = o.o_orderkey
-             AND o.o_orderstatus = 'F'
-           GROUP BY 1)
-         SELECT s.s_suppkey, s.s_name, COUNT(*) AS numwait
-         FROM per_order p JOIN supplier s ON p.late_supp = s.s_suppkey
-         WHERE p.n_supp > 1 AND p.n_late = 1
-         GROUP BY 1, 2
-         ORDER BY numwait DESC, s.s_suppkey LIMIT 10""",
-
-    "q22_idle_customers" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_cust,
-         CAST(SUM(CAST(c_acctbal AS DECIMAL(28,4))) AS DOUBLE)
-           AS total_bal
-         FROM customer c
-         WHERE c.c_acctbal > (
-             SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(28,4)))
-               AS DOUBLE) / COUNT(*)
-             FROM customer WHERE c_acctbal > 0)
-           AND NOT EXISTS (SELECT 1 FROM orders o
-             WHERE o.o_custkey = c.c_custkey)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q12_ship_priority" ->
-      """SELECT l_returnflag,
-           COUNT(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-             THEN 1 END) AS high_line_count,
-           COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-             THEN 1 END) AS low_line_count
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-           AND l_shipdate < TIMESTAMP '1997-01-01'
-         GROUP BY 1 ORDER BY 1""",
-
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_type, p_size,
-           COUNT(DISTINCT l_suppkey) AS supplier_cnt
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE p_brand <> 'Brand#13' AND p_type <> 'MEDIUM'
-           AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-           AND l_suppkey NOT IN
-             (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-         GROUP BY 1, 2, 3
-         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-
-    "q20_excess_suppliers" ->
-      """WITH shipped AS (
-           SELECT l_partkey, l_suppkey,
-                  SUM(CAST(l_quantity AS DECIMAL(28,4))) AS qty
-           FROM lineitem JOIN part ON l_partkey = p_partkey
-           WHERE p_name LIKE 'red %'
-             AND l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1997-01-01'
-           GROUP BY 1, 2),
-         dominant AS (
-           SELECT DISTINCT l_suppkey FROM (
-             SELECT l_suppkey, qty,
-                    SUM(qty) OVER (PARTITION BY l_partkey) AS total
-             FROM shipped)
-           WHERE qty * 2 > total)
-         SELECT s_suppkey, s_name, n_name
-         FROM dominant
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         ORDER BY s_suppkey""",
-
-    "moving_window" ->
-      """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-         COUNT(*) OVER w AS n_trailing,
-         CAST(SUM(CAST(value AS DECIMAL(28,6))) OVER w AS DOUBLE)
-           AS sum_trailing
-         FROM events
-         WINDOW w AS (PARTITION BY user_id
-           ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, event_id""",
-
-    "ntile_bands" ->
-      """SELECT o_orderpriority, band, COUNT(*) AS n_orders,
-         MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
-         FROM (SELECT o_orderpriority, o_totalprice,
-                 CAST(ntile(10) OVER (PARTITION BY o_orderpriority
-                   ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS band
-               FROM orders)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "grouping_sets" ->
-      """SELECT o_orderpriority, o_orderstatus,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
-             AS total_price,
-           CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus)
-             AS BIGINT) AS gid
-         FROM orders
-         GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-           (o_orderpriority), ())
-         ORDER BY gid, o_orderpriority NULLS FIRST,
-           o_orderstatus NULLS FIRST""",
-
-    "json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-           CAST(MIN(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS min_k,
-           CAST(MAX(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS max_k
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "retention_cohorts" ->
-      """WITH cohorts AS (
-           SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-           FROM events GROUP BY 1),
-         active AS (
-           SELECT DISTINCT user_id, date_trunc('week', ts) AS act_week
-           FROM events)
-         SELECT c.cohort_week, a.act_week, COUNT(*) AS n_users
-         FROM active a JOIN cohorts c ON a.user_id = c.user_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "funnel_steps" ->
-      """WITH l1 AS (
-           SELECT user_id, MIN(ts) AS t1 FROM events
-           WHERE event_type = 'view' GROUP BY 1),
-         l2 AS (
-           SELECT e.user_id, MIN(e.ts) AS t2
-           FROM events e JOIN l1 ON e.user_id = l1.user_id
-           WHERE e.event_type = 'click' AND e.ts > l1.t1 GROUP BY 1),
-         l3 AS (
-           SELECT e.user_id, MIN(e.ts) AS t3
-           FROM events e JOIN l2 ON e.user_id = l2.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > l2.t2 GROUP BY 1),
-         d AS (
-           SELECT l1.user_id,
-                  CASE WHEN l3.user_id IS NOT NULL THEN 3
-                       WHEN l2.user_id IS NOT NULL THEN 2
-                       ELSE 1 END AS depth
-           FROM l1
-           LEFT JOIN l2 ON l1.user_id = l2.user_id
-           LEFT JOIN l3 ON l1.user_id = l3.user_id)
-         SELECT CAST(depth AS BIGINT) AS depth, COUNT(*) AS n_users
-         FROM d GROUP BY 1 ORDER BY 1""",
-
-    "unpivot_long" ->
-      """SELECT user_id, event_type, COUNT(*) AS n
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "moment_stats" ->
-      """WITH s AS (
-           SELECT l_returnflag, COUNT(*) AS n,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6)))
-               AS DOUBLE) AS sx2,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
-               AS sy,
-             CAST(SUM(CAST(l_extendedprice * l_extendedprice
-               AS DECIMAL(38,6))) AS DOUBLE) AS sy2,
-             CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6)))
-               AS DOUBLE) AS sxy
-           FROM lineitem GROUP BY 1)
-         SELECT l_returnflag, n,
-           round(sy / CAST(n AS DOUBLE), 6) AS mean_price,
-           round(sqrt((CAST(n AS DOUBLE) * sy2 - sy * sy)
-             / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1))), 6)
-             AS stddev_price,
-           round((CAST(n AS DOUBLE) * sxy - sx * sy)
-             / (sqrt(CAST(n AS DOUBLE) * sx2 - sx * sx)
-               * sqrt(CAST(n AS DOUBLE) * sy2 - sy * sy)), 6)
-             AS corr_qty_price
-         FROM s ORDER BY l_returnflag""",
-
-    "agg_maintain" ->
-      """SELECT o_custkey, COUNT(*) AS n_rows,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
-           AS total
-         FROM orders GROUP BY o_custkey ORDER BY o_custkey""",
-
-    // simhash replay: per-token 62-bit declarative hash (h1·M2+h2
-    // over the two char-poly residues), ±1 votes per bit position,
-    // sign → fingerprint; pair set = shares one of four 16-bit
-    // chunks (the banded candidate condition — part of the operator
-    // CONTRACT, same as the engine) AND hamming ≤ 10
-    "dedup_simhash" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  string_split_regex(trim(lower(text)), '\s+') AS ts
-           FROM documents),
-         hr AS (
-           SELECT doc_id,
-             list_transform(ts, t ->
-               list_reduce(list_prepend(CAST(1000000007 AS BIGINT),
-                 list_transform(
-                   list_filter(string_split_regex(t, ''), c -> c <> ''),
-                   c -> CAST(unicode(c) AS BIGINT))),
-                 (x, y) -> (x * 31 + y) % 2147483647)) AS h1s,
-             list_transform(ts, t ->
-               list_reduce(list_prepend(CAST(998244353 AS BIGINT),
-                 list_transform(
-                   list_filter(string_split_regex(t, ''), c -> c <> ''),
-                   c -> CAST(unicode(c) AS BIGINT))),
-                 (x, y) -> (x * 31 + y) % 2147483629)) AS h2s
-           FROM tok),
-         h AS (
-           SELECT doc_id,
-             list_transform(list_zip(h1s, h2s), p ->
-               ((p[1] * p[1] + p[1]) % 2147483647) * 2147483629
-               + ((p[2] * p[2] + 3 * p[2]) % 2147483629)) AS hs
-           FROM hr),
-         votes AS (
-           SELECT doc_id, b,
-                  SUM(CASE WHEN (th >> b) & 1 = 1 THEN 1 ELSE -1 END)
-                    AS vote
-           FROM (SELECT doc_id, unnest(hs) AS th FROM h)
-           CROSS JOIN generate_series(0, 61) AS g(b)
-           GROUP BY doc_id, b),
-         fp AS (
-           SELECT doc_id,
-                  CAST(SUM(CASE WHEN vote > 0
-                    THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT)
-                    AS simhash
-           FROM votes GROUP BY doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT)
-                  AS hamming
-         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-         WHERE (((a.simhash >> 0) & 65535) = ((b.simhash >> 0) & 65535)
-             OR ((a.simhash >> 16) & 65535) = ((b.simhash >> 16) & 65535)
-             OR ((a.simhash >> 32) & 65535) = ((b.simhash >> 32) & 65535)
-             OR ((a.simhash >> 48) & 65535) = ((b.simhash >> 48) & 65535))
-           AND bit_count(xor(a.simhash, b.simhash)) <= 10
-         ORDER BY id_a, id_b""",
-
-    "log_table_repartition" ->
-      """SELECT c_custkey AS k, c_mktsegment AS seg, c_acctbal AS bal
-         FROM customer
-         WHERE c_custkey <= 400
-           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 300)
-         ORDER BY k""",
-
-    "log_table_hidden" ->
-      """SELECT c_custkey AS k, c_mktsegment AS seg, c_acctbal AS bal
-         FROM customer
-         WHERE c_custkey <= 400
-           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 300)
-         ORDER BY k""",
-
-    "approx_topk" ->
-      """SELECT CAST(rank AS INTEGER) AS rank, term,
-                CAST(min_count AS BIGINT) AS min_count
-         FROM (VALUES
-           (1,'t30',40),(2,'t29',39),(3,'t28',38),(4,'t27',37),
-           (5,'t26',36),(6,'t25',35),(7,'t24',34),(8,'t23',33),
-           (9,'t22',32),(10,'t21',31),(11,'t20',30),(12,'t19',29),
-           (13,'t18',28),(14,'t17',27),(15,'t16',26),(16,'t15',25),
-           (17,'t14',24),(18,'t13',23),(19,'t12',22),(20,'t11',21))
-           AS v(rank, term, min_count)
-         ORDER BY rank""",
-
-    "source_overlap" ->
-      """WITH tok AS (
-           SELECT DISTINCT src, tok FROM (
-             SELECT source AS src,
-                    unnest(string_split_regex(lower(text), '\s+')) AS tok
-             FROM documents)
-           WHERE length(tok) > 0),
-         sizes AS (SELECT src, COUNT(*) AS vocab FROM tok GROUP BY src),
-         inter AS (
-           SELECT a.src AS sa, b.src AS sb, COUNT(*) AS c
-           FROM tok a JOIN tok b ON a.tok = b.tok AND a.src < b.src
-           GROUP BY 1, 2)
-         SELECT s1.src AS src_a, s2.src AS src_b,
-                s1.vocab AS vocab_a, s2.vocab AS vocab_b,
-                s1.vocab + s2.vocab - COALESCE(i.c, 0) AS vocab_union,
-                COALESCE(i.c, 0) AS vocab_inter,
-                ROUND(CAST(COALESCE(i.c, 0) AS DOUBLE) /
-                  CAST(s1.vocab + s2.vocab - COALESCE(i.c, 0) AS DOUBLE),
-                  6) AS jaccard_est
-         FROM sizes s1
-         JOIN sizes s2 ON s1.src < s2.src
-         LEFT JOIN inter i ON i.sa = s1.src AND i.sb = s2.src
-         ORDER BY src_a, src_b""",
-
-    "log_table_refs" ->
-      """SELECT c_custkey AS k, c_mktsegment AS seg, c_acctbal AS bal
-         FROM customer
-         WHERE c_custkey <= 450
-           AND NOT (c_mktsegment = 'BUILDING' AND c_custkey <= 200)
-           AND NOT (c_mktsegment = 'AUTOMOBILE' AND c_custkey > 400)
-         ORDER BY k""",
-
-    "log_table_meta_sql" ->
-      """SELECT surface, item, detail, num FROM (
-           VALUES
-             ('files', 'live', 'files', CAST(2 AS BIGINT)),
-             ('files', 'rows', 'logical',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey > 50 AND c_custkey <= 200)),
-             ('history', '0', 'append', CAST(1000 AS BIGINT)),
-             ('history', '1', 'append', CAST(2000 AS BIGINT)),
-             ('history', '2', 'delete', CAST(3000 AS BIGINT)),
-             ('history', '3', 'ref', CAST(4000 AS BIGINT)),
-             ('partitions', 'count', 'parts', CAST(1 AS BIGINT)),
-             ('refs', 'seed', 'tag', CAST(0 AS BIGINT))
-         ) AS t(surface, item, detail, num)
-         ORDER BY surface, item, detail""",
-
-    "log_table_snapshots" ->
-      """SELECT surface, item, detail, num FROM (
-           VALUES
-             ('snap', '0', 'append|p=-1|a=1|r=0', CAST(1000 AS BIGINT)),
-             ('snap', '1', 'append|p=0|a=1|r=0', CAST(2000 AS BIGINT)),
-             ('snap', '2', 'delete|p=1|a=1|r=1', CAST(3000 AS BIGINT)),
-             ('snap', '3', 'overwrite|p=2|a=1|r=2',
-               CAST(4000 AS BIGINT)),
-             ('snap', '4', 'append|p=3|a=1|r=0', CAST(5000 AS BIGINT)),
-             ('txn', 'app1', '5', CAST(4 AS BIGINT)),
-             ('all_files', 'live', 'files', CAST(2 AS BIGINT)),
-             ('all_files', 'live', 'rows',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey > 80 AND c_custkey <= 120)),
-             ('all_files', 'retired', 'files', CAST(2 AS BIGINT)),
-             ('all_files', 'retired', 'rows',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey <= 80)),
-             ('all_files', 'retired', 'dv_rows',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey <= 20))
-         ) AS t(surface, item, detail, num)
-         ORDER BY surface, item, detail""",
-
-    "delta_export" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 120 AND c_custkey % 10 <> 0
-         ORDER BY k""",
-
-    "iceberg_export" ->
-      """SELECT c_custkey AS k, c_name AS name,
-              c_mktsegment AS seg
-         FROM customer
-         WHERE c_custkey <= 120 AND c_custkey % 10 <> 0
-         ORDER BY k""",
-
-    "iceberg_mirror" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 120 AND c_custkey % 10 <> 0
-         ORDER BY k""",
-
-    "delta_convert" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 150 AND c_custkey % 10 <> 0
-         ORDER BY k""",
-
-    "iceberg_bucket_interop" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 180 AND c_custkey % 10 <> 0
-         ORDER BY k""",
-
-    "delta_mapping" ->
-      """SELECT c_custkey AS k, c_name AS tag
-         FROM customer
-         WHERE c_custkey <= 150
-         ORDER BY k""",
-
-    "delta_dv_roundtrip" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 140 AND c_custkey % 10 <> 0
-           AND c_custkey % 7 <> 0
-         ORDER BY k""",
-
-    "iceberg_dv_roundtrip" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 140 AND c_custkey % 10 <> 0
-           AND c_custkey % 7 <> 0
-         ORDER BY k""",
-
-    "delta_constraints" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 150
-         ORDER BY k""",
-
-    "iceberg_convert" ->
-      """SELECT c_custkey AS k, c_name AS name
-         FROM customer
-         WHERE c_custkey <= 150 AND c_custkey % 10 <> 0
-         ORDER BY k""",
-
-    "log_table_protocol" ->
-      """SELECT surface, item, detail, num FROM (
-           VALUES
-             ('features', 'v0', '',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey <= 100)),
-             ('features', 'v1', 'deletionVectors',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey > 50 AND c_custkey <= 100)),
-             ('features', 'v2', 'deletionVectors,rowTracking',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey > 50 AND c_custkey <= 100)),
-             ('gate', 'reader', 'refused', CAST(1 AS BIGINT)),
-             ('gate', 'writer', 'refused', CAST(1 AS BIGINT)),
-             ('gate', 'writer', 'readable_rows',
-               (SELECT CAST(count(*) AS BIGINT) FROM customer
-                WHERE c_custkey <= 20))
-         ) AS t(surface, item, detail, num)
-         ORDER BY surface, item, detail""",
-
-    "log_table_analyze" ->
-      """WITH t AS (
-           SELECT c_custkey AS k, CAST(c_nationkey AS BIGINT) AS nat,
-                  nullif(c_mktsegment, 'BUILDING') AS seg
-           FROM customer
-           WHERE c_custkey <= 500 AND c_custkey % 7 <> 0)
-         SELECT col, ndv, nulls, min_v, max_v, n_rows FROM (
-           SELECT 'k' AS col, COUNT(DISTINCT k) AS ndv,
-                  COUNT(*) - COUNT(k) AS nulls,
-                  CAST(MIN(k) AS VARCHAR) AS min_v,
-                  CAST(MAX(k) AS VARCHAR) AS max_v,
-                  COUNT(*) AS n_rows FROM t
-           UNION ALL
-           SELECT 'nat', COUNT(DISTINCT nat), COUNT(*) - COUNT(nat),
-                  CAST(MIN(nat) AS VARCHAR), CAST(MAX(nat) AS VARCHAR),
-                  COUNT(*) FROM t
-           UNION ALL
-           SELECT 'seg', COUNT(DISTINCT seg), COUNT(*) - COUNT(seg),
-                  MIN(seg), MAX(seg), COUNT(*) FROM t)
-         ORDER BY col""",
-
-    "log_table_rowids" ->
-      """WITH base AS (
-           SELECT c_custkey AS k, c_mktsegment AS seg,
-                  ROW_NUMBER() OVER (ORDER BY c_custkey) - 1 AS row_id
-           FROM customer WHERE c_custkey <= 200)
-         SELECT k, CASE WHEN k <= 50 THEN 'PRIME' ELSE seg END AS seg,
-                CAST(row_id AS BIGINT) AS row_id
-         FROM base WHERE k % 10 <> 0 ORDER BY k""",
-
-    "log_table_expire" ->
-      """SELECT c_custkey AS k, c_mktsegment AS seg
-         FROM customer
-         WHERE c_custkey <= 400 AND c_custkey % 9 <> 0
-         ORDER BY k""",
-
-    "log_table_autocompact" ->
-      """SELECT s_suppkey AS k, s_name AS name, s_acctbal AS bal
-         FROM supplier ORDER BY k""",
-
-    "log_table_clusterby" ->
-      """SELECT c_custkey AS k, c_acctbal AS bal
-         FROM customer ORDER BY k""",
-
-    "log_table_widen" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k,
-           CAST(CAST(CAST(c_custkey % 1000 AS DECIMAL(10,2))
-             AS DECIMAL(22,4)) AS DOUBLE) AS bal,
-           CAST(CAST(c_acctbal AS REAL) AS DOUBLE) AS f
-         FROM customer
-         UNION ALL
-         SELECT 6000000000, CAST(CAST(123456789.2500 AS DECIMAL(22,4))
-             AS DOUBLE), 0.5
-         ORDER BY k""",
-
-    "log_table_merge_evolve" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
-           CASE WHEN c_custkey > 200 THEN 'new'
-                WHEN c_custkey > 100 THEN 'upd' END AS tier,
-           CASE WHEN c_custkey > 100 THEN c_acctbal END AS bal
-         FROM customer WHERE c_custkey <= 300 ORDER BY k""",
-
-    "log_table_properties" ->
-      """SELECT k AS "key", v AS "value",
-           (SELECT COUNT(*) FROM nation) AS n_rows
-         FROM (VALUES ('retention.days', '30'), ('tier', 'silver'))
-           AS p(k, v)
-         ORDER BY "key"""",
-
-    "log_table_mv" ->
-      """WITH final_state AS (
-           SELECT o_custkey,
-                  CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 2
-                       ELSE o_totalprice END AS v
-           FROM orders
-           WHERE (o_orderkey % 3) IN (0, 1)
-             AND NOT (o_totalprice < 1000)
-         )
-         SELECT o_custkey, COUNT(*) AS cnt,
-                CAST(SUM(CAST(v AS DECIMAL(28,4))) AS DOUBLE) AS total
-         FROM final_state GROUP BY o_custkey ORDER BY o_custkey""",
-
-    "log_table_mv_minmax" ->
-      """SELECT o_custkey, COUNT(*) AS cnt,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4)))
-                  AS DOUBLE) AS total,
-                MIN(o_totalprice) AS min_price,
-                MAX(o_totalprice) AS max_price
-         FROM orders
-         WHERE NOT (o_totalprice > 300000.0)
-         GROUP BY o_custkey ORDER BY o_custkey""",
-
-    "rank_features" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice,
-           CAST(dense_rank() OVER w AS BIGINT) AS drank,
-           round(percent_rank() OVER w, 9) AS prank,
-           round(cume_dist() OVER w, 9) AS cdist
-         FROM orders
-         WINDOW w AS (PARTITION BY o_orderpriority
-           ORDER BY o_totalprice, o_orderkey)
-         ORDER BY o_orderpriority, o_orderkey""",
-
-    "set_reconcile" ->
-      """WITH h1 AS (SELECT user_id FROM events
-                     WHERE ts < TIMESTAMP '2024-01-16'),
-         h2 AS (SELECT user_id FROM events
-                WHERE ts >= TIMESTAMP '2024-01-16')
-         SELECT user_id, 'both' AS cohort
-           FROM (SELECT user_id FROM h1 INTERSECT SELECT user_id FROM h2)
-         UNION ALL
-         SELECT user_id, 'h1_only' AS cohort
-           FROM (SELECT user_id FROM h1 EXCEPT SELECT user_id FROM h2)
-         UNION ALL
-         SELECT user_id, 'h2_only' AS cohort
-           FROM (SELECT user_id FROM h2 EXCEPT SELECT user_id FROM h1)
-         ORDER BY cohort, user_id""",
-
-    "asof_tolerance" ->
-      """SELECT e.event_id, e.user_id, CAST(e.ts AS TIMESTAMP) AS ts,
-                p.p_id AS next_purchase_id
-         FROM events e
-         LEFT JOIN LATERAL (
-           SELECT e2.event_id AS p_id
-           FROM events e2
-           WHERE e2.event_type = 'purchase'
-             AND e2.user_id = e.user_id
-             AND e2.ts >= e.ts
-             AND e2.ts <= e.ts + INTERVAL 48 HOUR
-           ORDER BY e2.ts ASC, e2.event_id DESC LIMIT 1
-         ) p ON TRUE
-         WHERE e.event_type = 'view'
-         ORDER BY e.event_id""",
-
-    "gap_fill" ->
-      """WITH hourly AS (
-           SELECT user_id, date_trunc('hour', ts) AS hour,
-                  count(*) AS cnt
-           FROM events WHERE user_id <= 200 GROUP BY 1, 2),
-         spans AS (
-           SELECT user_id, min(hour) AS h0, max(hour) AS h1
-           FROM hourly GROUP BY 1),
-         grid AS (
-           SELECT user_id,
-                  unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-           FROM spans)
-         SELECT g.user_id, g.hour, coalesce(h.cnt, 0) AS cnt
-         FROM grid g LEFT JOIN hourly h USING (user_id, hour)
-         ORDER BY g.user_id, g.hour""",
-
-    "locf_fill" ->
-      """WITH hourly AS (
-           SELECT user_id, date_trunc('hour', ts) AS hour,
-                  CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
-                    / count(*) AS v_obs
-           FROM events WHERE user_id <= 200 GROUP BY 1, 2),
-         spans AS (
-           SELECT user_id, min(hour) AS h0, max(hour) AS h1
-           FROM hourly GROUP BY 1),
-         grid AS (
-           SELECT user_id,
-                  unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-           FROM spans)
-         SELECT g.user_id, g.hour,
-                last_value(h.v_obs IGNORE NULLS) OVER (
-                  PARTITION BY g.user_id ORDER BY g.hour
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v
-         FROM grid g LEFT JOIN hourly h USING (user_id, hour)
-         ORDER BY g.user_id, g.hour""",
-
-    "scd2_asof" ->
-      """WITH h AS (
+    Query("scd2_asof", (s, d) =>
+      // time travel on the dimension itself: the org as it stood
+      // mid-month, reconstructed from version intervals — map-only
+      Scd.scd2AsOf(
+        Scd.scd2FromHistory(t(s, d, "events"), Seq("user_id"), "ts",
+          Seq("event_type"), Seq("event_id")),
+        java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+        .select(col("user_id"), col("event_type"),
+          ntz(col("valid_from")).as("valid_from"))
+        .orderBy(col("user_id")),
+      Some("""WITH h AS (
            SELECT user_id, ts, event_id, event_type,
                   lag(event_type) OVER w AS prev_et,
                   lag(ts) OVER w AS prev_ts
@@ -4519,20 +2774,51 @@ object SparkEntry {
          FROM v
          WHERE valid_from <= TIMESTAMP '2024-01-15'
            AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15')
-         ORDER BY user_id""",
+         ORDER BY user_id""")),
 
-    "schema_evolution" ->
-      """SELECT * FROM (VALUES
+    Query("schema_evolution", (s, d) => {
+      // lakehouse schema drift: batch 2 adds a column; mergeSchema
+      // unifies on read, older rows null-filled
+      val tmp = java.nio.file.Files.createTempDirectory("graft_evo")
+      val p = tmp.resolve("tbl").toString
+      val s1 = s.range(0, 3).selectExpr("id", "CAST(id * 10 AS LONG) AS a")
+      s1.write.parquet(p + "/b=1")
+      val s2 = s.range(3, 5).selectExpr("id", "CAST(id * 10 AS LONG) AS a",
+        "concat('v', id) AS c")
+      s2.write.parquet(p + "/b=2")
+      s.read.option("mergeSchema", "true").parquet(p)
+        .select(col("id"), col("a"), col("c"))
+        .orderBy(col("id"))
+    },
+      Some("""SELECT * FROM (VALUES
            (CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(NULL AS VARCHAR)),
            (CAST(1 AS BIGINT), CAST(10 AS BIGINT), CAST(NULL AS VARCHAR)),
            (CAST(2 AS BIGINT), CAST(20 AS BIGINT), CAST(NULL AS VARCHAR)),
            (CAST(3 AS BIGINT), CAST(30 AS BIGINT), 'v3'),
            (CAST(4 AS BIGINT), CAST(40 AS BIGINT), 'v4'))
          AS t(id, a, c)
-         ORDER BY id""",
+         ORDER BY id""")),
 
-    "scd2_deletes" ->
-      """WITH h AS (
+    Query("scd2_deletes", (s, d) => {
+      // full-snapshot CDC: users with no events in the second half of
+      // the month vanish from the snapshot → their current version
+      // closes. The other three quadrants (new/changed/unchanged)
+      // merge as usual.
+      val ev = t(s, d, "events")
+      val mid = lit("2024-01-15").cast("timestamp")
+      val dim = Scd.scd2FromHistory(ev.filter(col("ts") < mid),
+        Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"))
+      val snap = Scd.latestPerKey(ev.filter(col("ts") >= mid),
+        Seq("user_id"), Seq(col("ts"), col("event_id")))
+        .select(col("user_id"), col("event_type"))
+      Scd.scd2ApplySnapshot(dim, snap, Seq("user_id"), Seq("event_type"),
+        batchTs)
+        .select(col("user_id"), col("event_type"),
+          ntz(col("valid_from")).as("valid_from"),
+          ntz(col("valid_to")).as("valid_to"), col("is_current"))
+        .orderBy(col("user_id"), col("valid_from"))
+    },
+      Some("""WITH h AS (
            SELECT user_id, ts, event_id, event_type,
                   lag(event_type) OVER w AS prev_et,
                   lag(ts) OVER w AS prev_ts
@@ -4586,26 +2872,59 @@ object SparkEntry {
          SELECT * FROM untouched
          UNION ALL SELECT * FROM closed
          UNION ALL SELECT * FROM ins
-         ORDER BY user_id, valid_from""",
+         ORDER BY user_id, valid_from""")),
 
-    "vocab_topk" ->
-      """SELECT term, COUNT(*) AS freq,
+    Query("vocab_topk", (s, d) =>
+      TextAnalysis.vocabTopK(t(s, d, "documents"), k = 20),
+      Some("""SELECT term, COUNT(*) AS freq,
                 COUNT(DISTINCT doc_id) AS df
          FROM (SELECT doc_id,
                  unnest(string_split_regex(trim(lower(text)), '\s+'))
                    AS term
                FROM documents)
          WHERE term <> ''
-         GROUP BY term ORDER BY freq DESC, term LIMIT 20""",
+         GROUP BY term ORDER BY freq DESC, term LIMIT 20""")),
 
-    "text_normalize" ->
-      """SELECT doc_id,
+    Query("text_normalize", (s, d) =>
+      TextAnalysis.normalizeText(t(s, d, "documents"))
+        .orderBy(col("doc_id")),
+      Some("""SELECT doc_id,
            regexp_replace(trim(lower(nfc_normalize(text))),
              '\s+', ' ', 'g') AS norm_text
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id""")),
 
-    "numeric_histogram" ->
-      """WITH mm AS (
+    Query("approx_topk", (s, d) => {
+      // the Misra-Gries sketch in its PROVABLE-exactness regime: with
+      // every true frequency above n/(capacity+1) the vocabulary must
+      // fit in the counters (Σfreq = n forces <capacity+1 distinct
+      // terms), no decrement ever fires, and the reported lower-bound
+      // min_counts ARE the true counts — so the sketch, its partials
+      // and its summary merges are oracle-checkable exactly. The
+      // fixture synthesizes 30 terms with DISTINCT frequencies
+      // (deterministic ranks at any scale factor / partitioning);
+      // spread over 8 partitions so the merge path is exercised.
+      // Full-vocabulary behavior (membership + bound) stays covered
+      // by ApproxTopKSpec.
+      import s.implicits._
+      val corpus = (1 to 30).flatMap(i => Seq.fill(10 + i)(f"t$i%02d"))
+      TextAnalysis.approxVocabTopK(
+        s.createDataset(corpus).toDF("text").repartition(8),
+        k = 20, capacity = 256)
+    },
+      Some("""SELECT CAST(rank AS INTEGER) AS rank, term,
+                CAST(min_count AS BIGINT) AS min_count
+         FROM (VALUES
+           (1,'t30',40),(2,'t29',39),(3,'t28',38),(4,'t27',37),
+           (5,'t26',36),(6,'t25',35),(7,'t24',34),(8,'t23',33),
+           (9,'t22',32),(10,'t21',31),(11,'t20',30),(12,'t19',29),
+           (13,'t18',28),(14,'t17',27),(15,'t16',26),(16,'t15',25),
+           (17,'t14',24),(18,'t13',23),(19,'t12',22),(20,'t11',21))
+           AS v(rank, term, min_count)
+         ORDER BY rank""")),
+
+    Query("numeric_histogram", (s, d) =>
+      Analytics.numericHistogram(t(s, d, "orders"), "o_totalprice"),
+      Some("""WITH mm AS (
            SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx
            FROM orders)
          SELECT CASE WHEN o_totalprice IS NULL THEN 0
@@ -4614,37 +2933,825 @@ object SparkEntry {
                 COUNT(*) AS n_rows,
                 MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
          FROM orders, mm
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1""")),
 
-    "compaction" ->
-      """SELECT lang, COUNT(*) AS n_docs,
+    Query("compaction", (s, d) => {
+      // maintenance op: fragment documents into 64 tiny files, compact
+      // back shuffle-free, and prove losslessness via the aggregate
+      // (the oracle computes it from the original table). The ScalaTest
+      // asserts the file-count contract; here the data contract.
+      val tmp = java.nio.file.Files.createTempDirectory("graft_compact")
+      val frag = tmp.resolve("frag").toString
+      t(s, d, "documents").repartition(64).write.mode("overwrite").parquet(frag)
+      Tables.compactFiles(s, frag, tmp.resolve("opt").toString)
+      s.read.parquet(tmp.resolve("opt").toString)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
+        .orderBy(col("lang"))
+    },
+      Some("""SELECT lang, COUNT(*) AS n_docs,
                 CAST(SUM(n_chars) AS BIGINT) AS total_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
+         FROM documents GROUP BY lang ORDER BY lang""")),
 
-    "zorder_layout" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders,
+    Query("zorder_layout", (s, d) => {
+      // layout maintenance: rewrite orders z-ordered on (custkey,
+      // totalprice) so 2-D box predicates prune files; the oracle
+      // proves content preservation, LayoutSpec proves the
+      // file-clustering quality
+      val tmp = java.nio.file.Files.createTempDirectory("graft_zorder")
+      val p = tmp.resolve("orders_z").toString
+      Tables.writeZOrdered(t(s, d, "orders"), p,
+        "o_custkey", "o_totalprice", nFiles = 8)
+      s.read.parquet(p)
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_orders"),
+          Analytics.dsum(col("o_totalprice")).as("total_price"))
+        .orderBy(col("o_orderpriority"))
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS n_orders,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
            AS total_price
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1""")),
 
-    "percentiles" ->
-      """SELECT o_orderpriority,
+    Query("q2_min_cost", (s, d) =>
+      Analytics.q2MinCostSupplier(t(s, d, "part"), t(s, d, "supplier"),
+        t(s, d, "lineitem")),
+      Some("""WITH minp AS (
+           SELECT l_partkey AS mp_partkey, MIN(l_extendedprice) AS min_price
+           FROM lineitem GROUP BY 1),
+         best AS (
+           SELECT l.l_partkey, m.min_price, MIN(l.l_suppkey) AS s_suppkey
+           FROM lineitem l JOIN minp m ON l.l_partkey = m.mp_partkey
+             AND l.l_extendedprice = m.min_price
+           GROUP BY 1, 2)
+         SELECT p.p_partkey, p.p_name, b.min_price, b.s_suppkey, s.s_name
+         FROM best b
+         JOIN part p ON b.l_partkey = p.p_partkey
+         JOIN supplier s ON b.s_suppkey = s.s_suppkey
+         ORDER BY p.p_partkey""")),
+
+    Query("q4_order_priority", (s, d) =>
+      Analytics.q4OrderPriority(t(s, d, "orders"), t(s, d, "lineitem")),
+      Some("""SELECT o_orderpriority, COUNT(*) AS n_orders
+         FROM orders o
+         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+           AND o.o_orderdate < TIMESTAMP '1996-04-01'
+           AND EXISTS (SELECT 1 FROM lineitem l
+             WHERE l.l_orderkey = o.o_orderkey
+               AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
+         GROUP BY 1 ORDER BY 1""")),
+
+    Query("q11_revenue_share", (s, d) =>
+      Analytics.q11RevenueShare(t(s, d, "supplier"), t(s, d, "lineitem")),
+      Some("""WITH per_supp AS (
+           SELECT l_suppkey,
+             CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+               AS DECIMAL(28,4))) AS DOUBLE) AS revenue
+           FROM lineitem GROUP BY 1),
+         tot AS (
+           SELECT CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+             AS DECIMAL(28,4))) AS DOUBLE) AS total_rev
+           FROM lineitem)
+         SELECT s.s_suppkey, s.s_name, p.revenue
+         FROM per_supp p, tot, supplier s
+         WHERE p.revenue > tot.total_rev * 0.002
+           AND p.l_suppkey = s.s_suppkey
+         ORDER BY p.revenue DESC, s.s_suppkey""")),
+
+    Query("q17_small_quantity", (s, d) =>
+      Analytics.q17SmallQuantity(t(s, d, "part"), t(s, d, "lineitem")),
+      Some("""WITH li AS (
+           SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
+           FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+           WHERE p.p_brand = 'Brand#23'),
+         lim AS (
+           SELECT l_partkey AS lp_partkey,
+                  SUM(l_quantity) / COUNT(*) * 0.2 AS qty_limit
+           FROM li GROUP BY 1)
+         SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4)))
+                  AS DOUBLE) / 7.0 AS avg_yearly
+         FROM li JOIN lim ON li.l_partkey = lim.lp_partkey
+         WHERE li.l_quantity < lim.qty_limit""")),
+
+    Query("q21_late_suppliers", (s, d) =>
+      Analytics.q21LateSuppliers(t(s, d, "supplier"), t(s, d, "orders"),
+        t(s, d, "lineitem")),
+      Some("""WITH per_order AS (
+           SELECT l.l_orderkey,
+                  COUNT(DISTINCT l.l_suppkey) AS n_supp,
+                  COUNT(DISTINCT CASE WHEN l.l_shipdate >
+                    o.o_orderdate + INTERVAL 60 DAY
+                    THEN l.l_suppkey END) AS n_late,
+                  MIN(CASE WHEN l.l_shipdate >
+                    o.o_orderdate + INTERVAL 60 DAY
+                    THEN l.l_suppkey END) AS late_supp
+           FROM lineitem l
+           JOIN orders o ON l.l_orderkey = o.o_orderkey
+             AND o.o_orderstatus = 'F'
+           GROUP BY 1)
+         SELECT s.s_suppkey, s.s_name, COUNT(*) AS numwait
+         FROM per_order p JOIN supplier s ON p.late_supp = s.s_suppkey
+         WHERE p.n_supp > 1 AND p.n_late = 1
+         GROUP BY 1, 2
+         ORDER BY numwait DESC, s.s_suppkey LIMIT 10""")),
+
+    Query("q22_idle_customers", (s, d) =>
+      Analytics.q22IdleCustomers(t(s, d, "customer"), t(s, d, "orders")),
+      Some("""SELECT c_mktsegment, COUNT(*) AS n_cust,
+         CAST(SUM(CAST(c_acctbal AS DECIMAL(28,4))) AS DOUBLE)
+           AS total_bal
+         FROM customer c
+         WHERE c.c_acctbal > (
+             SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(28,4)))
+               AS DOUBLE) / COUNT(*)
+             FROM customer WHERE c_acctbal > 0)
+           AND NOT EXISTS (SELECT 1 FROM orders o
+             WHERE o.o_custkey = c.c_custkey)
+         GROUP BY 1 ORDER BY 1""")),
+
+    Query("q12_ship_priority", (s, d) =>
+      Analytics.q12ShipPriority(t(s, d, "orders"), t(s, d, "lineitem")),
+      Some("""SELECT l_returnflag,
+           COUNT(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+             THEN 1 END) AS high_line_count,
+           COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
+             THEN 1 END) AS low_line_count
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+           AND l_shipdate < TIMESTAMP '1997-01-01'
+         GROUP BY 1 ORDER BY 1""")),
+
+    Query("q16_supplier_cnt", (s, d) =>
+      Analytics.q16SupplierCnt(t(s, d, "part"), t(s, d, "supplier"),
+        t(s, d, "lineitem")),
+      Some("""SELECT p_brand, p_type, p_size,
+           COUNT(DISTINCT l_suppkey) AS supplier_cnt
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         WHERE p_brand <> 'Brand#13' AND p_type <> 'MEDIUM'
+           AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+           AND l_suppkey NOT IN
+             (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+         GROUP BY 1, 2, 3
+         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")),
+
+    Query("q20_excess_suppliers", (s, d) =>
+      Analytics.q20ExcessSuppliers(t(s, d, "part"), t(s, d, "supplier"),
+        t(s, d, "nation"), t(s, d, "lineitem")),
+      Some("""WITH shipped AS (
+           SELECT l_partkey, l_suppkey,
+                  SUM(CAST(l_quantity AS DECIMAL(28,4))) AS qty
+           FROM lineitem JOIN part ON l_partkey = p_partkey
+           WHERE p_name LIKE 'red %'
+             AND l_shipdate >= TIMESTAMP '1996-01-01'
+             AND l_shipdate < TIMESTAMP '1997-01-01'
+           GROUP BY 1, 2),
+         dominant AS (
+           SELECT DISTINCT l_suppkey FROM (
+             SELECT l_suppkey, qty,
+                    SUM(qty) OVER (PARTITION BY l_partkey) AS total
+             FROM shipped)
+           WHERE qty * 2 > total)
+         SELECT s_suppkey, s_name, n_name
+         FROM dominant
+         JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation ON s_nationkey = n_nationkey
+         ORDER BY s_suppkey""")),
+
+    Query("q6_revenue_delta", (s, d) =>
+      Analytics.q6RevenueDelta(t(s, d, "lineitem")),
+      Some("""SELECT CAST(SUM(CAST(l_extendedprice * l_discount
+             AS DECIMAL(28,6))) AS DOUBLE) AS revenue_delta,
+         COUNT(*) AS n_items
+         FROM lineitem
+         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+           AND l_shipdate < TIMESTAMP '1997-01-01'
+           AND l_discount >= 0.05 AND l_discount <= 0.07
+           AND l_quantity < 24""")),
+
+    Query("q13_order_dist", (s, d) =>
+      Analytics.q13OrderDistribution(t(s, d, "customer"), t(s, d, "orders"))
+        .orderBy(col("custdist").desc, col("c_count").desc),
+      Some("""SELECT c_count, COUNT(*) AS custdist
+         FROM (SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
+               FROM customer c LEFT JOIN orders o
+                 ON c.c_custkey = o.o_custkey
+               GROUP BY c.c_custkey)
+         GROUP BY c_count
+         ORDER BY custdist DESC, c_count DESC""")),
+
+    Query("q14_promo_share", (s, d) =>
+      Analytics.q14PromoShare(t(s, d, "lineitem"), t(s, d, "part")),
+      Some("""SELECT round(100.0 *
+           (CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
+              THEN l_extendedprice * (1.0 - l_discount)
+              ELSE 0.0 END AS DECIMAL(28,6))) AS DOUBLE) /
+            CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+              AS DECIMAL(28,6))) AS DOUBLE)), 6) AS promo_revenue_pct
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+           AND l_shipdate < TIMESTAMP '1997-01-01'""")),
+
+    Query("q19_disjunctive", (s, d) =>
+      Analytics.q19Disjunctive(t(s, d, "lineitem"), t(s, d, "part")),
+      Some("""SELECT CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+             AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
+         COUNT(*) AS n_items
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+             AND l_quantity BETWEEN 1 AND 20)
+           OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
+             AND l_quantity BETWEEN 10 AND 35)
+           OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
+             AND l_quantity BETWEEN 20 AND 50)""")),
+
+    Query("q7_trade_volume", (s, d) =>
+      Analytics.q7TradeVolume(t(s, d, "lineitem"), t(s, d, "orders"),
+        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "nation"),
+        "NATION_3", "NATION_7")
+        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year")),
+      Some("""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+         CAST(year(l_shipdate) AS BIGINT) AS l_year,
+         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+           AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
+         COUNT(*) AS n_items
+         FROM lineitem
+           JOIN supplier ON l_suppkey = s_suppkey
+           JOIN nation sn ON s_nationkey = sn.n_nationkey
+           JOIN orders ON l_orderkey = o_orderkey
+           JOIN customer ON o_custkey = c_custkey
+           JOIN nation cn ON c_nationkey = cn.n_nationkey
+         WHERE sn.n_name IN ('NATION_3', 'NATION_7')
+           AND cn.n_name IN ('NATION_3', 'NATION_7')
+           AND sn.n_name <> cn.n_name
+         GROUP BY 1, 2, 3
+         ORDER BY 1, 2, 3""")),
+
+    Query("q15_top_supplier", (s, d) =>
+      Analytics.q15TopSupplier(t(s, d, "lineitem"), t(s, d, "supplier"))
+        .orderBy(col("s_suppkey")),
+      Some("""WITH rev AS (
+           SELECT l_suppkey,
+             CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+               AS DECIMAL(28,6))) AS DOUBLE) AS total_rev
+           FROM lineitem
+           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+             AND l_shipdate < TIMESTAMP '1996-04-01'
+           GROUP BY 1)
+         SELECT s_suppkey, s_name, total_rev
+         FROM rev JOIN supplier ON l_suppkey = s_suppkey
+         WHERE total_rev = (SELECT max(total_rev) FROM rev)
+         ORDER BY s_suppkey""")),
+
+    Query("q8_market_share", (s, d) =>
+      Analytics.q8MarketShare(t(s, d, "lineitem"), t(s, d, "orders"),
+        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "nation"),
+        t(s, d, "region"), t(s, d, "part"), "ASIA", "NATION_2", "STANDARD")
+        .orderBy(col("o_year")),
+      Some("""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+         round(
+           CAST(SUM(CAST(CASE WHEN n2.n_name = 'NATION_2'
+               THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
+             AS DECIMAL(28,6))) AS DOUBLE) /
+           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+             AS DECIMAL(28,6))) AS DOUBLE), 6) AS mkt_share,
+         COUNT(*) AS n_items
+         FROM lineitem
+           JOIN part ON l_partkey = p_partkey
+           JOIN supplier ON l_suppkey = s_suppkey
+           JOIN nation n2 ON s_nationkey = n2.n_nationkey
+           JOIN orders ON l_orderkey = o_orderkey
+           JOIN customer ON o_custkey = c_custkey
+           JOIN nation n1 ON c_nationkey = n1.n_nationkey
+           JOIN region ON n1.n_regionkey = r_regionkey
+         WHERE r_name = 'ASIA' AND p_type = 'STANDARD'
+         GROUP BY 1 ORDER BY 1""")),
+
+    Query("q9_nation_revenue", (s, d) =>
+      Analytics.q9NationRevenue(t(s, d, "lineitem"), t(s, d, "orders"),
+        t(s, d, "supplier"), t(s, d, "nation"), t(s, d, "part"), "%red%")
+        .orderBy(col("nation"), col("o_year")),
+      Some("""SELECT n_name AS nation,
+         CAST(year(o_orderdate) AS BIGINT) AS o_year,
+         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
+           AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
+         COUNT(*) AS n_items
+         FROM lineitem
+           JOIN part ON l_partkey = p_partkey
+           JOIN supplier ON l_suppkey = s_suppkey
+           JOIN nation ON s_nationkey = n_nationkey
+           JOIN orders ON l_orderkey = o_orderkey
+         WHERE p_name LIKE '%red%'
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    Query("source_overlap", (s, d) =>
+      // exact per-pair set overlap (token-keyed equi-join) — fully
+      // oracle-checkable; the HLL-sketch twin for unbounded source
+      // counts keeps its error-bound coverage in TextAnalysisSpec
+      TextAnalysis.sourceVocabOverlapExact(t(s, d, "documents"))
+        .orderBy(col("src_a"), col("src_b")),
+      Some("""WITH tok AS (
+           SELECT DISTINCT src, tok FROM (
+             SELECT source AS src,
+                    unnest(string_split_regex(lower(text), '\s+')) AS tok
+             FROM documents)
+           WHERE length(tok) > 0),
+         sizes AS (SELECT src, COUNT(*) AS vocab FROM tok GROUP BY src),
+         inter AS (
+           SELECT a.src AS sa, b.src AS sb, COUNT(*) AS c
+           FROM tok a JOIN tok b ON a.tok = b.tok AND a.src < b.src
+           GROUP BY 1, 2)
+         SELECT s1.src AS src_a, s2.src AS src_b,
+                s1.vocab AS vocab_a, s2.vocab AS vocab_b,
+                s1.vocab + s2.vocab - COALESCE(i.c, 0) AS vocab_union,
+                COALESCE(i.c, 0) AS vocab_inter,
+                ROUND(CAST(COALESCE(i.c, 0) AS DOUBLE) /
+                  CAST(s1.vocab + s2.vocab - COALESCE(i.c, 0) AS DOUBLE),
+                  6) AS jaccard_est
+         FROM sizes s1
+         JOIN sizes s2 ON s1.src < s2.src
+         LEFT JOIN inter i ON i.sa = s1.src AND i.sb = s2.src
+         ORDER BY src_a, src_b""")),
+
+    Query("join_blowup", (s, d) => {
+      // pre-flight profile of the classic accidental explosion: a
+      // self-join of events on user_id (out_rows = per-user count²)
+      val ev = t(s, d, "events")
+      Skew.joinBlowupProfile(ev, ev, "user_id", "user_id", k = 20)
+    },
+      Some("""WITH lc AS (SELECT user_id AS join_key, COUNT(*) AS l_rows
+                     FROM events GROUP BY 1),
+         rc AS (SELECT user_id AS join_key, COUNT(*) AS r_rows
+                FROM events GROUP BY 1),
+         prod AS (SELECT join_key, l_rows, r_rows,
+                    l_rows * r_rows AS out_rows
+                  FROM lc JOIN rc USING (join_key)),
+         tot AS (SELECT SUM(out_rows) AS t FROM prod)
+         SELECT join_key, l_rows, r_rows, CAST(out_rows AS BIGINT)
+             AS out_rows,
+           round(CAST(out_rows AS DOUBLE) / t, 6) AS share
+         FROM prod, tot
+         ORDER BY out_rows DESC, join_key
+         LIMIT 20""")),
+
+    Query("concurrency_profile", (s, d) => {
+      // deterministic span synthesis: each event opens a session of
+      // 60 + (event_id % 300) seconds (same expression in the oracle),
+      // then the distributed sweep line profiles peak concurrency
+      val spans = t(s, d, "events").select(col("event_id"),
+        col("ts").as("t0"),
+        expr("timestampadd(SECOND, 60 + event_id % 300, ts)").as("t1"))
+      Analytics.concurrencyProfile(spans, "event_id", "t0", "t1")
+        .withColumn("hour", ntz(col("hour")))
+        .orderBy(col("hour"))
+    },
+      Some("""WITH spans AS (
+           SELECT event_id, CAST(ts AS TIMESTAMP) AS t0,
+             CAST(ts AS TIMESTAMP)
+               + to_seconds(60 + event_id % 300) AS t1
+           FROM events),
+         pts AS (
+           SELECT event_id, t0 AS t, 1 AS d FROM spans
+           UNION ALL
+           SELECT event_id, t1 AS t, -1 AS d FROM spans),
+         run AS (
+           SELECT date_trunc('hour', t) AS hour, t, d, event_id,
+             SUM(d) OVER (ORDER BY t, d, event_id
+               ROWS UNBOUNDED PRECEDING) AS r
+           FROM pts),
+         run2 AS (
+           SELECT hour, d, r,
+             first_value(r - d) OVER (PARTITION BY hour
+               ORDER BY t, d, event_id) AS carry
+           FROM run)
+         SELECT hour,
+           CAST(GREATEST(MAX(r), MAX(carry)) AS BIGINT)
+             AS max_concurrency,
+           CAST(SUM(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_starts,
+           CAST(SUM(CASE WHEN d = -1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_ends
+         FROM run2 GROUP BY 1 ORDER BY 1""")),
+
+    Query("manifest_prune", (s, d) => {
+      // iceberg-style file skipping without the table format: cluster
+      // orders into 16 range files, build the per-file min/max
+      // manifest in one distributed pass, answer a 3%-selectivity
+      // price band from only the intersecting files. The oracle
+      // proves the pruned read returns exactly the filtered table;
+      // LayoutSpec proves files were actually skipped.
+      val tmp = java.nio.file.Files.createTempDirectory("graft_manifest")
+      val p = tmp.resolve("orders_clustered").toString
+      t(s, d, "orders")
+        .repartitionByRange(16, col("o_totalprice"))
+        .sortWithinPartitions(col("o_totalprice"))
+        .write.mode("overwrite").parquet(p)
+      val manifest = Tables.buildManifest(s, p, "o_totalprice")
+      val files = Tables.pruneFiles(manifest, lit(30000.0), lit(45000.0))
+      Tables.manifestPrunedRead(s, p, files.toSeq, "o_totalprice",
+          lit(30000.0), lit(45000.0))
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"), col("o_orderpriority"))
+        .orderBy(col("o_orderkey"))
+    },
+      Some("""SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+         FROM orders
+         WHERE o_totalprice BETWEEN 30000.0 AND 45000.0
+         ORDER BY o_orderkey""")),
+
+    Query("fuzzy_join", (s, d) => {
+      // dirty registry: drop one character of each customer name at a
+      // key-derived position (deterministic; same expression in the
+      // oracle), then link it back to the clean registry at edit
+      // distance ≤ 1 via FastSS deletion-neighborhood blocking
+      val cust = t(s, d, "customer")
+      val pos = (col("c_custkey") % 18).cast("int")
+      val dirty = cust.select(col("c_custkey").as("dirty_id"),
+        concat(col("c_name").substr(lit(1), pos),
+          col("c_name").substr(pos + lit(2), length(col("c_name"))))
+          .as("dirty_name"))
+      Linkage.fuzzyJoinEd1(cust, "c_custkey", "c_name",
+          dirty, "dirty_id", "dirty_name")
+        .select(col("l_id").as("c_custkey"), col("l_name").as("c_name"),
+          col("r_id").as("dirty_id"), col("r_name").as("dirty_name"),
+          col("dist").cast("long").as("dist"))
+        .orderBy(col("c_custkey"), col("dirty_id"))
+    },
+      Some("""WITH dirty AS (
+           SELECT c_custkey AS dirty_id,
+             substr(c_name, 1, CAST(c_custkey % 18 AS INT)) ||
+             substr(c_name, CAST(c_custkey % 18 AS INT) + 2)
+               AS dirty_name
+           FROM customer)
+         SELECT c.c_custkey, c.c_name, d.dirty_id, d.dirty_name,
+           CAST(levenshtein(c.c_name, d.dirty_name) AS BIGINT) AS dist
+         FROM customer c CROSS JOIN dirty d
+         WHERE levenshtein(c.c_name, d.dirty_name) <= 1
+         ORDER BY c.c_custkey, d.dirty_id""")),
+
+    Query("fuzzy_join_ed2", (s, d) => {
+      // two sequential key-derived deletions (p1 on the original, p2
+      // on the 17-char intermediate — same nesting in the oracle),
+      // linked back at edit distance ≤ 2 via the 2-deletion
+      // neighborhood. The dirty side is a deterministic 20% batch
+      // (the realistic shape: incoming dirty batch ≪ master
+      // registry); the full self-cross at ed ≤ 2 over SEQUENTIAL
+      // zero-padded synthetic names degenerates to ~10^3 matches
+      // per name — an artifact of the fixture, not the algorithm
+      val cust = t(s, d, "customer")
+      val p1 = (col("c_custkey") % 18).cast("int")
+      val n1 = concat(col("c_name").substr(lit(1), p1),
+        col("c_name").substr(p1 + lit(2), length(col("c_name"))))
+      val p2 = (col("c_custkey") % 17).cast("int")
+      val dirty = cust.filter(col("c_custkey") % 5 === 0)
+        .select(col("c_custkey").as("dirty_id"),
+          concat(n1.substr(lit(1), p2), n1.substr(p2 + lit(2), length(n1)))
+            .as("dirty_name"))
+      Linkage.fuzzyJoinEd(cust, "c_custkey", "c_name",
+          dirty, "dirty_id", "dirty_name", maxDist = 2)
+        .select(col("l_id").as("c_custkey"), col("l_name").as("c_name"),
+          col("r_id").as("dirty_id"), col("r_name").as("dirty_name"),
+          col("dist").cast("long").as("dist"))
+        .orderBy(col("c_custkey"), col("dirty_id"))
+    },
+      Some("""WITH d1 AS (
+           SELECT c_custkey,
+             substr(c_name, 1, CAST(c_custkey % 18 AS INT)) ||
+             substr(c_name, CAST(c_custkey % 18 AS INT) + 2) AS n1
+           FROM customer),
+         dirty AS (
+           SELECT c_custkey AS dirty_id,
+             substr(n1, 1, CAST(c_custkey % 17 AS INT)) ||
+             substr(n1, CAST(c_custkey % 17 AS INT) + 2) AS dirty_name
+           FROM d1 WHERE c_custkey % 5 = 0)
+         SELECT c.c_custkey, c.c_name, d.dirty_id, d.dirty_name,
+           CAST(levenshtein(c.c_name, d.dirty_name) AS BIGINT) AS dist
+         FROM customer c CROSS JOIN dirty d
+         WHERE levenshtein(c.c_name, d.dirty_name) <= 2
+         ORDER BY c.c_custkey, d.dirty_id""")),
+
+    Query("moving_window", (s, d) =>
+      Analytics.movingWindow(t(s, d, "events"))
+        .withColumn("ts", ntz(col("ts")))
+        .orderBy(col("user_id"), col("event_id")),
+      Some("""SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
+         COUNT(*) OVER w AS n_trailing,
+         CAST(SUM(CAST(value AS DECIMAL(28,6))) OVER w AS DOUBLE)
+           AS sum_trailing
+         FROM events
+         WINDOW w AS (PARTITION BY user_id
+           ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
+           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
+         ORDER BY user_id, event_id""")),
+
+    Query("ntile_bands", (s, d) =>
+      Analytics.ntileBands(t(s, d, "orders")),
+      Some("""SELECT o_orderpriority, band, COUNT(*) AS n_orders,
+         MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
+         FROM (SELECT o_orderpriority, o_totalprice,
+                 CAST(ntile(10) OVER (PARTITION BY o_orderpriority
+                   ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS band
+               FROM orders)
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    Query("rank_features", (s, d) =>
+      Analytics.rankFeatures(t(s, d, "orders")),
+      Some("""SELECT o_orderpriority, o_orderkey, o_totalprice,
+           CAST(dense_rank() OVER w AS BIGINT) AS drank,
+           round(percent_rank() OVER w, 9) AS prank,
+           round(cume_dist() OVER w, 9) AS cdist
+         FROM orders
+         WINDOW w AS (PARTITION BY o_orderpriority
+           ORDER BY o_totalprice, o_orderkey)
+         ORDER BY o_orderpriority, o_orderkey""")),
+
+    Query("grouping_sets", (s, d) =>
+      Analytics.groupingSetsAgg(t(s, d, "orders")),
+      Some("""SELECT o_orderpriority, o_orderstatus,
+           COUNT(*) AS n_orders,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
+             AS total_price,
+           CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus)
+             AS BIGINT) AS gid
+         FROM orders
+         GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
+           (o_orderpriority), ())
+         ORDER BY gid, o_orderpriority NULLS FIRST,
+           o_orderstatus NULLS FIRST""")),
+
+    Query("json_extract", (s, d) =>
+      Analytics.jsonExtractAgg(t(s, d, "events")),
+      Some("""SELECT event_type, COUNT(*) AS n,
+           CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
+           CAST(MIN(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS min_k,
+           CAST(MAX(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS max_k
+         FROM events GROUP BY 1 ORDER BY 1""")),
+
+    Query("funnel_steps", (s, d) =>
+      Analytics.funnel(t(s, d, "events")),
+      Some("""WITH l1 AS (
+           SELECT user_id, MIN(ts) AS t1 FROM events
+           WHERE event_type = 'view' GROUP BY 1),
+         l2 AS (
+           SELECT e.user_id, MIN(e.ts) AS t2
+           FROM events e JOIN l1 ON e.user_id = l1.user_id
+           WHERE e.event_type = 'click' AND e.ts > l1.t1 GROUP BY 1),
+         l3 AS (
+           SELECT e.user_id, MIN(e.ts) AS t3
+           FROM events e JOIN l2 ON e.user_id = l2.user_id
+           WHERE e.event_type = 'purchase' AND e.ts > l2.t2 GROUP BY 1),
+         d AS (
+           SELECT l1.user_id,
+                  CASE WHEN l3.user_id IS NOT NULL THEN 3
+                       WHEN l2.user_id IS NOT NULL THEN 2
+                       ELSE 1 END AS depth
+           FROM l1
+           LEFT JOIN l2 ON l1.user_id = l2.user_id
+           LEFT JOIN l3 ON l1.user_id = l3.user_id)
+         SELECT CAST(depth AS BIGINT) AS depth, COUNT(*) AS n_users
+         FROM d GROUP BY 1 ORDER BY 1""")),
+
+    Query("retention_cohorts", (s, d) =>
+      Analytics.retentionCohorts(t(s, d, "events"))
+        .withColumn("cohort_week", ntz(col("cohort_week")))
+        .withColumn("act_week", ntz(col("act_week"))),
+      Some("""WITH cohorts AS (
+           SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
+           FROM events GROUP BY 1),
+         active AS (
+           SELECT DISTINCT user_id, date_trunc('week', ts) AS act_week
+           FROM events)
+         SELECT c.cohort_week, a.act_week, COUNT(*) AS n_users
+         FROM active a JOIN cohorts c ON a.user_id = c.user_id
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    Query("unpivot_long", (s, d) => {
+      // reshape completeness: melt the pivoted wide table back to
+      // long form — unpivot(pivot(x)) recovers the per-(user, type)
+      // counts the oracle computes directly. The type list is a
+      // static registry (pivot's API needs plan-time literals); the
+      // union branch makes the registry DRIFT-SAFE without the old
+      // eager distinct+collect job: any event type outside the
+      // registry surfaces as ordinary long-form rows — identical to
+      // the oracle's direct group-by — instead of silently dropping.
+      // One lazy plan, no driver-side type-derivation scan (the
+      // round-5 bench regression).
+      val types = Seq("click", "error", "purchase", "signup", "view")
+      val novel = t(s, d, "events")
+        .filter(!col("event_type").isin(types: _*))
+        .groupBy(col("user_id"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      Analytics.pivotAgg(t(s, d, "events"), types)
+        .unpivot(Array(col("user_id")), types.map(col).toArray,
+          "event_type", "n")
+        .filter(col("n") > 0)
+        .unionByName(novel)
+        .orderBy(col("user_id"), col("event_type"))
+    },
+      Some("""SELECT user_id, event_type, COUNT(*) AS n
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    Query("moment_stats", (s, d) =>
+      Analytics.momentStats(t(s, d, "lineitem")),
+      Some("""WITH s AS (
+           SELECT l_returnflag, COUNT(*) AS n,
+             CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sx,
+             CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6)))
+               AS DOUBLE) AS sx2,
+             CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
+               AS sy,
+             CAST(SUM(CAST(l_extendedprice * l_extendedprice
+               AS DECIMAL(38,6))) AS DOUBLE) AS sy2,
+             CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6)))
+               AS DOUBLE) AS sxy
+           FROM lineitem GROUP BY 1)
+         SELECT l_returnflag, n,
+           round(sy / CAST(n AS DOUBLE), 6) AS mean_price,
+           round(sqrt((CAST(n AS DOUBLE) * sy2 - sy * sy)
+             / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1))), 6)
+             AS stddev_price,
+           round((CAST(n AS DOUBLE) * sxy - sx * sy)
+             / (sqrt(CAST(n AS DOUBLE) * sx2 - sx * sx)
+               * sqrt(CAST(n AS DOUBLE) * sy2 - sy * sy)), 6)
+             AS corr_qty_price
+         FROM s ORDER BY l_returnflag""")),
+
+    Query("agg_maintain", (s, d) => {
+      // incremental view maintenance: fold three yearly batches into
+      // the per-customer aggregate state — the final state must be
+      // bit-identical to a from-scratch group-by (the oracle)
+      val o = t(s, d, "orders")
+      val cut1 = lit("1997-01-01").cast("timestamp")
+      val cut2 = lit("1999-01-01").cast("timestamp")
+      val keys = Seq("o_custkey")
+      val s0 = Analytics.emptyCountSum(s, o, keys)
+      val s1 = Analytics.maintainCountSum(s0,
+        o.filter(col("o_orderdate") < cut1), keys, "o_totalprice")
+      val s2 = Analytics.maintainCountSum(s1,
+        o.filter(col("o_orderdate") >= cut1 && col("o_orderdate") < cut2),
+        keys, "o_totalprice")
+      val s3 = Analytics.maintainCountSum(s2,
+        o.filter(col("o_orderdate") >= cut2), keys, "o_totalprice")
+      Analytics.finalizeCountSum(s3).orderBy(col("o_custkey"))
+    },
+      Some("""SELECT o_custkey, COUNT(*) AS n_rows,
+         CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
+           AS total
+         FROM orders GROUP BY o_custkey ORDER BY o_custkey""")),
+
+    Query("set_reconcile", (s, d) => {
+      val ev = t(s, d, "events")
+      val mid = lit("2024-01-16").cast("timestamp")
+      Analytics.setReconcile(
+        ev.filter(col("ts") < mid).select(col("user_id")),
+        ev.filter(col("ts") >= mid).select(col("user_id")),
+        "h1_only", "h2_only")
+        .orderBy(col("cohort"), col("user_id"))
+    },
+      Some("""WITH h1 AS (SELECT user_id FROM events
+                     WHERE ts < TIMESTAMP '2024-01-16'),
+         h2 AS (SELECT user_id FROM events
+                WHERE ts >= TIMESTAMP '2024-01-16')
+         SELECT user_id, 'both' AS cohort
+           FROM (SELECT user_id FROM h1 INTERSECT SELECT user_id FROM h2)
+         UNION ALL
+         SELECT user_id, 'h1_only' AS cohort
+           FROM (SELECT user_id FROM h1 EXCEPT SELECT user_id FROM h2)
+         UNION ALL
+         SELECT user_id, 'h2_only' AS cohort
+           FROM (SELECT user_id FROM h2 EXCEPT SELECT user_id FROM h1)
+         ORDER BY cohort, user_id""")),
+
+    Query("topk_per_group", (s, d) =>
+      Analytics.topKPerGroup(t(s, d, "orders"), Seq("o_custkey"),
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3)
+        .select(col("o_custkey"), col("rn"), col("o_orderkey"),
+          col("o_totalprice"))
+        .orderBy(col("o_custkey"), col("rn")),
+      Some("""SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
+           SELECT o_custkey, o_orderkey, o_totalprice,
+                  row_number() OVER (PARTITION BY o_custkey
+                    ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+           FROM orders)
+         WHERE rn <= 3 ORDER BY o_custkey, rn""")),
+
+    Query("rollup_agg", (s, d) =>
+      Analytics.rollupAgg(t(s, d, "region"), t(s, d, "nation"),
+        t(s, d, "customer"), t(s, d, "orders")),
+      Some("""SELECT r_name, n_name,
+         CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
+           AS total_price,
+         COUNT(*) AS n_orders
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY ROLLUP(r_name, n_name)
+         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""")),
+
+    Query("anti_semi_join", (s, d) =>
+      Analytics.customersWithoutOrders(t(s, d, "customer"),
+        t(s, d, "orders")
+          .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))),
+      Some("""SELECT c_custkey, c_name, c_mktsegment FROM customer c
+         WHERE NOT EXISTS (SELECT 1 FROM orders o
+           WHERE o.o_custkey = c.c_custkey
+             AND o.o_orderdate >= TIMESTAMP '2000-01-01')
+         ORDER BY c_custkey""")),
+
+    Query("semi_join", (s, d) =>
+      Analytics.customersWithOrders(t(s, d, "customer"),
+        t(s, d, "orders")
+          .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))),
+      Some("""SELECT c_custkey, c_name FROM customer c
+         WHERE EXISTS (SELECT 1 FROM orders o
+           WHERE o.o_custkey = c.c_custkey
+             AND o.o_orderdate >= TIMESTAMP '2000-01-01')
+         ORDER BY c_custkey""")),
+
+    Query("windowed_events", (s, d) =>
+      Analytics.windowedEvents(t(s, d, "events"))
+        .withColumn("win_start", ntz(col("win_start"))),
+      Some("""SELECT date_trunc('hour', ts) AS win_start, event_type,
+         COUNT(*) AS n_events,
+         CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY win_start, event_type
+         ORDER BY win_start, event_type""")),
+
+    Query("rate_spikes", (s, d) =>
+      // hourly per-type anomaly flags by integer cross-multiplication
+      // (n·hours > 2·total) — no float mean, engine-exact
+      Analytics.rateSpikes(t(s, d, "events"))
+        .withColumn("hour", ntz(col("hour")))
+        .orderBy(col("event_type"), col("hour")),
+      Some("""WITH h AS (
+           SELECT event_type, date_trunc('hour', ts) AS hour,
+             count(*) AS n
+           FROM events GROUP BY 1, 2),
+         t AS (SELECT event_type, sum(n) AS tot, count(*) AS hours
+               FROM h GROUP BY 1)
+         SELECT h.event_type, h.hour, h.n,
+           h.n * t.hours > 2 * t.tot AS spike
+         FROM h JOIN t USING (event_type)
+         ORDER BY event_type, hour""")),
+
+    Query("dq_profile", (s, d) =>
+      // per-column null/distinct audit in one scan, long form
+      Analytics.dqProfile(t(s, d, "customer"),
+        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal"))
+        .orderBy(col("col_name")),
+      Some("""SELECT 'c_custkey' AS col_name, count(*) AS n_rows,
+           count(*) - count(c_custkey) AS n_nulls,
+           count(DISTINCT c_custkey) AS n_distinct FROM customer
+         UNION ALL
+         SELECT 'c_name', count(*), count(*) - count(c_name),
+           count(DISTINCT c_name) FROM customer
+         UNION ALL
+         SELECT 'c_nationkey', count(*), count(*) - count(c_nationkey),
+           count(DISTINCT c_nationkey) FROM customer
+         UNION ALL
+         SELECT 'c_acctbal', count(*), count(*) - count(c_acctbal),
+           count(DISTINCT c_acctbal) FROM customer
+         ORDER BY col_name""")),
+
+    Query("sessionize", (s, d) =>
+      Analytics.sessionize(t(s, d, "events"))
+        .withColumn("session_start", ntz(col("session_start")))
+        .withColumn("session_end", ntz(col("session_end"))),
+      Some("""WITH g AS (
+           SELECT user_id, ts, event_id,
+                  CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+                         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
+                            > 1800000000 THEN 1 ELSE 0 END AS new_session
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         s AS (
+           SELECT user_id, ts,
+                  CAST(SUM(new_session) OVER (PARTITION BY user_id
+                    ORDER BY ts, event_id
+                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
+           FROM g)
+         SELECT user_id, session_seq, COUNT(*) AS n_events,
+                MIN(ts) AS session_start, MAX(ts) AS session_end
+         FROM s GROUP BY user_id, session_seq
+         ORDER BY user_id, session_seq""")),
+
+    Query("percentiles", (s, d) => Analytics.percentiles(t(s, d, "orders")),
+      Some("""SELECT o_orderpriority,
          round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
          round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
          round(quantile_cont(o_totalprice, 0.99), 4) AS p99
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
+         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 
-    // round-11 exact-regime oracle: at the oracle's SF each priority
-    // group holds ~3000 orders < accuracy 10000, so the GK sketch's
-    // rank error (n/accuracy = 0.3) is under one rank — the sketch
-    // provably returns the EXACT order statistic at rank ceil(p·n),
-    // which DuckDB recomputes with a window rank. (At bench SFs the
-    // query stays genuinely approximate; correctness is gated at
-    // sf0.01, where exactness is guaranteed, not incidental.
-    // approx_distinct has no such regime — HLL is biased at every
-    // cardinality — and stays rows-only, bracketed by its exact twin.)
-    "approx_percentiles" ->
-      """WITH r AS (
+    Query("approx_percentiles", (s, d) =>
+      Analytics.approxPercentiles(t(s, d, "orders")),
+      // round-11 exact-regime oracle: at the oracle's SF each priority
+      // group holds ~3000 orders < accuracy 10000, so the GK sketch's
+      // rank error (n/accuracy = 0.3) is under one rank — the sketch
+      // provably returns the EXACT order statistic at rank ceil(p·n),
+      // which DuckDB recomputes with a window rank. (At bench SFs the
+      // query stays genuinely approximate; correctness is gated at
+      // sf0.01, where exactness is guaranteed, not incidental.
+      // approx_distinct has no such regime — HLL is biased at every
+      // cardinality — and stays rows-only, bracketed by its exact twin.)
+      Some("""WITH r AS (
            SELECT o_orderpriority, o_totalprice,
              row_number() OVER (PARTITION BY o_orderpriority
                                 ORDER BY o_totalprice) AS rk,
@@ -4657,31 +3764,51 @@ object SparkEntry {
                  THEN o_totalprice END) AS p90,
            MAX(CASE WHEN rk = CAST(ceil(0.99 * n) AS BIGINT)
                  THEN o_totalprice END) AS p99
-         FROM r GROUP BY o_orderpriority ORDER BY o_orderpriority""",
+         FROM r GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 
-    "running_agg" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
+    Query("running_agg", (s, d) =>
+      Analytics.runningAgg(t(s, d, "orders"))
+        .withColumn("o_orderdate", ntz(col("o_orderdate"))),
+      Some("""SELECT o_custkey, o_orderkey, o_orderdate,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) OVER (
            PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
            ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum_total
-         FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey""",
+         FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey""")),
 
-    "pivot_agg" ->
-      """SELECT user_id,
+    Query("pivot_agg", (s, d) =>
+      Analytics.pivotAgg(t(s, d, "events"),
+        Seq("click", "error", "purchase", "signup", "view")),
+      Some("""SELECT user_id,
          COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
          COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error,
          COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
          COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
          COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS "view"
-         FROM events GROUP BY user_id ORDER BY user_id""",
+         FROM events GROUP BY user_id ORDER BY user_id""")),
 
-    "distinct_count" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_users,
+    Query("distinct_count", (s, d) =>
+      Analytics.distinctCounts(t(s, d, "events")),
+      Some("""SELECT event_type, COUNT(DISTINCT user_id) AS n_users,
          COUNT(*) AS n_events
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type""")),
 
-    "interval_join" ->
-      """WITH h AS (
+    Query("approx_distinct", (s, d) =>
+      Analytics.approxDistinctCounts(t(s, d, "events")),
+      None),
+
+    Query("interval_join", (s, d) => {
+      // SCD2 lookup: each event joined to the dimension version
+      // whose [valid_from, valid_to) covers its timestamp
+      val ev = t(s, d, "events")
+      val facts = ev.select(col("event_id"), col("user_id"), col("ts"))
+      val dim = Scd.scd2FromHistory(ev, Seq("user_id"), "ts",
+        Seq("event_type"), Seq("event_id"))
+      Temporal.intervalJoin(facts, "user_id", "ts", dim, "user_id")
+        .select(col("event_id"), col("user_id"), ntz(col("ts")).as("ts"),
+          col("event_type"), ntz(col("valid_from")).as("valid_from"))
+        .orderBy(col("event_id"))
+    },
+      Some("""WITH h AS (
            SELECT user_id, ts, event_id, event_type,
                   lag(event_type) OVER w AS prev_et,
                   lag(ts) OVER w AS prev_ts
@@ -4698,10 +3825,19 @@ object SparkEntry {
          FROM events e JOIN v ON e.user_id = v.user_id
            AND e.ts >= v.valid_from
            AND (v.valid_to IS NULL OR e.ts < v.valid_to)
-         ORDER BY e.event_id""",
+         ORDER BY e.event_id""")),
 
-    "asof_join" ->
-      """WITH ranked AS (
+    Query("asof_join", (s, d) =>
+      Temporal.asOfJoin(
+        t(s, d, "events").select(col("event_id"), col("user_id"), col("ts")),
+        "user_id", "ts",
+        t(s, d, "orders"), "o_custkey", "o_orderdate",
+        Seq("o_orderkey", "o_totalprice"))
+        .select(col("event_id"), col("user_id"), ntz(col("ts")).as("ts"),
+          col("o_orderkey").as("last_order_key"),
+          col("o_totalprice").as("last_order_total"))
+        .orderBy(col("event_id")),
+      Some("""WITH ranked AS (
            SELECT e.event_id, o.o_orderkey, o.o_totalprice,
                   row_number() OVER (PARTITION BY e.event_id
                     ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
@@ -4712,10 +3848,105 @@ object SparkEntry {
                 r.o_totalprice AS last_order_total
          FROM events e LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
            USING (event_id)
-         ORDER BY event_id""",
+         ORDER BY event_id""")),
 
-    "dup_clusters" ->
-      """WITH RECURSIVE s AS (
+    Query("asof_tolerance", (s, d) => {
+      // forward as-of with a 48 h tolerance: each view's NEXT
+      // purchase by the same user, if it came within two days —
+      // matches outside the window null out (left-outer semantics)
+      val ev = t(s, d, "events")
+      Temporal.asOfJoinDirected(
+        ev.filter(col("event_type") === "view")
+          .select(col("event_id"), col("user_id"), col("ts")),
+        "user_id", "ts",
+        ev.filter(col("event_type") === "purchase")
+          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+            col("event_id").as("p_id")),
+        "p_user", "p_ts",
+        Seq("p_id"), forward = true, toleranceSeconds = 48L * 3600)
+        .select(col("event_id"), col("user_id"), ntz(col("ts")).as("ts"),
+          col("p_id").as("next_purchase_id"))
+        .orderBy(col("event_id"))
+    },
+      Some("""SELECT e.event_id, e.user_id, CAST(e.ts AS TIMESTAMP) AS ts,
+                p.p_id AS next_purchase_id
+         FROM events e
+         LEFT JOIN LATERAL (
+           SELECT e2.event_id AS p_id
+           FROM events e2
+           WHERE e2.event_type = 'purchase'
+             AND e2.user_id = e.user_id
+             AND e2.ts >= e.ts
+             AND e2.ts <= e.ts + INTERVAL 48 HOUR
+           ORDER BY e2.ts ASC, e2.event_id DESC LIMIT 1
+         ) p ON TRUE
+         WHERE e.event_type = 'view'
+         ORDER BY e.event_id""")),
+
+    Query("gap_fill", (s, d) =>
+      // time-series densification: every hour between a user's first
+      // and last event, absent hours at count 0 — the resample a
+      // rate model needs (a bare groupBy silently skips empty
+      // buckets). Grid = per-key sequence explode (∝ span hours),
+      // joined back on (key, hour); both shuffles key-bounded
+      Temporal.gapFillCounts(t(s, d, "events")
+        .filter(col("user_id") <= 200))
+        .select(col("user_id"), ntz(col("hour")).as("hour"), col("cnt"))
+        .orderBy(col("user_id"), col("hour")),
+      Some("""WITH hourly AS (
+           SELECT user_id, date_trunc('hour', ts) AS hour,
+                  count(*) AS cnt
+           FROM events WHERE user_id <= 200 GROUP BY 1, 2),
+         spans AS (
+           SELECT user_id, min(hour) AS h0, max(hour) AS h1
+           FROM hourly GROUP BY 1),
+         grid AS (
+           SELECT user_id,
+                  unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
+           FROM spans)
+         SELECT g.user_id, g.hour, coalesce(h.cnt, 0) AS cnt
+         FROM grid g LEFT JOIN hourly h USING (user_id, hour)
+         ORDER BY g.user_id, g.hour""")),
+
+    Query("locf_fill", (s, d) =>
+      // gap-fill with last-observation-carried-forward: hourly mean
+      // value (decimal-exact sum / count), gaps carrying the latest
+      // observed hour forward — the streaming-safe no-look-ahead fill
+      Temporal.locfFill(t(s, d, "events")
+        .filter(col("user_id") <= 200), "user_id", "ts", "value")
+        .select(col("user_id"), ntz(col("hour")).as("hour"), col("v"))
+        .orderBy(col("user_id"), col("hour")),
+      Some("""WITH hourly AS (
+           SELECT user_id, date_trunc('hour', ts) AS hour,
+                  CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
+                    / count(*) AS v_obs
+           FROM events WHERE user_id <= 200 GROUP BY 1, 2),
+         spans AS (
+           SELECT user_id, min(hour) AS h0, max(hour) AS h1
+           FROM hourly GROUP BY 1),
+         grid AS (
+           SELECT user_id,
+                  unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
+           FROM spans)
+         SELECT g.user_id, g.hour,
+                last_value(h.v_obs IGNORE NULLS) OVER (
+                  PARTITION BY g.user_id ORDER BY g.hour
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v
+         FROM grid g LEFT JOIN hourly h USING (user_id, hour)
+         ORDER BY g.user_id, g.hour""")),
+
+    Query("dup_clusters", (s, d) => {
+      // the 100 TB path demonstrated end-to-end: pairs come from the
+      // LSH-bucketed minhash join (linear + bucket shuffles — no
+      // CartesianProduct anywhere in this plan), clustered by
+      // min-label propagation. The oracle recomputes the same pairs
+      // as exact shingle-set jaccard and clusters via recursive CTE.
+      val docs = t(s, d, "documents")
+      val pairs = Dedup.minhashLsh(docs, threshold = 0.5)
+      Clustering.dupClusters(docs.select(col("doc_id")), "doc_id", pairs)
+        .orderBy(col("doc_id"))
+    },
+      Some("""WITH RECURSIVE s AS (
            SELECT doc_id, list_distinct(
              CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 3
              THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
@@ -4740,10 +3971,30 @@ object SparkEntry {
            SELECT e.dst, cc.lbl FROM cc JOIN e ON e.src = cc.id)
          SELECT id AS doc_id, MIN(lbl) AS cluster_id,
                 (id = MIN(lbl)) AS is_representative
-         FROM cc GROUP BY id ORDER BY doc_id""",
+         FROM cc GROUP BY id ORDER BY doc_id""")),
 
-    "dedup_minhash_lsh" ->
-      """WITH s AS (
+    // §2.3 dedup family -------------------------------------------
+    Query("dedup_exact", (s, d) =>
+      Dedup.exact(t(s, d, "documents")).orderBy(col("keep_id")),
+      Some("""SELECT min(doc_id) AS keep_id, COUNT(*) AS n_copies
+         FROM documents GROUP BY text ORDER BY keep_id""")),
+
+    Query("dedup_keep_best", (s, d) =>
+      Dedup.exactKeepBest(t(s, d, "documents"), scoreCol = "n_chars")
+        .orderBy(col("keep_id")),
+      Some("""SELECT doc_id AS keep_id, CAST(n_chars AS BIGINT) AS best_score,
+                n_copies
+         FROM (SELECT doc_id, n_chars,
+                 row_number() OVER (PARTITION BY text
+                   ORDER BY n_chars DESC, doc_id DESC) AS rn,
+                 COUNT(*) OVER (PARTITION BY text) AS n_copies
+               FROM documents)
+         WHERE rn = 1 ORDER BY keep_id""")),
+
+    Query("dedup_minhash_lsh", (s, d) =>
+      Dedup.minhashLsh(t(s, d, "documents"), threshold = 0.5)
+        .orderBy(col("id_a"), col("id_b")),
+      Some("""WITH s AS (
            SELECT doc_id, list_distinct(
              CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 3
              THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
@@ -4762,10 +4013,20 @@ object SparkEntry {
            AND len(list_intersect(a.sh, b.sh)) /
              (len(a.sh) + len(b.sh)
               - len(list_intersect(a.sh, b.sh)))::DOUBLE >= 0.5
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b""")),
 
-    "dedup_incremental" ->
-      """WITH s AS (
+    // incremental ingest admission: the corpus is docs < 400, the
+    // arriving batch is docs >= 400 — same LSH parameters as
+    // dedup_minhash_lsh, so the exact-jaccard oracle's pair set is
+    // the already-verified one restricted to (corpus×batch ∪ intra)
+    Query("dedup_incremental", (s, d) => {
+      val docs = t(s, d, "documents")
+      Dedup.incrementalDedup(
+        docs.filter(col("doc_id") < 400),
+        docs.filter(col("doc_id") >= 400), threshold = 0.5)
+        .orderBy(col("doc_id"))
+    },
+      Some("""WITH s AS (
            SELECT doc_id, list_distinct(
              CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 3
              THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
@@ -4787,10 +4048,108 @@ object SparkEntry {
            CAST(count(p.id_a) AS BIGINT) AS n_matches,
            min(p.id_a) IS NULL AS admitted
          FROM batch b LEFT JOIN pairs p ON p.id_b = b.doc_id
-         GROUP BY b.doc_id ORDER BY b.doc_id""",
+         GROUP BY b.doc_id ORDER BY b.doc_id""")),
 
-    "ngram_jaccard" ->
-      """WITH g AS (
+    // round-8: oracle-checkable — the declarative token hash (two
+    // modular char-poly residues) replaces xxh64, so DuckDB
+    // recomputes fingerprints, the banded candidate condition AND
+    // the hamming verify bit-for-bit (was rows-only)
+    Query("dedup_simhash", (s, d) =>
+      Dedup.simhashPairs(t(s, d, "documents"), maxHamming = 10,
+        declarativeHash = true)
+        .select(col("id_a"), col("id_b"),
+          col("hamming").cast("long").as("hamming"))
+        .orderBy(col("id_a"), col("id_b")),
+      // simhash replay: per-token 62-bit declarative hash (h1·M2+h2
+      // over the two char-poly residues), ±1 votes per bit position,
+      // sign → fingerprint; pair set = shares one of four 16-bit
+      // chunks (the banded candidate condition — part of the operator
+      // CONTRACT, same as the engine) AND hamming ≤ 10
+      Some("""WITH tok AS (
+           SELECT doc_id,
+                  string_split_regex(trim(lower(text)), '\s+') AS ts
+           FROM documents),
+         hr AS (
+           SELECT doc_id,
+             list_transform(ts, t ->
+               list_reduce(list_prepend(CAST(1000000007 AS BIGINT),
+                 list_transform(
+                   list_filter(string_split_regex(t, ''), c -> c <> ''),
+                   c -> CAST(unicode(c) AS BIGINT))),
+                 (x, y) -> (x * 31 + y) % 2147483647)) AS h1s,
+             list_transform(ts, t ->
+               list_reduce(list_prepend(CAST(998244353 AS BIGINT),
+                 list_transform(
+                   list_filter(string_split_regex(t, ''), c -> c <> ''),
+                   c -> CAST(unicode(c) AS BIGINT))),
+                 (x, y) -> (x * 31 + y) % 2147483629)) AS h2s
+           FROM tok),
+         h AS (
+           SELECT doc_id,
+             list_transform(list_zip(h1s, h2s), p ->
+               ((p[1] * p[1] + p[1]) % 2147483647) * 2147483629
+               + ((p[2] * p[2] + 3 * p[2]) % 2147483629)) AS hs
+           FROM hr),
+         votes AS (
+           SELECT doc_id, b,
+                  SUM(CASE WHEN (th >> b) & 1 = 1 THEN 1 ELSE -1 END)
+                    AS vote
+           FROM (SELECT doc_id, unnest(hs) AS th FROM h)
+           CROSS JOIN generate_series(0, 61) AS g(b)
+           GROUP BY doc_id, b),
+         fp AS (
+           SELECT doc_id,
+                  CAST(SUM(CASE WHEN vote > 0
+                    THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT)
+                    AS simhash
+           FROM votes GROUP BY doc_id)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT)
+                  AS hamming
+         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+         WHERE (((a.simhash >> 0) & 65535) = ((b.simhash >> 0) & 65535)
+             OR ((a.simhash >> 16) & 65535) = ((b.simhash >> 16) & 65535)
+             OR ((a.simhash >> 32) & 65535) = ((b.simhash >> 32) & 65535)
+             OR ((a.simhash >> 48) & 65535) = ((b.simhash >> 48) & 65535))
+           AND bit_count(xor(a.simhash, b.simhash)) <= 10
+         ORDER BY id_a, id_b""")),
+
+    Query("segment_dedup", (s, d) =>
+      Dedup.segmentDupStats(t(s, d, "documents"), k = 8)
+        .orderBy(col("doc_id")),
+      Some("""WITH tok AS (
+           SELECT doc_id,
+                  string_split_regex(trim(lower(text)), '\s+') AS w
+           FROM documents),
+         segs AS (
+           SELECT doc_id,
+                  array_to_string(list_slice(w, i*8+1, i*8+8), ' ') AS seg
+           FROM tok, UNNEST(range(0,
+             CAST(greatest(ceil(len(w)/8.0), 1) AS BIGINT))) t(i)),
+         c AS (SELECT seg, count(*) AS n FROM segs GROUP BY seg)
+         SELECT s.doc_id, count(*) AS n_segs,
+           CAST(sum(CASE WHEN c.n > 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_dup_segs,
+           round(CAST(sum(CASE WHEN c.n > 1 THEN 1 ELSE 0 END) AS DOUBLE)
+             / count(*), 6) AS dup_frac
+         FROM segs s JOIN c USING (seg)
+         GROUP BY s.doc_id ORDER BY s.doc_id""")),
+
+    Query("ngram_jaccard", (s, d) => {
+      // ABSOLUTE stop-gram cap: grams in more than 500 docs carry no
+      // dedup signal no matter how big the corpus is, so the cap
+      // must NOT scale with it — a fractional cap keeps
+      // fraction-stable grams (stop-grams, long-word interiors)
+      // whose df grows ∝ n, and their Σ df² contribution grows ∝ n²
+      // (measured: the 10%-of-corpus cap made the sf0.1→sf1 sweep
+      // exponent 2.0; the absolute cap is the standard web-scale
+      // similarity-join posture and restores ~linear scaling, with
+      // candidate generation bounded by cap·|postings|).
+      Dedup.ngramJaccard(t(s, d, "documents"), threshold = 0.8,
+        maxDf = 500L)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      Some("""WITH g AS (
            SELECT doc_id, unnest(list_distinct(
              CASE WHEN length(lower(text)) < 8 THEN [lower(text)]
              ELSE list_transform(range(1, length(lower(text)) - 6),
@@ -4809,205 +4168,129 @@ object SparkEntry {
            AND len(list_intersect(a.s, b.s)) /
              (len(a.s) + len(b.s)
               - len(list_intersect(a.s, b.s)))::DOUBLE >= 0.8
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b""")),
 
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, COUNT(*) AS n_copies
-         FROM documents GROUP BY text ORDER BY keep_id""",
-
-    "dedup_keep_best" ->
-      """SELECT doc_id AS keep_id, CAST(n_chars AS BIGINT) AS best_score,
-                n_copies
-         FROM (SELECT doc_id, n_chars,
-                 row_number() OVER (PARTITION BY text
-                   ORDER BY n_chars DESC, doc_id DESC) AS rn,
-                 COUNT(*) OVER (PARTITION BY text) AS n_copies
-               FROM documents)
-         WHERE rn = 1 ORDER BY keep_id""",
-
-    "pii_redact" ->
-      """WITH c2 AS (
-           SELECT c_custkey, c_name ||
-             CASE WHEN c_custkey % 2 = 0
-               THEN ' user' || c_custkey || '@mail.example' ELSE '' END ||
-             CASE WHEN c_custkey % 3 = 0
-               THEN ' tel ' || (c_custkey % 90 + 10) || '-555-123-4567'
-               ELSE '' END ||
-             CASE WHEN c_custkey % 5 = 0
-               THEN ' ip 10.0.' || (c_custkey % 256) || '.7' ELSE '' END
-             AS contact
-           FROM customer)
-         SELECT c_custkey,
-           regexp_replace(regexp_replace(regexp_replace(contact,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-             '[EMAIL]', 'g'),
-             '\d{2,3}-\d{3}-\d{3}-\d{4}', '[PHONE]', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g')
-             AS redacted,
-           CAST(len(regexp_extract_all(contact,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-             AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(contact,
-             '\d{2,3}-\d{3}-\d{3}-\d{4}')) AS BIGINT) AS n_phones,
-           CAST(len(regexp_extract_all(contact,
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT)
-             AS n_ips
-         FROM c2 ORDER BY c_custkey""",
-
-    "seq_packing" ->
-      """WITH n AS (
-           SELECT doc_id, source,
-             CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-               AS BIGINT) AS n_tokens
-           FROM documents),
-         o AS (
-           SELECT doc_id, source, n_tokens,
-             sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id)
-               AS end_off
-           FROM n)
-         SELECT doc_id, source, n_tokens,
-           CAST(end_off - n_tokens AS BIGINT) AS start_off,
-           CAST(floor((end_off - n_tokens) / 128.0) AS BIGINT)
-             AS seq_first,
-           CAST(floor((end_off - 1) / 128.0) AS BIGINT) AS seq_last,
-           CAST(floor((end_off - 1) / 128.0)
-              - floor((end_off - n_tokens) / 128.0) AS BIGINT)
-             AS n_splits
-         FROM o ORDER BY doc_id""",
-
-    "segment_dedup" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  string_split_regex(trim(lower(text)), '\s+') AS w
-           FROM documents),
-         segs AS (
-           SELECT doc_id,
-                  array_to_string(list_slice(w, i*8+1, i*8+8), ' ') AS seg
-           FROM tok, UNNEST(range(0,
-             CAST(greatest(ceil(len(w)/8.0), 1) AS BIGINT))) t(i)),
-         c AS (SELECT seg, count(*) AS n FROM segs GROUP BY seg)
-         SELECT s.doc_id, count(*) AS n_segs,
-           CAST(sum(CASE WHEN c.n > 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dup_segs,
-           round(CAST(sum(CASE WHEN c.n > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*), 6) AS dup_frac
-         FROM segs s JOIN c USING (seg)
-         GROUP BY s.doc_id ORDER BY s.doc_id""",
-
-    "repetition_stats" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  unnest(string_split_regex(trim(lower(text)), '\s+')) AS g
-           FROM documents),
-         wc AS (SELECT doc_id, g, count(*) AS n FROM tok GROUP BY 1, 2),
-         wstat AS (
-           SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_words,
-             round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_word_frac
-           FROM wc GROUP BY 1),
-         big AS (
-           SELECT doc_id, unnest(
-             CASE WHEN len(w) < 2 THEN [concat_ws(' ', w)]
-             ELSE list_transform(range(1, len(w)),
-               i -> w[i] || ' ' || w[i+1]) END) AS g
-           FROM (SELECT doc_id,
-                   string_split_regex(trim(lower(text)), '\s+') AS w
-                 FROM documents)),
-         bc AS (SELECT doc_id, g, count(*) AS n FROM big GROUP BY 1, 2),
-         bstat AS (
-           SELECT doc_id,
-             round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_bigram_frac
-           FROM bc GROUP BY 1)
-         SELECT doc_id, n_words, top_word_frac, top_bigram_frac
-         FROM wstat JOIN bstat USING (doc_id) ORDER BY doc_id""",
-
-    "decontaminate" ->
-      """WITH sh AS (
-           SELECT doc_id, unnest(list_distinct(
-             CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 4
-             THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
-             ELSE list_transform(
-               range(1, len(string_split_regex(trim(lower(text)), '\s+')) - 2),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+3]) END)) AS s
-           FROM documents),
-         bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
-         contaminated AS (
-           SELECT DISTINCT sh.doc_id FROM sh JOIN bench USING (s)
-           WHERE sh.doc_id % 10 <> 0)
-         SELECT doc_id, source FROM documents
-         WHERE doc_id % 10 <> 0
-           AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-         ORDER BY doc_id""",
-
-    "contamination_score" ->
-      """WITH sh AS (
-           SELECT doc_id, unnest(list_distinct(
-             CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 4
-             THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
-             ELSE list_transform(
-               range(1, len(string_split_regex(trim(lower(text)), '\s+')) - 2),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+3]) END)) AS s
-           FROM documents),
-         bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
-         sc AS (
-           SELECT sh.doc_id, count(*) AS n_shingles, count(b.s) AS n_hits
-           FROM sh LEFT JOIN bench b ON sh.s = b.s
-           WHERE sh.doc_id % 10 <> 0 GROUP BY sh.doc_id)
-         SELECT doc_id, n_shingles, n_hits,
-           (n_hits * 10000) // n_shingles AS contamination_bp
-         FROM sc ORDER BY doc_id""",
-
-    "chunk_docs" ->
-      """WITH c AS (
-           SELECT doc_id, text,
-             unnest(range(0, greatest(1,
-               (len(text) - 60 + 179) // 180))) AS i
-           FROM documents)
-         SELECT doc_id, CAST(i AS INT) AS chunk_id,
-           CAST(i * 180 AS BIGINT) AS chunk_start,
-           substr(text, CAST(i * 180 + 1 AS INT), 240) AS chunk_text
-         FROM c ORDER BY doc_id, chunk_id""",
-
-    "weighted_sample" ->
-      """WITH s AS (
-           SELECT doc_id, n_chars,
+    Query("budget_sample", (s, d) =>
+      // token-budget assembly: "30k chars of en, 10k of de, all the
+      // rest" as one deterministic hash-ordered prefix per stratum;
+      // the oracle runs the equivalent single-window formulation
+      Mixing.tokenBudgetSample(t(s, d, "documents"), "lang", "doc_id",
+        "n_chars", Map("en" -> 30000L, "de" -> 10000L))
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .orderBy(col("doc_id")),
+      Some("""WITH sel AS (
+           SELECT doc_id, lang, n_chars,
              ((doc_id % 1000003) * 2654435761) % 1000 AS m,
              ((doc_id % 999983) * 2246822519) % 1000 AS m2
            FROM documents),
          c AS (
-           SELECT doc_id, n_chars,
-             SUM(n_chars) OVER (ORDER BY m, m2, doc_id
-               ROWS UNBOUNDED PRECEDING) AS cum
-           FROM s)
-         SELECT doc_id, n_chars, CAST(cum AS BIGINT) AS cum_weight
-         FROM c WHERE (cum - n_chars) // 5000 < cum // 5000
-         ORDER BY doc_id""",
+           SELECT *, SUM(n_chars) OVER (PARTITION BY lang
+               ORDER BY m, m2, doc_id ROWS UNBOUNDED PRECEDING) AS cum
+           FROM sel)
+         SELECT doc_id, lang, n_chars FROM c
+         WHERE cum <= CASE lang WHEN 'en' THEN 30000
+                                WHEN 'de' THEN 10000
+                                ELSE 9223372036854775807 END
+         ORDER BY doc_id""")),
 
-    "decontaminate_bloom" ->
-      """WITH sh AS (
-           SELECT doc_id, unnest(list_distinct(
-             CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 4
-             THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
-             ELSE list_transform(
-               range(1, len(string_split_regex(trim(lower(text)), '\s+')) - 2),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+3]) END)) AS s
-           FROM documents),
-         bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0)
-         SELECT sh.doc_id, count(DISTINCT sh.s) AS n_hits
-         FROM sh JOIN bench USING (s)
-         WHERE sh.doc_id % 10 <> 0
-         GROUP BY sh.doc_id ORDER BY doc_id""",
+    // round-8: oracle-checkable — SemDeDup under the kmeans_assign
+    // DETERMINISTIC cell model (per-label decimal-mean centroids +
+    // argmax-dot assignment): cells, intra-cell cosine pairs at the
+    // threshold, connected components, and the min-label collapse
+    // are all declaratively recomputable in DuckDB (a composition
+    // of the kmeans_assign + dedup_embedding + dup_clusters oracle
+    // techniques). Lloyd's-TRAINED cells (model-dependent output by
+    // construction) ride the same semanticCollapse code path and
+    // stay covered by DedupSpec's planted-cluster recovery.
+    Query("semantic_dedup", (s, d) => {
+      val emb = t(s, d, "embeddings")
+      val cRows = Similarity.groupCentroids(emb, "label")
+        .select(col("label").cast("int"), col("dim").cast("int"),
+          col("centroid").cast("float")).collect()
+      val labels = cRows.map(_.getInt(0)).distinct.sorted.toSeq
+      val cents: Seq[Seq[Float]] = labels.map(l =>
+        cRows.filter(_.getInt(0) == l).sortBy(_.getInt(1))
+          .map(_.getFloat(2)).toSeq)
+      val idx = graft.plans.IvfExpressions.topCentroids(
+        col("embedding"), cents, 1)(0)
+      val cells = emb.select(col("vec_id"), col("embedding"),
+        element_at(typedLit(labels), idx + 1).as("cell"))
+      Dedup.semanticCollapse(cells, threshold = 0.4)
+        .select(col("vec_id"), col("rep_id"), col("cell"))
+        .orderBy(col("vec_id"))
+    },
+      // semantic_dedup: the kmeans_assign deterministic cell model
+      // (per-label decimal-mean centroids, argmax-dot assignment),
+      // then intra-cell cosine pairs at the threshold
+      // (dedup_embedding's arithmetic), a recursive-CTE connected
+      // components (dup_clusters' technique), and the min-label
+      // collapse.
+      Some("""WITH RECURSIVE c AS (
+           SELECT label, dim,
+             CAST(round(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)))
+               AS DOUBLE) / count(*), 6) AS FLOAT) AS cent
+           FROM (
+             SELECT label, unnest(embedding) AS x,
+                    generate_subscripts(embedding, 1) AS dim
+             FROM embeddings)
+           GROUP BY label, dim),
+         cl AS (
+           SELECT label AS clabel,
+                  list(CAST(cent AS DOUBLE) ORDER BY dim) AS cv
+           FROM c GROUP BY label),
+         dots AS (
+           SELECT e.vec_id, k.clabel,
+             list_reduce(list_transform(range(1, len(e.embedding) + 1),
+               i -> CAST(e.embedding[i] AS DOUBLE) * k.cv[i]),
+               (a, b) -> a + b) AS dot
+           FROM embeddings e CROSS JOIN cl k),
+         cells AS (
+           SELECT vec_id, clabel AS cell FROM (
+             SELECT vec_id, clabel,
+               row_number() OVER (PARTITION BY vec_id
+                 ORDER BY dot DESC, clabel) AS rn
+             FROM dots) WHERE rn = 1),
+         pairs AS (
+           SELECT a.vec_id AS id_a, b.vec_id AS id_b
+           FROM embeddings a
+           JOIN cells ca ON ca.vec_id = a.vec_id
+           JOIN embeddings b ON a.vec_id < b.vec_id
+           JOIN cells cb ON cb.vec_id = b.vec_id
+           WHERE ca.cell = cb.cell
+             AND list_sum(list_transform(range(1, 65),
+               i -> CAST(a.embedding[i] AS DOUBLE)
+                  * CAST(b.embedding[i] AS DOUBLE)))
+             / (sqrt(list_sum(list_transform(range(1, 65),
+                  i -> CAST(a.embedding[i] AS DOUBLE)
+                     * CAST(a.embedding[i] AS DOUBLE))))
+              * sqrt(list_sum(list_transform(range(1, 65),
+                  i -> CAST(b.embedding[i] AS DOUBLE)
+                     * CAST(b.embedding[i] AS DOUBLE))))) >= 0.4),
+         ed AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                UNION ALL SELECT id_b, id_a FROM pairs),
+         cc(id, lbl) AS (
+           SELECT vec_id, vec_id FROM embeddings
+           UNION
+           SELECT ed.dst, cc.lbl FROM cc JOIN ed ON ed.src = cc.id)
+         SELECT cc.id AS vec_id, MIN(cc.lbl) AS rep_id,
+                any_value(cells.cell) AS cell
+         FROM cc JOIN cells ON cells.vec_id = cc.id
+         GROUP BY cc.id ORDER BY vec_id""")),
 
-    "dedup_embedding" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+    Query("dedup_embedding", (s, d) =>
+      // exact cosine join at a LOW threshold (0.4): the fixture's true
+      // pairs sit just above it (min 0.40001) against a background p99
+      // of 0.287, so no LSH banding can reach oracle recall here — the
+      // tiled 1-Bucket-Theta equi-join distributes the irreducible
+      // all-pairs work with no CartesianProduct (plan asserted in
+      // DedupSpec); the sub-quadratic high-threshold path is
+      // Dedup.embeddingNearDupLsh (recall-tested in DedupSpec)
+      // blocks sized to cover the core count with tiles
+      // (b·(b+1)/2 tasks): more blocks only adds replication volume
+      Dedup.embeddingNearDup(t(s, d, "embeddings"), threshold = 0.4,
+        blocks = 8)
+        .orderBy(col("id_a"), col("id_b")),
+      Some("""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          round(
            list_sum(list_transform(range(1, 65),
              i -> CAST(a.embedding[i] AS DOUBLE)
@@ -5029,135 +4312,181 @@ object SparkEntry {
             * sqrt(list_sum(list_transform(range(1, 65),
                 i -> CAST(b.embedding[i] AS DOUBLE)
                    * CAST(b.embedding[i] AS DOUBLE))))) >= 0.4
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b""")),
 
-    "ann_bruteforce" ->
-      """WITH scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             list_sum(list_transform(range(1, 65),
-               i -> CAST(q.embedding[i] AS DOUBLE)
-                  * CAST(c.embedding[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(range(1, 65),
-                  i -> CAST(q.embedding[i] AS DOUBLE)
-                     * CAST(q.embedding[i] AS DOUBLE))))
-              * sqrt(list_sum(list_transform(range(1, 65),
-                  i -> CAST(c.embedding[i] AS DOUBLE)
-                     * CAST(c.embedding[i] AS DOUBLE))))) AS cos
-           FROM embeddings q JOIN embeddings c
-             ON q.vec_id % 25 = 0 AND q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos, row_number() OVER (
-             PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS "rank"
-           FROM scored)
-         SELECT query_id, "rank", neighbor_id, round(cos, 6) AS cosine
-         FROM ranked WHERE "rank" <= 5 ORDER BY query_id, "rank"""",
-
-    // the planted exact-regime trio (round-11): the fixture makes
-    // the approximate structure exact by construction (identical
-    // cluster vectors — see plantedClusters), so the oracle is plain
-    // exact cosine top-3 over the same bit-pattern corpus, computed
-    // with integer popcount: dot(u_a, u_b) = bit_count(a & b).
-    "ann_lsh" -> annPlantedOracle,
-    "ann_ivf" -> annPlantedOracle,
-    "ann_index" -> annPlantedOracle,
-
-    "stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-         WHERE ((doc_id % 1000003) * 2654435761) % 1000 <
-           CASE lang WHEN 'de' THEN 500 WHEN 'en' THEN 200 ELSE 100 END
-         ORDER BY doc_id""",
-
-    "mixture_sample" ->
-      """WITH stats AS (
-           SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-         rates AS (
-           SELECT lang, least(1000, CAST(floor(800.0 *
-             pow(CAST(n AS DOUBLE) / (SELECT max(n) FROM stats), -0.5))
-             AS INT)) AS rmille
-           FROM stats)
-         SELECT d.doc_id AS doc_id, d.lang AS lang
-         FROM documents d JOIN rates r ON d.lang = r.lang
-         WHERE ((d.doc_id % 1000003) * 2654435761) % 1000 < r.rmille
-         ORDER BY doc_id""",
-
-    "dataset_split" ->
-      """SELECT doc_id,
-           CASE WHEN ((doc_id % 999983) * 2246822519) % 1000 < 900
-                  THEN 'train'
-                WHEN ((doc_id % 999983) * 2246822519) % 1000 < 950
-                  THEN 'val'
-                ELSE 'test' END AS split
-         FROM documents ORDER BY doc_id""",
-
-    "global_shuffle" ->
-      """WITH h AS (
-           SELECT doc_id, source,
-             ((doc_id % 999983) * 2654435761) % 1000003 AS hk
-           FROM documents)
-         SELECT doc_id, source, CAST(hk % 8 AS INT) AS shard,
-           CAST(row_number() OVER (PARTITION BY hk % 8
-             ORDER BY hk, doc_id) - 1 AS BIGINT) AS pos
-         FROM h ORDER BY shard, pos""",
-
-    "quantile_gate" ->
-      """WITH cuts AS (
-           SELECT lang, percentile_cont(0.5) WITHIN GROUP
-             (ORDER BY n_chars) AS q_cutoff
-           FROM documents GROUP BY lang)
-         SELECT d.doc_id AS doc_id, d.lang AS lang, d.n_chars AS n_chars,
-                c.q_cutoff AS q_cutoff
-         FROM documents d JOIN cuts c ON d.lang = c.lang
-         WHERE d.n_chars >= c.q_cutoff
-         ORDER BY doc_id""",
-
-    "tfidf_topk" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
-             '\s+')) AS term
+    Query("decontaminate", (s, d) => {
+      // benchmark hygiene: doc_id % 10 == 0 plays the eval set, the
+      // rest the training corpus; a train doc sharing any 4-word
+      // shingle with the eval set is dropped.
+      val docs = t(s, d, "documents")
+      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+      val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
+      Decontam.decontaminate(train, bench, n = 4)
+        .select(col("doc_id"), col("source"))
+        .orderBy(col("doc_id"))
+    },
+      Some("""WITH sh AS (
+           SELECT doc_id, unnest(list_distinct(
+             CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 4
+             THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
+             ELSE list_transform(
+               range(1, len(string_split_regex(trim(lower(text)), '\s+')) - 2),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+3]) END)) AS s
            FROM documents),
-         tf AS (SELECT doc_id, term, count(*) AS tf
-                FROM toks GROUP BY doc_id, term),
-         dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         ranked AS (
-           SELECT tf.doc_id AS doc_id, tf.term AS term, tf.tf AS tf,
-                  dfr.df AS df,
-                  tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfr.df) AS score,
-                  row_number() OVER (PARTITION BY tf.doc_id
-                    ORDER BY tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfr.df)
-                      DESC, tf.term) AS rank
-           FROM tf JOIN dfr ON tf.term = dfr.term CROSS JOIN n)
-         SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, df,
-                round(score, 6) AS tfidf
-         FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""",
+         bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
+         contaminated AS (
+           SELECT DISTINCT sh.doc_id FROM sh JOIN bench USING (s)
+           WHERE sh.doc_id % 10 <> 0)
+         SELECT doc_id, source FROM documents
+         WHERE doc_id % 10 <> 0
+           AND doc_id NOT IN (SELECT doc_id FROM contaminated)
+         ORDER BY doc_id""")),
 
-    "corpus_stats" ->
-      """SELECT source,
-           count(*) AS n_docs,
-           CAST(sum(len(text)) AS BIGINT) AS n_chars,
-           CAST(sum(len(string_split_regex(trim(lower(text)), '\s+')))
-             AS BIGINT) AS n_words,
-           count(DISTINCT lang) AS n_langs,
-           round(CAST(sum(CAST(len(text) AS DECIMAL(28,6))) AS DOUBLE)
-             / count(*), 6) AS mean_chars
-         FROM documents GROUP BY source ORDER BY source""",
+    Query("contamination_score", (s, d) => {
+      // the audit variant: a full scorecard over the training corpus
+      // (zero-hit docs kept) with an exact integer basis-points
+      // overlap fraction — thresholdable downstream at any level.
+      val docs = t(s, d, "documents")
+      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+      val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
+      Decontam.contaminationScore(train, bench, n = 4)
+        .orderBy(col("doc_id"))
+    },
+      Some("""WITH sh AS (
+           SELECT doc_id, unnest(list_distinct(
+             CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 4
+             THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
+             ELSE list_transform(
+               range(1, len(string_split_regex(trim(lower(text)), '\s+')) - 2),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+3]) END)) AS s
+           FROM documents),
+         bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
+         sc AS (
+           SELECT sh.doc_id, count(*) AS n_shingles, count(b.s) AS n_hits
+           FROM sh LEFT JOIN bench b ON sh.s = b.s
+           WHERE sh.doc_id % 10 <> 0 GROUP BY sh.doc_id)
+         SELECT doc_id, n_shingles, n_hits,
+           (n_hits * 10000) // n_shingles AS contamination_bp
+         FROM sc ORDER BY doc_id""")),
 
-    "group_centroids" ->
-      """SELECT label, dim, count(*) AS n,
-           round(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)))
-             AS DOUBLE) / count(*), 6) AS centroid
-         FROM (
-           SELECT label, unnest(embedding) AS x,
-                  generate_subscripts(embedding, 1) AS dim
-           FROM embeddings)
-         GROUP BY label, dim ORDER BY label, dim""",
+    Query("chunk_docs", (s, d) =>
+      // RAG chunking: 240-char windows, 60-char overlap, stable
+      // (doc_id, chunk_id, chunk_start) lineage; map-only plan
+      TextAnalysis.chunkDocs(t(s, d, "documents"), size = 240,
+        overlap = 60)
+        .orderBy(col("doc_id"), col("chunk_id")),
+      Some("""WITH c AS (
+           SELECT doc_id, text,
+             unnest(range(0, greatest(1,
+               (len(text) - 60 + 179) // 180))) AS i
+           FROM documents)
+         SELECT doc_id, CAST(i AS INT) AS chunk_id,
+           CAST(i * 180 AS BIGINT) AS chunk_start,
+           substr(text, CAST(i * 180 + 1 AS INT), 240) AS chunk_text
+         FROM c ORDER BY doc_id, chunk_id""")),
 
-    // round-7: was rows-only — every stage of the curation pipeline
-    // is individually SQL-expressible (the fragments below are the
-    // already-green gopher/dedup/minhash/cluster/lang/token oracles
-    // composed over the same curated base)
-    "corpus_curation" ->
-      """WITH RECURSIVE kept AS (
+    Query("weighted_sample", (s, d) =>
+      // PPS systematic sampling by doc length: expected sample =
+      // total_chars/stride docs, inclusion probability ∝ n_chars,
+      // hash-deterministic; two-phase windows, no global sort
+      Mixing.weightedSystematicSample(t(s, d, "documents"), "doc_id",
+        "n_chars", stride = 5000L)
+        .orderBy(col("doc_id")),
+      Some("""WITH s AS (
+           SELECT doc_id, n_chars,
+             ((doc_id % 1000003) * 2654435761) % 1000 AS m,
+             ((doc_id % 999983) * 2246822519) % 1000 AS m2
+           FROM documents),
+         c AS (
+           SELECT doc_id, n_chars,
+             SUM(n_chars) OVER (ORDER BY m, m2, doc_id
+               ROWS UNBOUNDED PRECEDING) AS cum
+           FROM s)
+         SELECT doc_id, n_chars, CAST(cum AS BIGINT) AS cum_weight
+         FROM c WHERE (cum - n_chars) // 5000 < cum // 5000
+         ORDER BY doc_id""")),
+
+    Query("decontaminate_bloom", (s, d) => {
+      // the same overlap through the 100 TB path: a Bloom filter
+      // built over the eval shingles by a distributed aggregate,
+      // attached as a scalar subquery, prefilters the corpus before
+      // the exact semi-join — identical output (no false negatives),
+      // same oracle as the exact path's hit counts.
+      val docs = t(s, d, "documents")
+      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+      val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
+      Decontam.contaminationHitsBloom(train, bench, n = 4,
+        expectedBenchShingles = 100000L)
+        .orderBy(col("doc_id"))
+    },
+      Some("""WITH sh AS (
+           SELECT doc_id, unnest(list_distinct(
+             CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) < 4
+             THEN [concat_ws(' ', string_split_regex(trim(lower(text)), '\s+'))]
+             ELSE list_transform(
+               range(1, len(string_split_regex(trim(lower(text)), '\s+')) - 2),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+3]) END)) AS s
+           FROM documents),
+         bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0)
+         SELECT sh.doc_id, count(DISTINCT sh.s) AS n_hits
+         FROM sh JOIN bench USING (s)
+         WHERE sh.doc_id % 10 <> 0
+         GROUP BY sh.doc_id ORDER BY doc_id""")),
+
+    Query("corpus_curation", (s, d) => {
+      // the whole training-data pipeline end-to-end: quality gate →
+      // exact dedup → minhash near-dup clustering → one
+      // representative per cluster, annotated with language and
+      // token counts. Every stage is an operator verified on its own
+      // above; this entry proves they compose as one plan.
+      // quality gate INLINE (a map-only filter — no join of
+      // qualityScore output back by id), exact dedup as a window over
+      // 16-byte hashed keys (one shuffle, no keep-id rejoin), lang +
+      // token annotations computed inline on the curated base (no
+      // self-joins). The only joins left are the ones that carry new
+      // information: the LSH pair join and the representatives join.
+      val docs = t(s, d, "documents")
+      val kept = docs.filter(
+        TextAnalysis.qualityFilter(col("text"), minWords = 5,
+          maxPunctRatio = 0.25))
+      val wDedup = org.apache.spark.sql.expressions.Window
+        .partitionBy(length(col("text")), xxhash64(col("text")))
+        .orderBy(col("doc_id"))
+      // the curated base is scanned by the minhash pair join (both
+      // sides), cluster vertices and the final annotation pass —
+      // persist once instead of recomputing the gate + dedup window
+      val uniq = kept.withColumn("__rn", row_number().over(wDedup))
+        .filter(col("__rn") === 1).drop("__rn")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pairs = Dedup.minhashLsh(uniq, threshold = 0.5)
+      val clusters = Clustering.dupClusters(
+        uniq.select(col("doc_id")), "doc_id", pairs)
+      val sizes = clusters.groupBy(col("cluster_id"))
+        .agg(count(lit(1)).as("n_members"))
+      val reps = clusters.filter(col("is_representative"))
+        .join(sizes, "cluster_id")
+        .select(col("doc_id"), col("n_members"))
+      uniq.select(col("doc_id"),
+          TextAnalysis.langId(col("text")).as("lang_guess"),
+          TextAnalysis.bpeTokenCount(col("text")).cast("long")
+            .as("n_bpe_tokens"))
+        .join(reps, "doc_id")
+        .orderBy(col("doc_id"))
+    },
+      // round-7: was rows-only — every stage of the curation pipeline
+      // is individually SQL-expressible (the fragments below are the
+      // already-green gopher/dedup/minhash/cluster/lang/token oracles
+      // composed over the same curated base)
+      Some("""WITH RECURSIVE kept AS (
            SELECT doc_id, text FROM documents
            WHERE len(string_split_regex(trim(lower(text)), '\s+')) >= 5
              AND (CASE WHEN length(text) = 0 THEN 0.0
@@ -5223,10 +4552,87 @@ object SparkEntry {
              FROM uniq))
          SELECT a.doc_id, a.lang_guess, a.n_bpe_tokens, r.n_members
          FROM ann a JOIN reps r USING (doc_id)
-         ORDER BY a.doc_id""",
+         ORDER BY a.doc_id""")),
 
-    "kmeans_assign" ->
-      """WITH c AS (
+    // §2.4 similarity search --------------------------------------
+    Query("ann_bruteforce", (s, d) => {
+      val emb = t(s, d, "embeddings")
+      Similarity.bruteForceTopK(
+        emb.filter(pmod(col("vec_id"), lit(25)) === 0), emb, k = 5)
+        .orderBy(col("query_id"), col("rank"))
+    },
+      Some("""WITH scored AS (
+           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             list_sum(list_transform(range(1, 65),
+               i -> CAST(q.embedding[i] AS DOUBLE)
+                  * CAST(c.embedding[i] AS DOUBLE)))
+             / (sqrt(list_sum(list_transform(range(1, 65),
+                  i -> CAST(q.embedding[i] AS DOUBLE)
+                     * CAST(q.embedding[i] AS DOUBLE))))
+              * sqrt(list_sum(list_transform(range(1, 65),
+                  i -> CAST(c.embedding[i] AS DOUBLE)
+                     * CAST(c.embedding[i] AS DOUBLE))))) AS cos
+           FROM embeddings q JOIN embeddings c
+             ON q.vec_id % 25 = 0 AND q.vec_id <> c.vec_id),
+         ranked AS (
+           SELECT query_id, neighbor_id, cos, row_number() OVER (
+             PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS "rank"
+           FROM scored)
+         SELECT query_id, "rank", neighbor_id, round(cos, 6) AS cosine
+         FROM ranked WHERE "rank" <= 5 ORDER BY query_id, "rank"""")),
+
+    Query("ann_lsh", (s, d) => {
+      // bits auto-scale with the corpus (constant bucket occupancy):
+      // a fixed plane count makes candidate pairs quadratic when
+      // corpus and query batch both grow with the data — measured
+      // 90 s at sf1 vs 1.5 s at sf0.1 under a pinned bits=4.
+      // Round-11 oracle conversion: the corpus is the PLANTED
+      // exact-regime fixture (sized from the embeddings table, so it
+      // still scales with SF) — every cluster's members share one
+      // bit-pattern vector, so bucket membership is deterministic
+      // under ANY plane seed and the approximate result provably
+      // equals exact brute-force top-k, which DuckDB recomputes
+      // with integer popcount math.
+      // bits auto-size inside lshTopK (one source of truth for the
+      // constant-occupancy rule); its count() runs over the
+      // range-derived fixture frame — no table scan
+      val emb = plantedClusters(s, plantedClusterCount(s, d))
+      Similarity.lshTopK(
+        emb.filter(pmod(col("vec_id"), lit(25)) === 0), emb, k = 3)
+        .orderBy(col("query_id"), col("rank"))
+    },
+      // the planted exact-regime trio (round-11): the fixture makes
+      // the approximate structure exact by construction (identical
+      // cluster vectors — see plantedClusters), so the oracle is plain
+      // exact cosine top-3 over the same bit-pattern corpus, computed
+      // with integer popcount: dot(u_a, u_b) = bit_count(a & b).
+      Some(annPlantedOracle)),
+
+    Query("kmeans_assign", (s, d) => {
+      // the assignment half of Lloyd's under a DETERMINISTIC model:
+      // centroids are the per-label means (groupCentroids' decimal-
+      // summed, bit-reproducible aggregate — its own oracle is
+      // green), and the argmax-dot assignment runs through the same
+      // codegen'd topCentroids kernel k-means training uses, so the
+      // whole entry is declaratively recomputable in DuckDB
+      // (round-7: was rows-only). TRAINING (init + iterations) has
+      // model-dependent output by construction and stays covered by
+      // the planted-cluster recovery spec (SimilaritySpec).
+      val emb = t(s, d, "embeddings")
+      val cRows = Similarity.groupCentroids(emb, "label")
+        .select(col("label").cast("int"), col("dim").cast("int"),
+          col("centroid").cast("float")).collect()
+      val labels = cRows.map(_.getInt(0)).distinct.sorted.toSeq
+      val cents: Seq[Seq[Float]] = labels.map(l =>
+        cRows.filter(_.getInt(0) == l).sortBy(_.getInt(1))
+          .map(_.getFloat(2)).toSeq)
+      val idx = graft.plans.IvfExpressions.topCentroids(
+        col("embedding"), cents, 1)(0)
+      emb.select(col("vec_id"), col("label"),
+          element_at(typedLit(labels), idx + 1).as("assigned_label"))
+        .orderBy(col("vec_id"))
+    },
+      Some("""WITH c AS (
            SELECT label, dim,
              CAST(round(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)))
                AS DOUBLE) / count(*), 6) AS FLOAT) AS cent
@@ -5251,10 +4657,44 @@ object SparkEntry {
                ORDER BY dot DESC, clabel) AS rn
            FROM dots)
          SELECT vec_id, label, clabel AS assigned_label
-         FROM ranked WHERE rn = 1 ORDER BY vec_id""",
+         FROM ranked WHERE rn = 1 ORDER BY vec_id""")),
 
-    "embedding_quantize" ->
-      """WITH s AS (
+    Query("ann_ivf", (s, d) => {
+      // planted exact regime (see ann_lsh): identical-vector cluster
+      // members share a Voronoi cell under ANY trained centroids and
+      // a query's probe set contains its own cell, so IVF equals
+      // exact top-k by construction — the DuckDB oracle is the plain
+      // exact ranking.
+      val emb = plantedClusters(s, plantedClusterCount(s, d))
+      Similarity.ivfTopK(
+        emb.filter(pmod(col("vec_id"), lit(25)) === 0), emb, k = 3,
+        nlist = 32, nprobe = 8)
+        .orderBy(col("query_id"), col("rank"))
+    },
+      Some(annPlantedOracle)),
+
+    Query("ann_index", (s, d) => {
+      // persisted-index ANN (build/probe split): the corpus-scale
+      // bucketing pass happens once at BUILD, probes join the stored
+      // cid partitions with the kernel on the query side only (plan
+      // asserted in AnnIndexSpec). On the planted exact-regime
+      // fixture the stored-index probe equals exact top-k for the
+      // same reason the in-memory IVF does (cell cohesion of
+      // identical vectors), so the build/probe composition gets the
+      // same DuckDB oracle.
+      val dir = java.nio.file.Files.createTempDirectory("graft_annidx")
+      val emb = plantedClusters(s, plantedClusterCount(s, d))
+      graft.operators.AnnIndex.buildIvf(emb, s"$dir/ivf", nlist = 32,
+        iters = 3)
+      graft.operators.AnnIndex.ivfProbe(s, s"$dir/ivf",
+        emb.filter(pmod(col("vec_id"), lit(25)) === 0), k = 3, nprobe = 8)
+        .orderBy(col("query_id"), col("rank"))
+    },
+      Some(annPlantedOracle)),
+
+    Query("embedding_quantize", (s, d) =>
+      Similarity.quantizeInt8Stats(t(s, d, "embeddings")),
+      Some("""WITH s AS (
            SELECT vec_id, embedding,
              list_max(list_transform(embedding,
                x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
@@ -5277,10 +4717,86 @@ object SparkEntry {
              AS mse,
            round(list_max(list_transform(errs, er -> abs(er))), 9)
              AS max_abs_err
-         FROM e ORDER BY vec_id""",
+         FROM e ORDER BY vec_id""")),
 
-    "lang_id" ->
-      """WITH f AS (
+    // §2.5 text analysis ------------------------------------------
+    Query("stratified_sample", (s, d) =>
+      TextAnalysis.stratifiedSample(t(s, d, "documents"), "lang",
+        Map("de" -> 0.5, "en" -> 0.2), defaultRate = 0.1, idCol = "doc_id")
+        .select(col("doc_id"), col("lang"), col("source"))
+        .orderBy(col("doc_id")),
+      Some("""SELECT doc_id, lang, source FROM documents
+         WHERE ((doc_id % 1000003) * 2654435761) % 1000 <
+           CASE lang WHEN 'de' THEN 500 WHEN 'en' THEN 200 ELSE 100 END
+         ORDER BY doc_id""")),
+
+    // §2.5b dataset assembly --------------------------------------
+    Query("mixture_sample", (s, d) =>
+      Mixing.mixtureSample(t(s, d, "documents"), "lang", "doc_id",
+        temperature = 0.5, maxRate = 0.8)
+        .select(col("doc_id"), col("lang"))
+        .orderBy(col("doc_id")),
+      Some("""WITH stats AS (
+           SELECT lang, count(*) AS n FROM documents GROUP BY lang),
+         rates AS (
+           SELECT lang, least(1000, CAST(floor(800.0 *
+             pow(CAST(n AS DOUBLE) / (SELECT max(n) FROM stats), -0.5))
+             AS INT)) AS rmille
+           FROM stats)
+         SELECT d.doc_id AS doc_id, d.lang AS lang
+         FROM documents d JOIN rates r ON d.lang = r.lang
+         WHERE ((d.doc_id % 1000003) * 2654435761) % 1000 < r.rmille
+         ORDER BY doc_id""")),
+
+    Query("dataset_split", (s, d) =>
+      Mixing.datasetSplit(t(s, d, "documents"), "doc_id",
+        Seq("train" -> 900, "val" -> 50, "test" -> 50))
+        .select(col("doc_id"), col("split"))
+        .orderBy(col("doc_id")),
+      Some("""SELECT doc_id,
+           CASE WHEN ((doc_id % 999983) * 2246822519) % 1000 < 900
+                  THEN 'train'
+                WHEN ((doc_id % 999983) * 2246822519) % 1000 < 950
+                  THEN 'val'
+                ELSE 'test' END AS split
+         FROM documents ORDER BY doc_id""")),
+
+    Query("global_shuffle", (s, d) =>
+      Mixing.globalShuffle(
+        t(s, d, "documents").select(col("doc_id"), col("source")),
+        "doc_id", nShards = 8)
+        .select(col("doc_id"), col("source"), col("shard"), col("pos"))
+        .orderBy(col("shard"), col("pos")),
+      Some("""WITH h AS (
+           SELECT doc_id, source,
+             ((doc_id % 999983) * 2654435761) % 1000003 AS hk
+           FROM documents)
+         SELECT doc_id, source, CAST(hk % 8 AS INT) AS shard,
+           CAST(row_number() OVER (PARTITION BY hk % 8
+             ORDER BY hk, doc_id) - 1 AS BIGINT) AS pos
+         FROM h ORDER BY shard, pos""")),
+
+    Query("quantile_gate", (s, d) =>
+      Mixing.quantileGate(
+        t(s, d, "documents").select(col("doc_id"), col("lang"),
+          col("n_chars")),
+        "lang", "n_chars", q = 0.5)
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          col("q_cutoff"))
+        .orderBy(col("doc_id")),
+      Some("""WITH cuts AS (
+           SELECT lang, percentile_cont(0.5) WITHIN GROUP
+             (ORDER BY n_chars) AS q_cutoff
+           FROM documents GROUP BY lang)
+         SELECT d.doc_id AS doc_id, d.lang AS lang, d.n_chars AS n_chars,
+                c.q_cutoff AS q_cutoff
+         FROM documents d JOIN cuts c ON d.lang = c.lang
+         WHERE d.n_chars >= c.q_cutoff
+         ORDER BY doc_id""")),
+
+    Query("lang_id", (s, d) =>
+      TextAnalysis.langIdTable(t(s, d, "documents")).orderBy(col("doc_id")),
+      Some("""WITH f AS (
            SELECT doc_id,
              len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
                t -> t IN ('the','and','of','to','is'))) AS s_en,
@@ -5298,10 +4814,59 @@ object SparkEntry {
                 WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
                 WHEN s_es = greatest(s_en, s_de, s_fr, s_es) THEN 'es'
                 ELSE 'und' END AS lang_guess
-         FROM f ORDER BY doc_id""",
+         FROM f ORDER BY doc_id""")),
 
-    "quality_score" ->
-      """SELECT doc_id,
+    Query("tfidf_topk", (s, d) =>
+      TextAnalysis.tfidfTopK(t(s, d, "documents"), k = 3)
+        .orderBy(col("doc_id"), col("rank")),
+      Some("""WITH toks AS (
+           SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
+             '\s+')) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS tf
+                FROM toks GROUP BY doc_id, term),
+         dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         n AS (SELECT count(*) AS n_docs FROM documents),
+         ranked AS (
+           SELECT tf.doc_id AS doc_id, tf.term AS term, tf.tf AS tf,
+                  dfr.df AS df,
+                  tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfr.df) AS score,
+                  row_number() OVER (PARTITION BY tf.doc_id
+                    ORDER BY tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfr.df)
+                      DESC, tf.term) AS rank
+           FROM tf JOIN dfr ON tf.term = dfr.term CROSS JOIN n)
+         SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, df,
+                round(score, 6) AS tfidf
+         FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""")),
+
+    Query("corpus_stats", (s, d) =>
+      TextAnalysis.corpusStats(t(s, d, "documents"))
+        .orderBy(col("source")),
+      Some("""SELECT source,
+           count(*) AS n_docs,
+           CAST(sum(len(text)) AS BIGINT) AS n_chars,
+           CAST(sum(len(string_split_regex(trim(lower(text)), '\s+')))
+             AS BIGINT) AS n_words,
+           count(DISTINCT lang) AS n_langs,
+           round(CAST(sum(CAST(len(text) AS DECIMAL(28,6))) AS DOUBLE)
+             / count(*), 6) AS mean_chars
+         FROM documents GROUP BY source ORDER BY source""")),
+
+    Query("group_centroids", (s, d) =>
+      Similarity.groupCentroids(t(s, d, "embeddings"), "label")
+        .orderBy(col("label"), col("dim")),
+      Some("""SELECT label, dim, count(*) AS n,
+           round(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)))
+             AS DOUBLE) / count(*), 6) AS centroid
+         FROM (
+           SELECT label, unnest(embedding) AS x,
+                  generate_subscripts(embedding, 1) AS dim
+           FROM embeddings)
+         GROUP BY label, dim ORDER BY label, dim""")),
+
+    Query("quality_score", (s, d) =>
+      TextAnalysis.qualityScore(t(s, d, "documents")).orderBy(col("doc_id")),
+      Some("""SELECT doc_id,
          length(text) AS n_chars,
          len(string_split_regex(trim(lower(text)), '\s+')) AS n_words,
          round((length(text) - length(regexp_replace(text,
@@ -5315,95 +4880,31 @@ object SparkEntry {
              - (len(string_split_regex(trim(lower(text)), '\s+')) - 1))
            / CAST(len(string_split_regex(trim(lower(text)), '\s+'))
              AS DOUBLE), 6) AS mean_word_len
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id""")),
 
-    // bpe_encode: under the fixed rank-ordered merge table, the
-    // kernel equals one left-to-right replace pass per rank (see
-    // the query comment for the invariant that makes this exact).
-    // Each word becomes a bracketed token string (corpus is ASCII —
-    // the brackets cannot collide with content), the six merges
-    // apply as string replaces, and the token count is the split
-    // length; empty docs coalesce to 0.
-    "bpe_encode" ->
-      """SELECT doc_id, CAST(coalesce(list_sum(list_transform(
-           list_filter(string_split(text, ' '), w -> w <> ''),
-           w -> len(string_split(
-             replace(replace(replace(replace(replace(replace(
-               '⟨' || array_to_string(string_split_regex(w, ''), '⟩⟨')
-                   || '⟩',
-               '⟨t⟩⟨h⟩', '⟨th⟩'), '⟨th⟩⟨e⟩', '⟨the⟩'),
-               '⟨a⟩⟨n⟩', '⟨an⟩'), '⟨an⟩⟨d⟩', '⟨and⟩'),
-               '⟨i⟩⟨n⟩', '⟨in⟩'), '⟨e⟩⟨r⟩', '⟨er⟩'),
-             '⟩⟨')))), 0) AS BIGINT) AS n_tokens
-         FROM documents ORDER BY doc_id""",
+    Query("token_count", (s, d) =>
+      TextAnalysis.tokenCounts(t(s, d, "documents")).orderBy(col("doc_id")),
+      Some("""SELECT doc_id,
+         len(string_split_regex(trim(lower(text)), '\s+'))
+           AS n_whitespace_tokens,
+         len(list_filter(string_split_regex(regexp_replace(lower(text),
+             '([a-z]+|[0-9]+|[^a-z0-9 ])', '\1 ', 'g'), ' +'),
+           x -> length(x) > 0)) AS n_bpe_tokens,
+         CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_chars_div4
+         FROM documents ORDER BY doc_id""")),
 
-    // semantic_dedup: the kmeans_assign deterministic cell model
-    // (per-label decimal-mean centroids, argmax-dot assignment),
-    // then intra-cell cosine pairs at the threshold
-    // (dedup_embedding's arithmetic), a recursive-CTE connected
-    // components (dup_clusters' technique), and the min-label
-    // collapse.
-    "semantic_dedup" ->
-      """WITH RECURSIVE c AS (
-           SELECT label, dim,
-             CAST(round(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)))
-               AS DOUBLE) / count(*), 6) AS FLOAT) AS cent
-           FROM (
-             SELECT label, unnest(embedding) AS x,
-                    generate_subscripts(embedding, 1) AS dim
-             FROM embeddings)
-           GROUP BY label, dim),
-         cl AS (
-           SELECT label AS clabel,
-                  list(CAST(cent AS DOUBLE) ORDER BY dim) AS cv
-           FROM c GROUP BY label),
-         dots AS (
-           SELECT e.vec_id, k.clabel,
-             list_reduce(list_transform(range(1, len(e.embedding) + 1),
-               i -> CAST(e.embedding[i] AS DOUBLE) * k.cv[i]),
-               (a, b) -> a + b) AS dot
-           FROM embeddings e CROSS JOIN cl k),
-         cells AS (
-           SELECT vec_id, clabel AS cell FROM (
-             SELECT vec_id, clabel,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY dot DESC, clabel) AS rn
-             FROM dots) WHERE rn = 1),
-         pairs AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM embeddings a
-           JOIN cells ca ON ca.vec_id = a.vec_id
-           JOIN embeddings b ON a.vec_id < b.vec_id
-           JOIN cells cb ON cb.vec_id = b.vec_id
-           WHERE ca.cell = cb.cell
-             AND list_sum(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE)
-                  * CAST(b.embedding[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(range(1, 65),
-                  i -> CAST(a.embedding[i] AS DOUBLE)
-                     * CAST(a.embedding[i] AS DOUBLE))))
-              * sqrt(list_sum(list_transform(range(1, 65),
-                  i -> CAST(b.embedding[i] AS DOUBLE)
-                     * CAST(b.embedding[i] AS DOUBLE))))) >= 0.4),
-         ed AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL SELECT id_b, id_a FROM pairs),
-         cc(id, lbl) AS (
-           SELECT vec_id, vec_id FROM embeddings
-           UNION
-           SELECT ed.dst, cc.lbl FROM cc JOIN ed ON ed.src = cc.id)
-         SELECT cc.id AS vec_id, MIN(cc.lbl) AS rep_id,
-                any_value(cells.cell) AS cell
-         FROM cc JOIN cells ON cells.vec_id = cc.id
-         GROUP BY cc.id ORDER BY vec_id""",
-
-    // doc_fingerprint: both fingerprints are modular char-polynomial
-    // folds (h(tok) = fold (a·31 + codepoint) mod M per modulus;
-    // rolling folds a·1000003 + h(tok), bag folds a + h(tok); the
-    // two ~2^31-prime residues combine as r1·M2 + r2) — recomputed
-    // here with the same arithmetic via list lambdas. list_prepend
-    // supplies the fold's zero so empty token lists hash to 0.
-    "doc_fingerprint" ->
-      """WITH tok AS (
+    // round-8: oracle-checkable — the fingerprint primitives are
+    // declarative modular folds an external engine can recompute
+    // exactly (was rows-only under xxhash64)
+    Query("doc_fingerprint", (s, d) =>
+      TextAnalysis.fingerprints(t(s, d, "documents")).orderBy(col("doc_id")),
+      // doc_fingerprint: both fingerprints are modular char-polynomial
+      // folds (h(tok) = fold (a·31 + codepoint) mod M per modulus;
+      // rolling folds a·1000003 + h(tok), bag folds a + h(tok); the
+      // two ~2^31-prime residues combine as r1·M2 + r2) — recomputed
+      // here with the same arithmetic via list lambdas. list_prepend
+      // supplies the fold's zero so empty token lists hash to 0.
+      Some("""WITH tok AS (
            SELECT doc_id,
                   string_split_regex(trim(lower(text)), '\s+') AS ts
            FROM documents),
@@ -5431,37 +4932,125 @@ object SparkEntry {
              (a, b) -> (a + b) % 2147483647) * 2147483629
            + list_reduce(list_prepend(CAST(0 AS BIGINT), h2),
              (a, b) -> (a + b) % 2147483629) AS bag_fp
-         FROM h ORDER BY doc_id""",
+         FROM h ORDER BY doc_id""")),
 
-    "token_count" ->
-      """SELECT doc_id,
-         len(string_split_regex(trim(lower(text)), '\s+'))
-           AS n_whitespace_tokens,
-         len(list_filter(string_split_regex(regexp_replace(lower(text),
-             '([a-z]+|[0-9]+|[^a-z0-9 ])', '\1 ', 'g'), ' +'),
-           x -> length(x) > 0)) AS n_bpe_tokens,
-         CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_chars_div4
-         FROM documents ORDER BY doc_id""",
+    Query("repetition_stats", (s, d) =>
+      TextAnalysis.repetitionStats(t(s, d, "documents"))
+        .orderBy(col("doc_id")),
+      Some("""WITH tok AS (
+           SELECT doc_id,
+                  unnest(string_split_regex(trim(lower(text)), '\s+')) AS g
+           FROM documents),
+         wc AS (SELECT doc_id, g, count(*) AS n FROM tok GROUP BY 1, 2),
+         wstat AS (
+           SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_words,
+             round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_word_frac
+           FROM wc GROUP BY 1),
+         big AS (
+           SELECT doc_id, unnest(
+             CASE WHEN len(w) < 2 THEN [concat_ws(' ', w)]
+             ELSE list_transform(range(1, len(w)),
+               i -> w[i] || ' ' || w[i+1]) END) AS g
+           FROM (SELECT doc_id,
+                   string_split_regex(trim(lower(text)), '\s+') AS w
+                 FROM documents)),
+         bc AS (SELECT doc_id, g, count(*) AS n FROM big GROUP BY 1, 2),
+         bstat AS (
+           SELECT doc_id,
+             round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_bigram_frac
+           FROM bc GROUP BY 1)
+         SELECT doc_id, n_words, top_word_frac, top_bigram_frac
+         FROM wstat JOIN bstat USING (doc_id) ORDER BY doc_id""")),
 
-    // mm_features: the stub decoder's ×255 feature sums are plain
-    // integer byte sums per (position mod 8) lane; the corpus is
-    // ASCII (asserted in MultimodalSpec), so DuckDB reconstructs them
-    // from codepoints.
-    "mm_features" -> {
-      val lanes = (0 until 8).map(j =>
-        s"""CAST(list_sum(list_transform(
-           list_filter(range(1, length(text) + 1), i -> (i-1) % 8 = $j),
-           i -> ord(text[i]))) AS BIGINT) AS f$j""").mkString(",\n         ")
-      s"""SELECT doc_id AS media_id,
-         $lanes
-         FROM documents ORDER BY media_id"""
+    Query("pii_redact", (s, d) => {
+      // the synthetic tables carry no PII, so the demo input is a
+      // deterministic contact string derived from customer keys
+      // (same construction in the oracle SQL) — what's under test is
+      // the redaction chain, not the synthesis.
+      val contact = concat(col("c_name"),
+        when(pmod(col("c_custkey"), lit(2)) === 0,
+          concat(lit(" user"), col("c_custkey").cast("string"),
+            lit("@mail.example"))).otherwise(lit("")),
+        when(pmod(col("c_custkey"), lit(3)) === 0,
+          concat(lit(" tel "),
+            (pmod(col("c_custkey"), lit(90)) + 10).cast("string"),
+            lit("-555-123-4567"))).otherwise(lit("")),
+        when(pmod(col("c_custkey"), lit(5)) === 0,
+          concat(lit(" ip 10.0."),
+            pmod(col("c_custkey"), lit(256)).cast("string"),
+            lit(".7"))).otherwise(lit("")))
+      val (ne, np, ni) = TextAnalysis.piiCounts(contact)
+      t(s, d, "customer").select(col("c_custkey"),
+          TextAnalysis.redactPii(contact).as("redacted"),
+          ne.cast("long").as("n_emails"),
+          np.cast("long").as("n_phones"),
+          ni.cast("long").as("n_ips"))
+        .orderBy(col("c_custkey"))
     },
+      Some("""WITH c2 AS (
+           SELECT c_custkey, c_name ||
+             CASE WHEN c_custkey % 2 = 0
+               THEN ' user' || c_custkey || '@mail.example' ELSE '' END ||
+             CASE WHEN c_custkey % 3 = 0
+               THEN ' tel ' || (c_custkey % 90 + 10) || '-555-123-4567'
+               ELSE '' END ||
+             CASE WHEN c_custkey % 5 = 0
+               THEN ' ip 10.0.' || (c_custkey % 256) || '.7' ELSE '' END
+             AS contact
+           FROM customer)
+         SELECT c_custkey,
+           regexp_replace(regexp_replace(regexp_replace(contact,
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+             '[EMAIL]', 'g'),
+             '\d{2,3}-\d{3}-\d{3}-\d{4}', '[PHONE]', 'g'),
+             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g')
+             AS redacted,
+           CAST(len(regexp_extract_all(contact,
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+             AS BIGINT) AS n_emails,
+           CAST(len(regexp_extract_all(contact,
+             '\d{2,3}-\d{3}-\d{3}-\d{4}')) AS BIGINT) AS n_phones,
+           CAST(len(regexp_extract_all(contact,
+             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT)
+             AS n_ips
+         FROM c2 ORDER BY c_custkey""")),
 
-    // the typed-metadata schema projection: stub dims replay the
-    // declarative char-poly residues of the raw text; n_bytes is the
-    // UTF-8 byte length (strlen = bytes in DuckDB)
-    "mm_schema" ->
-      """WITH h AS (
+    Query("seq_packing", (s, d) =>
+      Packing.packDocuments(t(s, d, "documents"), budget = 128)
+        .orderBy(col("doc_id")),
+      Some("""WITH n AS (
+           SELECT doc_id, source,
+             CAST(len(string_split_regex(trim(lower(text)), '\s+'))
+               AS BIGINT) AS n_tokens
+           FROM documents),
+         o AS (
+           SELECT doc_id, source, n_tokens,
+             sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id)
+               AS end_off
+           FROM n)
+         SELECT doc_id, source, n_tokens,
+           CAST(end_off - n_tokens AS BIGINT) AS start_off,
+           CAST(floor((end_off - n_tokens) / 128.0) AS BIGINT)
+             AS seq_first,
+           CAST(floor((end_off - 1) / 128.0) AS BIGINT) AS seq_last,
+           CAST(floor((end_off - 1) / 128.0)
+              - floor((end_off - n_tokens) / 128.0) AS BIGINT)
+             AS n_splits
+         FROM o ORDER BY doc_id""")),
+
+    // §2.6 multimodal ---------------------------------------------
+    // round-8: oracle-checkable — the stub dims derive from the
+    // declarative char-poly residues instead of xxhash64, so DuckDB
+    // recomputes the whole typed-metadata projection (was rows-only)
+    Query("mm_schema", (s, d) =>
+      Multimodal.asMediaTable(t(s, d, "documents"))
+        .select(col("media_id"), col("media_type"), col("meta.width"),
+          col("meta.height"), col("meta.n_bytes"), col("meta.format"))
+        .orderBy(col("media_id")),
+      // the typed-metadata schema projection: stub dims replay the
+      // declarative char-poly residues of the raw text; n_bytes is the
+      // UTF-8 byte length (strlen = bytes in DuckDB)
+      Some("""WITH h AS (
            SELECT doc_id, text,
              list_reduce(list_prepend(CAST(1000000007 AS BIGINT),
                list_transform(
@@ -5479,70 +5068,100 @@ object SparkEntry {
                 CAST(h2 % 1080 + 1 AS INTEGER) AS height,
                 CAST(strlen(text) AS BIGINT) AS n_bytes,
                 'stub' AS format
-         FROM h ORDER BY media_id""",
+         FROM h ORDER BY media_id""")),
 
-    "mm_resize" ->
-      """SELECT doc_id AS media_id,
+    Query("mm_features", (s, d) => {
+      // scalar projection of the feature vector: array columns crash
+      // the driver's pandas-based oracle sort, and the ×255 byte sums
+      // are exact integers — immune to FP summation-order noise
+      val f = Multimodal.extractFeatures(
+        Multimodal.asMediaTable(t(s, d, "documents")))
+      f.select(col("media_id") +: (0 until 8).map(j =>
+          round(col("features")(j) * 255.0, 0).cast("long").as(s"f$j")): _*)
+        .orderBy(col("media_id"))
+    },
+      // mm_features: the stub decoder's ×255 feature sums are plain
+      // integer byte sums per (position mod 8) lane; the corpus is
+      // ASCII (asserted in MultimodalSpec), so DuckDB reconstructs them
+      // from codepoints.
+      Some({
+      val lanes = (0 until 8).map(j =>
+        s"""CAST(list_sum(list_transform(
+           list_filter(range(1, length(text) + 1), i -> (i-1) % 8 = $j),
+           i -> ord(text[i]))) AS BIGINT) AS f$j""").mkString(",\n         ")
+      s"""SELECT doc_id AS media_id,
+         $lanes
+         FROM documents ORDER BY media_id"""
+    })),
+
+    Query("mm_frame_plan", (s, d) =>
+      Multimodal.framePlan(Multimodal.asMediaTable(t(s, d, "documents")))
+        .select(col("media_id"), col("n_frames"))
+        .orderBy(col("media_id")),
+      Some("""SELECT doc_id AS media_id,
+         CAST(greatest(length(text) - 1, 0) // 1024 + 1 AS INTEGER)
+           AS n_frames
+         FROM documents ORDER BY media_id""")),
+
+    Query("mm_resize", (s, d) =>
+      Multimodal.resizeStub(
+        Multimodal.asMediaTable(t(s, d, "documents")), 224, 224)
+        .select(col("media_id"), col("meta.width").as("width"),
+          col("meta.height").as("height"),
+          col("meta.n_bytes").as("n_bytes"))
+        .orderBy(col("media_id")),
+      Some("""SELECT doc_id AS media_id,
          CAST(224 AS INTEGER) AS width, CAST(224 AS INTEGER) AS height,
          CAST(CASE WHEN length(text) = 0 THEN 0
            ELSE (length(text) - 1) // greatest(1, length(text) // 196) + 1
            END AS BIGINT) AS n_bytes
-         FROM documents ORDER BY media_id""",
+         FROM documents ORDER BY media_id""")),
 
-    "mm_frame_plan" ->
-      """SELECT doc_id AS media_id,
-         CAST(greatest(length(text) - 1, 0) // 1024 + 1 AS INTEGER)
-           AS n_frames
-         FROM documents ORDER BY media_id""",
-
-    "mm_dedup" ->
-      """SELECT md5(text) AS payload_md5, MIN(doc_id) AS keep_id,
+    Query("mm_dedup", (s, d) =>
+      Multimodal.payloadDedup(Multimodal.asMediaTable(t(s, d, "documents"))),
+      Some("""SELECT md5(text) AS payload_md5, MIN(doc_id) AS keep_id,
                 COUNT(*) AS n_copies
-         FROM documents GROUP BY 1 ORDER BY keep_id""",
+         FROM documents GROUP BY 1 ORDER BY keep_id""")),
 
-    "mm_decode" ->
-      """SELECT CAST(doc_id AS BIGINT) AS media_id,
+    Query("mm_decode", (s, d) =>
+      // REAL codec round trip (round-6): genuine PNGs rendered per
+      // partition with id-derived dimensions, then the dimensions
+      // decoded BACK out of the encoded bytes via javax.imageio
+      // header reads — the oracle recomputes the dims arithmetically,
+      // so a decode that misparses IHDR fails the compare
+      Multimodal.decodeMeta(
+        Multimodal.asPngMediaTable(t(s, d, "documents")))
+        .orderBy(col("media_id")),
+      Some("""SELECT CAST(doc_id AS BIGINT) AS media_id,
                 CAST(1 + doc_id % 13 AS INTEGER) AS width,
                 CAST(1 + doc_id % 7 AS INTEGER) AS height,
                 'png' AS format
-         FROM documents ORDER BY media_id""",
+         FROM documents ORDER BY media_id""")),
 
-    // fixture-backed ingest entries: the oracle is the literal
-    // expected relation (the fixtures are written by the query
-    // itself, not part of the parquet testdata)
-    "csv_ingest" ->
-      """SELECT * FROM (VALUES
-           (CAST(1000 AS INTEGER), 'IT', 'Zentral'),
-           (CAST(2000 AS INTEGER), 'HR', 'Verwaltung'))
-         AS t(Kostenstelle, Bezeichnung, Bereich)
-         ORDER BY Kostenstelle""",
-
-    "orc_roundtrip" ->
-      """SELECT l_returnflag, COUNT(*) AS n_rows,
-         CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
-           AS sum_price
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "binary_ingest" ->
-      """SELECT * FROM (VALUES
-           ('img_a.bin', CAST(16 AS BIGINT), 'PNG'),
-           ('img_b.bin', CAST(14 AS BIGINT), 'JPG'))
-         AS t(name, n_bytes, head)
-         ORDER BY name""",
-
-    "jsonl_ingest" ->
-      """SELECT * FROM (VALUES
-           (CAST(1 AS BIGINT), 'hallo welt', CAST(0.5 AS DOUBLE)),
-           (CAST(2 AS BIGINT), 'zweite zeile', CAST(0.9 AS DOUBLE)))
-         AS t(id, text, score)
-         ORDER BY id""",
-
-    // §2.5c corpus curation — same deterministic page construction
-    // as the Spark entry; unnest zipping keeps line order for the
-    // ordered string_agg reassembly.
-    "line_dedup" ->
-      """WITH pages AS (
+    // §2.5c corpus curation --------------------------------------
+    // The synthetic docs are single-line word bags, so the line-dedup
+    // input is a deterministic multi-line "page" wrapped around each
+    // document — shared nav header (even ids), per-source banner,
+    // unique body, low-frequency ref line, constant footer. Identical
+    // construction in the oracle SQL (pii_redact precedent): what's
+    // under test is the corpus-level dedup + reassembly chain.
+    Query("line_dedup", (s, d) => {
+      val page = concat_ws("\n",
+        when(pmod(col("doc_id"), lit(2)) === 0,
+          lit("nav home about products")),
+        concat(lit("source: "), col("source")),
+        col("text"),
+        concat(lit("ref-"), pmod(col("doc_id"), lit(100)).cast("string")),
+        lit("(c) example corpus"))
+      Curation.lineDedup(
+        t(s, d, "documents").select(col("doc_id"), page.as("text")),
+        maxFreq = 10)
+        .orderBy(col("doc_id"))
+    },
+      // §2.5c corpus curation — same deterministic page construction
+      // as the Spark entry; unnest zipping keeps line order for the
+      // ordered string_agg reassembly.
+      Some("""WITH pages AS (
            SELECT doc_id, concat_ws(chr(10),
              CASE WHEN doc_id % 2 = 0 THEN 'nav home about products' END,
              'source: ' || source,
@@ -5564,10 +5183,13 @@ object SparkEntry {
            coalesce(string_agg(CASE WHEN f.line IS NULL THEN l.line END,
              chr(10) ORDER BY l.pos), '') AS text_clean
          FROM l LEFT JOIN f ON l.line = f.line
-         GROUP BY l.doc_id ORDER BY l.doc_id""",
+         GROUP BY l.doc_id ORDER BY l.doc_id""")),
 
-    "gopher_rules" ->
-      """WITH f AS (
+    Query("gopher_rules", (s, d) =>
+      Curation.gopherRules(t(s, d, "documents"),
+        minWords = 30, maxMeanWordLen = 4.6)
+        .orderBy(col("doc_id")),
+      Some("""WITH f AS (
            SELECT doc_id,
              len(string_split_regex(trim(lower(text)), '\s+')) AS n_words,
              length(text) AS n_chars,
@@ -5606,10 +5228,28 @@ object SparkEntry {
              AND (mwl >= 2.0 AND mwl <= 4.6)
              AND sym <= 0.12 AND bullet <= 0.9 AND ell <= 0.3
              AND alpha >= 0.7 AS pass
-         FROM r ORDER BY doc_id""",
+         FROM r ORDER BY doc_id""")),
 
-    "bm25_topk" ->
-      """WITH tok AS (
+    Query("unigram_score", (s, d) =>
+      TextAnalysis.unigramSurprisal(t(s, d, "documents"))
+        .orderBy(col("doc_id")),
+      Some("""WITH tok AS (
+           SELECT doc_id,
+             unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+           FROM documents),
+         freq AS (SELECT term, count(*) AS tf FROM tok GROUP BY 1),
+         tot AS (SELECT count(*) AS n FROM tok)
+         SELECT doc_id, count(*) AS n_tokens,
+           round(CAST(sum(CAST(round(-ln(tf / CAST(n AS DOUBLE)), 6)
+               AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
+             AS cross_entropy
+         FROM tok JOIN freq USING (term), tot
+         GROUP BY doc_id ORDER BY doc_id""")),
+
+    Query("bm25_topk", (s, d) =>
+      TextAnalysis.bm25TopK(t(s, d, "documents"), k = 3)
+        .orderBy(col("doc_id"), col("rank")),
+      Some("""WITH tok AS (
            SELECT doc_id,
              unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
            FROM documents),
@@ -5635,242 +5275,36 @@ object SparkEntry {
            FROM scored)
          SELECT doc_id, rank, term, tf, df, round(score, 6) AS bm25
          FROM ranked WHERE rank <= 3
-         ORDER BY doc_id, rank""",
+         ORDER BY doc_id, rank""")),
 
-    "unigram_score" ->
-      """WITH tok AS (
-           SELECT doc_id,
-             unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-           FROM documents),
-         freq AS (SELECT term, count(*) AS tf FROM tok GROUP BY 1),
-         tot AS (SELECT count(*) AS n FROM tok)
-         SELECT doc_id, count(*) AS n_tokens,
-           round(CAST(sum(CAST(round(-ln(tf / CAST(n AS DOUBLE)), 6)
-               AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-             AS cross_entropy
-         FROM tok JOIN freq USING (term), tot
-         GROUP BY doc_id ORDER BY doc_id""",
-
-    "source_cap" ->
-      """SELECT source,
+    Query("source_cap", (s, d) =>
+      Curation.sourceCap(t(s, d, "documents"), cap = 10)
+        .orderBy(col("source"), col("rank")),
+      Some("""SELECT source,
            CAST(row_number() OVER (PARTITION BY source
              ORDER BY n_chars DESC, doc_id ASC) AS BIGINT) AS rank,
            doc_id, n_chars
          FROM documents
          QUALIFY rank <= 10
-         ORDER BY source, rank""",
+         ORDER BY source, rank""")),
 
-    "item_cooccur" ->
-      """WITH ut AS (SELECT DISTINCT user_id,
+    Query("item_cooccur", (s, d) =>
+      Analytics.eventCooccurrence(t(s, d, "events"))
+        .orderBy(col("type_a"), col("type_b")),
+      Some("""WITH ut AS (SELECT DISTINCT user_id,
            date_trunc('hour', ts) AS hr, event_type FROM events)
          SELECT a.event_type AS type_a, b.event_type AS type_b,
            count(*) AS n_baskets
          FROM ut a JOIN ut b
            ON a.user_id = b.user_id AND a.hr = b.hr
              AND a.event_type < b.event_type
-         GROUP BY 1, 2 ORDER BY 1, 2""",
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
 
-    "q6_revenue_delta" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice * l_discount
-             AS DECIMAL(28,6))) AS DOUBLE) AS revenue_delta,
-         COUNT(*) AS n_items
-         FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-           AND l_shipdate < TIMESTAMP '1997-01-01'
-           AND l_discount >= 0.05 AND l_discount <= 0.07
-           AND l_quantity < 24""",
-
-    "q13_order_dist" ->
-      """SELECT c_count, COUNT(*) AS custdist
-         FROM (SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-               FROM customer c LEFT JOIN orders o
-                 ON c.c_custkey = o.o_custkey
-               GROUP BY c.c_custkey)
-         GROUP BY c_count
-         ORDER BY custdist DESC, c_count DESC""",
-
-    "q14_promo_share" ->
-      """SELECT round(100.0 *
-           (CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
-              THEN l_extendedprice * (1.0 - l_discount)
-              ELSE 0.0 END AS DECIMAL(28,6))) AS DOUBLE) /
-            CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-              AS DECIMAL(28,6))) AS DOUBLE)), 6) AS promo_revenue_pct
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-           AND l_shipdate < TIMESTAMP '1997-01-01'""",
-
-    "q19_disjunctive" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-             AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-             AND l_quantity BETWEEN 1 AND 20)
-           OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-             AND l_quantity BETWEEN 10 AND 35)
-           OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
-             AND l_quantity BETWEEN 20 AND 50)""",
-
-    "q7_trade_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-         CAST(year(l_shipdate) AS BIGINT) AS l_year,
-         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-           AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation sn ON s_nationkey = sn.n_nationkey
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation cn ON c_nationkey = cn.n_nationkey
-         WHERE sn.n_name IN ('NATION_3', 'NATION_7')
-           AND cn.n_name IN ('NATION_3', 'NATION_7')
-           AND sn.n_name <> cn.n_name
-         GROUP BY 1, 2, 3
-         ORDER BY 1, 2, 3""",
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-           SELECT l_suppkey,
-             CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-               AS DECIMAL(28,6))) AS DOUBLE) AS total_rev
-           FROM lineitem
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1996-04-01'
-           GROUP BY 1)
-         SELECT s_suppkey, s_name, total_rev
-         FROM rev JOIN supplier ON l_suppkey = s_suppkey
-         WHERE total_rev = (SELECT max(total_rev) FROM rev)
-         ORDER BY s_suppkey""",
-
-    "q8_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         round(
-           CAST(SUM(CAST(CASE WHEN n2.n_name = 'NATION_2'
-               THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
-             AS DECIMAL(28,6))) AS DOUBLE) /
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-             AS DECIMAL(28,6))) AS DOUBLE), 6) AS mkt_share,
-         COUNT(*) AS n_items
-         FROM lineitem
-           JOIN part ON l_partkey = p_partkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation n2 ON s_nationkey = n2.n_nationkey
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation n1 ON c_nationkey = n1.n_nationkey
-           JOIN region ON n1.n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA' AND p_type = 'STANDARD'
-         GROUP BY 1 ORDER BY 1""",
-
-    "q9_nation_revenue" ->
-      """SELECT n_name AS nation,
-         CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-           AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem
-           JOIN part ON l_partkey = p_partkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation ON s_nationkey = n_nationkey
-           JOIN orders ON l_orderkey = o_orderkey
-         WHERE p_name LIKE '%red%'
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "join_blowup" ->
-      """WITH lc AS (SELECT user_id AS join_key, COUNT(*) AS l_rows
-                     FROM events GROUP BY 1),
-         rc AS (SELECT user_id AS join_key, COUNT(*) AS r_rows
-                FROM events GROUP BY 1),
-         prod AS (SELECT join_key, l_rows, r_rows,
-                    l_rows * r_rows AS out_rows
-                  FROM lc JOIN rc USING (join_key)),
-         tot AS (SELECT SUM(out_rows) AS t FROM prod)
-         SELECT join_key, l_rows, r_rows, CAST(out_rows AS BIGINT)
-             AS out_rows,
-           round(CAST(out_rows AS DOUBLE) / t, 6) AS share
-         FROM prod, tot
-         ORDER BY out_rows DESC, join_key
-         LIMIT 20""",
-
-    "concurrency_profile" ->
-      """WITH spans AS (
-           SELECT event_id, CAST(ts AS TIMESTAMP) AS t0,
-             CAST(ts AS TIMESTAMP)
-               + to_seconds(60 + event_id % 300) AS t1
-           FROM events),
-         pts AS (
-           SELECT event_id, t0 AS t, 1 AS d FROM spans
-           UNION ALL
-           SELECT event_id, t1 AS t, -1 AS d FROM spans),
-         run AS (
-           SELECT date_trunc('hour', t) AS hour, t, d, event_id,
-             SUM(d) OVER (ORDER BY t, d, event_id
-               ROWS UNBOUNDED PRECEDING) AS r
-           FROM pts),
-         run2 AS (
-           SELECT hour, d, r,
-             first_value(r - d) OVER (PARTITION BY hour
-               ORDER BY t, d, event_id) AS carry
-           FROM run)
-         SELECT hour,
-           CAST(GREATEST(MAX(r), MAX(carry)) AS BIGINT)
-             AS max_concurrency,
-           CAST(SUM(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_starts,
-           CAST(SUM(CASE WHEN d = -1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_ends
-         FROM run2 GROUP BY 1 ORDER BY 1""",
-
-    "manifest_prune" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-         FROM orders
-         WHERE o_totalprice BETWEEN 30000.0 AND 45000.0
-         ORDER BY o_orderkey""",
-
-    "fuzzy_join" ->
-      """WITH dirty AS (
-           SELECT c_custkey AS dirty_id,
-             substr(c_name, 1, CAST(c_custkey % 18 AS INT)) ||
-             substr(c_name, CAST(c_custkey % 18 AS INT) + 2)
-               AS dirty_name
-           FROM customer)
-         SELECT c.c_custkey, c.c_name, d.dirty_id, d.dirty_name,
-           CAST(levenshtein(c.c_name, d.dirty_name) AS BIGINT) AS dist
-         FROM customer c CROSS JOIN dirty d
-         WHERE levenshtein(c.c_name, d.dirty_name) <= 1
-         ORDER BY c.c_custkey, d.dirty_id""",
-
-    "fuzzy_join_ed2" ->
-      """WITH d1 AS (
-           SELECT c_custkey,
-             substr(c_name, 1, CAST(c_custkey % 18 AS INT)) ||
-             substr(c_name, CAST(c_custkey % 18 AS INT) + 2) AS n1
-           FROM customer),
-         dirty AS (
-           SELECT c_custkey AS dirty_id,
-             substr(n1, 1, CAST(c_custkey % 17 AS INT)) ||
-             substr(n1, CAST(c_custkey % 17 AS INT) + 2) AS dirty_name
-           FROM d1 WHERE c_custkey % 5 = 0)
-         SELECT c.c_custkey, c.c_name, d.dirty_id, d.dirty_name,
-           CAST(levenshtein(c.c_name, d.dirty_name) AS BIGINT) AS dist
-         FROM customer c CROSS JOIN dirty d
-         WHERE levenshtein(c.c_name, d.dirty_name) <= 2
-         ORDER BY c.c_custkey, d.dirty_id""",
-
-    "sink_expire" ->
-      """SELECT * FROM (VALUES
-           (CAST(0 AS BIGINT), 'expired', CAST(-1 AS BIGINT)),
-           (CAST(1 AS BIGINT), 'expired', CAST(-1 AS BIGINT)),
-           (CAST(2 AS BIGINT), 'expired', CAST(-1 AS BIGINT)),
-           (CAST(3 AS BIGINT), 'retained', CAST(4 AS BIGINT)),
-           (CAST(4 AS BIGINT), 'retained', CAST(5 AS BIGINT)))
-         AS t(version, status, n_rows)
-         ORDER BY version""",
-
-    "zscore_normalize" ->
-      """WITH m AS (
+    Query("zscore_normalize", (s, d) =>
+      Analytics.zscoreNormalize(t(s, d, "orders"), "o_orderpriority",
+        "o_totalprice", Seq("o_orderkey"))
+        .orderBy(col("o_orderkey")),
+      Some("""WITH m AS (
            SELECT o_orderpriority, count(*) AS n,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
                AS sx,
@@ -5886,10 +5320,12 @@ object SparkEntry {
            round(CASE WHEN mm.sd = 0 THEN 0.0
              ELSE (o.o_totalprice - mm.mean) / mm.sd END, 6) AS zscore
          FROM orders o JOIN mm USING (o_orderpriority)
-         ORDER BY o.o_orderkey""",
+         ORDER BY o.o_orderkey""")),
 
-    "peak_concurrency" ->
-      """WITH d AS (
+    Query("peak_concurrency", (s, d) =>
+      Analytics.peakConcurrency(t(s, d, "events"))
+        .orderBy(col("event_type")),
+      Some("""WITH d AS (
            SELECT event_type, ts AS t, 1 AS delta FROM events
            UNION ALL
            SELECT event_type, ts + INTERVAL 5 MINUTE AS t, -1 AS delta
@@ -5900,10 +5336,12 @@ object SparkEntry {
            FROM d)
          SELECT event_type, CAST(max(c) AS BIGINT) AS peak,
            CAST(count(*) / 2 AS BIGINT) AS n_intervals
-         FROM c GROUP BY 1 ORDER BY 1""",
+         FROM c GROUP BY 1 ORDER BY 1""")),
 
-    "event_transitions" ->
-      """WITH nxt AS (
+    Query("event_transitions", (s, d) =>
+      Analytics.eventTransitions(t(s, d, "events"))
+        .orderBy(col("from_type"), col("to_type")),
+      Some("""WITH nxt AS (
            SELECT event_type AS from_type,
              lead(event_type, 1) OVER (PARTITION BY user_id
                ORDER BY ts, event_id) AS to_type
@@ -5914,12 +5352,14 @@ object SparkEntry {
            GROUP BY 1, 2)
          SELECT from_type, to_type, n,
            round(n / sum(n) OVER (PARTITION BY from_type), 6) AS p
-         FROM c ORDER BY from_type, to_type""",
+         FROM c ORDER BY from_type, to_type""")),
 
-    // word-5-gram duplicated-span coverage; Spark groups the 8-byte
-    // gram hash, the oracle the gram text — same multiset of counts
-    "substring_dedup" ->
-      """WITH d AS (
+    Query("substring_dedup", (s, d) =>
+      Curation.substringDedup(t(s, d, "documents"), k = 5)
+        .orderBy(col("doc_id")),
+      // word-5-gram duplicated-span coverage; Spark groups the 8-byte
+      // gram hash, the oracle the gram text — same multiset of counts
+      Some("""WITH d AS (
            SELECT doc_id, string_split(text, ' ') AS toks
            FROM documents),
          g AS (
@@ -5944,12 +5384,14 @@ object SparkEntry {
            COALESCE(cov.dup_tokens, 0) AS dup_tokens,
            round(COALESCE(cov.dup_tokens, 0)
              / CAST(n.n_tokens AS DOUBLE), 6) AS dup_ratio
-         FROM n LEFT JOIN cov USING (doc_id) ORDER BY n.doc_id""",
+         FROM n LEFT JOIN cov USING (doc_id) ORDER BY n.doc_id""")),
 
-    // five unrolled decimal-folded power iterations, d = 0.85; the
-    // vertex set is the edge endpoints (matches Clustering.pageRank)
-    "link_rank" ->
-      """WITH seq0 AS (
+    Query("link_rank", (s, d) =>
+      Clustering.navigationRank(t(s, d, "events"), iters = 5)
+        .orderBy(col("node")),
+      // five unrolled decimal-folded power iterations, d = 0.85; the
+      // vertex set is the edge endpoints (matches Clustering.pageRank)
+      Some("""WITH seq0 AS (
            SELECT user_id, TRY_CAST(props->>'k' AS INTEGER) AS dst,
              ts, event_id
            FROM events),
@@ -6009,12 +5451,14 @@ object SparkEntry {
              FROM w JOIN r4 ON w.src = r4.node GROUP BY w.dst) c
            USING (node))
          SELECT node, round(rank, 6) AS rank FROM r5
-         ORDER BY node""",
+         ORDER BY node""")),
 
-    // hashed-linear classifier: integer char-polynomial feature hash
-    // per token (exact both engines), one deterministic double chain
-    "classifier_score" ->
-      """WITH f AS (
+    Query("classifier_score", (s, d) =>
+      TextAnalysis.classifierScore(t(s, d, "documents"))
+        .orderBy(col("doc_id")),
+      // hashed-linear classifier: integer char-polynomial feature hash
+      // per token (exact both engines), one deterministic double chain
+      Some("""WITH f AS (
            SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              list_sum(list_transform(string_split(text, ' '),
@@ -6025,19 +5469,41 @@ object SparkEntry {
          SELECT doc_id, n_tokens,
            round(1.0 / (1.0 + exp(-4.0 * (CAST(hsum AS DOUBLE)
              / (1009.0 * n_tokens) - 0.5))), 6) AS quality
-         FROM f ORDER BY doc_id""",
+         FROM f ORDER BY doc_id""")),
 
-    // char pairs via list indexing; '|' join is safe at the initial
-    // (single-char) vocabulary this entry scores
-    // round-12: bpe_train FLIPS from rows-only to a full oracle —
-    // the iterative argmax IS DuckDB-expressible as a 6-round
-    // cascading CTE: per round, adjacent-pair counts over the
-    // bracketed symbol encoding (the r8 bpe_encode technique), the
-    // same (n DESC, left, right) argmax, and ONE left-to-right
-    // replace() to apply the merge (non-overlapping left-to-right
-    // replacement = greedy BPE application, both engines)
-    "bpe_train" ->
-      """WITH words AS (
+    Query("bpe_pair_counts", (s, d) =>
+      Bpe.pairCounts(t(s, d, "documents"))
+        .orderBy(col("sym_a"), col("sym_b")),
+      Some("""WITH words AS (
+           SELECT w, count(*) AS freq FROM (
+             SELECT unnest(string_split(text, ' ')) AS w
+             FROM documents)
+           WHERE w <> '' GROUP BY w),
+         chars AS (SELECT w, freq, string_split(w, '') AS cs
+                   FROM words),
+         pairs AS (
+           SELECT unnest(list_transform(range(1, len(cs)), i ->
+             cs[i] || '|' || cs[i+1])) AS pair, freq
+           FROM chars WHERE len(cs) >= 2)
+         SELECT split_part(pair, '|', 1) AS sym_a,
+           split_part(pair, '|', 2) AS sym_b,
+           CAST(sum(freq) AS BIGINT) AS n
+         FROM pairs GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    // rows-only: iterative argmax has no single-query SQL form
+    Query("bpe_train", (s, d) =>
+      Bpe.train(t(s, d, "documents"), merges = 6)
+        .orderBy(col("rank")),
+      // char pairs via list indexing; '|' join is safe at the initial
+      // (single-char) vocabulary this entry scores
+      // round-12: bpe_train FLIPS from rows-only to a full oracle —
+      // the iterative argmax IS DuckDB-expressible as a 6-round
+      // cascading CTE: per round, adjacent-pair counts over the
+      // bracketed symbol encoding (the r8 bpe_encode technique), the
+      // same (n DESC, left, right) argmax, and ONE left-to-right
+      // replace() to apply the merge (non-overlapping left-to-right
+      // replacement = greedy BPE application, both engines)
+      Some("""WITH words AS (
            SELECT w, count(*) AS freq FROM (
              SELECT unnest(string_split(text, ' ')) AS w
              FROM documents)
@@ -6149,29 +5615,51 @@ object SparkEntry {
            UNION ALL SELECT 4 AS rank, a AS "left", b AS "right", n FROM m4
            UNION ALL SELECT 5 AS rank, a AS "left", b AS "right", n FROM m5
            UNION ALL SELECT 6 AS rank, a AS "left", b AS "right", n FROM m6)
-         ORDER BY rank""",
+         ORDER BY rank""")),
 
-    "bpe_pair_counts" ->
-      """WITH words AS (
-           SELECT w, count(*) AS freq FROM (
-             SELECT unnest(string_split(text, ' ')) AS w
-             FROM documents)
-           WHERE w <> '' GROUP BY w),
-         chars AS (SELECT w, freq, string_split(w, '') AS cs
-                   FROM words),
-         pairs AS (
-           SELECT unnest(list_transform(range(1, len(cs)), i ->
-             cs[i] || '|' || cs[i+1])) AS pair, freq
-           FROM chars WHERE len(cs) >= 2)
-         SELECT split_part(pair, '|', 1) AS sym_a,
-           split_part(pair, '|', 2) AS sym_b,
-           CAST(sum(freq) AS BIGINT) AS n
-         FROM pairs GROUP BY 1, 2 ORDER BY 1, 2""",
+    // round-8: oracle-checkable — encode faithfulness under a FIXED
+    // merge table. With a table obeying training's structural
+    // invariant (a pair naming a merged symbol ranks AFTER the
+    // merge that formed it, and no rule's output recreates its own
+    // inputs), the kernel's lowest-rank-first loop is provably
+    // equal to ONE left-to-right replace pass per rank in rank
+    // order — which DuckDB replays as six string replaces over a
+    // bracketed token encoding. Corpus-TRAINED tables (iterative
+    // argmax) stay covered by bpe_train + BpeSpec parity.
+    Query("bpe_encode", (s, d) =>
+      Bpe.encode(t(s, d, "documents"),
+        Seq(("t", "h"), ("th", "e"), ("a", "n"),
+          ("an", "d"), ("i", "n"), ("e", "r")))
+        .select(col("doc_id"), col("n_tokens"))
+        .orderBy(col("doc_id")),
+      // bpe_encode: under the fixed rank-ordered merge table, the
+      // kernel equals one left-to-right replace pass per rank (see
+      // the query comment for the invariant that makes this exact).
+      // Each word becomes a bracketed token string (corpus is ASCII —
+      // the brackets cannot collide with content), the six merges
+      // apply as string replaces, and the token count is the split
+      // length; empty docs coalesce to 0.
+      Some("""SELECT doc_id, CAST(coalesce(list_sum(list_transform(
+           list_filter(string_split(text, ' '), w -> w <> ''),
+           w -> len(string_split(
+             replace(replace(replace(replace(replace(replace(
+               '⟨' || array_to_string(string_split_regex(w, ''), '⟩⟨')
+                   || '⟩',
+               '⟨t⟩⟨h⟩', '⟨th⟩'), '⟨th⟩⟨e⟩', '⟨the⟩'),
+               '⟨a⟩⟨n⟩', '⟨an⟩'), '⟨an⟩⟨d⟩', '⟨and⟩'),
+               '⟨i⟩⟨n⟩', '⟨in⟩'), '⟨e⟩⟨r⟩', '⟨er⟩'),
+             '⟩⟨')))), 0) AS BIGINT) AS n_tokens
+         FROM documents ORDER BY doc_id""")),
 
-    // add-one-smoothed unigram importance ratios; Spark fuses raw +
-    // target counts into one aggregate, the oracle spells them out
-    "dsir_weight" ->
-      """WITH tok AS (
+    // DSIR toward a fixed four-source "target domain" — the explicit
+    // IN list avoids lexicographic surprises (src10 < 'src2')
+    Query("dsir_weight", (s, d) =>
+      TextAnalysis.dsirWeight(t(s, d, "documents"),
+        col("source").isin("src0", "src1", "src2", "src3"))
+        .orderBy(col("doc_id")),
+      // add-one-smoothed unigram importance ratios; Spark fuses raw +
+      // target counts into one aggregate, the oracle spells them out
+      Some("""WITH tok AS (
            SELECT doc_id, source,
              unnest(string_split(text, ' ')) AS term
            FROM documents),
@@ -6196,10 +5684,34 @@ object SparkEntry {
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
            round(CAST(sum(CAST(lw AS DECIMAL(38,6))) AS DOUBLE), 6)
              AS log_weight
-         FROM pt GROUP BY doc_id ORDER BY doc_id""",
+         FROM pt GROUP BY doc_id ORDER BY doc_id""")),
 
-    "url_canonical" ->
-      """WITH u AS (
+    // same deterministic URL synthesis on both sides (pii_redact
+    // precedent): scheme/case/www/tracking-param/fragment variants
+    // of a shared (source, slug) page identity — what's under test
+    // is the canonicalization chain and the dup grouping.
+    Query("url_canonical", (s, d) => {
+      val src = when(pmod(col("doc_id"), lit(2)) === 0,
+        upper(col("source"))).otherwise(col("source"))
+      val url = concat(
+        when(pmod(col("doc_id"), lit(3)) === 0, lit("http://"))
+          .otherwise(lit("https://")),
+        when(pmod(col("doc_id"), lit(2)) === 0, lit("WWW."))
+          .otherwise(lit("")),
+        src, lit(".example.com/docs/"),
+        pmod(col("doc_id"), lit(50)).cast("string"),
+        when(pmod(col("doc_id"), lit(4)) === 0,
+          lit("?utm_source=feed&utm_campaign=x")).otherwise(lit("")),
+        when(pmod(col("doc_id"), lit(5)) === 0, lit("#frag"))
+          .otherwise(lit("")))
+      val canon = t(s, d, "documents")
+        .select(col("doc_id"), Curation.canonicalUrl(url).as("url_canon"))
+      canon.withColumn("n_dups",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("url_canon"))))
+        .orderBy(col("doc_id"))
+    },
+      Some("""WITH u AS (
            SELECT doc_id,
              (CASE WHEN doc_id % 3 = 0 THEN 'http://'
                 ELSE 'https://' END)
@@ -6233,10 +5745,16 @@ object SparkEntry {
            FROM u)
          SELECT doc_id, url_canon,
            count(*) OVER (PARTITION BY url_canon) AS n_dups
-         FROM canon ORDER BY doc_id""",
+         FROM canon ORDER BY doc_id""")),
 
-    "winsorize" ->
-      """WITH r AS (
+    Query("winsorize", (s, d) =>
+      // (l_orderkey, l_linenumber) is NOT unique in the synthetic
+      // lineitem — total-order over every output column instead
+      Analytics.winsorize(t(s, d, "lineitem"), "l_returnflag",
+        "l_extendedprice", Seq("l_orderkey", "l_linenumber"))
+        .orderBy(col("l_orderkey"), col("l_linenumber"),
+          col("l_returnflag"), col("l_extendedprice")),
+      Some("""WITH r AS (
            SELECT l_orderkey, l_linenumber, l_returnflag, l_extendedprice,
              cume_dist() OVER (PARTITION BY l_returnflag
                ORDER BY l_extendedprice) AS cd
@@ -6251,6 +5769,41 @@ object SparkEntry {
            least(greatest(r.l_extendedprice, c.lo), c.hi) AS clipped
          FROM r JOIN c USING (l_returnflag)
          ORDER BY r.l_orderkey, r.l_linenumber, r.l_returnflag,
-           r.l_extendedprice"""
+           r.l_extendedprice""")),
+
+    // snapshot retention on the log table: five commits of growing
+    // slices of `region` (1..5 rows), expire keeping the newest two —
+    // the audit (versions before vs after) plus post-expire
+    // readability is the deterministic output (fixture-backed,
+    // VALUES oracle).
+    Query("sink_expire", (s, d) => {
+      import s.implicits._
+      val tag = java.lang.Integer.toHexString(d.hashCode)
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_expire_$tag")
+      val log = new graft.sources.LogTable(s"$dir/dim")
+      val region = t(s, d, "region")
+      (1 to 5).foreach(n => log.overwrite(region.limit(n)))
+      val before = log.versions
+      log.expireSnapshots(retainLast = 2)
+      val after = log.versions.toSet
+      before.map { v =>
+        if (after(v)) (v, "retained", log.load(s, Some(v)).count())
+        else (v, "expired", -1L)
+      }.toDF("version", "status", "n_rows").orderBy(col("version"))
+    },
+      Some("""SELECT * FROM (VALUES
+           (CAST(0 AS BIGINT), 'expired', CAST(-1 AS BIGINT)),
+           (CAST(1 AS BIGINT), 'expired', CAST(-1 AS BIGINT)),
+           (CAST(2 AS BIGINT), 'expired', CAST(-1 AS BIGINT)),
+           (CAST(3 AS BIGINT), 'retained', CAST(4 AS BIGINT)),
+           (CAST(4 AS BIGINT), 'retained', CAST(5 AS BIGINT)))
+         AS t(version, status, n_rows)
+         ORDER BY version"""))
   )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.iterator.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.iterator.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -1,30 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    dump(sfDir, outDir, SparkEntry.queries.keys.toSeq)
+  }
+
+  /** Writes `names`' results under `outDir/<name>` and their oracle
+    * SQL to `outDir/oracle_sql.json`. A failing query is reported on
+    * stderr and leaves no dump behind. */
+  def dump(sfDir: String, outDir: String, names: Seq[String]): Unit = {
     // A quoted shell redirect once arrived here verbatim and committed a
     // literal "2>/dev/null/" directory into the repo — refuse any outDir
     // carrying shell metacharacters instead of faithfully mkdir-ing it.
     require(!outDir.exists(c => "<>|&;`$\"'".contains(c)),
       s"outDir '$outDir' contains shell metacharacters — " +
         "this is almost certainly a mis-quoted redirect, not a path")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must not "pass" against a stale dump from an
@@ -36,20 +34,10 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val wanted = names.toSet
+    val json = SparkEntry.oracleSql.filter { case (k, _) => wanted(k) }
+      .map { case (k, v) => s"${Driver.jsonString(k)}: ${Driver.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

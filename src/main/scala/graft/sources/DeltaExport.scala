@@ -1115,70 +1115,21 @@ object DeltaExport {
     * `_last_checkpoint` when present — folding the checkpoint
     * DISTRIBUTED through a slim (path, size, dv) projection, never a
     * full-row collect — then replays the JSON commit tail with
-    * latest-wins add/remove, and GATES on the protocol: an unknown
-    * minReaderVersion or reader feature refuses, never half-reads. */
+    * latest-wins add/remove. The schema, partition columns and the
+    * protocol GATE come from [[readDeltaMeta]] before any file state
+    * is read: an unknown minReaderVersion or reader feature refuses,
+    * never half-reads. */
   def readDeltaSnapshot(spark: SparkSession, tableRoot: String)
       : (StructType, Seq[String],
          Seq[(String, Long, Option[String])]) = {
+    // protocol gate and metadata FIRST — never half-read a too-new log
+    val (schema, partCols, ckptV, _) = readDeltaMeta(spark, tableRoot)
     val dir = new File(tableRoot, "_delta_log")
-    require(dir.isDirectory, s"no _delta_log under $tableRoot")
-    val lastInfo = lastCheckpointInfo(dir)
-    val ckptV: Option[Long] = lastInfo.map(_._1)
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Seq.empty
-    var config: Map[String, String] = Map.empty
     val live = scala.collection.mutable.LinkedHashMap
       .empty[String, (Long, Option[String])]
-    def applyMeta(schemaString: String, parts: Seq[String],
-                  conf: Map[String, String]): Unit = {
-      schema = Some(org.apache.spark.sql.types.DataType
-        .fromJson(schemaString).asInstanceOf[StructType])
-      partCols = parts
-      config = conf
-    }
     ckptV.foreach { cv =>
-      val paths = ckptParts(dir, cv)
-      require(paths.nonEmpty,
-        s"_last_checkpoint names version $cv but no checkpoint " +
-          s"parquet exists under $dir")
-      // a declared multi-part checkpoint must be COMPLETE — reading
-      // a subset would silently drop live files (half-read)
-      lastInfo.flatMap(_._2).foreach(parts =>
-        require(paths.length == parts,
-          s"checkpoint $cv declares $parts parts but " +
-            s"${paths.length} exist — refusing to half-read"))
-      val df = spark.read.parquet(paths: _*)
+      val df = spark.read.parquet(ckptParts(dir, cv): _*)
       def has(c: String) = df.columns.contains(c)
-      // protocol gate FIRST — never half-read a too-new log
-      if (has("protocol")) {
-        val pT = df.schema("protocol").dataType
-          .asInstanceOf[StructType]
-        val featCol =
-          if (pT.fieldNames.contains("readerFeatures"))
-            col("protocol.readerFeatures")
-          else lit(null).cast("array<string>")
-        df.filter(col("protocol").isNotNull)
-          .select(col("protocol.minReaderVersion").cast("long"),
-            featCol)
-          .collect().foreach(r => gateProtocolIn(tableRoot,
-            r.getLong(0),
-            Option(r.getSeq[String](1)).map(_.toSet)
-              .getOrElse(Set.empty)))
-      }
-      if (has("metaData"))
-        df.filter(col("metaData").isNotNull)
-          .select(col("metaData.schemaString"),
-            col("metaData.partitionColumns"),
-            to_json(col("metaData.configuration")))
-          .collect().headOption.foreach { r =>
-            // Spark hands collected arrays back as mutable ArraySeq
-            applyMeta(r.getString(0),
-              Option(r.getSeq[String](1)).map(_.toSeq)
-                .getOrElse(Seq.empty),
-              Option(r.getString(2))
-                .map(c => partMapOf(JsonMethods.parse(c)))
-                .getOrElse(Map.empty))
-          }
       // the file-state folds through a SLIM projection: the driver
       // holds (path, size, dv-descriptor) tuples, never
       // stats-fattened action rows
@@ -1200,59 +1151,28 @@ object DeltaExport {
           .collect().foreach(r => {
             live.remove(decodePath(r.getString(0))); () })
     }
-    def applyAction(kind: String, j: JValue): Unit = kind match {
-      case "protocol" =>
-        val mr = (j \ "minReaderVersion") match {
-          case JInt(i) => i.toLong; case JLong(l) => l; case _ => 1L
-        }
-        val feats = (j \ "readerFeatures") match {
-          case JArray(a) => a.collect { case JString(s) => s }.toSet
-          case _         => Set.empty[String]
-        }
-        gateProtocolIn(tableRoot, mr, feats)
-      case "metaData" =>
-        applyMeta((j \ "schemaString").asInstanceOf[JString].s,
-          (j \ "partitionColumns") match {
-            case JArray(arr) => arr.collect { case JString(s) => s }
-            case _           => Seq.empty
-          },
-          partMapOf(j \ "configuration"))
-      case "add" =>
-        // Delta paths are URL-encoded relative paths — decode back
-        // to the filesystem form
-        val p = decodePath((j \ "path").asInstanceOf[JString].s)
-        val size = (j \ "size") match {
-          case JInt(i) => i.toLong; case JLong(l) => l; case _ => 0L
-        }
-        val dv = (j \ "deletionVector") match {
-          case JNothing | JNull => None
-          case d => Some(JsonMethods.compact(JsonMethods.render(d)))
-        }
-        live(p) = (size, dv)
-      case "remove" =>
-        live.remove(
-          decodePath((j \ "path").asInstanceOf[JString].s)); ()
-      case _ => () // txn, commitInfo, cdc: no file-state effect
+    tailActions(dir, ckptV.map(_ + 1).getOrElse(0L)).foreach { j =>
+      (j \ "add") match {
+        case JNothing => ()
+        case add =>
+          // Delta paths are URL-encoded relative paths — decode back
+          // to the filesystem form
+          val size = (add \ "size") match {
+            case JInt(i) => i.toLong; case JLong(v) => v; case _ => 0L
+          }
+          val dv = (add \ "deletionVector") match {
+            case JNothing | JNull => None
+            case d => Some(JsonMethods.compact(JsonMethods.render(d)))
+          }
+          live(decodePath((add \ "path").asInstanceOf[JString].s)) =
+            (size, dv)
+      }
+      (j \ "remove" \ "path") match {
+        case JString(p) => live.remove(decodePath(p)); ()
+        case _ => ()
+      }
     }
-    val kinds = Seq("protocol", "metaData", "add", "remove", "txn")
-    val from = ckptV.map(_ + 1).getOrElse(0L)
-    val commits = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("\\d{20}\\.json"))
-      .map(f => f.getName.stripSuffix(".json").toLong -> f)
-      .filter(_._1 >= from).sortBy(_._1)
-    commits.foreach { case (_, f) =>
-      Files.readString(f.toPath).linesIterator.filter(_.nonEmpty)
-        .foreach { l =>
-          val j = JsonMethods.parse(l)
-          kinds.foreach(k =>
-            if ((j \ k) != JNothing) applyAction(k, j \ k))
-        }
-    }
-    (applyMappingIn(tableRoot, schema.getOrElse(
-      throw new IllegalStateException(
-        s"the Delta log at $tableRoot has no metaData action")),
-      config),
-      partCols, live.toSeq.map { case (p, (sz, dv)) => (p, sz, dv) })
+    (schema, partCols, live.toSeq.map { case (p, (sz, dv)) => (p, sz, dv) })
   }
 
   /** Reverse of [[deltaStatValue]]: one Delta-rendered stat bound
@@ -1345,6 +1265,18 @@ object DeltaExport {
     try rd.getRecordCount finally rd.close()
   }
 
+  /** Every action line of the JSON commits at version >= `from`,
+    * parsed, in commit order (files are read lazily, one at a time). */
+  private def tailActions(dir: File, from: Long): Iterator[JValue] =
+    Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.matches("\\d{20}\\.json"))
+      .map(f => f.getName.stripSuffix(".json").toLong -> f)
+      .filter(_._1 >= from).sortBy(_._1).iterator
+      .flatMap { case (_, f) =>
+        Files.readString(f.toPath).linesIterator.filter(_.nonEmpty)
+          .map(JsonMethods.parse(_))
+      }
+
   /** Protocol-gated schema/partition metadata of a foreign Delta log
     * — the METADATA-ONLY half of [[readDeltaSnapshot]]: checkpoint
     * `protocol`/`metaData` columns (tiny collects) plus the JSON
@@ -1411,37 +1343,28 @@ object DeltaExport {
                 .getOrElse(Map.empty))
           }
     }
-    val from = ckptV.map(_ + 1).getOrElse(0L)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("\\d{20}\\.json"))
-      .map(f => f.getName.stripSuffix(".json").toLong -> f)
-      .filter(_._1 >= from).sortBy(_._1)
-      .foreach { case (_, f) =>
-        Files.readString(f.toPath).linesIterator.filter(_.nonEmpty)
-          .foreach { l =>
-            val j = JsonMethods.parse(l)
-            if ((j \ "protocol") != JNothing)
-              gateProtocolIn(tableRoot,
-                (j \ "protocol" \ "minReaderVersion") match {
-                  case JInt(i) => i.toLong; case JLong(v) => v
-                  case _       => 1L
-                },
-                (j \ "protocol" \ "readerFeatures") match {
-                  case JArray(a) =>
-                    a.collect { case JString(s) => s }.toSet
-                  case _ => Set.empty[String]
-                })
-            if ((j \ "metaData") != JNothing)
-              applyMeta(
-                (j \ "metaData" \ "schemaString")
-                  .asInstanceOf[JString].s,
-                (j \ "metaData" \ "partitionColumns") match {
-                  case JArray(arr) => arr.collect { case JString(s) => s }
-                  case _           => Seq.empty
-                },
-                partMapOf(j \ "metaData" \ "configuration"))
-          }
-      }
+    tailActions(dir, ckptV.map(_ + 1).getOrElse(0L)).foreach { j =>
+      if ((j \ "protocol") != JNothing)
+        gateProtocolIn(tableRoot,
+          (j \ "protocol" \ "minReaderVersion") match {
+            case JInt(i) => i.toLong; case JLong(v) => v
+            case _       => 1L
+          },
+          (j \ "protocol" \ "readerFeatures") match {
+            case JArray(a) =>
+              a.collect { case JString(s) => s }.toSet
+            case _ => Set.empty[String]
+          })
+      if ((j \ "metaData") != JNothing)
+        applyMeta(
+          (j \ "metaData" \ "schemaString")
+            .asInstanceOf[JString].s,
+          (j \ "metaData" \ "partitionColumns") match {
+            case JArray(arr) => arr.collect { case JString(s) => s }
+            case _           => Seq.empty
+          },
+          partMapOf(j \ "metaData" \ "configuration"))
+    }
     (applyMappingIn(tableRoot, schema.getOrElse(
       throw new IllegalStateException(
         s"the Delta log at $tableRoot has no metaData action")),
@@ -1575,44 +1498,35 @@ object DeltaExport {
     // pair-generation job below.
     val tail = scala.collection.mutable.LinkedHashMap
       .empty[String, Option[(AddFile, Option[String])]]
-    val from = ckptV.map(_ + 1).getOrElse(0L)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("\\d{20}\\.json"))
-      .map(f => f.getName.stripSuffix(".json").toLong -> f)
-      .filter(_._1 >= from).sortBy(_._1)
-      .foreach { case (_, f) =>
-        Files.readString(f.toPath).linesIterator.filter(_.nonEmpty)
-          .foreach { l =>
-            val j = JsonMethods.parse(l)
-            (j \ "add") match {
-              case JNothing => ()
-              case a =>
-                val dvJson = (a \ "deletionVector") match {
-                  case JNothing | JNull => None
-                  case d => Some(JsonMethods.compact(
-                    JsonMethods.render(d)))
-                }
-                val p =
-                  decodePath((a \ "path").asInstanceOf[JString].s)
-                val size = (a \ "size") match {
-                  case JInt(i) => i.toLong; case JLong(l2) => l2
-                  case _       => 0L
-                }
-                tail.remove(p)
-                tail(p) = Some((addOf(p, size,
-                  partMapOf(a \ "partitionValues"),
-                  (a \ "stats") match {
-                    case JString(s) => Some(s); case _ => None
-                  }, dvJson), dvJson))
-            }
-            (j \ "remove" \ "path") match {
-              case JString(p0) =>
-                val p = decodePath(p0)
-                tail.remove(p); tail(p) = None
-              case _ => ()
-            }
+    tailActions(dir, ckptV.map(_ + 1).getOrElse(0L)).foreach { j =>
+      (j \ "add") match {
+        case JNothing => ()
+        case a =>
+          val dvJson = (a \ "deletionVector") match {
+            case JNothing | JNull => None
+            case d => Some(JsonMethods.compact(
+              JsonMethods.render(d)))
           }
+          val p =
+            decodePath((a \ "path").asInstanceOf[JString].s)
+          val size = (a \ "size") match {
+            case JInt(i) => i.toLong; case JLong(l2) => l2
+            case _       => 0L
+          }
+          tail.remove(p)
+          tail(p) = Some((addOf(p, size,
+            partMapOf(a \ "partitionValues"),
+            (a \ "stats") match {
+              case JString(s) => Some(s); case _ => None
+            }, dvJson), dvJson))
       }
+      (j \ "remove" \ "path") match {
+        case JString(p0) =>
+          val p = decodePath(p0)
+          tail.remove(p); tail(p) = None
+        case _ => ()
+      }
+    }
     val tailAlive0 = tail.values.flatten.toSeq
     tailAlive0.find(a => hasUriScheme(a._1.path)).foreach(a =>
       throw new IllegalArgumentException(uriMsg(a._1.path)))

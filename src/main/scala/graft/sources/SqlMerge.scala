@@ -134,49 +134,19 @@ object SqlMerge {
       cased.cast(tField.dataType).as(c)
     }
 
-    /** ONE aggregate job over the labeled join: the ANSI cardinality
-      * check (max source matches per target row, via the partial-agged
-      * per-`__tid` level) and all four branch counters come out of the
-      * same pass — the join is never materialized just to validate it.
-      * Throws on a cardinality violation BEFORE anything commits. */
-    def statsChecked(): MergeResult = {
-      val isUpd = col("__branch").isin(updates.map(i => i: Any): _*)
-      val isDel = col("__branch").isin(deletes.map(i => i: Any): _*)
-      val perTid = labeled.groupBy(col("__tid")).agg(
-        sum(when(tPresent && sPresent, 1L).otherwise(0L)).as("__nm"),
-        sum(when(isUpd && tPresent, 1L).otherwise(0L)).as("__u"),
-        sum(when(isDel, 1L).otherwise(0L)).as("__d"),
-        sum(when(isUpd && !tPresent, 1L).otherwise(0L)).as("__i"),
-        sum(when(col("__branch") === -1, 1L).otherwise(0L)).as("__k"))
-      // the null-__tid group holds every insert row; all aggregates
-      // are partial-agged so the "hot" null key never skews a reducer
-      val r = perTid.agg(
-        max(when(col("__tid").isNotNull, col("__nm"))).as("max_match"),
-        sum(col("__u")).as("updated"), sum(col("__d")).as("deleted"),
-        sum(col("__i")).as("inserted"), sum(col("__k")).as("unchanged"))
-        .head()
-      if (!r.isNullAt(0) && r.getLong(0) > 1L) throw new IllegalStateException(
-        "MERGE cardinality violation: a target row matched by " +
-          "multiple source rows (as in ANSI/Delta, this is an error)")
-      def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-      MergeResult(l(1), l(2), l(3), l(4))
-    }
-
-    /** [[statsChecked]] fused with the touched-file aggregate: ONE
-      * pass over the labeled join yields the ANSI cardinality check,
-      * all four branch counters, AND the distinct set of target
-      * files containing a changed row — mergeLog's first two join
-      * executions become one. The per-`__tid` level additionally
-      * carries the row's file (a target row lives in exactly one
-      * file; null when the row is unchanged), and the second level
-      * groups those per-tid rows BY FILE — same stage shape as
-      * [[statsChecked]]'s global aggregate, so the fusion is pure
-      * saving. The driver folds the per-file partials (exact long
-      * sums/max — order-free) and reads the touched set off the
-      * non-null file keys; collected rows are bounded by #touched
-      * files + 1, the same driver profile as the old touched-file
-      * collect. Throws on a cardinality violation BEFORE anything
-      * is written, like [[statsChecked]]. */
+    /** ONE aggregate job over the labeled join yields the ANSI
+      * cardinality check (max source matches per target row, via the
+      * partial-agged per-`__tid` level), all four branch counters,
+      * AND the distinct set of target files containing a changed row
+      * — the join is never materialized just to validate it. The
+      * per-`__tid` level carries the row's file (a target row lives
+      * in exactly one file; null when the row is unchanged, and
+      * always null when `fileCol` is), and the second level groups
+      * those per-tid rows BY FILE. The driver folds the per-file
+      * partials (exact long sums/max — order-free) and reads the
+      * touched set off the non-null file keys; collected rows are
+      * bounded by #touched files + 1. Throws on a cardinality
+      * violation BEFORE anything is written. */
     def statsAndTouched(fileCol: Column): (MergeResult, Set[String]) = {
       val isUpd = col("__branch").isin(updates.map(i => i: Any): _*)
       val isDel = col("__branch").isin(deletes.map(i => i: Any): _*)
@@ -187,6 +157,8 @@ object SqlMerge {
         sum(when(isUpd && !tPresent, 1L).otherwise(0L)).as("__i"),
         sum(when(col("__branch") === -1, 1L).otherwise(0L)).as("__k"),
         min(when(tPresent && (isUpd || isDel), fileCol)).as("__tf"))
+      // the null-__tid group holds every insert row; all aggregates
+      // are partial-agged so the "hot" null key never skews a reducer
       val rows = perTid.groupBy(col("__tf")).agg(
         max(when(col("__tid").isNotNull, col("__nm"))).as("max_match"),
         sum(col("__u")).as("updated"), sum(col("__d")).as("deleted"),
@@ -571,7 +543,7 @@ object SqlMerge {
                   target: DataFrame): DataFrame = {
     val core = analyzeFrame(spark, parse(spark, mergeSql), target,
       target.columns.toSeq)
-    core.statsChecked()
+    core.statsAndTouched(lit(null).cast("string"))
     val out = core.next
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
