@@ -1009,8 +1009,8 @@ object SparkEntry {
          ORDER BY event_id""")),
 
     Query("log_table_constraints", (s, d) => {
-      // CHECK constraints enforced inside the commit-time stats
-      // aggregate (zero extra scans, Delta semantics): a valid
+      // CHECK constraints enforced inside the commit's write tasks
+      // (zero extra scans, Delta semantics): a valid
       // append lands, a batch carrying ONE violating row refuses the
       // WHOLE commit, and a pre-filtered retry lands — the oracle is
       // the two committed batches

@@ -215,17 +215,26 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
   *  - `data/`                 immutable parquet data files, shared
   *    across versions by reference
   *  - `_cdf/<uuid>/`          row-level change files of delete/update
-  *    commits (the change-data-feed surface), referenced from the
-  *    commit that wrote them
+  *    /merge commits (the change-data-feed surface), referenced from
+  *    the commit that wrote them. Raw layout: the table's columns plus
+  *    `_change_type`, and — on MOR DML pre-images and MERGE images —
+  *    the matched row's scan provenance `__file` (the data file's
+  *    URI) and `__idx` (its parquet row index), plus the materialized
+  *    `_graft_row_id` on row-tracked tables. Post-images and inserts
+  *    may lack the extras, so files in one directory differ in
+  *    schema. Every feed reader must load by EXPLICIT schema (the
+  *    table schema + `_change_type`, as [[changes]] does); the extras
+  *    are internal and never part of the feed contract.
   *
   * Why this scales where a whole-snapshot rewrite does not: an
   * append commits ONLY its new files plus one O(#files-in-delta) log
   * entry — a 1-row-in-100-TB append writes kilobytes. Row-level
   * DELETE/UPDATE prune untouched files with per-file min/max stats
-  * (collected at commit time over the staged delta only), scan just
-  * the stats survivors for matches, and rewrite just the files that
-  * contain matching rows; everything else is carried forward by
-  * reference. Snapshot isolation is the MVCC trick — data files are
+  * (computed by the write tasks as they write each file — see
+  * [[writeStaged]] — so a commit never re-reads its own staged data),
+  * scan just the stats survivors for matches, and rewrite just the
+  * files that contain matching rows; everything else is carried
+  * forward by reference. Snapshot isolation is the MVCC trick — data files are
   * immutable, a version is defined entirely by its log entry, and
   * commits race on an atomic create-if-absent claim of the next log
   * file (optimistic concurrency: blind appends retry, file-rewriting
@@ -1899,8 +1908,8 @@ final class LogTable(val path: String,
     .map(v => snapshotAt(v).bloomCols).getOrElse(Seq.empty)
 
   /** Active CHECK constraints (name → SQL boolean expression). Every
-    * commit that stages data validates them in the SAME delta-sized
-    * aggregate as the stats pass — zero extra scans — and refuses to
+    * commit that stages data validates them inside its write tasks,
+    * beside the file statistics — zero extra scans — and refuses to
     * commit on any violating row (Delta's CHECK constraint
     * semantics: NULL passes, only provably-FALSE rows violate). */
   def checkConstraints: Map[String, String] = currentVersion
@@ -1909,7 +1918,7 @@ final class LogTable(val path: String,
   /** Generated columns (Delta's `GENERATED ALWAYS AS`): column name
     * → SQL expression over the other columns. Appends that omit the
     * column get it computed; writes that PROVIDE it are validated
-    * against the expression inside the stats aggregate (a mismatch
+    * against the expression inside the in-write stats (a mismatch
     * refuses the commit — Delta's rule); UPDATEs that touch a source
     * column recompute it; and predicates on a source column derive
     * predicates on the generated one for file skipping — which is
@@ -2269,7 +2278,7 @@ final class LogTable(val path: String,
     * EXISTING table in one scan first — refusing if any current row
     * violates — then records the constraint in a metadata-only
     * commit; every later write enforces it for free inside its
-    * stats pass. */
+    * write tasks, beside the file statistics. */
   def addCheckConstraint(spark: SparkSession, name: String,
                          sqlExpr: String): Long =
     // validate-then-commit must be atomic w.r.t. other writers: a
@@ -2895,7 +2904,7 @@ final class LogTable(val path: String,
 
   /** Comparable-form projection for stats/skipping: one total order
     * per column family (longs / doubles / strings), shared by the
-    * stats pass and the predicate-literal side. */
+    * in-write stats and the predicate-literal side. */
   private def statProjection(f: StructField): Column = f.dataType match {
     case ByteType | ShortType | IntegerType | LongType =>
       col(f.name).cast("long")
@@ -2917,23 +2926,23 @@ final class LogTable(val path: String,
     * (a truncated prefix is NOT an upper bound). */
   private val MaxStringBound = 256
 
-  /** One delta-sized aggregate over the staged files: per file,
-    * row count, min/max/nulls of every stat column, and — for
-    * bloom-indexed columns — a per-file Bloom filter over
-    * `xxhash64(col)` (Spark's codegen'd partial-merging
-    * `BloomFilterAggregate`, the runtime-filter machinery). The scan
-    * cost is ∝ the commit's own data — never the table. */
-  private def collectStats(spark: SparkSession, stagedDir: File,
-                           tableSchema: StructType,
-                           partCols: Seq[String])
-      : Map[String, (AddFile, Seq[(String, Array[Byte])])] = {
+  /** The in-write statistics of one staged write (see
+    * [[StagedStatsTracker]]), bound to the written attributes: per
+    * file, row count, min/max/nulls of every stat column, a Bloom
+    * filter over `xxhash64(col)` for bloom-indexed columns (Spark's
+    * own `BloomFilterAggregate` buffer and serializer), and the
+    * violation count of every CHECK constraint and generated column.
+    * SQL CHECK semantics: NULL passes; only a provably-FALSE row
+    * violates. A provided generated column violates when it
+    * null-safely differs from its expression recomputed over the
+    * written row. `dataAttrs` are the columns a task's `newRow` sees,
+    * `partAttrs` the partition values joined after them; a table
+    * column the write does not carry reads as NULL. */
+  private def statsSpec(spark: SparkSession, tableSchema: StructType,
+                        dataAttrs: Seq[expressions.Attribute],
+                        partAttrs: Seq[expressions.Attribute]): StatsSpec = {
     val cols = statCols(tableSchema)
     val bloomIdx = bloomCols.filter(tableSchema.fieldNames.contains)
-    // CHECK constraints and generated-column faithfulness validate
-    // in this same aggregate — zero extra scans. SQL CHECK
-    // semantics: NULL passes; only a provably-FALSE row violates.
-    // A provided generated column violates when it null-safely
-    // differs from its expression recomputed over the staged row.
     val genn = generatedCols.toSeq
       .filter(g => tableSchema.fieldNames.contains(g._1))
     if (genn.exists { case (_, e) => tzSensitive(spark, e, tableSchema) })
@@ -2948,59 +2957,112 @@ final class LogTable(val path: String,
     val checks = checkConstraints.toSeq ++
       genn.map { case (g, e) =>
         s"generated column $g" -> s"`$g` <=> ($e)" }
-    val aggs: Seq[Column] = count(lit(1)).as("__rows") +: (cols.flatMap { f =>
-      Seq(min(statProjection(f)).as(s"__min_${f.name}"),
-        max(statProjection(f)).as(s"__max_${f.name}"),
-        sum(col(f.name).isNull.cast("long")).as(s"__nulls_${f.name}"))
-    } ++ bloomIdx.map { c =>
-      graft.plans.BloomExpressions.bloomAgg(xxhash64(col(c)),
-        bloomExpectedItems).as(s"__bloom_$c")
-    } ++ checks.zipWithIndex.map { case ((_, sqlExpr), i) =>
-      sum(coalesce(!expr(sqlExpr), lit(false)).cast("long"))
-        .as(s"__viol_$i")
-    })
-    // a partitioned staging is hive-laid-out (the partition columns
-    // come from the dirs); stats cover them too — min = max = the
-    // partition value, which is what makes the log-side stats pruner
-    // subsume partition pruning with no extra logic
-    val reader = spark.read.schema(tableSchema)
-    val rows = (if (partCols.isEmpty) reader.parquet(stagedDir.toString)
-      else reader.option("basePath", stagedDir.toString)
-        .parquet(stagedDir.toString))
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    checks.zipWithIndex.foreach { case ((name, sqlExpr), i) =>
-      val bad = rows.map(_.getAs[Long](s"__viol_$i")).sum
+    ensureGraftFns(spark, checks.map(_._2))
+    // resolve over an empty relation shaped like the write plus the
+    // table columns it lacks (a DSv2 INSERT into a hidden-partitioned
+    // table omits the generated columns), then bind positionally to
+    // the rows the tasks see; a lacking column is NULL, as a read of
+    // the staging by the table schema would give
+    val written = dataAttrs ++ partAttrs
+    val absent = tableSchema.fields.filterNot(f =>
+      written.exists(_.name == f.name))
+    val projected: Seq[Column] = cols.map(statProjection) ++
+      bloomIdx.map(c => xxhash64(col(c))) ++
+      checks.map { case (_, sqlExpr) => coalesce(!expr(sqlExpr), lit(false)) }
+    val plan = spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(written.map(a => StructField(a.name, a.dataType)) ++
+          absent.map(f => StructField(f.name, f.dataType))))
+      .select(projected: _*).queryExecution.analyzed
+    // RuntimeReplaceable functions only evaluate once the optimizer's
+    // own rule swapped in their replacements
+    val bound = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(plan)
+      match {
+        case org.apache.spark.sql.catalyst.plans.logical.Project(l, child) =>
+          val (rowAttrs, nullAttrs) = child.output.splitAt(written.size)
+          l.map(ne => expressions.BindReferences.bindReference(
+            (ne match { case a: expressions.Alias => a.child; case o => o })
+              .transform { case a: expressions.Attribute
+                  if nullAttrs.exists(_.exprId == a.exprId) =>
+                expressions.Literal(null, a.dataType) },
+            expressions.AttributeSeq(rowAttrs)))
+        case other => throw new IllegalStateException(
+          s"unexpected stats plan: ${other.simpleString(2)}")
+      }
+    val blooms = bloomIdx.indices.map(i =>
+      new expressions.aggregate.BloomFilterAggregate(
+        expressions.BoundReference(cols.size + i, LongType, nullable = false),
+        bloomExpectedItems))
+    new StatsSpec(cols.map(_.name), bloomIdx, checks, bound, blooms)
+  }
+
+  /** Write `df` as one commit's staged files under `dir` (the table's
+    * partition layout, field-id stamps, generated-column healing and
+    * cluster sort applied — see [[stagedFrame]]) with the commit's
+    * file statistics computed inside the write tasks — no second pass
+    * over the staged files. A failed write drops the staging. */
+  private[sources] def writeStaged(df: DataFrame, dir: String,
+                                   tableSchema: StructType,
+                                   replacingSchema: Boolean = false,
+                                   writeSchema: Option[StructType] = None)
+      : StagedStats = {
+    val spark = df.sparkSession
+    try {
+      val (frame, pc) = stagedFrame(df, replacingSchema, writeSchema)
+      org.apache.spark.sql.GraftWriteShim.writeParquet(frame, dir, pc,
+        (dataAttrs, partAttrs) => new StagedStatsTracker(
+          statsSpec(spark, tableSchema, dataAttrs, partAttrs))).result()
+    } catch { case e: Throwable => dropStaging(dir); throw e }
+  }
+
+  /** Read back a staging [[writeStaged]] wrote, by explicit schema:
+    * hive partition values take the schema's types rather than types
+    * inferred from the directory names. */
+  private[sources] def readStaged(spark: SparkSession, dir: String,
+                                  s: StructType): DataFrame =
+    spark.read.schema(StructType(s.fields.map(_.copy(metadata = Metadata.empty))))
+      .option("basePath", dir).parquet(dir)
+
+  /** A tracker for a staging Spark's DSv2 `FileWrite` populates (flat,
+    * columns `written` in file order) — the INSERT INTO and streaming
+    * `toTable` paths attach it to their writer factory. */
+  private[sources] def stagedStatsTracker(spark: SparkSession,
+                                          written: StructType)
+      : StagedStatsTracker =
+    new StagedStatsTracker(statsSpec(spark, schema,
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(written),
+      Seq.empty))
+
+  /** The commit-side fold of a staged write's stats: refuse on any
+    * CHECK/generated-column violation, bound strings to
+    * [[MaxStringBound]] (a longer min truncates, a longer max drops),
+    * and keep the files that hold rows. */
+  private[sources] def foldStats(staged: StagedStats)
+      : Map[String, (AddFile, Seq[(String, Array[Byte])])] = {
+    staged.checks.zipWithIndex.foreach { case ((name, sqlExpr), i) =>
+      val bad = staged.files.values.map(_.violations(i)).sum
       if (bad > 0L) throw new IllegalArgumentException(
         s"CHECK constraint '$name' ($sqlExpr) violated by $bad " +
           "staged row(s); nothing was committed")
     }
-    val stagedRoot = stagedDir.toPath.toAbsolutePath
-    rows.map { r =>
-      val full = new File(new java.net.URI(r.getAs[String]("__file")))
-        .toPath.toAbsolutePath
-      val rel = stagedRoot.relativize(full).toString
-      val stats = cols.map { f =>
-        def bound(prefix: String): Option[Any] = {
-          val v = r.getAs[Any](s"$prefix${f.name}")
+    staged.files.filter(_._2.rows > 0L).map { case (rel, fs) =>
+      val stats = staged.statCols.zipWithIndex.map { case (c, i) =>
+        def bound(v: Any, isMin: Boolean): Option[Any] =
           Option(v).flatMap {
             case s: String =>
               if (s.length <= MaxStringBound) Some(s)
-              else if (prefix == "__min_") Some(s.substring(0, MaxStringBound))
+              else if (isMin) Some(s.substring(0, MaxStringBound))
               else None // dropped max: truncation is not an upper bound
             case l: Long   => Some(l)
-            case i: Int    => Some(i.toLong)
+            case n: Int    => Some(n.toLong)
             case d: Double => Some(d)
             case other     => Some(other.toString)
           }
-        }
-        f.name -> ColStats(bound("__min_"), bound("__max_"),
-          r.getAs[Long](s"__nulls_${f.name}"))
+        c -> ColStats(bound(fs.mins(i), isMin = true),
+          bound(fs.maxs(i), isMin = false), fs.nulls(i))
       }.toMap
-      val blooms = bloomIdx.flatMap(c =>
-        Option(r.getAs[Array[Byte]](s"__bloom_$c")).map(c -> _))
-      rel -> ((AddFile(rel, r.getAs[Long]("__rows"), 0L, stats), blooms))
-    }.toMap
+      val blooms = staged.bloomCols.zip(fs.blooms).filter(_._2 != null)
+      rel -> ((AddFile(rel, fs.rows, 0L, stats), blooms))
+    }
   }
 
   private[sources] def newStagingDir(): String = {
@@ -3018,9 +3080,13 @@ final class LogTable(val path: String,
     deleteRecursive(new File(staged))
 
   /** Move staged parquet part files into `data/` under fresh unique
-    * names and commit them. `removePaths` names files (table-relative)
-    * the commit retires. Returns the committed version. */
-  private def finalizeStaged(spark: SparkSession, stagedDir: File,
+    * names and commit them, with the `AddFile` stats and bloom
+    * sidecars the write tasks computed (`staged`, from [[writeStaged]]
+    * or a DSv2 staging's tracker) — the commit reads no staged data.
+    * Every staged part file must carry write statistics. `removePaths`
+    * names files (table-relative) the commit retires. Returns the
+    * committed version. */
+  private def finalizeStaged(stagedDir: File, staged: StagedStats,
                              tableSchema: StructType,
                              removePaths: Seq[String], op: String,
                              readVersion: Option[Long],
@@ -3053,21 +3119,21 @@ final class LogTable(val path: String,
     val parts = walk(stagedDir)
       .map(f => stagedRoot.relativize(f.toPath.toAbsolutePath).toString)
       .sorted
-    val partCols = if (currentVersion.isDefined) partitionCols else Seq.empty
     val stats =
-      if (parts.isEmpty)
-        Map.empty[String, (AddFile, Seq[(String, Array[Byte])])]
-      else
-        try collectStats(spark, stagedDir, tableSchema, partCols)
-        catch { case e: Throwable =>
-          // a refused commit (CHECK violation, bad stage) must not
-          // leak its staging — nothing has moved yet
-          deleteRecursive(stagedDir)
-          throw e
-        }
+      try {
+        parts.foreach(rel => if (!staged.files.contains(rel))
+          throw new IllegalStateException(
+            s"staged file $rel has no write statistics"))
+        foldStats(staged)
+      } catch { case e: Throwable =>
+        // a refused commit (CHECK violation, bad stage) must not
+        // leak its staging — nothing has moved yet
+        deleteRecursive(stagedDir)
+        throw e
+      }
     val tag = UUID.randomUUID().toString.take(8)
     // zero-row part files (a rewrite that left no survivors, an
-    // empty insert) carry no data — the stats pass has no row for
+    // empty insert) carry no data — the fold keeps no entry for
     // them; drop them instead of committing clutter
     val adds = parts.filter(stats.contains)
       .zipWithIndex.map { case (rel, i) =>
@@ -3681,13 +3747,13 @@ final class LogTable(val path: String,
       ()
     }
 
-  /** Staged-delta writer with the table's partition layout applied:
-    * partitioned tables stage hive-style (the finalize move then
-    * preserves the dirs under data/). */
-  private def stagedWriter(df: DataFrame,
-                           replacingSchema: Boolean = false,
-                           writeSchema: Option[StructType] = None)
-      : org.apache.spark.sql.DataFrameWriter[Row] = {
+  /** The staged delta as [[writeStaged]] writes it, plus the table's
+    * partition columns: partitioned tables stage hive-style (the
+    * finalize move then preserves the dirs under data/). */
+  private def stagedFrame(df: DataFrame,
+                          replacingSchema: Boolean,
+                          writeSchema: Option[StructType])
+      : (DataFrame, Seq[String]) = {
     val pc = if (currentVersion.isDefined) partitionCols else Seq.empty
     // a column-mapped table must write its field ids into every data
     // file; aliases along the rewrite paths can drop column
@@ -3704,20 +3770,25 @@ final class LogTable(val path: String,
     // the head, or the mapped-table column-set guard below misfires
     val cur = writeSchema.orElse(
       if (currentVersion.isDefined) Some(schema) else None)
-    // null generated values heal at this single write choke point:
-    // coalesce-recompute fills a NULL generated column from its
-    // expression — the partition-evolution backfill path (old-epoch
-    // rows read without the hidden transform column migrate into
-    // the new layout with computed values on any rewrite). Non-null
-    // provided values are NOT touched, so a mismatching explicit
-    // value still refuses at the commit-time validation aggregate.
+    // null or omitted generated values heal at this single write
+    // choke point: coalesce-recompute fills a NULL generated column
+    // from its expression — the partition-evolution backfill path
+    // (old-epoch rows read without the hidden transform column
+    // migrate into the new layout with computed values on any
+    // rewrite) — and a frame without the column (a MERGE over the
+    // user-visible columns of a hidden-partitioned table) gets it
+    // computed. Non-null provided values are NOT touched, so a
+    // mismatching explicit value still refuses at the commit's
+    // in-write validation.
     val healed = cur match {
       case Some(s) if !replacingSchema && generatedCols.nonEmpty =>
         generatedCols.foldLeft(df) { case (acc, (g, e)) =>
-          s.fields.find(f => f.name == g && acc.columns.contains(g))
-            .map(f => acc.withColumn(g,
-              coalesce(col(g), expr(e).cast(f.dataType))))
-            .getOrElse(acc)
+          s.fields.find(_.name == g).map { f =>
+            val computed = expr(e).cast(f.dataType)
+            acc.withColumn(g,
+              if (acc.columns.contains(g)) coalesce(col(g), computed)
+              else computed)
+          }.getOrElse(acc)
         }
       case _ => df
     }
@@ -3755,8 +3826,7 @@ final class LogTable(val path: String,
       if (keys.isEmpty || !keys.forall(stamped.columns.contains)) stamped
       else stamped.sortWithinPartitions(
         (pc.filter(stamped.columns.contains) ++ keys).map(col): _*)
-    val w = clustered.write.mode("overwrite")
-    if (pc.isEmpty) w else w.partitionBy(pc: _*)
+    (clustered, pc)
   }
 
   /** The `graft.clusterBy` cluster key, if set (comma-separated
@@ -3851,7 +3921,7 @@ final class LogTable(val path: String,
       snapOpt.map(_.defaults).getOrElse(Map.empty))
     // generated columns the incoming frame omits are computed here
     // (GENERATED ALWAYS AS); ones it provides are validated by the
-    // commit-time stats aggregate instead
+    // commit's in-write stats instead
     val gen = snapOpt.map(_.generated).getOrElse(Map.empty)
     ensureGraftFns(df0.sparkSession, gen.values)
     val df = gen.foldLeft(pol) { case (acc, (g, e)) =>
@@ -3901,8 +3971,8 @@ final class LogTable(val path: String,
     }
     val schemaChanged = !existing.contains(tableSchema)
     val staged = new File(newStagingDir())
-    stagedWriter(conform(df, tableSchema),
-      writeSchema = Some(tableSchema)).parquet(staged.toString)
+    val stats = writeStaged(conform(df, tableSchema), staged.toString,
+      tableSchema, writeSchema = Some(tableSchema))
     val writesSchema = basisVersion.isEmpty || schemaChanged
     // zone backfill for pre-pin tables: a zone-sensitive generated
     // table whose log lacks a tz action pins the CURRENT session's
@@ -3915,7 +3985,7 @@ final class LogTable(val path: String,
         tzSensitive(df.sparkSession, e, tableSchema) })
         Some(df.sparkSession.sessionState.conf.sessionLocalTimeZone)
       else None
-    finalizeStaged(df.sparkSession, staged, tableSchema,
+    finalizeStaged(staged, stats, tableSchema,
       removePaths = Seq.empty, op = "append", readVersion = None,
       schemaJson = if (writesSchema) Some(tableSchema.json) else None,
       cdfDir = None,
@@ -3963,8 +4033,9 @@ final class LogTable(val path: String,
     }
     val prior = snapOpt.map(_.adds.map(_.path)).getOrElse(Seq.empty)
     val staged = new File(newStagingDir())
-    stagedWriter(df, replacingSchema = replacing).parquet(staged.toString)
-    finalizeStaged(df.sparkSession, staged, outSchema, prior,
+    val stats = writeStaged(df, staged.toString, outSchema,
+      replacingSchema = replacing)
+    finalizeStaged(staged, stats, outSchema, prior,
       op = "overwrite", readVersion = currentVersion,
       schemaJson = Some(outSchema.json), cdfDir = None, txn = txn)
   }
@@ -4002,8 +4073,9 @@ final class LogTable(val path: String,
       snapOpt.map(_.defaults).getOrElse(Map.empty))
     val tableSchema = snapOpt.map(_.schema).getOrElse(df.schema)
     val staged = new File(newStagingDir())
-    stagedWriter(conform(df, tableSchema)).parquet(staged.toString)
-    val v = finalizeStaged(df.sparkSession, staged, tableSchema,
+    val stats = writeStaged(conform(df, tableSchema), staged.toString,
+      tableSchema)
+    val v = finalizeStaged(staged, stats, tableSchema,
       removePaths = Seq.empty, op = "append", readVersion = None,
       schemaJson = if (currentVersion.isEmpty) Some(tableSchema.json)
       else None, cdfDir = None, txn = Some((app, batchId)),
@@ -4014,51 +4086,48 @@ final class LogTable(val path: String,
     else { maybeAutoCompact(df0.sparkSession); Some(v) }
   }
 
-  /** A staging directory an EXTERNAL writer populated is flat (the
+  /** A staging directory Spark's DSv2 writer populated is flat (the
     * partition columns sit in the data files): for a partitioned
-    * table, re-stage it hive-style — one pass over the delta only —
-    * so the finalize move lands the files under their partition
-    * dirs. Flat stagings of unpartitioned tables pass through. */
-  private def restageForLayout(spark: SparkSession, staged: String): String = {
-    if (currentVersion.isEmpty) return staged
+    * table, re-stage it hive-style through [[writeStaged]] — one pass
+    * over the delta only, which recomputes the stats — so the
+    * finalize move lands the files under their partition dirs. Flat
+    * stagings of unpartitioned tables pass through with the stats
+    * their own write computed. */
+  private def restageForLayout(spark: SparkSession, staged: String,
+                               stats: StagedStats): (String, StagedStats) = {
+    if (currentVersion.isEmpty) return (staged, stats)
     val s = schema
     val pc = partitionCols
     val mapped = hasFieldIds(s)
     val flat = Option(new File(staged).listFiles()).toSeq.flatten
       .exists(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    // externally-produced stagings (DSv2 INSERT, the merge planner)
-    // arrive flat and without field ids; a partitioned table needs
-    // the hive layout, a column-mapped table needs ids stamped into
-    // the files, a generated-column table needs omitted (hidden
-    // transform) columns computed, and a CLUSTERED table needs the
-    // key-local sort the direct executor write skipped — one pass
-    // over the delta fixes all four
+    // DSv2 INSERT / streaming stagings arrive flat and without field
+    // ids; a partitioned table needs the hive layout, a column-mapped
+    // table needs ids stamped into the files, a generated-column
+    // table needs omitted (hidden transform) columns computed, and a
+    // CLUSTERED table needs the key-local sort the direct executor
+    // write skipped — one pass over the delta fixes all four
     if (!flat || (pc.isEmpty && !mapped && generatedCols.isEmpty &&
-        clusterByCols.isEmpty)) staged
+        clusterByCols.isEmpty)) (staged, stats)
     else {
-      val byName0 = StructType(s.fields.map(f =>
+      val byName = StructType(s.fields.map(f =>
         f.copy(metadata = Metadata.empty)))
-      // a row-tracked staging (merge planner output) may carry the
-      // materialized id column — thread it through the re-stage
-      // (files without it null-fill, which the read path treats as
-      // "compute from base + position")
-      val byName =
-        if (rowTrackingEnabled()) byName0.add(LogTable.RowIdPhysCol, LongType)
-        else byName0
       val staged2 = newStagingDir()
-      stagedWriter(spark.read.schema(byName).parquet(staged))
-        .parquet(staged2)
+      val stats2 = writeStaged(spark.read.schema(byName).parquet(staged),
+        staged2, s)
       dropStaging(staged)
-      staged2
+      (staged2, stats2)
     }
   }
 
   /** Commit a staging directory the DSv2 write path already
-    * populated, as an append (`INSERT INTO`). */
-  private[sources] def appendStaged(spark: SparkSession,
-                                    staged: String): Long = {
-    val v = finalizeStaged(spark, new File(restageForLayout(spark, staged)),
-      schema, removePaths = Seq.empty, op = "append", readVersion = None,
+    * populated, as an append (`INSERT INTO`); `stats` come from the
+    * [[stagedStatsTracker]] its writers carried. */
+  private[sources] def appendStaged(spark: SparkSession, staged: String,
+                                    stats: StagedStats): Long = {
+    val (dir, st) = restageForLayout(spark, staged, stats)
+    val v = finalizeStaged(new File(dir), st, schema,
+      removePaths = Seq.empty, op = "append", readVersion = None,
       schemaJson = None, cdfDir = None)
     maybeAutoCompact(spark)
     v
@@ -4067,11 +4136,12 @@ final class LogTable(val path: String,
   /** Commit a staging directory as a full replace
     * (`INSERT OVERWRITE`): adds the staged files, retires every
     * prior live file by reference. */
-  private[sources] def overwriteStaged(spark: SparkSession,
-                                       staged: String): Long = {
+  private[sources] def overwriteStaged(spark: SparkSession, staged: String,
+                                       stats: StagedStats): Long = {
     val prior = currentVersion.map(v => snapshotAt(v).adds.map(_.path))
       .getOrElse(Seq.empty)
-    finalizeStaged(spark, new File(restageForLayout(spark, staged)), schema,
+    val (dir, st) = restageForLayout(spark, staged, stats)
+    finalizeStaged(new File(dir), st, schema,
       prior, op = "overwrite", readVersion = currentVersion,
       schemaJson = None, cdfDir = None)
   }
@@ -4082,28 +4152,29 @@ final class LogTable(val path: String,
     * the engine replays after a restart deduplicates at the commit
     * layer — the staged bytes drop, nothing commits twice. */
   private[sources] def appendStagedStream(spark: SparkSession,
-                                          staged: String, app: String,
+                                          staged: String, stats: StagedStats,
+                                          app: String,
                                           batchId: Long): Option[Long] = {
     if (lastCommittedBatch(app).exists(_ >= batchId)) {
       dropStaging(staged); return None
     }
-    val v = finalizeStaged(spark,
-      new File(restageForLayout(spark, staged)), schema,
+    val (dir, st) = restageForLayout(spark, staged, stats)
+    val v = finalizeStaged(new File(dir), st, schema,
       removePaths = Seq.empty, op = "append", readVersion = None,
       schemaJson = None, cdfDir = None, txn = Some((app, batchId)))
     if (v < 0) None
     else { maybeAutoCompact(spark); Some(v) }
   }
 
-  /** Commit a staged rewrite produced by an external planner (the
-    * file-granularity MERGE): adds the staged files, retires
-    * `removePaths`, under the usual conflict revalidation. An
-    * identity-allocating merge passes its specs and allocation basis
-    * so the commit advances the high-water mark from the staged
-    * files' stats and re-plans on an allocation race — the same
-    * contract appends have. */
-  private[sources] def commitStagedRewrite(spark: SparkSession,
-                                           staged: String,
+  /** Commit a staged rewrite written by [[writeStaged]] for an
+    * external planner (the file-granularity MERGE): adds the staged
+    * files, retires `removePaths`, under the usual conflict
+    * revalidation. An identity-allocating merge passes its specs and
+    * allocation basis so the commit advances the high-water mark from
+    * the staged files' stats and re-plans on an allocation race — the
+    * same contract appends have. */
+  private[sources] def commitStagedRewrite(staged: String,
+                                           stats: StagedStats,
                                            removePaths: Seq[String],
                                            op: String,
                                            readVersion: Option[Long],
@@ -4116,7 +4187,7 @@ final class LogTable(val path: String,
                                            identityBasis:
                                              Option[Map[String,
                                                Option[Long]]] = None): Long =
-    finalizeStaged(spark, new File(restageForLayout(spark, staged)), schema,
+    finalizeStaged(new File(staged), stats, schema,
       removePaths, op, readVersion, schemaJson = None, cdfDir = cdfDir,
       txn = txn, identityUpdate = identityUpdate,
       identityBasis = identityBasis)
@@ -4213,10 +4284,31 @@ final class LogTable(val path: String,
     * everything else carries forward by reference. Rows where `pred`
     * is NULL are kept (SQL DELETE semantics). Matching rows land in
     * the change feed as `delete` rows. */
-  def delete(spark: SparkSession, pred: Column): RowOpResult =
+  def delete(spark: SparkSession, pred: Column): RowOpResult = {
+    requireDeterministic(spark, "DELETE", pred, Map.empty)
     rewriteMatching(spark, pred, "delete") { (matching, file) =>
       file.filter(!coalesce(pred, lit(false)))
     }
+  }
+
+  /** Every row-level op evaluates its predicate (and UPDATE its SET
+    * expressions) more than once over the same rows — the match scan,
+    * the rewrite, the change feed's images — and relies on each
+    * evaluation agreeing. A non-deterministic expression (`rand()`,
+    * `uuid()`) would let the feed and the committed files diverge, so
+    * it is refused before anything is written. */
+  private def requireDeterministic(spark: SparkSession, op: String,
+                                   pred: Column,
+                                   set: Map[String, Column]): Unit = {
+    val exprs = ("predicate" -> pred) +: set.toSeq.map { case (k, e) =>
+      s"SET $k" -> e }
+    val plan = spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+      .select(exprs.map { case (_, e) => e }: _*).queryExecution.analyzed
+    plan.expressions.zip(exprs).foreach { case (e, (what, c)) =>
+      if (!e.deterministic) throw new IllegalArgumentException(
+        s"$op $what must be deterministic: $c")
+    }
+  }
 
   /** Row-level UPDATE: same file-skipping skeleton as [[delete]];
     * matching rows get `set` applied, everything else is rewritten
@@ -4229,6 +4321,7 @@ final class LogTable(val path: String,
     set0.keys.foreach(k => require(!identityColumns.contains(k),
       s"cannot UPDATE SET IDENTITY column '$k'"))
     val set = withGeneratedRecompute(spark, set0)
+    requireDeterministic(spark, "UPDATE", pred, set)
     rewriteMatching(spark, pred, "update") { (matching, file) =>
       // non-schema passthrough columns (the materialized row id on a
       // tracked table) ride through the rewrite untouched
@@ -4256,8 +4349,10 @@ final class LogTable(val path: String,
     * outright; OPTIMIZE / [[purgeDeletes]] materializes vectors
     * away. Change feed and conflict detection behave exactly as the
     * CoW path (same `delete` op, same remove-revalidation rule). */
-  def deleteMor(spark: SparkSession, pred: Column): RowOpResult =
+  def deleteMor(spark: SparkSession, pred: Column): RowOpResult = {
+    requireDeterministic(spark, "DELETE", pred, Map.empty)
     morMatching(spark, pred, "delete") { (_, _, _) => None }
+  }
 
   /** Merge-on-read UPDATE: matching rows are deletion-vectored out
     * of their files and their post-images appended as new files —
@@ -4270,6 +4365,7 @@ final class LogTable(val path: String,
     set0.keys.foreach(k => require(!identityColumns.contains(k),
       s"cannot UPDATE SET IDENTITY column '$k'"))
     val set = withGeneratedRecompute(spark, set0)
+    requireDeterministic(spark, "UPDATE", pred, set)
     morMatching(spark, pred, "update") { (matched, snapSchema, _) =>
       // the materialized row id (tracked tables) passes through, so
       // a MOR update's post-image keeps the matched row's identity
@@ -4355,16 +4451,21 @@ final class LogTable(val path: String,
 
     // UPDATE post-images: computed from the feed read-back pre-images
     // (the same deterministic SET expressions over the same rows the
-    // live scan produced), appended to the feed beside them — the
-    // SAME frame also stages below, so feed and committed files
-    // cannot diverge. Mixed parquet schemas inside the feed dir are
-    // fine: readers select the table schema + _change_type only.
+    // live scan produced) and STAGED first, before the feed changes:
+    // the feed's post-image rows are then read back from the staged
+    // files, so feed and committed files hold the same rows and no
+    // action re-reads the feed directory after the append below.
+    // Mixed parquet schemas inside the feed dir are fine: readers
+    // select the table schema + _change_type only.
     val images = preRead.drop("_change_type", "__file", "__idx")
-    val post = postImages(images, snap.schema, snap.partitionCols)
-    post.foreach { p =>
-      p.drop(LogTable.RowIdPhysCol)
+    val post = postImages(images, snap.schema, snap.partitionCols).map { p =>
+      val staged = newStagingDir()
+      val stats = writeStaged(p, staged, snap.schema)
+      readStaged(spark, staged, p.schema)
+        .drop(LogTable.RowIdPhysCol)
         .withColumn("_change_type", lit("update_postimage"))
         .write.mode("append").parquet(s"$path/$cdfRel")
+      (staged, stats)
     }
 
     // complete the vector dir: the touched files' EXISTING pairs
@@ -4396,10 +4497,8 @@ final class LogTable(val path: String,
       case None =>
         commitRetry(Some(readVersion), touched.map(_.path), reAdds, op,
           schemaJson = None, cdfDir = Some(cdfRel))
-      case Some(p) =>
-        val staged = new File(newStagingDir())
-        stagedWriter(p).parquet(staged.toString)
-        finalizeStaged(spark, staged, snap.schema,
+      case Some((staged, stats)) =>
+        finalizeStaged(new File(staged), stats, snap.schema,
           removePaths = touched.map(_.path), op = op,
           readVersion = Some(readVersion), schemaJson = None,
           cdfDir = Some(cdfRel), extraAdds = reAdds)
@@ -4420,8 +4519,9 @@ final class LogTable(val path: String,
     val staged = new File(newStagingDir())
     // positions SHIFT when vectored rows materialize away — the
     // rewrite source carries each surviving row's effective id
-    stagedWriter(rewriteSource(spark, snap, dvd)).parquet(staged.toString)
-    finalizeStaged(spark, staged, snap.schema, dvd.map(_.path),
+    val stats = writeStaged(rewriteSource(spark, snap, dvd),
+      staged.toString, snap.schema)
+    finalizeStaged(staged, stats, snap.schema, dvd.map(_.path),
       op = "optimize", readVersion = Some(readVersion), schemaJson = None,
       cdfDir = None)
   }
@@ -4670,7 +4770,7 @@ final class LogTable(val path: String,
 
     val staged = new File(newStagingDir())
     val rewritten = rewrite(matching, touchedDf)
-    stagedWriter(rewritten).parquet(staged.toString)
+    val stats = writeStaged(rewritten, staged.toString, snap.schema)
     var affectedUpd = 0L
     if (op == "update") {
       // pre-images scan the touched files once; post-images derive
@@ -4691,7 +4791,7 @@ final class LogTable(val path: String,
         .write.mode("append").parquet(s"$path/$cdfRel")
     }
 
-    val v = finalizeStaged(spark, staged, snap.schema,
+    val v = finalizeStaged(staged, stats, snap.schema,
       removePaths = touched.map(_.path), op = op,
       readVersion = Some(readVersion), schemaJson = None,
       cdfDir = Some(cdfRel))
@@ -5625,7 +5725,7 @@ final class LogTable(val path: String,
     // (row-tracked tables keep each row's id via the rewrite source).
     // A clustered table (`graft.clusterBy`) compacts RANGE-partitioned
     // on its key instead of hash-bin-packed: the rewritten files'
-    // key ranges stop overlapping (the stagedWriter sorts within
+    // key ranges stop overlapping (the staged write sorts within
     // each), so compaction is also the step that turns ingest-time
     // local clustering into global file-skipping order.
     val src = rewriteSource(spark, snap, small)
@@ -5634,8 +5734,8 @@ final class LogTable(val path: String,
       if (keys.isEmpty) src.repartition(groups)
       else if (groups == 1) src.coalesce(1)
       else src.repartitionByRange(groups, keys.map(col): _*)
-    stagedWriter(arranged).parquet(staged.toString)
-    finalizeStaged(spark, staged, snap.schema, small.map(_.path),
+    val stats = writeStaged(arranged, staged.toString, snap.schema)
+    finalizeStaged(staged, stats, snap.schema, small.map(_.path),
       op = "optimize", readVersion = Some(readVersion), schemaJson = None,
       cdfDir = None)
   }
@@ -5861,7 +5961,7 @@ final class LogTable(val path: String,
           .sortWithinPartitions(col("__z"))
           .select(cols.map(col): _*)
     }
-    stagedWriter(laidOut).parquet(staged.toString)
+    val stats = writeStaged(laidOut, staged.toString, snap.schema)
     // a marker-carrying commit writes a FULL property map derived
     // from the read snapshot — pin the head (like every other
     // full-map property commit: enableRowTracking, dropColumn) so a
@@ -5869,7 +5969,7 @@ final class LogTable(val path: String,
     // row-tracking high-water bump riding a blind append) can never
     // be silently reverted by our stale map; the conflict surfaces
     // as CME and the caller re-runs the pass against the new head
-    finalizeStaged(spark, staged, snap.schema, scope.map(_.path),
+    finalizeStaged(staged, stats, snap.schema, scope.map(_.path),
       op = "optimize", readVersion = Some(readVersion), schemaJson = None,
       cdfDir = None, propertiesJson = propertiesJson,
       requireHead = propertiesJson.map(_ => Some(readVersion)))

@@ -26,8 +26,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * snapshot's live file list, so pushdown / pruning / vectorization
   * are exactly parquet's. Writes delegate the data movement to
   * Spark's parquet write path pointed at a per-query staging
-  * directory; the driver-side `BatchWrite.commit` then runs the log
-  * commit (stats pass over the staged delta + atomic log-slot claim)
+  * directory, its writers carrying the table's stats tracker; the
+  * driver-side `BatchWrite.commit` then runs the log commit (the
+  * writers' file stats + atomic log-slot claim)
   * — all-or-nothing, and aborted queries never touch the log.
   * `DELETE FROM` arrives through [[SupportsDelete.deleteWhere]] as
   * pushed v1 filters, re-assembled into one predicate and executed
@@ -494,17 +495,20 @@ private[sources] final class LogWriteBuilder(log: LogTable,
         CaseInsensitiveStringMap.empty(), Seq(staging),
         Some(info.schema()), classOf[ParquetFileFormat])
       val innerBatch = inner.newWriteBuilder(info).build().toBatch
+      val tracker = log.stagedStatsTracker(spark, info.schema())
       new BatchWrite {
         override def createBatchWriterFactory(
             p: PhysicalWriteInfo): DataWriterFactory =
-          innerBatch.createBatchWriterFactory(p)
+          StagedStatsTracker.attach(innerBatch.createBatchWriterFactory(p),
+            tracker)
         override def useCommitCoordinator: Boolean =
           innerBatch.useCommitCoordinator
         override def commit(msgs: Array[WriterCommitMessage]): Unit = {
-          innerBatch.commit(msgs) // finalize staged parquet files
+          // finalize staged parquet files
+          innerBatch.commit(StagedStatsTracker.detach(msgs, tracker))
           val s = SparkSession.active
-          if (overwriteAll) log.overwriteStaged(s, staging)
-          else log.appendStaged(s, staging)
+          if (overwriteAll) log.overwriteStaged(s, staging, tracker.result())
+          else log.appendStaged(s, staging, tracker.result())
           ()
         }
         override def abort(msgs: Array[WriterCommitMessage]): Unit = {
@@ -536,6 +540,7 @@ private[sources] final class LogWriteBuilder(log: LogTable,
         // createStreamingWriterFactory(epoch N) → commit(epoch N)
         @volatile private var staging: String = _
         @volatile private var innerBatch: BatchWrite = _
+        @volatile private var tracker: StagedStatsTracker = _
         override def createStreamingWriterFactory(p: PhysicalWriteInfo)
             : org.apache.spark.sql.connector.write.streaming
               .StreamingDataWriterFactory = {
@@ -545,8 +550,9 @@ private[sources] final class LogWriteBuilder(log: LogTable,
             CaseInsensitiveStringMap.empty(), Seq(staging),
             Some(info.schema()), classOf[ParquetFileFormat])
           innerBatch = inner.newWriteBuilder(info).build().toBatch
-          new GraftEpochWriterFactory(
-            innerBatch.createBatchWriterFactory(p))
+          tracker = log.stagedStatsTracker(spark, info.schema())
+          new GraftEpochWriterFactory(StagedStatsTracker.attach(
+            innerBatch.createBatchWriterFactory(p), tracker))
         }
         // the staged-parquet writers commit through the FILE commit
         // protocol (task temp files + driver-side finalize), which
@@ -556,9 +562,9 @@ private[sources] final class LogWriteBuilder(log: LogTable,
         override def useCommitCoordinator: Boolean = false
         override def commit(epochId: Long,
                             msgs: Array[WriterCommitMessage]): Unit = {
-          innerBatch.commit(msgs)
+          innerBatch.commit(StagedStatsTracker.detach(msgs, tracker))
           log.appendStagedStream(SparkSession.active, staging,
-            info.queryId(), epochId)
+            tracker.result(), info.queryId(), epochId)
           ()
         }
         override def abort(epochId: Long,

@@ -357,7 +357,8 @@ object SqlMerge {
     // same logical row — and then move into the main staging for one
     // atomic commit.
     val allocates = idCols.nonEmpty && stats.inserted > 0L
-    val insStaged: Option[String] =
+    val insStaged: Option[(String, org.apache.spark.sql.types.StructType,
+        StagedStats)] =
       if (!allocates) None
       else {
         val insSel: Seq[Column] = snapCols.zip(core.outCols).map {
@@ -373,10 +374,9 @@ object SqlMerge {
         } ++ (if (!tracked) Seq.empty
               else Seq(lit(null).cast("long").as(LogTable.RowIdPhysCol)))
         val dir = log.newStagingDir()
-        core.labeled.filter(!core.tPresent && keep)
+        val ins = core.labeled.filter(!core.tPresent && keep)
           .select(insSel: _*)
-          .write.mode("overwrite").parquet(dir)
-        Some(dir)
+        Some((dir, ins.schema, log.writeStaged(ins, dir, log.schema)))
       }
 
     // change feed FIRST — the second and LAST execution of the
@@ -427,8 +427,8 @@ object SqlMerge {
           .otherwise(array(insStruct))).as("__c"))
       .select(col("__c.*"))
     val cdf = insStaged match {
-      case Some(dir) =>
-        fused.unionByName(spark.read.parquet(dir)
+      case Some((dir, insSchema, _)) =>
+        fused.unionByName(log.readStaged(spark, dir, insSchema)
           .drop(LogTable.RowIdPhysCol)
           .withColumn("_change_type", lit("insert")),
           allowMissingColumns = true)
@@ -478,23 +478,26 @@ object SqlMerge {
             .select(dataCols: _*)
             .unionByName(replacements)
         }
-      stagedDf.write.mode("overwrite").parquet(staged)
+      val written = log.writeStaged(stagedDf, staged, log.schema)
 
-      // fold the insert staging into the main one for a single commit
-      insStaged.foreach { dir =>
-        val d = new java.io.File(dir)
-        Option(d.listFiles()).toSeq.flatten
-          .filter(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith("."))
-          .foreach { f =>
-            java.nio.file.Files.move(f.toPath,
-              new java.io.File(staged, s"ins-${f.getName}").toPath)
-          }
-        Option(d.listFiles()).toSeq.flatten.foreach(_.delete())
-        d.delete()
+      // fold the insert staging into the main one for a single commit:
+      // each file moves beside its partition dir's main files as
+      // `ins-<name>`, its write stats re-keyed with it
+      val stagedStats = insStaged.fold(written) { case (dir, _, ins) =>
+        val moved = ins.files.map { case (rel, st) =>
+          val f = new java.io.File(dir, rel)
+          val to = Option(new java.io.File(rel).getParent)
+            .fold(s"ins-${f.getName}")(d => s"$d/ins-${f.getName}")
+          val dst = new java.io.File(staged, to)
+          dst.getParentFile.mkdirs()
+          java.nio.file.Files.move(f.toPath, dst.toPath)
+          to -> st
+        }
+        log.dropStaging(dir)
+        written.copy(files = written.files ++ moved)
       }
 
-      log.commitStagedRewrite(spark, staged, touched.map(_.path),
+      log.commitStagedRewrite(staged, stagedStats, touched.map(_.path),
         op = "merge", readVersion = readVersion, cdfDir = Some(cdfRel),
         txn = txn,
         identityUpdate = if (allocates) idSpecs else Map.empty,

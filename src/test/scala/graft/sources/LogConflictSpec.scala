@@ -28,9 +28,9 @@ class LogConflictSpec extends SparkSpec {
     // writer B stages its own rewrite of the SAME file against the
     // stale read version — revalidation must reject it
     val staged = t.newStagingDir()
-    Seq((2L, "B")).toDF("k", "v").write.mode("overwrite").parquet(staged)
+    val stats = t.writeStaged(Seq((2L, "B")).toDF("k", "v"), staged, t.schema)
     val err = intercept[java.util.ConcurrentModificationException] {
-      t.commitStagedRewrite(spark, staged, removePaths = Seq(victim),
+      t.commitStagedRewrite(staged, stats, removePaths = Seq(victim),
         op = "delete", readVersion = readVersion)
     }
     assert(err.getMessage.contains("another writer"))
@@ -49,8 +49,8 @@ class LogConflictSpec extends SparkSpec {
     // stale readVersion, but the file this commit removes is still
     // live at the new head — commit proceeds (Delta's rule)
     val staged = t.newStagingDir()
-    Seq((1L, "a2")).toDF("k", "v").write.mode("overwrite").parquet(staged)
-    t.commitStagedRewrite(spark, staged, removePaths = Seq(mine),
+    val stats = t.writeStaged(Seq((1L, "a2")).toDF("k", "v"), staged, t.schema)
+    t.commitStagedRewrite(staged, stats, removePaths = Seq(mine),
       op = "update", readVersion = readVersion)
     assert(t.load(spark).as[(Long, String)].collect().toSet
       == Set((1L, "a2"), (10L, "x")))
