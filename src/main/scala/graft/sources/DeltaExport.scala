@@ -100,6 +100,7 @@ object DeltaExport {
         java.time.ZoneOffset.UTC).toString)
     case (Some(BooleanType), l: Long) => JBool(l != 0L)
     case (_, l: Long)                 => JLong(l)
+    case (_, d: Double) if d.isNaN || d.isInfinite => JString(d.toString)
     case (_, d: Double)               => JDouble(d)
     case (_, s: String)               => JString(s)
     case (_, o)                       => JString(o.toString)

@@ -553,6 +553,9 @@ object IcebergExport {
         Some(le(8).putLong(l))
       case (BooleanType, l: Long) =>
         Some(ByteBuffer.wrap(Array[Byte](if (l != 0L) 1 else 0)))
+      // Iceberg bounds exclude NaN; graft exports no non-finite bound
+      case (FloatType | DoubleType, d: Double)
+          if d.isNaN || d.isInfinite => None
       case (FloatType, d: Double)  => Some(le(4).putFloat(d.toFloat))
       case (DoubleType, d: Double) => Some(le(8).putDouble(d))
       case (StringType, s: String) => Some(ByteBuffer.wrap(

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -224,7 +225,10 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
   *    may lack the extras, so files in one directory differ in
   *    schema. Every feed reader must load by EXPLICIT schema (the
   *    table schema + `_change_type`, as [[changes]] does); the extras
-  *    are internal and never part of the feed contract.
+  *    are internal and never part of the feed contract. A MERGE
+  *    writes its feed through `GraftWriteShim.writeParquet` with
+  *    [[MergeFeedTracker]]; its probe images (matched pairs no action
+  *    fires on) are counted there and never reach disk.
   *
   * Why this scales where a whole-snapshot rewrite does not: an
   * append commits ONLY its new files plus one O(#files-in-delta) log
@@ -1825,10 +1829,10 @@ final class LogTable(val path: String,
     * the effective row id under the reserved physical name. The
     * provenance keys let [[SqlMerge.mergeLog]] derive its rewrite
     * from the change-feed read-back (an anti-join over the touched
-    * files) instead of re-executing the full merge join. */
-  private[sources] def loadForMerge(spark: SparkSession): DataFrame = {
-    val v = currentVersion.getOrElse(
-      throw new IllegalStateException(s"no log table at $path"))
+    * files) instead of re-executing the full merge join. Reads
+    * version `v`, the merge's commit basis. */
+  private[sources] def loadForMerge(spark: SparkSession,
+                                   v: Long): DataFrame = {
     val snap = snapshotAt(v)
     val hidden = hiddenColsOf(snap)
     val tracked =
@@ -1852,12 +1856,11 @@ final class LogTable(val path: String,
     * (∝ touched bytes, never a re-execution of the merge join), each
     * row keyed by (`__file`, `__idx`) for the anti-join against the
     * feed's changed rows, effective row ids materialized when the
-    * table is tracked so survivors keep their identity. */
+    * table is tracked so survivors keep their identity. `adds` are
+    * files of version `v`. */
   private[sources] def readAddsWithProvenance(spark: SparkSession,
-                                              adds: Seq[AddFile])
+                                              v: Long, adds: Seq[AddFile])
       : DataFrame = {
-    val v = currentVersion.getOrElse(
-      throw new IllegalStateException(s"no log table at $path"))
     val snap = snapshotAt(v)
     val hidden = hiddenColsOf(snap)
     val tracked =
@@ -2567,8 +2570,8 @@ final class LogTable(val path: String,
     }.sum
     def lt(a: Any, b: Any): Boolean = (a, b) match {
       case (x: Long, y: Long)     => x < y
-      case (x: Double, y: Double) => x < y
-      case (x: String, y: String) => x < y
+      case (x: Double, y: Double) => java.lang.Double.compare(x, y) < 0
+      case (x: String, y: String) => LogTable.utf8Compare(x, y) < 0
       case _                      => false
     }
     val names = adds.flatMap(_.stats.keys).distinct
@@ -3050,7 +3053,12 @@ final class LogTable(val path: String,
           Option(v).flatMap {
             case s: String =>
               if (s.length <= MaxStringBound) Some(s)
-              else if (isMin) Some(s.substring(0, MaxStringBound))
+              else if (isMin) Some(s.substring(0,
+                // never split a surrogate pair: a lone half is not
+                // text and does not survive the JSON log
+                if (Character.isHighSurrogate(s.charAt(MaxStringBound - 1)))
+                  MaxStringBound - 1
+                else MaxStringBound))
               else None // dropped max: truncation is not an upper bound
             case l: Long   => Some(l)
             case n: Int    => Some(n.toLong)
@@ -6196,11 +6204,17 @@ object LogTable {
         case _ => None
       })
     }
+    // Spark's orders, which the bounds were computed in: strings as
+    // UTF-8 bytes, NaN above every double
+    def longVsDouble(x: Long, y: Double): Int =
+      if (y.isNaN || y == Double.PositiveInfinity) -1
+      else if (y == Double.NegativeInfinity) 1
+      else BigDecimal(x).compare(BigDecimal(y))
     def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
       case (x: Long, y: Long)     => Some(x.compareTo(y))
-      case (x: String, y: String) => Some(x.compareTo(y))
-      case (x: Long, y: Double)   => Some(BigDecimal(x).compare(BigDecimal(y)))
-      case (x: Double, y: Long)   => Some(BigDecimal(x).compare(BigDecimal(y)))
+      case (x: String, y: String) => Some(utf8Compare(x, y))
+      case (x: Long, y: Double)   => Some(longVsDouble(x, y))
+      case (x: Double, y: Long)   => Some(-longVsDouble(y, x))
       case (x: Double, y: Double) => Some(x.compareTo(y))
       case _                      => None
     }
@@ -6265,6 +6279,15 @@ object LogTable {
     conjuncts.exists(noMatch)
   }
 
+  /** Key of the JSON object a NaN or ±Infinity double bound renders
+    * as, e.g. `{"double": "NaN"}`. */
+  private val NonFiniteDouble = "double"
+
+  /** Strings in Spark's order — UTF-8 bytes, unsigned — which is
+    * not `String.compareTo`'s UTF-16 order above U+E000. */
+  private[sources] def utf8Compare(a: String, b: String): Int =
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
   /** Parse the commit log's per-column stats rendering — pure, and
     * static so the distributed pruning walk can decode manifest rows
     * on executors without dragging a [[LogTable]] into the closure. */
@@ -6276,6 +6299,9 @@ object LogTable {
       def side(v: Option[Any]): JValue = v match {
         case None            => JNull
         case Some(l: Long)   => JLong(l)
+        // JSON has no NaN/Infinity: a typed marker keeps them Double
+        case Some(d: Double) if d.isNaN || d.isInfinite =>
+          JObject(NonFiniteDouble -> JString(d.toString))
         case Some(d: Double) => JDouble(d)
         case Some(s: String) => JString(s)
         case Some(other) =>
@@ -6296,6 +6322,8 @@ object LogTable {
           case JDecimal(d)      => Some(d.toDouble)
           case JString(s)       => Some(s)
           case JBool(b)         => Some(if (b) 1L else 0L)
+          case JObject(List((NonFiniteDouble, JString(d)))) =>
+            Some(d.toDouble)
           case other => throw new IllegalStateException(s"bad stat: $other")
         }
         val nulls = (v \ "nulls") match {

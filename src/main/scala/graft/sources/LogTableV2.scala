@@ -441,7 +441,8 @@ private[sources] object GraftStats {
 
   private def bound(v: Option[Any]): java.util.Optional[Object] = v match {
     case Some(l: Long)   => java.util.Optional.of(Long.box(l))
-    case Some(d: Double) => java.util.Optional.of(Double.box(d))
+    case Some(d: Double) if !d.isNaN && !d.isInfinite =>
+      java.util.Optional.of(Double.box(d))
     case _               => java.util.Optional.empty()
   }
 }

@@ -1,10 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, GraftWriteShim, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction,
   InsertAction, InsertStarAction, MergeAction, MergeIntoTable, SubqueryAlias,
   UpdateAction, UpdateStarAction}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Executable ANSI `MERGE INTO` over graft's [[LogTable]] — the SQL
@@ -20,7 +23,8 @@ import org.apache.spark.sql.functions._
   * (ANSI action-order semantics), every output column a CASE over the
   * branch. [[mergeLog]] commits the result to a [[LogTable]] at file
   * granularity (only files holding a changed row are rewritten, the
-  * pre-merge version stays time-travel-readable);
+  * pre-merge version stays time-travel-readable) from one execution
+  * of the join, its change-feed write;
   * [[mergeFrames]] returns it as a frame — the in-memory reference
   * the log path is checked against.
   *
@@ -31,7 +35,9 @@ import org.apache.spark.sql.functions._
   * formulation of scd2_deletes).
   *
   * ANSI cardinality rule enforced: a target row matched by more than
-  * one source row is an error, as in Delta/Iceberg/SQL:2003.
+  * one source row is an error, as in Delta/Iceberg/SQL:2003 — checked
+  * by the feed write's tracker when the join has an equi key, by a
+  * fused aggregate first when it has none.
   */
 object SqlMerge {
 
@@ -146,7 +152,9 @@ object SqlMerge {
       * partials (exact long sums/max — order-free) and reads the
       * touched set off the non-null file keys; collected rows are
       * bounded by #touched files + 1. Throws on a cardinality
-      * violation BEFORE anything is written. */
+      * violation BEFORE anything is written. Two callers:
+      * [[mergeFrames]], and [[mergeLog]] when its join has no equi
+      * key (the feed write's per-task check would be unsound). */
     def statsAndTouched(fileCol: Column): (MergeResult, Set[String]) = {
       val isUpd = col("__branch").isin(updates.map(i => i: Any): _*)
       val isDel = col("__branch").isin(deletes.map(i => i: Any): _*)
@@ -169,9 +177,7 @@ object SqlMerge {
         if (r.isNullAt(i)) 0L else r.getLong(i)
       }
       if (rows.exists(r => l(r, "max_match") > 1L))
-        throw new IllegalStateException(
-          "MERGE cardinality violation: a target row matched by " +
-            "multiple source rows (as in ANSI/Delta, this is an error)")
+        throw cardinalityViolation()
       val touched = rows.iterator.filter(!_.isNullAt(0))
         .map(_.getString(0)).toSet
       (MergeResult(rows.map(l(_, "updated")).sum,
@@ -241,14 +247,23 @@ object SqlMerge {
     * inserts, never the table — the pay-once-proportionally point
     * Delta ships.
     *
-    * TWO executions of the (never-materialized) join per MERGE —
-    * Delta's own pass count: ONE fused aggregate (cardinality check +
-    * branch counters + touched-file set, [[Core.statsAndTouched]] —
-    * it early-outs the no-op merge) and ONE change-feed write whose
-    * read-back also drives the rewrite (survivors come off a scan of
-    * just the touched files anti-joined on scan provenance). The
-    * touched-file set is collected to the driver (bounded by #touched
-    * files, metadata-scale). */
+    * ONE execution of the (never-materialized) join per MERGE: the
+    * change-feed write. A `WriteJobStatsTracker` on that write
+    * ([[MergeFeedTracker]]) counts its images, collects the files of
+    * its pre-images and deletes (the touched set, bounded by #touched
+    * files) and flags a target row seen in two matched pairs; the
+    * driver refuses a cardinality violation before anything commits
+    * and deletes the feed. Every matched pair counts toward the
+    * cardinality rule, also one no action fires on: such a pair
+    * writes a probe image that the tracker counts and the feed's
+    * output writer drops ([[MergeFeedFormat]]). `unchanged` is the
+    * snapshot's logical row count minus updated and deleted. The
+    * rewrite derives from the feed read-back (survivors come off a
+    * scan of just the touched files anti-joined on scan provenance).
+    * The per-task check needs every match of a target row in one
+    * task, which a shuffled equi-join gives; a join without an equi
+    * key runs the fused aggregate ([[Core.statsAndTouched]]) first,
+    * as a second execution. */
   def mergeLog(spark: SparkSession, mergeSql: String,
                log: LogTable): MergeResult =
     mergeLog(spark, mergeSql, log, txn = None)
@@ -261,7 +276,7 @@ object SqlMerge {
     *
     * Identity-allocating merges (an insert pass on a table with
     * `GENERATED ALWAYS AS IDENTITY`) retry the WHOLE merge on an
-    * allocation race, like identity appends: the staged insert rows
+    * allocation race, like identity appends: the feed's insert rows
     * hold ids drawn from a stale high-water mark and must be
     * re-planned (Delta's transaction-retry rule). */
   def mergeLog(spark: SparkSession, mergeSql: String, log: LogTable,
@@ -286,11 +301,11 @@ object SqlMerge {
     // rewrite identity values EXPLICITLY — an explicit assignment
     // breaks the uniqueness promise (Delta refuses the same way).
     // An insert that OMITS the identity column allocates, like an
-    // append: the insert rows stage once with values drawn from the
-    // commit-basis high-water mark, the change feed reads the staged
-    // files back (so both passes serve the SAME ids), and the commit
-    // advances the mark under the allocation-race check — a racing
-    // writer advancing it first re-plans this merge.
+    // append: the feed pass draws its values from the commit-basis
+    // high-water mark, the rewrite takes the insert rows from the
+    // feed read-back (so feed and table hold the SAME ids), and the
+    // commit advances the mark under the allocation-race check — a
+    // racing writer advancing it first re-plans this merge.
     val idSpecs = log.identityColumns
     val idCols = idSpecs.keySet
     if (idCols.nonEmpty) {
@@ -323,7 +338,11 @@ object SqlMerge {
           s"unsupported $other")
       }
     }
-    val readVersion = log.currentVersion
+    // the commit basis: the target read, its row count and the
+    // touched-file lookup all come from this one version
+    val readVersion = log.currentVersion.getOrElse(
+      throw new IllegalStateException(s"no log table at ${log.path}"))
+    val adds = log.liveAdds(Some(readVersion))
     // scan-time file provenance (NOT input_file_name, which goes
     // empty after an exchange — and a deletion-vectored snapshot's
     // read plan contains an anti-join), deletion vectors subtracted.
@@ -331,70 +350,24 @@ object SqlMerge {
     // rewrite below can carry each surviving/updated row's identity
     // into the new files (merge-inserted rows id fresh at commit).
     val tracked = log.rowTrackingEnabled()
-    val target = log.loadForMerge(spark)
+    val target = log.loadForMerge(spark, readVersion)
     val snapCols = target.columns.toSeq.filterNot(c =>
       c == "__file" || c == "__idx" || c == LogTable.RowIdPhysCol)
     val core = analyzeFrame(spark, p, target, snapCols)
-    // one fused pass: counters + cardinality check + touched files
-    // (was two full executions of the labeled join)
-    val (stats, touchedNames) =
-      core.statsAndTouched(col(s"${p.targetAlias}.__file"))
-    // __file carries the scan-time file-path URI; normalize both
-    // sides to absolute paths for the attribution (clone snapshots
-    // mix data roots, so bare names could collide across roots)
-    val touchedPaths = touchedNames.map(LogTable.provPath)
-    val touched = log.liveAdds().filter(a =>
-      touchedPaths.contains(log.absLivePath(a)))
 
-    if (touchedNames.isEmpty && stats.inserted == 0L) return stats
-
-    val keep = !col("__branch").isin(core.deletes :+ -2: _*)
-    val staged = log.newStagingDir()
-    // identity-allocating merge: the INSERT rows stage to their own
-    // directory with ids filled (base + step × monotonic id, the
-    // append allocator), get READ BACK for the change feed below —
-    // re-executing the join there would draw different ids for the
-    // same logical row — and then move into the main staging for one
-    // atomic commit.
-    val allocates = idCols.nonEmpty && stats.inserted > 0L
-    val insStaged: Option[(String, org.apache.spark.sql.types.StructType,
-        StagedStats)] =
-      if (!allocates) None
-      else {
-        val insSel: Seq[Column] = snapCols.zip(core.outCols).map {
-          case (c, o) => idSpecs.get(c) match {
-            case Some(spec) =>
-              val base =
-                spec.highWater.map(_ + spec.step).getOrElse(spec.start)
-              (lit(base) +
-                lit(spec.step) * monotonically_increasing_id())
-                .cast(core.target.schema(c).dataType).as(c)
-            case None => o
-          }
-        } ++ (if (!tracked) Seq.empty
-              else Seq(lit(null).cast("long").as(LogTable.RowIdPhysCol)))
-        val dir = log.newStagingDir()
-        val ins = core.labeled.filter(!core.tPresent && keep)
-          .select(insSel: _*)
-        Some((dir, ins.schema, log.writeStaged(ins, dir, log.schema)))
-      }
-
-    // change feed FIRST — the second and LAST execution of the
-    // (never-materialized) join: each joined row emits its 0-2
-    // change images as an array of structs and explodes (pre+post
-    // for updates, pre for deletes, the insert image for unmatched
-    // source rows — Delta's merge CDF shape), every image carrying
-    // the matched target row's scan provenance (__file, __idx) as
-    // extra parquet columns. CDF readers load by explicit schema
-    // (the pinned feed contract), so the extras are invisible to
-    // them — and the REWRITE below derives from reading this output
-    // back plus one scan of just the touched files, instead of a
-    // third full execution of the join. Per MERGE the join (and the
-    // merge SOURCE pipeline under it) now runs twice — stats, feed —
-    // Delta's own pass count; at a 100 TB target the removed pass
-    // was a full scan of both sides.
+    // the change feed — the ONE execution of the (never-materialized)
+    // join: each joined row emits its change images as an array of
+    // structs and explodes (pre+post for updates, pre for deletes,
+    // the insert image for unmatched source rows — Delta's merge CDF
+    // shape), every image carrying the matched target row's scan
+    // provenance (__file, __idx) as extra parquet columns. A matched
+    // pair no action fires on emits a probe image, so the write's
+    // tracker sees every matched pair. CDF readers load by explicit
+    // schema (the pinned feed contract), so the extras are invisible
+    // to them.
     val isUpd = col("__branch").isin(core.updates.map(i => i: Any): _*)
     val isDel = col("__branch").isin(core.deletes.map(i => i: Any): _*)
+    val keep = !col("__branch").isin(core.deletes :+ -2: _*)
     val targetImage = snapCols.map(c =>
       col(s"${p.targetAlias}.$c").as(c))
     val provCols: Seq[Column] = Seq(
@@ -408,116 +381,152 @@ object SqlMerge {
       lit(null).cast("long").as("__idx")) ++
       (if (!tracked) Seq.empty
        else Seq(lit(null).cast("long").as(LogTable.RowIdPhysCol)))
-    val preStruct = struct(targetImage ++ (
-      when(isDel, lit("delete")).otherwise(lit("update_preimage"))
-        .as("_change_type") +: provCols): _*)
-    val postStruct = struct(core.outCols ++ (
-      lit("update_postimage").as("_change_type") +: provCols): _*)
-    val insStruct = struct(core.outCols ++ (
-      lit("insert").as("_change_type") +: nullProv): _*)
-    // allocated-identity inserts come from the staged files (the
-    // SAME ids the commit publishes); everything else rides the
-    // fused pass's insert branch
-    val contributes = (core.tPresent && (isUpd || isDel)) ||
-      (lit(!allocates) && !core.tPresent && keep)
-    val fused = core.labeled.filter(contributes)
-      .select(explode(
-        when(core.tPresent && isUpd, array(preStruct, postStruct))
-          .when(core.tPresent && isDel, array(preStruct))
-          .otherwise(array(insStruct))).as("__c"))
-      .select(col("__c.*"))
-    val cdf = insStaged match {
-      case Some((dir, insSchema, _)) =>
-        fused.unionByName(log.readStaged(spark, dir, insSchema)
-          .drop(LogTable.RowIdPhysCol)
-          .withColumn("_change_type", lit("insert")),
-          allowMissingColumns = true)
-      case None => fused
+    // identity-allocating inserts draw their ids in a projection
+    // under the explode (base + step × monotonic id, the append
+    // allocator), so the feed's insert images carry the ids the
+    // rewrite commits
+    val idCol = idSpecs.keys.map(c => c -> s"__id_$c").toMap
+    val withIds = core.labeled.withColumns(idSpecs.map { case (c, spec) =>
+      val base = spec.highWater.map(_ + spec.step).getOrElse(spec.start)
+      idCol(c) -> when(!core.tPresent,
+        lit(base) + lit(spec.step) * monotonically_increasing_id())
+    })
+    val insCols = snapCols.zip(core.outCols).map { case (c, o) =>
+      idCol.get(c).fold(o)(n =>
+        col(n).cast(core.target.schema(c).dataType).as(c))
     }
+    def image(cols: Seq[Column], changeType: Column, prov: Seq[Column]) =
+      struct(cols ++ (changeType.as("_change_type") +: prov): _*)
+    val preImage = image(targetImage,
+      when(isDel, lit("delete")).otherwise(lit("update_preimage")), provCols)
+    // no filter sits above the join: a row with no image explodes
+    // NULL, so the optimizer cannot narrow the FULL OUTER join to an
+    // outer or inner join it could broadcast — the merge keys shuffle
+    // both sides, and every match of a target row meets in one task
+    val cdf = withIds.select(explode(
+      when(core.tPresent && isUpd, array(preImage,
+        image(core.outCols, lit("update_postimage"), provCols)))
+        .when(core.tPresent && isDel, array(preImage))
+        .when(core.tPresent && core.sPresent, array(
+          image(targetImage, lit(MergeFeedTracker.Probe), provCols)))
+        .when(!core.tPresent && keep, array(
+          image(insCols, lit("insert"), nullProv)))).as("__c"))
+      .select(col("__c.*"))
+    // without an equi key the join plans as a nested loop that
+    // spreads one target row's matches over tasks: check cardinality
+    // (and early-out a no-op) with the fused aggregate first
+    if (!matchesCoLocated(cdf)) {
+      val (pre, touched) =
+        core.statsAndTouched(col(s"${p.targetAlias}.__file"))
+      if (touched.isEmpty && pre.inserted == 0L) return pre
+    }
+
     val cdfRel = s"_cdf/${java.util.UUID.randomUUID()}"
-    cdf.write.mode("overwrite").parquet(s"${log.path}/$cdfRel")
-
+    val feedDir = s"${log.path}/$cdfRel"
     try {
-      // the rewrite derives from the feed read-back: survivors are
-      // the touched files scanned once (∝ touched bytes, full
-      // pushdown — NOT a join re-execution) minus the feed's changed
-      // rows (anti-join on scan provenance; the cardinality check
-      // above guarantees one image set per target row), and the
-      // replacement rows are the feed's post-images (+ its insert
-      // rows unless identity allocation staged them already), read
-      // back ∝ matches. Committed bytes and feed bytes come from the
-      // SAME execution, so they cannot diverge even under a
-      // non-deterministic source expression.
-      val feedRaw = spark.read.parquet(s"${log.path}/$cdfRel")
-      val dataCols: Seq[Column] =
-        (snapCols ++ (if (tracked) Seq(LogTable.RowIdPhysCol)
-                      else Seq.empty)).map(col)
-      val replacements = feedRaw.filter(
-        col("_change_type") === "update_postimage" ||
-          (lit(!allocates) && col("_change_type") === "insert"))
-        .select(dataCols: _*)
-      val stagedDf =
-        if (touched.isEmpty) replacements
-        else {
-          val changedKeys = feedRaw.filter(
-            col("_change_type").isin("update_preimage", "delete"))
-            .select(col("__file").as("__kfile"),
-              col("__idx").as("__kidx"))
-          // changed keys = exactly updated+deleted rows — a MEASURED
-          // count, so the broadcast choice is size-gated, not a
-          // local-shape constant; past the gate the anti-join
-          // shuffles (file, idx) pairs only
-          val keys =
-            if (stats.updated + stats.deleted <=
-                LogTable.DvBroadcastMaxRows) broadcast(changedKeys)
-            else changedKeys
-          val scan = log.readAddsWithProvenance(spark, touched)
-          scan.join(keys,
-            scan("__file") === keys("__kfile") &&
-              scan("__idx") === keys("__kidx"), "left_anti")
-            .select(dataCols: _*)
-            .unionByName(replacements)
-        }
-      val written = log.writeStaged(stagedDf, staged, log.schema)
-
-      // fold the insert staging into the main one for a single commit:
-      // each file moves beside its partition dir's main files as
-      // `ins-<name>`, its write stats re-keyed with it
-      val stagedStats = insStaged.fold(written) { case (dir, _, ins) =>
-        val moved = ins.files.map { case (rel, st) =>
-          val f = new java.io.File(dir, rel)
-          val to = Option(new java.io.File(rel).getParent)
-            .fold(s"ins-${f.getName}")(d => s"$d/ins-${f.getName}")
-          val dst = new java.io.File(staged, to)
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          to -> st
-        }
-        log.dropStaging(dir)
-        written.copy(files = written.files ++ moved)
+      val feed = GraftWriteShim.writeParquet(cdf, feedDir, Seq.empty,
+        (data, _) => MergeFeedTracker(data), new MergeFeedFormat).result()
+      if (feed.duplicateMatch) throw cardinalityViolation()
+      val stats = MergeResult(feed.updated, feed.deleted, feed.inserted,
+        adds.map(_.logicalRows).sum - feed.updated - feed.deleted)
+      // __file carries the scan-time file-path URI; normalize both
+      // sides to absolute paths for the attribution (clone snapshots
+      // mix data roots, so bare names could collide across roots)
+      val touchedPaths = feed.touched.map(LogTable.provPath)
+      val touched = adds.filter(a =>
+        touchedPaths.contains(log.absLivePath(a)))
+      if (feed.touched.isEmpty && stats.inserted == 0L) {
+        log.dropStaging(feedDir)
+        stats
+      } else {
+        // the rewrite derives from the feed read-back (by the written
+        // schema — no footer inference): survivors are the touched
+        // files scanned once (∝ touched bytes, full pushdown — NOT a
+        // join re-execution) minus the feed's changed rows
+        // (anti-join on scan provenance; the cardinality check above
+        // guarantees one image set per target row), and the
+        // replacement rows are the feed's post-images and inserts,
+        // read back ∝ matches. Committed bytes, feed bytes and
+        // counters come from the SAME execution, so they cannot
+        // diverge even under a non-deterministic source expression.
+        val feedRaw = log.readStaged(spark, feedDir, cdf.schema)
+        val dataCols: Seq[Column] =
+          (snapCols ++ (if (tracked) Seq(LogTable.RowIdPhysCol)
+                        else Seq.empty)).map(col)
+        val replacements = feedRaw.filter(
+          col("_change_type").isin("update_postimage", "insert"))
+          .select(dataCols: _*)
+        val stagedDf =
+          if (touched.isEmpty) replacements
+          else {
+            val changedKeys = feedRaw.filter(
+              col("_change_type").isin("update_preimage", "delete"))
+              .select(col("__file").as("__kfile"),
+                col("__idx").as("__kidx"))
+            // changed keys = exactly updated+deleted rows — a MEASURED
+            // count, so the broadcast choice is size-gated, not a
+            // local-shape constant; past the gate the anti-join
+            // shuffles (file, idx) pairs only
+            val keys =
+              if (stats.updated + stats.deleted <=
+                  LogTable.DvBroadcastMaxRows) broadcast(changedKeys)
+              else changedKeys
+            val scan = log.readAddsWithProvenance(spark, readVersion,
+              touched)
+            scan.join(keys,
+              scan("__file") === keys("__kfile") &&
+                scan("__idx") === keys("__kidx"), "left_anti")
+              .select(dataCols: _*)
+              .unionByName(replacements)
+          }
+        val staged = log.newStagingDir()
+        val written = log.writeStaged(stagedDf, staged, log.schema)
+        val allocates = idCols.nonEmpty && stats.inserted > 0L
+        log.commitStagedRewrite(staged, written, touched.map(_.path),
+          op = "merge", readVersion = Some(readVersion),
+          cdfDir = Some(cdfRel), txn = txn,
+          identityUpdate = if (allocates) idSpecs else Map.empty,
+          identityBasis =
+            if (allocates)
+              Some(idSpecs.map { case (c, s) => c -> s.highWater })
+            else None)
+        stats
       }
-
-      log.commitStagedRewrite(staged, stagedStats, touched.map(_.path),
-        op = "merge", readVersion = readVersion, cdfDir = Some(cdfRel),
-        txn = txn,
-        identityUpdate = if (allocates) idSpecs else Map.empty,
-        identityBasis =
-          if (allocates)
-            Some(idSpecs.map { case (c, s) => c -> s.highWater })
-          else None)
     } catch { case e: Throwable =>
-      // the attempt's change-feed directory is a dead orphan once
-      // the commit refuses (identity-race re-plans and true
-      // conflicts both) — reclaim it rather than waiting out
+      // the attempt's change-feed directory is a dead orphan once the
+      // merge refuses (cardinality, identity-race re-plans and true
+      // conflicts alike) — reclaim it rather than waiting out
       // vacuum's retention horizon; the staged data files are
       // reclaimed by the commit layer itself
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"${log.path}/$cdfRel"))
+      log.dropStaging(feedDir)
       throw e
     }
-    stats
+  }
+
+  private def cardinalityViolation(): IllegalStateException =
+    new IllegalStateException(
+      "MERGE cardinality violation: a target row matched by " +
+        "multiple source rows (as in ANSI/Delta, this is an error)")
+
+  /** Whether every source match of one target row reaches the same
+    * write task of `feed`: its topmost join — the merge join, which
+    * the feed keeps FULL OUTER — is shuffled on equi keys
+    * (sort-merge or shuffled hash; AQE neither broadcasts nor
+    * skew-splits a full outer join). A join without an equi key
+    * plans as a nested loop, which spreads a target row's matches
+    * over tasks. */
+  private def matchesCoLocated(feed: DataFrame): Boolean = {
+    val plan = feed.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    plan.collectFirst { case j: BaseJoinExec => j } match {
+      case Some(j: SortMergeJoinExec) =>
+        j.joinType == FullOuter && j.leftKeys.nonEmpty
+      case Some(j: ShuffledHashJoinExec) =>
+        j.joinType == FullOuter && j.leftKeys.nonEmpty
+      case _ => false
+    }
   }
 
   /** Resolve a log-table MERGE target from the statement's own

@@ -20,10 +20,12 @@ object GraftWriteShim {
     * `partitionCols`, and return the tracker after the job committed.
     * `tracker` receives the attributes a tracker's `newRow` sees — the
     * data columns, in file order — and the partition columns whose
-    * values `newPartition` carries. */
+    * values `newPartition` carries. `format` may be a parquet format
+    * whose output writers filter what reaches disk. */
   def writeParquet[T <: WriteJobStatsTracker](df: DataFrame, dir: String,
       partitionCols: Seq[String],
-      tracker: (Seq[Attribute], Seq[Attribute]) => T): T = {
+      tracker: (Seq[Attribute], Seq[Attribute]) => T,
+      format: ParquetFileFormat = new ParquetFileFormat): T = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = spark.sessionState.executePlan(df.queryExecution.analyzed)
     val output = qe.analyzed.output
@@ -39,7 +41,7 @@ object GraftWriteShim {
       spark.sessionState.conf.fileCommitProtocolClass,
       java.util.UUID.randomUUID().toString, dir)
     SQLExecution.withNewExecutionId(qe, Some("graft staged write")) {
-      FileFormatWriter.write(spark, qe.executedPlan, new ParquetFileFormat,
+      FileFormatWriter.write(spark, qe.executedPlan, format,
         committer, FileFormatWriter.OutputSpec(dir, Map.empty, output),
         hadoopConf, partAttrs, None,
         Seq(new BasicWriteJobStatsTracker(

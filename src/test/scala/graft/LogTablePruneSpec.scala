@@ -5,7 +5,7 @@ import java.io.File
 import graft.sources.{AddFile, ColStats, LogTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Round-12 scan-planning contract: the manifest is never a driver
   * Seq unless something actually needs the full file list. Metadata
@@ -470,5 +470,62 @@ class LogTablePruneSpec extends SparkSpec {
     // the re-added rows carry the TAIL's entries exactly once
     assert(df.filter(col("path") === "data/fake-000000.parquet")
       .count() == 1L)
+  }
+
+  test("string bounds compare in Spark's UTF-8 order: a value above " +
+    "U+E000 never skips the file holding it") {
+    val t = new LogTable(s"${tmp()}/t")
+    val fffd = "\uFFFD"
+    val clef = "\uD834\uDD1E" // U+1D11E, above U+FFFD in UTF-8 only
+    t.append(Seq(fffd, clef).toDF("s").repartition(1))
+    t.append(Seq("a", "b").toDF("s").repartition(1))
+    def read(p: org.apache.spark.sql.Column) = {
+      val df = t.loadWhere(spark, p)
+      (df.as[String].collect().toSet, df.inputFiles.length)
+    }
+    assert(read(col("s") === fffd) == ((Set(fffd), 1)))
+    assert(read(col("s") === clef) == ((Set(clef), 1)))
+    assert(read(col("s") > "\uE000") == ((Set(fffd, clef), 1)))
+    assert(read(col("s") < clef) == ((Set(fffd, "a", "b"), 2)))
+    assert(read(col("s") === "c") == ((Set.empty[String], 0)))
+
+    // a min truncated to the log's string bound stays a lower bound,
+    // and a cut never splits a surrogate pair
+    val longFffd = fffd * 300
+    val longClef = "x" + clef * 300
+    val u = new LogTable(s"${tmp()}/u")
+    u.append(Seq(longFffd, clef * 300).toDF("s").repartition(1))
+    u.append(Seq(longClef).toDF("s").repartition(1))
+    val mins = new LogTable(u.path).liveAdds().map(_.stats("s").min.get
+      .asInstanceOf[String])
+    assert(mins.forall(m => longFffd.startsWith(m) ||
+      longClef.startsWith(m)), mins)
+    assert(mins.forall(m => !Character.isHighSurrogate(m.last)), mins)
+    assert(u.loadWhere(spark, col("s") < clef).as[String].collect()
+      .toSet == Set(longFffd, longClef))
+    assert(u.loadWhere(spark, col("s") <= longClef).as[String].collect()
+      .toSeq == Seq(longClef))
+  }
+
+  test("NaN and infinite double bounds round-trip as doubles and prune") {
+    val t = new LogTable(s"${tmp()}/t")
+    t.create(StructType(Seq(StructField("x", DoubleType))))
+    t.append(Seq(Double.NaN, Double.PositiveInfinity).toDF("x")
+      .repartition(1))
+    t.append(Seq(Double.NegativeInfinity, -2.0).toDF("x").repartition(1))
+    val stats = new LogTable(t.path).liveAdds().map(_.stats("x"))
+    assert(stats.flatMap(s => s.min ++ s.max).forall(_.isInstanceOf[Double]),
+      stats)
+    assert(stats.map(s => (s.min.get.asInstanceOf[Double].toString,
+      s.max.get.asInstanceOf[Double].toString)).toSet ==
+      Set(("Infinity", "NaN"), ("-Infinity", "-2.0")))
+    def read(p: org.apache.spark.sql.Column) = {
+      val df = new LogTable(t.path).loadWhere(spark, p)
+      (df.as[Double].collect().map(_.toString).toSet, df.inputFiles.length)
+    }
+    assert(read(col("x") < -3.0) == ((Set("-Infinity"), 1)))
+    assert(read(col("x") > 0.0 && col("x") < 5.0) == ((Set.empty[String], 0)))
+    assert(read(col("x") === Double.NaN) == ((Set("NaN"), 1)))
+    assert(read(col("x") > 1e300) == ((Set("NaN", "Infinity"), 1)))
   }
 }

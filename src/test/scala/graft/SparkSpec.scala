@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +12,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** The physical plan of every SQL execution `body` starts. */
+  protected def plansOf(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; GraftListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    plans.toArray.map(_.toString).toSeq
+  }
 }
 
 object SparkSpec {

@@ -5,10 +5,7 @@ import java.net.URI
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{Column, Row}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s.jackson.JsonMethods
@@ -209,22 +206,6 @@ class StagedStatsSpec extends SparkSpec {
 
   /** Run `body`, returning the physical plans of every SQL execution
     * it started. */
-  private def plansOf(body: => Unit): Seq[String] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          plans.add(s.physicalPlanDescription)
-        case _ => ()
-      }
-    }
-    GraftListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; GraftListenerBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    plans.toArray.map(_.toString).toSeq
-  }
-
   private def stagingScans(plans: Seq[String]): Seq[String] =
     plans.flatMap(_.split('\n')).filter(l =>
       l.contains("Location:") && l.contains("_staging"))
