@@ -192,5 +192,8 @@ object Bench {
         line(results, 0, failedJson) + "\n")
     catch { case _: Throwable => () } // diagnostics must never fail the bench
     spark.stop()
+    // a run with a failed query still prints its line and sidecar,
+    // but its exit status says the total is not a clean measurement
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -612,7 +612,7 @@ object DeltaExport {
     val enc = org.apache.spark.sql.Encoders.STRING
     if (!anyDv)
       ds.orderBy(col("idx"))
-        .map(c => addActionLine(LogTable.decodeCkptAdd(c), types, mt,
+        .map(c => addActionLine(LogCodec.decodeCkptAdd(c), types, mt,
           dc))(enc)
     else {
       val desc = dvDescriptors(spark, log.path,
@@ -621,7 +621,7 @@ object DeltaExport {
       ds.joinWith(desc, ds("path") === desc("_1"), "left_outer")
         .orderBy(col("_1.idx"))
         .map { case (c, d) =>
-          addActionLine(LogTable.decodeCkptAdd(c), types, mt, dc,
+          addActionLine(LogCodec.decodeCkptAdd(c), types, mt, dc,
             Option(d).map(_._2))
         }(enc)
     }
@@ -1684,8 +1684,7 @@ object DeltaExport {
                   DeltaDv.parseDescriptor(JsonMethods.parse(s))
                     .cardinality)
                 CkptAdd(idx, dp, rows, size,
-                  JsonMethods.compact(JsonMethods.render(
-                    LogTable.renderStats(st))), pv,
+                  LogCodec.encodeStats(st), pv,
                   card.map(_ => dvRelB), card, None)
               }(enc)
           }
@@ -1728,10 +1727,7 @@ object DeltaExport {
         }
         val tailDs = spark.createDataset(
           tailAlive.zipWithIndex.map { case (a, i) =>
-            CkptAdd(Long.MaxValue - tailAlive.size + i, a.path,
-              a.rows, a.bytes, JsonMethods.compact(JsonMethods.render(
-                LogTable.renderStats(a.stats))), a.partitionValues,
-              a.dv.map(_.path), a.dv.map(_.rows), a.baseRowId)
+            LogCodec.encodeCkptAdd(Long.MaxValue - tailAlive.size + i, a)
           })(enc)
         t.create(userSchema, partitionBy = partitionBy,
           checkConstraints = foreignChecks, properties = createProps)

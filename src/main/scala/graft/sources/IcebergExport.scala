@@ -938,7 +938,7 @@ object IcebergExport {
         case Some(ds) =>
           import scala.jdk.CollectionConverters._
           ds.orderBy(org.apache.spark.sql.functions.col("idx"))
-            .toLocalIterator().asScala.map(LogTable.decodeCkptAdd)
+            .toLocalIterator().asScala.map(LogCodec.decodeCkptAdd)
         case None => log.liveAdds(Some(v)).iterator
       }
       it.foreach { a =>
@@ -1882,8 +1882,7 @@ object IcebergExport {
               .zipWithIndex.map { case ((p0, n, bytes, pv, st), i) =>
                 val rel = relativizeForeignPath(rootB, p0)
                 CkptAdd(mi * perManifest + i, rel, n, bytes,
-                  JsonMethods.compact(JsonMethods.render(
-                    LogTable.renderStats(st))),
+                  LogCodec.encodeStats(st),
                   pv.view.filterKeys(partSet.contains).toMap,
                   None, None, None)
               }

@@ -11,8 +11,7 @@ import org.apache.spark.sql.catalyst.expressions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.json4s._
-import org.json4s.jackson.JsonMethods
+import graft.sources.LogAction._
 
 /** Per-column min/max/null-count statistics of one data file, in
   * comparable form (see [[LogTable.statProjection]]): integral /
@@ -208,11 +207,16 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
   * Stores", VLDB 2020).
   *
   * Layout under `path`:
-  *  - `_log/%020d.json`       one JSONL commit per version: a
-  *    `commit` meta line (wall-clock, op, read-version), optional
-  *    `schema`, then `add` / `remove` file actions
-  *  - `_log/%020d.ckpt.json`  periodic full-state checkpoints, so a
-  *    reader replays O(interval) commits, not O(history)
+  *  - `_log/%020d.json`       one JSONL commit per version, one
+  *    [[LogAction]] per line: the `commit` line (`ts`, `op`, and
+  *    optionally `cdf` and `txnApp`/`txnBatch`), then metadata
+  *    (`schema`, `partition`, `bloom`, `constraints`, `generated`,
+  *    `retired`, `tz`, `identity`, `defaults`, `properties`,
+  *    `transforms`, `refs`, `protocol`), then `remove`, `addsRef` and
+  *    `add` file actions. [[LogCodec]] is the one encoder and decoder.
+  *  - `_log/%020d.ckpt.json`  periodic checkpoint headers (the whole
+  *    [[TableMeta]] plus a parquet or JSONL adds sidecar beside it),
+  *    so a reader replays O(interval) commits, not O(history)
   *  - `data/`                 immutable parquet data files, shared
   *    across versions by reference
   *  - `_cdf/<uuid>/`          row-level change files of delete/update
@@ -320,12 +324,8 @@ final class LogTable(val path: String,
   private def lastCheckpointVersion: Option[Long] =
     try {
       if (!lastCkptFile.isFile) None
-      else (JsonMethods.parse(Files.readString(lastCkptFile.toPath))
-          \ "version") match {
-        case JInt(i)  => Some(i.toLong).filter(v => ckptFile(v).isFile)
-        case JLong(l) => Some(l).filter(v => ckptFile(v).isFile)
-        case _        => None
-      }
+      else LogCodec.decodeCheckpointPointer(
+        Files.readString(lastCkptFile.toPath)).filter(v => ckptFile(v).isFile)
     } catch { case NonFatal(_) => None }
 
   /** Committed version numbers, oldest first. Versions are
@@ -361,40 +361,32 @@ final class LogTable(val path: String,
   // ---------------------------------------------------------------
   // log read path
 
-  private final case class CommitMeta(ts: Long, op: String,
-                                      cdf: Option[String],
-                                      txn: Option[(String, Long)])
-  /** Snapshot state at one version. Metadata (schema, partition
-    * layout, properties, refs, ...) is EAGER — O(checkpointInterval)
-    * small JSON reads. The FILE-STATE is LAZY: `adds` loads the
-    * checkpoint sidecar and folds the commit tail only when a caller
-    * actually plans a scan or a rewrite, so metadata-only operations
-    * (DESCRIBE HISTORY, property commits, schema lookups, refs) on a
-    * million-file table never materialize the manifest at all — and
-    * scan planning above the parquet-checkpoint threshold prefers
-    * [[LogTable.prunedAdds]], which collects only the files that
-    * survive file-skipping instead of forcing this Seq. */
-  private final class Snapshot(val schema: StructType,
-                               addsThunk: () => Seq[AddFile],
-                               val partitionCols: Seq[String],
-                               val bloomCols: Seq[String] = Seq.empty,
-                               val constraints: Map[String, String] =
-                                 Map.empty,
-                               val generated: Map[String, String] =
-                                 Map.empty,
-                               val retiredNames: Set[String] = Set.empty,
-                               val tz: Option[String] = None,
-                               val identity: Map[String, IdentitySpec] =
-                                 Map.empty,
-                               val defaults: Map[String, String] =
-                                 Map.empty,
-                               val properties: Map[String, String] =
-                                 Map.empty,
-                               val transforms: Map[String, String] =
-                                 Map.empty,
-                               val refs: Map[String, String] =
-                                 Map.empty,
-                               val protocol: Option[Protocol] = None) {
+  /** Snapshot state at one version. Metadata ([[TableMeta]]: schema,
+    * partition layout, properties, refs, ...) is EAGER —
+    * O(checkpointInterval) small JSON reads. The FILE-STATE is LAZY:
+    * `adds` loads the checkpoint sidecar and folds the commit tail
+    * only when a caller actually plans a scan or a rewrite, so
+    * metadata-only operations (DESCRIBE HISTORY, property commits,
+    * schema lookups, refs) on a million-file table never materialize
+    * the manifest at all — and scan planning above the
+    * parquet-checkpoint threshold prefers [[LogTable.prunedAdds]],
+    * which collects only the files that survive file-skipping instead
+    * of forcing this Seq. */
+  private final class Snapshot(val meta: TableMeta,
+                               addsThunk: () => Seq[AddFile]) {
+    val schema: StructType = meta.schema.get
+    def partitionCols: Seq[String] = meta.partitionCols
+    def bloomCols: Seq[String] = meta.bloomCols
+    def constraints: Map[String, String] = meta.constraints
+    def generated: Map[String, String] = meta.generated
+    def retiredNames: Set[String] = meta.retiredNames
+    def tz: Option[String] = meta.tz
+    def identity: Map[String, IdentitySpec] = meta.identity
+    def defaults: Map[String, String] = meta.defaults
+    def properties: Map[String, String] = meta.properties
+    def transforms: Map[String, String] = meta.transforms
+    def refs: Map[String, String] = meta.refs
+    def protocol: Option[Protocol] = meta.protocol
     @volatile private[this] var loaded = false
     lazy val adds: Seq[AddFile] = {
       val r = addsThunk(); loaded = true; r
@@ -405,150 +397,47 @@ final class LogTable(val path: String,
     def addsMaterialized: Boolean = loaded
   }
 
-  private def parseStats(j: JValue): Map[String, ColStats] =
-    LogTable.parseStats(j)
+  /** One commit's actions, in line order — the only reader of commit
+    * files (one read, one parse per line). */
+  private def readCommit(v: Long): Seq[LogAction] =
+    LogCodec.decodeCommit(Files.readString(logFile(v).toPath))
 
-  private def renderStats(stats: Map[String, ColStats]): JValue =
-    LogTable.renderStats(stats)
+  private def addsOf(actions: Seq[LogAction]): Seq[AddFile] =
+    actions.collect { case Add(a) => a }
 
-  private def parseIdentity(j: JValue): Map[String, IdentitySpec] = j match {
-    case JObject(fields) => fields.map { case (c, v) =>
-      def long(k: String): Option[Long] = (v \ k) match {
-        case JInt(i) => Some(i.toLong); case JLong(l) => Some(l)
-        case _       => None
-      }
-      c -> IdentitySpec(long("start").getOrElse(1L),
-        long("step").getOrElse(1L), long("highWater"))
-    }.toMap
-    case _ => Map.empty
-  }
+  private def addsRefOf(actions: Seq[LogAction]): Option[AddsRef] =
+    actions.collectFirst { case AddByRef(r) => r }
 
-  private def renderIdentity(m: Map[String, IdentitySpec]): JValue =
-    JObject(m.toList.map { case (c, s) =>
-      c -> JObject(List("start" -> JLong(s.start),
-        "step" -> JLong(s.step)) ++
-        s.highWater.map("highWater" -> JLong(_)))
-    })
-
-  private def parseProtocol(j: JValue): Protocol = {
-    def int(k: String, dflt: Int): Int = (j \ k) match {
-      case JInt(i) => i.toInt; case JLong(l) => l.toInt; case _ => dflt
-    }
-    def set(k: String): Set[String] = (j \ k) match {
-      case JArray(a) => a.collect { case JString(s) => s }.toSet
-      case _         => Set.empty
-    }
-    Protocol(int("minReader", 1), int("minWriter", 1),
-      set("readerFeatures"), set("writerFeatures"))
-  }
-
-  private def renderProtocol(p: Protocol): JValue = JObject(List(
-    "minReader" -> JInt(p.minReader), "minWriter" -> JInt(p.minWriter),
-    "readerFeatures" -> JArray(
-      p.readerFeatures.toList.sorted.map(JString(_))),
-    "writerFeatures" -> JArray(
-      p.writerFeatures.toList.sorted.map(JString(_)))))
-
-  private def parseAdd(j: JValue): AddFile = AddFile(
-    (j \ "path").asInstanceOf[JString].s,
-    (j \ "rows") match { case JInt(i) => i.toLong; case JLong(l) => l
-      case _ => 0L },
-    (j \ "bytes") match { case JInt(i) => i.toLong; case JLong(l) => l
-      case _ => 0L },
-    parseStats(j \ "stats"),
-    (j \ "partitionValues") match {
-      case JObject(fields) => fields.collect {
-        case (k, JString(v)) => k -> v }.toMap
-      case _ => Map.empty
-    },
-    (j \ "dv") match {
-      case JObject(_) => Some(Dv((j \ "dv" \ "path").asInstanceOf[JString].s,
-        (j \ "dv" \ "rows") match { case JInt(i) => i.toLong
-          case JLong(l) => l; case _ => 0L }))
-      case _ => None
-    },
-    (j \ "baseRowId") match {
-      case JInt(i)  => Some(i.toLong)
-      case JLong(l) => Some(l)
-      case _        => None
-    })
-
-  private def renderAdd(a: AddFile): JValue =
-    JObject(List("path" -> JString(a.path), "rows" -> JLong(a.rows),
-      "bytes" -> JLong(a.bytes), "stats" -> renderStats(a.stats)) ++
-      (if (a.partitionValues.isEmpty) Nil
-       else List("partitionValues" -> JObject(
-         a.partitionValues.toList.map { case (k, v) => k -> JString(v) }))) ++
-      a.dv.toList.map(d => "dv" -> JObject(List(
-        "path" -> JString(d.path), "rows" -> JLong(d.rows)))) ++
-      a.baseRowId.toList.map(b => "baseRowId" -> JLong(b)))
-
-  private def parseAddsRef(j: JValue): AddsRef = {
-    def long(v: JValue): Long = v match {
-      case JInt(i) => i.toLong; case JLong(l) => l; case _ => 0L
-    }
-    AddsRef((j \ "path").asInstanceOf[JString].s, long(j \ "count"),
-      long(j \ "rows"), long(j \ "bytes"),
-      (j \ "anyDv") == JBool(true),
-      (j \ "rowIdBasis") match {
-        case JInt(i) => Some(i.toLong); case JLong(l) => Some(l)
-        case _       => None
-      })
-  }
-
-  private def renderAddsRef(r: AddsRef): JValue =
-    JObject(List("path" -> JString(r.path), "count" -> JLong(r.count),
-      "rows" -> JLong(r.rows), "bytes" -> JLong(r.bytes),
-      "anyDv" -> JBool(r.anyDv)) ++
-      r.rowIdBasis.map(b => "rowIdBasis" -> (JLong(b): JValue)).toList)
+  private def removesOf(actions: Seq[LogAction]): Seq[String] =
+    actions.collect { case Remove(p) => p }
 
   /** The by-reference add set of one commit, if it carries one. */
   private def commitAddsRef(v: Long): Option[AddsRef] =
-    readActions(logFile(v)).collectFirst {
-      case j if (j \ "addsRef") != JNothing => parseAddsRef(j \ "addsRef")
-    }
+    addsRefOf(readCommit(v))
 
-  private def readActions(f: File): Seq[JValue] =
-    Files.readString(f.toPath).linesIterator.filter(_.nonEmpty)
-      .map(JsonMethods.parse(_)).toSeq
+  /** The commit line of one version's actions. */
+  private def infoOf(v: Long, actions: Seq[LogAction]): CommitInfo =
+    actions.collectFirst { case c: CommitInfo => c }
+      .getOrElse(throw new IllegalStateException(s"commit $v has no meta"))
 
   /** One commit's admission facts for the rate-limited streaming
     * source — `(op, files added, bytes added)` from a single read
     * of the commit's JSON (no listing, no snapshot replay): the
     * unit [[LogStreamSource]]'s `maxFilesPerTrigger` /
-    * `maxBytesPerTrigger` budgeting sums over. */
+    * `maxBytesPerTrigger` budgeting sums over. A by-reference
+    * commit's totals ride the action itself — O(1), the sidecar is
+    * never opened for admission budgeting. */
   private[sources] def commitAdmission(v: Long): (String, Long, Long) = {
-    val actions = readActions(logFile(v))
-    val op = actions
-      .collectFirst { case j if (j \ "commit") != JNothing =>
-        (j \ "commit" \ "op").asInstanceOf[JString].s }
-      .getOrElse(throw new IllegalStateException(s"commit $v has no meta"))
-    val adds = actions.collect {
-      case j if (j \ "add") != JNothing => parseAdd(j \ "add") }
-    // a by-reference commit's totals ride the action itself — O(1),
-    // the sidecar is never opened for admission budgeting
-    val ref = actions.collectFirst {
-      case j if (j \ "addsRef") != JNothing => parseAddsRef(j \ "addsRef") }
-    (op, adds.size.toLong + ref.map(_.count).getOrElse(0L),
+    val actions = readCommit(v)
+    val adds = addsOf(actions)
+    val ref = addsRefOf(actions)
+    (infoOf(v, actions).op, adds.size.toLong + ref.map(_.count).getOrElse(0L),
       adds.map(_.bytes).sum + ref.map(_.bytes).getOrElse(0L))
   }
 
-  /** Commit metadata of one version (wall-clock, op, cdf dir). */
-  private def commitMeta(v: Long): CommitMeta = {
-    val c = readActions(logFile(v))
-      .collectFirst { case j if (j \ "commit") != JNothing => j \ "commit" }
-      .getOrElse(throw new IllegalStateException(s"commit $v has no meta"))
-    CommitMeta(
-      (c \ "ts") match { case JInt(i) => i.toLong; case JLong(l) => l
-        case _ => 0L },
-      (c \ "op").asInstanceOf[JString].s,
-      (c \ "cdf") match { case JString(s) => Some(s); case _ => None },
-      ((c \ "txnApp"), (c \ "txnBatch")) match {
-        case (JString(a), JInt(b))  => Some((a, b.toLong))
-        case (JString(a), JLong(b)) => Some((a, b))
-        case _                      => None
-      })
-  }
+  /** Commit line of one version (wall-clock, op, cdf dir, txn). */
+  private def commitMeta(v: Long): CommitInfo =
+    infoOf(v, readCommit(v))
 
   /** Wall-clock of a commit (epoch millis from the injectable
     * clock). */
@@ -562,9 +451,6 @@ final class LogTable(val path: String,
     * (appId, batchId), Delta's txnAppId/txnVersion pair. */
   def commitTxn(v: Long): Option[(String, Long)] = commitMeta(v).txn
 
-  /** Snapshot state at `v`: newest checkpoint ≤ v, then replay the
-    * remaining commits — O(checkpointInterval) file reads, not
-    * O(history). */
   /** A committed version's snapshot is immutable — memoize it.
     * Every metadata accessor (schema, partitionCols, constraints,
     * generated, bloom) resolves a snapshot independently, so one
@@ -582,89 +468,23 @@ final class LogTable(val path: String,
       s
     })
 
+  /** Snapshot state at `v`: newest checkpoint ≤ v, then replay the
+    * remaining commits — O(checkpointInterval) file reads, not
+    * O(history). The header's metadata and every commit line fold
+    * through the one [[TableMeta.fold]]. */
   private def computeSnapshotAt(v: Long): Snapshot = {
     // checkpoint discovery: the pointer answers the common case
     // (current-ish snapshots) with one GET; time travel BEHIND the
     // newest checkpoint, or a missing pointer, falls back to the
     // full listing
-    val ckpts: Option[Long] =
-      if (ignoreCheckpointsForTest) None
-      else newestCkptAtOrBefore(v) // shared discovery (addsDF too)
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Seq.empty
-    var bloomIdxCols: Seq[String] = Seq.empty
-    var checks: Map[String, String] = Map.empty
-    var genCols: Map[String, String] = Map.empty
-    var retired: Set[String] = Set.empty
-    var zone: Option[String] = None
-    var idCols: Map[String, IdentitySpec] = Map.empty
-    var defCols: Map[String, String] = Map.empty
-    var props: Map[String, String] = Map.empty
-    var trans: Map[String, String] = Map.empty
-    var refMap: Map[String, String] = Map.empty
-    var proto: Option[Protocol] = None
-    val from = ckpts match {
-      case Some(cv) =>
-        val state = JsonMethods.parse(Files.readString(ckptFile(cv).toPath))
-        schema = Some(DataType.fromJson(
-          JsonMethods.compact(JsonMethods.render(state \ "schema")))
-          .asInstanceOf[StructType])
-        (state \ "partition") match {
-          case JArray(arr) => partCols = arr.collect { case JString(s) => s }
-          case _           => ()
-        }
-        (state \ "bloom") match {
-          case JArray(arr) =>
-            bloomIdxCols = arr.collect { case JString(s) => s }
-          case _ => ()
-        }
-        (state \ "constraints") match {
-          case JObject(fields) => checks = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (state \ "generated") match {
-          case JObject(fields) => genCols = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (state \ "retired") match {
-          case JArray(arr) =>
-            retired = arr.collect { case JString(s) => s }.toSet
-          case _ => ()
-        }
-        (state \ "tz") match {
-          case JString(z) => zone = Some(z)
-          case _          => ()
-        }
-        if ((state \ "identity") != JNothing)
-          idCols = parseIdentity(state \ "identity")
-        (state \ "defaults") match {
-          case JObject(fields) => defCols = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (state \ "properties") match {
-          case JObject(fields) => props = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (state \ "transforms") match {
-          case JObject(fields) => trans = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (state \ "refs") match {
-          case JObject(fields) => refMap = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        if ((state \ "protocol") != JNothing)
-          proto = Some(parseProtocol(state \ "protocol"))
-        // file-state is NOT loaded here — the header carries only
-        // O(schema) metadata, and [[fileStateAt]] resolves the adds
-        // sidecar lazily when (and only when) Snapshot.adds is forced
-        cv + 1
+    val ckpt: Option[(Long, CheckpointHeader)] =
+      (if (ignoreCheckpointsForTest) None else newestCkptAtOrBefore(v))
+        .map(cv => cv -> ckptHeader(cv))
+    // file-state is NOT loaded here — the header carries only
+    // O(schema) metadata, and [[fileStateAt]] resolves the adds
+    // sidecar lazily when (and only when) Snapshot.adds is forced
+    val (from, base) = ckpt match {
+      case Some((cv, h)) => (cv + 1, h.meta)
       case None =>
         // no checkpoint at-or-before v: replay must start at commit
         // 0 — if THAT is gone, v predates the expiry floor
@@ -672,89 +492,19 @@ final class LogTable(val path: String,
           s"version $v of the log table at $path has been expired " +
             s"(earliest retained: ${versions.headOption.getOrElse(-1L)})" +
             " — expireSnapshots removed its metadata")
-        0L
+        (0L, TableMeta())
     }
     // versions are contiguous (commitRetry claims head+1), so the
     // replay interval needs no directory listing — each commit file
-    // is a direct read of a known key
-    (from to v).foreach { cv =>
-      readActions(logFile(cv)).foreach { j =>
-        if ((j \ "schema") != JNothing)
-          schema = Some(DataType.fromJson(
-            (j \ "schema").asInstanceOf[JString].s).asInstanceOf[StructType])
-        (j \ "partition") match {
-          case JArray(arr) => partCols = arr.collect { case JString(s) => s }
-          case _           => ()
-        }
-        (j \ "bloom") match {
-          case JArray(arr) =>
-            bloomIdxCols = arr.collect { case JString(s) => s }
-          case _ => ()
-        }
-        (j \ "constraints") match {
-          // the action carries the FULL post-change constraint set
-          // (like schema actions), so the latest one wins wholesale
-          case JObject(fields) => checks = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (j \ "generated") match {
-          case JObject(fields) => genCols = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        (j \ "retired") match {
-          case JArray(arr) =>
-            retired = arr.collect { case JString(s) => s }.toSet
-          case _ => ()
-        }
-        (j \ "tz") match {
-          case JString(z) => zone = Some(z)
-          case _          => ()
-        }
-        // identity/defaults actions carry the FULL post-change map
-        // (like constraints) — latest wins wholesale
-        if ((j \ "identity") != JNothing)
-          idCols = parseIdentity(j \ "identity")
-        (j \ "defaults") match {
-          case JObject(fields) => defCols = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        // property actions carry the FULL post-change map (like
-        // constraints/defaults) — latest wins wholesale
-        (j \ "properties") match {
-          case JObject(fields) => props = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        // partition-transform actions (hidden col → transform spec)
-        // carry the full post-change map — latest wins wholesale
-        (j \ "transforms") match {
-          case JObject(fields) => trans = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        // ref actions (tags/branches: name → "kind:version") carry
-        // the full post-change map — latest wins wholesale
-        (j \ "refs") match {
-          case JObject(fields) => refMap = fields.collect {
-            case (k, JString(v)) => k -> v }.toMap
-          case _ => ()
-        }
-        // protocol actions carry the FULL post-change feature state
-        // — latest wins wholesale (Delta's PROTOCOL.md rule)
-        if ((j \ "protocol") != JNothing)
-          proto = Some(parseProtocol(j \ "protocol"))
-        // add/remove actions are the FILE-STATE — deferred to
-        // [[fileStateAt]]; this pass is metadata-only
-      }
-    }
+    // is a direct read of a known key; add/remove actions leave the
+    // metadata as it is (they are [[fileStateAt]]'s)
+    val meta = (from to v).foldLeft(base)((m, cv) =>
+      readCommit(cv).foldLeft(m)(TableMeta.fold))
     // READER protocol gate: refuse — by feature NAME — instead of
     // half-reading a table a future writer extended (Delta's
     // PROTOCOL.md discipline). Tables without a protocol action
     // (legacy) read as before.
-    proto.foreach { pr =>
+    meta.protocol.foreach { pr =>
       val unknown = pr.readerFeatures -- LogTable.SupportedReaderFeatures
       if (pr.minReader > LogTable.ReaderVersion || unknown.nonEmpty)
         throw new IllegalStateException(
@@ -768,52 +518,56 @@ final class LogTable(val path: String,
               s"${LogTable.ReaderVersion})") +
             " — upgrade the graft library; refusing to half-read")
     }
-    new Snapshot(schema.getOrElse(throw new IllegalStateException(
-      s"log at $path has no schema action up to version $v")),
-      () => fileStateAt(ckpts, v),
-      partCols, bloomIdxCols, checks, genCols, retired,
-      zone, idCols, defCols, props, trans, refMap, proto)
+    if (meta.schema.isEmpty) throw new IllegalStateException(
+      s"log at $path has no schema action up to version $v")
+    new Snapshot(meta, () => fileStateAt(ckpt, v))
+  }
+
+  /** A checkpoint's header. Its file-state sidecar is `parquet` or
+    * `jsonl` — any other `addsFormat`, or none, is a header this
+    * reader cannot serve, refused by file name. */
+  private def ckptHeader(cv: Long): CheckpointHeader = {
+    val f = ckptFile(cv)
+    val h = LogCodec.decodeHeader(Files.readString(f.toPath))
+    if (h.addsFormat != "parquet" && h.addsFormat != "jsonl")
+      throw new IllegalStateException(s"checkpoint header $f has " +
+        s"addsFormat '${h.addsFormat}' — missing or unknown; a " +
+        "checkpoint's file-state is either parquet or jsonl")
+    h
   }
 
   /** The live file-state at `v`, replayed from the chosen checkpoint
     * basis — the DEFERRED half of [[computeSnapshotAt]]: the
-    * checkpoint's adds sidecar (parquet via a distributed scan,
-    * JSONL line-streamed, or a legacy embedded array) plus the
-    * add/remove fold of the bounded commit tail. Runs only when a
-    * caller forces `Snapshot.adds`; metadata-only operations never
-    * reach it. */
-  private def fileStateAt(ckpt: Option[Long], v: Long): Seq[AddFile] = {
+    * checkpoint's adds sidecar (parquet via a distributed scan, or
+    * JSONL line-streamed) plus the add/remove fold of the bounded
+    * commit tail. Runs only when a caller forces `Snapshot.adds`;
+    * metadata-only operations never reach it. */
+  private def fileStateAt(ckpt: Option[(Long, CheckpointHeader)],
+                          v: Long): Seq[AddFile] = {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
+    // a RE-ADD (DV update, restore) moves the file to the END of the
+    // manifest — "order = latest action order", the same rule the
+    // distributed manifest's tail fold applies, so a checkpoint
+    // written FROM the distributed manifest is byte-order-identical
+    // to this driver replay
+    def readd(a: AddFile): Unit = { live.remove(a.path); live(a.path) = a }
     val from = ckpt match {
-      case Some(cv) =>
-        ckptAddsSeq(cv).foreach(a => live(a.path) = a)
+      case Some((cv, h)) =>
+        ckptAddsSeq(cv, h).foreach(a => live(a.path) = a)
         cv + 1
       case None => 0L
     }
     (from to v).foreach { cv =>
-      readActions(logFile(cv)).foreach { j =>
-        if ((j \ "add") != JNothing) {
-          val a = parseAdd(j \ "add")
-          // a RE-ADD (DV update, restore) moves the file to the END
-          // of the manifest — "order = latest action order", the
-          // same rule the distributed manifest's tail fold applies,
-          // so a checkpoint written FROM the distributed manifest is
-          // byte-order-identical to this driver replay
-          live.remove(a.path)
-          live(a.path) = a
-        }
+      readCommit(cv).foreach {
+        case Add(a) => readd(a)
         // a by-reference add set folds exactly like inline adds, in
         // sidecar idx order — this DRIVER materialization runs only
         // when a caller forces Snapshot.adds; the distributed
         // manifest serves the same commit without it
-        if ((j \ "addsRef") != JNothing) {
-          val ref = parseAddsRef(j \ "addsRef")
-          readAddsParquet(new File(logDir, ref.path)).foreach { a =>
-            live.remove(a.path); live(a.path) = a
-          }
-        }
-        if ((j \ "remove") != JNothing)
-          live.remove((j \ "remove" \ "path").asInstanceOf[JString].s)
+        case AddByRef(r) =>
+          readAddsParquet(new File(logDir, r.path)).foreach(readd)
+        case Remove(p) => live.remove(p)
+        case _ => ()
       }
     }
     live.values.toSeq
@@ -827,23 +581,15 @@ final class LogTable(val path: String,
     * either way the checkpoint itself serves, so an expired log
     * below it stays readable. JSONL line-streams in UTF-8 (the
     * writer's charset, never the platform's). */
-  private def ckptAddsSeq(cv: Long): Seq[AddFile] = {
-    val state = JsonMethods.parse(Files.readString(ckptFile(cv).toPath))
+  private def ckptAddsSeq(cv: Long, h: CheckpointHeader): Seq[AddFile] = {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    (state \ "addsFormat") match {
-      case JString("parquet") =>
-        readAddsParquet(ckptParquetOf(state, cv))
-          .foreach(a => live(a.path) = a)
-      case JString("jsonl") =>
-        val src = scala.io.Source.fromFile(
-          ckptAddsFile(cv))(scala.io.Codec.UTF8)
-        try src.getLines().filter(_.nonEmpty).foreach { line =>
-          val a = parseAdd(JsonMethods.parse(line)); live(a.path) = a
-        } finally src.close()
-      case _ =>
-        (state \ "adds").asInstanceOf[JArray].arr.foreach { j =>
-          val a = parseAdd(j); live(a.path) = a
-        }
+    if (h.addsFormat == "parquet")
+      readAddsParquet(ckptParquetOf(h, cv)).foreach(a => live(a.path) = a)
+    else {
+      val src = scala.io.Source.fromFile(ckptAddsFile(cv))(scala.io.Codec.UTF8)
+      try src.getLines().filter(_.nonEmpty).foreach { line =>
+        val a = LogCodec.decodeAddFile(line); live(a.path) = a
+      } finally src.close()
     }
     live.values.toSeq
   }
@@ -928,8 +674,7 @@ final class LogTable(val path: String,
     * and stats are committed as given. */
   private[graft] def registerFiles(adds: Seq[AddFile],
                                    op: String = "append"): Long =
-    commitRetry(currentVersion, Seq.empty, adds, op,
-      schemaJson = None, cdfDir = None)
+    commitRetry(currentVersion, info(op) +: adds.map(Add))
 
   /** [[registerFiles]] from a DISTRIBUTED manifest — the scale twin:
     * the add set arrives as a Dataset (one [[CkptAdd]] row per file,
@@ -1031,8 +776,7 @@ final class LogTable(val path: String,
       val ref = AddsRef(target.getName, n, facts.getLong(2),
         facts.getLong(3), facts.getBoolean(4), rowIdBasis = basis)
       try {
-        val v = commitRetry(currentVersion, Seq.empty, Seq.empty, op,
-          schemaJson = None, cdfDir = None, addsRef = Some(ref))
+        val v = commitRetry(currentVersion, Seq(info(op), AddByRef(ref)))
         // checkpoint NOW (idempotent — the fat-commit trigger may
         // have already fired): later readers resolve the parquet
         // manifest directly instead of re-stitching the sidecar
@@ -1070,16 +814,13 @@ final class LogTable(val path: String,
   private[sources] def distributedManifest(spark: SparkSession, v: Long)
       : Option[org.apache.spark.sql.Dataset[CkptAdd]] = {
     val enc = org.apache.spark.sql.Encoders.product[CkptAdd]
-    val ckptV: Option[Long] =
-      if (ignoreCheckpointsForTest) None else newestCkptAtOrBefore(v)
-    val parquetBase: Option[(Long, DataFrame)] = ckptV.flatMap { c =>
-      val header =
-        JsonMethods.parse(Files.readString(ckptFile(c).toPath))
-      (header \ "addsFormat") match {
-        case JString("parquet") => Some(c ->
-          spark.read.parquet(ckptParquetOf(header, c).getPath))
-        case _ => None
-      }
+    val ckpt: Option[(Long, CheckpointHeader)] =
+      (if (ignoreCheckpointsForTest) None else newestCkptAtOrBefore(v))
+        .map(c => c -> ckptHeader(c))
+    val ckptV = ckpt.map(_._1)
+    val parquetBase: Option[(Long, DataFrame)] = ckpt.collect {
+      case (c, h) if h.addsFormat == "parquet" =>
+        c -> spark.read.parquet(ckptParquetOf(h, c).getPath)
     }
     // a table that EVER committed by reference carries the `addsRef`
     // reader feature — the cheap (metadata-only) signal to probe the
@@ -1095,10 +836,11 @@ final class LogTable(val path: String,
         // fresh CONVERT's empty pre-table, or a below-threshold JSONL
         // checkpoint: small by construction, lifted into a tiny
         // DataFrame so the fold stays distributed end-to-end
-        val seed = ckptV.map(ckptAddsSeq).getOrElse(Seq.empty)
+        val seed = ckpt.map { case (c, h) => ckptAddsSeq(c, h) }
+          .getOrElse(Seq.empty)
         Some((from - 1, spark.createDataset(
           seed.iterator.zipWithIndex
-            .map { case (a, i) => encodeCkptAdd(i.toLong, a) }.toSeq)(enc)
+            .map { case (a, i) => LogCodec.encodeCkptAdd(i.toLong, a) }.toSeq)(enc)
           .toDF()))
       }
     }
@@ -1117,26 +859,22 @@ final class LogTable(val path: String,
         val sides = scala.collection.mutable.ArrayBuffer
           .empty[(Int, String)]
         (c + 1 to v).foreach { cv =>
-          readActions(logFile(cv)).foreach { j =>
-            if ((j \ "add") != JNothing) {
-              val a = parseAdd(j \ "add")
-              // move-to-end on re-add — the SAME order rule the
-              // driver replay applies (fileStateAt), so a checkpoint
-              // written from this manifest replays order-identical
+          readCommit(cv).foreach {
+            // move-to-end on re-add — the SAME order rule the driver
+            // replay applies (fileStateAt), so a checkpoint written
+            // from this manifest replays order-identical
+            case Add(a) =>
               pos += 1
               inline.remove(a.path)
               inline(a.path) = (pos, Some(a))
-            }
-            if ((j \ "addsRef") != JNothing) {
+            case AddByRef(r) =>
               pos += 1
-              sides += ((pos, parseAddsRef(j \ "addsRef").path))
-            }
-            if ((j \ "remove") != JNothing) {
-              val p = (j \ "remove" \ "path").asInstanceOf[JString].s
+              sides += ((pos, r.path))
+            case Remove(p) =>
               pos += 1
               inline.remove(p)
               inline(p) = (pos, None)
-            }
+            case _ => ()
           }
         }
         // a small touched set stays a literal NOT-IN (no second
@@ -1163,7 +901,7 @@ final class LogTable(val path: String,
             case (_, Some(a)) => a }.toSeq
           filterOut(base0, touched).unionByName(spark.createDataset(
             alive.zipWithIndex.map { case (a, i) =>
-              encodeCkptAdd(Long.MaxValue - alive.size + i, a) })(enc)
+              LogCodec.encodeCkptAdd(Long.MaxValue - alive.size + i, a) })(enc)
             .toDF()).as[CkptAdd](enc)
         } else {
           // SEGMENTED fold: base, then — in action order — inline
@@ -1200,7 +938,7 @@ final class LogTable(val path: String,
             if (alive.nonEmpty) {
               val df0 = spark.createDataset(
                 alive.zipWithIndex.map { case (a, k) =>
-                  encodeCkptAdd(k.toLong, a) })(enc).toDF()
+                  LogCodec.encodeCkptAdd(k.toLong, a) })(enc).toDF()
               segs += antiSides(df0, sideDfs.drop(i))
                 .withColumn("idx", col("idx") + lit(segNo * SegSpan))
             }
@@ -1257,7 +995,7 @@ final class LogTable(val path: String,
           var n = 0L
           it.foreach { c =>
             n += 1
-            val a = LogTable.decodeCkptAdd(c)
+            val a = LogCodec.decodeCkptAdd(c)
             if (!LogTable.statsNoMatch(a,
                 baseC ++ LogTable.derivedSafeFor(a, derivedC)))
               keep += c
@@ -1266,7 +1004,7 @@ final class LogTable(val path: String,
         }(org.apache.spark.sql.Encoders.product[PrunePart]).collect()
         val total = parts.iterator.map(_.total).sum
         val survivors = parts.iterator.flatMap(_.keep).toSeq
-          .sortBy(_.idx).map(LogTable.decodeCkptAdd)
+          .sortBy(_.idx).map(LogCodec.decodeCkptAdd)
           .filterNot(a =>
             provablyNoMatch(a, base ++ derivedSafeFor(a, derived)))
         (survivors, total)
@@ -1324,7 +1062,7 @@ final class LogTable(val path: String,
               .as[CkptAdd](org.apache.spark.sql.Encoders.product[CkptAdd])
           }
         hits.collect().iterator
-          .map(c => c.path -> LogTable.decodeCkptAdd(c)).toMap
+          .map(c => c.path -> LogCodec.decodeCkptAdd(c)).toMap
       case None =>
         lastRevalidateMode = "driver"
         val want = paths.toSet
@@ -1414,6 +1152,11 @@ final class LogTable(val path: String,
       throw new IllegalStateException(s"no log table at $path")))
       .addsMaterialized
 
+  /** The metadata state at `version`, as replay folded it from the
+    * checkpoint header and the commit tail. */
+  private[graft] def metaAt(version: Long): TableMeta =
+    snapshotAt(version).meta
+
   /** The table's protocol state at a version (None for legacy
     * tables that predate protocol actions — they read ungated). */
   def protocolAt(version: Option[Long] = None): Option[Protocol] =
@@ -1427,8 +1170,7 @@ final class LogTable(val path: String,
     * not know. The usual writer gate applies against the CURRENT
     * protocol (an already-foreign table refuses even this). */
   private[graft] def commitProtocol(p: Protocol): Long =
-    commitRetry(currentVersion, Seq.empty, Seq.empty, "protocol",
-      schemaJson = None, cdfDir = None, protocolJson = Some(p))
+    commitRetry(currentVersion, Seq(info("protocol"), SetProtocol(p)))
 
   /** Snapshot read with file-skipping applied AT PLANNING: the
     * manifest is pruned by `pred` (min/max + partition values +
@@ -1478,7 +1220,7 @@ final class LogTable(val path: String,
       // below the threshold (or no parquet checkpoint yet) the
       // snapshot is small by construction — serve the driver seq
       spark.createDataset(snapshotAt(v).adds.zipWithIndex
-        .map { case (a, i) => encodeCkptAdd(i.toLong, a) })(enc)
+        .map { case (a, i) => LogCodec.encodeCkptAdd(i.toLong, a) })(enc)
         .toDF()
     }
     manifest
@@ -1749,10 +1491,9 @@ final class LogTable(val path: String,
     require(!hasFieldIds(snap.schema),
       "row tracking on a column-mapped table is not supported — the " +
         "field-id write stamp refuses the materialized id column")
-    commitRetry(basis, snap.adds.map(_.path), snap.adds, "rowtracking",
-      schemaJson = None, cdfDir = None,
-      propertiesJson = Some(snap.properties +
-        (LogTable.PropRowTracking -> "true")),
+    commitRetry(basis, Seq(info("rowtracking"), SetProperties(
+      snap.properties + (LogTable.PropRowTracking -> "true"))) ++
+      snap.adds.map(a => Remove(a.path)) ++ snap.adds.map(Add),
       requireHead = Some(basis))
   }
 
@@ -1958,23 +1699,11 @@ final class LogTable(val path: String,
       if (rel.startsWith("/")) rel else s"${source.path}/$rel"
     val adds = snap.adds.map(a => a.copy(path = abs(a.path),
       dv = a.dv.map(d => d.copy(path = abs(d.path)))))
-    commitRetry(None, Seq.empty, adds, "clone",
-      schemaJson = Some(snap.schema.json), cdfDir = None,
-      partitionJson =
-        if (snap.partitionCols.isEmpty) None else Some(snap.partitionCols),
-      constraintsJson =
-        if (snap.constraints.isEmpty) None else Some(snap.constraints),
-      generatedJson =
-        if (snap.generated.isEmpty) None else Some(snap.generated),
-      transformsJson =
-        if (snap.transforms.isEmpty) None else Some(snap.transforms),
-      retiredJson =
-        if (snap.retiredNames.isEmpty) None else Some(snap.retiredNames),
-      identityJson =
-        if (snap.identity.isEmpty) None else Some(snap.identity),
-      defaultsJson =
-        if (snap.defaults.isEmpty) None else Some(snap.defaults),
-      tzJson = snap.tz)
+    // the source's metadata minus its bloom sidecars, properties,
+    // refs and protocol, which stay with the source
+    commitRetry(None, info("clone") +: (snap.meta.copy(bloomCols = Nil,
+      properties = Map.empty, refs = Map.empty, protocol = None).actions ++
+      adds.map(Add)))
   }
 
   /** `ALTER TABLE RENAME COLUMN` as a METADATA-ONLY commit — zero
@@ -2056,10 +1785,8 @@ final class LogTable(val path: String,
     // head-pinned: the full schema/bloom/retired sets were derived
     // from THIS snapshot — an interleaved evolution would be
     // clobbered by a stale write, so conflict and re-derive instead
-    commitRetry(Some(v), Seq.empty, Seq.empty, "rename",
-      schemaJson = Some(renamed.json), cdfDir = None,
-      bloomJson = newBloom,
-      retiredJson = Some(snap.retiredNames + oldName),
+    commitRetry(Some(v), Seq(info("rename"), SetSchema(renamed),
+      SetRetired(snap.retiredNames + oldName)) ++ newBloom.map(SetBloom),
       requireHead = Some(basis))
   }
 
@@ -2117,13 +1844,11 @@ final class LogTable(val path: String,
       if (snap.identity.contains(name)) Some(snap.identity - name) else None
     val shedDefaults =
       if (snap.defaults.contains(name)) Some(snap.defaults - name) else None
-    commitRetry(Some(v), Seq.empty, Seq.empty, "drop",
-      identityJson = shedIdentity, defaultsJson = shedDefaults,
-      schemaJson = Some(remaining.json), cdfDir = None,
-      bloomJson = newBloom, generatedJson = newGenerated,
-      retiredJson = Some(snap.retiredNames + name),
-      propertiesJson = Some(snap.properties +
-        (LogTable.PropFieldIdHighWater -> newHw.toString)),
+    commitRetry(Some(v), Seq(info("drop"), SetSchema(remaining),
+      SetRetired(snap.retiredNames + name), SetProperties(snap.properties +
+        (LogTable.PropFieldIdHighWater -> newHw.toString))) ++
+      shedIdentity.map(SetIdentity) ++ shedDefaults.map(SetDefaults) ++
+      newBloom.map(SetBloom) ++ newGenerated.map(SetGenerated),
       requireHead = Some(basis))
   }
 
@@ -2166,8 +1891,7 @@ final class LogTable(val path: String,
     val v = basis.getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
     val widened = validateWiden(spark, name, newType, Some(v))
-    commitRetry(Some(v), Seq.empty, Seq.empty, "widen",
-      schemaJson = Some(widened.json), cdfDir = None,
+    commitRetry(Some(v), Seq(info("widen"), SetSchema(widened)),
       requireHead = Some(basis))
   }
 
@@ -2230,9 +1954,9 @@ final class LogTable(val path: String,
       throw new IllegalStateException(s"no log table at $path"))
     val added = validateAddColumns(cols, Some(v))
     val s = snapshotAt(v).schema
-    commitRetry(Some(v), Seq.empty, Seq.empty, "add",
-      schemaJson = Some(StructType(s.fields ++ added).json),
-      cdfDir = None, requireHead = Some(basis))
+    commitRetry(Some(v),
+      Seq(info("add"), SetSchema(StructType(s.fields ++ added))),
+      requireHead = Some(basis))
   }
 
   /** [[addColumns]]'s preconditions against the snapshot at
@@ -2305,9 +2029,8 @@ final class LogTable(val path: String,
         require(bad == 0L, s"cannot add CHECK constraint '$name' " +
           s"($sqlExpr): $bad existing row(s) violate it")
       }
-      commitRetry(basis, Seq.empty, Seq.empty, "constraint",
-        schemaJson = None, cdfDir = None,
-        constraintsJson = Some(cur + (name -> sqlExpr)),
+      commitRetry(basis,
+        Seq(info("constraint"), SetConstraints(cur + (name -> sqlExpr))),
         requireHead = Some(basis))
     }
 
@@ -2321,9 +2044,7 @@ final class LogTable(val path: String,
       val cur = basis.map(v => snapshotAt(v).constraints)
         .getOrElse(Map.empty[String, String])
       require(cur.contains(name), s"no constraint '$name' to drop")
-      commitRetry(basis, Seq.empty, Seq.empty, "constraint",
-        schemaJson = None, cdfDir = None,
-        constraintsJson = Some(cur - name),
+      commitRetry(basis, Seq(info("constraint"), SetConstraints(cur - name)),
         requireHead = Some(basis))
     }
 
@@ -2355,9 +2076,8 @@ final class LogTable(val path: String,
       require(!snap.generated.contains(name),
         s"column '$name' is GENERATED ALWAYS AS — it cannot also " +
           "carry a DEFAULT")
-      commitRetry(basis, Seq.empty, Seq.empty, "default",
-        schemaJson = None, cdfDir = None,
-        defaultsJson = Some(snap.defaults + (name -> sqlExpr)),
+      commitRetry(basis,
+        Seq(info("default"), SetDefaults(snap.defaults + (name -> sqlExpr))),
         requireHead = Some(basis))
     }
 
@@ -2400,9 +2120,7 @@ final class LogTable(val path: String,
       if (basis.isEmpty) throw new IllegalStateException(
         s"no log table at $path — TBLPROPERTIES need an existing table")
       val cur = snapshotAt(basis.get).properties
-      commitRetry(basis, Seq.empty, Seq.empty, "tblproperties",
-        schemaJson = None, cdfDir = None,
-        propertiesJson = Some(cur ++ props),
+      commitRetry(basis, Seq(info("tblproperties"), SetProperties(cur ++ props)),
         requireHead = Some(basis))
     }
 
@@ -2413,9 +2131,7 @@ final class LogTable(val path: String,
       if (basis.isEmpty) throw new IllegalStateException(
         s"no log table at $path — TBLPROPERTIES need an existing table")
       val cur = snapshotAt(basis.get).properties
-      commitRetry(basis, Seq.empty, Seq.empty, "tblproperties",
-        schemaJson = None, cdfDir = None,
-        propertiesJson = Some(cur -- keys),
+      commitRetry(basis, Seq(info("tblproperties"), SetProperties(cur -- keys)),
         requireHead = Some(basis))
     }
 
@@ -2494,17 +2210,7 @@ final class LogTable(val path: String,
     setTableProperties(Map(
       LogTable.PropStatsVersion -> v.toString,
       LogTable.PropStatsRows -> stats.rows.toString,
-      LogTable.PropStatsCols -> JsonMethods.compact(JsonMethods.render(
-        JObject(cols.toList.sortBy(_._1).map { case (n, c) =>
-          n -> JObject(List("ndv" -> JLong(c.ndv),
-            "nulls" -> JLong(c.nulls)) ++
-            c.min.map("min" -> JString(_)) ++
-            c.max.map("max" -> JString(_)) ++
-            c.avgLen.map("avgLen" -> JLong(_)) ++
-            c.maxLen.map("maxLen" -> JLong(_)) ++
-            c.histogram.map(h =>
-              "hist" -> JArray(h.toList.map(JDouble(_)))))
-        })))))
+      LogTable.PropStatsCols -> LogCodec.encodeAnalyzedCols(cols)))
     stats
   }
 
@@ -2515,30 +2221,7 @@ final class LogTable(val path: String,
   def columnStatistics: Option[TableStats] = {
     val props = tableProperties
     props.get(LogTable.PropStatsCols).map { json =>
-      val cols = JsonMethods.parse(json) match {
-        case JObject(fields) => fields.map { case (n, v) =>
-          def jl(k: String): Option[Long] = (v \ k) match {
-            case JInt(i) => Some(i.toLong); case JLong(l) => Some(l)
-            case _ => None
-          }
-          def js(k: String): Option[String] = (v \ k) match {
-            case JString(s) => Some(s); case _ => None
-          }
-          val hist = (v \ "hist") match {
-            case JArray(a) => Some(a.collect {
-              case JDouble(d)  => d
-              case JInt(i)     => i.toDouble
-              case JLong(l)    => l.toDouble
-              case JDecimal(d) => d.toDouble
-            }.toVector)
-            case _ => None
-          }
-          n -> AnalyzedCol(jl("ndv").getOrElse(0L),
-            jl("nulls").getOrElse(0L), js("min"), js("max"),
-            jl("avgLen"), jl("maxLen"), hist)
-        }.toMap
-        case _ => Map.empty[String, AnalyzedCol]
-      }
+      val cols = LogCodec.decodeAnalyzedCols(json)
       TableStats(
         props.get(LogTable.PropStatsVersion).map(_.toLong).getOrElse(-1L),
         props.get(LogTable.PropStatsRows).map(_.toLong).getOrElse(-1L), cols)
@@ -2692,16 +2375,11 @@ final class LogTable(val path: String,
           tzSensitive(spark, e, ordered) })
           Some(spark.sessionState.conf.sessionLocalTimeZone)
         else None
-      commitRetry(basis, Seq.empty, Seq.empty, "partition",
-        schemaJson =
-          if (ordered == snap.schema) None else Some(ordered.json),
-        cdfDir = None,
-        partitionJson = Some(resolved),
-        generatedJson =
-          if (newGenerated == snap.generated) None else Some(newGenerated),
-        transformsJson =
-          if (newTransforms == snap.transforms) None else Some(newTransforms),
-        tzJson = tzPin,
+      commitRetry(basis, Seq(info("partition"), SetPartition(resolved)) ++
+        Option.when(ordered != snap.schema)(SetSchema(ordered)) ++
+        Option.when(newGenerated != snap.generated)(SetGenerated(newGenerated)) ++
+        Option.when(newTransforms != snap.transforms)(
+          SetTransforms(newTransforms)) ++ tzPin.map(SetTz),
         requireHead = Some(basis))
     }
 
@@ -2711,9 +2389,7 @@ final class LogTable(val path: String,
       val cur = basis.map(v => snapshotAt(v).defaults)
         .getOrElse(Map.empty[String, String])
       require(cur.contains(name), s"no DEFAULT on column '$name' to drop")
-      commitRetry(basis, Seq.empty, Seq.empty, "default",
-        schemaJson = None, cdfDir = None,
-        defaultsJson = Some(cur - name),
+      commitRetry(basis, Seq(info("default"), SetDefaults(cur - name)),
         requireHead = Some(basis))
     }
 
@@ -2845,35 +2521,22 @@ final class LogTable(val path: String,
         f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
           .putLong(LogTable.FieldIdKey, i + 1L).build())
       })
-    commitRetry(None, Seq.empty, Seq.empty, "create",
-      schemaJson = Some(ordered.json), cdfDir = None,
-      partitionJson = if (partitionBy0.isEmpty) None else Some(partitionBy0),
-      bloomJson = if (bloomFilterBy.isEmpty) None else Some(bloomFilterBy),
-      constraintsJson =
-        if (checkConstraints.isEmpty) None else Some(checkConstraints),
-      generatedJson =
-        if (generatedAlwaysAs0.isEmpty) None else Some(generatedAlwaysAs0),
-      transformsJson =
-        if (transformsMap.isEmpty) None else Some(transformsMap),
-      identityJson =
-        if (identityColumns.isEmpty) None else Some(identityColumns),
-      defaultsJson =
-        if (columnDefaults.isEmpty) None else Some(columnDefaults),
-      propertiesJson =
-        if (properties.isEmpty) None else Some(properties),
-      // zone-SENSITIVE generated expressions (instant → date) shift
-      // with the session timezone — pin the creation-time zone in
-      // the log so writes and predicate derivation can
-      // refuse/decline under a different zone instead of silently
-      // computing shifted values or unsound skips; zone-independent
-      // templates (dates, strings, NTZ) need no pin
-      tzJson = {
-        val spk = SparkSession.getActiveSession
-          .orElse(SparkSession.getDefaultSession)
-        if (spk.isEmpty || !generatedAlwaysAs0.exists { case (_, e) =>
-            tzSensitive(spk.get, e, ordered0) }) None
-        else Some(spk.get.sessionState.conf.sessionLocalTimeZone)
-      })
+    // zone-SENSITIVE generated expressions (instant → date) shift
+    // with the session timezone — pin the creation-time zone in the
+    // log so writes and predicate derivation can refuse/decline under
+    // a different zone instead of silently computing shifted values
+    // or unsound skips; zone-independent templates (dates, strings,
+    // NTZ) need no pin
+    val spk = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+    val tz =
+      if (spk.isEmpty || !generatedAlwaysAs0.exists { case (_, e) =>
+          tzSensitive(spk.get, e, ordered0) }) None
+      else Some(spk.get.sessionState.conf.sessionLocalTimeZone)
+    commitRetry(None, info("create") +: TableMeta(Some(ordered),
+      partitionBy0, bloomFilterBy, checkConstraints, generatedAlwaysAs0,
+      tz = tz, identity = identityColumns, defaults = columnDefaults,
+      properties = properties, transforms = transformsMap).actions)
   }
 
   /** Zone equality up to aliasing: `UTC`, `Etc/UTC` and `+00:00`
@@ -3091,25 +2754,18 @@ final class LogTable(val path: String,
     * names and commit them, with the `AddFile` stats and bloom
     * sidecars the write tasks computed (`staged`, from [[writeStaged]]
     * or a DSv2 staging's tracker) — the commit reads no staged data.
-    * Every staged part file must carry write statistics. `removePaths`
-    * names files (table-relative) the commit retires. Returns the
-    * committed version. */
+    * Every staged part file must carry write statistics. `actions`
+    * are the rest of the commit (its [[CommitInfo]], removes, extra
+    * adds, metadata); a [[SetIdentity]] among them has its high-water
+    * marks advanced past the staged values. Returns the committed
+    * version. */
   private def finalizeStaged(stagedDir: File, staged: StagedStats,
                              tableSchema: StructType,
-                             removePaths: Seq[String], op: String,
+                             actions: Seq[LogAction],
                              readVersion: Option[Long],
-                             schemaJson: Option[String],
-                             cdfDir: Option[String],
-                             txn: Option[(String, Long)] = None,
                              schemaBasis: Option[Long] = None,
-                             extraAdds: Seq[AddFile] = Seq.empty,
-                             tzJson: Option[String] = None,
-                             identityUpdate: Map[String, IdentitySpec] =
-                               Map.empty,
                              identityBasis:
                                Option[Map[String, Option[Long]]] = None,
-                             propertiesJson:
-                               Option[Map[String, String]] = None,
                              requireHead: Option[Option[Long]] = None)
       : Long = {
     // recursive walk: a partitioned staging nests its part files
@@ -3173,29 +2829,29 @@ final class LogTable(val path: String,
     // already aggregated — zero extra scans: the furthest value (in
     // step direction) across the staged files' min/max becomes the
     // new mark
-    val identityJson =
-      if (identityUpdate.isEmpty) None
-      else Some(identityUpdate.map { case (c, spec) =>
-        val bounds = adds.flatMap(_.stats.get(c)).flatMap(st =>
-          if (spec.step > 0) st.max else st.min).collect {
-          case l: Long => l
-          case i: Int  => i.toLong
-        }
-        if (bounds.isEmpty && adds.exists(_.rows > 0))
-          throw new IllegalStateException(
-            s"identity column '$c' has no commit stats — it must be " +
-              s"within the first $maxStatsCols stats columns")
-        val marks = spec.highWater.toSeq ++
-          (if (bounds.isEmpty) Seq.empty
-           else Seq(if (spec.step > 0) bounds.max else bounds.min))
-        c -> spec.copy(highWater =
-          if (marks.isEmpty) None
-          else Some(if (spec.step > 0) marks.max else marks.min))
-      })
-    try commitRetry(readVersion, removePaths, adds ++ extraAdds, op,
-      schemaJson, cdfDir, txn, schemaBasis, tzJson = tzJson,
-      identityJson = identityJson, identityBasis = identityBasis,
-      propertiesJson = propertiesJson, requireHead = requireHead)
+    def advance(ids: Map[String, IdentitySpec]) = ids.map { case (c, spec) =>
+      val bounds = adds.flatMap(_.stats.get(c)).flatMap(st =>
+        if (spec.step > 0) st.max else st.min).collect {
+        case l: Long => l
+        case i: Int  => i.toLong
+      }
+      if (bounds.isEmpty && adds.exists(_.rows > 0))
+        throw new IllegalStateException(
+          s"identity column '$c' has no commit stats — it must be " +
+            s"within the first $maxStatsCols stats columns")
+      val marks = spec.highWater.toSeq ++
+        (if (bounds.isEmpty) Seq.empty
+         else Seq(if (spec.step > 0) bounds.max else bounds.min))
+      c -> spec.copy(highWater =
+        if (marks.isEmpty) None
+        else Some(if (spec.step > 0) marks.max else marks.min))
+    }
+    // staged adds before the caller's re-adds: line order is manifest order
+    val all = adds.map(Add) ++ actions.map {
+      case SetIdentity(ids) => SetIdentity(advance(ids))
+      case a                => a
+    }
+    try commitRetry(readVersion, all, schemaBasis, identityBasis, requireHead)
     catch { case e: java.util.ConcurrentModificationException =>
       // a conflict OUT of the retry loop is terminal for THIS
       // attempt: the files this call already moved into data/ (and
@@ -3214,37 +2870,43 @@ final class LogTable(val path: String,
     }
   }
 
-  /** The optimistic-concurrency core: render the commit, then try to
-    * claim the next log slot with an atomic create-if-absent rename.
-    * A lost race re-resolves the head — blind appends just retry;
-    * commits that REMOVE files revalidate those files are still live
-    * (someone else rewrote one → true conflict, throw — Delta's
-    * rule). */
-  private def commitRetry(readVersion: Option[Long], removePaths: Seq[String],
-                          adds: Seq[AddFile], op: String,
-                          schemaJson: Option[String],
-                          cdfDir: Option[String],
-                          txn: Option[(String, Long)] = None,
+  /** The commit line of a commit being written: [[commitRetry]]
+    * stamps its timestamp on every attempt. */
+  private def info(op: String, cdf: Option[String] = None,
+                   txn: Option[(String, Long)] = None): CommitInfo =
+    CommitInfo(0L, op, cdf, txn)
+
+  /** An append's identity specs, when the table has any: the
+    * commit advances their high-water marks ([[finalizeStaged]]). */
+  private def identityOf(snap: Option[Snapshot]): Option[SetIdentity] =
+    snap.map(_.identity).filter(_.nonEmpty).map(SetIdentity)
+
+  /** The optimistic-concurrency core: render the commit's `actions`,
+    * then try to claim the next log slot with an atomic
+    * create-if-absent rename. A lost race re-resolves the head — blind
+    * appends just retry; commits that REMOVE files revalidate those
+    * files are still live (someone else rewrote one → true conflict,
+    * throw — Delta's rule). Each attempt edits the action list for
+    * the head it lands on: the in-commit timestamp, a schema re-merged
+    * after a racing schema change, fresh files' row ids with the
+    * high-water they advance, and the protocol the commit activates.
+    * The other inputs only check the head: `schemaBasis` (the version
+    * a widened schema was read at), `identityBasis` (the identity
+    * high-waters a write allocated from) and `requireHead` (the exact
+    * head a derived metadata change must land on). */
+  private def commitRetry(readVersion: Option[Long], actions: Seq[LogAction],
                           schemaBasis: Option[Long] = None,
-                          partitionJson: Option[Seq[String]] = None,
-                          bloomJson: Option[Seq[String]] = None,
-                          constraintsJson: Option[Map[String, String]] = None,
-                          generatedJson: Option[Map[String, String]] = None,
-                          retiredJson: Option[Set[String]] = None,
-                          requireHead: Option[Option[Long]] = None,
-                          tzJson: Option[String] = None,
-                          identityJson: Option[Map[String, IdentitySpec]] =
-                            None,
-                          defaultsJson: Option[Map[String, String]] = None,
                           identityBasis:
                             Option[Map[String, Option[Long]]] = None,
-                          propertiesJson: Option[Map[String, String]] = None,
-                          transformsJson: Option[Map[String, String]] = None,
-                          refsJson: Option[Map[String, String]] = None,
-                          protocolJson: Option[Protocol] = None,
-                          addsRef: Option[AddsRef] = None)
+                          requireHead: Option[Option[Long]] = None)
       : Long = {
     ensureLayout()
+    val txn = actions.collectFirst { case c: CommitInfo => c.txn }.flatten
+    val removePaths = removesOf(actions)
+    val adds = addsOf(actions)
+    val addsRef = addsRefOf(actions)
+    val schema = actions.collectFirst { case SetSchema(s) => s }
+    val props = actions.collectFirst { case SetProperties(p) => p }
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
@@ -3323,23 +2985,21 @@ final class LogTable(val path: String,
               s"modified (deletion vector) by another writer between " +
               s"version $readVersion and $head")
       }
-      // schema-race revalidation: this commit's schemaJson was
-      // derived by widening the schema READ at `schemaBasis` — if a
-      // schema action committed after that basis (a concurrent
-      // mergeSchema append, an overwrite), writing our stale widened
-      // schema would silently drop the winner's new columns from
-      // every subsequent read (Delta raises a metadata-changed
-      // conflict here; re-merging against the head preserves both
-      // writers' columns, which is what both asked for).
-      val effectiveSchemaJson = (schemaJson, schemaBasis) match {
-        case (Some(js), Some(basis)) =>
+      // schema-race revalidation: this commit's schema was derived by
+      // widening the schema READ at `schemaBasis` — if a schema
+      // action committed after that basis (a concurrent mergeSchema
+      // append, an overwrite), writing our stale widened schema
+      // would silently drop the winner's new columns from every
+      // subsequent read (Delta raises a metadata-changed conflict
+      // here; re-merging against the head preserves both writers'
+      // columns, which is what both asked for).
+      val effSchema = (schema, schemaBasis) match {
+        case (Some(ours), Some(basis)) =>
           val raced = versions
             .filter(v => v > basis && v <= head.getOrElse(-1L))
-            .exists(v => readActions(logFile(v))
-              .exists(j => (j \ "schema") != JNothing))
-          if (!raced) schemaJson
+            .exists(v => readCommit(v).exists(_.isInstanceOf[SetSchema]))
+          if (!raced) schema
           else {
-            val ours = DataType.fromJson(js).asInstanceOf[StructType]
             val headSchema = snapshotAt(head.get).schema
             // a COLUMN-MAPPED table cannot silently merge a raced
             // schema: our staged files already carry the field ids
@@ -3352,12 +3012,11 @@ final class LogTable(val path: String,
               throw new java.util.ConcurrentModificationException(
                 "conflicting commit: a schema change raced this one " +
                   "on a column-mapped table — re-read and retry")
-            val merged = StructType(headSchema.fields ++ ours.fields
+            Some(StructType(headSchema.fields ++ ours.fields
               .filterNot(f => headSchema.fieldNames.contains(f.name))
-              .map(_.copy(nullable = true)))
-            Some(merged.json)
+              .map(_.copy(nullable = true))))
           }
-        case _ => schemaJson
+        case _ => schema
       }
       // idempotent-txn dedup re-checked under the SAME head the
       // commit will land on: a replayed batch that lost the race to
@@ -3377,43 +3036,39 @@ final class LogTable(val path: String,
       // base only serves positions the column left null.
       val headProps = head.map(v => snapshotAt(v).properties)
         .getOrElse(Map.empty[String, String])
-      val baseProps = propertiesJson.getOrElse(headProps)
+      val baseProps = props.getOrElse(headProps)
       val tracked = baseProps.get(LogTable.PropRowTracking)
         .contains("true")
-      val (effAdds, effPropsJson0) =
-        if (!tracked || adds.forall(_.baseRowId.isDefined))
-          (adds, propertiesJson)
-        else {
-          var hw = baseProps.get(LogTable.PropRowIdHighWater)
-            .map(_.toLong).getOrElse(0L)
-          val assigned = adds.map { a =>
-            if (a.baseRowId.isDefined) a
-            else { val b = hw; hw += a.rows; a.copy(baseRowId = Some(b)) }
-          }
-          (assigned,
-            Some(baseProps + (LogTable.PropRowIdHighWater -> hw.toString)))
-        }
+      val headHw = baseProps.get(LogTable.PropRowIdHighWater)
+        .map(_.toLong).getOrElse(0L)
+      val assign = tracked && adds.exists(_.baseRowId.isEmpty)
+      var hw = headHw
+      val numbered = actions.map {
+        case Add(a) if assign && a.baseRowId.isEmpty =>
+          val b = hw; hw += a.rows; Add(a.copy(baseRowId = Some(b)))
+        case other => other
+      }
+      val props0 =
+        if (assign) Some(baseProps + (LogTable.PropRowIdHighWater -> hw.toString))
+        else props
       // a BY-REFERENCE add set on a row-tracking table declared the
       // high-water its contiguous baseRowId ranges were assigned
       // from — the identity-allocation rule: a racing advance means
       // the sidecar's ids overlap, so surface the conflict (the
       // register loop reassigns and retries); on success the SAME
       // commit advances the mark by the set's total rows.
-      val effPropsJson: Option[Map[String, String]] =
-        addsRef.flatMap(_.rowIdBasis) match {
-          case Some(b) if tracked =>
-            val headHw = baseProps.get(LogTable.PropRowIdHighWater)
-              .map(_.toLong).getOrElse(0L)
+      val effProps: Option[Map[String, String]] =
+        addsRef.flatMap(r => r.rowIdBasis.map(_ -> r.rows)) match {
+          case Some((b, rows)) if tracked =>
             if (headHw != b)
               throw new java.util.ConcurrentModificationException(
                 s"conflicting commit: the row-id high-water moved " +
                   s"from $b to $headHw while this by-reference " +
                   "registration was being written — its assigned " +
                   "ranges overlap; reassign and retry")
-            Some(effPropsJson0.getOrElse(baseProps) +
-              (LogTable.PropRowIdHighWater ->
-                (b + addsRef.get.rows).toString))
-          case _ => effPropsJson0
+            Some(props0.getOrElse(baseProps) +
+              (LogTable.PropRowIdHighWater -> (b + rows).toString))
+          case _ => props0
         }
       // WRITER protocol gate + auto-upgrade (Delta's PROTOCOL.md):
       // refuse to commit to a table demanding writer features this
@@ -3438,37 +3093,37 @@ final class LogTable(val path: String,
                 s"${LogTable.WriterVersion})") +
               " — the table stays readable; refusing to write")
       }
-      val activated: Set[String] = Seq(
-        (effAdds.exists(_.dv.isDefined) ||
-          addsRef.exists(_.anyDv)) -> "deletionVectors",
+      val activated: Set[String] = numbered.flatMap {
+        case Add(a) if a.dv.isDefined => Seq("deletionVectors")
         // a by-reference add set is a READER-relevant feature: an
         // older reader ignoring the action would serve the table
         // WITHOUT the referenced files — a silent half-read
-        addsRef.isDefined -> "addsRef",
-        schemaJson.exists(_.contains(LogTable.FieldIdKey)) ->
-          "columnMapping",
-        effPropsJson.getOrElse(Map.empty)
-          .get(LogTable.PropRowTracking).contains("true") ->
-          "rowTracking",
-        generatedJson.exists(_.nonEmpty) -> "generatedColumns",
-        identityJson.exists(_.nonEmpty) -> "identityColumns",
-        constraintsJson.exists(_.nonEmpty) -> "checkConstraints",
-        defaultsJson.exists(_.nonEmpty) -> "columnDefaults",
-        transformsJson.exists(_.nonEmpty) -> "hiddenPartitioning"
-      ).collect { case (true, f) => f }.toSet
-      val effProto: Option[Protocol] = protocolJson.orElse {
-        val base = curProto.getOrElse(Protocol(LogTable.ReaderVersion,
-          LogTable.WriterVersion, Set.empty, Set.empty))
-        // reader/writer split per Delta's feature model: only
-        // features a reader must understand to serve correct rows
-        // gate reads; writer-only features (constraints, defaults,
-        // generated/identity columns) gate commits alone
-        val up = base.copy(
-          readerFeatures = base.readerFeatures ++
-            (activated & LogTable.ReaderRelevantFeatures),
-          writerFeatures = base.writerFeatures ++ activated)
-        if (curProto.isEmpty || up != base) Some(up) else None
-      }
+        case AddByRef(r) =>
+          "addsRef" +: (if (r.anyDv) Seq("deletionVectors") else Nil)
+        case SetSchema(s) if s.json.contains(LogTable.FieldIdKey) =>
+          Seq("columnMapping")
+        case SetGenerated(m) if m.nonEmpty => Seq("generatedColumns")
+        case SetIdentity(m) if m.nonEmpty => Seq("identityColumns")
+        case SetConstraints(m) if m.nonEmpty => Seq("checkConstraints")
+        case SetDefaults(m) if m.nonEmpty => Seq("columnDefaults")
+        case SetTransforms(m) if m.nonEmpty => Seq("hiddenPartitioning")
+        case _ => Nil
+      }.toSet ++ Option.when(effProps.exists(
+        _.get(LogTable.PropRowTracking).contains("true")))("rowTracking")
+      val effProto: Option[Protocol] =
+        actions.collectFirst { case SetProtocol(p) => p }.orElse {
+          val base = curProto.getOrElse(Protocol(LogTable.ReaderVersion,
+            LogTable.WriterVersion, Set.empty, Set.empty))
+          // reader/writer split per Delta's feature model: only
+          // features a reader must understand to serve correct rows
+          // gate reads; writer-only features (constraints, defaults,
+          // generated/identity columns) gate commits alone
+          val up = base.copy(
+            readerFeatures = base.readerFeatures ++
+              (activated & LogTable.ReaderRelevantFeatures),
+            writerFeatures = base.writerFeatures ++ activated)
+          if (curProto.isEmpty || up != base) Some(up) else None
+        }
       val next = head.getOrElse(-1L) + 1L
       // IN-COMMIT monotonic timestamps (Delta's inCommitTimestamps):
       // a commit's recorded instant is never behind its predecessor's,
@@ -3479,63 +3134,20 @@ final class LogTable(val path: String,
       // order, by construction).
       val commitTs = math.max(clock(),
         head.map(commitTime(_) + 1L).getOrElse(Long.MinValue))
-      val lines = Seq(JsonMethods.compact(JsonMethods.render(JObject(List(
-        "commit" -> JObject(List("ts" -> JLong(commitTs),
-          "op" -> JString(op)) ++ cdfDir.map("cdf" -> JString(_)) ++
-          txn.toList.flatMap { case (a, b) =>
-            List("txnApp" -> JString(a), "txnBatch" -> JLong(b)) })))))) ++
-        effectiveSchemaJson.map(s => JsonMethods.compact(JsonMethods.render(
-          JObject(List("schema" -> JString(s)))))) ++
-        partitionJson.map(cols => JsonMethods.compact(JsonMethods.render(
-          JObject(List("partition" -> JArray(
-            cols.toList.map(JString(_)))))))) ++
-        bloomJson.map(cols => JsonMethods.compact(JsonMethods.render(
-          JObject(List("bloom" -> JArray(
-            cols.toList.map(JString(_)))))))) ++
-        constraintsJson.map(cs => JsonMethods.compact(JsonMethods.render(
-          JObject(List("constraints" -> JObject(
-            cs.toList.map { case (k, v) => k -> JString(v) })))))) ++
-        generatedJson.map(gs => JsonMethods.compact(JsonMethods.render(
-          JObject(List("generated" -> JObject(
-            gs.toList.map { case (k, v) => k -> JString(v) })))))) ++
-        retiredJson.map(rs => JsonMethods.compact(JsonMethods.render(
-          JObject(List("retired" -> JArray(
-            rs.toList.sorted.map(JString(_)))))))) ++
-        tzJson.map(z => JsonMethods.compact(JsonMethods.render(
-          JObject(List("tz" -> JString(z)))))) ++
-        identityJson.map(m => JsonMethods.compact(JsonMethods.render(
-          JObject(List("identity" -> renderIdentity(m)))))) ++
-        defaultsJson.map(ds => JsonMethods.compact(JsonMethods.render(
-          JObject(List("defaults" -> JObject(
-            ds.toList.map { case (k, v) => k -> JString(v) })))))) ++
-        effPropsJson.map(ps => JsonMethods.compact(JsonMethods.render(
-          JObject(List("properties" -> JObject(
-            ps.toList.map { case (k, v) => k -> JString(v) })))))) ++
-        transformsJson.map(ts => JsonMethods.compact(JsonMethods.render(
-          JObject(List("transforms" -> JObject(
-            ts.toList.map { case (k, v) => k -> JString(v) })))))) ++
-        refsJson.map(rs => JsonMethods.compact(JsonMethods.render(
-          JObject(List("refs" -> JObject(
-            rs.toList.map { case (k, v) => k -> JString(v) })))))) ++
-        effProto.toList.map(pr => JsonMethods.compact(JsonMethods.render(
-          JObject(List("protocol" -> renderProtocol(pr)))))) ++
-        removePaths.map(p => JsonMethods.compact(JsonMethods.render(
-          JObject(List("remove" -> JObject(List("path" -> JString(p)))))))) ++
-        // the by-reference line folds BEFORE inline adds: a same-
-        // commit inline re-add of a sidecar path wins (line order is
-        // fold order in every replay)
-        addsRef.toList.map(r => JsonMethods.compact(JsonMethods.render(
-          JObject(List("addsRef" -> renderAddsRef(r)))))) ++
-        effAdds.map(a => JsonMethods.compact(JsonMethods.render(
-          JObject(List("add" -> renderAdd(a))))))
+      val attempt = numbered.flatMap {
+        case c: CommitInfo => Seq(c.copy(ts = commitTs))
+        case _: SetSchema  => effSchema.map(SetSchema).toSeq
+        case _: SetProperties | _: SetProtocol => Nil
+        case a => Seq(a)
+      } ++ effProps.map(SetProperties) ++ effProto.map(SetProtocol)
       val tmp = new File(logDir, s".tmp-${UUID.randomUUID()}")
-      Files.writeString(tmp.toPath, lines.mkString("\n"))
+      Files.writeString(tmp.toPath, LogCodec.encodeCommit(attempt))
       // create-if-absent via the coordinator: exactly one writer
       // wins version `next`. NOT a rename — rename(2) REPLACES an
       // existing target on POSIX, which would silently overwrite a
       // racing writer's committed version.
       if (coordinator.claim(tmp, logFile(next))) {
-        maybeCheckpoint(next, removePaths.size + effAdds.size +
+        maybeCheckpoint(next, removePaths.size + adds.size +
           math.min(addsRef.map(_.count).getOrElse(0L),
             Int.MaxValue.toLong).toInt)
         return next
@@ -3567,13 +3179,6 @@ final class LogTable(val path: String,
     snap.properties.get("graft.checkpoint.parquetThreshold")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(10000)
 
-  private def encodeCkptAdd(i: Long, a: AddFile): CkptAdd =
-    CkptAdd(i, a.path, a.rows, a.bytes,
-      JsonMethods.compact(JsonMethods.render(renderStats(a.stats))),
-      a.partitionValues, a.dv.map(_.path), a.dv.map(_.rows), a.baseRowId)
-
-  private def decodeCkptAdd(c: CkptAdd): AddFile = LogTable.decodeCkptAdd(c)
-
   /** Ship the snapshot's file-state as a multi-part parquet
     * directory via a Spark job — one [[CkptAdd]] row per live file,
     * ~100k rows per part. The job distributes the render; the
@@ -3588,7 +3193,7 @@ final class LogTable(val path: String,
   private def writeAddsParquet(spark: SparkSession, v: Long,
                                adds: Seq[AddFile]): String = {
     val rows = adds.iterator.zipWithIndex
-      .map { case (a, i) => encodeCkptAdd(i.toLong, a) }.toSeq
+      .map { case (a, i) => LogCodec.encodeCkptAdd(i.toLong, a) }.toSeq
     val parts = math.max(1, (rows.size / 100000.0).ceil.toInt)
     val tmp = new File(logDir, s".tmp-ckptpq-${UUID.randomUUID()}")
     val target = ckptParquetDir(v,
@@ -3636,7 +3241,7 @@ final class LogTable(val path: String,
     val tmp = new File(logDir, s".tmp-ckptadds-${UUID.randomUUID()}")
     val w = Files.newBufferedWriter(tmp.toPath)
     try adds.foreach { a =>
-      w.write(JsonMethods.compact(JsonMethods.render(renderAdd(a))))
+      w.write(LogCodec.encodeAddFile(a))
       w.write("\n")
     } finally w.close()
     Files.move(tmp.toPath, ckptAddsFile(v).toPath,
@@ -3646,11 +3251,8 @@ final class LogTable(val path: String,
 
   /** Resolve a parquet checkpoint's sidecar directory from its
     * header ("addsPath"; legacy headers used a fixed name). */
-  private def ckptParquetOf(state: JValue, v: Long): File =
-    (state \ "addsPath") match {
-      case JString(p) => new File(logDir, p)
-      case _          => new File(logDir, f"$v%020d.ckpt.parquet")
-    }
+  private def ckptParquetOf(h: CheckpointHeader, v: Long): File =
+    new File(logDir, h.addsPath.getOrElse(f"$v%020d.ckpt.parquet"))
 
   /** Read a parquet checkpoint's file-state back: a distributed
     * parquet scan when a session is live; WITHOUT one (a bare
@@ -3667,10 +3269,10 @@ final class LogTable(val path: String,
       case Some(spark) =>
         spark.read.parquet(dir.getPath)
           .as[CkptAdd](org.apache.spark.sql.Encoders.product[CkptAdd])
-          .collect().sortBy(_.idx).iterator.map(decodeCkptAdd).toSeq
+          .collect().sortBy(_.idx).iterator.map(LogCodec.decodeCkptAdd).toSeq
       case None =>
         LogTable.readAddsParquetLocal(dir).iterator
-          .map(decodeCkptAdd).toSeq
+          .map(LogCodec.decodeCkptAdd).toSeq
     }
   }
 
@@ -3710,30 +3312,8 @@ final class LogTable(val path: String,
             case None     => writeAddsParquet(session.get, v, snap.adds)
           })
           else { writeAddsJsonl(v, snap.adds); None }
-        val state = JObject(List(
-        "schema" -> JsonMethods.parse(snap.schema.json),
-        "partition" -> JArray(snap.partitionCols.toList.map(JString(_))),
-        "bloom" -> JArray(snap.bloomCols.toList.map(JString(_))),
-        "constraints" -> JObject(
-          snap.constraints.toList.map { case (k, v) => k -> JString(v) }),
-        "generated" -> JObject(
-          snap.generated.toList.map { case (k, v) => k -> JString(v) }),
-        "retired" -> JArray(snap.retiredNames.toList.sorted.map(JString(_))),
-        "tz" -> snap.tz.map(JString(_)).getOrElse(JNull),
-        "identity" -> renderIdentity(snap.identity),
-        "defaults" -> JObject(
-          snap.defaults.toList.map { case (k, v) => k -> JString(v) }),
-        "properties" -> JObject(
-          snap.properties.toList.map { case (k, v) => k -> JString(v) }),
-        "transforms" -> JObject(
-          snap.transforms.toList.map { case (k, v) => k -> JString(v) }),
-          "refs" -> JObject(
-            snap.refs.toList.map { case (k, v) => k -> JString(v) }),
-          "addsFormat" -> JString(fmt)) ++
-          snap.protocol.toList.map(pr => "protocol" -> renderProtocol(pr)) ++
-          addsPath.toList.map(p => "addsPath" -> JString(p)))
-        Files.writeString(tmp.toPath,
-          JsonMethods.compact(JsonMethods.render(state)))
+        Files.writeString(tmp.toPath, LogCodec.encodeHeader(
+          CheckpointHeader(snap.meta, fmt, addsPath)))
         Files.move(tmp.toPath, ckptFile(v).toPath,
           StandardCopyOption.ATOMIC_MOVE)
         // advance the advisory `_last_checkpoint` pointer (never
@@ -3743,8 +3323,7 @@ final class LogTable(val path: String,
         // next reader lists the directory once.
         if (!lastCheckpointVersion.exists(_ >= v)) {
           val ptmp = new File(logDir, s".tmp-ptr-${UUID.randomUUID()}")
-          Files.writeString(ptmp.toPath, JsonMethods.compact(
-            JsonMethods.render(JObject(List("version" -> JLong(v))))))
+          Files.writeString(ptmp.toPath, LogCodec.encodeCheckpointPointer(v))
           try Files.move(ptmp.toPath, lastCkptFile.toPath,
             StandardCopyOption.REPLACE_EXISTING,
             StandardCopyOption.ATOMIC_MOVE)
@@ -3993,16 +3572,14 @@ final class LogTable(val path: String,
         tzSensitive(df.sparkSession, e, tableSchema) })
         Some(df.sparkSession.sessionState.conf.sessionLocalTimeZone)
       else None
-    finalizeStaged(staged, stats, tableSchema,
-      removePaths = Seq.empty, op = "append", readVersion = None,
-      schemaJson = if (writesSchema) Some(tableSchema.json) else None,
-      cdfDir = None,
+    finalizeStaged(staged, stats, tableSchema, info("append") +:
+      (Option.when(writesSchema)(SetSchema(tableSchema)) ++
+        tzPin.map(SetTz) ++ identityOf(snapOpt)).toSeq,
+      readVersion = None,
       // the basis the widened schema was derived from: a schema
       // action racing past it triggers a commit-time re-merge
       schemaBasis = if (writesSchema) Some(basisVersion.getOrElse(-1L))
       else None,
-      tzJson = tzPin,
-      identityUpdate = snapOpt.map(_.identity).getOrElse(Map.empty),
       identityBasis = if (idBasis.isEmpty) None else Some(idBasis))
   }
 
@@ -4043,9 +3620,9 @@ final class LogTable(val path: String,
     val staged = new File(newStagingDir())
     val stats = writeStaged(df, staged.toString, outSchema,
       replacingSchema = replacing)
-    finalizeStaged(staged, stats, outSchema, prior,
-      op = "overwrite", readVersion = currentVersion,
-      schemaJson = Some(outSchema.json), cdfDir = None, txn = txn)
+    finalizeStaged(staged, stats, outSchema, Seq(info("overwrite", txn = txn),
+      SetSchema(outSchema)) ++ prior.map(Remove),
+      readVersion = currentVersion)
   }
 
   /** Newest batch id committed under `app`'s idempotent-txn stream
@@ -4084,11 +3661,11 @@ final class LogTable(val path: String,
     val stats = writeStaged(conform(df, tableSchema), staged.toString,
       tableSchema)
     val v = finalizeStaged(staged, stats, tableSchema,
-      removePaths = Seq.empty, op = "append", readVersion = None,
-      schemaJson = if (currentVersion.isEmpty) Some(tableSchema.json)
-      else None, cdfDir = None, txn = Some((app, batchId)),
+      info("append", txn = Some((app, batchId))) +:
+        (Option.when(currentVersion.isEmpty)(SetSchema(tableSchema)) ++
+          identityOf(snapOpt)).toSeq,
+      readVersion = None,
       schemaBasis = if (currentVersion.isEmpty) Some(-1L) else None,
-      identityUpdate = snapOpt.map(_.identity).getOrElse(Map.empty),
       identityBasis = if (idBasis.isEmpty) None else Some(idBasis))
     if (v < 0) None
     else { maybeAutoCompact(df0.sparkSession); Some(v) }
@@ -4134,9 +3711,8 @@ final class LogTable(val path: String,
   private[sources] def appendStaged(spark: SparkSession, staged: String,
                                     stats: StagedStats): Long = {
     val (dir, st) = restageForLayout(spark, staged, stats)
-    val v = finalizeStaged(new File(dir), st, schema,
-      removePaths = Seq.empty, op = "append", readVersion = None,
-      schemaJson = None, cdfDir = None)
+    val v = finalizeStaged(new File(dir), st, schema, Seq(info("append")),
+      readVersion = None)
     maybeAutoCompact(spark)
     v
   }
@@ -4150,8 +3726,7 @@ final class LogTable(val path: String,
       .getOrElse(Seq.empty)
     val (dir, st) = restageForLayout(spark, staged, stats)
     finalizeStaged(new File(dir), st, schema,
-      prior, op = "overwrite", readVersion = currentVersion,
-      schemaJson = None, cdfDir = None)
+      info("overwrite") +: prior.map(Remove), readVersion = currentVersion)
   }
 
   /** Commit a staging directory the DSv2 STREAMING sink populated,
@@ -4168,8 +3743,7 @@ final class LogTable(val path: String,
     }
     val (dir, st) = restageForLayout(spark, staged, stats)
     val v = finalizeStaged(new File(dir), st, schema,
-      removePaths = Seq.empty, op = "append", readVersion = None,
-      schemaJson = None, cdfDir = None, txn = Some((app, batchId)))
+      Seq(info("append", txn = Some((app, batchId)))), readVersion = None)
     if (v < 0) None
     else { maybeAutoCompact(spark); Some(v) }
   }
@@ -4195,10 +3769,10 @@ final class LogTable(val path: String,
                                            identityBasis:
                                              Option[Map[String,
                                                Option[Long]]] = None): Long =
-    finalizeStaged(new File(staged), stats, schema,
-      removePaths, op, readVersion, schemaJson = None, cdfDir = cdfDir,
-      txn = txn, identityUpdate = identityUpdate,
-      identityBasis = identityBasis)
+    finalizeStaged(new File(staged), stats, schema, info(op, cdfDir, txn) +:
+      (removePaths.map(Remove) ++
+        Option.when(identityUpdate.nonEmpty)(SetIdentity(identityUpdate))),
+      readVersion, identityBasis = identityBasis)
 
   /** Metadata-only commit that ONLY advances an idempotent-txn
     * pointer (op `refresh`, no adds/removes, dataChange = false —
@@ -4206,8 +3780,7 @@ final class LogTable(val path: String,
     * through base version N" when the refresh itself had no net
     * change to merge. */
   private[sources] def commitTxnMarker(app: String, batch: Long): Long =
-    commitRetry(currentVersion, Seq.empty, Seq.empty, "refresh",
-      schemaJson = None, cdfDir = None, txn = Some((app, batch)))
+    commitRetry(currentVersion, Seq(info("refresh", txn = Some((app, batch)))))
 
   // ---------------------------------------------------------------
   // row-level ops: stats-pruned delete / update
@@ -4501,15 +4074,14 @@ final class LogTable(val path: String,
       .map(a => a.copy(dv = Some(Dv(dvRel, cardOf(a)))))
 
     val affected = perFile.values.sum
+    val commit = info(op, Some(cdfRel)) +:
+      (touched.map(a => Remove(a.path)) ++ reAdds.map(Add))
     val v = post match {
       case None =>
-        commitRetry(Some(readVersion), touched.map(_.path), reAdds, op,
-          schemaJson = None, cdfDir = Some(cdfRel))
+        commitRetry(Some(readVersion), commit)
       case Some((staged, stats)) =>
-        finalizeStaged(new File(staged), stats, snap.schema,
-          removePaths = touched.map(_.path), op = op,
-          readVersion = Some(readVersion), schemaJson = None,
-          cdfDir = Some(cdfRel), extraAdds = reAdds)
+        finalizeStaged(new File(staged), stats, snap.schema, commit,
+          readVersion = Some(readVersion))
     }
     RowOpResult(v, affected, skippedCount, candidates.size, touched.size)
   }
@@ -4529,9 +4101,9 @@ final class LogTable(val path: String,
     // rewrite source carries each surviving row's effective id
     val stats = writeStaged(rewriteSource(spark, snap, dvd),
       staged.toString, snap.schema)
-    finalizeStaged(staged, stats, snap.schema, dvd.map(_.path),
-      op = "optimize", readVersion = Some(readVersion), schemaJson = None,
-      cdfDir = None)
+    finalizeStaged(staged, stats, snap.schema,
+      info("optimize") +: dvd.map(a => Remove(a.path)),
+      readVersion = Some(readVersion))
   }
 
   /** Derive file-skipping conjuncts on GENERATED columns from user
@@ -4800,9 +4372,8 @@ final class LogTable(val path: String,
     }
 
     val v = finalizeStaged(staged, stats, snap.schema,
-      removePaths = touched.map(_.path), op = op,
-      readVersion = Some(readVersion), schemaJson = None,
-      cdfDir = Some(cdfRel))
+      info(op, Some(cdfRel)) +: touched.map(a => Remove(a.path)),
+      readVersion = Some(readVersion))
     val rowsBefore = touched.map(_.logicalRows).sum
     // the rewrite's survivors are exactly OUR commit's added files —
     // O(commit) from its own log entry, no manifest materialization
@@ -4824,12 +4395,10 @@ final class LogTable(val path: String,
     * as a DATASET via [[addedFilesDs]] (mirror export) and
     * budget/stream admission uses [[commitAdmission]]'s O(1) facts. */
   private[sources] def addedFiles(v: Long): Seq[AddFile] =
-    readActions(logFile(v)).flatMap { j =>
-      if ((j \ "add") != JNothing) Seq(parseAdd(j \ "add"))
-      else if ((j \ "addsRef") != JNothing)
-        readAddsParquet(new File(logDir,
-          parseAddsRef(j \ "addsRef").path))
-      else Seq.empty
+    readCommit(v).flatMap {
+      case Add(a)      => Seq(a)
+      case AddByRef(r) => readAddsParquet(new File(logDir, r.path))
+      case _           => Seq.empty
     }
 
   /** One commit's added files SPLIT for scale consumers: the inline
@@ -4840,13 +4409,8 @@ final class LogTable(val path: String,
     * them through the driver. */
   private[sources] def addedFilesDs(spark: SparkSession, v: Long)
       : (Seq[AddFile], Option[org.apache.spark.sql.Dataset[CkptAdd]]) = {
-    val actions = readActions(logFile(v))
-    val inline = actions.collect {
-      case j if (j \ "add") != JNothing => parseAdd(j \ "add") }
-    val ref = actions.collectFirst {
-      case j if (j \ "addsRef") != JNothing =>
-        parseAddsRef(j \ "addsRef") }
-    (inline, ref.map { r =>
+    val actions = readCommit(v)
+    (addsOf(actions), addsRefOf(actions).map { r =>
       spark.read.parquet(new File(logDir, r.path).getPath)
         .as[CkptAdd](org.apache.spark.sql.Encoders.product[CkptAdd])
     })
@@ -4856,16 +4420,15 @@ final class LogTable(val path: String,
     * remove half of the per-commit delta ([[DeltaExport.exportTail]]
     * renders these as Delta remove actions). */
   private[sources] def removedPaths(v: Long): Seq[String] =
-    readActions(logFile(v)).collect {
-      case j if (j \ "remove") != JNothing =>
-        (j \ "remove" \ "path").asInstanceOf[JString].s }
+    removesOf(readCommit(v))
 
   /** Did this commit carry a schema or partition-layout action? A
     * mirrored Delta commit must then re-emit metaData. */
   private[sources] def commitChangedMetadata(v: Long): Boolean =
-    readActions(logFile(v)).exists(j =>
-      (j \ "schema") != JNothing || (j \ "partition") != JNothing ||
-        (j \ "constraints") != JNothing)
+    readCommit(v).exists {
+      case _: SetSchema | _: SetPartition | _: SetConstraints => true
+      case _ => false
+    }
 
   /** Read ONE commit's added files under `readSchema` — deletion
     * vectors subtracted and data roots grouped, so a clone's seed
@@ -5030,7 +4593,7 @@ final class LogTable(val path: String,
           .select(t.toDF().columns.map(col).toIndexedSeq: _*)
           .as[CkptAdd](enc)
           .orderBy(col("idx")).collect()
-          .map(LogTable.decodeCkptAdd).toSeq
+          .map(LogCodec.decodeCkptAdd).toSeq
         val removesDiff = c.toDF().select(col("path"))
           .join(t.toDF().select(col("path").as("__tp")),
             col("path") === col("__tp"), "left_anti")
@@ -5059,11 +4622,10 @@ final class LogTable(val path: String,
     // frame has). Governance metadata (constraints, properties,
     // identity marks) deliberately stays CURRENT — a rollback of
     // data must not silently rewind policy.
-    commitRetry(Some(cur), removes, adds, "restore",
-      schemaJson = Some(target.schema.json), cdfDir = None,
-      partitionJson = Some(target.partitionCols),
-      generatedJson = Some(target.generated),
-      transformsJson = Some(target.transforms))
+    commitRetry(Some(cur), Seq(info("restore"), SetSchema(target.schema),
+      SetPartition(target.partitionCols), SetGenerated(target.generated),
+      SetTransforms(target.transforms)) ++ removes.map(Remove) ++
+      adds.map(Add))
   }
 
   // ---------------------------------------------------------------
@@ -5118,9 +4680,8 @@ final class LogTable(val path: String,
       require(!snap.refs.contains(name), s"ref '$name' already exists")
       val v = version.getOrElse(basis.get)
       require(versions.contains(v), s"no committed version $v to tag")
-      commitRetry(basis, Seq.empty, Seq.empty, "ref",
-        schemaJson = None, cdfDir = None,
-        refsJson = Some(snap.refs + (name -> s"$kind:$v")),
+      commitRetry(basis,
+        Seq(info("ref"), SetRefs(snap.refs + (name -> s"$kind:$v"))),
         requireHead = Some(basis))
     }
 
@@ -5134,9 +4695,7 @@ final class LogTable(val path: String,
         s"no log table at $path")
       val snap = snapshotAt(basis.get)
       require(snap.refs.contains(name), s"no ref '$name' to drop")
-      commitRetry(basis, Seq.empty, Seq.empty, "ref",
-        schemaJson = None, cdfDir = None,
-        refsJson = Some(snap.refs - name),
+      commitRetry(basis, Seq(info("ref"), SetRefs(snap.refs - name)),
         requireHead = Some(basis))
     }
 
@@ -5248,6 +4807,14 @@ final class LogTable(val path: String,
       s"no ref '$name' on the log table at $path")
   }
 
+  /** The policy metadata a branch merge carries over: each of the
+    * branch's constraints, defaults, bloom columns and identity specs
+    * that differs from main's. */
+  private def changedPolicy(cur: TableMeta, target: TableMeta): Seq[Meta] =
+    Seq(SetConstraints(target.constraints), SetDefaults(target.defaults),
+      SetBloom(target.bloomCols), SetIdentity(target.identity))
+      .filter(a => TableMeta.fold(cur, a) != cur)
+
   /** FAST-FORWARD merge: make main's state the branch's current
     * state, in ONE commit (file adds/removes by reference + the
     * branch's schema/layout metadata — zero data movement; branch-
@@ -5293,24 +4860,10 @@ final class LogTable(val path: String,
         val removes = cur.adds.map(_.path)
           .filterNot(p => tAdds.exists(_.path == p))
         val adds = tAdds.filterNot(a => cur.adds.contains(a))
-        commitRetry(basis, removes, adds, "merge",
-          schemaJson = Some(target.schema.json), cdfDir = None,
-          partitionJson = Some(target.partitionCols),
-          generatedJson = Some(target.generated),
-          transformsJson = Some(target.transforms),
-          constraintsJson =
-            if (target.constraints == cur.constraints) None
-            else Some(target.constraints),
-          defaultsJson =
-            if (target.defaults == cur.defaults) None
-            else Some(target.defaults),
-          bloomJson =
-            if (target.bloomCols == cur.bloomCols) None
-            else Some(target.bloomCols),
-          identityJson =
-            if (target.identity == cur.identity) None
-            else Some(target.identity),
-          refsJson = Some(cur.refs - name),
+        commitRetry(basis, Seq(info("merge"), SetSchema(target.schema),
+          SetPartition(target.partitionCols), SetGenerated(target.generated),
+          SetTransforms(target.transforms), SetRefs(cur.refs - name)) ++
+          changedPolicy(cur.meta, target.meta) ++ removes.map(Remove) ++ adds.map(Add),
           requireHead = Some(basis))
       } else {
         // CONTENT-AWARE merge (the Nessie/Iceberg commit rule): main
@@ -5414,27 +4967,16 @@ final class LogTable(val path: String,
             }
             if (merged == cur.identity) None else Some(merged)
           }
-        commitRetry(basis, bRemoves, bAdds, "merge",
-          schemaJson =
-            if (branchMeta) Some(target.schema.json) else None,
-          cdfDir = None,
-          partitionJson =
-            if (branchMeta) Some(target.partitionCols) else None,
-          generatedJson =
-            if (branchMeta) Some(target.generated) else None,
-          transformsJson =
-            if (branchMeta) Some(target.transforms) else None,
-          constraintsJson =
-            if (branchMeta && target.constraints != cur.constraints)
-              Some(target.constraints) else None,
-          defaultsJson =
-            if (branchMeta && target.defaults != cur.defaults)
-              Some(target.defaults) else None,
-          bloomJson =
-            if (branchMeta && target.bloomCols != cur.bloomCols)
-              Some(target.bloomCols) else None,
-          identityJson = idMerged,
-          refsJson = Some(cur.refs - name),
+        val meta =
+          if (!branchMeta) Nil
+          else Seq(SetSchema(target.schema),
+            SetPartition(target.partitionCols),
+            SetGenerated(target.generated),
+            SetTransforms(target.transforms)) ++
+            changedPolicy(cur.meta, target.meta).filterNot(_.isInstanceOf[SetIdentity])
+        commitRetry(basis, Seq(info("merge"), SetRefs(cur.refs - name)) ++
+          meta ++ idMerged.map(SetIdentity) ++ bRemoves.map(Remove) ++
+          bAdds.map(Add),
           requireHead = Some(basis))
       }
     }
@@ -5445,14 +4987,11 @@ final class LogTable(val path: String,
     * local metadata read, O(#commits). */
   def history(spark: SparkSession): DataFrame = {
     val rows = versions.map { v =>
-      val actions = readActions(logFile(v))
-      val ref = actions.collectFirst {
-        case j if (j \ "addsRef") != JNothing =>
-          parseAddsRef(j \ "addsRef") }
-      (v, commitTime(v), commitOp(v),
-        actions.count(j => (j \ "add") != JNothing).toLong +
-          ref.map(_.count).getOrElse(0L),
-        actions.count(j => (j \ "remove") != JNothing).toLong)
+      val actions = readCommit(v)
+      val info = infoOf(v, actions)
+      (v, info.ts, info.op, addsOf(actions).size.toLong +
+        addsRefOf(actions).map(_.count).getOrElse(0L),
+        removesOf(actions).size.toLong)
     }
     spark.createDataFrame(rows)
       .toDF("version", "commit_ts", "op", "n_added", "n_removed")
@@ -5469,16 +5008,13 @@ final class LogTable(val path: String,
     val floor = vs.headOption.getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
     val rows = vs.map { v =>
-      val actions = readActions(logFile(v))
-      val adds = actions.collect {
-        case j if (j \ "add") != JNothing => parseAdd(j \ "add") }
+      val actions = readCommit(v)
+      val adds = addsOf(actions)
       // a by-reference commit's totals ride the action — the
       // sidecar stays closed for this O(metadata) view
-      val ref = actions.collectFirst {
-        case j if (j \ "addsRef") != JNothing =>
-          parseAddsRef(j \ "addsRef") }
-      val removed = actions.count(j => (j \ "remove") != JNothing)
-      val meta = commitMeta(v)
+      val ref = addsRefOf(actions)
+      val removed = removesOf(actions).size
+      val meta = infoOf(v, actions)
       val summary = Map(
         "n_added" -> (adds.size +
           ref.map(_.count).getOrElse(0L)).toString,
@@ -5502,7 +5038,7 @@ final class LogTable(val path: String,
 
   /** Iceberg's `manifests`-shaped view of the CHECKPOINT chain: one
     * row per retained checkpoint — version, file-state format
-    * (parquet / jsonl / embedded-legacy), sidecar path, part-file
+    * (parquet / jsonl), sidecar path, part-file
     * count and total sidecar bytes. Metadata-only driver listing
     * (O(#checkpoints), bounded by expiry); the audit surface for
     * "which anchors does replay resolve from, and how big are
@@ -5511,19 +5047,17 @@ final class LogTable(val path: String,
     val rows = listLogDir().filter(_.getName.endsWith(".ckpt.json"))
       .sortBy(_.getName).toSeq.map { h =>
         val v = h.getName.stripSuffix(".ckpt.json").toLong
-        val state = JsonMethods.parse(Files.readString(h.toPath))
-        (state \ "addsFormat") match {
-          case JString("parquet") =>
-            val d = ckptParquetOf(state, v)
+        val header = ckptHeader(v)
+        header.addsFormat match {
+          case "parquet" =>
+            val d = ckptParquetOf(header, v)
             val parts = Option(d.listFiles()).getOrElse(Array.empty)
               .filter(_.getName.endsWith(".parquet"))
             (v, "parquet", s"_log/${d.getName}", parts.length.toLong,
               parts.map(_.length()).sum)
-          case JString("jsonl") =>
+          case _ =>
             val f = ckptAddsFile(v)
             (v, "jsonl", s"_log/${f.getName}", 1L, f.length())
-          case _ =>
-            (v, "embedded", s"_log/${h.getName}", 1L, h.length())
         }
       }
     import spark.implicits._
@@ -5558,7 +5092,7 @@ final class LogTable(val path: String,
           .map { case (c, i) => c.copy(idx = i) })(enc).toDF())
       .getOrElse(
         spark.createDataset(snapshotAt(floor).adds.zipWithIndex
-          .map { case (a, i) => encodeCkptAdd(i.toLong, a) })(enc).toDF())
+          .map { case (a, i) => LogCodec.encodeCkptAdd(i.toLong, a) })(enc).toDF())
     // the tail stacks as ordered SEGMENTS: inline add batches (small
     // driver frames) and by-reference sidecars (distributed parquet
     // scans — a CONVERT above the floor never lands on the driver),
@@ -5572,19 +5106,18 @@ final class LogTable(val path: String,
       val batch = pending.toSeq
       parts += spark.createDataset(batch.zipWithIndex
         .map { case (a, i) =>
-          encodeCkptAdd(segNo * SegSpan + i, a) })(enc).toDF()
+          LogCodec.encodeCkptAdd(segNo * SegSpan + i, a) })(enc).toDF()
       segNo += 1; pending.clear()
     }
     (floor + 1 to head).foreach { v =>
-      readActions(logFile(v)).foreach { j =>
-        if ((j \ "add") != JNothing) pending += parseAdd(j \ "add")
-        if ((j \ "addsRef") != JNothing) {
+      readCommit(v).foreach {
+        case Add(a) => pending += a
+        case AddByRef(r) =>
           flushPending()
-          val dir = new File(logDir, parseAddsRef(j \ "addsRef").path)
-          parts += spark.read.parquet(dir.getPath)
+          parts += spark.read.parquet(new File(logDir, r.path).getPath)
             .withColumn("idx", col("idx") + lit(segNo * SegSpan))
           segNo += 1
-        }
+        case _ => ()
       }
     }
     flushPending()
@@ -5648,13 +5181,10 @@ final class LogTable(val path: String,
         .withColumn("_commit_version", lit(v))
     val parts = versions.filter(v => v > fromVersion && v <= toVersion)
       .flatMap { v =>
-        val meta = commitMeta(v)
-        val actions = readActions(logFile(v))
-        val added = actions.collect {
-          case j if (j \ "add") != JNothing => parseAdd(j \ "add").path }
-        val removed = actions.collect {
-          case j if (j \ "remove") != JNothing =>
-            (j \ "remove" \ "path").asInstanceOf[JString].s }
+        val actions = readCommit(v)
+        val meta = infoOf(v, actions)
+        val added = addsOf(actions)
+        val removed = removesOf(actions)
         meta.op match {
           case "append" | "create" | "clone" =>
             // per-commit DV-aware read: a clone seed's references may
@@ -5743,9 +5273,9 @@ final class LogTable(val path: String,
       else if (groups == 1) src.coalesce(1)
       else src.repartitionByRange(groups, keys.map(col): _*)
     val stats = writeStaged(arranged, staged.toString, snap.schema)
-    finalizeStaged(staged, stats, snap.schema, small.map(_.path),
-      op = "optimize", readVersion = Some(readVersion), schemaJson = None,
-      cdfDir = None)
+    finalizeStaged(staged, stats, snap.schema,
+      info("optimize") +: small.map(a => Remove(a.path)),
+      readVersion = Some(readVersion))
   }
 
   /** Delta-style AUTO COMPACTION: when
@@ -5840,7 +5370,7 @@ final class LogTable(val path: String,
     }.getOrElse(snap.adds)
     if (scope.isEmpty) return readVersion
     clusterScope(spark, snap, readVersion, clusterBy, nFiles, scope,
-      propertiesJson = None)
+      properties = None)
   }
 
   /** Incremental (liquid-style) clustering: re-cluster ONLY the
@@ -5907,16 +5437,13 @@ final class LogTable(val path: String,
           try {
             val basis = m.dropWhile(_ != '|').drop(1).toLong
             val markerV = basis + 1
-            val isMarker = commitOp(markerV) == "optimize" &&
-              readActions(logFile(markerV)).exists(j =>
-                (j \ "properties") match {
-                  case JObject(fs) => fs.exists {
-                    case (k, JString(vv)) =>
-                      k == LogTable.PropClusterEpoch && vv == m
-                    case _ => false
-                  }
-                  case _ => false
-                })
+            val actions = readCommit(markerV)
+            val isMarker = infoOf(markerV, actions).op == "optimize" &&
+              actions.exists {
+                case SetProperties(p) =>
+                  p.get(LogTable.PropClusterEpoch).contains(m)
+                case _ => false
+              }
             if (isMarker) snapshotAt(markerV).adds.map(_.path).toSet
             else Set.empty[String] // foreign marker → full rebuild
           } catch { case NonFatal(_) => Set.empty } // expired → full
@@ -5925,7 +5452,7 @@ final class LogTable(val path: String,
     val scope = snap.adds.filterNot(a => skipped.contains(a.path))
     if (scope.isEmpty) return readVersion
     clusterScope(spark, snap, readVersion, clusterBy, nFiles, scope,
-      propertiesJson = Some(snap.properties +
+      properties = Some(snap.properties +
         (LogTable.PropClusterEpoch -> s"$colsKey|$readVersion")))
   }
 
@@ -5934,12 +5461,12 @@ final class LogTable(val path: String,
     * (single column) or on the Morton interleave of per-column
     * normalized ranks (N columns), stage, and commit the swap as ONE
     * `optimize` commit (no row-level change: streams skip it, the
-    * change feed is empty; `propertiesJson`, when set, rides the
+    * change feed is empty; `properties`, when set, rides the
     * same commit — the epoch marker is atomic with the rewrite). */
   private def clusterScope(spark: SparkSession, snap: Snapshot,
                            readVersion: Long, clusterBy: Seq[String],
                            nFiles: Int, scope: Seq[AddFile],
-                           propertiesJson: Option[Map[String, String]])
+                           properties: Option[Map[String, String]])
       : Long = {
     val df = rewriteSource(spark, snap, scope)
     val staged = new File(newStagingDir())
@@ -5977,10 +5504,10 @@ final class LogTable(val path: String,
     // row-tracking high-water bump riding a blind append) can never
     // be silently reverted by our stale map; the conflict surfaces
     // as CME and the caller re-runs the pass against the new head
-    finalizeStaged(staged, stats, snap.schema, scope.map(_.path),
-      op = "optimize", readVersion = Some(readVersion), schemaJson = None,
-      cdfDir = None, propertiesJson = propertiesJson,
-      requireHead = propertiesJson.map(_ => Some(readVersion)))
+    finalizeStaged(staged, stats, snap.schema, info("optimize") +:
+      (scope.map(a => Remove(a.path)) ++ properties.map(SetProperties)),
+      readVersion = Some(readVersion),
+      requireHead = properties.map(_ => Some(readVersion)))
   }
 
   /** Physically drop files referenced ONLY by expired versions:
@@ -6279,60 +5806,10 @@ object LogTable {
     conjuncts.exists(noMatch)
   }
 
-  /** Key of the JSON object a NaN or ±Infinity double bound renders
-    * as, e.g. `{"double": "NaN"}`. */
-  private val NonFiniteDouble = "double"
-
   /** Strings in Spark's order — UTF-8 bytes, unsigned — which is
     * not `String.compareTo`'s UTF-16 order above U+E000. */
   private[sources] def utf8Compare(a: String, b: String): Int =
     UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
-
-  /** Parse the commit log's per-column stats rendering — pure, and
-    * static so the distributed pruning walk can decode manifest rows
-    * on executors without dragging a [[LogTable]] into the closure. */
-  /** Graft's stats rendering as a STATIC — executor-side manifest
-    * builders (CONVERT's distributed foreign-checkpoint fold) render
-    * [[CkptAdd.statsJson]] without touching a table instance. */
-  private[sources] def renderStats(stats: Map[String, ColStats]): JValue =
-    JObject(stats.toList.map { case (c, st) =>
-      def side(v: Option[Any]): JValue = v match {
-        case None            => JNull
-        case Some(l: Long)   => JLong(l)
-        // JSON has no NaN/Infinity: a typed marker keeps them Double
-        case Some(d: Double) if d.isNaN || d.isInfinite =>
-          JObject(NonFiniteDouble -> JString(d.toString))
-        case Some(d: Double) => JDouble(d)
-        case Some(s: String) => JString(s)
-        case Some(other) =>
-          throw new IllegalStateException(s"bad stat value: $other")
-      }
-      c -> JObject(List("min" -> side(st.min), "max" -> side(st.max),
-        "nulls" -> JLong(st.nulls)))
-    })
-
-  private[sources] def parseStats(j: JValue): Map[String, ColStats] =
-    j match {
-      case JObject(fields) => fields.map { case (c, v) =>
-        def side(k: String): Option[Any] = (v \ k) match {
-          case JNothing | JNull => None
-          case JInt(i)          => Some(i.toLong)
-          case JLong(l)         => Some(l)
-          case JDouble(d)       => Some(d)
-          case JDecimal(d)      => Some(d.toDouble)
-          case JString(s)       => Some(s)
-          case JBool(b)         => Some(if (b) 1L else 0L)
-          case JObject(List((NonFiniteDouble, JString(d)))) =>
-            Some(d.toDouble)
-          case other => throw new IllegalStateException(s"bad stat: $other")
-        }
-        val nulls = (v \ "nulls") match {
-          case JInt(i) => i.toLong; case JLong(l) => l; case _ => 0L
-        }
-        c -> ColStats(side("min"), side("max"), nulls)
-      }.toMap
-      case _ => Map.empty
-    }
 
   /** Session-less read of a parquet checkpoint sidecar: a plain
     * local walk of the part files through parquet-hadoop's Group
@@ -6379,13 +5856,6 @@ object LogTable {
     }
     out.sortBy(_.idx).toSeq
   }
-
-  /** One parquet-checkpoint manifest row back to its [[AddFile]] —
-    * static for the same executor-side reason as [[parseStats]]. */
-  private[sources] def decodeCkptAdd(c: CkptAdd): AddFile =
-    AddFile(c.path, c.rows, c.bytes,
-      parseStats(JsonMethods.parse(c.statsJson)), c.partitionValues,
-      c.dvPath.map(p => Dv(p, c.dvRows.getOrElse(0L))), c.baseRowId)
 
   /** Derived (generated-column) conjuncts are only sound for a file
     * whose SOURCE columns are null-free there — filter per file.

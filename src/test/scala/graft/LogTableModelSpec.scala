@@ -87,6 +87,20 @@ class LogTableModelSpec extends SparkSpec {
       assert(live.collect { case (n, ("branch", _)) => n }.toSet ==
         branch.map(_._1).toSet,
         s"branch-ref drift after ${snaps.size} commits")
+      // the two replays agree: a fresh handle's checkpoint-based
+      // replay and a raw replay of every commit fold to the same
+      // metadata and the same adds in the same order (until expiry
+      // removes the commits a raw replay starts from)
+      if (t.exists && t.earliestVersion.contains(0L)) {
+        val v = t.currentVersion.get
+        val viaCkpt = new LogTable(s"$dir/t")
+        val raw = new LogTable(s"$dir/t")
+        raw.ignoreCheckpointsForTest = true
+        assert(raw.metaAt(v) == viaCkpt.metaAt(v),
+          s"metadata replays diverge at v$v")
+        assert(raw.liveAdds(Some(v)) == viaCkpt.liveAdds(Some(v)),
+          s"file-state replays diverge at v$v")
+      }
       // ROW TRACKING invariants (every few steps — an extra job):
       // live ids unique and strictly below the high-water, whatever
       // op mix ran — overwrites, restores to PRE-TRACKING versions,

@@ -8,7 +8,6 @@ import graft.SparkSpec
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.json4s.jackson.JsonMethods
 
 /** The commit's file statistics come from the write tasks
   * ([[StagedStatsTracker]]), not from reading the staged files back.
@@ -107,8 +106,7 @@ class StagedStatsSpec extends SparkSpec {
 
   /** An AddFile's stats as the log text carries them. */
   private def normAdd(a: AddFile): Map[String, Any] =
-    LogTable.parseStats(JsonMethods.parse(JsonMethods.compact(
-      LogTable.renderStats(a.stats)))).map { case (c, st) =>
+    LogCodec.decodeStats(LogCodec.encodeStats(a.stats)).map { case (c, st) =>
       def v(x: Option[Any]): Any = x match {
         case Some(d: Double) if d.isNaN => "NaN"
         case other                      => other
