@@ -35,19 +35,30 @@ object Bench {
     }
     val measured = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def timeOnce(name: String): Double = {
-      System.gc() // isolate queries from each other's garbage
+    // One timed rep at `dir`: None when the query threw. A
+    // time-to-failure is not a query time, so a failed query leaves
+    // the measured set (total, per-query map, re-check and sweep).
+    def timeAt(name: String, dir: String): Option[Double] = {
+      // isolate queries from each other's cached data and garbage
+      spark.sharedState.cacheManager.clearCache()
+      System.gc()
       val t0 = System.nanoTime()
-      try { run(SparkEntry.queries(name)(spark, sfDir)) }
-      catch { case e: Throwable => fail(name, e); -1L }
+      val ok =
+        try { run(SparkEntry.queries(name)(spark, dir)); true }
+        catch { case e: Throwable => fail(name, e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       // queries that persist() intermediates leave them in the cache
       // manager: drop them so later queries aren't memory-squeezed
       spark.sharedState.cacheManager.clearCache()
-      dt
+      if (ok) Some(dt) else None
     }
-    val firstPass = measured.map { case (name, _) =>
-      name -> median((1 to reps).map(_ => timeOnce(name)))
+    // n reps, stopping at the first failure
+    def timeReps(name: String, n: Int): Option[Seq[Double]] =
+      (1 to n).foldLeft(Option(Seq.empty[Double])) { (acc, _) =>
+        acc.flatMap(ts => timeAt(name, sfDir).map(ts :+ _))
+      }
+    val firstPass = measured.flatMap { case (name, _) =>
+      timeReps(name, reps).map(ts => name -> median(ts))
     }
     // Outlier re-check: a median-of-3 still reports a sustained
     // transient (r7 recorded asof_join at 7.78 s mid-run vs 0.74 s
@@ -58,13 +69,12 @@ object Bench {
     // better-attested (smaller) median. Costs one extra rep per slow
     // query; only ever corrects downward, so it cannot hide a real
     // regression (a real one reproduces in the re-pass too).
-    val results = firstPass.map { case (name, m) =>
-      if (m <= 2.0) name -> m
-      else {
-        val again = timeOnce(name)
-        if (again >= m / 1.5) name -> m
-        else {
-          val m2 = median(again +: (1 until reps).map(_ => timeOnce(name)))
+    val results = firstPass.flatMap { case (name, m) =>
+      if (m <= 2.0) Some(name -> m)
+      else timeAt(name, sfDir).flatMap { again =>
+        if (again >= m / 1.5) Some(name -> m)
+        else timeReps(name, reps - 1).map { more =>
+          val m2 = median(again +: more)
           System.err.println(f"[bench] re-check $name: $m%.2f -> $m2%.2f s")
           name -> math.min(m, m2)
         }
@@ -110,27 +120,18 @@ object Bench {
         System.err.println(s"[bench] up-tier synthesis failed: $e")
         None
       }
-    def timeAt(name: String, dir: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      try { run(SparkEntry.queries(name)(spark, dir)) }
-      catch { case e: Throwable => fail(name, e); -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
-    }
     val loDir = sfDir.replaceAll("sf[0-9.]+$", "sf0.01")
     val sweep: Seq[(String, Double)] = hiDir match {
       case Some(dir) =>
-        sweepNames.map { name =>
-          name -> math.log(timeAt(name, dir) / base(name)) / math.log(10.0)
+        sweepNames.flatMap { name =>
+          timeAt(name, dir).map(t =>
+            name -> math.log(t / base(name)) / math.log(10.0))
         }
       case None if loDir != sfDir && new java.io.File(loDir).isDirectory =>
         val ratio = sfOf(sfDir) / sfOf(loDir)
-        sweepNames.map { name =>
-          name -> math.log(base(name) / timeAt(name, loDir)) /
-            math.log(ratio)
+        sweepNames.flatMap { name =>
+          timeAt(name, loDir).map(t =>
+            name -> math.log(base(name) / t) / math.log(ratio))
         }
       case None => Seq.empty
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanReset}
 import org.apache.spark.sql.functions._
 
 /** Graph clustering over near-duplicate pair sets: turning pairwise
@@ -9,6 +9,10 @@ import org.apache.spark.sql.functions._
   * training-data pipeline.
   */
 object Clustering {
+
+  /** Edge-count gate of the in-memory union-find endgame (see
+    * [[componentsOnSym]]). */
+  private val LocalSolveMaxEdges = 2000000L
 
   /** Connected components by iterative min-label propagation (the
     * Pregel/GraphX formulation as DataFrame ops): every vertex
@@ -27,30 +31,76 @@ object Clustering {
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
                           maxIter: Int = 20,
-                          localSolveMaxEdges: Long = 2000000L): DataFrame = {
-    val sym = ckpt(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    componentsOnSym(vertices, sym, maxIter, localSolveMaxEdges)
+                          localSolveMaxEdges: Long = LocalSolveMaxEdges)
+      : DataFrame = {
+    val (sym, edgeCount) = symmetrized(edges)
+    componentsOnSym(vertices, sym, edgeCount, maxIter, localSolveMaxEdges)
   }
 
   /** Connected components where the vertex set IS the edge-touched
-    * set: vertices are derived from the (checkpointed, symmetrized)
-    * edge relation instead of being recomputed from whatever
-    * expensive pipeline produced the pairs. `dupClusters` was
-    * re-running its whole pair generator (LSH signatures, bucket
-    * join, verify) a second time just to list the endpoint ids. */
+    * set: vertices are derived from the checkpointed, symmetrized
+    * edge relation, so `edges` (often a whole pair pipeline: LSH
+    * signatures, bucket join, verify) is evaluated once, by that
+    * checkpoint, and never again to list the endpoint ids. */
   def connectedComponentsFromEdges(edges: DataFrame,
                                    maxIter: Int = 20,
-                                   localSolveMaxEdges: Long = 2000000L)
-      : DataFrame = {
-    val sym = ckpt(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    // endpoints read the checkpointed RDD, not the pair pipeline
-    val touched = sym.select(col("src").as("id")).distinct()
-    componentsOnSym(touched, sym, maxIter, localSolveMaxEdges)
+                                   localSolveMaxEdges: Long =
+                                     LocalSolveMaxEdges): DataFrame = {
+    val (sym, edgeCount) = symmetrized(edges)
+    componentsOnSym(touched(sym), sym, edgeCount, maxIter,
+      localSolveMaxEdges)
   }
+
+  /** `rows` plus `labelCol`: the component label (min vertex id) of
+    * `rows(idCol)` in the undirected graph `edges` (`src`, `dst`), or
+    * the id itself when no edge touches it. `edges` is evaluated once,
+    * by the symmetrizing checkpoint. Under the local-solve gate the
+    * labels are the union-find map, broadcast, so `rows` is labelled
+    * by a map-side join and never shuffles; above it the distributed
+    * loop labels the edge-touched vertices and `rows` joins those.
+    * The one label path of [[dupClusters]] and
+    * `Dedup.semanticCollapse`. */
+  private[operators] def withComponentLabel(rows: DataFrame, idCol: String,
+                                            edges: DataFrame,
+                                            labelCol: String): DataFrame = {
+    val (sym, edgeCount) = symmetrized(edges)
+    val labels =
+      if (edgeCount <= LocalSolveMaxEdges) unionFindLabels(sym)
+      else componentsOnSym(touched(sym), sym, edgeCount, maxIter = 20,
+        LocalSolveMaxEdges)
+    labelBy(rows, idCol, labels, labelCol)
+  }
+
+  /** The undirected edge set as a deduplicated, checkpointed
+    * (`src`, `dst`) relation holding both orientations, plus its row
+    * count. One scan of `edges`: each edge emits both orientations
+    * through a generator (a `union` of the two orientations would
+    * evaluate `edges` twice). Both endpoints take the type `union`
+    * widens them to, so mixed int/long edge frames keep working. The
+    * count comes from the checkpoint's own materialization. */
+  private def symmetrized(edges: DataFrame): (DataFrame, Long) = {
+    val t = edges.select(col("src")).union(edges.select(col("dst")))
+      .schema.head.dataType
+    val (s, d) = (col("src").cast(t), col("dst").cast(t))
+    GraftPlanReset.checkpointLeafCounted(edges
+      .select(explode(array(struct(s.as("src"), d.as("dst")),
+        struct(d.as("src"), s.as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
+      .distinct())
+  }
+
+  /** The edge-touched vertices of a symmetrized edge relation. */
+  private def touched(sym: DataFrame): DataFrame =
+    sym.select(col("src").as("id")).distinct()
+
+  /** `rows` plus `labelCol` = the `lbl` of `rows(idCol)` in `labels`
+    * (`id`, `lbl`), or the id itself where `labels` has no row. */
+  private def labelBy(rows: DataFrame, idCol: String, labels: DataFrame,
+                      labelCol: String): DataFrame =
+    rows.join(labels.toDF("__cc_id", "__cc_lbl"),
+        col(idCol) === col("__cc_id"), "left")
+      .select(rows.columns.map(c => rows(c)) :+
+        coalesce(col("__cc_lbl"), col(idCol)).as(labelCol): _*)
 
   // ckpt truncates lineage AND plan statistics: localCheckpoint
   // alone carries the origin plan's BigInt size estimates into the
@@ -58,14 +108,13 @@ object Clustering {
   // until the driver stalls inside stats estimation (see
   // GraftPlanReset).
   private def ckpt(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanReset.checkpointLeaf(df)
+    GraftPlanReset.checkpointLeaf(df)
 
   private def componentsOnSym(vertices: DataFrame, sym: DataFrame,
-                              maxIter: Int,
+                              edgeCount: Long, maxIter: Int,
                               localSolveMaxEdges: Long): DataFrame = {
     val spark = vertices.sparkSession
-    val edgeCount = sym.count()
-    // Endgame fast path, gated by the edge count just measured (no
+    // Endgame fast path, gated by the checkpoint's edge count (no
     // extra job): a near-dup pair graph is a vanishing fraction of
     // its corpus — at 2M (deduplicated, symmetrized) edges ×16 B it
     // fits in driver memory, and one collect + union-find replaces
@@ -75,7 +124,8 @@ object Clustering {
     // 100 TB, one contraction round usually shrinks the label graph
     // under the gate, after which THIS path finishes it).
     if (edgeCount <= localSolveMaxEdges)
-      return localComponents(vertices, sym)
+      return labelBy(vertices.select(col("id")), "id", unionFindLabels(sym),
+        "cluster_id")
     var labels = ckpt(vertices.select(col("id"), col("id").as("lbl")))
     // Size the loop's materialized frames to the graph, not the
     // session default: each round is several shuffles over |E'| rows,
@@ -143,9 +193,6 @@ object Clustering {
         .distinct()
         .repartition(parts, col("src")))
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] iter $iter converged=$converged " +
-          s"t=${System.nanoTime() / 1e9}")
     }
     runLoop()
     // contraction leaves non-representative vertices pointer hops
@@ -168,11 +215,12 @@ object Clustering {
   /** Union-find over a collected edge set — the endgame solver for
     * graphs under the `localSolveMaxEdges` gate. Path-halving +
     * union-by-min keeps the min-id-as-cluster-id contract of the
-    * distributed loop (results are identical). The label table goes
-    * back to the cluster as a broadcast map join, so downstream
-    * plans stay distributed. */
-  private def localComponents(vertices: DataFrame,
-                              symEdges: DataFrame): DataFrame = {
+    * distributed loop (results are identical). Returns (`id`, `lbl`)
+    * for every vertex whose label is not itself (a root never
+    * enters the map; [[labelBy]]'s coalesce labels it), hinted for
+    * broadcast: tiny by the gate, so the side it labels never
+    * shuffles and downstream plans stay distributed. */
+  private def unionFindLabels(symEdges: DataFrame): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -194,37 +242,27 @@ object Clustering {
       .collect().foreach(r => union(r.getLong(0), r.getLong(1)))
     val labels = parent.keySet.toArray(Array.empty[java.lang.Long])
       .map(id => (id.longValue, find(id.longValue)))
-    val spark = vertices.sparkSession
+    val spark = symEdges.sparkSession
     import spark.implicits._
-    val labelDf = spark.createDataset(labels.toSeq).toDF("id", "lbl")
-    // tiny by the gate — broadcast so the vertex side never shuffles
-    vertices.select(col("id"))
-      .join(broadcast(labelDf), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("lbl"), col("id")).as("cluster_id"))
+    broadcast(spark.createDataset(labels.toSeq).toDF("id", "lbl"))
   }
 
   /** Duplicate clusters from a near-dup pair set: cluster ids plus
     * the per-cluster representative choice (min id survives).
     *
-    * The propagation loop runs only over edge-touched vertices —
-    * near-dup pairs are a vanishing fraction of a 100 TB corpus, so
-    * iterating over every document would shuffle the whole id set
-    * per round for nothing. Singletons are joined back at the end
-    * as their own cluster. */
+    * Only edge-touched vertices are clustered — near-dup pairs are a
+    * vanishing fraction of a 100 TB corpus, so labelling every
+    * document would move the whole id set for nothing; an id no pair
+    * touches is its own cluster. The pair frame (often a whole LSH
+    * pipeline) is evaluated once, by the symmetrizing checkpoint;
+    * under the local-solve gate `ids` gets its labels by a map-side
+    * join against the broadcast union-find map, with no shuffle. */
   def dupClusters(ids: DataFrame, idCol: String,
-                  pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    // the vertex set comes from the CHECKPOINTED edge relation — the
-    // pair generator (often a whole LSH pipeline) runs exactly once
-    val cc = connectedComponentsFromEdges(e)
-    ids.select(col(idCol).as("id"))
-      .join(cc, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("cluster_id"), col("id")).as("cluster_id"),
-        (col("id") === coalesce(col("cluster_id"), col("id")))
-          .as("is_representative"))
-  }
+                  pairs: DataFrame): DataFrame =
+    withComponentLabel(ids.select(col(idCol).as(idCol)), idCol,
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
+        "cluster_id")
+      .withColumn("is_representative", col(idCol) === col("cluster_id"))
 
   /** PageRank over a weighted directed edge set — the crawl-graph
     * centrality a web-corpus pipeline uses to weight sources (the

@@ -579,12 +579,9 @@ object Dedup {
       .filter(floatDot(col("v_a"), col("v_b")) /
         (col("n_a") * col("n_b")) >= threshold)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comps = Clustering.connectedComponentsFromEdges(pairs)
-      .select(col("id").as(idCol), col("cluster_id").as("rep_id"))
-    cells.select(col(idCol), col("cell"))
-      .join(comps, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("rep_id"), col(idCol)).as("rep_id"), col("cell"))
+    Clustering.withComponentLabel(cells.select(col(idCol), col("cell")),
+        idCol, pairs, "rep_id")
+      .select(col(idCol), col("rep_id"), col("cell"))
   }
 
   /** Sub-quadratic embedding near-dup for the HIGH-threshold regime

@@ -61,9 +61,25 @@ object GraftPlanReset {
   /** The iterative-loop checkpoint idiom (CC loop, PageRank, BPE):
     * eager localCheckpoint to truncate lineage, then [[freshLeaf]]
     * to drop the inherited plan statistics. */
-  def checkpointLeaf(df: DataFrame): DataFrame = {
+  def checkpointLeaf(df: DataFrame): DataFrame = checkpointLeafCounted(df)._1
+
+  /** [[checkpointLeaf]] plus the frame's row count, taken from the
+    * one job that materializes the checkpoint (what
+    * `Dataset.localCheckpoint(eager = true)` runs, inside an SQL
+    * execution of its own), so a caller that needs the count does
+    * not pay a second job for it. */
+  def checkpointLeafCounted(df: DataFrame): (DataFrame, Long) = {
     Option(capture.get).foreach(_.add(df.queryExecution.sparkPlan))
-    freshLeaf(df.localCheckpoint(eager = true))
+    val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      // the count caches every partition, which completes the local
+      // checkpoint at the end of this same job
+      val n = rdd.count()
+      (cs.internalCreateDataFrame(rdd, df.schema, isStreaming = false), n)
+    }
   }
 }
 

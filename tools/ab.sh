@@ -6,25 +6,28 @@
 #   e.g. tools/ab.sh HEAD~1 HEAD scd_ingest 10
 #
 # BASE and HEAD are any git revisions of this repository. Both are
-# checked out as git worktrees under WORKDIR (default /tmp/graft-ab)
-# and built once before the first timed run. Pair i (1..PAIRS) runs
+# exported (git archive) into WORKDIR/base and WORKDIR/head (default
+# WORKDIR /tmp/graft-ab) and built once before the first timed run.
+# Pair i (1..PAIRS) runs
 #
 #   python3 perfbench/run.py --workload WORKLOAD --seed FIRST_SEED+i \
 #       --seconds 10 --trace 0
 #
-# in both checkouts, BASE first on odd pairs and HEAD first on even
+# in both copies, BASE first on odd pairs and HEAD first on even
 # ones, so slow drift of the machine hits both sides alike. Every
-# result line goes to WORKDIR/runs.jsonl. The report gives, per
-# metric, the median of each side, the spread of BASE (the distance
-# between its quartiles), the median of the per-pair ratio HEAD/BASE,
-# how many pairs HEAD was lower, and a two-sided sign-test p-value;
-# then the failed-op counts of each side. The script only
-# reads perfbench/ and BENCHMARK.json. The worktrees are removed at
-# exit.
+# result line goes to WORKDIR/runs.jsonl, with the run's drift-free
+# `counts/op:` line next to it. The report gives, per metric, the
+# median of each side, the spread of BASE (the distance between its
+# quartiles), the median of the per-pair ratio HEAD/BASE, how many
+# pairs HEAD was lower, and a two-sided sign-test p-value; then the
+# per-side medians of the counts per op (jobs, tasks, executor cpu_s,
+# shuffle_bytes), which do not drift with the machine's speed; then
+# the failed-op counts of each side. The script only reads
+# perfbench/ and BENCHMARK.json. The copies are removed at exit.
 set -euo pipefail
 
 if [ $# -lt 4 ]; then
-  sed -n '2,23p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,26p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 base_rev=$1 head_rev=$2 workload=$3 pairs=$4
@@ -37,18 +40,14 @@ head_sha=$(git -C "$repo" rev-parse --verify "$head_rev^{commit}")
 mkdir -p "$workdir"
 runs="$workdir/runs.jsonl"
 : > "$runs"
-cleanup() {
-  for side in base head; do
-    git -C "$repo" worktree remove --force "$workdir/$side" 2>/dev/null || true
-  done
-  git -C "$repo" worktree prune
-}
+cleanup() { rm -rf "$workdir/base" "$workdir/head"; }
 trap cleanup EXIT
 for side in base head; do
   sha=$base_sha
   [ "$side" = head ] && sha=$head_sha
-  git -C "$repo" worktree remove --force "$workdir/$side" 2>/dev/null || true
-  git -C "$repo" worktree add --detach "$workdir/$side" "$sha" >/dev/null
+  rm -rf "${workdir:?}/$side"
+  mkdir -p "$workdir/$side"
+  git -C "$repo" archive "$sha" | tar -x -C "$workdir/$side"
   (cd "$workdir/$side" && python3 perfbench/build.py >&2)
 done
 
@@ -56,11 +55,12 @@ run() { # side pair seed
   local out rc=0
   out=$(cd "$workdir/$1" && python3 perfbench/run.py --workload "$workload" \
     --seed "$3" --seconds 10 --trace 0 2>>"$workdir/$1.log") || rc=$?
-  local line
+  local line counts
   line=$(printf '%s\n' "$out" | grep '^{' | tail -n 1 || true)
   [ -n "$line" ] || line='{}'
-  printf '{"side":"%s","pair":%d,"seed":%d,"exit":%d,"result":%s}\n' \
-    "$1" "$2" "$3" "$rc" "$line" >> "$runs"
+  counts=$(printf '%s\n' "$out" | grep '^counts/op:' | tail -n 1 || true)
+  printf '{"side":"%s","pair":%d,"seed":%d,"exit":%d,"counts":"%s","result":%s}\n' \
+    "$1" "$2" "$3" "$rc" "$counts" "$line" >> "$runs"
   echo "[ab] pair $2 $1 seed $3 exit $rc" >&2
 }
 
@@ -123,6 +123,19 @@ for m in metrics:
     print(f"{m:24s} {statistics.median(b):10.4g} {statistics.median(h):10.4g} "
           f"{q[2] - q[0]:10.4g} {ratio:>9s} {f'{lower}/{n}':>9s} "
           f"{sign_p(lower, n):7.3f}")
+def counts(r):
+    """The `counts/op: jobs=.. tasks=..` line of a run, as numbers."""
+    kv = (f.split("=", 1) for f in r.get("counts", "").split()[1:])
+    return {k: float(v) for k, v in kv}
+
+print(f"{'counts/op':24s} {'base_med':>10s} {'head_med':>10s}")
+for c in ("jobs", "tasks", "cpu_s", "shuffle_bytes"):
+    meds = []
+    for side in ("base", "head"):
+        vs = [counts(p[side]).get(c) for p in by.values() if side in p]
+        vs = [v for v in vs if v is not None]
+        meds.append(f"{statistics.median(vs):10.4g}" if vs else f"{'-':>10s}")
+    print(f"{c:24s} {meds[0]} {meds[1]}")
 for side in ("base", "head"):
     rs = [p[side] for p in by.values() if side in p]
     failed = sum(r["result"].get("failed", 0) for r in rs)
