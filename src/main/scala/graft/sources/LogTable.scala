@@ -221,18 +221,17 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
   *    across versions by reference
   *  - `_cdf/<uuid>/`          row-level change files of delete/update
   *    /merge commits (the change-data-feed surface), referenced from
-  *    the commit that wrote them. Raw layout: the table's columns plus
-  *    `_change_type`, and — on MOR DML pre-images and MERGE images —
-  *    the matched row's scan provenance `__file` (the data file's
-  *    URI) and `__idx` (its parquet row index), plus the materialized
-  *    `_graft_row_id` on row-tracked tables. Post-images and inserts
-  *    may lack the extras, so files in one directory differ in
-  *    schema. Every feed reader must load by EXPLICIT schema (the
-  *    table schema + `_change_type`, as [[changes]] does); the extras
-  *    are internal and never part of the feed contract. A MERGE
-  *    writes its feed through `GraftWriteShim.writeParquet` with
-  *    [[MergeFeedTracker]]; its probe images (matched pairs no action
-  *    fires on) are counted there and never reach disk.
+  *    the commit that wrote them. Raw layout: the table's user columns
+  *    plus `_change_type`, the changed row's scan provenance `__file`
+  *    (the data file's URI) and `__idx` (its parquet row index; both
+  *    null on inserts), plus the materialized `_graft_row_id` on
+  *    row-tracked tables. Every feed reader must load by EXPLICIT
+  *    schema (the table schema + `_change_type`, as [[changes]] does);
+  *    the extras are internal and never part of the feed contract.
+  *    Every row-level change writes its feed once, through
+  *    [[commitChanges]] (`GraftWriteShim.writeParquet` with
+  *    [[MergeFeedTracker]]); a MERGE's probe images (matched pairs no
+  *    action fires on) are counted there and never reach disk.
   *
   * Why this scales where a whole-snapshot rewrite does not: an
   * append commits ONLY its new files plus one O(#files-in-delta) log
@@ -240,15 +239,16 @@ final case class RowOpResult(version: Long, rowsAffected: Long,
   * DELETE/UPDATE prune untouched files with per-file min/max stats
   * (computed by the write tasks as they write each file — see
   * [[writeStaged]] — so a commit never re-reads its own staged data),
-  * scan just the stats survivors for matches, and rewrite just the
-  * files that contain matching rows; everything else is carried
-  * forward by reference. Snapshot isolation is the MVCC trick — data files are
-  * immutable, a version is defined entirely by its log entry, and
-  * commits race on an atomic create-if-absent claim of the next log
-  * file (optimistic concurrency: blind appends retry, file-rewriting
-  * commits revalidate that their removed files are still live and
-  * throw on a true conflict, which is Delta's conflict-detection
-  * rule).
+  * scan just the stats survivors for matches, and rewrite (or
+  * deletion-vector) just the files that contain matching rows, as
+  * MERGE does, through one executor ([[commitChanges]]); everything
+  * else is carried forward by reference. Snapshot isolation is the
+  * MVCC trick — data files are immutable, a version is defined
+  * entirely by its log entry, and commits race on an atomic
+  * create-if-absent claim of the next log file (optimistic
+  * concurrency: blind appends retry, file-rewriting commits
+  * revalidate that their removed files are still live and throw on
+  * a true conflict, which is Delta's conflict-detection rule).
   *
   * The claim primitive is pluggable ([[LogCommitCoordinator]] —
   * Delta's LogStore seam): the default POSIX binding hard-links the
@@ -1429,34 +1429,6 @@ final class LogTable(val path: String,
     if (hidden.isEmpty) out else out.drop(hidden: _*)
   }
 
-  /** Snapshot read carrying a `__file` column — the parquet file
-    * PATH (scan-time `_metadata.file_path` URI; see
-    * [[LogTable.provPath]] for the driver-side normal form) each
-    * row came from, captured AT SCAN TIME so it survives
-    * later exchanges (`input_file_name()` is empty once the row
-    * crosses a shuffle, e.g. the DV anti-join or a merge join).
-    * Deletion vectors are subtracted. The file-granularity rewrite
-    * planners ([[graft.sources.SqlMerge.mergeLog]]) key their
-    * touched-file discovery on this column. */
-  def loadWithFileColumn(spark: SparkSession,
-                         version: Option[Long] = None): DataFrame = {
-    val snap = snapshotAt(version.orElse(currentVersion).getOrElse(
-      throw new IllegalStateException(s"no log table at $path")))
-    // hidden transform columns drop here too: the merge planner
-    // rewrites USER rows, and the write choke point recomputes the
-    // hidden layout columns from scratch (always fresh — a merge
-    // that updates a transform source can never strand stale
-    // partition values)
-    val hidden = hiddenColsOf(snap)
-    val out =
-      if (snap.adds.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[Row](),
-          snap.schema.add("__file", StringType))
-      else dvAwareRead(spark, snap.schema, snap.partitionCols, snap.adds,
-        keepProvenance = true).drop("__idx")
-    if (hidden.isEmpty) out else out.drop(hidden: _*)
-  }
-
   // ---------------------------------------------------------------
   // ROW TRACKING — Delta/Iceberg-v3-style stable row ids. A row's id
   // is METADATA for fresh files (id = AddFile.baseRowId + parquet
@@ -1522,9 +1494,8 @@ final class LogTable(val path: String,
 
   /** The rewrite-source read: snapshot rows with their EFFECTIVE row
     * id under the reserved physical name, ready to stage — every
-    * rewrite path (CoW update/delete, OPTIMIZE, purge, MOR
-    * post-images) sources from this when tracking is on, so moved
-    * rows keep their ids. */
+    * rewrite path (row-level changes, OPTIMIZE, purge) sources from
+    * this when tracking is on, so moved rows keep their ids. */
   private def withEffectiveRowIds(spark: SparkSession, snap: Snapshot,
                                   adds: Seq[AddFile],
                                   keepProvenance: Boolean = false)
@@ -1565,40 +1536,15 @@ final class LogTable(val path: String,
     else dvAwareRead(spark, snap.schema, snap.partitionCols, adds,
       keepProvenance = false)
 
-  /** The MERGE planner's target read: snapshot rows + full scan-time
-    * provenance (`__file`, `__idx`) and — on a row-tracked table —
-    * the effective row id under the reserved physical name. The
-    * provenance keys let [[SqlMerge.mergeLog]] derive its rewrite
-    * from the change-feed read-back (an anti-join over the touched
-    * files) instead of re-executing the full merge join. Reads
-    * version `v`, the merge's commit basis. */
-  private[sources] def loadForMerge(spark: SparkSession,
-                                   v: Long): DataFrame = {
-    val snap = snapshotAt(v)
-    val hidden = hiddenColsOf(snap)
-    val tracked =
-      snap.properties.get(LogTable.PropRowTracking).contains("true")
-    val out =
-      if (snap.adds.isEmpty) {
-        val base =
-          if (tracked) snap.schema.add(LogTable.RowIdPhysCol, LongType)
-          else snap.schema
-        spark.createDataFrame(new java.util.ArrayList[Row](),
-          base.add("__file", StringType).add("__idx", LongType))
-      } else if (tracked)
-        withEffectiveRowIds(spark, snap, snap.adds, keepProvenance = true)
-      else dvAwareRead(spark, snap.schema, snap.partitionCols, snap.adds,
-        keepProvenance = true)
-    if (hidden.isEmpty) out else out.drop(hidden: _*)
-  }
-
-  /** DV-aware provenance read of a SUBSET of live files — the merge
-    * rewrite's survivor source: only the touched files are scanned
-    * (∝ touched bytes, never a re-execution of the merge join), each
-    * row keyed by (`__file`, `__idx`) for the anti-join against the
-    * feed's changed rows, effective row ids materialized when the
-    * table is tracked so survivors keep their identity. `adds` are
-    * files of version `v`. */
+  /** DV-aware provenance read of live files `adds` of version `v`:
+    * the user columns (hidden transform columns drop; the write choke
+    * point recomputes them), the effective row id under the reserved
+    * physical name when the table is tracked, and the scan-time
+    * provenance `__file`/`__idx` that keys a row-level change's
+    * survivor anti-join. The source of every row-level change: DELETE
+    * and UPDATE read their stats-pruned candidates, MERGE all live
+    * files (an empty table reads an empty frame of that shape), and
+    * [[commitChanges]] the touched files. */
   private[sources] def readAddsWithProvenance(spark: SparkSession,
                                               v: Long, adds: Seq[AddFile])
       : DataFrame = {
@@ -1607,7 +1553,13 @@ final class LogTable(val path: String,
     val tracked =
       snap.properties.get(LogTable.PropRowTracking).contains("true")
     val out =
-      if (tracked) withEffectiveRowIds(spark, snap, adds,
+      if (adds.isEmpty) {
+        val base =
+          if (tracked) snap.schema.add(LogTable.RowIdPhysCol, LongType)
+          else snap.schema
+        spark.createDataFrame(new java.util.ArrayList[Row](),
+          base.add("__file", StringType).add("__idx", LongType))
+      } else if (tracked) withEffectiveRowIds(spark, snap, adds,
         keepProvenance = true)
       else dvAwareRead(spark, snap.schema, snap.partitionCols, adds,
         keepProvenance = true)
@@ -3748,32 +3700,6 @@ final class LogTable(val path: String,
     else { maybeAutoCompact(spark); Some(v) }
   }
 
-  /** Commit a staged rewrite written by [[writeStaged]] for an
-    * external planner (the file-granularity MERGE): adds the staged
-    * files, retires `removePaths`, under the usual conflict
-    * revalidation. An identity-allocating merge passes its specs and
-    * allocation basis so the commit advances the high-water mark from
-    * the staged files' stats and re-plans on an allocation race — the
-    * same contract appends have. */
-  private[sources] def commitStagedRewrite(staged: String,
-                                           stats: StagedStats,
-                                           removePaths: Seq[String],
-                                           op: String,
-                                           readVersion: Option[Long],
-                                           cdfDir: Option[String] = None,
-                                           txn: Option[(String, Long)] =
-                                             None,
-                                           identityUpdate:
-                                             Map[String, IdentitySpec] =
-                                             Map.empty,
-                                           identityBasis:
-                                             Option[Map[String,
-                                               Option[Long]]] = None): Long =
-    finalizeStaged(new File(staged), stats, schema, info(op, cdfDir, txn) +:
-      (removePaths.map(Remove) ++
-        Option.when(identityUpdate.nonEmpty)(SetIdentity(identityUpdate))),
-      readVersion, identityBasis = identityBasis)
-
   /** Metadata-only commit that ONLY advances an idempotent-txn
     * pointer (op `refresh`, no adds/removes, dataChange = false —
     * streams skip it): how [[MaterializedAgg]] records "refreshed
@@ -3783,7 +3709,8 @@ final class LogTable(val path: String,
     commitRetry(currentVersion, Seq(info("refresh", txn = Some((app, batch)))))
 
   // ---------------------------------------------------------------
-  // row-level ops: stats-pruned delete / update
+  // row-level ops: stats-pruned delete / update, and the one change
+  // executor they share with MERGE
 
   /** Does `pred` provably match NO row of `file`? Sound only:
     * unparseable conjuncts or missing bounds contribute nothing.
@@ -3860,24 +3787,20 @@ final class LogTable(val path: String,
     }
   }
 
-  /** Row-level DELETE: stats-prune, scan only the survivors for
-    * files that actually contain matches, rewrite only those —
-    * everything else carries forward by reference. Rows where `pred`
-    * is NULL are kept (SQL DELETE semantics). Matching rows land in
-    * the change feed as `delete` rows. */
+  /** Row-level DELETE, copy-on-write: stats-prune, then rewrite only
+    * the files holding a matching row, without it — everything else
+    * carries forward by reference ([[changeMatching]]). Rows where
+    * `pred` is NULL are kept (SQL DELETE semantics). Matching rows
+    * land in the change feed as `delete` rows. */
   def delete(spark: SparkSession, pred: Column): RowOpResult = {
     requireDeterministic(spark, "DELETE", pred, Map.empty)
-    rewriteMatching(spark, pred, "delete") { (matching, file) =>
-      file.filter(!coalesce(pred, lit(false)))
-    }
+    changeMatching(spark, pred, None, mor = false)
   }
 
-  /** Every row-level op evaluates its predicate (and UPDATE its SET
-    * expressions) more than once over the same rows — the match scan,
-    * the rewrite, the change feed's images — and relies on each
-    * evaluation agreeing. A non-deterministic expression (`rand()`,
-    * `uuid()`) would let the feed and the committed files diverge, so
-    * it is refused before anything is written. */
+  /** A row-level op's predicate and SET expressions must be
+    * deterministic: the stats pruner, the match scan and the images
+    * all read them as one fixed function of the row, so `rand()` or
+    * `uuid()` is refused before anything is written. */
   private def requireDeterministic(spark: SparkSession, op: String,
                                    pred: Column,
                                    set: Map[String, Column]): Unit = {
@@ -3891,30 +3814,13 @@ final class LogTable(val path: String,
     }
   }
 
-  /** Row-level UPDATE: same file-skipping skeleton as [[delete]];
-    * matching rows get `set` applied, everything else is rewritten
-    * byte-identical. Change feed records pre/post images. */
+  /** Row-level UPDATE, copy-on-write: same skeleton as [[delete]];
+    * the files holding a matching row are rewritten with `set`
+    * applied to it. Change feed records pre/post images. */
   def update(spark: SparkSession, pred: Column,
-             set0: Map[String, Column]): RowOpResult = {
-    val s = schema
-    set0.keys.foreach(k => require(s.fieldNames.contains(k),
-      s"UPDATE SET names unknown column '$k'"))
-    set0.keys.foreach(k => require(!identityColumns.contains(k),
-      s"cannot UPDATE SET IDENTITY column '$k'"))
-    val set = withGeneratedRecompute(spark, set0)
-    requireDeterministic(spark, "UPDATE", pred, set)
-    rewriteMatching(spark, pred, "update") { (matching, file) =>
-      // non-schema passthrough columns (the materialized row id on a
-      // tracked table) ride through the rewrite untouched
-      val extras = file.columns.filterNot(s.fieldNames.contains).toSeq
-      file.select(s.fields.toSeq.map { f =>
-        set.get(f.name)
-          .map(e => when(coalesce(pred, lit(false)), e)
-            .otherwise(col(f.name)).cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      } ++ extras.map(col): _*)
-    }
-  }
+             set: Map[String, Column]): RowOpResult =
+    changeMatching(spark, pred, Some(updateSet(spark, pred, set)),
+      mor = false)
 
   /** Merge-on-read DELETE — Delta's deletion vectors: instead of
     * rewriting every touched file, record the matching rows' parquet
@@ -3932,14 +3838,22 @@ final class LogTable(val path: String,
     * CoW path (same `delete` op, same remove-revalidation rule). */
   def deleteMor(spark: SparkSession, pred: Column): RowOpResult = {
     requireDeterministic(spark, "DELETE", pred, Map.empty)
-    morMatching(spark, pred, "delete") { (_, _, _) => None }
+    changeMatching(spark, pred, None, mor = true)
   }
 
   /** Merge-on-read UPDATE: matching rows are deletion-vectored out
     * of their files and their post-images appended as new files —
     * write amplification ∝ matched rows, not touched files. */
   def updateMor(spark: SparkSession, pred: Column,
-                set0: Map[String, Column]): RowOpResult = {
+                set: Map[String, Column]): RowOpResult =
+    changeMatching(spark, pred, Some(updateSet(spark, pred, set)),
+      mor = true)
+
+  /** An UPDATE's SET map, checked (known, non-identity columns,
+    * deterministic together with `pred`) and extended with the
+    * generated columns it recomputes. */
+  private def updateSet(spark: SparkSession, pred: Column,
+                        set0: Map[String, Column]): Map[String, Column] = {
     val s = schema
     set0.keys.foreach(k => require(s.fieldNames.contains(k),
       s"UPDATE SET names unknown column '$k'"))
@@ -3947,26 +3861,19 @@ final class LogTable(val path: String,
       s"cannot UPDATE SET IDENTITY column '$k'"))
     val set = withGeneratedRecompute(spark, set0)
     requireDeterministic(spark, "UPDATE", pred, set)
-    morMatching(spark, pred, "update") { (matched, snapSchema, _) =>
-      // the materialized row id (tracked tables) passes through, so
-      // a MOR update's post-image keeps the matched row's identity
-      val extras = matched.columns
-        .filterNot(snapSchema.fieldNames.contains).toSeq
-      Some(matched.select(snapSchema.fields.toSeq.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      } ++ extras.map(col): _*))
-    }
+    set
   }
 
-  /** Shared MOR skeleton: stats-prune, scan candidates (minus
-    * existing vectors) for matches, write the CDF and the new
-    * vectors, optionally stage post-image rows, commit touched files
-    * by reference with vectors attached. `postImages` maps the
-    * matched rows to rows to APPEND (update), or None (delete). */
-  private def morMatching(spark: SparkSession, pred: Column, op: String)(
-      postImages: (DataFrame, StructType, Seq[String]) => Option[DataFrame])
-      : RowOpResult = {
+  /** The images of a DELETE (`set` None) or an UPDATE, either form:
+    * stats-prune the live files, scan the candidates once with
+    * provenance (minus already-deleted rows: a vectored row must not
+    * match), and hand each matching row's `delete` image — or its
+    * pre-image and its post-image with `set` applied — to
+    * [[commitChanges]], which commits deletion vectors (`mor`) or
+    * rewrites the touched files by the same predicate. */
+  private def changeMatching(spark: SparkSession, pred: Column,
+                             set: Option[Map[String, Column]],
+                             mor: Boolean): RowOpResult = {
     val readVersion = currentVersion.getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
     val snap = snapshotAt(readVersion)
@@ -3977,114 +3884,197 @@ final class LogTable(val path: String,
     // collected to the driver (prunedAdds runs the walk as a job)
     val (candidates, totalLive) =
       prunedAdds(spark, readVersion, base, derived)
-    val skippedCount = (totalLive - candidates.size).toInt
+    val skipped = (totalLive - candidates.size).toInt
     if (candidates.isEmpty)
-      return RowOpResult(readVersion, 0L, skippedCount, 0, 0)
-
-    // tracked tables thread the effective row id through the match
-    // scan so update post-images materialize the matched row's id
-    val tracked = snap.properties.get(LogTable.PropRowTracking)
-      .contains("true")
-    val candDf =
-      if (tracked) withEffectiveRowIds(spark, snap, candidates,
-        keepProvenance = true)
-      else dvAwareRead(spark, snap.schema, snap.partitionCols,
-        candidates, keepProvenance = true)
-    val matched = candDf.filter(coalesce(pred, lit(false)))
-    // ONE scan of the candidate files serves the WHOLE DML: the
-    // change-feed write runs first and carries each matched row's
-    // (__file, __idx) provenance as extra columns — every CDF reader
-    // loads by explicit schema, so the extras are invisible to them
-    // — and the pair write, the per-file match counts, and (for
-    // UPDATE) the post-image computation, its staging, and its feed
-    // rows all derive from reading that (∝ matched rows) output
-    // back. The old shape re-scanned the candidates once per
-    // consumer: twice for DELETE, four times for UPDATE.
-    val cdfRel = s"_cdf/${UUID.randomUUID()}"
-    matched.withColumn("_change_type",
-        lit(if (op == "update") "update_preimage" else "delete"))
-      .write.mode("overwrite").parquet(s"$path/$cdfRel")
-    val preRead = spark.read.parquet(s"$path/$cdfRel")
-    val perFileRaw = preRead
-      .groupBy(col("__file")).agg(count(lit(1)).as("n")).collect()
-    val perFile = perFileRaw
-      .map(r => LogTable.provPath(r.getString(0)) -> r.getLong(1)).toMap
-    // scan-side URI of each matched file, for executor-side joins
-    // against pair files (which store the URIs the scan emitted)
-    val uriOf = perFileRaw
-      .map(r => LogTable.provPath(r.getString(0)) -> r.getString(0)).toMap
-    if (perFile.isEmpty) {
-      // nothing matched: reclaim the empty change-feed directory
-      // rather than leaving an unreferenced orphan for vacuum
-      deleteRecursive(new File(s"$path/$cdfRel"))
-      return RowOpResult(readVersion, 0L, skippedCount, candidates.size, 0)
+      return RowOpResult(readVersion, 0L, skipped, 0, 0)
+    val scan = readAddsWithProvenance(spark, readVersion, candidates)
+    val dataCols = scan.columns.toSeq
+      .filterNot(c => c == "__file" || c == "__idx")
+    // each column after the change, on the rows where `hit` holds;
+    // non-schema columns (the materialized row id on a tracked table)
+    // pass through, so a post-image keeps the row's id
+    def applied(s: Map[String, Column], hit: Column): Seq[Column] =
+      dataCols.map(c => s.get(c).fold(col(c))(e =>
+        when(hit, e.cast(scan.schema(c).dataType)).otherwise(col(c)).as(c)))
+    val matched = scan.filter(pred)
+    val images = set match {
+      case None => matched.withColumn("_change_type", lit("delete"))
+      case Some(s) =>
+        val prov = Seq(col("__file"), col("__idx"))
+        def image(changeType: String, cols: Seq[Column]): Column =
+          struct(cols ++ (lit(changeType).as("_change_type") +: prov): _*)
+        matched.select(explode(array(
+          image("update_preimage", dataCols.map(col)),
+          image("update_postimage", applied(s, lit(true))))).as("__c"))
+          .select(col("__c.*"))
     }
-    val touched = candidates.filter(a => perFile.contains(absLivePath(a)))
-
-    // pairs come off the feed read-back (∝ matches), never a second
-    // candidate scan. Keys are the scan-time file-path URIs;
-    // driver-side attribution normalizes both sides to absolute
-    // paths (a clone snapshot mixes data roots, so bare names could
-    // collide).
-    val dvRel = s"_dv/${UUID.randomUUID()}"
-    preRead.select(col("__file").as("file"), col("__idx").as("idx"))
-      .repartition(col("file")).write.parquet(s"$path/$dvRel")
-
-    // UPDATE post-images: computed from the feed read-back pre-images
-    // (the same deterministic SET expressions over the same rows the
-    // live scan produced) and STAGED first, before the feed changes:
-    // the feed's post-image rows are then read back from the staged
-    // files, so feed and committed files hold the same rows and no
-    // action re-reads the feed directory after the append below.
-    // Mixed parquet schemas inside the feed dir are fine: readers
-    // select the table schema + _change_type only.
-    val images = preRead.drop("_change_type", "__file", "__idx")
-    val post = postImages(images, snap.schema, snap.partitionCols).map { p =>
-      val staged = newStagingDir()
-      val stats = writeStaged(p, staged, snap.schema)
-      readStaged(spark, staged, p.schema)
-        .drop(LogTable.RowIdPhysCol)
-        .withColumn("_change_type", lit("update_postimage"))
-        .write.mode("append").parquet(s"$path/$cdfRel")
-      (staged, stats)
+    // copy-on-write re-applies the predicate to the touched files
+    // (it is deterministic): survivors and post-images in one pass
+    val hit = coalesce(pred, lit(false))
+    val rewrite: DataFrame => DataFrame = set match {
+      case None    => _.filter(!hit)
+      case Some(s) => _.select(applied(s, hit): _*)
     }
-
-    // complete the vector dir: the touched files' EXISTING pairs
-    // append beside this op's pairs (so each AddFile.dv reference
-    // is always complete). Input is the old pair files (∝ prior
-    // deletes), never the candidate data files.
-    val oldDirs = touched.flatMap(_.dv.map(_.path)).distinct
-    val touchedNames = touched.map(a => uriOf(absLivePath(a)))
-    if (oldDirs.nonEmpty) {
-      // keep only the touched files' old pairs — as a broadcast
-      // semi-join, not isin: a wide DELETE touches thousands of
-      // files and a literal list that size bloats the plan
-      import spark.implicits._
-      val names = broadcast(touchedNames.toDF("file"))
-      spark.read.parquet(oldDirs.map(absPath): _*)
-        .join(names, Seq("file"), "left_semi")
-        .repartition(col("file")).write.mode("append")
-        .parquet(s"$path/$dvRel")
-    }
-
-    def cardOf(a: AddFile): Long =
-      perFile(absLivePath(a)) + a.dv.map(_.rows).getOrElse(0L)
-    // fully-deleted files are dropped, not 100%-vectored
-    val reAdds = touched.filter(a => cardOf(a) < a.rows)
-      .map(a => a.copy(dv = Some(Dv(dvRel, cardOf(a)))))
-
-    val affected = perFile.values.sum
-    val commit = info(op, Some(cdfRel)) +:
-      (touched.map(a => Remove(a.path)) ++ reAdds.map(Add))
-    val v = post match {
-      case None =>
-        commitRetry(Some(readVersion), commit)
-      case Some((staged, stats)) =>
-        finalizeStaged(new File(staged), stats, snap.schema, commit,
-          readVersion = Some(readVersion))
-    }
-    RowOpResult(v, affected, skippedCount, candidates.size, touched.size)
+    val (v, feed) = commitChanges(spark, readVersion, candidates, images,
+      if (set.isEmpty) "delete" else "update", mor,
+      rewrite = Option.when(!mor)(rewrite))
+    RowOpResult(v.getOrElse(readVersion), feed.updated + feed.deleted,
+      skipped, candidates.size, feed.touched.size)
   }
+
+  /** The one row-level change executor: DELETE and UPDATE, in both
+    * forms ([[changeMatching]]), and MERGE ([[SqlMerge.mergeLog]])
+    * build change images and commit them here — Delta's DML shape:
+    * find the touched files, then rewrite them. `images` are one
+    * statement's images against `readVersion`: the data columns of
+    * [[readAddsWithProvenance]], `_change_type` (`delete`,
+    * `update_preimage`, `update_postimage`, `insert`, or a MERGE's
+    * [[MergeFeedTracker.Probe]]) and the changed row's scan provenance
+    * `__file`/`__idx` (null on inserts). `within` are the files of
+    * `readVersion` they were scanned from.
+    *
+    * The images execute ONCE, as the change-feed write, whose
+    * [[MergeFeedTracker]] returns the counters, each touched file's
+    * changed-row count and the duplicate-match flag as task results.
+    * A feed that changes nothing is dropped and nothing commits.
+    * Otherwise the touched files are scanned once and the commit is
+    *  - copy-on-write: `rewrite` of that scan — a DELETE or UPDATE
+    *    re-applies its deterministic predicate, so each touched file
+    *    rewrites in place in one task — or, without one (MERGE), the
+    *    scan anti-joined on the feed read-back's changed
+    *    `(__file, __idx)` keys plus the feed's post-images and
+    *    inserts, staged as the files replacing the touched ones;
+    *  - merge-on-read (`mor`): the changed keys plus the touched
+    *    files' old pairs form one new deletion-vector dir, the touched
+    *    files re-commit by reference with it (a fully deleted file
+    *    drops) and the post-images stage from the feed read-back.
+    * Any refusal — a duplicate match, a CHECK violation, a lost
+    * commit race, an identity re-plan, a replayed `txn` — drops the
+    * feed and vector dirs, unless a commit already references them (a
+    * failure after the claim leaves both to that commit). `identity`
+    * are the specs inserts allocated from: the commit advances their
+    * marks and refuses a raced one. Returns the committed version
+    * (None when nothing committed) and the feed's statistics. */
+  private[sources] def commitChanges(spark: SparkSession, readVersion: Long,
+                                     within: Seq[AddFile], images: DataFrame,
+                                     op: String, mor: Boolean,
+                                     rewrite: Option[DataFrame => DataFrame] =
+                                       None,
+                                     txn: Option[(String, Long)] = None,
+                                     identity: Map[String, IdentitySpec] =
+                                       Map.empty)
+      : (Option[Long], MergeFeedStats) = {
+    val snap = snapshotAt(readVersion)
+    val cdfRel = s"_cdf/${UUID.randomUUID()}"
+    val dvRel = s"_dv/${UUID.randomUUID()}"
+    def dropFeed(): Unit =
+      Seq(cdfRel, dvRel).foreach(d => dropStaging(s"$path/$d"))
+    try {
+      val feed = org.apache.spark.sql.GraftWriteShim.writeParquet(images,
+        s"$path/$cdfRel", Seq.empty, (data, _) => MergeFeedTracker(data),
+        new MergeFeedFormat).result()
+      if (feed.duplicateMatch) throw MergeFeedTracker.cardinalityViolation()
+      // __file is the scan-time URI: attribute on absolute paths (a
+      // clone snapshot mixes data roots, so bare names could collide)
+      val changed =
+        feed.touched.map { case (f, n) => LogTable.provPath(f) -> n }
+      val touched = within.filter(a => changed.contains(absLivePath(a)))
+      if (touched.isEmpty && feed.inserted == 0L) {
+        dropFeed()
+        return (None, feed)
+      }
+      // read back by the written schema: no footer inference
+      val feedRaw = readStaged(spark, s"$path/$cdfRel", images.schema)
+      val dataCols = images.columns.toSeq
+        .filterNot(Set("_change_type", "__file", "__idx")).map(col)
+      val replacements = feedRaw.filter(
+        col("_change_type").isin("update_postimage", "insert"))
+        .select(dataCols: _*)
+      val changedKeys = feedRaw.filter(
+        col("_change_type").isin("update_preimage", "delete"))
+      val (staging, reAdds) =
+        if (!mor) {
+          // the touched files scanned once (∝ touched bytes, full
+          // pushdown); without a caller rewrite the survivors are the
+          // scan minus the changed keys — a measured count, so the
+          // broadcast is size-gated, and past the gate the anti-join
+          // shuffles (file, idx) pairs only
+          lazy val scan = readAddsWithProvenance(spark, readVersion, touched)
+          val rewritten = rewrite match {
+            case _ if touched.isEmpty => replacements
+            case Some(f) => f(scan).select(dataCols: _*)
+            case None =>
+              val keys0 = changedKeys.select(col("__file").as("__kfile"),
+                col("__idx").as("__kidx"))
+              val keys =
+                if (feed.updated + feed.deleted <= LogTable.DvBroadcastMaxRows)
+                  broadcast(keys0)
+                else keys0
+              scan.join(keys, scan("__file") === keys("__kfile") &&
+                  scan("__idx") === keys("__kidx"), "left_anti")
+                .select(dataCols: _*).unionByName(replacements)
+          }
+          (Some(rewritten), Seq.empty[AddFile])
+        } else {
+          // this op's pairs come off the feed read-back (∝ changes);
+          // the touched files' existing pairs (∝ prior deletes) append
+          // beside them, so each AddFile.dv reference is complete
+          changedKeys
+            .select(col("__file").as("file"), col("__idx").as("idx"))
+            .repartition(col("file")).write.parquet(s"$path/$dvRel")
+          val oldDirs = touched.flatMap(_.dv.map(_.path)).distinct
+          if (oldDirs.nonEmpty) {
+            // a broadcast semi-join, not isin: a wide DELETE touches
+            // thousands of files and a literal list that size bloats
+            // the plan
+            import spark.implicits._
+            spark.read.parquet(oldDirs.map(absPath): _*)
+              .join(broadcast(feed.touched.keys.toSeq.toDF("file")),
+                Seq("file"), "left_semi")
+              .repartition(col("file")).write.mode("append")
+              .parquet(s"$path/$dvRel")
+          }
+          def card(a: AddFile): Long =
+            changed(absLivePath(a)) + a.dv.map(_.rows).getOrElse(0L)
+          // fully-deleted files are dropped, not 100%-vectored
+          (Option.when(feed.updated + feed.inserted > 0L)(replacements),
+            touched.filter(a => card(a) < a.rows)
+              .map(a => a.copy(dv = Some(Dv(dvRel, card(a))))))
+        }
+      val allocates = identity.nonEmpty && feed.inserted > 0L
+      val actions = info(op, Some(cdfRel), txn) +:
+        (touched.map(a => Remove(a.path)) ++ reAdds.map(Add) ++
+          Option.when(allocates)(SetIdentity(identity)))
+      val v = staging match {
+        case Some(df) =>
+          val staged = newStagingDir()
+          finalizeStaged(new File(staged),
+            writeStaged(df, staged, snap.schema), snap.schema, actions,
+            readVersion = Some(readVersion),
+            identityBasis = Option.when(allocates)(
+              identity.map { case (c, s) => c -> s.highWater }))
+        case None => commitRetry(Some(readVersion), actions)
+      }
+      // a replayed txn commits nothing: its feed is an orphan
+      if (v < 0) dropFeed()
+      (Option.when(v >= 0)(v), feed)
+    } catch { case e: Throwable =>
+      if (!committedFeed(readVersion, cdfRel)) dropFeed()
+      throw e
+    }
+  }
+
+  /** Does a commit after `readVersion` reference the change feed
+    * `cdfRel`? A failure after the log claim (a lost acknowledgement,
+    * a failing checkpoint) must not reclaim the dirs the committed
+    * version reads; when the log cannot be read either, the answer is
+    * yes — an orphan waits for vacuum, a dropped live feed is lost. */
+  private def committedFeed(readVersion: Long, cdfRel: String): Boolean =
+    try versions.filter(_ > readVersion).exists(v => readCommit(v).exists {
+      case c: CommitInfo => c.cdf.contains(cdfRel)
+      case _             => false
+    })
+    catch { case NonFatal(_) => true }
 
   /** Materialize every deletion vector: rewrite JUST the vectored
     * files without their deleted rows and clear the vectors
@@ -4304,86 +4294,6 @@ final class LogTable(val path: String,
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
           f.condition
       }.map(splitConjuncts).getOrElse(Seq.empty)
-
-  private def rewriteMatching(spark: SparkSession, pred: Column, op: String)(
-      rewrite: (DataFrame, DataFrame) => DataFrame): RowOpResult = {
-    val readVersion = currentVersion.getOrElse(
-      throw new IllegalStateException(s"no log table at $path"))
-    val snap = snapshotAt(readVersion)
-    val base = resolvedConjuncts(spark, snap.schema, pred)
-    val derived = derivedConjuncts(spark, snap.generated, snap.tz, base)
-    // file-skipping where the manifest lives: above the parquet-
-    // checkpoint threshold only the candidate files are ever
-    // collected to the driver (prunedAdds runs the walk as a job)
-    val (candidates, totalLive) =
-      prunedAdds(spark, readVersion, base, derived)
-    val skippedCount = (totalLive - candidates.size).toInt
-    if (candidates.isEmpty)
-      return RowOpResult(readVersion, 0L, skippedCount, 0, 0)
-
-    // which candidate files actually contain a matching row? — one
-    // pushdown-friendly scan of the candidates only, minus any
-    // already-deleted rows (a dv'd row must not count as a hit)
-    val hit = dvAwareRead(spark, snap.schema, snap.partitionCols,
-      candidates, keepProvenance = true)
-      .filter(pred).select(col("__file"))
-      .distinct().collect().map(r => LogTable.provPath(r.getString(0)))
-      .toSet
-    val touched = candidates.filter(a => hit.contains(absLivePath(a)))
-    if (touched.isEmpty)
-      return RowOpResult(readVersion, 0L, skippedCount, candidates.size, 0)
-
-    // row-tracked tables rewrite from the id-materializing source so
-    // survivors (and update post-images) keep their row ids; the
-    // physical id column rides through filter/select-passthrough and
-    // is stripped from the change feed
-    val touchedDf = rewriteSource(spark, snap, touched)
-
-    // change feed: the matching rows, written BEFORE the log commit
-    // and referenced from it (readers of the commit always find them)
-    val cdfRel = s"_cdf/${UUID.randomUUID()}"
-    val matching = touchedDf.filter(coalesce(pred, lit(false)))
-    if (op == "delete")
-      matching.drop(LogTable.RowIdPhysCol)
-        .withColumn("_change_type", lit("delete"))
-        .write.mode("overwrite").parquet(s"$path/$cdfRel")
-
-    val staged = new File(newStagingDir())
-    val rewritten = rewrite(matching, touchedDf)
-    val stats = writeStaged(rewritten, staged.toString, snap.schema)
-    var affectedUpd = 0L
-    if (op == "update") {
-      // pre-images scan the touched files once; post-images derive
-      // from READING THE PRE-IMAGES BACK (∝ matched rows — the SET
-      // expressions are deterministic over row values, so applying
-      // them to the read-back rows reproduces the live scan's
-      // post-state exactly) instead of a third touched-file scan.
-      // Mixed parquet schemas inside the feed dir are fine: readers
-      // select the table schema + _change_type only.
-      matching.drop(LogTable.RowIdPhysCol)
-        .withColumn("_change_type", lit("update_preimage"))
-        .write.mode("overwrite").parquet(s"$path/$cdfRel")
-      val preRead = spark.read.parquet(s"$path/$cdfRel")
-        .drop("_change_type")
-      affectedUpd = preRead.count()
-      rewrite(preRead, preRead)
-        .withColumn("_change_type", lit("update_postimage"))
-        .write.mode("append").parquet(s"$path/$cdfRel")
-    }
-
-    val v = finalizeStaged(staged, stats, snap.schema,
-      info(op, Some(cdfRel)) +: touched.map(a => Remove(a.path)),
-      readVersion = Some(readVersion))
-    val rowsBefore = touched.map(_.logicalRows).sum
-    // the rewrite's survivors are exactly OUR commit's added files —
-    // O(commit) from its own log entry, no manifest materialization
-    // (and immune to rows a racing append landed in between)
-    val rowsAfter = addedFiles(v).map(_.rows).sum
-    val affected =
-      if (op == "delete") rowsBefore - rowsAfter
-      else affectedUpd
-    RowOpResult(v, affected, skippedCount, candidates.size, touched.size)
-  }
 
   /** Table-relative paths of the files one commit added. */
   def addedPaths(v: Long): Seq[String] = addedFiles(v).map(_.path)

@@ -12,37 +12,43 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** What a MERGE's change-feed write saw: its image counts, the
-  * distinct target files its pre-images and deletes came from, and
-  * whether a target row took part in more than one matched pair. */
+/** What a row-level change feed's write saw: its image counts, the
+  * changed-row count (pre-images and deletes) of each target file it
+  * touched, keyed by scan-time file URI, and whether a target row
+  * took part in more than one matched pair. */
 private[sources] final case class MergeFeedStats(
-    updated: Long, deleted: Long, inserted: Long, touched: Set[String],
+    updated: Long, deleted: Long, inserted: Long, touched: Map[String, Long],
     duplicateMatch: Boolean) extends WriteTaskStats {
   def +(o: MergeFeedStats): MergeFeedStats =
     MergeFeedStats(updated + o.updated, deleted + o.deleted,
-      inserted + o.inserted, touched ++ o.touched,
+      inserted + o.inserted,
+      o.touched.foldLeft(touched) { case (m, (f, n)) =>
+        m.updated(f, m.getOrElse(f, 0L) + n) },
       duplicateMatch || o.duplicateMatch)
 }
 
-/** The MERGE change-feed `WriteJobStatsTracker`: each write task
-  * counts the `update_preimage`, `delete` and `insert` images it
-  * writes, collects the `__file` of its pre-images and deletes, and
-  * flags a target row, keyed by (`__file`, `__idx`), that appears in
-  * more than one pre-image, delete or probe — a second source match.
-  * Probe images (`_change_type` = [[MergeFeedTracker.Probe]]) stand for
-  * matched pairs no action fires on; [[MergeFeedFormat]] keeps them
-  * off disk. Results come back as task results (committed attempts
-  * only), so the fold is exact and bounded by the touched files.
+/** The change-feed `WriteJobStatsTracker` of every row-level change
+  * ([[LogTable.commitChanges]]: DELETE, UPDATE and MERGE): each write
+  * task counts the `update_preimage`, `delete` and `insert` images it
+  * writes, counts the pre-images and deletes per `__file`, and flags
+  * a target row, keyed by (`__file`, `__idx`), that appears in more
+  * than one pre-image, delete or probe — a second MERGE source match.
+  * Probe images (`_change_type` = [[MergeFeedTracker.Probe]]) stand
+  * for matched pairs no action fires on; [[MergeFeedFormat]] keeps
+  * them off disk. Results come back as task results (committed
+  * attempts only), so the fold is exact and bounded by the touched
+  * files.
   *
   * The duplicate check is per task: it is sound only when every match
-  * of one target row is written by the same task, which the caller
-  * guarantees by checking the plan (a shuffled equi-join). */
+  * of one target row is written by the same task, which MERGE
+  * guarantees by checking the plan (a shuffled equi-join); a DELETE
+  * or UPDATE images each scanned row once, so it never fires. */
 private[sources] final class MergeFeedTracker(ctOrd: Int, fileOrd: Int,
                                                idxOrd: Int)
   extends WriteJobStatsTracker {
 
   @transient private var total =
-    MergeFeedStats(0L, 0L, 0L, Set.empty, duplicateMatch = false)
+    MergeFeedStats(0L, 0L, 0L, Map.empty, duplicateMatch = false)
 
   override def newTaskInstance(): WriteTaskStatsTracker =
     new MergeFeedTaskTracker(ctOrd, fileOrd, idxOrd)
@@ -63,11 +69,17 @@ private[sources] object MergeFeedTracker {
     * takes no action. Counted by the tracker, never written. */
   val Probe = "merge_probe"
 
+  /** The refusal of a feed whose write saw a duplicate match. */
+  def cardinalityViolation(): IllegalStateException =
+    new IllegalStateException(
+      "MERGE cardinality violation: a target row matched by " +
+        "multiple source rows (as in ANSI/Delta, this is an error)")
+
   /** The tracker for a feed whose written columns are `dataAttrs`. */
   def apply(dataAttrs: Seq[Attribute]): MergeFeedTracker = {
     def ordinal(n: String): Int = {
       val i = dataAttrs.indexWhere(_.name == n)
-      require(i >= 0, s"merge feed has no column '$n'")
+      require(i >= 0, s"change feed has no column '$n'")
       i
     }
     new MergeFeedTracker(ordinal("_change_type"), ordinal("__file"),
@@ -87,7 +99,7 @@ private final class MergeFeedTaskTracker(ctOrd: Int, fileOrd: Int,
 
   private final class Seen {
     val rows = new mutable.LongMap[Unit]()
-    var touched = false
+    var changed = 0L
   }
 
   private var updated = 0L
@@ -107,7 +119,7 @@ private final class MergeFeedTaskTracker(ctOrd: Int, fileOrd: Int,
       val isPre = ct == PreImage
       val isDel = !isPre && ct == Delete
       if (isPre) updated += 1 else if (isDel) deleted += 1
-      else require(ct == Probe, s"unexpected merge feed image type $ct")
+      else require(ct == Probe, s"unexpected change feed image type $ct")
       val file = row.getUTF8String(fileOrd)
       var seen = byFile.getOrElse(file, null)
       if (seen == null) {
@@ -120,14 +132,14 @@ private final class MergeFeedTaskTracker(ctOrd: Int, fileOrd: Int,
         if (seen.rows.contains(idx)) duplicate = true
         else seen.rows.update(idx, ())
       }
-      if (isPre || isDel) seen.touched = true
+      if (isPre || isDel) seen.changed += 1
     }
   }
 
   override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
     MergeFeedStats(updated, deleted, inserted,
-      byFile.iterator.collect { case (f, s) if s.touched => f.toString }
-        .toSet, duplicate)
+      byFile.iterator.collect { case (f, s) if s.changed > 0L =>
+        f.toString -> s.changed }.toMap, duplicate)
 }
 
 /** Parquet that keeps [[MergeFeedTracker.Probe]] images off disk: the write

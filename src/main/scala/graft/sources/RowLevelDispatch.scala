@@ -24,11 +24,14 @@ import org.apache.spark.sql.functions.lit
   * contract hands us an already-built session) and claims exactly
   * the plans whose target is a [[GraftLogTableV2]]:
   *
-  *  - `UPDATE` executes [[LogTable.update]] — the stats-pruned
-  *    skip/scan/rewrite pipeline, cost ∝ touched files;
+  *  - `UPDATE` executes [[LogTable.update]] — stats-pruned candidates,
+  *    rewrite ∝ touched files;
   *  - `MERGE` re-drives the statement's own SQL text through
-  *    [[SqlMerge.mergeLog]] — the file-granularity merge-on-write
-  *    planner (rewrite ∝ touched files + inserts).
+  *    [[SqlMerge.mergeLog]] — rewrite ∝ touched files + inserts.
+  *
+  * Both build change images and commit through one executor,
+  * [[LogTable.commitChanges]]: one change-feed write, then a rewrite
+  * of the files it touched.
   *
   * Everything else returns Nil and falls through to Spark's own
   * strategies untouched. */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, GraftWriteShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction,
@@ -21,9 +21,11 @@ import org.apache.spark.sql.functions._
   * target FULL OUTER JOIN source on the merge condition, a branch
   * label chosen per row by the first action whose condition holds
   * (ANSI action-order semantics), every output column a CASE over the
-  * branch. [[mergeLog]] commits the result to a [[LogTable]] at file
+  * branch. [[mergeLog]] turns the join into change images and commits
+  * them to a [[LogTable]] through [[LogTable.commitChanges]], the
+  * row-level change executor DELETE and UPDATE share: at file
   * granularity (only files holding a changed row are rewritten, the
-  * pre-merge version stays time-travel-readable) from one execution
+  * pre-merge version stays time-travel-readable), from one execution
   * of the join, its change-feed write;
   * [[mergeFrames]] returns it as a frame — the in-memory reference
   * the log path is checked against.
@@ -177,7 +179,7 @@ object SqlMerge {
         if (r.isNullAt(i)) 0L else r.getLong(i)
       }
       if (rows.exists(r => l(r, "max_match") > 1L))
-        throw cardinalityViolation()
+        throw MergeFeedTracker.cardinalityViolation()
       val touched = rows.iterator.filter(!_.isNullAt(0))
         .map(_.getString(0)).toSet
       (MergeResult(rows.map(l(_, "updated")).sum,
@@ -248,12 +250,11 @@ object SqlMerge {
     * Delta ships.
     *
     * ONE execution of the (never-materialized) join per MERGE: the
-    * change-feed write. A `WriteJobStatsTracker` on that write
-    * ([[MergeFeedTracker]]) counts its images, collects the files of
-    * its pre-images and deletes (the touched set, bounded by #touched
-    * files) and flags a target row seen in two matched pairs; the
-    * driver refuses a cardinality violation before anything commits
-    * and deletes the feed. Every matched pair counts toward the
+    * change-feed write of [[LogTable.commitChanges]]. Its
+    * [[MergeFeedTracker]] counts the images, collects the touched
+    * files and flags a target row seen in two matched pairs; the
+    * executor refuses a cardinality violation before anything
+    * commits and deletes the feed. Every matched pair counts toward the
     * cardinality rule, also one no action fires on: such a pair
     * writes a probe image that the tracker counts and the feed's
     * output writer drops ([[MergeFeedFormat]]). `unchanged` is the
@@ -347,10 +348,10 @@ object SqlMerge {
     // empty after an exchange — and a deletion-vectored snapshot's
     // read plan contains an anti-join), deletion vectors subtracted.
     // Row-tracked targets read WITH their effective ids, so the
-    // rewrite below can carry each surviving/updated row's identity
-    // into the new files (merge-inserted rows id fresh at commit).
-    val tracked = log.rowTrackingEnabled()
-    val target = log.loadForMerge(spark, readVersion)
+    // rewrite carries each surviving/updated row's identity into the
+    // new files (merge-inserted rows id fresh at commit).
+    val target = log.readAddsWithProvenance(spark, readVersion, adds)
+    val tracked = target.columns.contains(LogTable.RowIdPhysCol)
     val snapCols = target.columns.toSeq.filterNot(c =>
       c == "__file" || c == "__idx" || c == LogTable.RowIdPhysCol)
     val core = analyzeFrame(spark, p, target, snapCols)
@@ -420,93 +421,11 @@ object SqlMerge {
         core.statsAndTouched(col(s"${p.targetAlias}.__file"))
       if (touched.isEmpty && pre.inserted == 0L) return pre
     }
-
-    val cdfRel = s"_cdf/${java.util.UUID.randomUUID()}"
-    val feedDir = s"${log.path}/$cdfRel"
-    try {
-      val feed = GraftWriteShim.writeParquet(cdf, feedDir, Seq.empty,
-        (data, _) => MergeFeedTracker(data), new MergeFeedFormat).result()
-      if (feed.duplicateMatch) throw cardinalityViolation()
-      val stats = MergeResult(feed.updated, feed.deleted, feed.inserted,
-        adds.map(_.logicalRows).sum - feed.updated - feed.deleted)
-      // __file carries the scan-time file-path URI; normalize both
-      // sides to absolute paths for the attribution (clone snapshots
-      // mix data roots, so bare names could collide across roots)
-      val touchedPaths = feed.touched.map(LogTable.provPath)
-      val touched = adds.filter(a =>
-        touchedPaths.contains(log.absLivePath(a)))
-      if (feed.touched.isEmpty && stats.inserted == 0L) {
-        log.dropStaging(feedDir)
-        stats
-      } else {
-        // the rewrite derives from the feed read-back (by the written
-        // schema — no footer inference): survivors are the touched
-        // files scanned once (∝ touched bytes, full pushdown — NOT a
-        // join re-execution) minus the feed's changed rows
-        // (anti-join on scan provenance; the cardinality check above
-        // guarantees one image set per target row), and the
-        // replacement rows are the feed's post-images and inserts,
-        // read back ∝ matches. Committed bytes, feed bytes and
-        // counters come from the SAME execution, so they cannot
-        // diverge even under a non-deterministic source expression.
-        val feedRaw = log.readStaged(spark, feedDir, cdf.schema)
-        val dataCols: Seq[Column] =
-          (snapCols ++ (if (tracked) Seq(LogTable.RowIdPhysCol)
-                        else Seq.empty)).map(col)
-        val replacements = feedRaw.filter(
-          col("_change_type").isin("update_postimage", "insert"))
-          .select(dataCols: _*)
-        val stagedDf =
-          if (touched.isEmpty) replacements
-          else {
-            val changedKeys = feedRaw.filter(
-              col("_change_type").isin("update_preimage", "delete"))
-              .select(col("__file").as("__kfile"),
-                col("__idx").as("__kidx"))
-            // changed keys = exactly updated+deleted rows — a MEASURED
-            // count, so the broadcast choice is size-gated, not a
-            // local-shape constant; past the gate the anti-join
-            // shuffles (file, idx) pairs only
-            val keys =
-              if (stats.updated + stats.deleted <=
-                  LogTable.DvBroadcastMaxRows) broadcast(changedKeys)
-              else changedKeys
-            val scan = log.readAddsWithProvenance(spark, readVersion,
-              touched)
-            scan.join(keys,
-              scan("__file") === keys("__kfile") &&
-                scan("__idx") === keys("__kidx"), "left_anti")
-              .select(dataCols: _*)
-              .unionByName(replacements)
-          }
-        val staged = log.newStagingDir()
-        val written = log.writeStaged(stagedDf, staged, log.schema)
-        val allocates = idCols.nonEmpty && stats.inserted > 0L
-        log.commitStagedRewrite(staged, written, touched.map(_.path),
-          op = "merge", readVersion = Some(readVersion),
-          cdfDir = Some(cdfRel), txn = txn,
-          identityUpdate = if (allocates) idSpecs else Map.empty,
-          identityBasis =
-            if (allocates)
-              Some(idSpecs.map { case (c, s) => c -> s.highWater })
-            else None)
-        stats
-      }
-    } catch { case e: Throwable =>
-      // the attempt's change-feed directory is a dead orphan once the
-      // merge refuses (cardinality, identity-race re-plans and true
-      // conflicts alike) — reclaim it rather than waiting out
-      // vacuum's retention horizon; the staged data files are
-      // reclaimed by the commit layer itself
-      log.dropStaging(feedDir)
-      throw e
-    }
+    val (_, feed) = log.commitChanges(spark, readVersion, adds, cdf, "merge",
+      mor = false, txn = txn, identity = idSpecs)
+    MergeResult(feed.updated, feed.deleted, feed.inserted,
+      adds.map(_.logicalRows).sum - feed.updated - feed.deleted)
   }
-
-  private def cardinalityViolation(): IllegalStateException =
-    new IllegalStateException(
-      "MERGE cardinality violation: a target row matched by " +
-        "multiple source rows (as in ANSI/Delta, this is an error)")
 
   /** Whether every source match of one target row reaches the same
     * write task of `feed`: its topmost join — the merge join, which

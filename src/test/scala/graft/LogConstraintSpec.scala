@@ -70,6 +70,9 @@ class LogConstraintSpec extends SparkSpec {
     }
     assert(t.currentVersion == before)
     assert(t.load(spark).agg(min("bal")).as[Double].head() == 10.0)
+    // neither refusal leaves its change feed or vector dir behind
+    assert(entriesUnder(t.path, "_cdf").isEmpty, entriesUnder(t.path, "_cdf"))
+    assert(entriesUnder(t.path, "_dv").isEmpty, entriesUnder(t.path, "_dv"))
     // a legal update still lands
     t.update(spark, col("k") === 1L, Map("bal" -> lit(0.0)))
     assert(t.load(spark).agg(min("bal")).as[Double].head() == 0.0)

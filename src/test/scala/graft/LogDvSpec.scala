@@ -263,8 +263,12 @@ class LogDvSpec extends SparkSpec {
     intercept[java.util.ConcurrentModificationException] {
       b.deleteMor(spark, col("k") === 2L)
     }
-    // a's delete survives; b's aborted commit changed nothing
+    // a's delete survives; b's aborted commit changed nothing and
+    // left no change feed or vector dir beside a's
     assert(rows(a.load(spark)) == Set((2L, "b"), (3L, "c")))
+    assert(entriesUnder(dir, "_cdf").size == 1, entriesUnder(dir, "_cdf"))
+    assert(entriesUnder(dir, "_dv") ==
+      a.liveAdds().flatMap(_.dv).map(d => new File(d.path).getName))
   }
 
   test("a big vector falls back to the shuffled anti-join and still" +

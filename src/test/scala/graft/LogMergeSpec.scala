@@ -1,8 +1,6 @@
 package graft
 
 import graft.sources.{GraftTableCatalog, IdentitySpec, LogTable, SqlMerge}
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -162,27 +160,7 @@ class LogMergeSpec extends SparkSpec {
   }
 
   /** Feed directories a table holds under `_cdf`. */
-  private def feedDirs(t: LogTable): Seq[String] =
-    Option(new java.io.File(t.path, "_cdf").listFiles()).toSeq.flatten
-      .map(_.getName)
-
-  /** Stage names of the Spark jobs `body` runs outside any SQL
-    * execution (a parquet footer-inference job is one). */
-  private def jobsOutsideSql(body: => Unit): Seq[String] = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .isEmpty)
-          jobs.add(e.stageInfos.map(_.name).mkString(";"))
-    }
-    GraftListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; GraftListenerBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.toArray.map(_.toString).toSeq
-  }
+  private def feedDirs(t: LogTable): Seq[String] = entriesUnder(t.path, "_cdf")
 
   test("a MERGE executes its join once: one execution scans the " +
     "source and every live target file, one scans only the touched " +

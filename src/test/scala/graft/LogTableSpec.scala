@@ -2,7 +2,7 @@ package graft
 
 import java.io.File
 
-import graft.sources.LogTable
+import graft.sources.{LocalFsCommitCoordinator, LogCommitCoordinator, LogTable, RowOpResult, SqlMerge}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -94,6 +94,124 @@ class LogTableSpec extends SparkSpec {
     assert(cdf.filter(col("_change_type") === "update_postimage")
       .select("k", "v").as[(Long, String)].collect().toSeq ==
       Seq((10L, "C")))
+  }
+
+  /** Three single-file commits (k 2-4, 10-11, 20-22) and the name of
+    * the file holding k = 11. */
+  private def threeFiles(): (LogTable, String) = {
+    val t = new LogTable(s"${tmp()}/t")
+    t.append(Seq((2L, "a"), (4L, "b")).toDF("k", "v").repartition(1))
+    t.append(Seq((10L, "c"), (11L, "d")).toDF("k", "v").repartition(1))
+    t.append(Seq((20L, "e"), (22L, "f")).toDF("k", "v").repartition(1))
+    (t, new File(t.liveAdds().find(_.stats("k").max.contains(11L)).get
+      .path).getName)
+  }
+
+  /** The SQL plans and the jobs outside any SQL execution of `op`. */
+  private def traced(t: LogTable)(op: LogTable => RowOpResult)
+      : (RowOpResult, Seq[String], Seq[String]) = {
+    var res: RowOpResult = null
+    var outside = Seq.empty[String]
+    val plans = plansOf { outside = jobsOutsideSql { res = op(t) } }
+    (res, plans, outside)
+  }
+
+  // `k % 10 = 1` survives stats pruning in every file and matches
+  // only k = 11
+  private val onlyEleven = col("k") % 10L === 1L
+
+  test("a copy-on-write DELETE and UPDATE each scan the candidate " +
+    "files once, then only the touched file, and run no job outside " +
+    "an SQL execution") {
+    Seq[LogTable => RowOpResult](
+      _.delete(spark, onlyEleven),
+      _.update(spark, onlyEleven, Map("v" -> lit("x")))).foreach { op =>
+      val (t, touchedName) = threeFiles()
+      val (res, plans, outside) = traced(t)(op)
+      assert(res.filesScanned == 3 && res.filesRewritten == 1 &&
+        res.rowsAffected == 1L, res)
+      // a scan's Location names its first file and counts the others
+      def scans(plan: String): Seq[String] = plan.split('\n').toSeq
+        .filter(l => l.contains("Location:") && l.contains(s"${t.path}/data/"))
+      val dataScans = plans.filter(p => scans(p).nonEmpty)
+      val all = dataScans.mkString("\n----\n")
+      assert(dataScans.size == 2, all)
+      assert(dataScans.count(p =>
+        scans(p).exists(_.contains("... 2 entries"))) == 1, all)
+      assert(dataScans.count(p =>
+        scans(p).forall(_.contains(s"$touchedName]"))) == 1, all)
+      assert(outside.isEmpty, outside)
+    }
+  }
+
+  test("a merge-on-read DELETE runs its feed and vector writes, an " +
+    "UPDATE also its post-image staging, and no job outside them") {
+    Seq[(LogTable => RowOpResult, Int)](
+      (_.deleteMor(spark, onlyEleven), 2),
+      (_.updateMor(spark, onlyEleven, Map("v" -> lit("x"))), 3))
+      .foreach { case (op, executions) =>
+        val (t, _) = threeFiles()
+        val (res, plans, outside) = traced(t)(op)
+        assert(res.filesScanned == 3 && res.filesRewritten == 1 &&
+          res.rowsAffected == 1L, res)
+        assert(plans.size == executions, plans.mkString("\n----\n"))
+        assert(outside.isEmpty, outside)
+      }
+  }
+
+  test("a DELETE, UPDATE or MOR DELETE/UPDATE whose candidates hold " +
+    "no matching row commits nothing and leaves no change feed") {
+    val (t, _) = threeFiles()
+    val v = t.currentVersion.get
+    // survives stats pruning in every file, matches no row
+    val none = col("k") % 10L === 5L
+    val set = Map("v" -> lit("x"))
+    Seq(t.delete(spark, none), t.update(spark, none, set),
+      t.deleteMor(spark, none), t.updateMor(spark, none, set)).foreach(r =>
+      assert(r == RowOpResult(v, 0L, 0, 3, 0), r))
+    assert(t.currentVersion.contains(v))
+    assert(entriesUnder(t.path, "_cdf").isEmpty, entriesUnder(t.path, "_cdf"))
+    assert(entriesUnder(t.path, "_dv").isEmpty, entriesUnder(t.path, "_dv"))
+  }
+
+  test("a row-level change whose commit lands but whose claim then " +
+    "fails keeps the change feed and vectors the commit reads") {
+    Seq(("delete", Set((2L, "a"), (4L, "b"), (10L, "c"), (20L, "e"),
+        (22L, "f"))), ("update", Set((2L, "a"), (4L, "b"), (10L, "c"),
+        (11L, "x"), (20L, "e"), (22L, "f")))).foreach { case (verb, after) =>
+      Seq[LogTable => Unit](
+        t => if (verb == "delete") t.delete(spark, onlyEleven)
+             else t.update(spark, onlyEleven, Map("v" -> lit("x"))),
+        t => if (verb == "delete") t.deleteMor(spark, onlyEleven)
+             else t.updateMor(spark, onlyEleven, Map("v" -> lit("x"))),
+        t => SqlMerge.mergeLog(spark, s"""MERGE INTO tgt t USING lt_ack s
+          ON t.k = s.k WHEN MATCHED THEN ${if (verb == "delete") "DELETE"
+          else "UPDATE SET v = 'x'"}""", t)).foreach { op =>
+        val (t, _) = threeFiles()
+        Seq(11L).toDF("k").createOrReplaceTempView("lt_ack")
+        val v = t.currentVersion.get + 1L
+        // the claim lands, then its acknowledgement is lost
+        val lossy = new LogTable(t.path, coordinator = new LogCommitCoordinator {
+          override def claim(tmp: File, target: File): Boolean = {
+            LocalFsCommitCoordinator.claim(tmp, target)
+            throw new java.io.IOException("acknowledgement lost")
+          }
+        })
+        intercept[java.io.IOException](op(lossy))
+        val fresh = new LogTable(t.path)
+        assert(fresh.currentVersion.contains(v))
+        assert(entriesUnder(t.path, "_cdf").size == 1,
+          entriesUnder(t.path, "_cdf"))
+        assert(entriesUnder(t.path, "_dv").toSet ==
+          fresh.liveAdds().flatMap(_.dv).map(d => new File(d.path).getName)
+            .toSet, entriesUnder(t.path, "_dv"))
+        assert(fresh.load(spark).select("k", "v").as[(Long, String)]
+          .collect().toSet == after)
+        assert(fresh.changes(spark, v - 1L, v).count() ==
+          (if (verb == "delete") 1L else 2L))
+      }
+    }
+    spark.catalog.dropTempView("lt_ack")
   }
 
   test("version and timestamp time travel resolve historic " +

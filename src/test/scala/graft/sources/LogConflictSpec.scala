@@ -6,53 +6,56 @@ import org.apache.spark.sql.functions._
 /** Optimistic-concurrency conflict detection (Delta's rule): a
   * commit that REMOVES files revalidates them against the head it
   * actually lands on — losing a race to a writer who rewrote the
-  * same file is a hard conflict, not silent lost-update. Lives in
-  * `graft.sources` to drive the package-private staged-commit path
-  * with a deliberately stale read version. */
+  * same file is a hard conflict, not silent lost-update. A commit
+  * coordinator that lands another writer's commit first makes the
+  * race deterministic. */
 class LogConflictSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_logconf").toString
 
+  /** A coordinator that runs `other` once, before its first claim: the
+    * committing writer's read version is then stale. */
+  private def racedBy(other: => Unit): LogCommitCoordinator =
+    new LogCommitCoordinator {
+      @volatile private var raced = false
+      override def claim(t: java.io.File, target: java.io.File): Boolean = {
+        if (!raced) { raced = true; other }
+        LocalFsCommitCoordinator.claim(t, target)
+      }
+    }
+
   test("two writers rewriting the same file: the second, stale " +
     "commit throws instead of clobbering the first") {
-    val t = new LogTable(s"${tmp()}/t")
-    t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(1))
-    val readVersion = t.currentVersion // both writers read v0
-    val victim = t.liveAdds().head.path
-
-    // writer A rewrites the file (a delete) and wins
-    t.delete(spark, col("k") === 1L)
-
-    // writer B stages its own rewrite of the SAME file against the
-    // stale read version — revalidation must reject it
-    val staged = t.newStagingDir()
-    val stats = t.writeStaged(Seq((2L, "B")).toDF("k", "v"), staged, t.schema)
+    val dir = s"${tmp()}/t"
+    val a = new LogTable(dir)
+    a.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(1))
+    // writer A rewrites the file (a delete) and wins while writer B
+    // rewrites the SAME file against the stale read version —
+    // revalidation must reject B
+    val b = new LogTable(dir,
+      coordinator = racedBy(a.delete(spark, col("k") === 1L)))
     val err = intercept[java.util.ConcurrentModificationException] {
-      t.commitStagedRewrite(staged, stats, removePaths = Seq(victim),
-        op = "delete", readVersion = readVersion)
+      b.update(spark, col("k") === 2L, Map("v" -> lit("B")))
     }
     assert(err.getMessage.contains("another writer"))
     // A's outcome stands untouched
-    assert(t.load(spark).as[(Long, String)].collect().toSet
+    assert(a.load(spark).as[(Long, String)].collect().toSet
       == Set((2L, "b")))
   }
 
   test("a stale reader whose removed files are still live is NOT a " +
     "conflict (disjoint commits interleave freely)") {
-    val t = new LogTable(s"${tmp()}/t")
-    t.append(Seq((1L, "a")).toDF("k", "v").repartition(1)) // file 1
-    val readVersion = t.currentVersion
-    val mine = t.liveAdds().head.path
-    t.append(Seq((10L, "x")).toDF("k", "v").repartition(1)) // unrelated
-    // stale readVersion, but the file this commit removes is still
+    val dir = s"${tmp()}/t"
+    val a = new LogTable(dir)
+    a.append(Seq((1L, "a")).toDF("k", "v").repartition(1)) // file 1
+    // stale read version, but the file this commit removes is still
     // live at the new head — commit proceeds (Delta's rule)
-    val staged = t.newStagingDir()
-    val stats = t.writeStaged(Seq((1L, "a2")).toDF("k", "v"), staged, t.schema)
-    t.commitStagedRewrite(staged, stats, removePaths = Seq(mine),
-      op = "update", readVersion = readVersion)
-    assert(t.load(spark).as[(Long, String)].collect().toSet
+    val b = new LogTable(dir, coordinator = racedBy(
+      a.append(Seq((10L, "x")).toDF("k", "v").repartition(1)))) // unrelated
+    b.update(spark, col("k") === 1L, Map("v" -> lit("a2")))
+    assert(a.load(spark).as[(Long, String)].collect().toSet
       == Set((1L, "a2"), (10L, "x")))
   }
 

@@ -7,7 +7,10 @@
 #
 # BASE and HEAD are any git revisions of this repository. Both are
 # exported (git archive) into WORKDIR/base and WORKDIR/head (default
-# WORKDIR /tmp/graft-ab) and built once before the first timed run.
+# WORKDIR /tmp/graft-ab), built once, and warmed by one unrecorded
+# short run (seed FIRST_SEED, outside the measured range): a copy's
+# first run dumps the JVM class-data archive, which slows it and
+# inflates its heap, so no measured run is a copy's first.
 # Pair i (1..PAIRS) runs
 #
 #   python3 perfbench/run.py --workload WORKLOAD --seed FIRST_SEED+i \
@@ -27,7 +30,7 @@
 set -euo pipefail
 
 if [ $# -lt 4 ]; then
-  sed -n '2,26p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,30p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 base_rev=$1 head_rev=$2 workload=$3 pairs=$4
@@ -49,6 +52,10 @@ for side in base head; do
   mkdir -p "$workdir/$side"
   git -C "$repo" archive "$sha" | tar -x -C "$workdir/$side"
   (cd "$workdir/$side" && python3 perfbench/build.py >&2)
+  (cd "$workdir/$side" && python3 perfbench/run.py --workload "$workload" \
+    --seed "$first_seed" --seconds 1 --trace 0 >/dev/null \
+    2>>"$workdir/$side.log") ||
+    echo "[ab] $side warm-up exited non-zero (see $workdir/$side.log)" >&2
 done
 
 run() { # side pair seed
