@@ -1170,6 +1170,41 @@ object SparkEntry {
          FROM customer WHERE c_custkey <= 200
          ORDER BY k""")),
 
+    Query("catalog_dv_read", (s, d) => {
+      // regression guard for catalog SQL over deletion-vector
+      // snapshots: a log table vectored by two merge-on-read DELETEs,
+      // read back by name — the first vectored version VERSION AS OF,
+      // left-joined to the current snapshot and to orders. Both reads
+      // run as the load() plan GraftReadSubstitution swaps in; the
+      // raw files would resurrect the vectored rows
+      val tag = java.lang.Integer.toHexString(d.hashCode)
+      val wh = java.nio.file.Files.createTempDirectory("graft_catdv")
+      val lt = new graft.sources.LogTable(s"$wh/dim")
+      lt.append(t(s, d, "customer").filter(col("c_custkey") <= 300)
+        .select(col("c_custkey").as("k"), col("c_nationkey").as("nation"),
+          col("c_acctbal").as("bal")))
+      lt.deleteMor(s, col("k") > 100L && col("k") <= 150L)
+      val v1 = lt.currentVersion.get
+      lt.deleteMor(s, col("nation") === 3)
+      t(s, d, "orders").createOrReplaceTempView(s"catdv_orders_$tag")
+      val cat = freshCatalog(s, "catdv", wh.toString)
+      s.sql(s"""SELECT p.k, p.bal, d.k IS NOT NULL AS live,
+                       count(o.o_orderkey) AS n_orders
+                FROM $cat.dim VERSION AS OF $v1 p
+                LEFT JOIN $cat.dim d ON d.k = p.k
+                LEFT JOIN catdv_orders_$tag o ON o.o_custkey = p.k
+                GROUP BY p.k, p.bal, d.k
+                ORDER BY p.k""")
+    },
+      Some("""SELECT CAST(c_custkey AS BIGINT) AS k, c_acctbal AS bal,
+                c_nationkey <> 3 AS live,
+                CAST(count(o_orderkey) AS BIGINT) AS n_orders
+         FROM customer LEFT JOIN orders ON o_custkey = c_custkey
+         WHERE c_custkey <= 300
+           AND NOT (c_custkey > 100 AND c_custkey <= 150)
+         GROUP BY c_custkey, c_acctbal, c_nationkey
+         ORDER BY k""")),
+
     Query("log_table_changes", (s, d) => {
       // the change-data-feed surface: row-level changes between two
       // versions — appends derive inserts from their committed

@@ -667,7 +667,7 @@ object DeltaExport {
       else log.distributedManifest(spark, v)
     val anyDv: Boolean = dist match {
       case Some(_) =>
-        val (dv0, anyAbs, _) = log.bridgeFacts(spark, Some(v))
+        val (dv0, anyAbs, _) = log.fileStateFacts(spark, Some(v))
         require(!anyAbs,
           "cannot export a shallow clone — its snapshot references " +
             "absolute paths outside this table root")
@@ -891,7 +891,7 @@ object DeltaExport {
       else log.distributedManifest(spark, v)
     val anyDv: Boolean = dist match {
       case Some(_) =>
-        val (dv0, anyAbs, _) = log.bridgeFacts(spark, Some(v))
+        val (dv0, anyAbs, _) = log.fileStateFacts(spark, Some(v))
         require(!anyAbs,
           "cannot checkpoint a shallow clone — its snapshot " +
             "references absolute paths outside this table root")

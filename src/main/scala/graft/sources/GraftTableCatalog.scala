@@ -50,8 +50,8 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     // catalog user never needs session-build extensions
     try GraftRowLevelStrategy.register(SparkSession.active)
     catch { case scala.util.control.NonFatal(_) => () }
-    // V1-bridged READS (DV / mixed-layout snapshots) substitute to
-    // the load() logical plan — real stats + codegen'd execution
+    // SQL reads of DV / clone / hidden- or mixed-layout snapshots
+    // run as the load() logical plan — real stats + codegen'd execution
     try GraftReadSubstitution.register(SparkSession.active)
     catch { case scala.util.control.NonFatal(_) => () }
     // the `table_changes` TVF rides the same no-extensions contract
@@ -177,7 +177,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
           val log = new LogTable(dir.toString)
           log.refs.get(version) match {
             case Some(("tag", tv)) =>
-              return GraftLogTableV2.pinned(
+              return new GraftPinnedReadTable(
                 s"$catalogName.${ident.name()}", log, tv)
             case Some(("branch", _)) =>
               return new GraftLogTableV2(
@@ -201,7 +201,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     val log = new LogTable(dir.toString)
     if (!log.versions.contains(v)) throw new IllegalArgumentException(
       s"table '$ident' has no committed version $v")
-    GraftLogTableV2.pinned(s"$catalogName.${ident.name()}", log, v)
+    new GraftPinnedReadTable(s"$catalogName.${ident.name()}", log, v)
   }
 
   /** `TIMESTAMP AS OF t` — Spark hands the instant as epoch MICROS;
@@ -210,7 +210,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
     val dir = dirOf(ident)
     if (!isLogTable(dir)) throw new NoSuchTableException(ident)
     val log = new LogTable(dir.toString)
-    GraftLogTableV2.pinned(s"$catalogName.${ident.name()}", log,
+    new GraftPinnedReadTable(s"$catalogName.${ident.name()}", log,
       log.versionAt(Math.floorDiv(timestampMicros, 1000L)))
   }
 

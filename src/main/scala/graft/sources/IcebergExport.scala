@@ -778,7 +778,7 @@ object IcebergExport {
       if (log.addsMaterializedAt(Some(v))) None
       else log.distributedManifest(spark, v)
     val anyDv = dist match {
-      case Some(_) => log.bridgeFacts(spark, Some(v))._1
+      case Some(_) => log.fileStateFacts(spark, Some(v))._1
       case None    => log.liveAdds(Some(v)).exists(_.dv.isDefined)
     }
 

@@ -1072,9 +1072,9 @@ final class LogTable(val path: String,
   }
 
   /** [[prunedAdds]] from a user predicate — resolves the conjuncts
-    * (generated-column derivation included) and runs the walk. The
-    * spec-facing planning seam; [[loadWhere]] and the row-level ops
-    * go through the same path. */
+    * (generated-column derivation included) and runs the walk:
+    * [[loadWhere]], the row-level ops and the scoped OPTIMIZE passes
+    * all prune through here. */
   private[graft] def prunedAddsFor(spark: SparkSession, pred: Column,
                                    version: Option[Long] = None)
       : (Seq[AddFile], Long) = {
@@ -1086,22 +1086,22 @@ final class LogTable(val path: String,
     prunedAdds(spark, v, base, derived)
   }
 
-  /** The file-state facts the V1-bridge decision needs —
-    * (any deletion vector, any absolute path, the distinct
-    * partition-value keysets) — answered WHERE THE MANIFEST LIVES:
+  /** The file-state facts [[GraftLogTableV2.needsLoadPlan]] decides
+    * on (any deletion vector, any absolute path, the distinct
+    * partition-value keysets), answered WHERE THE MANIFEST LIVES:
     * one tiny aggregate job over the distributed manifest above the
     * parquet-checkpoint threshold (memoized per immutable version),
     * the driver Seq below it. Without this, every catalog
     * resolution of a million-file table would collect the manifest
     * just to decide which scan path serves it. */
-  private val bridgeFactsCache = scala.collection.concurrent.TrieMap
+  private val fileStateFactsCache = scala.collection.concurrent.TrieMap
     .empty[Long, (Boolean, Boolean, Set[Set[String]])]
 
-  private[sources] def bridgeFacts(spark: SparkSession,
+  private[sources] def fileStateFacts(spark: SparkSession,
       version: Option[Long]): (Boolean, Boolean, Set[Set[String]]) = {
     val v = version.orElse(currentVersion).getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
-    bridgeFactsCache.getOrElseUpdate(v, {
+    fileStateFactsCache.getOrElseUpdate(v, {
       val snap = snapshotAt(v)
       val dist =
         if (snap.addsMaterialized) None else distributedManifest(spark, v)
@@ -1184,9 +1184,7 @@ final class LogTable(val path: String,
     val v = version.orElse(currentVersion).getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
     val snap = snapshotAt(v)
-    val base = resolvedConjuncts(spark, snap.schema, pred)
-    val derived = derivedConjuncts(spark, snap.generated, snap.tz, base)
-    val (adds, _) = prunedAdds(spark, v, base, derived)
+    val (adds, _) = prunedAddsFor(spark, pred, Some(v))
     val hidden = hiddenColsOf(snap)
     val out =
       if (adds.isEmpty)
@@ -2098,11 +2096,11 @@ final class LogTable(val path: String,
     * computing exact `count(*)`, and per eligible column: exact
     * NDV, null count, min/max, and string length stats. The result
     * is committed to TBLPROPERTIES (`graft.stats.*`, metadata-only)
-    * where [[columnStatistics]] and the DSv2 scan's
-    * `SupportsReportStatistics` pick it up for the cost-based
-    * planner. Cost at 100 TB: one scan + the multi-distinct
-    * expand — run it like Delta runs ANALYZE, on a schedule, not
-    * per query; the MANIFEST stats ([[manifestStatistics]]) stay
+    * where [[columnStatistics]] picks it up and
+    * [[GraftReadSubstitution]] hands it to the cost-based planner.
+    * Cost at 100 TB: one scan + the multi-distinct expand — run it
+    * like Delta runs ANALYZE, on a schedule, not per query; the
+    * MANIFEST stats ([[manifestStatistics]]) stay
     * free and always-current for the row-count/bytes tier. */
   def analyze(spark: SparkSession): TableStats = {
     val v = currentVersion.getOrElse(
@@ -2192,9 +2190,9 @@ final class LogTable(val path: String,
     * (with DVs an upper bound — vectored rows might have been the
     * nulls). This is what keeps broadcast planning exact on tables
     * whose snapshots the plain parquet scan cannot serve (deletion
-    * vectors, hidden partitioning, mixed layouts): the V1-bridge
-    * scan reports THESE numbers instead of Spark's
-    * `defaultSizeInBytes` pessimism. */
+    * vectors, hidden partitioning, mixed layouts):
+    * [[GraftReadSubstitution]] attaches THESE row counts to the
+    * substituted plan's parquet leaves. */
   def manifestStatistics(version: Option[Long] = None)
       : (Long, Long, Map[String, ColStats]) = {
     val adds = liveAdds(version)
@@ -3876,14 +3874,11 @@ final class LogTable(val path: String,
                              mor: Boolean): RowOpResult = {
     val readVersion = currentVersion.getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
-    val snap = snapshotAt(readVersion)
-    val base = resolvedConjuncts(spark, snap.schema, pred)
-    val derived = derivedConjuncts(spark, snap.generated, snap.tz, base)
     // file-skipping where the manifest lives: above the parquet-
     // checkpoint threshold only the candidate files are ever
     // collected to the driver (prunedAdds runs the walk as a job)
     val (candidates, totalLive) =
-      prunedAdds(spark, readVersion, base, derived)
+      prunedAddsFor(spark, pred, Some(readVersion))
     val skipped = (totalLive - candidates.size).toInt
     if (candidates.isEmpty)
       return RowOpResult(readVersion, 0L, skipped, 0, 0)
@@ -5148,12 +5143,9 @@ final class LogTable(val path: String,
     val readVersion = currentVersion.getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
     val snap = snapshotAt(readVersion)
-    val inScope = where.map { w =>
-      val base = resolvedConjuncts(spark, snap.schema, w)
-      val derived = derivedConjuncts(spark, snap.generated, snap.tz, base)
-      // scoped pass: the skipping walk runs where the manifest lives
-      prunedAdds(spark, readVersion, base, derived)._1
-    }.getOrElse(snap.adds)
+    // scoped pass: the skipping walk runs where the manifest lives
+    val inScope = where.map(prunedAddsFor(spark, _, Some(readVersion))._1)
+      .getOrElse(snap.adds)
     val small = inScope.filter(_.bytes < smallBytes)
     compactSubset(spark, snap, readVersion, small, targetBytes)
   }
@@ -5272,12 +5264,9 @@ final class LogTable(val path: String,
     val readVersion = currentVersion.getOrElse(
       throw new IllegalStateException(s"no log table at $path"))
     val snap = snapshotAt(readVersion)
-    val scope = where.map { w =>
-      val base = resolvedConjuncts(spark, snap.schema, w)
-      val derived = derivedConjuncts(spark, snap.generated, snap.tz, base)
-      // scoped pass: the skipping walk runs where the manifest lives
-      prunedAdds(spark, readVersion, base, derived)._1
-    }.getOrElse(snap.adds)
+    // scoped pass: the skipping walk runs where the manifest lives
+    val scope = where.map(prunedAddsFor(spark, _, Some(readVersion))._1)
+      .getOrElse(snap.adds)
     if (scope.isEmpty) return readVersion
     clusterScope(spark, snap, readVersion, clusterBy, nFiles, scope,
       properties = None)

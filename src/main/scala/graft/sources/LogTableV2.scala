@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
@@ -94,10 +94,7 @@ final class GraftLogTableV2(tableName: String, log: LogTable)
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (GraftLogTableV2.needsV1Bridge(log, None))
-      new DvScanBuilder(log, None)
-    else
-      new PruningScanBuilder(tableName, log, None, options)
+    GraftLogTableV2.scanBuilder(tableName, log, None, tableSchema, options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new LogWriteBuilder(log, info, overwriteAll = false)
@@ -137,7 +134,7 @@ object GraftLogTableV2 {
     // become PartitionFilters — Spark's own reader-side partition
     // pruning, on top of the log-side stats pruner. The layout is
     // the SNAPSHOT's (partition evolution can change it per version;
-    // mixed-epoch snapshots never reach here — needsV1Bridge).
+    // mixed-epoch snapshots never reach here — needsLoadPlan).
     val snapPartCols = version.map(log.partitionColsAt)
       .getOrElse(log.partitionCols)
     val opts =
@@ -150,46 +147,49 @@ object GraftLogTableV2 {
       classOf[ParquetFileFormat])
   }
 
-  /** Read-only pinned view for `VERSION AS OF` / `TIMESTAMP AS OF`
-    * (writes against a historical snapshot make no sense). A
-    * snapshot carrying deletion vectors serves the DV-subtracting
-    * scan instead of the raw parquet one. */
-  private[sources] def pinned(name: String, log: LogTable,
-                              version: Long): Table =
-    if (needsV1Bridge(log, Some(version)))
-      new DvReadTable(name, log, Some(version))
-    else new GraftPrunedReadTable(name, log, Some(version))
-
   /** Snapshots the plain parquet scan cannot serve: deletion vectors
     * (the raw file list would resurrect deleted rows), PARTITIONED
     * shallow clones (the snapshot mixes data ROOTS, but a single
     * FileTable pins one basePath — `LogTable.load` groups per root),
     * and mixed-layout snapshots after PARTITION EVOLUTION (files of
     * different partition-dir epochs cannot share one discovery —
-    * the load path groups per layout signature). All drop to the
-    * [[DvScanBuilder]] V1 bridge. */
-  private[sources] def needsV1Bridge(log: LogTable,
+    * the load path groups per layout signature). SQL reads them
+    * through [[LoadPlanScan]], which [[GraftReadSubstitution]]
+    * replaces with [[LogTable.load]]'s own plan. */
+  private[sources] def needsLoadPlan(log: LogTable,
                                      version: Option[Long]): Boolean = {
     val snapPartCols = version.map(log.partitionColsAt)
       .getOrElse(log.partitionCols)
     val transforms = version.map(log.partitionTransformsAt)
       .getOrElse(log.partitionTransforms)
     // hidden partitioning: the synthesized transform column must
-    // not surface through a raw FileTable scan — the bridge
-    // serves `LogTable.load`, which projects it away. Metadata-only
-    // — answered before the file-state facts are even consulted.
+    // not surface through a raw FileTable scan — `LogTable.load`
+    // projects it away. Metadata-only — answered before the
+    // file-state facts are even consulted.
     if (transforms.nonEmpty) return true
     // file-state facts come from the MANIFEST where it lives (a
     // tiny aggregate job above the checkpoint threshold, memoized
     // per immutable version) — a catalog resolution of a
     // million-file table never collects the file list here
     val (anyDv, anyAbs, keysets) =
-      log.bridgeFacts(SparkSession.active, version)
+      log.fileStateFacts(SparkSession.active, version)
     anyDv ||
       (snapPartCols.nonEmpty && anyAbs) ||
       keysets.size > 1 ||
       keysets.exists(_ != snapPartCols.toSet)
   }
+
+  /** The scan of a snapshot, live or pinned: manifest-pruned parquet
+    * for a plain one, [[LoadPlanScan]] for any other. `schema` is the
+    * one the relation resolved, not re-read from the log: a column
+    * added since must not reach a query that did not resolve it. */
+  private[sources] def scanBuilder(name: String, log: LogTable,
+                                   version: Option[Long], schema: StructType,
+                                   options: CaseInsensitiveStringMap)
+      : ScanBuilder =
+    if (needsLoadPlan(log, version))
+      new LoadPlanScan(name, log, version, schema)
+    else new PruningScanBuilder(name, log, version, options)
 
   /** v1 pushed filter → Column, for [[SupportsDelete.deleteWhere]].
     * Total over Spark's filter algebra; anything Spark can push, we
@@ -218,20 +218,46 @@ object GraftLogTableV2 {
   }
 }
 
-/** Read-only pinned table served through manifest-pruned planning —
-  * the `VERSION AS OF` twin of [[GraftLogTableV2.newScanBuilder]]'s
-  * live path. */
-private[sources] final class GraftPrunedReadTable(
-    tableName: String, log: LogTable, version: Option[Long])
+/** Read-only pinned table for `VERSION AS OF` / `TIMESTAMP AS OF`
+  * (writes against a historical snapshot make no sense), scanned
+  * through [[GraftLogTableV2.scanBuilder]] like the live table. The
+  * snapshot is immutable, and so is its plain-or-not answer
+  * ([[LogTable.fileStateFacts]] memoizes it per version). */
+private[sources] final class GraftPinnedReadTable(
+    tableName: String, log: LogTable, version: Long)
   extends Table with SupportsRead {
+  private val snapshotSchema = log.userSchemaAt(version)
   override def name(): String = tableName
-  override def schema(): StructType =
-    version.map(log.schemaAt).getOrElse(log.schema)
+  override def schema(): StructType = snapshotSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new PruningScanBuilder(tableName, log, version, options)
+      : ScanBuilder = GraftLogTableV2.scanBuilder(tableName, log,
+    Some(version), snapshotSchema, options)
+}
+
+/** The scan of a snapshot the plain parquet scan cannot serve
+  * ([[GraftLogTableV2.needsLoadPlan]]). Scan pushdown runs before
+  * [[GraftReadSubstitution]], so it still needs a scan to build: this
+  * one pushes nothing and reports the user schema, and the rule then
+  * replaces its relation with [[LogTable.load]]'s plan. A plan that
+  * bypasses the rule fails at `toBatch`, so no read ever serves the
+  * raw files (which would resurrect rows a deletion vector removed). */
+private[sources] final class LoadPlanScan(
+    tableName: String, val log: LogTable, val version: Option[Long],
+    schema: StructType)
+  extends ScanBuilder with Scan {
+  override def build(): Scan = this
+  override def readSchema(): StructType = schema
+  override def description(): String =
+    s"$tableName version " +
+      version.orElse(log.currentVersion).fold("?")(_.toString)
+  override def toBatch: Batch =
+    throw new UnsupportedOperationException(
+      s"${description()} carries deletion vectors, clone roots, hidden " +
+        "or mixed partitioning and is read only through the load() plan " +
+        "GraftReadSubstitution substitutes, which did not run for this " +
+        "plan (is it in spark.experimental.extraOptimizations?)")
 }
 
 /** Filter-aware scan builder for plain-parquet snapshots: the
@@ -277,7 +303,7 @@ private[sources] final class PruningScanBuilder(
     required = Some(requiredSchema)
   }
 
-  override def build(): org.apache.spark.sql.connector.read.Scan = {
+  override def build(): Scan = {
     val spark = SparkSession.active
     val files: Option[Seq[String]] =
       if (pushedExprs.isEmpty) None
@@ -301,167 +327,6 @@ private[sources] final class PruningScanBuilder(
     }
     delegate.build()
   }
-}
-
-/** Scan builder for snapshots that carry deletion vectors. The raw
-  * parquet file list would RESURRECT the vectored-out rows, so the
-  * scan drops to Spark's V1 bridge ([[org.apache.spark.sql.connector.read.V1Scan]],
-  * the same shim the JDBC source rides): `buildScan` hands back the
-  * RDD of [[LogTable.load]] — the DV-subtracting anti-join plan —
-  * and Spark applies projections and filters above it. The trade is
-  * explicit and temporary: a vectored snapshot loses parquet-level
-  * pushdown until OPTIMIZE / [[LogTable.purgeDeletes]] materializes
-  * the vectors, at which point [[GraftLogTableV2.scanTable]]'s fully
-  * pushdown-capable path takes over again (Delta's readers make the
-  * same trade inside their scan). */
-private[sources] final class DvScanBuilder(log: LogTable,
-                                           version: Option[Long])
-  extends ScanBuilder {
-  import org.apache.spark.sql.SQLContext
-  import org.apache.spark.sql.connector.read.{Scan, SupportsReportStatistics, V1Scan}
-  import org.apache.spark.sql.sources.{BaseRelation, TableScan}
-
-  override def build(): Scan = new V1Scan with SupportsReportStatistics {
-    override def readSchema(): StructType =
-      version.map(log.userSchemaAt).getOrElse(log.userSchema)
-    // Without this, a V1-bridge relation costs Spark's
-    // `defaultSizeInBytes` (Long.MaxValue-class) — a small table that
-    // happens to carry a deletion vector would NEVER broadcast. The
-    // manifest gives exact logical rows/bytes for free.
-    override def estimateStatistics()
-        : org.apache.spark.sql.connector.read.Statistics =
-      GraftStats.fromLog(log, version, readSchema())
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType =
-          version.map(log.userSchemaAt).getOrElse(log.userSchema)
-        override def buildScan(): org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.Row] =
-          log.load(context.sparkSession, version).rdd
-      }.asInstanceOf[T]
-  }
-}
-
-/** Connector-facing [[org.apache.spark.sql.connector.read.Statistics]]
-  * assembled from the log manifest (exact logical row count + bytes,
-  * per-column bounds/null counts — O(#files) driver work, no job)
-  * plus the latest committed ANALYZE pass (NDV, string lengths) when
-  * one exists. Spark's CBO/AQE consume rowCount and sizeInBytes for
-  * join strategy; the column map feeds `spark.sql.cbo.enabled`
-  * cardinality estimation. */
-private[sources] object GraftStats {
-  import java.util.{Optional, OptionalLong}
-  import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-  import org.apache.spark.sql.connector.read.Statistics
-  import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
-
-  def fromLog(log: LogTable, version: Option[Long],
-              schema: StructType): Statistics = {
-    val (rows, bytes, bounds) = log.manifestStatistics(version)
-    // ANALYZE stats describe the version they measured; serve them
-    // as estimates regardless of staleness (CBO semantics), but only
-    // for a CURRENT-version read — a pinned historical read must not
-    // inherit a future pass's numbers
-    val analyzedTs: Option[TableStats] =
-      if (version.isDefined && !version.contains(
-        log.currentVersion.getOrElse(-1L))) None
-      else log.columnStatistics
-    val analyzed: Map[String, AnalyzedCol] =
-      analyzedTs.map(_.cols).getOrElse(Map.empty)
-    val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
-    schema.fields.foreach { f =>
-      val b = bounds.get(f.name)
-      val a = analyzed.get(f.name)
-      if (b.isDefined || a.isDefined) {
-        colStats.put(Expressions.column(f.name), new ColumnStatistics {
-          override def distinctCount(): OptionalLong =
-            a.map(x => OptionalLong.of(x.ndv)).getOrElse(OptionalLong.empty())
-          override def nullCount(): OptionalLong =
-            b.map(x => OptionalLong.of(x.nulls)).getOrElse(OptionalLong.empty())
-          // bounds only for the numeric stat projection (Long/Double)
-          // — string extrema need catalyst-internal encoding
-          override def min(): Optional[Object] = bound(b.flatMap(_.min))
-          override def max(): Optional[Object] = bound(b.flatMap(_.max))
-          override def avgLen(): OptionalLong =
-            a.flatMap(_.avgLen).map(OptionalLong.of)
-              .getOrElse(OptionalLong.empty())
-          override def maxLen(): OptionalLong =
-            a.flatMap(_.maxLen).map(OptionalLong.of)
-              .getOrElse(OptionalLong.empty())
-          // ANALYZE's equi-height histogram, served through the DSv2
-          // colstats contract — Spark's `transformV2Stats` converts
-          // it straight into catalyst HistogramBins, so CBO filter
-          // estimation sees per-bucket selectivity (a skewed
-          // predicate estimates from where the rows are). Height =
-          // non-null rows per bucket; per-bin NDV is the uniform
-          // share of the column's NDV (an estimate, like every CBO
-          // histogram's bin NDV).
-          override def histogram(): Optional[
-              org.apache.spark.sql.connector.read.colstats.Histogram] = {
-            val hg = for {
-              ts <- analyzedTs
-              x <- a
-              edges <- x.histogram
-              if edges.size >= 2
-            } yield {
-              val nb = edges.size - 1
-              val h = math.max(0L, ts.rows - x.nulls).toDouble / nb
-              val bn = math.max(1L, x.ndv / nb)
-              new org.apache.spark.sql.connector.read.colstats.Histogram {
-                override def height(): Double = h
-                override def bins(): Array[
-                    org.apache.spark.sql.connector.read.colstats
-                      .HistogramBin] =
-                  Array.tabulate(nb) { j =>
-                    new org.apache.spark.sql.connector.read.colstats
-                        .HistogramBin {
-                      override def lo(): Double = edges(j)
-                      override def hi(): Double = edges(j + 1)
-                      override def ndv(): Long = bn
-                    }
-                  }
-              }
-            }
-            hg.map(Optional.of[
-              org.apache.spark.sql.connector.read.colstats.Histogram])
-              .getOrElse(Optional.empty())
-          }
-        })
-      }
-    }
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-      override def numRows(): OptionalLong = OptionalLong.of(rows)
-      override def columnStats()
-          : java.util.Map[NamedReference, ColumnStatistics] = colStats
-    }
-  }
-
-  private def bound(v: Option[Any]): java.util.Optional[Object] = v match {
-    case Some(l: Long)   => java.util.Optional.of(Long.box(l))
-    case Some(d: Double) if !d.isNaN && !d.isInfinite =>
-      java.util.Optional.of(Double.box(d))
-    case _               => java.util.Optional.empty()
-  }
-}
-
-/** Read-only table face over [[DvScanBuilder]] — the pinned
-  * (`VERSION AS OF`) view of a snapshot that carries deletion
-  * vectors. */
-private[sources] final class DvReadTable(tableName: String, log: LogTable,
-                                         version: Option[Long])
-  extends Table with SupportsRead {
-  private[sources] def logTable: LogTable = log
-  private[sources] def pinnedVersion: Option[Long] = version
-  override def name(): String = tableName
-  override def schema(): StructType =
-    version.map(log.userSchemaAt).getOrElse(log.userSchema)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DvScanBuilder(log, version)
 }
 
 /** Delegating write builder: the inner parquet write lands in a

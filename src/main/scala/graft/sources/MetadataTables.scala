@@ -149,8 +149,8 @@ object GraftMetadataTables {
 }
 
 /** Read-only DSv2 table serving a DataFrame-producing thunk through
-  * the V1 bridge — the same bridge shape [[DvScanBuilder]] uses. The
-  * frame is built lazily at scan time, so each query sees the
+  * Spark's V1 scan bridge (`V1Scan`, the shim the JDBC source rides).
+  * The frame is built lazily at scan time, so each query sees the
   * CURRENT metadata (a metadata relation must not pin the state at
   * plan-cache time). */
 private[sources] final class GraftMetadataTable(

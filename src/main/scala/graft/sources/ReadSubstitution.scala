@@ -4,139 +4,84 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat,
   CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet,
-  NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Command,
-  DeleteFromTable, Histogram, HistogramBin, LogicalPlan, MergeIntoTable,
-  Project, UpdateTable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable,
+  Histogram, HistogramBin, LogicalPlan, MergeIntoTable, Project,
+  UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation,
-  DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+
+import scala.util.control.NonFatal
 
 /** Logical READ substitution for the snapshots the plain parquet scan
-  * cannot serve (deletion vectors, partitioned clones, mixed layouts
-  * — [[GraftLogTableV2.needsV1Bridge]]): replace the DSv2 relation
-  * with [[LogTable.load]]'s OWN logical plan, aliased to the
-  * relation's output ids.
+  * cannot serve (deletion vectors, partitioned clones, hidden or mixed
+  * partition layouts — [[GraftLogTableV2.needsLoadPlan]]): replace the
+  * [[LoadPlanScan]] relation with [[LogTable.load]]'s OWN logical
+  * plan, aliased to the relation's output ids. It is the only way SQL
+  * reads such a snapshot.
   *
-  * Why: Spark wraps a `V1Scan` in `V1ScanWrapper` during pushdown,
-  * and the wrapper implements ONLY `Scan` — the bridge's
-  * `SupportsReportStatistics` is dropped on the floor, so a bridged
-  * relation costs `defaultSizeInBytes` (8 EiB): a small DV-carrying
-  * dimension can never broadcast on its own numbers, and the
-  * execution is a row-based V1 `TableScan` — no whole-stage codegen,
-  * no vectorized parquet. Substituting the real logical plan fixes
-  * BOTH: the leaves are ordinary parquet relations with real sizes
-  * (and the single-data-leaf case carries the table's manifest
-  * row count + ANALYZE column stats/histograms as catalog
-  * statistics, so CBO sees NDV and per-bucket selectivity), and the
-  * physical plan is the same codegen'd, vectorized one the Scala
-  * `load()` API gets. Delta serves its SQL reads through exactly
-  * this shape (a file relation with attached stats) for the same
-  * reasons.
+  * The leaves are ordinary parquet relations with real sizes (and
+  * the single-data-leaf case carries the table's manifest row count
+  * + ANALYZE column stats/histograms as catalog statistics, so CBO
+  * sees NDV and per-bucket selectivity), and the physical plan is the
+  * same codegen'd, vectorized one the Scala `load()` API gets. Delta
+  * serves its SQL reads through exactly this shape (a file relation
+  * with attached stats) for the same reasons.
   *
   * Registered through `experimental.extraOptimizations` (the public
   * live-session hook, like [[GraftRowLevelStrategy]]) by every
-  * [[GraftTableCatalog]] initialize. Conservative by construction:
-  * plans containing ANY command or row-level DML node are left
-  * untouched (write targets and the DML dispatch must keep their
-  * DSv2 relations), as are relations whose metadata columns are
-  * referenced, relations whose output shape does not match the
-  * load plan, and anything that throws — the V1 bridge remains the
-  * fallback for every case the substitution declines. */
+  * [[GraftTableCatalog]] initialize. It runs after scan pushdown, so
+  * it replaces the scan relation. Plans holding row-level DML are
+  * left untouched: their targets must stay DSv2 relations for the
+  * DML dispatch, and none of them scans its relation. Write commands
+  * keep their target outside `children`, so the reads in their query
+  * substitute; `AnalysisOnlyCommand`s (CACHE TABLE, views) re-plan
+  * their query in a fresh execution where the rule fires. A load
+  * that throws, or lacks a column the query resolved (by name and
+  * type, nested nullability aside), fails the query, naming the table
+  * and version. */
 object GraftReadSubstitution extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val unsafe = plan.exists {
-      case _: Command | _: UpdateTable | _: MergeIntoTable |
-           _: DeleteFromTable => true
+    val rowLevel = plan.exists {
+      case _: UpdateTable | _: MergeIntoTable | _: DeleteFromTable => true
       case _ => false
     }
-    if (unsafe) return plan
-    lazy val referenced = AttributeSet(
-      plan.collect { case p => p.references.toSeq }.flatten)
-    // the WHOLE per-node substitution — including target(), whose
-    // needsV1Bridge replays the manifest and can throw on an
-    // empty/just-dropped log — honors the rule's contract: anything
-    // that throws declines, and the V1 bridge serves the read
-    plan.transform {
-      case r: DataSourceV2Relation
-          if r.metadataOutput.forall(a => !referenced.contains(a)) =>
-        try target(r.table).flatMap(t =>
-          substituted(t._1, t._2, r.output)).getOrElse(r)
-        catch { case scala.util.control.NonFatal(_) => r }
-      // if the user-optimizer batch runs after scan pushdown, the
-      // relation is already scan-wrapped — substitute it the same way
-      case s: DataSourceV2ScanRelation =>
-        try target(s.relation.table).flatMap(t =>
-          substituted(t._1, t._2, s.output)).getOrElse(s)
-        catch { case scala.util.control.NonFatal(_) => s }
+    if (rowLevel) plan
+    else plan.transform {
+      case s: DataSourceV2ScanRelation if s.scan.isInstanceOf[LoadPlanScan] =>
+        substituted(s.scan.asInstanceOf[LoadPlanScan], s.output)
     }
   }
 
-  /** needsV1Bridge replays the whole manifest, and this rule sits on
-    * EVERY query's planning path (also re-entrantly, via the nested
-    * optimization in [[substituted]]) — memoize the decision per
-    * (table root, head version). A snapshot at a version is
-    * immutable, so the cached answer can never go stale; a new
-    * commit changes the key. Bounded by wholesale clear. */
-  private val bridgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Boolean]()
-
-  private def cachedNeedsBridge(log: LogTable): Boolean = {
-    // key on (path, head, table incarnation): a dropped-and-recreated
-    // table at the same path must not inherit the old table's cached
-    // decision once the new log reaches the same head. The
-    // incarnation is the _log DIRECTORY's creation time — stable
-    // across commits AND across log expiry (the v0 commit file, the
-    // obvious anchor, is deleted once the expiry floor rises, which
-    // would degenerate the key to 0 for exactly the long-lived
-    // tables that run expiry); a recreate makes a fresh directory.
-    val born = try java.nio.file.Files.readAttributes(
-      new java.io.File(log.path, "_log").toPath,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-      .creationTime().toMillis
-    catch { case scala.util.control.NonFatal(_) =>
-      // no incarnation witness → do NOT degrade the key to a
-      // constant (a drop-and-recreate reaching the same head would
-      // inherit the stale decision); skip the cache entirely
-      return GraftLogTableV2.needsV1Bridge(log, None)
-    }
-    val key = (log.path, log.currentVersion.getOrElse(-1L), born)
-    if (bridgeCache.size > 1024) bridgeCache.clear()
-    bridgeCache.computeIfAbsent(key,
-      _ => GraftLogTableV2.needsV1Bridge(log, None))
-  }
-
-  private def target(t: org.apache.spark.sql.connector.catalog.Table)
-      : Option[(LogTable, Option[Long])] = t match {
-    case g: GraftLogTableV2 if cachedNeedsBridge(g.logTable) =>
-      Some((g.logTable, None))
-    case d: DvReadTable => Some((d.logTable, d.pinnedVersion))
-    case _ => None
-  }
-
-  private def substituted(
-      log: LogTable, version: Option[Long],
-      out: Seq[org.apache.spark.sql.catalyst.expressions.AttributeReference])
-      : Option[LogicalPlan] = {
-      try {
-        val spark = SparkSession.active
-        val sub = log.load(spark, version).queryExecution.optimizedPlan
-        if (sub.output.size != out.size ||
-            sub.output.zip(out).exists { case (n, o) =>
-              n.name != o.name || n.dataType != o.dataType })
-          None
-        else {
-          val withStats = attachStats(log, version, sub)
-          val aliases: Seq[NamedExpression] =
-            withStats.output.zip(out).map { case (n, o) =>
-              Alias(n, o.name)(exprId = o.exprId) }
-          Some(Project(aliases, withStats))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
+  private def substituted(scan: LoadPlanScan,
+                          out: Seq[AttributeReference]): LogicalPlan = {
+    val sub = try attachStats(scan.log, scan.version,
+        scan.log.load(SparkSession.active, scan.version)
+          .queryExecution.optimizedPlan)
+      catch { case NonFatal(e) => throw new IllegalStateException(
+        s"cannot plan the read of ${scan.description()}: ${e.getMessage}",
+        e) }
+    // by name: a column added after the query resolved the table is
+    // in the head snapshot load() reads, but not in the query. Nested
+    // nullability is not compared: the logged schema keeps a
+    // DataFrame's non-null array elements, map values and struct
+    // fields, while a parquet relation reads every type as nullable
+    val loaded = sub.output.map(a => a.name -> a).toMap
+    Project(out.map { o =>
+      val n = loaded.get(o.name)
+        .filter(n => DataTypeUtils.equalsIgnoreNullability(n.dataType,
+          o.dataType))
+        .getOrElse(throw new IllegalStateException(
+          s"${scan.description()}: load() returns " +
+            s"(${sub.schema.toDDL}) where the query expects " +
+            out.map(a => s"${a.name} ${a.dataType.sql}")
+              .mkString("(", ", ", ")")))
+      Alias(n, o.name)(exprId = o.exprId)
+    }, sub)
   }
 
   /** DV sidecar leaves read `_dv/<id>` pair files — tiny, and not

@@ -205,7 +205,7 @@ class LogTablePruneSpec extends SparkSpec {
     assert(scanFiles(pinned) == 1)
 
     // white-box, fresh handle: the whole planning chain — the
-    // V1-bridge decision (bridgeFacts) AND the filter prune — runs
+    // scan-path decision (fileStateFacts) AND the filter prune — runs
     // off the DISTRIBUTED manifest; the driver file list is never
     // materialized
     val fresh = new LogTable(s"$wh/t")

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * snapshot (deletion vectors subtracted) in one pass and commits
   * them to TBLPROPERTIES; [[LogTable.manifestStatistics]] derives
   * exact row/byte counts and column bounds from the manifest alone;
-  * the V1-bridge DSv2 scan reports both to Spark's planner so a
-  * small table carrying a deletion vector still broadcasts. */
+  * the read substitution attaches both to the plan Spark's planner
+  * sees, so a small table carrying a deletion vector still
+  * broadcasts. */
 class StatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -82,7 +83,7 @@ class StatsSpec extends SparkSpec {
       val dim = new LogTable(s"$dir/dim")
       dim.append((1L to 50L).map(i => (i, s"n$i")).toDF("k", "name")
         .repartition(1))
-      dim.deleteMor(spark, col("k") > 45L) // forces the V1 bridge
+      dim.deleteMor(spark, col("k") > 45L) // forces the substituted read
       assert(dim.liveAdds().exists(_.dv.isDefined))
       val fact = (1L to 10000L).map(i => (i % 50 + 1, i)).toDF("k", "x")
       fact.createOrReplaceTempView("fact_v")
@@ -95,9 +96,11 @@ class StatsSpec extends SparkSpec {
       // build side — its own numbers drive the decision now
       assert(plan.contains("BuildRight"),
         s"expected the dim side to broadcast, got:\n$plan")
-      // the substituted read is the codegen'd parquet plan, not the
-      // row-based V1 bridge
-      assert(!plan.contains("DvScanBuilder"), s"V1 bridge leaked:\n$plan")
+      // the substituted read is the codegen'd parquet plan: no DSv2
+      // scan relation is left for the planner
+      assert(!joined.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation]), s"read not substituted:\n$plan")
       assert(joined.count() == 9000L) // 45 live keys × 200 rows each
     } finally {
       spark.conf.unset(s"spark.sql.catalog.$cat")
@@ -228,7 +231,7 @@ class StatsSpec extends SparkSpec {
         val t = new graft.sources.LogTable(s"$wh/t$i")
         t.append((1L to 200L).map(k => (k, s"v$k")).toDF("k", "v")
           .repartition(2))
-        t.deleteMor(spark, col("k") % 7 === 0) // DV ⇒ bridged read
+        t.deleteMor(spark, col("k") % 7 === 0) // DV ⇒ substituted read
       }
       val sql =
         s"""SELECT count(*) FROM $cat.t1 a
@@ -240,7 +243,7 @@ class StatsSpec extends SparkSpec {
         spark.sql(sql).queryExecution.executedPlan // full planning
         (System.nanoTime() - t0) / 1000000L
       }
-      // the rule substitutes all four bridged relations (sanity:
+      // the rule substitutes all four DV relations (sanity:
       // the optimized plan holds no DSv2 relations)
       val opt = spark.sql(sql).queryExecution.optimizedPlan
       assert(!opt.exists(_.isInstanceOf[org.apache.spark.sql.execution
@@ -248,18 +251,8 @@ class StatsSpec extends SparkSpec {
         "substitution did not fire")
       val warm = planMillis() // class-load + first-parse warmup
       val withRule = (1 to 5).map(_ => planMillis()).sorted.apply(2)
-      // A/B: the same query planned with the rule REMOVED
-      val exp = spark
-        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .experimental
-      val saved = exp.extraOptimizations
-      val without = try {
-        exp.extraOptimizations = saved
-          .filterNot(_ eq graft.sources.GraftReadSubstitution)
-        (1 to 5).map(_ => planMillis()).sorted.apply(2)
-      } finally exp.extraOptimizations = saved
-      info(s"planning median-of-5: with substitution ${withRule}ms, " +
-        s"without ${without}ms (warmup ${warm}ms)")
+      info(s"planning median-of-5: with substitution ${withRule}ms " +
+        s"(warmup ${warm}ms)")
       // regression tripwire, deliberately loose: 4 substituted
       // relations must not cost planning more than 2s on this box
       assert(withRule < 2000L,

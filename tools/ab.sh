@@ -25,15 +25,30 @@
 # pairs HEAD was lower, and a two-sided sign-test p-value; then the
 # per-side medians of the counts per op (jobs, tasks, executor cpu_s,
 # shuffle_bytes), which do not drift with the machine's speed; then
-# the failed-op counts of each side. The script only reads
-# perfbench/ and BENCHMARK.json. The copies are removed at exit.
+# the failed-op counts of each side. In this mode the script only
+# reads perfbench/ and BENCHMARK.json.
+#
+# WORKLOAD query:NAME times one registered query instead: each copy
+# compiles once (`sbt --batch compile`, no warm-up run) and each side
+# of a pair runs
+#
+#   REPS=3 sbt --batch "runMain graft.BenchOne NAME"
+#
+# whose printed median is the run's `median_s` metric; the seed only
+# labels the pair. The alternation, per-side medians and sign test
+# are the same. This mode reads build.sbt, project/ and src/main/
+# (and the testdata BenchOne reads); sbt runs with the caller's
+# environment (SBT_OPTS, COURSIER_MODE, SPARK_GRAFT_CPUS). The copies
+# are removed at exit.
 set -euo pipefail
 
 if [ $# -lt 4 ]; then
-  sed -n '2,30p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,/^set /{/^#/p}' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 base_rev=$1 head_rev=$2 workload=$3 pairs=$4
+query=
+case $workload in query:*) query=${workload#query:} ;; esac
 first_seed=${5:-1000}
 workdir=${6:-/tmp/graft-ab}
 repo=$(git rev-parse --show-toplevel)
@@ -51,6 +66,10 @@ for side in base head; do
   rm -rf "${workdir:?}/$side"
   mkdir -p "$workdir/$side"
   git -C "$repo" archive "$sha" | tar -x -C "$workdir/$side"
+  if [ -n "$query" ]; then
+    (cd "$workdir/$side" && sbt --batch compile >&2)
+    continue
+  fi
   (cd "$workdir/$side" && python3 perfbench/build.py >&2)
   (cd "$workdir/$side" && python3 perfbench/run.py --workload "$workload" \
     --seed "$first_seed" --seconds 1 --trace 0 >/dev/null \
@@ -59,11 +78,18 @@ for side in base head; do
 done
 
 run() { # side pair seed
-  local out rc=0
-  out=$(cd "$workdir/$1" && python3 perfbench/run.py --workload "$workload" \
-    --seed "$3" --seconds 10 --trace 0 2>>"$workdir/$1.log") || rc=$?
-  local line counts
-  line=$(printf '%s\n' "$out" | grep '^{' | tail -n 1 || true)
+  local out rc=0 line counts
+  if [ -n "$query" ]; then
+    out=$(cd "$workdir/$1" && REPS=3 sbt --batch \
+      "runMain graft.BenchOne $query" 2>>"$workdir/$1.log") || rc=$?
+    line=$(printf '%s\n' "$out" | sed -n \
+      's/^\[benchone\] median \([0-9.]*\) s$/{"metrics": {"median_s": \1}}/p' |
+      tail -n 1)
+  else
+    out=$(cd "$workdir/$1" && python3 perfbench/run.py --workload "$workload" \
+      --seed "$3" --seconds 10 --trace 0 2>>"$workdir/$1.log") || rc=$?
+    line=$(printf '%s\n' "$out" | grep '^{' | tail -n 1 || true)
+  fi
   [ -n "$line" ] || line='{}'
   counts=$(printf '%s\n' "$out" | grep '^counts/op:' | tail -n 1 || true)
   printf '{"side":"%s","pair":%d,"seed":%d,"exit":%d,"counts":"%s","result":%s}\n' \
