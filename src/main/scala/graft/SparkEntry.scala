@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators._
-import graft.sources.Tables
+import graft.sources.{LogTable, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1952,10 +1952,7 @@ object SparkEntry {
         col("c_name").as("name"))
       src.append(cust.filter(col("k") <= 150).repartition(3))
       graft.sources.DeltaExport.exportDeltaLog(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       conv.delete(s, col("k") % 10 === 0) // converted table is LIVE
       conv.load(s).select(col("k"), col("name")).orderBy("k")
@@ -1985,11 +1982,8 @@ object SparkEntry {
       src.deleteMor(s, col("k") % 10 === 0)   // vectors, no rewrite
       src.deleteMor(s, col("k") > 140)        // vector UNION on touched
       graft.sources.DeltaExport.mirrorDelta(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
-      rm(new java.io.File(s"$wh/t/_dv"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_dv"))
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       conv.deleteMor(s, col("k") % 7 === 0)   // MOR on the convert
       conv.load(s).select(col("k"), col("name")).orderBy("k")
@@ -2022,10 +2016,7 @@ object SparkEntry {
       src.append(cust.filter(col("k") > 100 && col("k") <= 150)
         .withColumnRenamed("name", "label").repartition(2))
       graft.sources.DeltaExport.mirrorDelta(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       conv.renameColumn(s, "label", "tag")   // still column-mapped
       conv.load(s).select(col("k"), col("tag")).orderBy("k")
@@ -2057,10 +2048,7 @@ object SparkEntry {
       src.append(cust.filter(col("k") <= 100).repartition(2))
       src.addCheckConstraint(s, "name_ne", "length(name) > 0")
       graft.sources.DeltaExport.mirrorDelta(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
       val conv = graft.sources.DeltaExport.convertFromDelta(s, s"$wh/t")
       require(conv.checkConstraints.keySet == Set("k_nonneg", "name_ne"),
         s"constraints lost in convert: ${conv.checkConstraints}")
@@ -2085,10 +2073,7 @@ object SparkEntry {
         col("c_name").as("name"))
       src.append(cust.filter(col("k") <= 150).repartition(3))
       graft.sources.IcebergExport.exportIcebergMetadata(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
       val conv = graft.sources.IcebergExport
         .convertFromIceberg(s, s"$wh/t")
       conv.delete(s, col("k") % 10 === 0)
@@ -2118,10 +2103,7 @@ object SparkEntry {
         col("c_name").as("name"))
       src.append(cust.filter(col("k") <= 150))
       graft.sources.IcebergExport.exportIcebergMetadata(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
       val conv = graft.sources.IcebergExport
         .convertFromIceberg(s, s"$wh/t")
       conv.append(cust.filter(col("k") > 150 && col("k") <= 180))
@@ -2155,11 +2137,8 @@ object SparkEntry {
       src.deleteMor(s, col("k") % 10 === 0)   // vectors, no rewrite
       src.deleteMor(s, col("k") > 140)        // vector UNION on touched
       graft.sources.IcebergExport.exportIcebergMetadata(s, src)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$wh/t/_log"))
-      rm(new java.io.File(s"$wh/t/_dv"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_log"))
+      LogTable.deleteRecursive(new java.io.File(s"$wh/t/_dv"))
       val conv = graft.sources.IcebergExport
         .convertFromIceberg(s, s"$wh/t")
       conv.deleteMor(s, col("k") % 7 === 0)   // MOR on the convert

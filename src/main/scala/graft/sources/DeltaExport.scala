@@ -378,11 +378,6 @@ object DeltaExport {
   private def hasCkpt(dir: File, cv: Long): Boolean =
     ckptParts(dir, cv).nonEmpty
 
-  private def deleteRecursive(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursive))
-    f.delete(); ()
-  }
-
   /** Delta's generated-column metadata key (PROTOCOL.md): a column
     * whose values writers must derive from this Spark SQL
     * expression. Graft hidden partitioning exports as exactly this —
@@ -709,7 +704,7 @@ object DeltaExport {
                   if (l.nonEmpty) { w.write(l); w.write("\n"); nActions += 1 }
                 } finally src.close()
               }
-          } finally deleteRecursive(txt)
+          } finally LogTable.deleteRecursive(txt)
         case None =>
           val adds0 = log.liveAdds(Some(v))
           val descMap: Map[String, String] =
@@ -855,7 +850,7 @@ object DeltaExport {
                   if (l.nonEmpty) { w.write(l); w.write("\n") }
                 } finally src.close()
               }
-          } finally deleteRecursive(txt)
+          } finally LogTable.deleteRecursive(txt)
         }
       } finally w.close()
       Files.move(tmp.toPath, commit.toPath,
@@ -943,7 +938,7 @@ object DeltaExport {
         (lines.count(),
           neutralizeDataChange(
             spark.read.schema(checkpointSchema).json(lines)))
-      } catch { case e: Throwable => deleteRecursive(txt); throw e }
+      } catch { case e: Throwable => LogTable.deleteRecursive(txt); throw e }
     val tmp = new File(dir, s".tmp-ckpt-${UUID.randomUUID()}")
     val nParts = math.max(1L, (nActions + partRows - 1) / partRows).toInt
     val moved = scala.collection.mutable.ArrayBuffer.empty[File]
@@ -970,11 +965,11 @@ object DeltaExport {
           // (a partial set would read as a complete checkpoint to
           // ckptParts-based probes)
           moved.foreach(_.delete())
-          deleteRecursive(tmp); deleteRecursive(txt)
+          LogTable.deleteRecursive(tmp); LogTable.deleteRecursive(txt)
           throw e
       }
     tmp.listFiles().foreach(_.delete()); tmp.delete()
-    deleteRecursive(txt)
+    LogTable.deleteRecursive(txt)
     Files.writeString(new File(dir, "_last_checkpoint").toPath,
       JsonMethods.compact(JsonMethods.render(JObject(List(
         "version" -> JLong(v), "size" -> JLong(nActions)) ++

@@ -438,13 +438,7 @@ class GraftTableCatalog extends TableCatalog with ProcedureCatalog {
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
     if (!isLogTable(dir)) false
-    else {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(dir); true
-    }
+    else { LogTable.deleteRecursive(dir); true }
   }
 
   override def renameTable(oldIdent: Identifier,

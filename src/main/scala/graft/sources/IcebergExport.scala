@@ -1320,12 +1320,7 @@ object IcebergExport {
     Option(delRoot.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory &&
         !referencedDelDirs.contains(d.getCanonicalPath))
-      .foreach { d =>
-        def rm(f: File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d)
-      }
+      .foreach(LogTable.deleteRecursive)
     if (exported) Some(p) else None
   }
 

@@ -188,11 +188,13 @@ final class LogStreamProvider extends StreamSourceProvider
   }
 
   /** Streaming SINK half (`writeStream.format("graft-log")`): each
-    * micro-batch is one append commit tagged with its batch id under
-    * an idempotent-txn app id (option `txnAppId` — give each query
-    * its own when several write one table), so an engine-replayed
-    * batch after a restart deduplicates instead of double-appending
-    * — Delta's exactly-once sink contract. */
+    * micro-batch is one [[LogTable.appendStreamBatch]] — an append,
+    * with its schema checks, tagged with its batch id under an
+    * idempotent-txn app id (option `txnAppId` — give each query its
+    * own when several write one table), so an engine-replayed batch
+    * after a restart deduplicates instead of double-appending —
+    * Delta's exactly-once sink contract. A micro-batch whose columns
+    * differ from the table's fails the query. */
   override def createSink(ctx: SQLContext,
                           parameters: Map[String, String],
                           partitionColumns: Seq[String],

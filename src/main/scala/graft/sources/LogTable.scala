@@ -747,7 +747,7 @@ final class LogTable(val path: String,
         normalized.write.mode("overwrite").parquet(tmp.getPath)
         Files.move(tmp.toPath, target.toPath,
           StandardCopyOption.ATOMIC_MOVE)
-      } catch { case NonFatal(e) => deleteRecursive(tmp); throw e }
+      } catch { case NonFatal(e) => LogTable.deleteRecursive(tmp); throw e }
       val facts = spark.read.parquet(target.getPath).agg(
         count(lit(1)), countDistinct(col("path")),
         sum(col("rows")), sum(col("bytes")),
@@ -755,19 +755,19 @@ final class LogTable(val path: String,
         max(col("baseRowId").isNotNull)).collect().head
       val n = facts.getLong(0)
       if (n == 0L) {
-        deleteRecursive(target)
+        LogTable.deleteRecursive(target)
         return currentVersion.getOrElse(throw new IllegalStateException(
           s"no log table at $path to register into"))
       }
       if (facts.getLong(1) != n) {
-        deleteRecursive(target)
+        LogTable.deleteRecursive(target)
         throw new IllegalArgumentException(
           s"registerFilesFrom: ${n - facts.getLong(1)} duplicate " +
             "path(s) in the add set — a manifest maps each path to " +
             "one entry; dedup (latest wins) before registering")
       }
       if (!tracked && facts.getBoolean(5)) {
-        deleteRecursive(target)
+        LogTable.deleteRecursive(target)
         throw new IllegalArgumentException(
           "registerFilesFrom: the add set carries baseRowId " +
             "assignments but this table does not track row ids — " +
@@ -788,7 +788,7 @@ final class LogTable(val path: String,
             if tracked && attempts < 20 =>
           // a racing writer advanced the row-id high-water — the
           // sidecar's assigned ranges overlap; reassign and retry
-          deleteRecursive(target)
+          LogTable.deleteRecursive(target)
           snapCache.clear()
       }
     }
@@ -1006,13 +1006,13 @@ final class LogTable(val path: String,
         val survivors = parts.iterator.flatMap(_.keep).toSeq
           .sortBy(_.idx).map(LogCodec.decodeCkptAdd)
           .filterNot(a =>
-            provablyNoMatch(a, base ++ derivedSafeFor(a, derived)))
+            provablyNoMatch(a, base ++ LogTable.derivedSafeFor(a, derived)))
         (survivors, total)
       case None =>
         lastPruneMode = "driver"
         val adds = snap.adds
         (adds.filterNot(a =>
-          provablyNoMatch(a, base ++ derivedSafeFor(a, derived))),
+          provablyNoMatch(a, base ++ LogTable.derivedSafeFor(a, derived))),
           adds.size.toLong)
     }
   }
@@ -2692,13 +2692,8 @@ final class LogTable(val path: String,
     d.mkdirs(); d.toString
   }
 
-  private def deleteRecursive(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursive))
-    f.delete(); ()
-  }
-
   private[sources] def dropStaging(staged: String): Unit =
-    deleteRecursive(new File(staged))
+    LogTable.deleteRecursive(new File(staged))
 
   /** Move staged parquet part files into `data/` under fresh unique
     * names and commit them, with the `AddFile` stats and bloom
@@ -2706,16 +2701,17 @@ final class LogTable(val path: String,
     * or a DSv2 staging's tracker) — the commit reads no staged data.
     * Every staged part file must carry write statistics. `actions`
     * are the rest of the commit (its [[CommitInfo]], removes, extra
-    * adds, metadata); a [[SetIdentity]] among them has its high-water
-    * marks advanced past the staged values. Returns the committed
-    * version. */
+    * adds, metadata); a [[SetIdentity]] among them names the
+    * high-water marks the staged rows drew from — the commit refuses
+    * a raced one and advances them past the staged values. Returns
+    * the committed version, or -1 when a txn-tagged commit found its
+    * batch already committed; then, as on a conflict, the moved files
+    * are reclaimed. */
   private def finalizeStaged(stagedDir: File, staged: StagedStats,
                              tableSchema: StructType,
                              actions: Seq[LogAction],
                              readVersion: Option[Long],
                              schemaBasis: Option[Long] = None,
-                             identityBasis:
-                               Option[Map[String, Option[Long]]] = None,
                              requireHead: Option[Option[Long]] = None)
       : Long = {
     // recursive walk: a partitioned staging nests its part files
@@ -2742,7 +2738,7 @@ final class LogTable(val path: String,
       } catch { case e: Throwable =>
         // a refused commit (CHECK violation, bad stage) must not
         // leak its staging — nothing has moved yet
-        deleteRecursive(stagedDir)
+        LogTable.deleteRecursive(stagedDir)
         throw e
       }
     val tag = UUID.randomUUID().toString.take(8)
@@ -2774,7 +2770,7 @@ final class LogTable(val path: String,
         }
         AddFile(target, st.rows, dst.length(), st.stats, partVals)
       }
-    deleteRecursive(stagedDir)
+    LogTable.deleteRecursive(stagedDir)
     // identity high-water update rides the SAME stats the commit
     // already aggregated — zero extra scans: the furthest value (in
     // step direction) across the staged files' min/max becomes the
@@ -2801,23 +2797,31 @@ final class LogTable(val path: String,
       case SetIdentity(ids) => SetIdentity(advance(ids))
       case a                => a
     }
-    try commitRetry(readVersion, all, schemaBasis, identityBasis, requireHead)
-    catch { case e: java.util.ConcurrentModificationException =>
-      // a conflict OUT of the retry loop is terminal for THIS
-      // attempt: the files this call already moved into data/ (and
-      // their bloom sidecars) will never be referenced — reclaim
-      // them now instead of leaving per-retry orphans for vacuum's
-      // retention horizon (identity-allocating appends/merges retry
-      // the whole write, up to 20 attempts under contention)
-      adds.foreach { a =>
-        val f = new File(path, a.path)
-        f.delete()
-        Option(new File(path, "_bloom").listFiles()).toSeq.flatten
-          .filter(_.getName.startsWith(f.getName + "."))
-          .foreach(_.delete())
-      }
-      throw e
+    // the files this call moved into data/ (and their bloom
+    // sidecars) when no version will reference them — reclaimed now
+    // instead of left as orphans for vacuum's retention horizon
+    def reclaim(): Unit = adds.foreach { a =>
+      val f = new File(path, a.path)
+      f.delete()
+      Option(new File(path, "_bloom").listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith(f.getName + "."))
+        .foreach(_.delete())
     }
+    val v =
+      try commitRetry(readVersion, all, schemaBasis,
+        actions.collectFirst { case SetIdentity(ids) =>
+          ids.map { case (c, spec) => c -> spec.highWater } },
+        requireHead)
+      catch { case e: java.util.ConcurrentModificationException =>
+        // a conflict OUT of the retry loop is terminal for THIS
+        // attempt (identity-allocating appends/merges retry the whole
+        // write, up to 20 attempts under contention)
+        reclaim()
+        throw e
+      }
+    // -1: a replayed txn batch lost the race to its own first commit
+    if (v < 0) reclaim()
+    v
   }
 
   /** The commit line of a commit being written: [[commitRetry]]
@@ -2861,6 +2865,14 @@ final class LogTable(val path: String,
     while (attempts < 100) {
       attempts += 1
       val head = currentVersion
+      // idempotent-txn dedup re-checked under the SAME head the
+      // commit will land on, before any conflict check: a replayed
+      // batch that lost the race to its own first attempt is
+      // dropped, not duplicated — and not refused as a conflict with
+      // itself (a replayed overwrite's removes are gone at the head)
+      txn.foreach { case (app, batch) =>
+        if (lastCommittedBatch(app).exists(_ >= batch)) return -1L
+      }
       // identity allocation conflict: this append's values were
       // drawn from the basis high-water marks — if a racing append
       // advanced any of them, our staged files hold overlapping ids
@@ -2967,12 +2979,6 @@ final class LogTable(val path: String,
               .map(_.copy(nullable = true))))
           }
         case _ => schema
-      }
-      // idempotent-txn dedup re-checked under the SAME head the
-      // commit will land on: a replayed batch that lost the race to
-      // its own first attempt is dropped, not duplicated
-      txn.foreach { case (app, batch) =>
-        if (lastCommittedBatch(app).exists(_ >= batch)) return -1L
       }
       // ROW TRACKING — baseRowId assignment happens HERE, per
       // attempt, against the head this commit will actually land on:
@@ -3155,7 +3161,7 @@ final class LogTable(val path: String,
         .write.mode("overwrite").parquet(tmp.getPath)
       Files.move(tmp.toPath, target.toPath,
         StandardCopyOption.ATOMIC_MOVE)
-    } catch { case NonFatal(e) => deleteRecursive(tmp); throw e }
+    } catch { case NonFatal(e) => LogTable.deleteRecursive(tmp); throw e }
     target.getName
   }
 
@@ -3180,7 +3186,7 @@ final class LogTable(val path: String,
       normalized.write.mode("overwrite").parquet(tmp.getPath)
       Files.move(tmp.toPath, target.toPath,
         StandardCopyOption.ATOMIC_MOVE)
-    } catch { case NonFatal(e) => deleteRecursive(tmp); throw e }
+    } catch { case NonFatal(e) => LogTable.deleteRecursive(tmp); throw e }
     target.getName
   }
 
@@ -3374,6 +3380,11 @@ final class LogTable(val path: String,
     else tableProperties.get(LogTable.PropClusterBy).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
 
+  // ---------------------------------------------------------------
+  // data writes: append, overwrite and stream batches — from a frame
+  // ([[writeFrame]]) or from a staging Spark's DSv2 writer populated
+  // ([[commitStaged]]) — all commit through ONE tail, [[commitWrite]]
+
   /** Project `df` onto the table schema: present columns cast to the
     * table's types, absent columns null-filled (only reachable under
     * schema merge — a widened table reads its old files the same
@@ -3385,17 +3396,6 @@ final class LogTable(val path: String,
         col(f.name).cast(f.dataType).as(f.name, f.metadata)
       else lit(null).cast(f.dataType).as(f.name, f.metadata)): _*)
 
-  /** Append commit: write ONLY the new rows as data files and one
-    * log entry — cost ∝ the delta, never the table.
-    *
-    * Schema discipline is Delta's: columns the table doesn't have
-    * FAIL the append unless `mergeSchema` — which widens the table
-    * schema in the same commit (new columns appended, nullable; old
-    * files read them as NULL, no rewrite). Columns the incoming
-    * frame lacks are null-filled under `mergeSchema` and an error
-    * otherwise; on a name collision the TABLE's type wins (the
-    * incoming column is cast — ANSI surfaces an incompatibility at
-    * write time, not as silent corruption). */
   /** Column policies an append applies to the incoming frame:
     * DEFAULT-bearing columns the frame omits fill from their
     * expression; `GENERATED ALWAYS AS IDENTITY` columns refuse
@@ -3403,57 +3403,94 @@ final class LogTable(val path: String,
     * mark — `value = base + step * monotonically_increasing_id()`,
     * one distributed pass, no count job, no global sort. Unique and
     * monotonic per partition by construction at ANY partition count
-    * (the partition-id bits ride in the id), gappy like Delta's.
-    * Returns the frame plus the allocation BASIS (per-column
-    * high-water read) the commit must revalidate. */
+    * (the partition-id bits ride in the id), gappy like Delta's. The
+    * commit's [[SetIdentity]] names the high-water marks drawn from,
+    * which [[finalizeStaged]] revalidates. */
   private def applyColumnPolicies(df0: DataFrame,
                                   idSpecs: Map[String, IdentitySpec],
                                   defaults: Map[String, String])
-      : (DataFrame, Map[String, Option[Long]]) = {
+      : DataFrame = {
     idSpecs.keys.foreach(c => require(!df0.columns.contains(c),
       s"column '$c' is GENERATED ALWAYS AS IDENTITY — explicit " +
         "values are not accepted on append"))
     val withDefaults = defaults.foldLeft(df0) { case (acc, (c, e)) =>
       if (acc.columns.contains(c)) acc else acc.withColumn(c, expr(e))
     }
-    val filled = idSpecs.foldLeft(withDefaults) { case (acc, (c, spec)) =>
+    idSpecs.foldLeft(withDefaults) { case (acc, (c, spec)) =>
       val base = spec.highWater.map(_ + spec.step).getOrElse(spec.start)
       acc.withColumn(c,
         lit(base) + lit(spec.step) * monotonically_increasing_id())
     }
-    (filled, idSpecs.map { case (c, s) => c -> s.highWater })
   }
 
-  /** Append commit (see class doc); identity-allocating appends
-    * retry the WHOLE write on an allocation race — the staged files
-    * hold ids drawn from a stale high-water mark and must be
-    * rewritten (Delta's transaction-retry rule), which the bounded
-    * loop here does transparently. */
-  def append(df0: DataFrame, mergeSchema: Boolean = false): Long = {
+  /** The one commit tail of every data write. A `txn`-tagged write
+    * whose batch its app already committed is dropped before
+    * anything is staged — Delta's txnAppId/txnVersion idempotence,
+    * so a batch the engine replays after a restart is not
+    * duplicated ([[commitRetry]] re-checks under the head the commit
+    * lands on, and [[finalizeStaged]] reclaims the moved files when
+    * that re-check drops it). `stage` writes the data against the
+    * basis version it is given; a `replace` write retires every file
+    * live at that basis by reference (the bytes stay for time travel
+    * until [[vacuum]]) and revalidates them against the head. A
+    * committed append then runs [[maybeAutoCompact]]. Returns the
+    * committed version, or None for a replayed batch. */
+  private def commitWrite(spark: SparkSession, replace: Boolean,
+                          txn: Option[(String, Long)])
+                         (stage: Option[Long] => LogTable.StagedWrite)
+      : Option[Long] = {
+    ensureLayout()
+    if (txn.exists { case (app, batch) =>
+        lastCommittedBatch(app).exists(_ >= batch) }) return None
+    val basis = currentVersion
+    val prior =
+      if (!replace) Nil
+      else basis.toSeq.flatMap(snapshotAt(_).adds).map(a => Remove(a.path))
+    val w = stage(basis)
+    val v = finalizeStaged(w.dir, w.stats, w.schema,
+      (info(if (replace) "overwrite" else "append", txn = txn) +: w.meta) ++
+        prior,
+      readVersion = if (replace) basis else None,
+      schemaBasis = w.schemaBasis)
+    if (v >= 0 && !replace) maybeAutoCompact(spark)
+    Option.when(v >= 0)(v)
+  }
+
+  /** The frame-side write: stage `df0` ([[stageAppend]] or
+    * [[stageReplace]]) and commit it through [[commitWrite]]. An
+    * identity-allocating append retries the WHOLE write on an
+    * allocation race — the staged files hold ids drawn from a stale
+    * high-water mark and must be rewritten (Delta's transaction-retry
+    * rule), which the bounded loop here does transparently. */
+  private def writeFrame(df0: DataFrame, replace: Boolean,
+                         mergeSchema: Boolean,
+                         txn: Option[(String, Long)]): Option[Long] = {
     var attempts = 0
     while (true) {
       attempts += 1
-      try {
-        val v = appendOnce(df0, mergeSchema)
-        maybeAutoCompact(df0.sparkSession)
-        return v
-      } catch {
+      try return commitWrite(df0.sparkSession, replace, txn)(basis =>
+        if (replace) stageReplace(df0, basis)
+        else stageAppend(df0, mergeSchema, basis))
+      catch {
         case _: IdentityAllocationConflict
           if attempts < 20 => () // reallocate against the new head
       }
     }
-    -1L // unreachable
+    None // unreachable
   }
 
-  private def appendOnce(df0: DataFrame, mergeSchema: Boolean): Long = {
-    ensureLayout()
-    val basisVersion = currentVersion
-    val existing = basisVersion.map(schemaAt)
-    val snapOpt = basisVersion.map(snapshotAt)
+  /** Stage an append of `df0` against `basis`: identity, DEFAULT and
+    * generated columns filled, the schema checked (see [[append]]),
+    * and a zone-sensitive generated table's first write pinning the
+    * session zone. */
+  private def stageAppend(df0: DataFrame, mergeSchema: Boolean,
+                          basis: Option[Long]): LogTable.StagedWrite = {
+    val existing = basis.map(schemaAt)
+    val snapOpt = basis.map(snapshotAt)
     // identity/DEFAULT policies fill BEFORE generated compute, so a
     // generated (or hidden transform) column may derive from an
     // identity or defaulted source — bucket over the surrogate key
-    val (pol, idBasis) = applyColumnPolicies(df0,
+    val pol = applyColumnPolicies(df0,
       snapOpt.map(_.identity).getOrElse(Map.empty),
       snapOpt.map(_.defaults).getOrElse(Map.empty))
     // generated columns the incoming frame omits are computed here
@@ -3481,7 +3518,7 @@ final class LogTable(val path: String,
         } else {
           // a renamed-away name must not come back: old files' stats
           // and data still carry it under its retired meaning
-          val retired = snapshotAt(basisVersion.get).retiredNames
+          val retired = snapOpt.get.retiredNames
           extra.foreach(f => require(!retired.contains(f.name),
             s"column name '${f.name}' was retired by a rename and " +
               "cannot be reused"))
@@ -3493,7 +3530,7 @@ final class LogTable(val path: String,
               if (f.metadata.contains(LogTable.FieldIdKey))
                 Some(f.metadata.getLong(LogTable.FieldIdKey))
               else None).foldLeft(0L)(math.max),
-            snapshotAt(basisVersion.get).properties
+            snapOpt.get.properties
               .get(LogTable.PropFieldIdHighWater)
               .map(_.toLong).getOrElse(0L)) + 1L
           val widened = extra.zipWithIndex.map { case (f, i) =>
@@ -3506,54 +3543,38 @@ final class LogTable(val path: String,
           StructType(s.fields ++ widened)
         }
     }
-    val schemaChanged = !existing.contains(tableSchema)
+    val writesSchema = !existing.contains(tableSchema)
     val staged = new File(newStagingDir())
     val stats = writeStaged(conform(df, tableSchema), staged.toString,
       tableSchema, writeSchema = Some(tableSchema))
-    val writesSchema = basisVersion.isEmpty || schemaChanged
     // zone backfill for pre-pin tables: a zone-sensitive generated
     // table whose log lacks a tz action pins the CURRENT session's
     // zone on this first write — later zones then refuse/decline
     // like any pinned table, instead of silently shifting dates
     val tzPin =
-      if (gen.isEmpty || basisVersion.isEmpty) None
-      else if (snapshotAt(basisVersion.get).tz.isDefined) None
+      if (gen.isEmpty || snapOpt.forall(_.tz.isDefined)) None
       else if (gen.exists { case (_, e) =>
         tzSensitive(df.sparkSession, e, tableSchema) })
         Some(df.sparkSession.sessionState.conf.sessionLocalTimeZone)
       else None
-    finalizeStaged(staged, stats, tableSchema, info("append") +:
+    LogTable.StagedWrite(staged, stats, tableSchema,
       (Option.when(writesSchema)(SetSchema(tableSchema)) ++
         tzPin.map(SetTz) ++ identityOf(snapOpt)).toSeq,
-      readVersion = None,
       // the basis the widened schema was derived from: a schema
       // action racing past it triggers a commit-time re-merge
-      schemaBasis = if (writesSchema) Some(basisVersion.getOrElse(-1L))
-      else None,
-      identityBasis = if (idBasis.isEmpty) None else Some(idBasis))
+      schemaBasis = Option.when(writesSchema)(basis.getOrElse(-1L)))
   }
 
-  /** Full-replace commit: new files added, every prior live file
-    * retired (by reference — the bytes stay for time travel until
-    * [[vacuum]]). */
-  def overwrite(df: DataFrame): Long = overwrite(df, txn = None)
-
-  /** [[overwrite]] tagged with an idempotent-txn id — the
-    * exactly-once full-rebuild path [[MaterializedAgg]] falls back
-    * to when the change feed cannot represent a window (RESTORE). */
-  def overwrite(df0: DataFrame, txn: Option[(String, Long)]): Long = {
-    ensureLayout()
-    txn.foreach { case (app, batch) =>
-      if (lastCommittedBatch(app).exists(_ >= batch)) return -1L
-    }
-    val snapOpt = currentVersion.map(snapshotAt)
-    // a frame that is exactly the table MINUS some generated
-    // (hidden transform) columns is a DATA replace under the
-    // current contract, not a schema replace: compute the omitted
-    // generated columns and keep the table schema — an overwrite of
-    // a hidden-partitioned table must not strand the layout's
-    // partition spec without its column
-    val (df, outSchema, replacing) = snapOpt match {
+  /** Stage a full replace of the table by `df0`. A frame that is
+    * exactly the table MINUS some generated (hidden transform)
+    * columns is a DATA replace under the current contract: the
+    * omitted generated columns are computed and the table schema
+    * kept — an overwrite of a hidden-partitioned table must not
+    * strand the layout's partition spec without its column. Any
+    * other frame replaces the schema with its own. */
+  private def stageReplace(df0: DataFrame,
+                           basis: Option[Long]): LogTable.StagedWrite = {
+    val (df, outSchema, replacing) = basis.map(snapshotAt) match {
       case Some(snap) if {
         val missing = snap.schema.fieldNames.filterNot(df0.columns.contains)
         missing.nonEmpty && missing.forall(snap.generated.contains) &&
@@ -3566,14 +3587,40 @@ final class LogTable(val path: String,
         (conform(genned, snap.schema), snap.schema, false)
       case _ => (df0, df0.schema, true)
     }
-    val prior = snapOpt.map(_.adds.map(_.path)).getOrElse(Seq.empty)
     val staged = new File(newStagingDir())
     val stats = writeStaged(df, staged.toString, outSchema,
       replacingSchema = replacing)
-    finalizeStaged(staged, stats, outSchema, Seq(info("overwrite", txn = txn),
-      SetSchema(outSchema)) ++ prior.map(Remove),
-      readVersion = currentVersion)
+    LogTable.StagedWrite(staged, stats, outSchema,
+      Seq(SetSchema(outSchema)))
   }
+
+  /** Append commit: write ONLY the new rows as data files and one
+    * log entry — cost ∝ the delta, never the table.
+    *
+    * Schema discipline is Delta's: columns the table doesn't have
+    * FAIL the append unless `mergeSchema` — which widens the table
+    * schema in the same commit (new columns appended, nullable; old
+    * files read them as NULL, no rewrite). Columns the incoming
+    * frame lacks are null-filled under `mergeSchema` and an error
+    * otherwise; on a name collision the TABLE's type wins (the
+    * incoming column is cast — ANSI surfaces an incompatibility at
+    * write time, not as silent corruption). */
+  def append(df0: DataFrame, mergeSchema: Boolean = false): Long =
+    writeFrame(df0, replace = false, mergeSchema, txn = None)
+      .getOrElse(-1L)
+
+  /** Full-replace commit: new files added, every prior live file
+    * retired (by reference — the bytes stay for time travel until
+    * [[vacuum]]); see [[stageReplace]] for the schema rule. */
+  def overwrite(df: DataFrame): Long = overwrite(df, txn = None)
+
+  /** [[overwrite]] tagged with an idempotent-txn id — the
+    * exactly-once full-rebuild path [[MaterializedAgg]] falls back
+    * to when the change feed cannot represent a window (RESTORE).
+    * Returns -1 when the batch already committed. */
+  def overwrite(df0: DataFrame, txn: Option[(String, Long)]): Long =
+    writeFrame(df0, replace = true, mergeSchema = false, txn)
+      .getOrElse(-1L)
 
   /** Newest batch id committed under `app`'s idempotent-txn stream
     * (newest→oldest scan, stops at the first match — streams commit
@@ -3590,36 +3637,16 @@ final class LogTable(val path: String,
           case m if m.txn.exists(_._1 == app) => m.txn.get._2 }
     }
 
-  /** Exactly-once streaming append — Delta's txnAppId/txnVersion
-    * idempotence: commit `df` tagged `(app, batchId)` unless a batch
-    * ≥ `batchId` has already committed under `app`, so a micro-batch
-    * the engine replays after a sink restart is DROPPED, not
-    * duplicated (the check re-runs inside the commit-retry loop under
-    * the head the commit actually lands on, closing the race against
-    * this batch's own first attempt). Returns the committed version,
+  /** Exactly-once streaming append: [[append]] tagged `(app,
+    * batchId)` — the same schema checks and column policies — unless
+    * a batch ≥ `batchId` has already committed under `app`, so a
+    * micro-batch the engine replays after a sink restart is DROPPED,
+    * not duplicated ([[commitWrite]]). Returns the committed version,
     * or None when deduplicated. */
   def appendStreamBatch(df0: DataFrame, app: String,
-                        batchId: Long): Option[Long] = {
-    ensureLayout()
-    if (lastCommittedBatch(app).exists(_ >= batchId)) return None
-    val snapOpt = currentVersion.map(snapshotAt)
-    val (df, idBasis) = applyColumnPolicies(df0,
-      snapOpt.map(_.identity).getOrElse(Map.empty),
-      snapOpt.map(_.defaults).getOrElse(Map.empty))
-    val tableSchema = snapOpt.map(_.schema).getOrElse(df.schema)
-    val staged = new File(newStagingDir())
-    val stats = writeStaged(conform(df, tableSchema), staged.toString,
-      tableSchema)
-    val v = finalizeStaged(staged, stats, tableSchema,
-      info("append", txn = Some((app, batchId))) +:
-        (Option.when(currentVersion.isEmpty)(SetSchema(tableSchema)) ++
-          identityOf(snapOpt)).toSeq,
-      readVersion = None,
-      schemaBasis = if (currentVersion.isEmpty) Some(-1L) else None,
-      identityBasis = if (idBasis.isEmpty) None else Some(idBasis))
-    if (v < 0) None
-    else { maybeAutoCompact(df0.sparkSession); Some(v) }
-  }
+                        batchId: Long): Option[Long] =
+    writeFrame(df0, replace = false, mergeSchema = false,
+      Some((app, batchId)))
 
   /** A staging directory Spark's DSv2 writer populated is flat (the
     * partition columns sit in the data files): for a partitioned
@@ -3655,48 +3682,20 @@ final class LogTable(val path: String,
     }
   }
 
-  /** Commit a staging directory the DSv2 write path already
-    * populated, as an append (`INSERT INTO`); `stats` come from the
-    * [[stagedStatsTracker]] its writers carried. */
-  private[sources] def appendStaged(spark: SparkSession, staged: String,
-                                    stats: StagedStats): Long = {
-    val (dir, st) = restageForLayout(spark, staged, stats)
-    val v = finalizeStaged(new File(dir), st, schema, Seq(info("append")),
-      readVersion = None)
-    maybeAutoCompact(spark)
-    v
-  }
-
-  /** Commit a staging directory as a full replace
-    * (`INSERT OVERWRITE`): adds the staged files, retires every
-    * prior live file by reference. */
-  private[sources] def overwriteStaged(spark: SparkSession, staged: String,
-                                       stats: StagedStats): Long = {
-    val prior = currentVersion.map(v => snapshotAt(v).adds.map(_.path))
-      .getOrElse(Seq.empty)
-    val (dir, st) = restageForLayout(spark, staged, stats)
-    finalizeStaged(new File(dir), st, schema,
-      info("overwrite") +: prior.map(Remove), readVersion = currentVersion)
-  }
-
-  /** Commit a staging directory the DSv2 STREAMING sink populated,
-    * as one exactly-once micro-batch append (Delta's
-    * txnAppId/txnVersion rule over an external staging): an epoch
-    * the engine replays after a restart deduplicates at the commit
-    * layer — the staged bytes drop, nothing commits twice. */
-  private[sources] def appendStagedStream(spark: SparkSession,
-                                          staged: String, stats: StagedStats,
-                                          app: String,
-                                          batchId: Long): Option[Long] = {
-    if (lastCommittedBatch(app).exists(_ >= batchId)) {
-      dropStaging(staged); return None
-    }
-    val (dir, st) = restageForLayout(spark, staged, stats)
-    val v = finalizeStaged(new File(dir), st, schema,
-      Seq(info("append", txn = Some((app, batchId)))), readVersion = None)
-    if (v < 0) None
-    else { maybeAutoCompact(spark); Some(v) }
-  }
+  /** The staged-side write: commit a staging directory the DSv2
+    * write path populated — `INSERT INTO`, `INSERT OVERWRITE` when
+    * `replace`, and each `toTable` micro-batch tagged `txn` with its
+    * (query id, epoch) — through [[commitWrite]]; `stats` come from
+    * the [[stagedStatsTracker]] its writers carried. The staging is
+    * dropped whatever the outcome, a replayed epoch's included. */
+  private[sources] def commitStaged(spark: SparkSession, staged: String,
+                                    stats: StagedStats, replace: Boolean,
+                                    txn: Option[(String, Long)] = None)
+      : Option[Long] =
+    try commitWrite(spark, replace, txn) { _ =>
+      val (dir, st) = restageForLayout(spark, staged, stats)
+      LogTable.StagedWrite(new File(dir), st, schema)
+    } finally dropStaging(staged)
 
   /** Metadata-only commit that ONLY advances an idempotent-txn
     * pointer (op `refresh`, no adds/removes, dataChange = false —
@@ -4045,9 +4044,7 @@ final class LogTable(val path: String,
           val staged = newStagingDir()
           finalizeStaged(new File(staged),
             writeStaged(df, staged, snap.schema), snap.schema, actions,
-            readVersion = Some(readVersion),
-            identityBasis = Option.when(allocates)(
-              identity.map { case (c, s) => c -> s.highWater }))
+            readVersion = Some(readVersion))
         case None => commitRetry(Some(readVersion), actions)
       }
       // a replayed txn commits nothing: its feed is an orphan
@@ -4264,20 +4261,6 @@ final class LogTable(val path: String,
     }
   }
 
-  /** A DERIVED conjunct is sound only where the generated column was
-    * actually COMPUTED: a file carrying null generated values for
-    * non-null sources (the partition-evolution backfill window — the
-    * hidden transform column postdates the file) must not be skipped
-    * by an implication its rows never materialized. Declines per
-    * file whenever the file's stats report ANY null in a referenced
-    * column — less skipping, never wrong. (Files with no stats for
-    * the column carry no bounds and already decline inside the
-    * pruner; rewrites heal nulls at the write choke point, so the
-    * guard's cost decays as the table churns.) */
-  private def derivedSafeFor(file: AddFile,
-      derived: Seq[expressions.Expression]): Seq[expressions.Expression] =
-    LogTable.derivedSafeFor(file, derived)
-
   /** Resolve a user predicate against a schema (an analyzed Filter
     * over an empty local relation): attributes become typed
     * references, literal sides become foldable — the form the stats
@@ -4430,7 +4413,7 @@ final class LogTable(val path: String,
       vs.filter(_ < floor).map(v => logFile(v)) ++
         listLogDir().filter(f => ckptVer(f.getName).exists(_ < floor)) ++
         doomedRefs
-    doomed.foreach(deleteRecursive)
+    doomed.foreach(LogTable.deleteRecursive)
     snapCache.clear()
     doomed.map(_.getName)
   }
@@ -4669,7 +4652,7 @@ final class LogTable(val path: String,
       case None => currentVersion.getOrElse(
         throw new IllegalStateException(s"no log table at $path"))
     }
-    if (deleteData) deleteRecursive(dir)
+    if (deleteData) LogTable.deleteRecursive(dir)
     v
   }
 
@@ -5182,8 +5165,8 @@ final class LogTable(val path: String,
 
   /** Delta-style AUTO COMPACTION: when
     * `graft.autoCompact.enabled = true`, every successful append
-    * (Scala, streaming, or DSv2 INSERT) re-checks the small-file
-    * census and bin-packs once a scope accumulates
+    * (Scala, streaming, or DSv2 INSERT — [[commitWrite]]) re-checks
+    * the small-file census and bin-packs once a scope accumulates
     * `graft.autoCompact.minNumFiles` files under
     * `graft.autoCompact.smallBytes`. Scopes are hive partitions
     * (an unpartitioned table is one scope) — the many-small-appends
@@ -5527,7 +5510,7 @@ final class LogTable(val path: String,
     val droppedCdf = Option(cdfRoot.listFiles()).toSeq.flatten
       .filter(d => d.isDirectory && !keepCdf.contains(s"_cdf/${d.getName}") &&
         d.lastModified() <= horizon)
-    if (!dryRun) droppedCdf.foreach(deleteRecursive)
+    if (!dryRun) droppedCdf.foreach(LogTable.deleteRecursive)
     // deletion-vector dirs referenced by any retained version stay;
     // the rest expire under the same modification-time guard
     val keepDv = retained
@@ -5536,7 +5519,7 @@ final class LogTable(val path: String,
     val droppedDv = Option(dvRoot.listFiles()).toSeq.flatten
       .filter(d => d.isDirectory && !keepDv.contains(s"_dv/${d.getName}") &&
         d.lastModified() <= horizon)
-    if (!dryRun) droppedDv.foreach(deleteRecursive)
+    if (!dryRun) droppedDv.foreach(LogTable.deleteRecursive)
     // bloom sidecars follow their data file: keep those whose data
     // file is retained, expire the rest under the same guard
     val keepNames = keep.map(p => new File(p).getName)
@@ -5561,7 +5544,7 @@ final class LogTable(val path: String,
         d.getName.startsWith("addsref.") &&
         d.getName.endsWith(".parquet") &&
         !keepRefs.contains(d.getName) && d.lastModified() <= horizon)
-    if (!dryRun) droppedRefs.foreach(deleteRecursive)
+    if (!dryRun) droppedRefs.foreach(LogTable.deleteRecursive)
     dropped.map(rel) ++ droppedCdf.map(d => s"_cdf/${d.getName}") ++
       droppedDv.map(d => s"_dv/${d.getName}") ++
       droppedBloom.map(f => s"_bloom/${f.getName}") ++
@@ -5756,15 +5739,39 @@ object LogTable {
     out.sortBy(_.idx).toSeq
   }
 
-  /** Derived (generated-column) conjuncts are only sound for a file
-    * whose SOURCE columns are null-free there — filter per file.
-    * Pure on (file.stats, derived). */
+  /** A DERIVED conjunct is sound only where the generated column was
+    * actually COMPUTED: a file carrying null generated values for
+    * non-null sources (the partition-evolution backfill window — the
+    * hidden transform column postdates the file) must not be skipped
+    * by an implication its rows never materialized. Declines per
+    * file whenever the file's stats report ANY null in a referenced
+    * column — less skipping, never wrong. (Files with no stats for
+    * the column carry no bounds and already decline inside the
+    * pruner; rewrites heal nulls at the write choke point, so the
+    * guard's cost decays as the table churns.) */
   private[sources] def derivedSafeFor(file: AddFile,
       derived: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
     if (derived.isEmpty) derived
     else derived.filter(_.references.forall(r =>
       file.stats.get(r.name).forall(_.nulls == 0L)))
+
+  /** A data write's staged files, the schema they were written
+    * under, and what its commit carries besides its adds and the
+    * replaced files' removes: metadata actions, and the version a
+    * widened schema was derived from ([[commitRetry]]'s
+    * `schemaBasis`). */
+  private final case class StagedWrite(dir: File, stats: StagedStats,
+                                       schema: StructType,
+                                       meta: Seq[LogAction] = Nil,
+                                       schemaBasis: Option[Long] = None)
+
+  /** Delete `f` and, for a directory, everything under it —
+    * best-effort, a missing path is a no-op. */
+  private[graft] def deleteRecursive(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursive))
+    f.delete(); ()
+  }
 
   /** Driver-side canonical form of a scan-time `__file` provenance
     * value (`_metadata.file_path`, a URI like `file:///a/b.parquet`):

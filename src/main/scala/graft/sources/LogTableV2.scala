@@ -295,7 +295,7 @@ private[sources] final class PruningScanBuilder(
 
   // the delegate's ParquetScan reports ITS accepted set in the plan;
   // at the wrapper level nothing is guaranteed-pushed
-  override def pushedFilters()
+  override def pushedFilters
       : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
     Array.empty
 
@@ -330,9 +330,11 @@ private[sources] final class PruningScanBuilder(
 }
 
 /** Delegating write builder: the inner parquet write lands in a
-  * fresh staging directory; our commit wrapper turns the finished
-  * staging into a log commit. `truncate()` (INSERT OVERWRITE's
-  * contract) flips the commit from append to full-replace. */
+  * fresh staging directory, and the batch and streaming commits both
+  * hand the finished staging to [[LogTable.commitStaged]] — the one
+  * data-write commit the Scala `append`/`overwrite` share.
+  * `truncate()` (INSERT OVERWRITE's contract) flips the commit from
+  * append to full-replace. */
 private[sources] final class LogWriteBuilder(log: LogTable,
                                              info: LogicalWriteInfo,
                                              overwriteAll: Boolean)
@@ -372,9 +374,8 @@ private[sources] final class LogWriteBuilder(log: LogTable,
         override def commit(msgs: Array[WriterCommitMessage]): Unit = {
           // finalize staged parquet files
           innerBatch.commit(StagedStatsTracker.detach(msgs, tracker))
-          val s = SparkSession.active
-          if (overwriteAll) log.overwriteStaged(s, staging, tracker.result())
-          else log.appendStaged(s, staging, tracker.result())
+          log.commitStaged(SparkSession.active, staging, tracker.result(),
+            replace = overwriteAll)
           ()
         }
         override def abort(msgs: Array[WriterCommitMessage]): Unit = {
@@ -429,8 +430,8 @@ private[sources] final class LogWriteBuilder(log: LogTable,
         override def commit(epochId: Long,
                             msgs: Array[WriterCommitMessage]): Unit = {
           innerBatch.commit(StagedStatsTracker.detach(msgs, tracker))
-          log.appendStagedStream(SparkSession.active, staging,
-            tracker.result(), info.queryId(), epochId)
+          log.commitStaged(SparkSession.active, staging, tracker.result(),
+            replace = false, txn = Some((info.queryId(), epochId)))
           ()
         }
         override def abort(epochId: Long,

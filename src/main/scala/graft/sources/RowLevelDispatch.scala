@@ -105,8 +105,7 @@ case class GraftLogUpdateExec(@transient table: LogTable,
   override protected def run(spark: SparkSession): Unit = {
     val set = assignments.map { a =>
       val name = a.key match {
-        case att: Attribute           => att.name
-        case u: UnresolvedAttribute   => u.name
+        case att: Attribute => att.name
         case other => throw new UnsupportedOperationException(
           s"UPDATE SET supports plain columns, got $other")
       }

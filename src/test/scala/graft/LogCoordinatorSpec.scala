@@ -81,6 +81,61 @@ class LogCoordinatorSpec extends SparkSpec {
       .forall(!_.getName.startsWith(".tmp")))
   }
 
+  /** Lands `first` (the same batch's first attempt) on the first
+    * claim it is asked for, then claims as the local FS does — so
+    * the caller's commit loses the slot to its own batch. */
+  private final class OwnBatchFirst(first: () => Unit)
+    extends LogCommitCoordinator {
+    private var fired = false
+    override def claim(tmp: File, target: File): Boolean = {
+      if (!fired) { fired = true; first() }
+      LocalFsCommitCoordinator.claim(tmp, target)
+    }
+  }
+
+  /** Every file under `data/` and `_bloom/`, relative to the table. */
+  private def dataAndBloomFiles(path: String): Set[String] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    val root = new File(path).toPath
+    Seq("data", "_bloom").flatMap(d => walk(new File(path, d)))
+      .map(f => root.relativize(f.toPath).toString).toSet
+  }
+
+  test("a replayed txn batch that loses the claim to its own first " +
+    "commit commits nothing and leaves no data or bloom file behind") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id STRING, v BIGINT")
+    def batch(n: Long) = Seq((s"id-$n", n), (s"id-${n + 1}", n + 1))
+      .toDF("id", "v")
+    Seq("appendStreamBatch", "overwrite").foreach { op =>
+      val path = s"${tmp()}/t"
+      new LogTable(path).create(schema, bloomFilterBy = Seq("id")) // v0
+      new LogTable(path).append(batch(0L))                        // v1
+      def write(t: LogTable): Long =
+        if (op == "overwrite") t.overwrite(batch(5L), Some(("app", 3L)))
+        else t.appendStreamBatch(batch(5L), "app", 3L).getOrElse(-1L)
+      val replay = new LogTable(path,
+        coordinator = new OwnBatchFirst(() => {
+          write(new LogTable(path)); ()
+        }))
+      assert(write(replay) == -1L, op)
+      val t = new LogTable(path)
+      assert(t.versions == Seq(0L, 1L, 2L), op)
+      assert(t.lastCommittedBatch("app").contains(3L), op)
+      val referenced = t.versions.flatMap(v => t.liveAdds(Some(v)))
+        .map(_.path).toSet
+      val names = referenced.map(p => new File(p).getName)
+      val orphans = dataAndBloomFiles(path).filterNot(f =>
+        if (f.startsWith("_bloom/"))
+          names.exists(n => new File(f).getName.startsWith(n + "."))
+        else referenced.contains(f))
+      assert(orphans.isEmpty, s"$op left $orphans")
+      assert(dataAndBloomFiles(path).exists(_.startsWith("_bloom/")), op)
+    }
+  }
+
   test("round-11 Serializable isolation: the SAME forced interleave " +
     "— a blind append racing a read-declaring commit — sails under " +
     "the default WriteSerializable and refuses under Serializable") {

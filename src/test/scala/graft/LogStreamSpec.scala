@@ -210,6 +210,27 @@ class LogStreamSpec extends SparkSpec {
     assert(t.lastCommittedBatch("app2").contains(0L))
   }
 
+  test("appendStreamBatch refuses a frame with an extra or a missing " +
+    "column exactly as append does, and leaves nothing behind") {
+    val dir = s"${tmp()}/t"
+    val t = new LogTable(dir)
+    t.append(Seq((1L, "a")).toDF("k", "v"))                  // v0
+    val extra = Seq((2L, "b", 9)).toDF("k", "v", "x")
+    val missing = Seq(3L).toDF("k")
+    Seq(extra -> "not in the table", missing -> "lacks table column")
+      .foreach { case (df, why) =>
+        val viaAppend = intercept[IllegalArgumentException](t.append(df))
+        val viaStream = intercept[IllegalArgumentException](
+          t.appendStreamBatch(df, "app1", 0L))
+        assert(viaStream.getMessage.contains(why))
+        assert(viaStream.getMessage == viaAppend.getMessage)
+      }
+    assert(t.currentVersion.contains(0L))
+    assert(t.lastCommittedBatch("app1").isEmpty)
+    assert(entriesUnder(dir, "_staging").isEmpty)
+    assert(t.load(spark).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
   test("log-to-log replication is exactly-once across a sink " +
     "restart") {
     val src = new LogTable(s"${tmp()}/src")
